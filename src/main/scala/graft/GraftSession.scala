@@ -19,7 +19,15 @@ import org.apache.spark.sql.SparkSession
   *   the session zone instead of TIMESTAMP_NTZ, keeping `unix_micros` and
   *   every other instant function applicable — identical epoch values
   *   under the UTC session zone below;
-  * - UTC session timezone (cross-engine timestamp determinism).
+  * - UTC session timezone (cross-engine timestamp determinism);
+  * - `file:` paths go through [[graft.io.ForkFreeLocalFileSystem]] /
+  *   [[graft.io.ForkFreeLocalFs]]: without the native `libhadoop`, Hadoop's
+  *   local filesystem forks a `chmod` or `readlink` child process for almost
+  *   every file a stream writes (offset/commit logs, state-store deltas,
+  *   sink files), which dominated small micro-batches. Only the `file:`
+  *   scheme is overridden (`hdfs:`, `s3a:` keep their own classes), and the
+  *   files on disk are byte-for-byte the same, so existing checkpoints
+  *   restart.
   */
 object GraftSession {
 
@@ -33,6 +41,9 @@ object GraftSession {
     // default 100 is small for a session running the whole query inventory;
     // eviction means re-running Janino on plans we just compiled
     .config("spark.sql.codegen.cache.maxEntries", "1000")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.io.ForkFreeLocalFs].getName)
 
   /** Local session for the test/bench harness. Managed tables (the bucketed
     * layouts, Layouts.writeBucketed) land in a throwaway warehouse dir. */

@@ -11,8 +11,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConsoleSpec extends AnyFunSuite with SparkSpec {
   import Console._
 
-  private val trafficCsv =
-    "/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv"
+  /** A Traffic_Signs-shaped headerless CSV (FIXTURES.md §1, 19 columns,
+    * the first row is `Traffic_Signs_1000.csv:1`): quoted fields with
+    * embedded commas and doubled quotes, blank fields, `Category=Warning`
+    * rows and rows that do not match. */
+  private lazy val trafficCsv: String = {
+    val f = java.nio.file.Files.createTempDirectory("console_signs").resolve("signs.csv")
+    java.nio.file.Files.write(f, java.util.Arrays.asList(
+      "-9822752.01226842,4887653.93470103,1,Streetname - Mast Arm,\"16\"\" X 42\"\"\", ,Traffic Signal Mast Arm, ,Streetname, ,D3-1,Champaign,1,,AERIAL,L,Mercury Dr,1.0,",
+      "-9822700.50000000,4887600.25000000,2,\"Curve, Left\",30 X 30,,Punched Telespar,2004,Warning,\"Faded \"\"CURVE\"\", replace\",W1-2L,Champaign,2,,GPS,M,,2.0,2019/05/01",
+      "-9822600.10000000,4887500.90000000,3,Deer Crossing,,,, ,Warning,,W11-3,Champaign,3,,,,,,",
+      "-9822550.00000000,4887450.00000000,4,Stop,\"30\"\" X 30\"\"\",,Punched Telespar,1999,Regulatory,\"Near Warning sign, see 5\",R1-1,Champaign,4,Yes,GPS,H,STOP,4.0,",
+      "-9822500.75000000,4887400.50000000,5,\"School, Ahead\",\"16\"\" X 42\"\"\",,Square Post,2010,Warning,,S1-1,Urbana,5,Yes,AERIAL,L,\"SCHOOL, AHEAD\",5.0,2020/01/01",
+      "-9822450.00000000,4887350.00000000,6,Speed Limit 30,24 X 30,,Punched Telespar,2012,Regulatory,,R2-1,Champaign,6,,GPS,M,SPEED LIMIT 30,6.0,",
+      "-9822400.00000000,4887300.00000000,7,Pedestrian Crossing,\"36\"\" X 36\"\"\",W16-7P,Punched Telespar,2015,Warning,,W11-2,Champaign,7,,GPS,H,,7.0,2021/06/30",
+      "-9822350.00000000,4887250.00000000,8,No Parking,12 X 18,,Sign Post,,Parking,,R7-1,Champaign,8,,,,NO PARKING,8.0,",
+      "-9822300.00000000,4887200.00000000,9,\"Merge, Right\",,,Square Post,2008,Warning,\"\"\"Merge\"\" faded\",W4-1,Urbana,9,,AERIAL,L,,9.0,",
+      "-9822250.00000000,4887150.00000000,10,One Way,36 X 12,,Traffic Signal Mast Arm,2001,Regulatory,,R6-1,Champaign,10,,GPS,M,ONE WAY,10.0,"))
+    f.toString
+  }
 
   test("tokenizer preserves quoted spans and keeps the quote chars (Node.java:355-382)") {
     assert(tokenize("""RAINSTORM FILTER:"Punched Telespar" AGGREGATE f.csv 3 false""") ==
@@ -53,7 +70,7 @@ class ConsoleSpec extends AnyFunSuite with SparkSpec {
     assert(parse("RAINSTORM BOGUS:x AGGREGATE f.csv 3 false").isLeft)
   }
 
-  test("end-to-end on the reference's own fixture equals the direct pipeline") {
+  test("end-to-end on a Traffic_Signs-shaped fixture equals the direct pipeline") {
     val viaConsole = Console.run(spark,
       s"""RAINSTORM "COLUMN_FILTER:Category:Warning" "TRANSFORM:select:OBJECTID,Sign_Type" $trafficCsv 3 false""")
     val direct = Pipeline.fromDescriptors(
