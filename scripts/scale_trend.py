@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
-"""Compute sf0.1 -> sf1.0 scaling exponents from two TimeQ logs.
+"""Compute sf0.1 -> sf1.0 scaling exponents from two Probe logs.
 
 exponent a satisfies t(sf) ~ sf^a between the two measured points:
 a = log10(t_sf1 / t_sf01) (the data grew 10x). a <= 1 is at-or-better
 than linear; the red flag the sweep exists to find is a >> 1.
 
-Usage: scale_trend.py /tmp/sweep_sf01.log /tmp/sweep_sf1.log
+Each log is the stdout of `runMain graft.tools.Probe q_a q_b ...` at one
+scale (SPARK_GRAFT_SF_DIR); a `[probe] <name> <secs> s ...` line per query.
+
+Usage: scale_trend.py sweep_sf01.log sweep_sf1.log
 """
 import math
 import re
@@ -15,7 +18,7 @@ import sys
 def parse(path):
     out = {}
     for line in open(path):
-        m = re.search(r"\[timeq\] (\S+)\s+([0-9.]+) s", line)
+        m = re.search(r"\[probe\] (\S+)\s+([0-9.]+) s", line)
         if m:
             out[m.group(1)] = float(m.group(2))
     return out

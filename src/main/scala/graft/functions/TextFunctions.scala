@@ -130,19 +130,6 @@ object TextFunctions {
   def stopwordCount(text: Column, words: Seq[String] = stopwords.head._2): Column =
     size(filter(tokens(text), t => t.isin(words: _*)))
 
-  /** Heuristic document quality signals: char length, token count, mean token
-    * length, stopword ratio — the length/punct/stopword family
-    * (Gopher/C4-style rules, public). */
-  def qualitySignals(text: Column): Seq[(String, Column)] = {
-    val toks = tokens(text)
-    val sumTokLen = sumTokenLength(text)
-    Seq(
-      "n_chars" -> length(text),
-      "n_tokens" -> size(toks),
-      "mean_token_len" -> round(sumTokLen.cast("double") / size(toks), 4),
-      "stop_ratio" -> round(stopwordCount(text).cast("double") / size(toks), 4))
-  }
-
   /** Readability signals (Flesch–Kincaid grade): sentence count as
     * terminal-punctuation runs (`[.!?]+`), word count as whitespace
     * tokens, syllable count by the standard vowel-group heuristic

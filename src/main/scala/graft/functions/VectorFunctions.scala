@@ -28,10 +28,6 @@ object VectorFunctions {
     GraftExpr.column(CosineSimilarity(GraftExpr.expression(a), GraftExpr.expression(b)))
   }
 
-  /** Cosine rounded for stable cross-engine comparison / ranking. */
-  def cosineRounded(a: Column, b: Column, scale: Int = 6): Column =
-    round(cosineSimilarity(a, b), scale)
-
   /** Symmetric int8 quantization: struct(scale, q) with scale = max |x| and
     * q_i = floor(x_i / scale * 127 + 0.5) — round-half-toward-+∞, a fixed
     * cross-engine convention (engine round() functions disagree on halves).

@@ -272,9 +272,9 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("inter"), col("jac"))
   }
 
-  /** Candidate generation shared by [[ppjoinPairs]] and the plan probe
-    * ([[graft.tools.PpPlan]] measures the positional filter's cut by
-    * flipping `positional`). Returns (pinned rank-postings census,
+  /** Candidate generation for [[ppjoinPairs]]; flipping `positional`
+    * measures the positional filter's cut (the former PpPlan probe did, and
+    * DedupSpec compares both settings). Returns (pinned rank-postings census,
     * candidate pairs (a_id, b_id, a_sz, b_sz) after size filter +
     * positional filter). */
   private[graft] def ppjoinSelfCandidates(

@@ -130,9 +130,7 @@ object Console {
     val cmd = parse(line).fold(msg => throw new IllegalArgumentException(msg), identity)
     val (src, ctx) =
       if (cmd.file.toLowerCase.endsWith(".csv"))
-        (spark.readStream.schema(Tables.trafficSignsSchema)
-          .option("header", "false").option("quote", "\"").option("escape", "\"")
-          .csv(cmd.file), OpCompiler.Ctx(None, Seq("OBJECTID")))
+        (Tables.trafficSignsStream(spark, cmd.file), OpCompiler.Ctx(None, Seq("OBJECTID")))
       else
         (StreamingPipeline.fileLines(spark, cmd.file),
           OpCompiler.Ctx(Some("value"), Seq("file")))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Physical-layout levers for repeated keyed work — the piece of the 100 TB
@@ -218,22 +219,19 @@ object Layouts {
       .write.mode("overwrite").parquet(dir)
   }
 
-  /** Number of Exchange (shuffle/broadcast-exchange) nodes in the final
-    * physical plan — 0 on a co-bucketed join is the whole point. Unwraps the
-    * AQE leaf wrappers: AdaptiveSparkPlanExec before execution, and the
-    * Shuffle/BroadcastQueryStageExec nodes a FINALIZED adaptive plan wraps
-    * every exchange in — both are leaves, so the naive walk reports a false
-    * 0 on exactly the plans with exchanges. */
-  def countExchanges(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case _ =>
-        (if (p.isInstanceOf[Exchange]) 1 else 0) +
-          p.children.map(walk).sum +
-          p.subqueries.map(walk).sum
-    }
-    walk(df.queryExecution.executedPlan)
+  /** Every node of the physical plan that ran (or will run), subqueries
+    * included. Unwraps the AQE leaf wrappers: AdaptiveSparkPlanExec before
+    * execution, and the Shuffle/BroadcastQueryStageExec nodes a FINALIZED
+    * adaptive plan wraps every exchange in — both are leaves, so a naive
+    * `collect` misses exactly the nodes under them. */
+  def executedNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan)
+    case q: QueryStageExec => executedNodes(q.plan)
+    case p => p +: (p.children ++ p.subqueries).flatMap(executedNodes)
   }
+
+  /** Number of Exchange (shuffle/broadcast-exchange) nodes in the final
+    * physical plan — 0 on a co-bucketed join is the whole point. */
+  def countExchanges(df: DataFrame): Int =
+    executedNodes(df.queryExecution.executedPlan).count(_.isInstanceOf[Exchange])
 }

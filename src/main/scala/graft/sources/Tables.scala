@@ -19,13 +19,21 @@ object Tables {
       "Schools", "Location_Adjusted", "Replacement_Zone", "Sign_Text",
       "Set_ID", "FieldVerifiedDate").map(StructField(_, StringType, nullable = true)))
 
+  /** Reader options of the Traffic_Signs CSVs, batch and stream alike:
+    * headerless, `"` both quote and escape (RFC-4180 doubled quotes). */
+  private val trafficSignsCsv =
+    Map("header" -> "false", "quote" -> "\"", "escape" -> "\"")
+
   /** Proper RFC-4180 CSV read (quoted commas handled) — the deliberate
     * divergence from the reference's naive `line.split(",")`
     * (Operators.java:174, SURVEY.md §1.1). */
   def trafficSigns(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(trafficSignsSchema)
-      .option("header", "false").option("quote", "\"").option("escape", "\"")
-      .csv(path)
+    spark.read.schema(trafficSignsSchema).options(trafficSignsCsv).csv(path)
+
+  /** [[trafficSigns]] as a file stream: `path` is a directory or glob
+    * watched for new CSV files. */
+  def trafficSignsStream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream.schema(trafficSignsSchema).options(trafficSignsCsv).csv(path)
 
   /** Compatibility mode (SURVEY.md §7.3): the reference's naive `split(",")`
     * column semantics, quoted commas and all — byte-parity with its outputs

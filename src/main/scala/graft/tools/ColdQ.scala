@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.SparkEntry
 
 /** COLD-cache timings (SCALE.md's sweep caveat closer): both sweep scales
   * fit in page cache, so the measured exponents are compute scaling; this
@@ -15,8 +15,7 @@ object ColdQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/.bench-data/sf1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.local(32, "graft-coldq")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-coldq")
     def run(n: String, dir: String): Long =
       SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
     val names = if (args.nonEmpty) args.toSeq else Seq("q_redact")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.SparkEntry
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,8 +22,7 @@ object RocksDbStateProbe {
   def main(args: Array[String]): Unit = {
     val sf1 = args.headOption.getOrElse("/root/repo/.bench-data/sf1")
     val paritySf = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.local(16, "graft-rocksdb-probe")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-rocksdb-probe")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 

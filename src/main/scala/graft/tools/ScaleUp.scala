@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,8 +38,7 @@ object ScaleUp {
     val out = args.headOption.getOrElse("/root/repo/.bench-data/sf1")
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.local(32, "graft-scaleup")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-scaleup")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // replica index 0..factor-1 per input row; replica 0 is the original

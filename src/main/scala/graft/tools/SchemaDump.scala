@@ -1,5 +1,5 @@
 package graft.tools
-import graft.{GraftSession, SparkEntry}
+import graft.SparkEntry
 
 /** Dump every declared query's OUTPUT SCHEMA (no execution — schema only)
   * as one JSON line per query: {"name": ..., "schema": "col:type,..."}.
@@ -8,8 +8,7 @@ import graft.{GraftSession, SparkEntry}
 object SchemaDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local(8, "graft-schemadump")
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session("graft-schemadump")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val s =
         try fn(spark, sfDir).schema.fields

@@ -11,25 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConsoleSpec extends AnyFunSuite with SparkSpec {
   import Console._
 
-  /** A Traffic_Signs-shaped headerless CSV (FIXTURES.md §1, 19 columns,
-    * the first row is `Traffic_Signs_1000.csv:1`): quoted fields with
-    * embedded commas and doubled quotes, blank fields, `Category=Warning`
-    * rows and rows that do not match. */
-  private lazy val trafficCsv: String = {
-    val f = java.nio.file.Files.createTempDirectory("console_signs").resolve("signs.csv")
-    java.nio.file.Files.write(f, java.util.Arrays.asList(
-      "-9822752.01226842,4887653.93470103,1,Streetname - Mast Arm,\"16\"\" X 42\"\"\", ,Traffic Signal Mast Arm, ,Streetname, ,D3-1,Champaign,1,,AERIAL,L,Mercury Dr,1.0,",
-      "-9822700.50000000,4887600.25000000,2,\"Curve, Left\",30 X 30,,Punched Telespar,2004,Warning,\"Faded \"\"CURVE\"\", replace\",W1-2L,Champaign,2,,GPS,M,,2.0,2019/05/01",
-      "-9822600.10000000,4887500.90000000,3,Deer Crossing,,,, ,Warning,,W11-3,Champaign,3,,,,,,",
-      "-9822550.00000000,4887450.00000000,4,Stop,\"30\"\" X 30\"\"\",,Punched Telespar,1999,Regulatory,\"Near Warning sign, see 5\",R1-1,Champaign,4,Yes,GPS,H,STOP,4.0,",
-      "-9822500.75000000,4887400.50000000,5,\"School, Ahead\",\"16\"\" X 42\"\"\",,Square Post,2010,Warning,,S1-1,Urbana,5,Yes,AERIAL,L,\"SCHOOL, AHEAD\",5.0,2020/01/01",
-      "-9822450.00000000,4887350.00000000,6,Speed Limit 30,24 X 30,,Punched Telespar,2012,Regulatory,,R2-1,Champaign,6,,GPS,M,SPEED LIMIT 30,6.0,",
-      "-9822400.00000000,4887300.00000000,7,Pedestrian Crossing,\"36\"\" X 36\"\"\",W16-7P,Punched Telespar,2015,Warning,,W11-2,Champaign,7,,GPS,H,,7.0,2021/06/30",
-      "-9822350.00000000,4887250.00000000,8,No Parking,12 X 18,,Sign Post,,Parking,,R7-1,Champaign,8,,,,NO PARKING,8.0,",
-      "-9822300.00000000,4887200.00000000,9,\"Merge, Right\",,,Square Post,2008,Warning,\"\"\"Merge\"\" faded\",W4-1,Urbana,9,,AERIAL,L,,9.0,",
-      "-9822250.00000000,4887150.00000000,10,One Way,36 X 12,,Traffic Signal Mast Arm,2001,Regulatory,,R6-1,Champaign,10,,GPS,M,ONE WAY,10.0,"))
-    f.toString
-  }
+  private val trafficCsv = ReferenceFiles.trafficSignsCsv
 
   test("tokenizer preserves quoted spans and keeps the quote chars (Node.java:355-382)") {
     assert(tokenize("""RAINSTORM FILTER:"Punched Telespar" AGGREGATE f.csv 3 false""") ==
@@ -86,6 +68,20 @@ class ConsoleSpec extends AnyFunSuite with SparkSpec {
     val out = Console.run(spark,
       s"""RAINSTORM "TRANSFORM:select:OBJECTID,Category" "COLUMN_FILTER:Category:Warning" $trafficCsv 5 false""")
     assert(out.rdd.getNumPartitions == 5)
+  }
+
+  test("runStream reads the CSV like run: same rows for the same command") {
+    val out = java.nio.file.Files.createTempDirectory("console_csv_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("console_csv_ckpt").toString
+    // a glob over the fixture directory: a watched directory whose files are CSV
+    val cmdLine = s"""RAINSTORM "COLUMN_FILTER:Category:Warning" "TRANSFORM:select:OBJECTID,Sign_Type" ${ReferenceFiles.dir}/*.csv 1 false"""
+    val q = Console.runStream(spark, cmdLine, out, ckpt)
+    q.awaitTermination(60000)
+    assert(!q.isActive)
+    val streamed = spark.read.parquet(out).select("OBJECTID", "Sign_Type")
+      .collect().map(_.toSeq).toSet
+    val batch = Console.run(spark, cmdLine).collect().map(_.toSeq).toSet
+    assert(streamed.nonEmpty && streamed == batch)
   }
 
   test("runStream drives the same command as a streaming job with checkpointed state") {

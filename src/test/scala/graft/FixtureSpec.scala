@@ -6,14 +6,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** End-to-end parity on the REFERENCE'S OWN data files
-  * (/root/reference/file_system/data_storage/local_file, read-only): the
-  * representative two-operator jobs from FIXTURES.md, checked against
-  * independent driver-side oracles computed straight from the file bytes. */
+/** End-to-end parity on stand-ins for the reference's own data files
+  * ([[ReferenceFiles]]): the representative two-operator jobs from
+  * FIXTURES.md, checked against independent oracles computed straight
+  * from the file bytes. */
 class FixtureSpec extends AnyFunSuite with SparkSpec {
 
-  private val dataDir = "/root/reference/file_system/data_storage/local_file"
-  private def available = new java.io.File(dataDir).isDirectory
+  private val dataDir = ReferenceFiles.dir
 
   private def fileLines(name: String): Seq[String] =
     java.nio.file.Files.readAllLines(
@@ -43,7 +42,6 @@ class FixtureSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("COLUMN_FILTER:Sign_Post then AGGREGATE over Traffic_Signs_1000.csv") {
-    assume(available)
     val df = Tables.trafficSigns(spark, s"$dataDir/Traffic_Signs_1000.csv")
     val out = Pipeline.fromDescriptors(
       Seq("COLUMN_FILTER:Sign_Post:Punched Telespar", "AGGREGATE"),
@@ -56,7 +54,6 @@ class FixtureSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("COLUMN_FILTER:Category then select over the quoted-comma CSV") {
-    assume(available)
     val df = Tables.trafficSigns(spark, s"$dataDir/Traffic_Signs_1000.csv")
     val out = Pipeline.fromDescriptors(
       Seq("COLUMN_FILTER:Category:Warning", "TRANSFORM:select:OBJECTID,Sign_Type"),
@@ -73,7 +70,6 @@ class FixtureSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("FILTER:profit then AGGREGATE over the business articles") {
-    assume(available)
     val docs = Tables.lines(spark, s"$dataDir/business_*.txt")
     val out = Pipeline.fromDescriptors(
       Seq("FILTER:profit", "AGGREGATE"),
@@ -87,7 +83,6 @@ class FixtureSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("FILTER:euros then splitintowords conserves token counts") {
-    assume(available)
     val docs = Tables.lines(spark, s"$dataDir/business_1.txt")
     val out = Pipeline.fromDescriptors(
       Seq("FILTER:euros", "TRANSFORM:splitintowords"),
@@ -99,7 +94,6 @@ class FixtureSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("TRANSFORM:uppercase then FILTER:LUFTHANSA chains case-sensitively") {
-    assume(available)
     val docs = Tables.lines(spark, s"$dataDir/business_1.txt")
     val out = Pipeline.fromDescriptors(
       Seq("TRANSFORM:uppercase", "FILTER:LUFTHANSA"),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Layouts
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,7 +72,6 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("per-row curation queries plan zero exchanges") {
-    import graft.sources.Layouts
     assert(Layouts.countExchanges(
       SparkEntry.queries("q_split_assign")(spark, sf)) == 0)
     assert(Layouts.countExchanges(
@@ -107,7 +107,6 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("countExchanges sees exchanges inside a FINALIZED adaptive plan") {
-    import graft.sources.Layouts
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("q1_agg")(spark, sf)
     df.collect() // finalize: AQE wraps each exchange in a QueryStageExec leaf
@@ -209,27 +208,12 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     // the SCALE.md claim, as an assertion: dedup/rarity/diff plans reduce
     // rows to (ids, fingerprints/tokens) BEFORE any exchange — a refactor
     // that lets the text column ride a shuffle fails here, not at 100 TB
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    // exchanges exist only in the EXECUTED plan (EnsureRequirements), and a
-    // finalized adaptive plan wraps each in a leaf QueryStageExec — unwrap
-    // like Layouts.countExchanges
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] = {
-      def walk(n: SparkPlan): Seq[ShuffleExchangeLike] = (n match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case e: ShuffleExchangeLike => Seq(e) ++ n.children.flatMap(walk)
-        case _ => n.children.flatMap(walk)
-      }) ++ n.subqueries.flatMap(walk)
-      walk(p)
-    }
+    // exchanges exist only in the EXECUTED plan (EnsureRequirements)
     val names = Seq("q_dedup_exact", "q_dedup_incr", "q_token_rarity",
       "q_bigram_lm", "q_bigram_lm_incr", "q_corpus_diff", "q_dedup_spans")
     var sawShuffle = 0
     for (name <- names) {
-      val df = SparkEntry.queries(name)(spark, sf)
-      df.collect()
-      val ex = shuffles(df.queryExecution.executedPlan)
+      val ex = executedShuffles(name)
       sawShuffle += ex.size
       for (e <- ex)
         assert(!e.output.exists(_.name == "text"),
@@ -289,20 +273,17 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     assert(p.contains("subquery"), s"bloom should ride a scalar subquery:\n$p")
   }
 
-  // shared executed-plan shuffle collector for the r11 batch-4 pins
+  // shared executed-plan shuffle collector
   private def executedShuffles(name: String) = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def walk(n: SparkPlan): Seq[ShuffleExchangeLike] = (n match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case e: ShuffleExchangeLike => Seq(e) ++ n.children.flatMap(walk)
-      case _ => n.children.flatMap(walk)
-    }) ++ n.subqueries.flatMap(walk)
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
-    walk(df.queryExecution.executedPlan)
+    Layouts.executedNodes(df.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeLike => e }
   }
+
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    Layouts.executedNodes(p).collect { case f: FileSourceScanExec => f }
 
   test("q_tfidf_terms: one corpus scan (pinned postings); top-k limits map-side") {
     val df = SparkEntry.queries("q_tfidf_terms")(spark, sf)
@@ -310,16 +291,6 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     val p = df.queryExecution.executedPlan
     // the postings pin means the only parquet scan left is the pruned
     // zero-column N count — scoring and dfs both read the checkpoint
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def fileScans(n: SparkPlan): Seq[FileSourceScanExec] = (n match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec => fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case _ => Seq.empty
-    }) ++ (n match {
-      case _: AdaptiveSparkPlanExec | _: QueryStageExec => Seq.empty
-      case _ => n.children.flatMap(fileScans)
-    }) ++ n.subqueries.flatMap(fileScans)
     val fs = fileScans(p)
     assert(fs.size == 1, s"expected 1 file scan (the N count), got ${fs.size}:\n$p")
     assert(fs.head.output.isEmpty, s"the N count scan should read zero columns")
@@ -334,16 +305,6 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     // the session's single tokenize pass.
     val df = SparkEntry.queries("q_bm25_rm3")(spark, sf)
     df.collect()
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def fileScans(n: SparkPlan): Seq[FileSourceScanExec] = (n match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec => fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case _ => Seq.empty
-    }) ++ (n match {
-      case _: AdaptiveSparkPlanExec | _: QueryStageExec => Seq.empty
-      case _ => n.children.flatMap(fileScans)
-    }) ++ n.subqueries.flatMap(fileScans)
     val fs = fileScans(df.queryExecution.executedPlan)
     val textScans = fs.filter(_.output.exists(_.name == "text"))
     assert(textScans.isEmpty,
@@ -405,7 +366,6 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
 
   test("r13 batch-2 scans: rand_project and strip_markup plan ZERO " +
       "exchanges; the projection is the fused native expression") {
-    import graft.sources.Layouts
     val rp = SparkEntry.queries("q_rand_project")(spark, sf)
     assert(Layouts.countExchanges(rp) == 0,
       s"JL projection must be a pure scan:\n${rp.queryExecution.sparkPlan}")
@@ -444,5 +404,17 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     // count equals the per-chain total, not a multiple of it
     assert(stripSites <= graft.functions.TextFunctions.markupSteps.count(_._1),
       s"strip chain inlined into $stripSites sites:\n$s")
+  }
+
+  test("Probe's census agrees with the plan facts pinned above") {
+    import graft.tools.Probe
+    def probe(name: String) = Probe.measure(spark, name, () => SparkEntry.queries(name)(spark, sf))
+    val bm25 = probe("q_bm25")
+    val tfidf = probe("q_tfidf_terms")
+    val split = probe("q_split_assign")
+    assert(bm25.reused >= 1, bm25.line)
+    assert(tfidf.scans == 1, tfidf.line)
+    assert(split.exchanges == 0, split.line)
+    for (r <- Seq(bm25, tfidf, split)) assert(r.jobs > 0, r.line)
   }
 }

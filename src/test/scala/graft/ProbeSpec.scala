@@ -1,0 +1,52 @@
+package graft
+
+import graft.tools.Probe
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** [[Probe]]'s collector on a query whose plan facts are known by
+  * construction, its printed line, and the one-session-factory rule. Its
+  * agreement with the gate queries' pinned plan facts is in PlansSpec. */
+class ProbeSpec extends AnyFunSuite with SparkSpec {
+
+  test("two aggregates over one filtered parquet read: two duplicate scans, no reuse") {
+    val dir = Files.createTempDirectory("probe_spec").resolve("t").toString
+    spark.range(0, 1000).select(col("id"), (col("id") % 10).as("k"))
+      .write.parquet(dir)
+    // different partial aggregates, so no exchange is shared, over the same
+    // path, read schema and data filter
+    def build() = {
+      val t = spark.read.parquet(dir).filter(col("k") > 2)
+      t.groupBy("k").agg(sum("id").as("s"))
+        .join(t.groupBy("k").agg(max("id").as("m")), "k")
+    }
+    val plans = Files.createTempDirectory("probe_plans")
+    val r = Probe.measure(spark, "synthetic", () => build(), Some(plans))
+    assert(r.scans == 2 && r.dupScans == 2, r.line)
+    assert(r.reused == 0, r.line)
+    assert(r.exchanges >= 2, r.line)
+    assert(r.jobs > 0 && r.tasks > 0 && r.wallS > 0, r.line)
+    val txt = Files.readString(plans.resolve("synthetic.txt"))
+    assert(txt.contains("isFinalPlan=false") && txt.contains("isFinalPlan=true"), txt)
+    // the pattern scripts/scale_trend.py reads
+    val m = """\[probe\] (\S+)\s+([0-9.]+) s""".r.findFirstMatchIn(r.line)
+    assert(m.map(_.group(1)).contains("synthetic"), r.line)
+    assert(m.exists(g => (g.group(2).toDouble - r.wallS).abs < 0.001), r.line)
+  }
+
+  test("no main source but GraftSession and EntrySmoke calls SparkSession.builder") {
+    // EntrySmoke deliberately runs on a plain session without graft configs
+    val allowed = Set("GraftSession.scala", "EntrySmoke.scala")
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+      .filter { p =>
+        Files.readAllLines(p).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("//") || l.startsWith("/*"))
+          .exists(l => builder.findFirstIn(l).isDefined)
+      }.toList
+    assert(offenders.isEmpty, s"build sessions through GraftSession: $offenders")
+  }
+}

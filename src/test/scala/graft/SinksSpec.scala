@@ -8,11 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SinksSpec extends AnyFunSuite with SparkSpec {
 
-  private val dataDir = "/root/reference/file_system/data_storage/local_file"
-  private def available = new java.io.File(dataDir).isDirectory
+  private val dataDir = ReferenceFiles.dir
 
   test("dual results + lineage sink mirrors the reference's two logs") {
-    assume(available)
     val out = Files.createTempDirectory("graft_sink").toString
     val docs = Tables.lines(spark, s"$dataDir/business_1.txt")
     val result = Pipeline.fromDescriptors(Seq("FILTER:profit"),
@@ -153,7 +151,6 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("naive CSV compatibility mode reproduces split(\",\") misparsing") {
-    assume(available)
     import scala.jdk.CollectionConverters._
     val naive = Tables.trafficSignsNaive(spark, s"$dataDir/Traffic_Signs_1000.csv")
     val got = naive.select("Size_").collect().map(_.getString(0)).toSeq.sorted
