@@ -77,11 +77,13 @@ object OpCompiler {
         df, col(field), kind, ctx.orderCols.map(col), out), ctx)
   }
 
-  /** The reference's "whole line" for matching/transform purposes. */
+  /** The reference's "whole line" for matching/transform purposes. A
+    * structured frame's null (a blank CSV field) joins as the empty string:
+    * `concat_ws` alone skips nulls, turning `a,,Warning` into `a,Warning`. */
   private def lineOf(df: DataFrame, ctx: Ctx): Column =
     ctx.lineCol match {
       case Some(c) => col(c)
-      case None    => concat_ws(",", df.columns.map(col).toSeq: _*)
+      case None    => concat_ws(",", df.columns.map(c => coalesce(col(c).cast(StringType), lit(""))).toSeq: _*)
     }
 
   /** Whole-line transforms (upper/lower/trim) applied to the line column, or

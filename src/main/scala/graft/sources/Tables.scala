@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.BlockLineIndex
+import org.apache.spark.sql.{DataFrame, GraftExpr, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Source layer: schema-on-read replaces the reference's hard-coded positional
   * column array (Node.java:113-115) and its HyDFS fetch-to-local-disk scan
@@ -49,40 +53,86 @@ object Tables {
 
   /** Line-tuple source: one row per text line with lineage identity
     * (file, line_no) — the Spark analog of the reference's
-    * `uniqueId:filename,lineNumber` tuple id (Node.java:907-913).
+    * `uniqueId:filename,lineNumber` tuple id (Node.java:907-913), and like
+    * it numbered as the file is read: line_no = block offset + in-block
+    * index, both known inside the scan.
     *
-    * Exact numbering even when one file spans multiple scan blocks: a block's
-    * rows always sit in one scan partition in file order (a FilePartition
-    * holds whole splits), but FilePartitions bin-pack splits sorted by SIZE,
-    * so partition order does NOT follow file offset order — ordering by
-    * `monotonically_increasing_id` alone misnumbers multi-block files. Keying
-    * on `_metadata.file_block_start` restores the offset order:
-    *   1. in-block index: row_number over (file, block) — a BALANCED shuffle
-    *      (blocks are <= maxPartitionBytes), never one reducer per file;
-    *   2. per-(file, block) line counts, prefix-summed per file in block
-    *      order — one tiny row per block (~800k rows at 100 TB / 128 MB);
-    *   3. broadcast the offsets back: line_no = block offset + in-block index.
+    *  - In-block index: [[graft.functions.BlockLineIndex]] over
+    *    `(_metadata.file_path, _metadata.file_block_start)`, evaluated
+    *    directly over the scan. A FilePartition holds whole splits and reads
+    *    each front to back, so a block's rows arrive contiguously and in
+    *    file order; no filter is pushed below the counter.
+    *  - Block offset: 0 for a file Spark reads as one split, which is every
+    *    file no larger than min(`spark.sql.files.maxPartitionBytes`,
+    *    max(`spark.sql.files.openCostInBytes`, bytes per core)). Then the
+    *    frame is the scan plus a projection: no shuffle, join or extra job.
+    *  - Split files: construction reads the scan's own FilePartitions and,
+    *    only if some file is split, runs one narrow job (no shuffle) that
+    *    counts lines per block. Their per-file prefix sums join back as a
+    *    broadcast local table. A block's offset is the number of lines
+    *    starting at or before its first byte, so it holds for any layout
+    *    that has a block at that byte.
+    *
+    * The trade-off: the split layout is fixed at construction. A row in a
+    * non-first block whose start has no offset (e.g. `spark.sql.files.*`
+    * changed between building and running the frame) raises an error
+    * rather than getting a wrong number. At 100 TB a split corpus costs one
+    * extra narrow scan; the previous design shuffled and sorted every line.
     */
   def lines(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val raw = spark.read.text(path).select(
-      col("value"),
-      col("_metadata.file_path").as("file"),
-      col("_metadata.file_block_start").as("__blk"))
-    // mid ascends within each scan partition, so after the (file, block)
-    // shuffle it reconstructs the original in-block (= in-file) row order
-    val wBlk = Window.partitionBy(col("file"), col("__blk"))
-      .orderBy(monotonically_increasing_id())
-    val offsets = raw.groupBy("file", "__blk")
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__off",
-        sum("__n").over(Window.partitionBy("file").orderBy("__blk")) - col("__n"))
-      .select("file", "__blk", "__off")
-    raw
-      .withColumn("__i", row_number().over(wBlk).cast("long") - 1L)
-      .join(broadcast(offsets), Seq("file", "__blk"))
-      .withColumn("line_no", col("__off") + col("__i"))
-      .select("value", "file", "line_no")
+    val file = col("_metadata.file_path")
+    val blk = col("_metadata.file_block_start")
+    val text = spark.read.text(path)
+    val meta = text.select(file, blk)
+    val split = meta.queryExecution.sparkPlan
+      .collect { case s: FileSourceScanExec => s.inputRDD.partitions.toSeq }.flatten
+      .exists { case p: FilePartition => p.files.exists(_.start > 0); case _ => false }
+    val numbered = text.select(col("value"), file.as("file"),
+      blk.as("__blk"),
+      GraftExpr.column(BlockLineIndex(GraftExpr.expression(file), GraftExpr.expression(blk)))
+        .as("__i"))
+    val inFirstBlock = col("__blk") === 0L
+    val drift = raise_error(concat(lit("Tables.lines: no line offset for the block at byte "),
+      col("__blk").cast("string"), lit(" of "), col("file"),
+      lit("; the scan splits the file differently than when the frame was built " +
+        "(spark.sql.files.*), so build it again")))
+    if (!split)
+      numbered.select(col("value"), col("file"),
+        when(inFirstBlock, col("__i")).otherwise(drift).as("line_no"))
+    else
+      numbered.join(broadcast(spark.createDataFrame(blockOffsets(meta)).toDF("file", "__blk", "__off")),
+        Seq("file", "__blk"), "left")
+        .select(col("value"), col("file"),
+          when(inFirstBlock, col("__i"))
+            .when(col("__off").isNotNull, col("__off") + col("__i"))
+            .otherwise(drift).as("line_no"))
+  }
+
+  /** (file, block start, lines before the block) for every block of
+    * `meta` — a `(file_path, file_block_start)` scan — that holds a line:
+    * one narrow job counts each block's run of rows, then the collected
+    * counts are prefix-summed per file in block order. */
+  private def blockOffsets(meta: DataFrame): Seq[(String, Long, Long)] = {
+    val counts = meta.queryExecution.toRdd.mapPartitions { rows =>
+      val runs = Vector.newBuilder[(String, Long, Long)]
+      var file: UTF8String = null
+      var block, n = -1L
+      rows.foreach { r =>
+        if (r.getLong(1) != block || !r.getUTF8String(0).equals(file)) {
+          if (file != null) runs += ((file.toString, block, n))
+          file = r.getUTF8String(0).clone()
+          block = r.getLong(1)
+          n = 0L
+        }
+        n += 1L
+      }
+      if (file != null) runs += ((file.toString, block, n))
+      runs.result().iterator
+    }.collect()
+    counts.groupBy(_._1).values.toSeq.flatMap { blocks =>
+      val byStart = blocks.sortBy(_._2)
+      byStart.zip(byStart.scanLeft(0L)(_ + _._3)).map { case ((f, b, _), off) => (f, b, off) }
+    }
   }
 
   val tableNames: Seq[String] =

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import graft.ops.Console
 import graft.sources.Layouts
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
@@ -10,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
-/** The one measuring entry point for declared queries. Per query:
+/** The one measuring entry point for declared queries and console lines.
+  * Per query:
   *  1. one warm run;
   *  2. a timed construction of the DataFrame: `build_ms`, and `build_jobs`,
   *     the eager pin jobs construction fires;
@@ -32,9 +34,18 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * `--plans <dir>` also writes `<dir>/<name>.txt`: the formatted plan
   * before execution and again after it (the AQE final plan). With no query
   * names it prints the query/oracle inventory instead.
+  *
+  * A `RAINSTORM <op1> <op2> <file> [<numTasks>]` line after the query
+  * names is measured the same way through `Console.run`; it runs to the
+  * next `RAINSTORM` token or the end, and its name is its tokens, each cut
+  * to its last path segment, with `_` for every run of spaces. sbt drops
+  * `"` from arguments, so a line with a quoted pattern runs through `java`
+  * on the exported classpath. Console lines alone need no
+  * `SPARK_GRAFT_SF_DIR`.
   * {{{
   * SPARK_GRAFT_SF_DIR=<testdata dir> [SPARK_GRAFT_CPUS=n] \
   *   sbt "runMain graft.tools.Probe [--plans <dir>] q_a q_b ..."
+  * sbt "runMain graft.tools.Probe RAINSTORM FILTER:x TRANSFORM:uppercase <file> 3"
   * }}}
   */
 object Probe {
@@ -109,22 +120,40 @@ object Probe {
       scans.size, dupScans)
   }
 
+  /** The console lines in Probe's arguments: each `RAINSTORM` token starts
+    * one, which runs to the next such token or the end. */
+  def consoleLines(args: Seq[String]): Seq[String] =
+    Console.tokenize(args.mkString(" ")).foldLeft(Vector.empty[Vector[String]]) {
+      case (acc, t) if t.equalsIgnoreCase("RAINSTORM") || acc.isEmpty => acc :+ Vector(t)
+      case (acc, t) => acc.init :+ (acc.last :+ t)
+    }.map(_.mkString(" "))
+
+  /** [[measure]] on one console line, built by `Console.run`. */
+  def measureConsole(spark: SparkSession, line: String, plans: Option[Path] = None): Reading =
+    measure(spark, Console.tokenize(line).map(t => t.substring(t.lastIndexOf('/') + 1))
+      .mkString(" ").replaceAll("\\s+", "_"), () => Console.run(spark, line), plans)
+
   def main(args: Array[String]): Unit = {
-    val (plans, names) = args.toList match {
+    val (plans, rest) = args.toList match {
       case "--plans" :: dir :: rest => (Some(Files.createDirectories(Paths.get(dir))), rest)
       case rest => (None, rest)
     }
-    if (names.isEmpty) {
+    val (names, console) = rest.span(!_.trim.toUpperCase.startsWith("RAINSTORM"))
+    if (rest.isEmpty) {
       val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
       println(s"[probe] queries=${SparkEntry.queries.size} oracles=${SparkEntry.oracleSql.size} " +
         s"without_oracle=${missing.toSeq.sorted.mkString(",")}")
     } else {
-      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      val sfDir = if (names.isEmpty) "" else sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
         sys.error("set SPARK_GRAFT_SF_DIR to a testdata directory"))
       val spark = session("graft-probe")
-      try names.foreach { name =>
-        try println(measure(spark, name, () => SparkEntry.queries(name)(spark, sfDir), plans).line)
+      def report(name: String)(reading: => Reading): Unit =
+        try println(reading.line)
         catch { case e: Exception => println(s"[probe] $name FAILED ${e.getMessage}") }
+      try {
+        names.foreach(name => report(name)(
+          measure(spark, name, () => SparkEntry.queries(name)(spark, sfDir), plans)))
+        consoleLines(console).foreach(line => report(line)(measureConsole(spark, line, plans)))
       } finally spark.stop()
     }
   }

@@ -64,6 +64,20 @@ class ConsoleSpec extends AnyFunSuite with SparkSpec {
     assert(a.nonEmpty && a == b)
   }
 
+  test("FILTER on a CSV matches the whole line with its blank fields kept") {
+    // `30,,Punched` spans a blank Supplement field; the parsed row holds
+    // null there, which must join back as an empty field
+    val raw = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(trafficCsv))
+    val want = raw.toArray.map(_.toString).filter(_.toLowerCase.contains("30,,punched"))
+      .map(_.split(",")(2)).toSeq
+    assert(want == Seq("2", "6"))
+    for (op1 <- Seq("FILTER:30,,Punched", "FILTERED_TRANSFORM:30,,Punched:uppercase")) {
+      val got = Console.run(spark, s"RAINSTORM $op1 TRANSFORM:trim $trafficCsv 2")
+        .select("OBJECTID").collect().map(_.getString(0)).sorted.toSeq
+      assert(got == want, op1)
+    }
+  }
+
   test("numTasks maps to source parallelism") {
     val out = Console.run(spark,
       s"""RAINSTORM "TRANSFORM:select:OBJECTID,Category" "COLUMN_FILTER:Category:Warning" $trafficCsv 5 false""")

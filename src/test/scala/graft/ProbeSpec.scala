@@ -36,6 +36,20 @@ class ProbeSpec extends AnyFunSuite with SparkSpec {
     assert(m.exists(g => (g.group(2).toDouble - r.wallS).abs < 0.001), r.line)
   }
 
+  test("console lines: split at each RAINSTORM token and measured through Console.run") {
+    assert(Probe.consoleLines(Seq("RAINSTORM", "FILTER:\"a b\"", "AGGREGATE", "/d/in.txt", "3",
+      "RAINSTORM FILTER:x TRANSFORM:uppercase /d/t.csv 1")) ==
+      Seq("RAINSTORM FILTER:\"a b\" AGGREGATE /d/in.txt 3",
+        "RAINSTORM FILTER:x TRANSFORM:uppercase /d/t.csv 1"))
+    val f = Files.createTempDirectory("probe_console").resolve("in.txt")
+    Files.write(f, Seq("alpha x", "beta", "gamma x").asJava)
+    val r = Probe.measureConsole(spark, s"RAINSTORM FILTER:x TRANSFORM:uppercase $f 2")
+    assert(r.name == "RAINSTORM_FILTER:x_TRANSFORM:uppercase_in.txt_2", r.line)
+    // the repartition to numTasks is the one exchange
+    assert(r.jobs > 0 && r.exchanges == 1 && r.scans == 1, r.line)
+    assert("""\[probe\] (\S+)\s+([0-9.]+) s""".r.findFirstMatchIn(r.line).isDefined, r.line)
+  }
+
   test("no main source but GraftSession and EntrySmoke calls SparkSession.builder") {
     // EntrySmoke deliberately runs on a plain session without graft configs
     val allowed = Set("GraftSession.scala", "EntrySmoke.scala")

@@ -1,6 +1,12 @@
 package graft
 
-import graft.sources.Tables
+import graft.ops.{OpCompiler, Pipeline}
+import graft.sources.{Layouts, Tables}
+import graft.tools.Probe
+import java.nio.file.Files
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 class TablesSpec extends AnyFunSuite with SparkSpec {
@@ -33,6 +39,93 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
       assert(rows.map(_._1).toSeq == (0L until n.toLong))
       assert(rows.map(_._2).toSeq == content.linesIterator.toSeq)
     }
+  }
+
+  /** A ~24 KB file of `n` numbered lines: one split by default, ~24
+    * splits under `spark.sql.files.maxPartitionBytes=1024`. */
+  private def numberedFile(n: Int = 500): (String, Seq[String]) = {
+    val f = Files.createTempDirectory("graft_lines_n").resolve("n.txt")
+    val lines = (0 until n).map(i => f"line-$i%05d-${"x" * 40}")
+    Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    (f.toString, lines)
+  }
+
+  /** (line_no, line) per file name, in line_no order. */
+  private def numberingByFile(df: org.apache.spark.sql.DataFrame): Map[String, Seq[(Long, String)]] =
+    df.collect().groupBy(_.getString(1).replaceAll(".*/", "")).map { case (k, rows) =>
+      k -> rows.map(r => r.getLong(2) -> r.getString(0)).sortBy(_._1).toSeq }
+
+  test("the split layout is fixed at construction: run split after building unsplit raises") {
+    val (f, lines) = numberedFile()
+    val builtUnsplit = Tables.lines(spark, f)
+    val e = intercept[Exception] {
+      withConf("spark.sql.files.maxPartitionBytes" -> "1024") {
+        assert(spark.read.text(f).rdd.getNumPartitions > 4, "test must actually split the file")
+        builtUnsplit.collect()
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("no line offset")), e)
+    // the reverse drift, built split and run unsplit, still numbers exactly
+    val builtSplit = withConf("spark.sql.files.maxPartitionBytes" -> "1024") {
+      Tables.lines(spark, f)
+    }
+    assert(spark.read.text(f).rdd.getNumPartitions == 1)
+    assert(numberingByFile(builtSplit) == Map("n.txt" -> lines.indices.map(_.toLong).zip(lines)))
+  }
+
+  test("lines keeps blank lines, strips \\r\\n endings and reads a last line without a newline") {
+    val dir = Files.createTempDirectory("graft_lines_eol")
+    Files.write(dir.resolve("crlf.txt"), "a\r\n\r\nb\r\n  \r\nc".getBytes("UTF-8"))
+    Files.write(dir.resolve("lf.txt"), "x\n\ny\n".getBytes("UTF-8"))
+    assert(numberingByFile(Tables.lines(spark, dir.toString)) == Map(
+      "crlf.txt" -> Seq(0L -> "a", 1L -> "", 2L -> "b", 3L -> "  ", 4L -> "c"),
+      "lf.txt" -> Seq(0L -> "x", 1L -> "", 2L -> "y")))
+  }
+
+  test("lines restarts the count per file when many small files and an empty one share a scan partition") {
+    val dir = Files.createTempDirectory("graft_lines_pack")
+    Files.write(dir.resolve("f_empty.txt"), Array.emptyByteArray)
+    val files = (1 to 20).map { k =>
+      val lines = (0 until 3 + k % 4).map(i => s"f$k-l$i")
+      Files.write(dir.resolve(s"f_$k.txt"), lines.mkString("\n").getBytes("UTF-8"))
+      s"f_$k.txt" -> lines
+    }.toMap
+    // generated code, then the interpreted path of the counter
+    for (codegen <- Seq(Seq(), Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")))
+      withConf(codegen :+ ("spark.sql.files.openCostInBytes" -> "16"): _*) {
+        assert(spark.read.text(s"$dir/f_*.txt").rdd.getNumPartitions < 10,
+          "test must pack several files into one scan partition")
+        assert(numberingByFile(Tables.lines(spark, s"$dir/f_*.txt")) ==
+          files.map { case (k, ls) => k -> ls.indices.map(_.toLong).zip(ls) }, codegen)
+      }
+  }
+
+  test("line_no after a downstream FILTER, and after TRANSFORM:uppercase then FILTER, is the line's index in the file") {
+    val f = Files.createTempDirectory("graft_lines_filter").resolve("mixed.txt")
+    val lines = (0 until 600).map(i => if (i % 7 == 3) s"keep $i ${"y" * 30}" else s"drop $i ${"z" * 30}")
+    Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    val want = lines.indices.filter(i => lines(i).startsWith("keep")).map(_.toLong)
+    val ctx = OpCompiler.Ctx(Some("value"), Seq("file", "line_no"))
+    for (conf <- Seq("134217728", "1024"); ops <- Seq(Seq("FILTER:keep"),
+        Seq("TRANSFORM:uppercase", "FILTER:KEEP"))) {
+      withConf("spark.sql.files.maxPartitionBytes" -> conf) {
+        val got = Pipeline.fromDescriptors(ops, ctx)(Tables.lines(spark, f.toString))
+          .collect().map(r => r.getAs[Long]("line_no") -> r.getAs[String]("value")).sortBy(_._1).toSeq
+        assert(got.map(_._1) == want, s"$ops at maxPartitionBytes=$conf")
+        assert(got.forall { case (i, v) => v.equalsIgnoreCase(lines(i.toInt)) }, s"$ops at $conf")
+      }
+    }
+  }
+
+  test("an unsplit file numbers inside the scan: no exchange, window or join, and a text console job runs 2 jobs") {
+    val (f, _) = numberedFile()
+    val nodes = Layouts.executedNodes(Tables.lines(spark, f).queryExecution.executedPlan)
+    assert(nodes.count(n => n.isInstanceOf[Exchange] || n.isInstanceOf[WindowExec] ||
+      n.isInstanceOf[BaseJoinExec]) == 0, nodes.map(_.nodeName))
+    val r = Probe.measureConsole(spark, s"RAINSTORM FILTER:x TRANSFORM:uppercase $f 3")
+    assert(r.buildJobs == 0 && r.jobs == 2, r.line)
   }
 
   test("events NTZ snapshot is epoch-preserving under a non-UTC session zone; registerAll exposes the typed ts") {
