@@ -677,7 +677,7 @@ object Bench {
     * events. */
   def streamPass(spark: SparkSession, sfDir: String): Map[String, (Double, Seq[Long])] = {
     def drain(mode: OutputMode)(df: DataFrame): (Double, Seq[Long]) = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt").toString
+      val ckpt = TempDirs.fresh("graft_bench_ckpt")
       // State-store partition count = shuffle partitions at the query's
       // first batch. These workloads hold dozens-to-hundreds of state keys,
       // so 32 stores is pure per-store overhead (open/load/commit each
@@ -688,7 +688,7 @@ object Bench {
       try {
         val t0 = System.nanoTime()
         val q = df.writeStream.format("noop").outputMode(mode)
-          .option("checkpointLocation", ckpt)
+          .option("checkpointLocation", ckpt.toString)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         val wall = (System.nanoTime() - t0) / 1e9
@@ -697,80 +697,86 @@ object Bench {
         val perBatch = q.recentProgress.toSeq.map(p =>
           Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L))
         (wall, perBatch)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        TempDirs.delete(ckpt)
+      }
     }
     // The file-stream source needs a DIRECTORY of arriving files; stage the
-    // single-file tables behind symlinks in a temp dir.
+    // single-file tables behind symlinks in a temp dir (removed, links
+    // only, once every drain is done).
     def asDir(table: String): String = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_stream_$table")
+      val d = TempDirs.fresh(s"graft_stream_$table")
       java.nio.file.Files.createSymbolicLink(
         d.resolve(s"$table.parquet"), java.nio.file.Paths.get(s"$sfDir/$table.parquet"))
       d.toString
     }
     val docsPath = asDir("documents")
-    val docsSchema = spark.read.parquet(docsPath).schema
-    val pipe = StreamingPipeline.pipeline(
-      Seq(StreamOp.Filter("the"), StreamOp.Aggregate),
-      OpCompiler.Ctx(Some("text"), Seq("doc_id")),
-      shards = spark.sparkContext.defaultParallelism)(
-      spark.readStream.schema(docsSchema).parquet(docsPath))
     val evPath = asDir("events")
-    val evSchema = spark.read.parquet(evPath).schema
-    val ev = spark.readStream.schema(evSchema).parquet(evPath)
-    val evTs = if (evSchema("ts").dataType == LongType)
-      ev.withColumn("ts", expr("timestamp_micros(ts DIV 1000)")) else ev
-    // static snapshot side for the stream-static as-of drain (same shape
-    // as the q_asof gate's right side)
-    val evBatch = spark.read.parquet(evPath)
-    val evBatchTs = if (evSchema("ts").dataType == LongType)
-      evBatch.withColumn("ts", expr("timestamp_micros(ts DIV 1000)")) else evBatch
-    val snapshots = evBatchTs.filter(col("event_type") === "view")
-      .groupBy("user_id", "ts").agg(max("value").as("view_value"))
-    Map(
-      "q_stream_pipeline" -> drain(OutputMode.Append)(pipe),
-      "q_stream_window" -> drain(OutputMode.Update)(StreamingPipeline.windowedCounts(evTs)),
-      // session windows: the heaviest stateful op (merging state, not just
-      // keyed counters) — watermarked so state stays bounded; Append is the
-      // only output mode session aggregations support
-      "q_stream_sessions" -> drain(OutputMode.Append)(
-        StreamingPipeline.sessionCounts(evTs, gap = "30 minutes",
-          watermark = Some("2 hours"))),
-      // per-event session LABELING (one (lastTs, idx) state per user) —
-      // complements the aggregate above
-      "q_stream_sessionize" -> drain(OutputMode.Append)(
-        StreamingPipeline.sessionize(evTs, gap = "30 minutes")),
-      // stream-static interval as-of: ZERO streaming state, the snapshot
-      // side broadcasts — per-micro-batch cost is a hash lookup
-      "q_stream_asof" -> drain(OutputMode.Append)(
-        graft.operators.AsOfJoin.asofJoinStreamStatic(
-          evTs.filter(col("event_type") === "purchase"), snapshots, Seq("user_id"))),
-      // per-user last-event state emitting transition pairs as they arrive
-      "q_stream_transitions" -> drain(OutputMode.Append)(
-        StreamingPipeline.transitions(evTs)),
-      // per-key O(window)-long ring state flagging hour buckets as later
-      // buckets close them — the ingest-time alerting path
-      "q_stream_anomaly" -> drain(OutputMode.Append)(
-        StreamingPipeline.anomalyFlags(evTs)),
-      // watermarked windowed OHLC: min_by/max_by merge as partial aggs, so
-      // open-bar state is one candidate row per (key, hour), not events
-      "q_stream_ohlc" -> drain(OutputMode.Append)(
-        StreamingPipeline.ohlcBars(evTs)),
-      // CDC latest-state view: one fixed-shape state row per key, emits
-      // only view changes (the q_cdc_latest gate's op schedule)
-      "q_stream_cdc" -> drain(OutputMode.Append)(
-        StreamingPipeline.cdcLatestStream(evTs.select(col("user_id"),
-          when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
-          col("value"), col("ts"), col("event_id")))),
-      // two-live-streams interval join: watermark-bounded buffered state
-      // on both sides (purchase stream x click stream attribution)
-      "q_stream_join" -> drain(OutputMode.Append)(
-        StreamingPipeline.intervalJoin(
-          evTs.filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          evTs.filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours")))
+    try {
+      val docsSchema = spark.read.parquet(docsPath).schema
+      val pipe = StreamingPipeline.pipeline(
+        Seq(StreamOp.Filter("the"), StreamOp.Aggregate),
+        OpCompiler.Ctx(Some("text"), Seq("doc_id")),
+        shards = spark.sparkContext.defaultParallelism)(
+        spark.readStream.schema(docsSchema).parquet(docsPath))
+      val evSchema = spark.read.parquet(evPath).schema
+      val ev = spark.readStream.schema(evSchema).parquet(evPath)
+      val evTs = if (evSchema("ts").dataType == LongType)
+        ev.withColumn("ts", expr("timestamp_micros(ts DIV 1000)")) else ev
+      // static snapshot side for the stream-static as-of drain (same shape
+      // as the q_asof gate's right side)
+      val evBatch = spark.read.parquet(evPath)
+      val evBatchTs = if (evSchema("ts").dataType == LongType)
+        evBatch.withColumn("ts", expr("timestamp_micros(ts DIV 1000)")) else evBatch
+      val snapshots = evBatchTs.filter(col("event_type") === "view")
+        .groupBy("user_id", "ts").agg(max("value").as("view_value"))
+      Map(
+        "q_stream_pipeline" -> drain(OutputMode.Append)(pipe),
+        "q_stream_window" -> drain(OutputMode.Update)(StreamingPipeline.windowedCounts(evTs)),
+        // session windows: the heaviest stateful op (merging state, not just
+        // keyed counters) — watermarked so state stays bounded; Append is the
+        // only output mode session aggregations support
+        "q_stream_sessions" -> drain(OutputMode.Append)(
+          StreamingPipeline.sessionCounts(evTs, gap = "30 minutes",
+            watermark = Some("2 hours"))),
+        // per-event session LABELING (one (lastTs, idx) state per user) —
+        // complements the aggregate above
+        "q_stream_sessionize" -> drain(OutputMode.Append)(
+          StreamingPipeline.sessionize(evTs, gap = "30 minutes")),
+        // stream-static interval as-of: ZERO streaming state, the snapshot
+        // side broadcasts — per-micro-batch cost is a hash lookup
+        "q_stream_asof" -> drain(OutputMode.Append)(
+          graft.operators.AsOfJoin.asofJoinStreamStatic(
+            evTs.filter(col("event_type") === "purchase"), snapshots, Seq("user_id"))),
+        // per-user last-event state emitting transition pairs as they arrive
+        "q_stream_transitions" -> drain(OutputMode.Append)(
+          StreamingPipeline.transitions(evTs)),
+        // per-key O(window)-long ring state flagging hour buckets as later
+        // buckets close them — the ingest-time alerting path
+        "q_stream_anomaly" -> drain(OutputMode.Append)(
+          StreamingPipeline.anomalyFlags(evTs)),
+        // watermarked windowed OHLC: min_by/max_by merge as partial aggs, so
+        // open-bar state is one candidate row per (key, hour), not events
+        "q_stream_ohlc" -> drain(OutputMode.Append)(
+          StreamingPipeline.ohlcBars(evTs)),
+        // CDC latest-state view: one fixed-shape state row per key, emits
+        // only view changes (the q_cdc_latest gate's op schedule)
+        "q_stream_cdc" -> drain(OutputMode.Append)(
+          StreamingPipeline.cdcLatestStream(evTs.select(col("user_id"),
+            when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
+            col("value"), col("ts"), col("event_id")))),
+        // two-live-streams interval join: watermark-bounded buffered state
+        // on both sides (purchase stream x click stream attribution)
+        "q_stream_join" -> drain(OutputMode.Append)(
+          StreamingPipeline.intervalJoin(
+            evTs.filter(col("event_type") === "purchase")
+              .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
+            evTs.filter(col("event_type") === "click")
+              .select(col("event_id").as("click_id"), col("user_id"),
+                col("ts").as("cts")),
+            Seq("user_id"), "ts", "cts",
+            within = "30 minutes", watermark = "2 hours")))
+    } finally Seq(docsPath, evPath).foreach(d => TempDirs.delete(java.nio.file.Paths.get(d)))
   }
 }

@@ -66,23 +66,23 @@ object SparkEntry {
     s"SELECT ${items.mkString(", ")} FROM (\n$sql\n) __hs"
   }
 
-  /** Stage `log` as `n` time-ordered single-file parquet segments in a
-    * fresh temp dir for file-source replay: segment names AND modification
+  /** Stage `log` as `n` time-ordered single-file parquet segments in
+    * `base/in` for file-source replay: segment names AND modification
     * times both increase in segment order (the two orderings
     * FileStreamSource may use), so `maxFilesPerTrigger=1` replays the log
     * in `orderCols` order as n micro-batches — the streaming-gate input
     * shape. `extraLast` appends one more segment after the data (a
-    * watermark-flush sentinel). Returns (baseDir, inputDir). */
+    * watermark-flush sentinel), staged through `base/tmp`. Returns the
+    * input dir. */
   private def stageTimeSegments(
       log: DataFrame,
       n: Int,
       orderCols: Seq[org.apache.spark.sql.Column],
-      extraLast: Option[DataFrame] = None): (String, String) = {
-    import java.nio.file.{Files, Paths}
+      extraLast: Option[DataFrame],
+      base: java.nio.file.Path): String = {
+    import java.nio.file.Files
     import org.apache.spark.sql.expressions.Window
-    val base = Files.createTempDirectory("graft_stream_gate").toString
-    val inDir = s"$base/in"
-    new java.io.File(inDir).mkdirs()
+    val inDir = Files.createDirectory(base.resolve("in"))
     // ONE partitioned write stages every segment + the sentinel (r19):
     // the previous shape paid one repartition(1) write JOB per segment
     // plus an eager pin of the global ntile — n+2 driver-blocking jobs
@@ -98,112 +98,81 @@ object SparkEntry {
       case Some(df) => bucketed.unionByName(df.withColumn("__b", lit(n + 1)))
       case None => bucketed
     }
-    val tmp = s"$base/tmp"
+    val tmp = base.resolve("tmp")
     all.repartition(col("__b")).sortWithinPartitions(col("__b") +: orderCols: _*)
-      .write.partitionBy("__b").mode("overwrite").parquet(tmp)
+      .write.partitionBy("__b").mode("overwrite").parquet(tmp.toString)
     val segs = (1 to n) ++ extraLast.map(_ => n + 1).toSeq
     segs.foreach { b =>
-      val part = new java.io.File(s"$tmp/__b=$b").listFiles()
+      val part = tmp.resolve(s"__b=$b").toFile.listFiles()
         .filter(_.getName.startsWith("part-")).head
-      val dst = Paths.get(inDir, f"seg-$b%03d.parquet")
+      val dst = inDir.resolve(f"seg-$b%03d.parquet")
       Files.move(part.toPath, dst)
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + b * 60000L))
     }
-    (base, inDir)
+    inDir.toString
   }
 
-  /** Shared streaming-gate scaffold (all q_stream_*_gate entries): stage
-    * `staged` as 4 in-order segments (+ optional sentinel), hand `build`
-    * a FACTORY of file-stream sources over them (the interval-join gate
-    * opens two), drain through the checkpointed parquet sink under 8
-    * state-store partitions (these drains hold few keys; 32 stores is
-    * pure per-store open/load/commit overhead — the Bench discipline),
-    * and return the materialized sink for the gate's readout. */
-  private def runStreamGate(
+  /** What a stream gate drains into: the checkpointed parquet file sink
+    * over the frame `build` makes from a FACTORY of file-stream sources
+    * (the interval-join gates open two), or
+    * [[graft.streaming.StreamingPipeline.startScoredParquetSink]] applying
+    * the batch relation `score` to each arriving micro-batch (the shape
+    * for stream-static scoring whose per-doc agg would force update mode). */
+  private sealed trait GateSink
+  private final case class FileSink(build: (() => DataFrame) => DataFrame) extends GateSink
+  private final case class ScoredSink(score: DataFrame => DataFrame) extends GateSink
+
+  /** Shared streaming-gate drain (every q_stream_*_gate): stage `staged`
+    * as 4 in-order segments (+ optional sentinel) in a fresh dir under
+    * [[TempDirs.root]], drain them through `sink` under 8 state-store
+    * partitions (these drains hold few keys; 32 stores is pure per-store
+    * open/load/commit overhead — the Bench discipline) plus `confs`, and
+    * return the materialized sink with the operational LATE-DATA readout:
+    * `numRowsDroppedByWatermark` summed over every micro-batch's state
+    * operators, the metric a production watermark pipeline alarms on (a
+    * caller plants late rows via `extraLast`). A scored sink's `_batch_id`
+    * — its exactly-once per-batch overwrite key — is provenance, not part
+    * of the scored relation, and is dropped. The staged input and the
+    * checkpoint are deleted when the drain ends; the sink dir stays for
+    * the returned frame's lazy reads and goes with the root at exit. */
+  private def streamGate(
       s: SparkSession,
       staged: DataFrame,
       orderCols: Seq[org.apache.spark.sql.Column],
       extraLast: Option[DataFrame] = None,
       confs: Map[String, String] = Map.empty)(
-      build: (() => DataFrame) => DataFrame): DataFrame = {
-    val (base, inDir) = stageTimeSegments(staged, 4, orderCols, extraLast)
-    val schema = s.read.parquet(inDir).schema
-    def src(): DataFrame = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+      sink: GateSink): (DataFrame, Long) = {
+    val base = TempDirs.fresh("graft_stream_gate")
+    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
     val overrides = confs + ("spark.sql.shuffle.partitions" -> "8")
     val prev = overrides.keys.map(k => k -> s.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val q = graft.streaming.StreamingPipeline.startFileSink(
-        build(() => src()), s"$base/out", s"$base/ckpt")
-      q.awaitTermination()
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-    s.read.parquet(s"$base/out")
-  }
-
-  /** [[runStreamGate]] plus the operational LATE-DATA readout: returns the
-    * drained sink AND the total `numRowsDroppedByWatermark` summed over
-    * every micro-batch's StreamingQueryProgress state operators — the
-    * metric a production watermark pipeline alarms on. The caller plants
-    * late rows via `extraLast` (they arrive under the watermark the
-    * in-order segments established) and pins the count next to the
-    * kept-set hash. */
-  private def runStreamGateDrops(
-      s: SparkSession,
-      staged: DataFrame,
-      orderCols: Seq[org.apache.spark.sql.Column],
-      extraLast: Option[DataFrame])(
-      build: (() => DataFrame) => DataFrame): (DataFrame, Long) = {
-    val (base, inDir) = stageTimeSegments(staged, 4, orderCols, extraLast)
-    val schema = s.read.parquet(inDir).schema
-    def src(): DataFrame = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val prev = s.conf.getOption("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
     val dropped = try {
-      val q = graft.streaming.StreamingPipeline.startFileSink(
-        build(() => src()), s"$base/out", s"$base/ckpt")
+      val inDir = stageTimeSegments(staged, 4, orderCols, extraLast, base)
+      val schema = s.read.parquet(inDir).schema
+      def src(): DataFrame = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir)
+      overrides.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = sink match {
+        case FileSink(build) =>
+          graft.streaming.StreamingPipeline.startFileSink(build(() => src()), out, ckpt)
+        case ScoredSink(score) =>
+          graft.streaming.StreamingPipeline.startScoredParquetSink(src(), score, out, ckpt)
+      }
       q.awaitTermination()
-      q.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-      case None => s.conf.unset("spark.sql.shuffle.partitions")
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+      Seq("in", "tmp", "ckpt").foreach(d => TempDirs.delete(base.resolve(d)))
     }
-    (s.read.parquet(s"$base/out"), dropped)
-  }
-
-  /** [[runStreamGate]]'s foreachBatch twin: same 4-segment staging and
-    * checkpointed drain, but each micro-batch lands through
-    * [[graft.streaming.StreamingPipeline.startScoredParquetSink]] — the
-    * batch relation `score` applied per arriving batch (the shape for
-    * stream-static scoring whose per-doc agg would force update mode). */
-  private def runStreamGateScored(
-      s: SparkSession,
-      staged: DataFrame,
-      orderCols: Seq[org.apache.spark.sql.Column])(
-      score: DataFrame => DataFrame): DataFrame = {
-    val (base, inDir) = stageTimeSegments(staged, 4, orderCols, None)
-    val schema = s.read.parquet(inDir).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val prev = s.conf.getOption("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = graft.streaming.StreamingPipeline.startScoredParquetSink(
-        src, score, s"$base/out", s"$base/ckpt")
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-      case None => s.conf.unset("spark.sql.shuffle.partitions")
-    }
-    // _batch_id is the sink's exactly-once partition key (per-batch dynamic
-    // overwrite) — provenance, not part of the scored relation the gate pins
-    s.read.parquet(s"$base/out").drop("_batch_id")
+    val frame = s.read.parquet(out)
+    (sink match {
+      case _: ScoredSink => frame.drop("_batch_id")
+      case _: FileSink => frame
+    }, dropped)
   }
 
   /** JVM-exit cleanup for gate temp dirs: registered once per distinct
@@ -1425,10 +1394,10 @@ object SparkEntry {
         when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
         col("value"), unix_micros(col("ts")).as("ts_us"),
         col("ts"), col("event_id"))
-      val sink = runStreamGate(s, log, Seq(col("ts"), col("event_id"))) { src =>
+      val sink = streamGate(s, log, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.cdcLatestStream(
           src(), payloadCols = Seq("value", "ts_us"))
-      }
+      })._1
       sink.groupBy("user_id")
         .agg(max_by(struct(col("op"), col("value"), col("ts_us")),
           col("n_ops")).as("w"), max(col("n_ops")).as("n_ops"))
@@ -1449,11 +1418,11 @@ object SparkEntry {
     // filter's matches routed by the shard hash (sum of doc ids).
     "q_stream_console_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      runStreamGate(s, docs, Seq(col("doc_id"))) { src =>
+      streamGate(s, docs, Seq(col("doc_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.pipeline(
           Seq(graft.ops.StreamOp.Filter("the"), graft.ops.StreamOp.Aggregate),
           OpCompiler.Ctx(Some("text"), Seq("doc_id")), shards = 8)(src())
-      }
+      })._1
         // shard replayed EXACTLY as usableShardCol routes it: Long.hashCode
         // = (x ^ (x >>> 32)).toInt, and since 8 divides 2^32 the int wrap
         // cannot change the low 3 bits — pmod of the long xor is identical
@@ -1489,9 +1458,9 @@ object SparkEntry {
       val docs = base0.unionByName(dupes).select(col("doc_id"), col("text"),
         timestamp_micros(lit(1700000000000000L) +
           col("doc_id") * lit(1000000L)).as("ts"))
-      runStreamGate(s, docs, Seq(col("ts"), col("doc_id"))) { src =>
+      streamGate(s, docs, Seq(col("ts"), col("doc_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.dedupExact(src(), "ts", "30 days")
-      }
+      })._1
         .groupBy(md5(col("text")).as("fp"))
         .agg(count(lit(1)).cast("long").as("n_out"),
           max(col("text")).as("text"))
@@ -1512,10 +1481,10 @@ object SparkEntry {
       val docs = base0.unionByName(dupes).select(col("doc_id"), col("text"),
         timestamp_micros(lit(1700000000000000L) +
           col("doc_id") * lit(1000000L)).as("ts"))
-      runStreamGate(s, docs, Seq(col("ts"), col("doc_id"))) { src =>
+      streamGate(s, docs, Seq(col("ts"), col("doc_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.dedupSpans(
           src(), "ts", "30 days", maxTokens = 32)
-      }
+      })._1
         .groupBy(md5(col("chunk")).as("fp"))
         .agg(count(lit(1)).cast("long").as("n_out"),
           max(col("chunk")).as("chunk"))
@@ -1548,11 +1517,11 @@ object SparkEntry {
       val sentinel = s.range(1).select(lit(-1L).as("doc_id"),
         lit("__wm_flush__").as("source"), lit("__wm_flush__").as("text"),
         timestamp_micros(lit(maxTs + 31L * 86400L * 1000000L)).as("ts"))
-      runStreamGate(s, base, Seq(col("ts"), col("doc_id")),
-          extraLast = Some(dupes.unionByName(sentinel))) { src =>
+      streamGate(s, base, Seq(col("ts"), col("doc_id")),
+          extraLast = Some(dupes.unionByName(sentinel)))(FileSink { src =>
         graft.streaming.StreamingPipeline.dedupThenWindowCounts(
           src(), "ts", "30 days", keyCol = "source")
-      }
+      })._1
         .where(col("source") =!= "__wm_flush__")
         .select(unix_timestamp(col("w_start")).as("w_start"), col("source"),
           col("n"))
@@ -1571,10 +1540,10 @@ object SparkEntry {
     "q_stream_semantic_gate" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.filter(col("vec_id") % 3 === 0)
-      runStreamGate(s, emb.filter(col("vec_id") % 3 =!= 0),
-          Seq(col("vec_id"))) { src =>
+      streamGate(s, emb.filter(col("vec_id") % 3 =!= 0),
+          Seq(col("vec_id")))(FileSink { src =>
         Dedup.semanticDedupAgainstCorpus(src(), corpus, k = 8, threshold = 0.4)
-      }
+      })._1
     }),
 
     // STREAM-STATIC DRIFT Z-SCORING under the hash gate: arriving docs
@@ -1586,11 +1555,11 @@ object SparkEntry {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      runStreamGate(s, docs.filter(col("doc_id") % 5 === 0),
-          Seq(col("doc_id"))) { src =>
+      streamGate(s, docs.filter(col("doc_id") % 5 === 0),
+          Seq(col("doc_id")))(FileSink { src =>
         Curation.standardizeAgainstCorpus(src(), corpus, "n_tokens",
           groupCols = Seq("source"))
-      }
+      })._1
     }),
 
     // STREAM-STATIC BIGRAM-RARITY SCORING under the hash gate, through
@@ -1606,11 +1575,11 @@ object SparkEntry {
     "q_stream_bigramlm_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      runStreamGateScored(s,
+      streamGate(s,
           docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          Seq(col("doc_id"))) { batch =>
+          Seq(col("doc_id")))(ScoredSink { batch =>
         Curation.bigramRarityAgainstCorpus(batch, corpus)
-      }
+      })._1
     }),
 
     // STREAMING INGEST PPJOIN under the hash gate: each arriving crawl
@@ -1626,11 +1595,11 @@ object SparkEntry {
     "q_stream_ppjoin_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      runStreamGateScored(s,
+      streamGate(s,
           docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          Seq(col("doc_id"))) { batch =>
+          Seq(col("doc_id")))(ScoredSink { batch =>
         Dedup.ppjoinAgainstCorpus(batch, corpus, threshold = 0.5)
-      }
+      })._1
     }),
 
     // STREAMING INGEST DRIFT MONITORING under the hash gate: each
@@ -1647,11 +1616,11 @@ object SparkEntry {
     "q_stream_jsd_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      strDecimals(runStreamGateScored(s,
+      strDecimals(streamGate(s,
           docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          Seq(col("doc_id"))) { batch =>
+          Seq(col("doc_id")))(ScoredSink { batch =>
         Curation.jsDivergence(batch, corpus)
-      })
+      })._1)
     }),
 
     // STREAMING PER-BATCH WASSERSTEIN-1 DRIFT under the gate — the
@@ -1665,14 +1634,14 @@ object SparkEntry {
       val events = ev(s, dir)
       val ref = events.filter(col("user_id") % 5 =!= 0)
         .select(col("value"), lit(false).as("__b"))
-      strDecimals(runStreamGateScored(s,
+      strDecimals(streamGate(s,
           events.filter(col("user_id") % 5 === 0)
             .select(col("ts"), col("event_id"), col("value")),
-          Seq(col("ts"), col("event_id"))) { batch =>
+          Seq(col("ts"), col("event_id")))(ScoredSink { batch =>
         Curation.wasserstein1(
           ref.unionByName(batch.select(col("value"), lit(true).as("__b"))),
           "value", col("__b"))
-      })
+      })._1)
     }),
 
     // STREAMING PER-BATCH CHI-SQUARE DRIFT under the gate — the
@@ -1685,15 +1654,15 @@ object SparkEntry {
       val events = ev(s, dir)
       val ref = events.filter(col("user_id") % 5 =!= 0)
         .select(col("event_type"), lit(false).as("__b"))
-      runStreamGateScored(s,
+      streamGate(s,
           events.filter(col("user_id") % 5 === 0)
             .select(col("ts"), col("event_id"), col("event_type")),
-          Seq(col("ts"), col("event_id"))) { batch =>
+          Seq(col("ts"), col("event_id")))(ScoredSink { batch =>
         Curation.chi2Drift(
           ref.unionByName(batch.select(col("event_type"),
             lit(true).as("__b"))),
           "event_type", col("__b"))
-      }
+      })._1
     }),
 
     // STREAMING SUBSEQUENCE PATTERN MATCH under the hash gate — the
@@ -1707,10 +1676,10 @@ object SparkEntry {
     "q_stream_pattern_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id"))) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.patternMatch(src(),
           pattern = Array(0.0, 1.0, 3.0, 7.0, 3.0, 1.0), threshold = 1.0)
-      }
+      })._1
         .select(col("user_id"), col("end_ts_us"), col("dist"))
     }),
 
@@ -1724,13 +1693,13 @@ object SparkEntry {
         when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
         col("value"), unix_micros(col("ts")).as("ts_us"),
         col("ts"), col("event_id"))
-      val sink = runStreamGate(s, log, Seq(col("ts"), col("event_id")),
+      val sink = streamGate(s, log, Seq(col("ts"), col("event_id")),
           confs = Map("spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(FileSink {
         src =>
           graft.streaming.StreamingPipeline.cdcLatestStream(
             src(), payloadCols = Seq("value", "ts_us"))
-      }
+      })._1
       sink.groupBy("user_id")
         .agg(max_by(struct(col("op"), col("value"), col("ts_us")),
           col("n_ops")).as("w"), max(col("n_ops")).as("n_ops"))
@@ -1758,10 +1727,10 @@ object SparkEntry {
         lit("__wm_flush__").as("event_type"),
         timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
         lit(0.0).as("value"), lit(-1L).as("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinel))(FileSink { src =>
         graft.streaming.StreamingPipeline.ohlcBars(src())
-      }
+      })._1
         .where(col("event_type") =!= "__wm_flush__")
         .select(col("event_type"), col("bucket_us"), col("open"), col("high"),
           col("low"), col("close"), col("volume_cents"), col("n_events"))
@@ -1788,8 +1757,8 @@ object SparkEntry {
         timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
         lit(-1L).as("event_id"),
         lit(-1L).as("user_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinel))(FileSink { src =>
         src().withWatermark("ts", "2 hours")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(Sketches.kmvSketch(col("user_id").cast("string"), 32).as("sk"))
@@ -1800,7 +1769,7 @@ object SparkEntry {
             when(size(col("sk")) > 0,
               element_at(col("sk"), least(size(col("sk")), lit(32)))).as("kth"),
             Sketches.kmvEstimate(col("sk"), 32).as("est"))
-      }
+      })._1
         .where(col("event_type") =!= "__wm_flush__")
         .select(unix_timestamp(col("w_start")).as("w_start"),
           col("event_type"), col("n_minima"), col("kth"), col("est"))
@@ -1814,10 +1783,10 @@ object SparkEntry {
         lit("__wm_flush__").as("event_type"),
         timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
         lit(-1L).as("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinel))(FileSink { src =>
         graft.streaming.StreamingPipeline.windowedCounts(src())
-      }
+      })._1
         .where(col("event_type") =!= "__wm_flush__")
         .select(unix_timestamp(col("w_start")).as("w_start"),
           col("event_type"), col("n"))
@@ -1853,11 +1822,11 @@ object SparkEntry {
         lit("__wm_flush__").as("event_type"),
         timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"),
         lit(-1L).as("event_id"))
-      val (sink, dropped) = runStreamGateDrops(s, main,
+      val (sink, dropped) = streamGate(s, main,
           Seq(col("ts"), col("event_id")),
-          extraLast = Some(late.union(sentinel))) { src =>
+          extraLast = Some(late.union(sentinel)))(FileSink { src =>
         graft.streaming.StreamingPipeline.windowedCounts(src())
-      }
+      })
       sink.where(col("event_type") =!= "__wm_flush__")
         .select(unix_timestamp(col("w_start")).as("w_start"),
           col("event_type"), col("n"))
@@ -1877,11 +1846,11 @@ object SparkEntry {
         lit("__wm_flush__").as("event_type"),
         timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"),
         lit(-1L).as("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinel))(FileSink { src =>
         graft.streaming.StreamingPipeline.slidingCounts(
           src(), windowLen = "2 hours", slide = "1 hour")
-      }
+      })._1
         .where(col("event_type") =!= "__wm_flush__")
         .select(unix_timestamp(col("w_start")).as("w_start"),
           col("event_type"), col("n"))
@@ -1897,9 +1866,9 @@ object SparkEntry {
     "q_stream_sessionize_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id"))) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.sessionize(src(), gap = "30 minutes")
-      }
+      })._1
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("session_idx"))
     }),
@@ -1912,9 +1881,9 @@ object SparkEntry {
     "q_stream_transitions_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      val pairs = runStreamGate(s, events, Seq(col("ts"), col("event_id"))) { src =>
+      val pairs = streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.transitions(src())
-      }
+      })._1
         .filter(col("to_type").isNotNull)
       val counts = pairs.groupBy("from_type", "to_type")
         .agg(count(lit(1)).as("n"))
@@ -1937,11 +1906,11 @@ object SparkEntry {
     "q_stream_transitions_idle_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id"))) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.transitions(
           src().withWatermark("ts", "2 hours"),
           maxGap = Some("30 minutes"), idleTimeout = Some("45 minutes"))
-      }
+      })._1
         .filter(col("to_type").isNotNull)
         .select(col("user_id"), col("from_type"), col("to_type"))
     }),
@@ -1955,9 +1924,9 @@ object SparkEntry {
     "q_stream_seq3_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      val grams = runStreamGate(s, events, Seq(col("ts"), col("event_id"))) {
+      val grams = streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink {
         src => graft.streaming.StreamingPipeline.sequences(src(), n = 3)
-      }
+      })._1
       grams.groupBy("t0", "t1", "t2")
         .agg(count(lit(1)).cast("long").as("n_occurrences"),
           count_distinct(col("user_id")).cast("long").as("support"))
@@ -1979,11 +1948,11 @@ object SparkEntry {
         lit("__wm_flush__").as("event_type"),
         timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
         lit(-1L).as("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinel))(FileSink { src =>
         graft.streaming.StreamingPipeline.sessionCounts(
           src(), gap = "30 minutes", watermark = Some("2 hours"))
-      }
+      })._1
         .where(col("event_type") =!= "__wm_flush__")
         .select(unix_micros(col("s_start")).as("s_start"),
           col("event_type"), col("n"))
@@ -2000,7 +1969,7 @@ object SparkEntry {
     "q_stream_join_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id"))) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.intervalJoin(
           src().filter(col("event_type") === "purchase")
             .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
@@ -2009,7 +1978,7 @@ object SparkEntry {
               col("ts").as("cts")),
           Seq("user_id"), "ts", "cts",
           within = "30 minutes", watermark = "2 hours")
-      }
+      })._1
         .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("click_id"), unix_micros(col("cts")).as("cts_us"))
     }),
@@ -2034,8 +2003,8 @@ object SparkEntry {
           lit(-2L).as("event_id"), lit(-2L).as("user_id"),
           lit("click").as("event_type"),
           timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinels))(FileSink { src =>
         graft.streaming.StreamingPipeline.intervalJoin(
           src().filter(col("event_type") === "purchase")
             .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
@@ -2047,7 +2016,7 @@ object SparkEntry {
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n_attributed"))
           .select(col("window.start").as("w_start"), col("n_attributed"))
-      }
+      })._1
         .select(unix_timestamp(col("w_start")).as("w_start"),
           col("n_attributed"))
     }),
@@ -2076,8 +2045,8 @@ object SparkEntry {
           lit(-2L).as("event_id"), lit(-2L).as("user_id"),
           lit("click").as("event_type"),
           timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinels))(FileSink { src =>
         graft.streaming.StreamingPipeline.intervalJoin(
           src().filter(col("event_type") === "purchase")
             .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
@@ -2087,7 +2056,7 @@ object SparkEntry {
           Seq("user_id"), "ts", "cts",
           within = "30 minutes", watermark = "2 hours",
           joinType = "left_outer")
-      }
+      })._1
         .where(col("buy_id") >= 0)
         .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("click_id"), unix_micros(col("cts")).as("cts_us"))
@@ -2109,8 +2078,8 @@ object SparkEntry {
           lit(-2L).as("event_id"), lit(-2L).as("user_id"),
           lit("click").as("event_type"),
           timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinels))(FileSink { src =>
         graft.streaming.StreamingPipeline.intervalJoin(
           src().filter(col("event_type") === "purchase")
             .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
@@ -2120,7 +2089,7 @@ object SparkEntry {
           Seq("user_id"), "ts", "cts",
           within = "30 minutes", watermark = "2 hours",
           joinType = "right_outer")
-      }
+      })._1
         .where((col("buy_id").isNull || col("buy_id") >= 0) &&
           col("click_id") >= 0)
         .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -2145,8 +2114,8 @@ object SparkEntry {
           lit(-2L).as("event_id"), lit(-2L).as("user_id"),
           lit("click").as("event_type"),
           timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinels))(FileSink { src =>
         graft.streaming.StreamingPipeline.intervalJoin(
           src().filter(col("event_type") === "purchase")
             .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
@@ -2156,7 +2125,7 @@ object SparkEntry {
           Seq("user_id"), "ts", "cts",
           within = "30 minutes", watermark = "2 hours",
           joinType = "full_outer")
-      }
+      })._1
         .where((col("buy_id").isNull || col("buy_id") >= 0) &&
           (col("click_id").isNull || col("click_id") >= 0))
         .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -2173,7 +2142,7 @@ object SparkEntry {
     "q_stream_join_semi_gate" -> ((s, dir) => {
       val events = ev(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id"))) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
         graft.streaming.StreamingPipeline.intervalJoin(
           src().filter(col("event_type") === "purchase")
             .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
@@ -2183,7 +2152,7 @@ object SparkEntry {
           Seq("user_id"), "ts", "cts",
           within = "30 minutes", watermark = "2 hours",
           joinType = "left_semi")
-      }
+      })._1
         .select(col("buy_id"), col("user_id"),
           unix_micros(col("ts")).as("ts_us"))
     }),
@@ -2205,10 +2174,10 @@ object SparkEntry {
         .select(col("event_type"),
           timestamp_micros(lit(maxTs + 48L * 3600L * 1000000L)).as("ts"),
           lit(-1L).as("event_id"))
-      runStreamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels)) { src =>
+      streamGate(s, events, Seq(col("ts"), col("event_id")),
+          extraLast = Some(sentinels))(FileSink { src =>
         graft.streaming.StreamingPipeline.anomalyFlags(src())
-      }
+      })._1
         .select(col("event_type"), col("bucket_us"), col("n"), col("s_prev"),
           col("ss_prev"), col("w_prev"), col("is_anomaly"))
     }),
@@ -2226,9 +2195,9 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       val views = e.filter(col("event_type") === "view")
         .groupBy("user_id", "ts").agg(max("value").as("view_value"))
-      runStreamGate(s, purchases, Seq(col("ts"), col("event_id"))) { src =>
+      streamGate(s, purchases, Seq(col("ts"), col("event_id")))(FileSink { src =>
         operators.AsOfJoin.asofJoinStreamStatic(src(), views, Seq("user_id"))
-      }
+      })._1
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("value"), col("asof_view_value").as("view_value"),
           unix_micros(col("asof_ts")).as("view_ts_us"))

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.ops.{OpCompiler, StreamOp}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType, StructField, StructType}
@@ -498,6 +499,137 @@ object StreamingPipeline {
       .select(col("window.start").as("w_start"), col(keyCol), col("n"))
   }
 
+  /** Event-time micros of a `ts` value: TimestampType (java.sql.Timestamp
+    * or java.time.Instant, per spark.sql.datetime.java8API.enabled) or a
+    * bigint already in micros. */
+  private def micros(ts: Any): Long = ts match {
+    case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+    case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
+    case l: Long => l
+    case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
+  }
+
+  /** Nulls-first comparison of two external-row values of one orderable
+    * type — so streaming tie columns accept whatever the batch twins
+    * ([[graft.operators.TimeSeries.patternTopK]],
+    * [[graft.operators.History.cdcLatest]]) order: int, bigint, string,
+    * timestamp — typed compares, never stringified ("10" < "9" would
+    * diverge from the batch plan on same-ts ties). */
+  private def cmpOrderable(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    case (x, _) => throw new IllegalArgumentException(
+      s"tie column value of unorderable type ${x.getClass.getName}")
+  }
+
+  /** The per-key `flatMapGroupsWithState` scaffold of the keyed stateful
+    * operators. Rows group by the key column's VALUE, string-encoded as
+    * `"1:" + value`, null as `"0"` (a hash would collide two keys onto one
+    * state; the prefix keeps a null key apart from the string "null").
+    * `f` gets the key's prior state and its micro-batch rows and returns
+    * the new state plus the rows to emit; the state is updated before the
+    * rows are handed on.
+    *
+    * `idle = Some((timeout, lastTs))` bounds an unbounded key universe:
+    * EVENT-time timeout (the input needs `withWatermark(tsCol, …)`
+    * upstream), deadline = `lastTs(state)` (micros) + timeout, clamped
+    * above the current watermark — the engine rejects a deadline at or
+    * behind it, and a key whose newest event already trails the idle
+    * window then expires at the next watermark move. An expired key's
+    * state is removed and emits nothing; a returning key starts from the
+    * initial state. Event time, not wall clock, keeps replay
+    * deterministic, and a processing-time timeout would make the engine
+    * schedule batches forever (`shouldRunAnotherBatch` is unconditionally
+    * true for it), wedging `processAllAvailable()`-style quiescence.
+    * `None` keeps state forever (NoTimeout).
+    *
+    * The key encoding, each state class and each operator's timeout mode
+    * are the checkpoint format: changing any of them breaks restart from
+    * an existing checkpoint. */
+  private def keyedState[S](
+      df: DataFrame,
+      keyCol: String,
+      stateEnc: Encoder[S],
+      outSchema: StructType,
+      idle: Option[(String, S => Long)] = None)(
+      f: (Option[S], Iterator[Row]) => (S, Iterator[Row])): DataFrame = {
+    val keyIdx = df.schema.fieldIndex(keyCol)
+    val deadline = idle.map { case (timeout, lastTs) =>
+      (graft.ops.Intervals.subDayMicros(timeout) / 1000L, lastTs)
+    }
+    val timeoutConf =
+      if (idle.isDefined) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    df.groupByKey { r: Row =>
+        if (r.isNullAt(keyIdx)) "0" else "1:" + r.get(keyIdx)
+      }(Encoders.STRING)
+      .flatMapGroupsWithState[S, Row](OutputMode.Append, timeoutConf) {
+        (_: String, rows: Iterator[Row], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val (st, out) = f(state.getOption, rows)
+            state.update(st)
+            deadline.foreach { case (idleMillis, lastTs) =>
+              state.setTimeoutTimestamp(math.max(lastTs(st) / 1000L + idleMillis,
+                state.getCurrentWatermarkMs() + 1L))
+            }
+            out
+          }
+      }(stateEnc, Encoders.row(outSchema))
+  }
+
+  /** A row with its event time computed once. */
+  private final class Event(val us: Long, val row: Row)
+
+  /** [[keyedState]] as an in-order scan: each key's micro-batch slice is
+    * sorted by `(micros(tsCol), tieCols…)` — ties typed and nulls first
+    * ([[cmpOrderable]]), the batch twins' `orderBy` — and `step` folds
+    * the events in that order from the prior state (`init` for a new
+    * key), emitting through its last argument. The sort is stable, so
+    * rows tied on every sort column keep arrival order. Ordering is
+    * WITHIN a micro-batch only: across batches the state is monotone, so
+    * a later batch's event with an earlier timestamp is processed against
+    * state already advanced past it (emitted rows are never retracted).
+    * Each operator's result therefore equals its batch twin's under
+    * per-key in-order arrival across batches (file replay, per-key
+    * ordered Kafka partitions — the CDC-shaped assumption of every
+    * last-value state); filter late arrivals upstream when that matters. */
+  private def keyedScan[S](
+      df: DataFrame,
+      keyCol: String,
+      tsCol: String,
+      tieCols: Seq[String],
+      stateEnc: Encoder[S],
+      outSchema: StructType,
+      idle: Option[(String, S => Long)] = None)(
+      init: S)(
+      step: (S, Row, Long, Row => Unit) => S): DataFrame = {
+    val tsIdx = df.schema.fieldIndex(tsCol)
+    val tieIdxs = tieCols.map(df.schema.fieldIndex).toArray
+    val order: Ordering[Event] = (a: Event, b: Event) => {
+      var c = java.lang.Long.compare(a.us, b.us)
+      var i = 0
+      while (c == 0 && i < tieIdxs.length) {
+        c = cmpOrderable(a.row.get(tieIdxs(i)), b.row.get(tieIdxs(i)))
+        i += 1
+      }
+      c
+    }
+    keyedState(df, keyCol, stateEnc, outSchema, idle) { (prior, rows) =>
+      val events = rows.map(r => new Event(micros(r.get(tsIdx)), r)).toArray
+      java.util.Arrays.sort(events, order) // TimSort: stable
+      val out = Vector.newBuilder[Row]
+      val emit: Row => Unit = out += _
+      var st = prior.getOrElse(init)
+      events.foreach(e => st = step(st, e.row, e.us, emit))
+      (st, out.result().iterator)
+    }
+  }
+
   /** State for the streaming sessionizer: the user's last-seen event time
     * (epoch micros) and current session ordinal. */
   final case class SessionState(lastTs: Long, idx: Long)
@@ -513,20 +645,13 @@ object StreamingPipeline {
     * (user, from_type, to_type) row per transition, ready for any
     * downstream aggregation (the count/probability rollup is one batch agg
     * or windowed streaming agg away). O(1) state per user: (last ts, last
-    * type). Events are ordered (ts, then `orderCols`) WITHIN each
-    * micro-batch and chained across batches through the state — exact
-    * parity with the batch operator under per-user in-order arrival across
-    * batches (the CDC-shaped assumption every last-value streaming state
-    * makes; a cross-batch late event would need the batch operator's full
-    * re-sort). `maxGap` drops pairs further apart than the gap, same
-    * semantics as batch. An unbounded USER universe grows the store one
-    * (lastTs, lastType) row per user — `idleTimeout` (EVENT-time,
-    * requires an upstream `withWatermark(tsCol, …)`, same contract as
-    * [[sessionize]]) frees the state of users whose last event sits that
-    * far behind the watermark; a returning user's first event emits no
-    * pair (the empty-state behavior — exactly the bounded-state trade,
-    * and with `maxGap` ≤ `idleTimeout` no VALID pair is ever lost, since
-    * any pair the timeout could suppress is already beyond the gap). */
+    * type). Events are scanned in (ts, `orderCols`) order per
+    * [[keyedScan]]. `maxGap` drops pairs further apart than the gap, same
+    * semantics as batch. `idleTimeout` frees the state of idle users
+    * ([[keyedState]]); a returning user's first event emits no pair (the
+    * empty-state behavior — and with `maxGap` ≤ `idleTimeout` no VALID
+    * pair is ever lost, since any pair the timeout could suppress is
+    * already beyond the gap). */
   def transitions(
       df: DataFrame,
       userCol: String = "user_id",
@@ -537,69 +662,17 @@ object StreamingPipeline {
       idleTimeout: Option[String] = None): DataFrame = {
     val gapMicros = maxGap.map(graft.ops.Intervals.subDayMicros)
     val userIdx = df.schema.fieldIndex(userCol)
-    val tsIdx = df.schema.fieldIndex(tsCol)
     val typeIdx = df.schema.fieldIndex(typeCol)
-    val orderIdxs = orderCols.map(df.schema.fieldIndex)
     val outSchema = StructType(Seq(df.schema(userCol),
       StructField("from_type", StringType), StructField("to_type", StringType)))
-    val outEnc = Encoders.row(outSchema)
-    def micros(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case t: java.time.Instant => org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(t)
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
+    keyedScan(df, userCol, tsCol, orderCols, Encoders.product[TransitionState], outSchema,
+        idleTimeout.map(_ -> ((s: TransitionState) => s.lastTs)))(
+        TransitionState(Long.MinValue, "", has = false)) { (st, r, t, emit) =>
+      val tp = r.get(typeIdx) match { case null => null; case v => v.toString }
+      if (st.has && gapMicros.forall(g => t - st.lastTs <= g))
+        emit(Row(r.get(userIdx), st.lastType, tp))
+      TransitionState(t, tp, has = true)
     }
-    // (ts, orderCols...) comparison matching the batch window's orderBy —
-    // typed compares, NOT stringified (lexicographic "10" < "9" would
-    // diverge from the batch plan on same-ts ties)
-    val ord: Ordering[Row] = (a: Row, b: Row) => {
-      val c = java.lang.Long.compare(micros(a), micros(b))
-      if (c != 0) c
-      else orderIdxs.iterator.map { i =>
-        (a.get(i), b.get(i)) match {
-          case (null, null) => 0
-          case (null, _) => -1 // nulls first, Spark's asc default
-          case (_, null) => 1
-          case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
-        }
-      }.find(_ != 0).getOrElse(0)
-    }
-    val idleMillis = idleTimeout.map(graft.ops.Intervals.subDayMicros(_) / 1000L)
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    df.groupByKey { r: Row =>
-        if (r.isNullAt(userIdx)) "0" else "1:" + r.get(userIdx)
-      }(Encoders.STRING)
-      .flatMapGroupsWithState[TransitionState, Row](
-        OutputMode.Append, timeoutConf) {
-        (_: String, rows: Iterator[Row], state: GroupState[TransitionState]) =>
-          if (state.hasTimedOut) {
-            // user idle past the timeout: free the (long, string) slot; a
-            // return visit starts pairless (empty-state semantics)
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(TransitionState(Long.MinValue, "", has = false))
-            val out = Vector.newBuilder[Row]
-            rows.toVector.sorted(ord).foreach { r =>
-              val t = micros(r)
-              val tp = r.get(typeIdx) match { case null => null; case v => v.toString }
-              if (st.has && gapMicros.forall(g => t - st.lastTs <= g))
-                out += Row(r.get(userIdx), st.lastType, tp)
-              st = TransitionState(t, tp, has = true)
-            }
-            state.update(st)
-            // deadline clamped above the watermark (same contract as
-            // sessionize: a user whose newest event already trails the
-            // idle window expires at the next watermark move)
-            idleMillis.foreach { idle =>
-              state.setTimeoutTimestamp(
-                math.max(st.lastTs / 1000L + idle, state.getCurrentWatermarkMs() + 1L))
-            }
-            out.result().iterator
-          }
-      }(Encoders.product[TransitionState], outEnc)
   }
 
   /** Rolling (n−1)-type tail for the streaming sequence emitter. */
@@ -611,13 +684,8 @@ object StreamingPipeline {
     * the gram row (user, t0…t{n−1}) emits AS THE STREAM ARRIVES — the
     * support/occurrence rollup is one batch agg or windowed streaming
     * agg downstream, exactly the [[transitions]] contract generalized
-    * from pairs to n-grams. Events are ordered (ts, `orderCols`) within
-    * each micro-batch and chained across batches through the state;
-    * parity with the batch operator under per-user in-order arrival
-    * (the CDC-shaped assumption every last-value state makes). State is
-    * n−1 strings per user — bound an unbounded user universe with an
-    * upstream watermark + the [[transitions]] idle discipline when that
-    * matters. */
+    * from pairs to n-grams, in the same (ts, `orderCols`) scan order.
+    * State is n−1 strings per user, kept forever (no idle timeout). */
   def sequences(
       df: DataFrame,
       n: Int = 3,
@@ -627,72 +695,28 @@ object StreamingPipeline {
       orderCols: Seq[String] = Seq("event_id")): DataFrame = {
     require(n >= 2, s"n must be >= 2: $n")
     val userIdx = df.schema.fieldIndex(userCol)
-    val tsIdx = df.schema.fieldIndex(tsCol)
     val typeIdx = df.schema.fieldIndex(typeCol)
-    val orderIdxs = orderCols.map(df.schema.fieldIndex)
     val outSchema = StructType(df.schema(userCol) +:
       (0 until n).map(i => StructField(s"t$i", StringType)))
-    val outEnc = Encoders.row(outSchema)
-    def micros(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case t: java.time.Instant => org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(t)
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
+    keyedScan(df, userCol, tsCol, orderCols, Encoders.product[SeqTailState], outSchema)(
+        SeqTailState(Seq.empty)) { (st, r, _, emit) =>
+      val tp = r.get(typeIdx) match { case null => null; case v => v.toString }
+      if (st.tail.size == n - 1)
+        emit(Row.fromSeq(r.get(userIdx) +: (st.tail :+ tp)))
+      SeqTailState((st.tail :+ tp).takeRight(n - 1))
     }
-    val ord: Ordering[Row] = (a: Row, b: Row) => {
-      val c = java.lang.Long.compare(micros(a), micros(b))
-      if (c != 0) c
-      else orderIdxs.iterator.map { i =>
-        (a.get(i), b.get(i)) match {
-          case (null, null) => 0
-          case (null, _) => -1
-          case (_, null) => 1
-          case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
-        }
-      }.find(_ != 0).getOrElse(0)
-    }
-    df.groupByKey { r: Row =>
-        if (r.isNullAt(userIdx)) "0" else "1:" + r.get(userIdx)
-      }(Encoders.STRING)
-      .flatMapGroupsWithState[SeqTailState, Row](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[SeqTailState]) =>
-          var tail = state.getOption.map(_.tail).getOrElse(Seq.empty)
-          val out = Vector.newBuilder[Row]
-          rows.toVector.sorted(ord).foreach { r =>
-            val tp = r.get(typeIdx) match { case null => null; case v => v.toString }
-            if (tail.size == n - 1)
-              out += Row.fromSeq(r.get(userIdx) +: (tail :+ tp))
-            tail = (tail :+ tp).takeRight(n - 1)
-          }
-          state.update(SeqTailState(tail))
-          out.result().iterator
-      }(Encoders.product[SeqTailState], outEnc)
   }
 
   /** Streaming gap-based sessionization — the labeling counterpart of
     * [[graft.operators.Funnel.sessionize]] (and of [[sessionCounts]], which
     * aggregates): every event gains the user's current session ordinal,
-    * carried across micro-batches in keyed state. Events inside one
-    * micro-batch are processed in event-time order (an in-memory sort of
-    * that user's slice); ACROSS batches the state is monotone — an event
-    * arriving in a later batch with an earlier timestamp is labeled against
-    * the session state already advanced past it (it cannot retract labels
-    * already emitted). Filter late arrivals upstream (e.g. a watermarked
-    * dedup/aggregation stage, or an explicit ts >= low-water filter) when
-    * that matters; with in-order sources (file replay, per-key-ordered
-    * Kafka partitions) the labels equal the batch operator's. State is one
-    * (long, long) per user — but an unbounded USER universe still grows the
-    * store without bound, so `idleTimeout` (EVENT-time, requires a
-    * `withWatermark(tsCol, …)` upstream) drops the state of users whose
-    * last event sits that far behind the watermark. Event time, not wall
-    * clock, keeps the operator deterministic under replay — and a
-    * processing-time timeout would make the engine schedule batches forever
-    * (`shouldRunAnotherBatch` is unconditionally true for it), wedging
-    * `processAllAvailable()`-style quiescence. Choose it ≫ the gap: a
-    * dropped user who returns restarts at session_idx 0 (labels stay
+    * carried across micro-batches in keyed state, events scanned in
+    * event-time order per [[keyedScan]] — with in-order sources the labels
+    * equal the batch operator's. State is one (long, long) per user;
+    * `idleTimeout` drops idle users ([[keyedState]]). Choose it ≫ the gap:
+    * a dropped user who returns restarts at session_idx 0 (labels stay
     * per-session consistent; only the ordinal resets — the trade every
-    * bounded-state sessionizer makes). None keeps state forever. */
+    * bounded-state sessionizer makes). */
   def sessionize(
       df: DataFrame,
       gap: String = "30 minutes",
@@ -701,55 +725,16 @@ object StreamingPipeline {
       outputCol: String = "session_idx",
       idleTimeout: Option[String] = None): DataFrame = {
     val gapMicros = graft.ops.Intervals.subDayMicros(gap)
-    val userIdx = df.schema.fieldIndex(userCol)
-    val tsIdx = df.schema.fieldIndex(tsCol)
     val outSchema: StructType = df.schema.add(outputCol, LongType, nullable = false)
-    val outEnc = Encoders.row(outSchema)
-    def micros(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case t: java.time.Instant => org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(t)
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
+    keyedScan(df, userCol, tsCol, Nil, Encoders.product[SessionState], outSchema,
+        idleTimeout.map(_ -> ((s: SessionState) => s.lastTs)))(
+        SessionState(Long.MinValue, 0L)) { (st, r, t, emit) =>
+      val next =
+        if (st.lastTs != Long.MinValue && t - st.lastTs > gapMicros) SessionState(t, st.idx + 1)
+        else SessionState(math.max(st.lastTs, t), st.idx)
+      emit(Row.fromSeq(r.toSeq :+ next.idx))
+      next
     }
-    // key = the user VALUE (string-encoded; a hash would collide two users
-    // onto one session counter), null marked distinctly from the "null" string
-    val idleMillis = idleTimeout.map(graft.ops.Intervals.subDayMicros(_) / 1000L)
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    df.groupByKey { r: Row =>
-        if (r.isNullAt(userIdx)) "0" else "1:" + r.get(userIdx)
-      }(Encoders.STRING)
-      .flatMapGroupsWithState[SessionState, Row](
-        OutputMode.Append, timeoutConf) {
-        (_: String, rows: Iterator[Row], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // user idle past the timeout: free the (long, long) slot; a
-            // return visit starts over at session_idx 0
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L))
-            val out = rows.toVector.sortBy(micros).map { r =>
-              val t = micros(r)
-              if (st.lastTs != Long.MinValue && t - st.lastTs > gapMicros)
-                st = SessionState(t, st.idx + 1)
-              else
-                st = SessionState(math.max(st.lastTs, t), st.idx)
-              Row.fromSeq(r.toSeq :+ st.idx)
-            }
-            state.update(st)
-            // deadline = last event + idle, clamped above the watermark
-            // (the engine rejects a deadline at or behind it — reachable
-            // when a user's newest event is already older than the idle
-            // window; such a user expires at the very next watermark move)
-            idleMillis.foreach { idle =>
-              state.setTimeoutTimestamp(
-                math.max(st.lastTs / 1000L + idle, state.getCurrentWatermarkMs() + 1L))
-            }
-            out.iterator
-          }
-      }(Encoders.product[SessionState], outEnc)
   }
 
   /** Streaming TRAINING-SHARD delivery: every micro-batch lands through
@@ -821,34 +806,19 @@ object StreamingPipeline {
 
   /** The idempotent per-batch writer behind [[startScoredParquetSink]]:
     * scores one micro-batch and overwrites ONLY the `_batch_id=<id>`
-    * partition (dynamic partitionOverwriteMode, scoped to this write
-    * and restored after). Calling it twice with the same batchId — the
-    * crash-replay case — leaves exactly one copy of the batch's rows. */
+    * partition (the write's own dynamic partitionOverwriteMode option,
+    * which takes precedence over the session conf). Calling it twice with
+    * the same batchId — the crash-replay case — leaves exactly one copy
+    * of the batch's rows. */
   private[graft] def writeScoredBatch(
       batch: DataFrame,
       score: DataFrame => DataFrame,
       outDir: String,
-      batchId: Long): Unit = {
-    val scored = score(batch)
-    // the conf must scope to the SCORED frame's session, not the batch's:
-    // a scorer that joins/unions the batch UNDER a static frame (static
-    // frame on the left) yields a plan bound to the MAIN session, while
-    // `batch` belongs to the micro-batch clone — setting the mode on the
-    // clone would leave the actual write in static-overwrite mode, and
-    // every batch would wipe its predecessors' partitions
-    val sp = scored.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = sp.conf.getOption(key)
-    sp.conf.set(key, "dynamic")
-    try
-      scored
-        .withColumn("_batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("_batch_id").parquet(outDir)
-    finally prev match {
-      case Some(v) => sp.conf.set(key, v)
-      case None => sp.conf.unset(key)
-    }
-  }
+      batchId: Long): Unit =
+    score(batch)
+      .withColumn("_batch_id", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_batch_id").parquet(outDir)
 
   /** Results sink: append files + checkpoint — the analog of the reference's
     * job<k>_results.log with exactly-once instead of at-least-once. */
@@ -883,9 +853,8 @@ object StreamingPipeline {
     * anywhere, so streaming and batch flags agree bit-for-bit.
     *
     * State is O(window) longs per key — two parallel rings plus the open
-    * bucket — independent of event volume. In-order-per-key arrival
-    * across micro-batches is assumed (the CDC-shaped assumption of every
-    * last-value state here); an event for an already-closed bucket is
+    * bucket — independent of event volume. Events are scanned in ts order
+    * per [[keyedScan]]; an event for an already-closed bucket is
     * DROPPED (documented, counted nowhere) rather than silently
     * corrupting a published flag — production ingest would add a
     * watermark + delayed close for bounded lateness. */
@@ -898,7 +867,6 @@ object StreamingPipeline {
     require(window >= 2, s"window must be >= 2: $window")
     require(sigmas >= 1, s"sigmas must be >= 1: $sigmas")
     val keyIdx = events.schema.fieldIndex(keyCol)
-    val tsIdx = events.schema.fieldIndex(tsCol)
     val outSchema = StructType(Seq(events.schema(keyCol),
       StructField("bucket_us", LongType, nullable = false),
       StructField("n", LongType, nullable = false),
@@ -906,56 +874,33 @@ object StreamingPipeline {
       StructField("ss_prev", LongType, nullable = false),
       StructField("w_prev", LongType, nullable = false),
       StructField("is_anomaly", BooleanType, nullable = false)))
-    val outEnc = Encoders.row(outSchema)
-    def micros(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case t: java.time.Instant => org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(t)
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
-    }
     val hourUs = 3600000000L
-    events.groupByKey { r: Row =>
-        if (r.isNullAt(keyIdx)) "0" else "1:" + r.get(keyIdx)
-      }(Encoders.STRING)
-      .flatMapGroupsWithState[AnomalyState, Row](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[AnomalyState]) =>
-          var st = state.getOption.getOrElse(
-            AnomalyState(0L, 0L, hasOpen = false, Vector.empty, Vector.empty))
-          val out = Vector.newBuilder[Row]
-          var keyVal: Any = null
-          def close(): Unit = {
-            // flag the closed bucket against the ring, batch-identically
-            val w = st.ringNs.length.toLong
-            val s = st.ringNs.sum
-            val ss = st.ringNs.map(x => x * x).sum
-            val dev = window * st.openN - s
-            val flag = w == window &&
-              dev * dev * (window - 1L) >
-                sigmas.toLong * sigmas * window * (window * ss - s * s)
-            out += Row(keyVal, st.openBucket, st.openN, s, ss, w, flag)
-            val rb = (st.ringBuckets :+ st.openBucket).takeRight(window)
-            val rn = (st.ringNs :+ st.openN).takeRight(window)
-            st = AnomalyState(0L, 0L, hasOpen = false, rb, rn)
-          }
-          rows.toVector.sortBy(micros).foreach { r =>
-            keyVal = r.get(keyIdx)
-            val b = { val t = micros(r); t - java.lang.Math.floorMod(t, hourUs) }
-            if (!st.hasOpen) {
-              // a late event for an already-closed bucket is dropped (see
-              // scaladoc); "closed" = at or before the newest ring bucket
-              if (st.ringBuckets.isEmpty || b > st.ringBuckets.last)
-                st = st.copy(openBucket = b, openN = 1L, hasOpen = true)
-            } else if (b == st.openBucket) {
-              st = st.copy(openN = st.openN + 1L)
-            } else if (b > st.openBucket) {
-              close()
-              st = st.copy(openBucket = b, openN = 1L, hasOpen = true)
-            } // b < openBucket: late, dropped
-          }
-          state.update(st)
-          out.result().iterator
-      }(Encoders.product[AnomalyState], outEnc)
+    keyedScan(events, keyCol, tsCol, Nil, Encoders.product[AnomalyState], outSchema)(
+        AnomalyState(0L, 0L, hasOpen = false, Vector.empty, Vector.empty)) { (st, r, t, emit) =>
+      val b = t - java.lang.Math.floorMod(t, hourUs)
+      if (!st.hasOpen) {
+        // a late event for an already-closed bucket is dropped (see
+        // scaladoc); "closed" = at or before the newest ring bucket
+        if (st.ringBuckets.isEmpty || b > st.ringBuckets.last)
+          st.copy(openBucket = b, openN = 1L, hasOpen = true)
+        else st
+      } else if (b == st.openBucket) {
+        st.copy(openN = st.openN + 1L)
+      } else if (b > st.openBucket) {
+        // close the open bucket: flag it against the ring, batch-identically
+        val w = st.ringNs.length.toLong
+        val s = st.ringNs.sum
+        val ss = st.ringNs.map(x => x * x).sum
+        val dev = window * st.openN - s
+        val flag = w == window &&
+          dev * dev * (window - 1L) >
+            sigmas.toLong * sigmas * window * (window * ss - s * s)
+        emit(Row(r.get(keyIdx), st.openBucket, st.openN, s, ss, w, flag))
+        AnomalyState(b, 1L, hasOpen = true,
+          (st.ringBuckets :+ st.openBucket).takeRight(window),
+          (st.ringNs :+ st.openN).takeRight(window))
+      } else st // b < openBucket: late, dropped
+    }
   }
 
   /** STREAM-STREAM interval join — the two-live-streams shape
@@ -1070,10 +1015,7 @@ object StreamingPipeline {
     * the batch operator's fold order (same IEEE steps ⇒ identical
     * distances, parity spec-pinned), and windows at or under `threshold`
     * are emitted as they happen — the live motif/anomaly-shape alarm.
-    * Events inside one micro-batch are processed in (ts, tie) order;
-    * cross-batch late events extend the buffer in arrival order (the
-    * [[sessionize]] monotone-state convention — bound with an upstream
-    * watermark when that matters).
+    * Events are scanned in (ts, `tieCol`) order per [[keyedScan]].
     *
     * State is w−1 doubles per key — bounded by the PATTERN, not the
     * stream. Threshold-emit (not top-k): a global top-k is not
@@ -1099,17 +1041,9 @@ object StreamingPipeline {
         if (sd == 0.0) Array.fill(w)(0.0) else pattern.map(x => (x - mu) / sd)
       }
     val keyIdx = events.schema.fieldIndex(keyCol)
-    val tsIdx = events.schema.fieldIndex(tsCol)
-    val tieIdx = events.schema.fieldIndex(tieCol)
     val vIdx = events.schema.fieldIndex(valueCol)
     val outSchema = StructType(Seq(events.schema(keyCol),
       StructField("end_ts_us", LongType), StructField("dist", DoubleType)))
-    def micros(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case t: java.time.Instant => org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(t)
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
-    }
     // the batch operator's exact arithmetic, in the same order: left-fold
     // sums, mean/std divisions, zero-variance -> all-zero window
     def dist(win: Array[Double]): Double = {
@@ -1126,50 +1060,22 @@ object StreamingPipeline {
       while (i < w) { val t = z(i) - q(i); d += t * t; i += 1 }
       d
     }
-    val ord: Ordering[Row] = (a: Row, b: Row) => {
-      val c = java.lang.Long.compare(micros(a), micros(b))
-      if (c != 0) c else cmpOrderable(a.get(tieIdx), b.get(tieIdx))
+    keyedScan(events, keyCol, tsCol, Seq(tieCol), Encoders.product[PatternState], outSchema)(
+        PatternState(Seq.empty)) { (st, r, t, emit) =>
+      val v = r.get(vIdx) match {
+        case null => Double.NaN
+        case n: java.lang.Number => n.doubleValue()
+      }
+      val win = st.values :+ v
+      if (win.length == w) {
+        val d = dist(win.toArray)
+        if (d <= threshold) emit(Row(r.get(keyIdx), t, d))
+      }
+      PatternState(win.takeRight(w - 1))
     }
-    events.groupByKey { r: Row =>
-        if (r.isNullAt(keyIdx)) "0" else "1:" + r.get(keyIdx)
-      }(Encoders.STRING)
-      .flatMapGroupsWithState[PatternState, Row](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[PatternState]) =>
-          var buf = state.getOption.map(_.values.toArray).getOrElse(Array.empty[Double])
-          val out = Vector.newBuilder[Row]
-          rows.toVector.sorted(ord).foreach { r =>
-            val v = r.get(vIdx) match {
-              case null => Double.NaN
-              case n: java.lang.Number => n.doubleValue()
-            }
-            buf = (buf :+ v).takeRight(w)
-            if (buf.length == w) {
-              val d = dist(buf)
-              if (d <= threshold) out += Row(r.get(keyIdx), micros(r), d)
-            }
-          }
-          state.update(PatternState(buf.takeRight(w - 1).toSeq))
-          out.result().iterator
-      }(Encoders.product[PatternState], Encoders.row(outSchema))
   }
 
   final case class PatternState(values: Seq[Double])
-
-  /** Nulls-first comparison of two external-row values of one orderable
-    * type — so streaming tie columns accept whatever the batch twins
-    * ([[graft.operators.TimeSeries.patternTopK]],
-    * [[graft.operators.History.cdcLatest]]) order: int, bigint, string,
-    * timestamp — instead of hard-coding bigint and throwing
-    * ClassCastException on anything else. */
-  private def cmpOrderable(a: Any, b: Any): Int = (a, b) match {
-    case (null, null) => 0
-    case (null, _) => -1
-    case (_, null) => 1
-    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
-    case (x, _) => throw new IllegalArgumentException(
-      s"tie column value of unorderable type ${x.getClass.getName}")
-  }
 
   /** Streaming CDC latest-state view — the ingest-time counterpart of
     * [[graft.operators.History.cdcLatest]]: keyed state holds each key's
@@ -1185,10 +1091,10 @@ object StreamingPipeline {
     * emissions equal the batch operator's output — parity spec-pinned.
     *
     * State is one small fixed-shape row per key: (order_us, tie, op,
-    * payload, n_ops) — payload only, never the log. The unbounded-key
-    * caveat and the event-time-timeout remedy are exactly
-    * [[sessionize]]'s; here state is the VIEW itself, so dropping a key
-    * forgets its current value (only safe above a compacting sink). */
+    * payload, n_ops) — payload only, never the log, kept forever: state
+    * is the VIEW itself, so an idle timeout would forget a key's current
+    * value (only safe above a compacting sink). Grouping and state are
+    * [[keyedState]]'s; there is no per-key sort. */
   def cdcLatestStream(
       df: DataFrame,
       keyCol: String = "user_id",
@@ -1213,45 +1119,31 @@ object StreamingPipeline {
     val outSchema = StructType(
       df.schema(keyCol) +: StructField("op", StringType) +:
         payloadCols.map(df.schema(_)) :+ StructField("n_ops", LongType))
-    def micros(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case t: java.time.Instant => org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(t)
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"unsupported ts type: $other")
+    keyedState(df, keyCol, Encoders.row(stateSchema), outSchema) { (prior, rows) =>
+      var winUs = prior.map(_.getLong(0)).getOrElse(Long.MinValue)
+      var winTie: Any = prior.map(_.get(1)).orNull
+      var winOp = prior.map(_.getString(2)).orNull
+      var winPay = prior.map(_.getStruct(3)).orNull
+      var nOps = prior.map(_.getLong(4)).getOrElse(0L)
+      var keyVal: Any = null
+      var changed = false
+      rows.foreach { r =>
+        nOps += 1
+        keyVal = r.get(keyIdx)
+        val us = micros(r.get(tsIdx))
+        val tie = r.get(tieIdx)
+        // strict (order_us, tie) max — arrival order within the
+        // batch is irrelevant, matching the batch max_by
+        if (us > winUs || (us == winUs && cmpOrderable(tie, winTie) > 0)) {
+          winUs = us; winTie = tie
+          winOp = r.get(opIdx) match { case null => null; case v => v.toString }
+          winPay = Row(payIdxs.map(r.get): _*)
+          changed = true
+        }
+      }
+      (Row(winUs, winTie, winOp, winPay, nOps),
+        if (changed) Iterator.single(Row(keyVal +: winOp +: winPay.toSeq :+ nOps: _*))
+        else Iterator.empty)
     }
-    df.groupByKey { r: Row =>
-        if (r.isNullAt(keyIdx)) "0" else "1:" + r.get(keyIdx)
-      }(Encoders.STRING)
-      .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
-          val prior = state.getOption
-          var winUs = prior.map(_.getLong(0)).getOrElse(Long.MinValue)
-          var winTie: Any = prior.map(_.get(1)).orNull
-          var winOp = prior.map(_.getString(2)).orNull
-          var winPay = prior.map(_.getStruct(3)).orNull
-          var nOps = prior.map(_.getLong(4)).getOrElse(0L)
-          var keyVal: Any = null
-          var changed = false
-          rows.foreach { r =>
-            nOps += 1
-            keyVal = r.get(keyIdx)
-            val us = micros(r)
-            val tie = r.get(tieIdx)
-            // strict (order_us, tie) max — arrival order within the
-            // batch is irrelevant, matching the batch max_by
-            if (us > winUs || (us == winUs && cmpOrderable(tie, winTie) > 0)) {
-              winUs = us; winTie = tie
-              winOp = r.get(opIdx) match { case null => null; case v => v.toString }
-              winPay = Row(payIdxs.map(r.get): _*)
-              changed = true
-            }
-          }
-          state.update(Row(winUs, winTie, winOp, winPay, nOps))
-          if (changed)
-            Iterator.single(Row(keyVal +: winOp +:
-              winPay.toSeq :+ nOps: _*))
-          else Iterator.empty
-      }(Encoders.row(stateSchema), Encoders.row(outSchema))
   }
 }

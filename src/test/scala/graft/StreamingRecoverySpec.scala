@@ -541,6 +541,45 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkSpec {
       == Seq(0L, 1L))
   }
 
+  test("scored sink with a static frame on the left keeps each batch exactly once across a replay") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_score_static_out").toString
+    // the q_stream_w1_gate shape: the scored frame's plan is rooted at a
+    // static frame of the main session, while each micro-batch belongs to
+    // another session (foreachBatch hands out a clone)
+    val ref = Seq(10.0, 20.0).toDF("value").withColumn("__b", lit(false))
+    val micro = spark.newSession()
+    def batch(vs: Double*) = micro.createDataFrame(vs.map(Tuple1(_))).toDF("value")
+    def score(b: org.apache.spark.sql.DataFrame) =
+      ref.unionByName(b.select(col("value"), lit(true).as("__b")))
+        .groupBy("__b").agg(count(lit(1)).as("n"), sum("value").as("s"))
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modes = Seq(spark, micro).map(_.conf.getOption(modeKey))
+    StreamingPipeline.writeScoredBatch(batch(1.0, 2.0), score, out, batchId = 0L)
+    StreamingPipeline.writeScoredBatch(batch(5.0), score, out, batchId = 1L)
+    StreamingPipeline.writeScoredBatch(batch(1.0, 2.0), score, out, batchId = 0L) // replay
+    assert(Seq(spark, micro).map(_.conf.getOption(modeKey)) == modes,
+      "the writer must not touch session confs")
+    val rows = spark.read.parquet(out)
+      .select("_batch_id", "__b", "n", "s").as[(Long, Boolean, Long, Double)]
+      .collect().sorted.toSeq
+    assert(rows == Seq((0L, false, 2L, 30.0), (0L, true, 2L, 3.0),
+      (1L, false, 2L, 30.0), (1L, true, 1L, 5.0)))
+  }
+
+  test("a stream gate leaves only its sink dir under the shared temp root") {
+    val root = TempDirs.root.toFile
+    def gates() = root.listFiles().filter(_.getName.startsWith("graft_stream_gate")).toSet
+    val before = gates()
+    val n = SparkEntry.queries("q_stream_sessionize_gate")(spark, "/root/testdata/sf0.001").count()
+    assert(n > 0L)
+    val added = gates() -- before
+    assert(added.size == 1, s"one staging dir per gate build: $added")
+    // staged input, staging scratch and checkpoint are gone once the
+    // drain ends; out/ stays for the frame's lazy reads until JVM exit
+    assert(added.head.list().toSet == Set("out"))
+  }
+
   test("scored sink end-to-end: deleting the last checkpoint commit replays the batch without duplicates") {
     import spark.implicits._
     val in = Files.createTempDirectory("graft_sps_in").toString
