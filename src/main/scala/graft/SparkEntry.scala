@@ -384,14 +384,15 @@ object SparkEntry {
         OpCompiler.Ctx(Some("text"), Seq("doc_id")))(docs)
     }),
 
-    // The reference's structured workload on its OWN fixture data: the
+    // The reference's structured workload on its fixture shape: the
     // FIXTURES.md representative job (COLUMN_FILTER -> TRANSFORM:select)
-    // over Traffic_Signs_1000.csv, through the descriptor parse -> compile
-    // path and the proper RFC-4180 reader (quoted commas handled, the
-    // documented divergence from the reference's naive split).
+    // over the committed Traffic_Signs fixture (Tables.trafficSignsFixture),
+    // through the descriptor parse -> compile path and the proper RFC-4180
+    // reader (quoted commas handled, the documented divergence from the
+    // reference's naive split).
     "q_traffic_pipeline" -> ((s, _) => {
       val signs = graft.sources.Tables.trafficSigns(s,
-        "/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv")
+        graft.sources.Tables.trafficSignsFixture)
       Pipeline.fromDescriptors(
         Seq("COLUMN_FILTER:Category:Warning", "TRANSFORM:select:OBJECTID,Sign_Type"),
         OpCompiler.Ctx(None, Seq("OBJECTID")))(signs)
@@ -404,7 +405,7 @@ object SparkEntry {
     "q_console" -> ((s, _) => {
       graft.ops.Console.run(s,
         "RAINSTORM \"COLUMN_FILTER:Category:Warning\" AGGREGATE " +
-          "/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv 3 false")
+          s"${graft.sources.Tables.trafficSignsFixture} 3 false")
     }),
 
     // The compatibility mode: the reference's NAIVE split(",") semantics
@@ -413,7 +414,7 @@ object SparkEntry {
     // string_split over raw lines, so the shifted rows match exactly too.
     "q_traffic_naive" -> ((s, _) => {
       val signs = graft.sources.Tables.trafficSignsNaive(s,
-        "/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv")
+        graft.sources.Tables.trafficSignsFixture)
       Pipeline.fromDescriptors(
         Seq("COLUMN_FILTER:Category:Streetname", "TRANSFORM:select:OBJECTID,Sign_Type"),
         OpCompiler.Ctx(None, Seq("OBJECTID")))(signs)
@@ -5597,10 +5598,10 @@ object SparkEntry {
       """SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS running_count
         |FROM documents WHERE contains(lower(text), 'join')""".stripMargin,
 
-    // DuckDB reads the same reference CSV directly (RFC-4180 both sides).
+    // DuckDB reads the same fixture CSV directly (RFC-4180 both sides).
     "q_traffic_pipeline" ->
-      ("""SELECT OBJECTID, Sign_Type
-        |FROM read_csv('/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv',
+      (s"""SELECT OBJECTID, Sign_Type
+        |FROM read_csv('${graft.sources.Tables.trafficSignsFixture}',
         |  header=false, columns={""".stripMargin +
         graft.sources.Tables.trafficSignsSchema.fieldNames
           .map(n => s"'$n': 'VARCHAR'").mkString(", ") +
@@ -5611,8 +5612,8 @@ object SparkEntry {
     // OBJECTID order over the filtered rows (window evaluates after WHERE).
     // All 19 columns ride through, as the reference's results log would show.
     "q_console" ->
-      ("""SELECT *, CAST(row_number() OVER (ORDER BY OBJECTID) AS BIGINT) AS running_count
-        |FROM read_csv('/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv',
+      (s"""SELECT *, CAST(row_number() OVER (ORDER BY OBJECTID) AS BIGINT) AS running_count
+        |FROM read_csv('${graft.sources.Tables.trafficSignsFixture}',
         |  header=false, columns={""".stripMargin +
         graft.sources.Tables.trafficSignsSchema.fieldNames
           .map(n => s"'$n': 'VARCHAR'").mkString(", ") +
@@ -5623,9 +5624,9 @@ object SparkEntry {
     // column access (OBJECTID=3, Sign_Type=4, Category=9), out-of-range -> NULL
     // in both engines.
     "q_traffic_naive" ->
-      """WITH raw AS (
+      s"""WITH raw AS (
         |  SELECT string_split(line, ',') AS p
-        |  FROM read_csv('/root/reference/file_system/data_storage/local_file/Traffic_Signs_1000.csv',
+        |  FROM read_csv('${graft.sources.Tables.trafficSignsFixture}',
         |    header=false, delim='', quote='', columns={'line': 'VARCHAR'}))
         |SELECT p[3] AS OBJECTID, p[4] AS Sign_Type
         |FROM raw WHERE trim(p[9]) = 'Streetname'""".stripMargin,

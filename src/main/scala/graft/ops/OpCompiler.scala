@@ -24,8 +24,20 @@ object OpCompiler {
   final case class Ctx(
       lineCol: Option[String],
       /** unique ordering key(s) for the running count; extended with the
-        * word position after SplitIntoWords. */
+        * word position after SplitIntoWords, renamed to [[Hidden]]`+name`
+        * when a Select drops them. */
       orderCols: Seq[String])
+
+  /** Name prefix of an order column a Select dropped: it rides along under
+    * this name, so a later AGGREGATE still numbers in the source order
+    * rather than arrival order (which depends on the partition count), and
+    * [[dropHidden]] removes it after the last op. */
+  val Hidden = "__graft_order_"
+
+  /** The frame without the order columns a Select hid: the output schema
+    * the ops declare. */
+  def dropHidden(df: DataFrame, ctx: Ctx): DataFrame =
+    df.drop(ctx.orderCols.filter(_.startsWith(Hidden)): _*)
 
   def compile(op: StreamOp, ctx: Ctx): (DataFrame => DataFrame, Ctx) = op match {
     case Filter(pattern) =>
@@ -65,8 +77,10 @@ object OpCompiler {
       (df => mapStringCols(df.filter(lower(lineOf(df, ctx)).contains(p)), ctx, f), ctx)
 
     case Select(columns) =>
-      val newCtx = ctx.copy(orderCols = ctx.orderCols.filter(columns.contains))
-      (df => df.select(columns.map(col): _*), newCtx)
+      val hide = ctx.orderCols.filterNot(columns.contains)
+        .map(c => c -> (if (c.startsWith(Hidden)) c else Hidden + c))
+      val newCtx = ctx.copy(orderCols = ctx.orderCols.map(c => hide.toMap.getOrElse(c, c)))
+      (df => df.select(columns.map(col) ++ hide.map { case (c, h) => col(c).as(h) }: _*), newCtx)
 
     case Aggregate =>
       (df => RunningCount.withRunningCount(df, ctx.orderCols.map(col)), ctx)
@@ -83,7 +97,8 @@ object OpCompiler {
   private def lineOf(df: DataFrame, ctx: Ctx): Column =
     ctx.lineCol match {
       case Some(c) => col(c)
-      case None    => concat_ws(",", df.columns.map(c => coalesce(col(c).cast(StringType), lit(""))).toSeq: _*)
+      case None    => concat_ws(",", df.columns.filterNot(_.startsWith(Hidden))
+        .map(c => coalesce(col(c).cast(StringType), lit(""))).toSeq: _*)
     }
 
   /** Whole-line transforms (upper/lower/trim) applied to the line column, or
@@ -93,7 +108,8 @@ object OpCompiler {
       case Some(c) => df.withColumn(c, f(col(c)))
       case None =>
         val cols = df.schema.fields.map { fld =>
-          if (fld.dataType == StringType) f(col(fld.name)).as(fld.name) else col(fld.name)
+          if (fld.dataType == StringType && !fld.name.startsWith(Hidden)) f(col(fld.name)).as(fld.name)
+          else col(fld.name)
         }
         df.select(cols.toSeq: _*)
     }
@@ -104,12 +120,12 @@ object OpCompiler {
   * between op1 and op2 collapses into one Catalyst plan, SURVEY.md §3.1). */
 object Pipeline {
   def apply(ops: Seq[StreamOp], ctx: OpCompiler.Ctx): DataFrame => DataFrame = {
-    val (fns, _) = ops.foldLeft((Vector.empty[DataFrame => DataFrame], ctx)) {
+    val (fns, last) = ops.foldLeft((Vector.empty[DataFrame => DataFrame], ctx)) {
       case ((acc, c), op) =>
         val (f, c2) = OpCompiler.compile(op, c)
         (acc :+ f, c2)
     }
-    df => fns.foldLeft(df)((d, f) => f(d))
+    df => OpCompiler.dropHidden(fns.foldLeft(df)((d, f) => f(d)), last)
   }
 
   /** Parse-and-compile from the reference's textual descriptors, e.g.

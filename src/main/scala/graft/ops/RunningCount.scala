@@ -14,9 +14,14 @@ import org.apache.spark.sql.types._
   * the declared semantics: every row emits the aggregate of all rows up to
   * and including itself in the global order.
   *
-  * A naive `agg(...) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING)` collapses
-  * the whole dataset into ONE window partition, so it cannot scale past a
-  * single executor. Instead: classic two-phase prefix aggregation.
+  * Size gate: an input whose optimizer size estimate
+  * (`optimizedPlan.stats.sizeInBytes`, the one Spark's broadcast decision
+  * reads) is at most `spark.sql.autoBroadcastJoinThreshold`, i.e. small
+  * enough for Spark to ship whole to one task, takes the plain exact
+  * `agg(...) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING)` window and runs no
+  * Spark job at construction; a threshold of -1 shuts the gate. Above it
+  * that window would collapse the dataset into ONE partition, so: classic
+  * two-phase prefix aggregation.
   *
   * Preferred path (numeric/temporal first order key): VALUE-RANGE buckets.
   *   1. in-plan `percentile_approx` of the key -> ~equi-depth boundaries,
@@ -149,7 +154,8 @@ object RunningCount {
       if (orderCols0.nonEmpty) (df, orderCols0, Seq.empty[String])
       else (df.withColumn(arrivalCol, monotonically_increasing_id()),
             Seq(col(arrivalCol)), Seq(arrivalCol))
-    val parts = numPartitions.getOrElse(df.sparkSession.sessionState.conf.numShufflePartitions)
+    val conf = df.sparkSession.sessionState.conf
+    val parts = numPartitions.getOrElse(conf.numShufflePartitions)
     val aggs = specs.zipWithIndex.map { case ((v, kind, out), i) =>
       (aggFor(kind, v, s"${T}_$i"), out)
     }
@@ -161,8 +167,14 @@ object RunningCount {
       GraftExpr.sortOrder(orderCols.head).getOrElse((orderCols.head, false, true))
     val keyType = base.select(keyCol).schema.head.dataType
     val rankKey = toRankDouble(keyCol, keyType)
+    // ANSI-off decimal sums overflow differently on the two paths (the window
+    // keeps an exact prefix, two-phase offsets restart, as streaming does)
+    val sameOnBoth = conf.ansiEnabled || specs.forall { case (v, k, _) =>
+      k != Kind.Sum || !base.select(v).schema.head.dataType.isInstanceOf[DecimalType] }
+    val gated = sameOnBoth && // sizeInBytes >= 0, so a -1 threshold shuts the gate
+      base.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
     val out =
-      if (parts <= 1) singlePartition(base, aggs, orderCols)
+      if (parts <= 1 || gated) singlePartition(base, aggs, orderCols)
       else if (rankKey.isDefined)
         quantileBuckets(base, aggs, rankKey.get, orderCols, descending, nullsFirst, parts)
       else rangeCheckpoint(base, aggs, orderCols, parts)
@@ -181,7 +193,7 @@ object RunningCount {
     case _ => None
   }
 
-  /** Degenerate single-partition case: the plain global window. */
+  /** At most one partition or below the size gate: the plain global window. */
   private def singlePartition(
       df: DataFrame, aggs: Seq[(Agg, String)], orderCols: Seq[Column]) = {
     val w = Window.orderBy(orderCols: _*)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.functions.BlockLineIndex
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, GraftExpr, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.FilePartition
@@ -22,6 +23,24 @@ object Tables {
       "Year_Insta", "Category", "Notes", "MUTCD", "Ownership", "FACILITYID",
       "Schools", "Location_Adjusted", "Replacement_Zone", "Sign_Text",
       "Set_ID", "FieldVerifiedDate").map(StructField(_, StringType, nullable = true)))
+
+  /** Absolute path of the committed Traffic_Signs-shaped fixture
+    * (`src/main/resources/graft/Traffic_Signs_1000.csv`: 11 rows in the
+    * shape of FIXTURES.md §1). The resource may sit inside a jar (sbt runs
+    * forked mains from one), so it is copied once per JVM to a fixed path
+    * under `java.io.tmpdir` that outlives the JVM: an oracle run after
+    * Verify still reads it. The copy lands by an atomic rename, so JVMs
+    * running at once never see a partial file. */
+  lazy val trafficSignsFixture: String = {
+    val name = "Traffic_Signs_1000.csv"
+    val in = getClass.getResourceAsStream(s"/graft/$name")
+    require(in != null, s"graft/$name is not on the classpath")
+    val dir = Files.createDirectories(Paths.get(System.getProperty("java.io.tmpdir"), "graft_fixture"))
+    val tmp = Files.createTempFile(dir, name, ".tmp")
+    try Files.copy(in, tmp, StandardCopyOption.REPLACE_EXISTING) finally in.close()
+    Files.move(tmp, dir.resolve(name),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE).toString
+  }
 
   /** Reader options of the Traffic_Signs CSVs, batch and stream alike:
     * headerless, `"` both quote and escape (RFC-4180 doubled quotes). */

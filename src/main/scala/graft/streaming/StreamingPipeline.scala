@@ -283,8 +283,8 @@ object StreamingPipeline {
     * Stateless ops are the exact same Catalyst transforms as batch
     * (OpCompiler); AGGREGATE switches to the streaming state operator. */
   def pipeline(ops: Seq[StreamOp], ctx: OpCompiler.Ctx, shards: Int = 1)(
-      df: DataFrame): DataFrame =
-    ops.foldLeft((df, ctx)) { case ((d, c), op) =>
+      df: DataFrame): DataFrame = {
+    val (out, last) = ops.foldLeft((df, ctx)) { case ((d, c), op) =>
       op match {
         case StreamOp.Aggregate => (runningCount(d, shards = shards), c)
         case StreamOp.AggregateField(kind, field) =>
@@ -294,7 +294,9 @@ object StreamingPipeline {
           val (f, c2) = OpCompiler.compile(other, c)
           (f(d), c2)
       }
-    }._1
+    }
+    OpCompiler.dropHidden(out, last)
+  }
 
   /** Text-line file stream source — the streaming analog of Tables.lines
     * (the reference's chunk files appearing in HyDFS). */

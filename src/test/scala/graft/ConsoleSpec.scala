@@ -84,6 +84,20 @@ class ConsoleSpec extends AnyFunSuite with SparkSpec {
     assert(out.rdd.getNumPartitions == 5)
   }
 
+  test("a select that drops OBJECTID still numbers in OBJECTID order, for any numTasks") {
+    // OBJECTID is a string column, so its order is the string order
+    val want = graft.sources.Tables.trafficSigns(spark, trafficCsv).orderBy("OBJECTID")
+      .select("Sign_Type").collect().map(_.getString(0)).zipWithIndex
+      .map { case (t, i) => (t, i + 1L) }.toSet
+    def check(): Unit = for (n <- Seq(1, 3, 4)) {
+      val out = Console.run(spark, s"RAINSTORM TRANSFORM:select:Sign_Type AGGREGATE $trafficCsv $n")
+      assert(out.columns.toSeq == Seq("Sign_Type", "running_count"))
+      assert(out.collect().map(r => (r.getString(0), r.getLong(1))).toSet == want, s"numTasks=$n")
+    }
+    check()
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(check())
+  }
+
   test("runStream reads the CSV like run: same rows for the same command") {
     val out = java.nio.file.Files.createTempDirectory("console_csv_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("console_csv_ckpt").toString
@@ -96,6 +110,18 @@ class ConsoleSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.toSeq).toSet
     val batch = Console.run(spark, cmdLine).collect().map(_.toSeq).toSet
     assert(streamed.nonEmpty && streamed == batch)
+  }
+
+  test("runStream with a select that drops OBJECTID writes only the selected column") {
+    val out = java.nio.file.Files.createTempDirectory("console_select_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("console_select_ckpt").toString
+    val cmdLine = s"RAINSTORM COLUMN_FILTER:Category:Warning TRANSFORM:select:Sign_Type ${ReferenceFiles.dir}/*.csv 1"
+    val q = Console.runStream(spark, cmdLine, out, ckpt)
+    q.awaitTermination(60000)
+    val streamed = spark.read.parquet(out)
+    assert(streamed.columns.toSeq == Seq("Sign_Type"))
+    assert(streamed.collect().map(_.getString(0)).sorted.toSeq ==
+      Console.run(spark, cmdLine).collect().map(_.getString(0)).sorted.toSeq)
   }
 
   test("runStream drives the same command as a streaming job with checkpointed state") {

@@ -417,4 +417,10 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
     assert(split.exchanges == 0, split.line)
     for (r <- Seq(bm25, tfidf, split)) assert(r.jobs > 0, r.line)
   }
+
+  test("q_running_count: below the size gate it builds with no Spark job") {
+    val r = graft.tools.Probe.measure(spark, "q_running_count",
+      () => SparkEntry.queries("q_running_count")(spark, sf))
+    assert(r.buildJobs == 0, r.line)
+  }
 }

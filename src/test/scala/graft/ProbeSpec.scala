@@ -50,6 +50,18 @@ class ProbeSpec extends AnyFunSuite with SparkSpec {
     assert("""\[probe\] (\S+)\s+([0-9.]+) s""".r.findFirstMatchIn(r.line).isDefined, r.line)
   }
 
+  test("a console AGGREGATE below the size gate runs 0+3 jobs and 2 exchanges; shut, 3+5") {
+    for (line <- Seq(
+        s"RAINSTORM FILTER:profit AGGREGATE ${ReferenceFiles.dir}/business_1.txt 3",
+        s"RAINSTORM COLUMN_FILTER:Category:Warning AGGREGATE ${ReferenceFiles.trafficSignsCsv} 3")) {
+      val below = Probe.measureConsole(spark, line)
+      assert((below.buildJobs, below.jobs, below.exchanges) == (0, 3, 2), below.line)
+      val shut = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+        Probe.measureConsole(spark, line))
+      assert((shut.buildJobs, shut.jobs) == (3, 5), shut.line)
+    }
+  }
+
   test("no main source but GraftSession and EntrySmoke calls SparkSession.builder") {
     // EntrySmoke deliberately runs on a plain session without graft configs
     val allowed = Set("GraftSession.scala", "EntrySmoke.scala")

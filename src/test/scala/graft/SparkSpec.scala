@@ -6,6 +6,16 @@ import org.scalatest.Suite
 /** One shared local session for the whole forked test JVM. */
 trait SparkSpec { self: Suite =>
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with the session confs `pairs` set, then restores them. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -11,15 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TablesSpec extends AnyFunSuite with SparkSpec {
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("lines numbers a file exactly even when it splits into many scan blocks") {
     val dir = java.nio.file.Files.createTempDirectory("graft_lines").toFile
     val f = new java.io.File(dir, "big.txt")
