@@ -401,7 +401,7 @@ object SparkEntry {
     // The full console surface in one line: the reference's actual UX is a
     // single `RAINSTORM <op1> <op2> <file> <numTasks> <flag>` command
     // (RainStorm.java:846-877, Node.java:289-300) — tokenize, parse, pick
-    // the source by extension, set parallelism, run both ops as one plan.
+    // the source by extension, run both ops as one plan over one scan.
     "q_console" -> ((s, _) => {
       graft.ops.Console.run(s,
         "RAINSTORM \"COLUMN_FILTER:Category:Warning\" AGGREGATE " +

@@ -7,19 +7,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   RAINSTORM <op1> <op2> <file> [<numTasks> [<true|false>]]
   *
-  * Reassembled from the reference's two halves: the console builds exactly
-  * this line and sends it to the leader (RainStorm.java:846-877 — filename at
-  * index 3, numTasks at 4 defaulting to 3), and the leader requires the
-  * six-token form `RAINSTORM op1 op2 filename numTasks true/false`
-  * (Node.java:289-300). Tokenization preserves quoted spans exactly like the
+  * Reassembled from the reference's two halves: the console builds exactly this
+  * line and sends it to the leader (RainStorm.java:846-877 — filename at index
+  * 3, numTasks at 4 defaulting to 3), and the leader requires the six-token
+  * form `RAINSTORM op1 op2 filename numTasks true/false` (Node.java:289-300).
+  * `numTasks` is validated and is [[runStream]]'s shard count; as in the
+  * reference (SURVEY.md Parallelism row, Node.java:298, :627-643) it never sets
+  * batch parallelism. Tokenization preserves quoted spans exactly like the
   * reference's character-walking tokenizer (Node.java:355-382): a `"` toggles
-  * quote mode and is KEPT in the token; spaces split only outside quotes.
-  * Quote STRIPPING happens downstream in the op layer, as in the reference
+  * quote mode and is KEPT in the token; spaces split only outside quotes. Quote
+  * STRIPPING happens downstream in the op layer, as in the reference
   * (COLUMN_FILTER values Node.java:417-420, FILTER patterns via
   * Operators.createFilter) — here in [[StreamOp.parse]]. As a convenience
-  * superset, a descriptor token quoted WHOLE (`"FILTER:a b"`) is also
-  * accepted (the reference's interactive prompt never produces that shape;
-  * its tokenizer would pass the quotes through and fail in createOperator).
+  * superset, a descriptor token quoted WHOLE (`"FILTER:a b"`) is also accepted
+  * (the reference's interactive prompt never produces that shape; its tokenizer
+  * would pass the quotes through and fail in createOperator).
   *
   * The trailing boolean is the reference's chaos flag (`isScriptEnabled`,
   * Node.java:300 — kills two workers 1.5 s into the job). It is parsed and
@@ -29,8 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Console {
 
   /** A parsed console command: exactly two ops (the reference's fixed
-    * two-stage shape, Node.java:1106-1160), the input file, and the
-    * per-stage parallelism. */
+    * two-stage shape, Node.java:1106-1160), the input file, the task count
+    * and the chaos flag. */
   final case class RainStormCommand(
       op1: StreamOp,
       op2: StreamOp,
@@ -98,14 +100,13 @@ object Console {
     else
       (Tables.lines(spark, file), OpCompiler.Ctx(Some("value"), Seq("file", "line_no")))
 
-  /** Parse and run one console line as a single Catalyst plan. `numTasks`
-    * maps to source parallelism (`repartition` — the reference's N tasks per
-    * stage); the running count's global order comes from the ctx order keys,
-    * so the result is invariant to the partition count. */
+  /** Parse and run one console line as one Catalyst plan over the input as
+    * split, with no `numTasks` reshuffle; the running count orders by the
+    * ctx order keys, so results are the same for every `numTasks` and layout. */
   def run(spark: SparkSession, line: String): DataFrame = {
     val cmd = parse(line).fold(msg => throw new IllegalArgumentException(msg), identity)
     val (src, ctx) = sourceFor(spark, cmd.file)
-    Pipeline(cmd.ops, ctx)(src.repartition(cmd.numTasks))
+    Pipeline(cmd.ops, ctx)(src)
   }
 
   /** The same console line driven as a Structured-Streaming job — the

@@ -3,8 +3,7 @@ package graft.sources
 import graft.functions.BlockLineIndex
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, GraftExpr, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -81,31 +80,31 @@ object Tables {
     *    directly over the scan. A FilePartition holds whole splits and reads
     *    each front to back, so a block's rows arrive contiguously and in
     *    file order; no filter is pushed below the counter.
-    *  - Block offset: 0 for a file Spark reads as one split, which is every
-    *    file no larger than min(`spark.sql.files.maxPartitionBytes`,
-    *    max(`spark.sql.files.openCostInBytes`, bytes per core)). Then the
-    *    frame is the scan plus a projection: no shuffle, join or extra job.
-    *  - Split files: construction reads the scan's own FilePartitions and,
-    *    only if some file is split, runs one narrow job (no shuffle) that
-    *    counts lines per block. Their per-file prefix sums join back as a
-    *    broadcast local table. A block's offset is the number of lines
-    *    starting at or before its first byte, so it holds for any layout
-    *    that has a block at that byte.
+    *  - Block offset: 0 when no file can split. Spark cuts a file into
+    *    blocks of min(`spark.sql.files.maxPartitionBytes`,
+    *    max(`spark.sql.files.openCostInBytes`, bytes per core)), so a file no
+    *    longer than min(maxPartitionBytes, openCostInBytes) is one split. If
+    *    the longest file in the read's own listing is within that bound, the
+    *    frame is the scan plus a projection: no shuffle, join or Spark job.
+    *  - Otherwise one narrow job (no shuffle) counts lines per block, and
+    *    their per-file prefix sums join back as a broadcast local table. A
+    *    block's offset is the number of lines starting at or before its first
+    *    byte, so it holds for any layout with a block at that byte: a file
+    *    read whole costs only this job, and a 100 TB corpus one narrow scan.
     *
-    * The trade-off: the split layout is fixed at construction. A row in a
-    * non-first block whose start has no offset (e.g. `spark.sql.files.*`
-    * changed between building and running the frame) raises an error
-    * rather than getting a wrong number. At 100 TB a split corpus costs one
-    * extra narrow scan; the previous design shuffled and sorted every line.
+    * The split layout is fixed at construction: a row in a non-first block
+    * with no known offset (`spark.sql.files.*` changed between building and
+    * running the frame) raises an error, never a wrong number.
     */
   def lines(spark: SparkSession, path: String): DataFrame = {
     val file = col("_metadata.file_path")
     val blk = col("_metadata.file_block_start")
     val text = spark.read.text(path)
-    val meta = text.select(file, blk)
-    val split = meta.queryExecution.sparkPlan
-      .collect { case s: FileSourceScanExec => s.inputRDD.partitions.toSeq }.flatten
-      .exists { case p: FilePartition => p.files.exists(_.start > 0); case _ => false }
+    val longest = text.queryExecution.analyzed.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.listFiles(Nil, Nil)
+    }.flatten.flatMap(_.files.map(_.getLen)).maxOption.getOrElse(0L)
+    val conf = text.sparkSession.sessionState.conf
+    val split = longest > math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
     val numbered = text.select(col("value"), file.as("file"),
       blk.as("__blk"),
       GraftExpr.column(BlockLineIndex(GraftExpr.expression(file), GraftExpr.expression(blk)))
@@ -119,8 +118,8 @@ object Tables {
       numbered.select(col("value"), col("file"),
         when(inFirstBlock, col("__i")).otherwise(drift).as("line_no"))
     else
-      numbered.join(broadcast(spark.createDataFrame(blockOffsets(meta)).toDF("file", "__blk", "__off")),
-        Seq("file", "__blk"), "left")
+      numbered.join(broadcast(spark.createDataFrame(blockOffsets(text.select(file, blk)))
+        .toDF("file", "__blk", "__off")), Seq("file", "__blk"), "left")
         .select(col("value"), col("file"),
           when(inFirstBlock, col("__i"))
             .when(col("__off").isNotNull, col("__off") + col("__i"))

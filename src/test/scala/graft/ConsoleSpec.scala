@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Console, OpCompiler, Pipeline, StreamOp}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,10 +79,48 @@ class ConsoleSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("numTasks maps to source parallelism") {
-    val out = Console.run(spark,
-      s"""RAINSTORM "TRANSFORM:select:OBJECTID,Category" "COLUMN_FILTER:Category:Warning" $trafficCsv 5 false""")
-    assert(out.rdd.getNumPartitions == 5)
+  test("numTasks never reshuffles a batch run: same rows, no exchange, scan partitions") {
+    val scanParts = graft.sources.Tables.trafficSigns(spark, trafficCsv).rdd.getNumPartitions
+    val rows = for (n <- Seq(1, 3, 5)) yield {
+      val out = Console.run(spark,
+        s"""RAINSTORM "TRANSFORM:select:OBJECTID,Category" "COLUMN_FILTER:Category:Warning" $trafficCsv $n false""")
+      val nodes = graft.sources.Layouts.executedNodes(out.queryExecution.executedPlan)
+      assert(!nodes.exists(_.isInstanceOf[Exchange]), s"numTasks=$n: ${nodes.map(_.nodeName)}")
+      assert(out.rdd.getNumPartitions == scanParts, s"numTasks=$n")
+      out.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    }
+    assert(rows.head.nonEmpty && rows.distinct.size == 1)
+  }
+
+  test("a multi-split input keeps its scan parallelism through Console.run, numbering exactly") {
+    val f = java.nio.file.Files.createTempDirectory("console_split").resolve("in.txt")
+    val lines = (0 until 400).map(i => if (i % 3 == 1) f"keep $i%04d ${"k" * 30}" else f"drop $i%04d ${"d" * 30}")
+    java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    val kept = lines.indices.filter(i => lines(i).startsWith("keep"))
+    def rows(line: String) = Console.run(spark, line).collect().map(_.toSeq).toSet
+    // the ~17 KB text file splits at 1 KB; the 1.5 KB fixture CSV needs 256 B
+    // blocks to split more than three ways
+    for ((path, maxBytes, scan, pass, agg) <- Seq(
+        (f.toString, "1024", () => spark.read.text(f.toString), "FILTER:keep TRANSFORM:uppercase",
+          "FILTER:keep AGGREGATE"),
+        (trafficCsv, "256", () => graft.sources.Tables.trafficSigns(spark, trafficCsv),
+          "COLUMN_FILTER:Category:Warning TRANSFORM:select:OBJECTID,Sign_Type",
+          "COLUMN_FILTER:Category:Warning AGGREGATE"))) {
+      val want = (rows(s"RAINSTORM $pass $path 3"), rows(s"RAINSTORM $agg $path 3"))
+      withConf("spark.sql.files.maxPartitionBytes" -> maxBytes) {
+        val scanParts = scan().rdd.getNumPartitions
+        assert(scanParts > 3, s"test must split $path more than numTasks ways")
+        val out = Console.run(spark, s"RAINSTORM $pass $path 3")
+        assert(out.rdd.getNumPartitions == scanParts, path)
+        assert(out.collect().map(_.toSeq).toSet == want._1, path)
+        val counted = Console.run(spark, s"RAINSTORM $agg $path 3")
+        assert(counted.collect().map(_.toSeq).toSet == want._2, path)
+        val key = if (path == trafficCsv) "OBJECTID" else "line_no"
+        val byKey = counted.orderBy(key).select(key, "running_count").collect()
+        assert(byKey.map(_.getLong(1)).toSeq == (1L to byKey.length.toLong), path)
+        if (key == "line_no") assert(byKey.map(_.getLong(0)).toSeq == kept.map(_.toLong))
+      }
+    }
   }
 
   test("a select that drops OBJECTID still numbers in OBJECTID order, for any numTasks") {

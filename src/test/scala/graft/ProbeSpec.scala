@@ -45,20 +45,19 @@ class ProbeSpec extends AnyFunSuite with SparkSpec {
     Files.write(f, Seq("alpha x", "beta", "gamma x").asJava)
     val r = Probe.measureConsole(spark, s"RAINSTORM FILTER:x TRANSFORM:uppercase $f 2")
     assert(r.name == "RAINSTORM_FILTER:x_TRANSFORM:uppercase_in.txt_2", r.line)
-    // the repartition to numTasks is the one exchange
-    assert(r.jobs > 0 && r.exchanges == 1 && r.scans == 1, r.line)
+    assert(r.jobs > 0 && r.exchanges == 0 && r.scans == 1, r.line)
     assert("""\[probe\] (\S+)\s+([0-9.]+) s""".r.findFirstMatchIn(r.line).isDefined, r.line)
   }
 
-  test("a console AGGREGATE below the size gate runs 0+3 jobs and 2 exchanges; shut, 3+5") {
+  test("a console AGGREGATE below the size gate runs 0+2 jobs and 1 exchange; shut, 3+5 jobs, 4 exchanges") {
     for (line <- Seq(
         s"RAINSTORM FILTER:profit AGGREGATE ${ReferenceFiles.dir}/business_1.txt 3",
         s"RAINSTORM COLUMN_FILTER:Category:Warning AGGREGATE ${ReferenceFiles.trafficSignsCsv} 3")) {
       val below = Probe.measureConsole(spark, line)
-      assert((below.buildJobs, below.jobs, below.exchanges) == (0, 3, 2), below.line)
+      assert((below.buildJobs, below.jobs, below.exchanges) == (0, 2, 1), below.line)
       val shut = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
         Probe.measureConsole(spark, line))
-      assert((shut.buildJobs, shut.jobs) == (3, 5), shut.line)
+      assert((shut.buildJobs, shut.jobs, shut.exchanges) == (3, 5, 4), shut.line)
     }
   }
 

@@ -110,13 +110,30 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("an unsplit file numbers inside the scan: no exchange, window or join, and a text console job runs 2 jobs") {
-    val (f, _) = numberedFile()
+  test("an unsplit file numbers inside the scan: no exchange, window or join, and a text console job runs 1 job") {
+    val (f, lines) = numberedFile()
     val nodes = Layouts.executedNodes(Tables.lines(spark, f).queryExecution.executedPlan)
     assert(nodes.count(n => n.isInstanceOf[Exchange] || n.isInstanceOf[WindowExec] ||
       n.isInstanceOf[BaseJoinExec]) == 0, nodes.map(_.nodeName))
     val r = Probe.measureConsole(spark, s"RAINSTORM FILTER:x TRANSFORM:uppercase $f 3")
-    assert(r.buildJobs == 0 && r.jobs == 2, r.line)
+    assert(r.buildJobs == 0 && r.jobs == 1 && r.exchanges == 0, r.line)
+    // both sides of the size bound min(maxPartitionBytes, openCostInBytes)
+    // number identically; one byte under the file's length, the bound says
+    // "may split" while Spark still reads it whole, which costs the counting
+    // job and the offsets join, never a number
+    val len = Files.size(java.nio.file.Paths.get(f))
+    val want = Map("n.txt" -> lines.indices.map(_.toLong).zip(lines))
+    for ((openCost, buildJobs, joins) <- Seq((len, 0, 0), (len - 1, 1, 1)))
+      withConf("spark.sql.files.openCostInBytes" -> openCost.toString,
+          "spark.sql.files.minPartitionNum" -> "1") {
+        assert(spark.read.text(f).rdd.getNumPartitions == 1, "test must read the file whole")
+        val r = Probe.measure(spark, s"lines_$openCost", () => Tables.lines(spark, f))
+        val built = Tables.lines(spark, f)
+        val planJoins = Layouts.executedNodes(built.queryExecution.executedPlan)
+          .count(_.isInstanceOf[BaseJoinExec])
+        assert((r.buildJobs, planJoins) == (buildJobs, joins), s"openCostInBytes=$openCost: ${r.line}")
+        assert(numberingByFile(built) == want, s"openCostInBytes=$openCost")
+      }
   }
 
   test("events NTZ snapshot is epoch-preserving under a non-UTC session zone; registerAll exposes the typed ts") {
