@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.ops.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -84,31 +85,31 @@ object Classifier {
     val spark = docs.sparkSession
     import spark.implicits._
     // corpus-sized work happens once; every epoch runs over these pins
-    val posts = hashedBowCounts(docs, buckets, textCol, idCol)
-      .localCheckpoint(true)
-    val labels = docs.select(col(idCol), labelExpr.cast("long").as("y"))
-      .localCheckpoint(true)
-    val bad = labels.filter(abs(col("y")) =!= 1 || col("y").isNull).limit(1)
-    require(bad.isEmpty,
-      s"trainPerceptron: labelExpr must be ±1 for every row " +
-        s"(found ${bad.collect().mkString(",")})")
-    var w = Map.empty[Long, Long].withDefaultValue(0L)
-    for (_ <- 1 to epochs) {
-      val wDF = w.toSeq.toDF("b", "w")
-      val margins = posts.join(broadcast(wDF), Seq("b"), "left")
-        .groupBy(col(idCol))
-        .agg(sum(col("x") * coalesce(col("w"), lit(0L))).cast("long").as("m"))
-      val grad = posts.join(margins, Seq(idCol)).join(labels, Seq(idCol))
-        .filter(col("y") * col("m") <= 0)
-        .groupBy(col("b")).agg(sum(col("y") * col("x")).cast("long").as("g"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      w = grad.foldLeft(w) { case (acc, (b, g)) => acc + (b -> (acc(b) + g)) }
+    Pins.scope { pin =>
+      val posts = pin(hashedBowCounts(docs, buckets, textCol, idCol))
+      val labels = pin(docs.select(col(idCol), labelExpr.cast("long").as("y")))
+      val bad = labels.filter(abs(col("y")) =!= 1 || col("y").isNull).limit(1)
+      require(bad.isEmpty,
+        s"trainPerceptron: labelExpr must be ±1 for every row " +
+          s"(found ${bad.collect().mkString(",")})")
+      var w = Map.empty[Long, Long].withDefaultValue(0L)
+      for (_ <- 1 to epochs) {
+        val wDF = w.toSeq.toDF("b", "w")
+        val margins = posts.join(broadcast(wDF), Seq("b"), "left")
+          .groupBy(col(idCol))
+          .agg(sum(col("x") * coalesce(col("w"), lit(0L))).cast("long").as("m"))
+        val grad = posts.join(margins, Seq(idCol)).join(labels, Seq(idCol))
+          .filter(col("y") * col("m") <= 0)
+          .groupBy(col("b")).agg(sum(col("y") * col("x")).cast("long").as("g"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        w = grad.foldLeft(w) { case (acc, (b, g)) => acc + (b -> (acc(b) + g)) }
+      }
+      // every observed bucket, zeros kept: the weight table's shape is a
+      // function of the corpus, not of which buckets happened to move
+      val observed = posts.select(col("b")).distinct().as[Long]
+        .collect().sorted
+      observed.map(b => (b, w(b))).toSeq.toDF("b", "w")
     }
-    // every observed bucket, zeros kept: the weight table's shape is a
-    // function of the corpus, not of which buckets happened to move
-    val observed = posts.select(col("b")).distinct().as[Long]
-      .collect().sorted
-    observed.map(b => (b, w(b))).toSeq.toDF("b", "w")
   }
 
   /** Margin readout under a TRAINED integer weight table: per-doc margin,

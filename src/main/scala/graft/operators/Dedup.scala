@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{Sketches, TextFunctions}
+import graft.ops.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -455,20 +456,22 @@ object Dedup {
         .select(col(id), col(sz), explode_outer(col("sh")).as("shingle"))
     val np = postings(newDocs, "a_id", "a_sz")
     val cp0 = postings(corpus, "b_id", "b_sz")
-    val cp = maxShingleDf.fold(cp0) { cap =>
-      require(cap >= 1, s"maxShingleDf must be >= 1: $cap")
-      val pinned = cp0.localCheckpoint(true)
-      val hot = pinned.groupBy("shingle").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > cap).select("shingle")
-      pinned.join(hot, Seq("shingle"), "left_anti")
+    Pins.scope { pin =>
+      val cp = maxShingleDf.fold(cp0) { cap =>
+        require(cap >= 1, s"maxShingleDf must be >= 1: $cap")
+        val pinned = pin(cp0)
+        val hot = pinned.groupBy("shingle").agg(count(lit(1)).as("__df"))
+          .filter(col("__df") > cap).select("shingle")
+        pinned.join(hot, Seq("shingle"), "left_anti")
+      }
+      np.join(cp, Seq("shingle"))
+        .groupBy("a_id", "b_id", "a_sz", "b_sz")
+        .agg(count(lit(1)).as("inter"))
+        .withColumn("jac", col("inter").cast("double") /
+          (col("a_sz") + col("b_sz") - col("inter")).cast("double"))
+        .filter(col("jac") >= threshold)
+        .select(col("a_id"), col("b_id"), col("jac"))
     }
-    np.join(cp, Seq("shingle"))
-      .groupBy("a_id", "b_id", "a_sz", "b_sz")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jac", col("inter").cast("double") /
-        (col("a_sz") + col("b_sz") - col("inter")).cast("double"))
-      .filter(col("jac") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jac"))
   }
 
   /** Bag-of-words COSINE near-dup pairs — the tf-WEIGHTED member of the
@@ -520,26 +523,28 @@ object Dedup {
     val norms = tf.groupBy("id").agg(sum(col("tf") * col("tf"))
       .cast("long").as("n2"))
     val posts0 = tf.join(norms, Seq("id"))
-    val posts = maxTermDf.fold(posts0) { cap =>
-      require(cap >= 2, s"maxTermDf must be >= 2: $cap")
-      val pinned = posts0.localCheckpoint(true)
-      val hot = pinned.groupBy("term").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > cap).select("term")
-      pinned.join(hot, Seq("term"), "left_anti")
+    Pins.scope { pin =>
+      val posts = maxTermDf.fold(posts0) { cap =>
+        require(cap >= 2, s"maxTermDf must be >= 2: $cap")
+        val pinned = pin(posts0)
+        val hot = pinned.groupBy("term").agg(count(lit(1)).as("__df"))
+          .filter(col("__df") > cap).select("term")
+        pinned.join(hot, Seq("term"), "left_anti")
+      }
+      val a = posts.select(col("term"), col("id").as("a_id"),
+        col("tf").as("a_tf"), col("n2").as("na2"))
+      val b = posts.select(col("term"), col("id").as("b_id"),
+        col("tf").as("b_tf"), col("n2").as("nb2"))
+      a.join(b, Seq("term"))
+        .filter(col("a_id") < col("b_id"))
+        .groupBy("a_id", "b_id", "na2", "nb2")
+        .agg(sum(col("a_tf") * col("b_tf")).cast("long").as("dot"))
+        .withColumn("cos", col("dot").cast("double") /
+          (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
+        .filter(col("cos") >= threshold)
+        .select(col("a_id"), col("b_id"), col("dot"), col("na2"), col("nb2"),
+          col("cos"))
     }
-    val a = posts.select(col("term"), col("id").as("a_id"),
-      col("tf").as("a_tf"), col("n2").as("na2"))
-    val b = posts.select(col("term"), col("id").as("b_id"),
-      col("tf").as("b_tf"), col("n2").as("nb2"))
-    a.join(b, Seq("term"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id", "na2", "nb2")
-      .agg(sum(col("a_tf") * col("b_tf")).cast("long").as("dot"))
-      .withColumn("cos", col("dot").cast("double") /
-        (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id"), col("b_id"), col("dot"), col("na2"), col("nb2"),
-        col("cos"))
   }
 
   /** Blocked FUZZY near-dup pairs by edit distance: candidate pairs form
@@ -739,35 +744,37 @@ object Dedup {
     // postings copy — the same volume the self-join's shuffle writes anyway.
     // Scoped to the capped path: uncapped, the postings have one consumer
     // per join side and ReuseExchange already dedups them.
-    val posts = if (!capped) posts0 else {
-      val pinned = posts0.localCheckpoint(true)
-      val dfs = pinned.groupBy("shingle").agg(count(lit(1)).as("__graft_df"))
-      // Fraction cap denominator: the corpus size read off the SAME pinned
-      // postings (explode_outer keeps one row even for null/empty docs, so
-      // count(distinct id) IS the doc count) as a one-row broadcast branch
-      // — no separate docs.count() job, no second scan of a filtered
-      // input. ceil on doubles is fine to 2^53 docs; the cast to long (not
-      // int) keeps multi-billion-doc caps from saturating at Int.MaxValue
-      // and silently disabling the guard at exactly the scale it's for.
-      val withFrac = maxShingleDfFraction match {
-        case Some(f) =>
-          val n = pinned.agg(countDistinct("id").as("__graft_n"))
-          dfs.crossJoin(broadcast(n))
-            .withColumn("__graft_cap", ceil(lit(f) * col("__graft_n")).cast("long"))
-        case None => dfs.withColumn("__graft_cap", lit(Long.MaxValue))
+    Pins.scope { pin =>
+      val posts = if (!capped) posts0 else {
+        val pinned = pin(posts0)
+        val dfs = pinned.groupBy("shingle").agg(count(lit(1)).as("__graft_df"))
+        // Fraction cap denominator: the corpus size read off the SAME pinned
+        // postings (explode_outer keeps one row even for null/empty docs, so
+        // count(distinct id) IS the doc count) as a one-row broadcast branch
+        // — no separate docs.count() job, no second scan of a filtered
+        // input. ceil on doubles is fine to 2^53 docs; the cast to long (not
+        // int) keeps multi-billion-doc caps from saturating at Int.MaxValue
+        // and silently disabling the guard at exactly the scale it's for.
+        val withFrac = maxShingleDfFraction match {
+          case Some(f) =>
+            val n = pinned.agg(countDistinct("id").as("__graft_n"))
+            dfs.crossJoin(broadcast(n))
+              .withColumn("__graft_cap", ceil(lit(f) * col("__graft_n")).cast("long"))
+          case None => dfs.withColumn("__graft_cap", lit(Long.MaxValue))
+        }
+        val hot = withFrac
+          .filter(col("__graft_df") >
+            least(col("__graft_cap"), lit(maxShingleDf.map(_.toLong).getOrElse(Long.MaxValue))))
+          .select("shingle")
+        pinned.join(hot, Seq("shingle"), "left_anti")
       }
-      val hot = withFrac
-        .filter(col("__graft_df") >
-          least(col("__graft_cap"), lit(maxShingleDf.map(_.toLong).getOrElse(Long.MaxValue))))
-        .select("shingle")
-      pinned.join(hot, Seq("shingle"), "left_anti")
+      val a = posts.select(col("id").as("a_id"), col("sz").as("a_sz"), col("shingle"))
+      val b = posts.select(col("id").as("b_id"), col("sz").as("b_sz"), col("shingle"))
+      a.join(b, Seq("shingle"))
+        .filter(col("a_id") < col("b_id"))
+        .groupBy("a_id", "b_id", "a_sz", "b_sz")
+        .agg(count(lit(1)).as("inter"))
     }
-    val a = posts.select(col("id").as("a_id"), col("sz").as("a_sz"), col("shingle"))
-    val b = posts.select(col("id").as("b_id"), col("sz").as("b_sz"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id", "a_sz", "b_sz")
-      .agg(count(lit(1)).as("inter"))
   }
 
   /** MinHash-LSH near-dup pairs, verified: shingle -> k-minhash signature
@@ -1134,78 +1141,60 @@ object Dedup {
       maxRounds: Int = 50): DataFrame = {
     // evaluate the (possibly expensive: LSH, postings joins) pair plan once
     val edges = pairs.select(col(aCol).as("s"), col(bCol).as("t"))
-    val undirected = edges.union(edges.select(col("t"), col("s")))
-      .localCheckpoint(true)
-    var labels = undirected.select(col("s").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint(true)
-    var changed = 1L
-    var round = 0
-    // One min-label hop. `chg` marks labels the hop improved.
-    def hop(lb: DataFrame): DataFrame = {
-      val msgs = undirected.join(lb, col("s") === col("id"))
-        .groupBy(col("t").as("mid")).agg(min("lbl").as("nlbl"))
-      lb.join(msgs, col("id") === col("mid"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
-          (col("nlbl").isNotNull && col("nlbl") < col("lbl")).as("chg"))
-    }
-    while (changed > 0 && round < maxRounds) {
-      // ADAPTIVE hop batching: the first two pins hop ONCE each — near-dup
-      // families (mirror sets, template clones) have diameter ≤ 2, so they
-      // converge and prove it in ≤ 3 single-hop pins with no wasted work.
-      // Only if the graph is still moving after two full hops (a deeper
-      // component) do we escalate to THREE hops per pin, which amortizes
-      // the per-pin changed-count job (each hop is still individually
-      // pinned — see below — so checkpoint cost is per hop). Min-label
-      // propagation is monotone, so batching cannot overshoot — trailing
-      // hops past the fixed point are idempotent no-ops — and convergence
-      // stays exact: `changed` counts the LAST hop's improvements on the
-      // pinned frame. Hops inside a batch are pinned individually too:
-      // hop() consumes its input TWICE (message build + label join), so a
-      // nested hop(hop(hop(.))) would re-execute the inner hops' join+agg
-      // 2–4× inside one action; per-hop pins keep each join+agg computed
-      // exactly once.
-      val batch = if (round < 2) 1 else 3
-      var cur = labels
-      val hopPins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var h = 0
-      while (h < batch) {
-        // LAZY pins: each hop's checkpoint materializes inside the round's
-        // single count job (lineage still truncates after materialization),
-        // so a batch costs ONE job instead of one per hop plus the count
-        cur = hop(if (h == 0) cur else cur.drop("chg")).localCheckpoint(false)
-        hopPins += cur
-        h += 1
+    Pins.scope { pin =>
+      val undirected = pin(edges.union(edges.select(col("t"), col("s"))))
+      var labels = pin(undirected.select(col("s").as("id")).distinct()
+        .withColumn("lbl", col("id")))
+      var changed = 1L
+      var round = 0
+      // One min-label hop. `chg` marks labels the hop improved.
+      def hop(lb: DataFrame): DataFrame = {
+        val msgs = undirected.join(lb, col("s") === col("id"))
+          .groupBy(col("t").as("mid")).agg(min("lbl").as("nlbl"))
+        lb.join(msgs, col("id") === col("mid"), "left")
+          .select(col("id"),
+            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
+            (col("nlbl").isNotNull && col("nlbl") < col("lbl")).as("chg"))
       }
-      changed = cur.filter(col("chg")).count()
-      // the count materialized the whole hop chain: the previous round's
-      // survivor pin and every intermediate hop are dead — only the LAST
-      // hop lives on as next round's labels (Pins contract)
-      graft.ops.Pins.releaseCheckpoint(labels)
-      hopPins.dropRight(1).foreach(graft.ops.Pins.releaseCheckpoint)
-      labels = cur.drop("chg")
-      round += batch
-    }
-    if (changed > 0) {
-      // diameter > maxRounds: an adversarially deep graph (paths, long
-      // chains), not a near-dup family. Finish with star contraction —
-      // O(log n) rounds on any shape — seeded with the original edges PLUS
-      // the (id -> current label) shortcuts the propagation already earned
-      // (a label is always a same-component vertex, so connectivity is
-      // unchanged and the head start is free).
-      val shortcuts = labels.filter(col("id") =!= col("lbl"))
-        .select(col("id").as("s"), col("lbl").as("t"))
-      // starContraction eagerly pins its own copy of the edge set at
-      // construction, so by the time it returns both the undirected pin
-      // and the final propagation labels are dead
-      val res = starContraction(undirected.union(shortcuts), "s", "t")
-      graft.ops.Pins.releaseCheckpoint(undirected)
-      graft.ops.Pins.releaseCheckpoint(labels)
-      res
-    } else {
-      // the returned plan reads ONLY the final labels pin
-      graft.ops.Pins.releaseCheckpoint(undirected)
-      labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+      while (changed > 0 && round < maxRounds) {
+        // ADAPTIVE hop batching: the first two pins hop ONCE each — near-dup
+        // families (mirror sets, template clones) have diameter ≤ 2, so they
+        // converge and prove it in ≤ 3 single-hop pins with no wasted work.
+        // Only if the graph is still moving after two full hops (a deeper
+        // component) do we escalate to THREE hops per pin, which amortizes
+        // the per-pin changed-count job (each hop is still individually
+        // pinned — see below — so checkpoint cost is per hop). Min-label
+        // propagation is monotone, so batching cannot overshoot — trailing
+        // hops past the fixed point are idempotent no-ops — and convergence
+        // stays exact: `changed` counts the LAST hop's improvements on the
+        // pinned frame. Hops inside a batch are pinned individually too:
+        // hop() consumes its input TWICE (message build + label join), so a
+        // nested hop(hop(hop(.))) would re-execute the inner hops' join+agg
+        // 2–4× inside one action; per-hop pins keep each join+agg computed
+        // exactly once.
+        val batch = if (round < 2) 1 else 3
+        var cur = labels
+        for (h <- 0 until batch)
+          // LAZY pins: each hop's checkpoint materializes inside the round's
+          // single count job (lineage still truncates after materialization),
+          // so a batch costs ONE job instead of one per hop plus the count
+          cur = pin(hop(if (h == 0) cur else cur.drop("chg")), eager = false)
+        changed = cur.filter(col("chg")).count()
+        labels = cur.drop("chg")
+        pin.retain(undirected, labels)
+        round += batch
+      }
+      if (changed > 0) {
+        // diameter > maxRounds: an adversarially deep graph (paths, long
+        // chains), not a near-dup family. Finish with star contraction —
+        // O(log n) rounds on any shape — seeded with the original edges PLUS
+        // the (id -> current label) shortcuts the propagation already earned
+        // (a label is always a same-component vertex, so connectivity is
+        // unchanged and the head start is free).
+        val shortcuts = labels.filter(col("id") =!= col("lbl"))
+          .select(col("id").as("s"), col("lbl").as("t"))
+        starContraction(undirected.union(shortcuts), "s", "t")
+      } else labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
     }
   }
 
@@ -1230,56 +1219,56 @@ object Dedup {
       bCol: String = "b_id",
       maxRounds: Int = 120): DataFrame = {
     val edges = pairs.select(col(aCol).as("s"), col(bCol).as("t"))
-    val vertices = edges.select(col("s").as("id"))
-      .union(edges.select(col("t").as("id"))).distinct().localCheckpoint(true)
-    var cur = edges.filter(col("s") =!= col("t"))
-      .select(greatest(col("s"), col("t")).as("s"), least(col("s"), col("t")).as("t"))
-      .distinct().localCheckpoint(true)
-    var stable = cur.isEmpty
-    var round = 0
-    while (!stable && round < maxRounds) {
-      // Convergence is detected by a per-edge `chg` marker carried through
-      // both phases (true iff a re-hang produced the edge THIS round) — one
-      // count on the already-pinned frame, where an `except(cur)` would pay
-      // two extra edge-set-sized shuffles per round. moves == 0 ⟺ next ==
-      // cur exactly: no large-star move means every emission kept its old
-      // companion (ls = cur), and no small-star re-hang means every center
-      // kept its single smaller neighbor (next = ls); conversely the
-      // star-forest end state provably has zero moves, and Kiveris et al.'s
-      // fixed-point theorem says star forests are the ONLY fixed points, so
-      // the check cannot spin on a stable-but-marked set.
-      // large-star: Γ(u) over both orientations; m = min(Γ(u) ∪ {u});
-      // every neighbor v > u re-hangs onto m (a move iff m < u)
-      val both = cur.union(cur.select(col("t").as("s"), col("s").as("t")))
-      val lsMin = both.groupBy("s").agg(min(col("t")).as("mn"))
-        .select(col("s"), least(col("s"), col("mn")).as("m"))
-      val ls = both.join(lsMin, "s").filter(col("t") > col("s"))
-        .select(col("t").as("ns"), col("m").as("nt"), (col("m") =!= col("s")).as("chg"))
-        .filter(col("ns") =!= col("nt"))
-        .groupBy(col("ns").as("s"), col("nt").as("t")).agg(max("chg").as("chg"))
-      // small-star: key every edge by its LARGER endpoint; m = min smaller
-      // neighbor; all other smaller neighbors re-hang onto m (moves), u
-      // keeps (u, m) (inheriting that edge's large-star marker)
-      val ssMin = ls.groupBy("s").agg(min(struct(col("t"), col("chg"))).as("mn"))
-        .select(col("s"), col("mn.t").as("m"), col("mn.chg").as("mchg"))
-      val next = ls.join(ssMin, "s").filter(col("t") =!= col("m"))
-        .select(col("t").as("s"), col("m").as("t"), lit(true).as("chg"))
-        .union(ssMin.select(col("s"), col("m").as("t"), col("mchg").as("chg")))
-        .filter(col("s") =!= col("t"))
-        .groupBy("s", "t").agg(max("chg").as("chg")).localCheckpoint(true)
-      stable = next.filter(col("chg")).count() == 0L
-      // next is an EAGER pin (materialized above): the previous round's
-      // edge pin is dead (Pins contract)
-      graft.ops.Pins.releaseCheckpoint(cur)
-      cur = next.drop("chg")
-      round += 1
+    Pins.scope { pin =>
+      val vertices = pin(edges.select(col("s").as("id"))
+        .union(edges.select(col("t").as("id"))).distinct())
+      var cur = pin(edges.filter(col("s") =!= col("t"))
+        .select(greatest(col("s"), col("t")).as("s"), least(col("s"), col("t")).as("t"))
+        .distinct())
+      var stable = cur.isEmpty
+      var round = 0
+      while (!stable && round < maxRounds) {
+        // Convergence is detected by a per-edge `chg` marker carried through
+        // both phases (true iff a re-hang produced the edge THIS round) — one
+        // count on the already-pinned frame, where an `except(cur)` would pay
+        // two extra edge-set-sized shuffles per round. moves == 0 ⟺ next ==
+        // cur exactly: no large-star move means every emission kept its old
+        // companion (ls = cur), and no small-star re-hang means every center
+        // kept its single smaller neighbor (next = ls); conversely the
+        // star-forest end state provably has zero moves, and Kiveris et al.'s
+        // fixed-point theorem says star forests are the ONLY fixed points, so
+        // the check cannot spin on a stable-but-marked set.
+        // large-star: Γ(u) over both orientations; m = min(Γ(u) ∪ {u});
+        // every neighbor v > u re-hangs onto m (a move iff m < u)
+        val both = cur.union(cur.select(col("t").as("s"), col("s").as("t")))
+        val lsMin = both.groupBy("s").agg(min(col("t")).as("mn"))
+          .select(col("s"), least(col("s"), col("mn")).as("m"))
+        val ls = both.join(lsMin, "s").filter(col("t") > col("s"))
+          .select(col("t").as("ns"), col("m").as("nt"), (col("m") =!= col("s")).as("chg"))
+          .filter(col("ns") =!= col("nt"))
+          .groupBy(col("ns").as("s"), col("nt").as("t")).agg(max("chg").as("chg"))
+        // small-star: key every edge by its LARGER endpoint; m = min smaller
+        // neighbor; all other smaller neighbors re-hang onto m (moves), u
+        // keeps (u, m) (inheriting that edge's large-star marker)
+        val ssMin = ls.groupBy("s").agg(min(struct(col("t"), col("chg"))).as("mn"))
+          .select(col("s"), col("mn.t").as("m"), col("mn.chg").as("mchg"))
+        val next = pin(ls.join(ssMin, "s").filter(col("t") =!= col("m"))
+          .select(col("t").as("s"), col("m").as("t"), lit(true).as("chg"))
+          .union(ssMin.select(col("s"), col("m").as("t"), col("mchg").as("chg")))
+          .filter(col("s") =!= col("t"))
+          .groupBy("s", "t").agg(max("chg").as("chg")))
+        stable = next.filter(col("chg")).count() == 0L
+        cur = next.drop("chg")
+        pin.retain(vertices, cur)
+        round += 1
+      }
+      require(stable,
+        s"star contraction did not converge in $maxRounds rounds (impossible " +
+          "below 2^60 vertices — indicates non-deterministic ids in the input)")
+      // converged edges are stars: s (non-root) -> t (component min)
+      vertices.join(cur.select(col("s").as("id"), col("t").as("root")), Seq("id"), "left")
+        .select(col("id").as("doc_id"), coalesce(col("root"), col("id")).as("cluster_id"))
     }
-    require(stable,
-      s"star contraction did not converge in $maxRounds rounds (impossible " +
-        "below 2^60 vertices — indicates non-deterministic ids in the input)")
-    // converged edges are stars: s (non-root) -> t (component min)
-    vertices.join(cur.select(col("s").as("id"), col("t").as("root")), Seq("id"), "left")
-      .select(col("id").as("doc_id"), coalesce(col("root"), col("id")).as("cluster_id"))
   }
 
   /** Keep one document per near-dup cluster: drop every row whose id sits in

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.ops.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -57,102 +58,9 @@ object Graph {
       srcCol: String = "src",
       dstCol: String = "dst",
       weightCol: Option[String] = None,
-      redistributeDangling: Boolean = false): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1: $iters")
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"damping must satisfy 0 <= num <= den: $dampNum/$dampDen")
-    require(scale >= 1, s"scale must be >= 1: $scale")
-    val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-      w.as("__w"))
-    // one src-keyed agg for the normalizer, carried onto each edge row;
-    // pinned: K iterations must re-read bytes, not re-run edge lineage
-    val wsums = e0.groupBy("__src").agg(sum("__w").as("__wsum"))
-    val en = e0.join(wsums, Seq("__src")).localCheckpoint(true)
-    // nodes derive from the PINNED edge list, not from e0 (r18): the pin
-    // materialization above already ran the whole upstream lineage once;
-    // deriving nodes from e0 ran it a SECOND time in the nodes-pin job
-    // (measured: q_textrank's interpreted pair-explode graph build was the
-    // dominant cost, paid twice — ReuseExchange only dedups within one
-    // job). Equivalent for non-null srcs; a null-src edge never joins
-    // wsums (SQL null key), so en drops it — such edges now contribute
-    // NO endpoints to the node list (before, their endpoints still
-    // registered as rank-base-only nodes). Callers own null hygiene.
-    val nodes = en.select(col("__src").as("node"))
-      .union(en.select(col("__dst").as("node")))
-      .distinct()
-      // the dangling flag rides the node list so the per-iteration filter
-      // costs nothing (no join against the edge table inside the loop)
-      .join(en.select(col("__src").as("node")).distinct()
-          .withColumn("__has_out", lit(true)),
-        Seq("node"), "left")
-      .withColumn("__has_out", coalesce(col("__has_out"), lit(false)))
-      .localCheckpoint(true)
-    val n = nodes.count()
-    require(n > 0, "graph has no nodes")
-    val base = (scale * (dampDen - dampNum)) / (dampDen * n)
-    // LAZY pins (r18): the loop needs no per-round driver value, so every
-    // round's checkpoint is lazy and the WHOLE K-round chain materializes
-    // inside ONE count() job — each round's blocks are stored as its stages
-    // run and lineage truncates at materialization, so the iterated plan
-    // stays constant-size exactly as before, but the per-round eager
-    // materialize-and-sync driver round trip is gone (measured r18: the
-    // 5-node bench graph spent its whole cost on those round trips).
-    // Integer arithmetic is partitioning/order-free, so results are
-    // bit-identical to the eager form.
-    // ZERO-STUB UNION (r18, the hits() round discipline): one
-    // 0-contribution row per node rides the SAME groupBy exchange that
-    // sums the real contributions — contribution-less nodes come out of
-    // the aggregate at Σ=0 where the old shape paid a THIRD per-round
-    // exchange (a left join back onto the node list) to re-attach them.
-    // Long sums are exact, +0 is identity, and max() recovers the
-    // per-node flag (each node contributes its flag exactly once, real
-    // contribution rows carry null) ⇒ bit-identical ranks. Pinned with
-    // fresh attribute ids (re-reading `nodes` per round would trip
-    // DetectAmbiguousSelfJoin against the join's tagged references).
-    val zeroStub = nodes
-      .select(col("node").as("node"), col("__has_out").as("__has_out"),
-        lit(0L).as("__c"))
-      .localCheckpoint(true)
-    var ranks = nodes.select(col("node"), col("__has_out"),
-      lit(scale / n).as("rank")).localCheckpoint(false)
-    val pins = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (_ <- 1 to iters) {
-      // `div` (IntegralDivide), not `/`: Spark's `/` on longs is DOUBLE
-      // division — one float would forfeit the bit-exactness contract
-      val stepped = en.join(ranks, en("__src") === ranks("node"))
-        .selectExpr("__dst AS node", "CAST(null AS boolean) AS __has_out",
-          "rank * __w div __wsum AS __c")
-        .unionByName(zeroStub)
-        .groupBy("node")
-        .agg(max(col("__has_out")).as("__has_out"), sum(col("__c")).as("__in"))
-        .selectExpr("node", "__has_out",
-          s"${base}L + (${dampNum}L * __in) div ${dampDen}L AS rank")
-      val next =
-        if (!redistributeDangling) stepped
-        else {
-          // sink mass, spread uniformly: one-row agg broadcast — reads the
-          // PREVIOUS pinned ranks, so no second pass over anything large
-          val dangling = ranks.filter(!col("__has_out"))
-            .agg(coalesce(sum("rank"), lit(0L)).as("__dsum"))
-          stepped.crossJoin(broadcast(dangling))
-            .selectExpr("node", "__has_out",
-              s"rank + (${dampNum}L * __dsum) div ${dampDen * n}L AS rank")
-        }
-      ranks = next.localCheckpoint(false)
-      pins += ranks
-    }
-    // ONE materializing action for the whole chain; every intermediate
-    // round's pin is then dead (Pins contract: next pin materialized, and
-    // the returned plan reads only the FINAL pin) — released here so a
-    // 100 TB caller never holds K node-sized generations.
-    ranks.count()
-    pins.dropRight(1).foreach(graft.ops.Pins.releaseCheckpoint)
-    graft.ops.Pins.releaseCheckpoint(en)
-    graft.ops.Pins.releaseCheckpoint(nodes)
-    graft.ops.Pins.releaseCheckpoint(zeroStub)
-    ranks.select(col("node"), col("rank"))
-  }
+      redistributeDangling: Boolean = false): DataFrame =
+    powerIterate(edges, None, iters, dampNum, dampDen, scale, srcCol, dstCol,
+      weightCol, redistributeDangling)
 
   /** PERSONALIZED PageRank (Jeh & Widom 2003's random-walk-with-restart
     * form) — [[pageRank]]'s seed-biased sibling: teleport mass returns
@@ -166,12 +74,10 @@ object Graph {
     * d·Σ contrib. Dangling mass drains (the [[pageRank]]
     * `redistributeDangling = false` convention).
     *
-    * Scale shape: identical to [[pageRank]] — normalized edges pinned
-    * once, per round one src-keyed join + dst-keyed partial agg + node
-    * left join, ranks re-pinned per round; the seed FLAG rides the
-    * pinned node list (one extra boolean), so personalization costs
-    * nothing inside the loop. `seeds` is a frame, not literals — at
-    * crawl scale the trusted set is itself a table. */
+    * Scale shape: identical to [[pageRank]] (one shared round); the seed
+    * FLAG rides the pinned node list (one extra boolean), so
+    * personalization costs nothing inside the loop. `seeds` is a frame,
+    * not literals — at crawl scale the trusted set is itself a table. */
   def personalizedPageRank(
       edges: DataFrame,
       seeds: DataFrame,
@@ -181,7 +87,25 @@ object Graph {
       scale: Long = 1000000000000L,
       srcCol: String = "src",
       dstCol: String = "dst",
-      weightCol: Option[String] = None): DataFrame = {
+      weightCol: Option[String] = None): DataFrame =
+    powerIterate(edges, Some(seeds), iters, dampNum, dampDen, scale, srcCol,
+      dstCol, weightCol, redistributeDangling = false)
+
+  /** The round [[pageRank]] and [[personalizedPageRank]] share. The node
+    * flag `__f` is seed membership when `seeds` is given, else "has an
+    * out-edge" (the dangling test); the teleport set is the seeds, else
+    * every node. */
+  private def powerIterate(
+      edges: DataFrame,
+      seeds: Option[DataFrame],
+      iters: Int,
+      dampNum: Long,
+      dampDen: Long,
+      scale: Long,
+      srcCol: String,
+      dstCol: String,
+      weightCol: Option[String],
+      redistributeDangling: Boolean): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den: $dampNum/$dampDen")
@@ -189,56 +113,87 @@ object Graph {
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
     val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
       w.as("__w"))
+    // one src-keyed agg for the normalizer, carried onto each edge row;
+    // pinned: K iterations must re-read bytes, not re-run edge lineage
     val wsums = e0.groupBy("__src").agg(sum("__w").as("__wsum"))
-    val en = e0.join(wsums, Seq("__src")).localCheckpoint(true)
-    // nodes from the PINNED edge list — the [[pageRank]] r18 discipline
-    // (one upstream-lineage pass, not two); same null-src caveat there
-    val nodes = en.select(col("__src").as("node"))
-      .union(en.select(col("__dst").as("node")))
-      .distinct()
-      .join(seeds.select(col(seeds.columns.head).as("node")).distinct()
-          .withColumn("__seed", lit(true)),
-        Seq("node"), "left")
-      .select(col("node").as("node"),
-        coalesce(col("__seed"), lit(false)).as("__seed"))
-      .localCheckpoint(true)
-    val nSeeds = nodes.filter(col("__seed")).count()
-    require(nSeeds > 0, "no seed appears in the graph")
-    val baseSeed = (scale * (dampDen - dampNum)) / (dampDen * nSeeds)
-    // lazy per-round pins + one materializing count — the [[pageRank]] r18
-    // discipline (see there): bit-identical integer math, one driver action
-    // for the whole chain instead of one per round.
-    // zero-stub union round — the [[pageRank]] r18 shape (see there):
-    // the stub folds contribution-less nodes into the contribution
-    // groupBy, dropping the old third per-round exchange; long sums + 0
-    // are exact, max() recovers the seed flag ⇒ bit-identical ranks
-    val zeroStub = nodes
-      .select(col("node").as("node"), col("__seed").as("__seed"),
-        lit(0L).as("__c"))
-      .localCheckpoint(true)
-    var ranks = nodes.select(col("node"), col("__seed"),
-        when(col("__seed"), lit(scale / nSeeds)).otherwise(lit(0L)).as("rank"))
-      .localCheckpoint(false)
-    val pins = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (_ <- 1 to iters) {
-      val next = en.join(ranks, en("__src") === col("node"))
-        .selectExpr("__dst AS node", "CAST(null AS boolean) AS __seed",
-          "rank * __w div __wsum AS __c")
-        .unionByName(zeroStub)
-        .groupBy("node")
-        .agg(max(col("__seed")).as("__seed"), sum(col("__c")).as("__in"))
-        .selectExpr("node", "__seed",
-          s"(CASE WHEN __seed THEN ${baseSeed}L ELSE 0L END) + " +
-            s"(${dampNum}L * __in) div ${dampDen}L AS rank")
-      ranks = next.localCheckpoint(false)
-      pins += ranks
+    Pins.scope { pin =>
+      val en = pin(e0.join(wsums, Seq("__src")))
+      // nodes derive from the PINNED edge list, not from e0 (r18): the pin
+      // materialization above already ran the whole upstream lineage once;
+      // deriving nodes from e0 ran it a SECOND time in the nodes-pin job
+      // (measured: q_textrank's interpreted pair-explode graph build was the
+      // dominant cost, paid twice — ReuseExchange only dedups within one
+      // job). Equivalent for non-null srcs; a null-src edge never joins
+      // wsums (SQL null key), so en drops it — such edges now contribute
+      // NO endpoints to the node list (before, their endpoints still
+      // registered as rank-base-only nodes). Callers own null hygiene.
+      // The flag rides the node list so the per-iteration dangling filter
+      // and seed test cost nothing (no join inside the loop).
+      val flagged = seeds.fold(en.select(col("__src").as("node")))(s =>
+        s.select(col(s.columns.head).as("node")))
+      val nodes = pin(en.select(col("__src").as("node"))
+        .union(en.select(col("__dst").as("node")))
+        .distinct()
+        .join(flagged.distinct().withColumn("__f", lit(true)), Seq("node"), "left")
+        .select(col("node").as("node"), coalesce(col("__f"), lit(false)).as("__f")))
+      val nTele = seeds.fold(nodes.count())(_ => nodes.filter(col("__f")).count())
+      require(nTele > 0,
+        if (seeds.isEmpty) "graph has no nodes" else "no seed appears in the graph")
+      val base = (scale * (dampDen - dampNum)) / (dampDen * nTele)
+      val baseTerm =
+        if (seeds.isEmpty) s"${base}L" else s"(CASE WHEN __f THEN ${base}L ELSE 0L END)"
+      val rank0 =
+        if (seeds.isEmpty) lit(scale / nTele)
+        else when(col("__f"), lit(scale / nTele)).otherwise(lit(0L))
+      // LAZY pins (r18): the loop needs no per-round driver value, so every
+      // round's checkpoint is lazy and the WHOLE K-round chain materializes
+      // inside ONE count job at scope exit — each round's blocks are stored
+      // as its stages run and lineage truncates at materialization, so the
+      // iterated plan stays constant-size, but the per-round eager
+      // materialize-and-sync driver round trip is gone (measured r18: the
+      // 5-node bench graph spent its whole cost on those round trips).
+      // Integer arithmetic is partitioning/order-free, so results are
+      // bit-identical to the eager form.
+      // ZERO-STUB UNION (r18, the hits() round discipline): one
+      // 0-contribution row per node rides the SAME groupBy exchange that
+      // sums the real contributions — contribution-less nodes come out of
+      // the aggregate at Σ=0 where the old shape paid a THIRD per-round
+      // exchange (a left join back onto the node list) to re-attach them.
+      // Long sums are exact, +0 is identity, and max() recovers the
+      // per-node flag (each node contributes its flag exactly once, real
+      // contribution rows carry null) ⇒ bit-identical ranks. Pinned with
+      // fresh attribute ids (re-reading `nodes` per round would trip
+      // DetectAmbiguousSelfJoin against the join's tagged references).
+      val zeroStub = pin(nodes.select(col("node").as("node"), col("__f").as("__f"),
+        lit(0L).as("__c")))
+      var ranks = pin(nodes.select(col("node"), col("__f"), rank0.as("rank")),
+        eager = false)
+      for (_ <- 1 to iters) {
+        // `div` (IntegralDivide), not `/`: Spark's `/` on longs is DOUBLE
+        // division — one float would forfeit the bit-exactness contract
+        val stepped = en.join(ranks, en("__src") === col("node"))
+          .selectExpr("__dst AS node", "CAST(null AS boolean) AS __f",
+            "rank * __w div __wsum AS __c")
+          .unionByName(zeroStub)
+          .groupBy("node")
+          .agg(max(col("__f")).as("__f"), sum(col("__c")).as("__in"))
+          .selectExpr("node", "__f",
+            s"$baseTerm + (${dampNum}L * __in) div ${dampDen}L AS rank")
+        val next =
+          if (!redistributeDangling) stepped
+          else {
+            // sink mass, spread uniformly: one-row agg broadcast — reads the
+            // PREVIOUS pinned ranks, so no second pass over anything large
+            val dangling = ranks.filter(!col("__f"))
+              .agg(coalesce(sum("rank"), lit(0L)).as("__dsum"))
+            stepped.crossJoin(broadcast(dangling))
+              .selectExpr("node", "__f",
+                s"rank + (${dampNum}L * __dsum) div ${dampDen * nTele}L AS rank")
+          }
+        ranks = pin(next, eager = false)
+      }
+      ranks.select(col("node"), col("rank"))
     }
-    ranks.count()
-    pins.dropRight(1).foreach(graft.ops.Pins.releaseCheckpoint)
-    graft.ops.Pins.releaseCheckpoint(en)
-    graft.ops.Pins.releaseCheckpoint(nodes)
-    graft.ops.Pins.releaseCheckpoint(zeroStub)
-    ranks.select(col("node"), col("rank"))
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) — the BIPARTITE-role
@@ -276,99 +231,77 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(scale >= 1, s"scale must be >= 1: $scale")
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-      w.as("__w")).localCheckpoint(true)
-    val nodes = e0.select(col("__src").as("node"))
-      .union(e0.select(col("__dst").as("node")))
-      .distinct().localCheckpoint(true)
-    val n = nodes.count()
-    require(n > 0, "graph has no nodes")
-    // half-step: push `scores` across (frm -> tgt), L1-normalize in
-    // integer units. A ZERO-STUB UNION (one 0-contribution row per node)
-    // keeps contribution-less nodes at 0 through the SAME groupBy that
-    // sums the real contributions — one exchange where a
-    // groupBy-then-left-join-nodes shape costs two, and decimal sums are
-    // exact so the extra zero term never changes a value. The stub is
-    // pinned ONCE with fresh attribute ids: re-reading the `nodes`
-    // dataset inside every round's plan trips DetectAmbiguousSelfJoin
-    // against the join's Dataset-tagged column references.
-    val zeroStub = nodes
-      .select(col("node").as("node"), lit(0L).cast("decimal(38,0)").as("__c"))
-      .localCheckpoint(true)
-    // One half-step = ONE pinned ROLLUP: the per-node sums AND the L1
-    // normalizer total come out of the same exchange (rollup adds the
-    // grand-total grouping set — sum is associative on exact decimals,
-    // so Σ__c ≡ Σ__raw bit-for-bit), and the normalize projection is
-    // two cheap scans of the PIN — the 1-row total broadcast no longer
-    // re-executes the contribution join (the r18 finding: those
-    // broadcast-subquery recomputes, not tasks, dominated the 5-node
-    // bench cost). Returns (normalized scores view, the pin to release).
-    def halfStep(scores: DataFrame, frm: String, tgt: String)
-        : (DataFrame, DataFrame) = {
-      // unresolved col("node") (unique by name: e0 carries only __src/
-      // __dst/__w) — a Dataset-tagged scores("node") false-positives
-      // DetectAmbiguousSelfJoin once the pinned-normalized view is fed
-      // back through the loop
-      val contrib = e0.join(scores, e0(s"__$frm") === col("node"))
-        .select(col(s"__$tgt").as("node"),
-          (col("score").cast("decimal(38,0)") * col("__w")).as("__c"))
-      // rollup over the UNTAGGED col("node"): the String overload resolves
-      // through Dataset.col, whose __dataset_id metadata false-positives
-      // DetectAmbiguousSelfJoin against the Expand's re-aliased grouping
-      // attribute
-      val rolled = contrib
-        .union(zeroStub)
-        .rollup(col("node"))
-        .agg(sum("__c").cast("decimal(38,0)").as("__raw"),
-          grouping_id().cast("int").as("__g"))
-        .localCheckpoint(true)
-      // the normalizer is 1-row BOUNDED METADATA off the already-pinned
-      // rollup (the codebook/argmax collect class) — inlined as a decimal
-      // literal, so the loop runs ZERO broadcast subqueries. (r18 probe:
-      // a lazy-chain variant with the normalizer as an in-plan broadcast
-      // of the pin measured 51 s vs 2.9 s — 2·iters nested broadcast
-      // levels re-plan and recompute deep lineage during stage planning;
-      // the eager pin + driver head() is the measured optimum here.)
-      val tot = rolled.filter(col("__g") === 1)
-        .select(col("__raw")).head().getDecimal(0)
-      val normalized = rolled.filter(col("__g") === 0)
-        .selectExpr("node",
-          s"(__raw * ${scale}L) div CAST('${tot.toPlainString}' " +
-            "AS DECIMAL(38,0)) AS score")
-      (normalized, rolled)
+    Pins.scope { pin =>
+      val e0 = pin(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
+        w.as("__w")))
+      val nodes = pin(e0.select(col("__src").as("node"))
+        .union(e0.select(col("__dst").as("node")))
+        .distinct())
+      val n = nodes.count()
+      require(n > 0, "graph has no nodes")
+      // half-step: push `scores` across (frm -> tgt), L1-normalize in
+      // integer units. A ZERO-STUB UNION (one 0-contribution row per node)
+      // keeps contribution-less nodes at 0 through the SAME groupBy that
+      // sums the real contributions — one exchange where a
+      // groupBy-then-left-join-nodes shape costs two, and decimal sums are
+      // exact so the extra zero term never changes a value. The stub is
+      // pinned ONCE with fresh attribute ids: re-reading the `nodes`
+      // dataset inside every round's plan trips DetectAmbiguousSelfJoin
+      // against the join's Dataset-tagged column references.
+      val zeroStub = pin(nodes
+        .select(col("node").as("node"), lit(0L).cast("decimal(38,0)").as("__c")))
+      // One half-step = ONE pinned ROLLUP: the per-node sums AND the L1
+      // normalizer total come out of the same exchange (rollup adds the
+      // grand-total grouping set — sum is associative on exact decimals,
+      // so Σ__c ≡ Σ__raw bit-for-bit), and the normalize projection is
+      // two cheap scans of the PIN — the 1-row total broadcast no longer
+      // re-executes the contribution join (the r18 finding: those
+      // broadcast-subquery recomputes, not tasks, dominated the 5-node
+      // bench cost). Returns the normalized scores view of the pin.
+      def halfStep(scores: DataFrame, frm: String, tgt: String): DataFrame = {
+        // unresolved col("node") (unique by name: e0 carries only __src/
+        // __dst/__w) — a Dataset-tagged scores("node") false-positives
+        // DetectAmbiguousSelfJoin once the pinned-normalized view is fed
+        // back through the loop
+        val contrib = e0.join(scores, e0(s"__$frm") === col("node"))
+          .select(col(s"__$tgt").as("node"),
+            (col("score").cast("decimal(38,0)") * col("__w")).as("__c"))
+        // rollup over the UNTAGGED col("node"): the String overload resolves
+        // through Dataset.col, whose __dataset_id metadata false-positives
+        // DetectAmbiguousSelfJoin against the Expand's re-aliased grouping
+        // attribute
+        val rolled = pin(contrib
+          .union(zeroStub)
+          .rollup(col("node"))
+          .agg(sum("__c").cast("decimal(38,0)").as("__raw"),
+            grouping_id().cast("int").as("__g")))
+        // the normalizer is 1-row BOUNDED METADATA off the already-pinned
+        // rollup (the codebook/argmax collect class) — inlined as a decimal
+        // literal, so the loop runs ZERO broadcast subqueries. (r18 probe:
+        // a lazy-chain variant with the normalizer as an in-plan broadcast
+        // of the pin measured 51 s vs 2.9 s — 2·iters nested broadcast
+        // levels re-plan and recompute deep lineage during stage planning;
+        // the eager pin + driver head() is the measured optimum here.)
+        val tot = rolled.filter(col("__g") === 1)
+          .select(col("__raw")).head().getDecimal(0)
+        rolled.filter(col("__g") === 0)
+          .selectExpr("node",
+            s"(__raw * ${scale}L) div CAST('${tot.toPlainString}' " +
+              "AS DECIMAL(38,0)) AS score")
+      }
+      // explicit alias: the init pin must NOT reuse `nodes`' attribute ids —
+      // the zero-stub union re-reads `nodes`, and a shared id across the
+      // join and union branches trips DetectAmbiguousSelfJoin
+      var hubs = pin(nodes.select(col("node").as("node"), lit(scale / n).as("score")))
+      var auths: DataFrame = null
+      for (_ <- 1 to iters) {
+        auths = halfStep(hubs, "src", "dst")
+        hubs = halfStep(auths, "dst", "src")
+        pin.retain(e0, nodes, zeroStub, hubs, auths)
+      }
+      hubs.select(col("node"), col("score").as("hub"))
+        .join(auths.select(col("node"), col("score").as("auth")), Seq("node"))
     }
-    // explicit alias: the init pin must NOT reuse `nodes`' attribute ids —
-    // the zero-stub union re-reads `nodes`, and a shared id across the
-    // join and union branches trips DetectAmbiguousSelfJoin
-    var hubs = nodes.select(col("node").as("node"),
-        lit(scale / n).as("score"))
-      .localCheckpoint(true)
-    // Release discipline per round (the Pins contract — a released
-    // checkpoint has no lineage): a side's rolled pin is consumed ONLY by
-    // the next half-step's pin job, so it dies as soon as that pin
-    // materializes; the LAST round's two pins survive into the returned
-    // join. The init scores pin rides `hubsPin` and is released after
-    // round 1's auth pin seals it.
-    var hubsPin: DataFrame = hubs
-    var auths: DataFrame = null
-    var authsPin: DataFrame = null
-    for (i <- 1 to iters) {
-      val (a, aPin) = halfStep(hubs, "src", "dst")
-      // aPin materialized reading hubsPin; the PREVIOUS auths pin was
-      // consumed by the previous hub pin — dead now
-      if (authsPin != null) graft.ops.Pins.releaseCheckpoint(authsPin)
-      val (h, hPin) = halfStep(a, "dst", "src")
-      // hPin materialized reading aPin; the previous hubs pin is dead
-      graft.ops.Pins.releaseCheckpoint(hubsPin)
-      hubs = h; hubsPin = hPin
-      auths = a; authsPin = aPin
-    }
-    val out = hubs.select(col("node"), col("score").as("hub"))
-      .join(auths.select(col("node"), col("score").as("auth")), Seq("node"))
-    graft.ops.Pins.releaseCheckpoint(e0)
-    graft.ops.Pins.releaseCheckpoint(nodes)
-    graft.ops.Pins.releaseCheckpoint(zeroStub)
-    out
   }
 
   /** Exact triangle count of an undirected graph, by DEGREE-ORDERED
@@ -410,52 +343,53 @@ object Graph {
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v") && col("u").isNotNull)
-    val canon = (if (edgesCanonical) raw else raw.distinct()).localCheckpoint(true)
-    val deg = canon.select(col("u").as("node"))
-      .union(canon.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    // orient: from the endpoint with the smaller (deg, id) — total order,
-    // so every undirected edge appears exactly once as (a -> b)
-    val ku = struct(col("__du").as("d"), col("u").as("n"))
-    val kv = struct(col("__dv").as("d"), col("v").as("n"))
-    val oriented = canon
-      .join(deg.select(col("node").as("u"), col("deg").as("__du")), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("deg").as("__dv")), Seq("v"))
-      .select(
-        when(ku < kv, col("u")).otherwise(col("v")).as("a"),
-        when(ku < kv, col("v")).otherwise(col("u")).as("b"))
-      .localCheckpoint(true)
-    // compact-forward close: triangles = Σ_{(a,b)} |N⁺(a) ∩ N⁺(b)| over
-    // oriented edges — each triangle's two lowest-ordered vertices a < b
-    // both point at its apex, so it is counted exactly once, at its
-    // lowest-ordered edge. This beats the explicit wedge self-join
-    // (Σ outdeg² rows through an exchange, then a semi-join probe per
-    // wedge): here the exchange carries one row PER EDGE with two
-    // adjacency arrays, each bounded at O(√m) elements by the
-    // orientation — the same total long count packed into ~outdeg×
-    // fewer rows, no per-wedge hash probe, and the intersection runs as
-    // a tight array op inside codegen.
-    val adj = oriented.groupBy(col("a"))
-      .agg(sort_array(collect_list(col("b"))).as("nbrs"))
-    val closed = oriented.select(col("a"), col("b"))
-      .join(adj, Seq("a")) // same 'a' keying as the adj build — no extra exchange
-      .select(col("b"), col("nbrs").as("na"))
-      // an edge whose head has no out-neighbors closes nothing: the
-      // inner join dropping it IS the zero contribution
-      .join(adj.select(col("a").as("b"), col("nbrs").as("nb")), Seq("b"))
-      // native two-pointer merge over the sorted adjacency arrays — the
-      // per-edge hot op; size(array_intersect(...)) builds a hash set and
-      // an output array per edge only to take its length. Long ids get
-      // the native expression; any other id type falls back to the HOF.
-      .select((oriented.schema("b").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          graft.functions.VectorFunctions.sortedIntersectCount(col("na"), col("nb"))
-        case _ => size(array_intersect(col("na"), col("nb"))).cast("long")
-      }).as("t"))
-    val nN = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
-    val nE = canon.agg(count(lit(1)).cast("long").as("n_edges"))
-    val nT = closed.agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
-    nN.crossJoin(broadcast(nE)).crossJoin(broadcast(nT))
+    Pins.scope { pin =>
+      val canon = pin(if (edgesCanonical) raw else raw.distinct())
+      val deg = canon.select(col("u").as("node"))
+        .union(canon.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      // orient: from the endpoint with the smaller (deg, id) — total order,
+      // so every undirected edge appears exactly once as (a -> b)
+      val ku = struct(col("__du").as("d"), col("u").as("n"))
+      val kv = struct(col("__dv").as("d"), col("v").as("n"))
+      val oriented = pin(canon
+        .join(deg.select(col("node").as("u"), col("deg").as("__du")), Seq("u"))
+        .join(deg.select(col("node").as("v"), col("deg").as("__dv")), Seq("v"))
+        .select(
+          when(ku < kv, col("u")).otherwise(col("v")).as("a"),
+          when(ku < kv, col("v")).otherwise(col("u")).as("b")))
+      // compact-forward close: triangles = Σ_{(a,b)} |N⁺(a) ∩ N⁺(b)| over
+      // oriented edges — each triangle's two lowest-ordered vertices a < b
+      // both point at its apex, so it is counted exactly once, at its
+      // lowest-ordered edge. This beats the explicit wedge self-join
+      // (Σ outdeg² rows through an exchange, then a semi-join probe per
+      // wedge): here the exchange carries one row PER EDGE with two
+      // adjacency arrays, each bounded at O(√m) elements by the
+      // orientation — the same total long count packed into ~outdeg×
+      // fewer rows, no per-wedge hash probe, and the intersection runs as
+      // a tight array op inside codegen.
+      val adj = oriented.groupBy(col("a"))
+        .agg(sort_array(collect_list(col("b"))).as("nbrs"))
+      val closed = oriented.select(col("a"), col("b"))
+        .join(adj, Seq("a")) // same 'a' keying as the adj build — no extra exchange
+        .select(col("b"), col("nbrs").as("na"))
+        // an edge whose head has no out-neighbors closes nothing: the
+        // inner join dropping it IS the zero contribution
+        .join(adj.select(col("a").as("b"), col("nbrs").as("nb")), Seq("b"))
+        // native two-pointer merge over the sorted adjacency arrays — the
+        // per-edge hot op; size(array_intersect(...)) builds a hash set and
+        // an output array per edge only to take its length. Long ids get
+        // the native expression; any other id type falls back to the HOF.
+        .select((oriented.schema("b").dataType match {
+          case org.apache.spark.sql.types.LongType =>
+            graft.functions.VectorFunctions.sortedIntersectCount(col("na"), col("nb"))
+          case _ => size(array_intersect(col("na"), col("nb"))).cast("long")
+        }).as("t"))
+      val nN = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
+      val nE = canon.agg(count(lit(1)).cast("long").as("n_edges"))
+      val nT = closed.agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
+      nN.crossJoin(broadcast(nE)).crossJoin(broadcast(nT))
+    }
   }
 
   /** k-CORE decomposition by iterative peeling: repeatedly delete every
@@ -496,39 +430,36 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v") && col("u").isNotNull)
       .distinct()
-    var live = raw.localCheckpoint(true)
-    var prev = live.count() // one edge COUNT per round is all the driver sees
-    var round = 0
-    var done = prev == 0L
-    while (round < maxRounds && !done) {
-      round += 1
-      val deg = live.select(col("u").as("node"))
+    Pins.scope { pin =>
+      var live = pin(raw)
+      var prev = live.count() // one edge COUNT per round is all the driver sees
+      var round = 0
+      var done = prev == 0L
+      while (round < maxRounds && !done) {
+        round += 1
+        val deg = live.select(col("u").as("node"))
+          .union(live.select(col("v").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))
+        // pinned: node-sized, and BOTH semi-joins consume it — unpinned,
+        // each would re-run the edge-sized degree aggregation
+        // LAZY pins: keep and next materialize inside the round's single
+        // count job (keep's blocks shared by both semi-joins through the
+        // block manager; lineage truncates after materialization) — one job
+        // per round instead of three
+        val keep = pin(deg.where(col("deg") >= k).select(col("node")), eager = false)
+        live = pin(live
+          .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"),
+          eager = false)
+        val after = live.count()
+        done = after == prev
+        prev = after
+        pin.retain(live)
+      }
+      live.select(col("u").as("node"))
         .union(live.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      // pinned: node-sized, and BOTH semi-joins consume it — unpinned,
-      // each would re-run the edge-sized degree aggregation
-      // LAZY pins: keep and next materialize inside the round's single
-      // count job (keep's blocks shared by both semi-joins through the
-      // block manager; lineage truncates after materialization) — one job
-      // per round instead of three
-      val keep = deg.where(col("deg") >= k).select(col("node"))
-        .localCheckpoint(false)
-      val next = live
-        .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .localCheckpoint(false)
-      val after = next.count()
-      done = after == prev
-      prev = after
-      // the count materialized both lazy pins; the previous round's live
-      // set and this round's keep set are dead
-      graft.ops.Pins.releaseCheckpoint(live)
-      graft.ops.Pins.releaseCheckpoint(keep)
-      live = next
+        .groupBy("node").agg(count(lit(1)).as("core_deg"))
     }
-    live.select(col("u").as("node"))
-      .union(live.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_deg"))
   }
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007),
@@ -561,27 +492,26 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v") && col("u").isNotNull)
       .distinct()
-    val ends = canon.select(col("u").as("node"), col("v").as("o"))
-      .union(canon.select(col("v").as("node"), col("u").as("o")))
-      .localCheckpoint(true)
-    var labels = ends.select(col("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val next = ends
-        .join(labels.select(col("node").as("o"), col("label")), Seq("o"))
-        .groupBy(col("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy(col("node"))
-        .agg(min_by(col("label"),
-          struct((-col("__c")).as("__negc"), col("label"))).as("label"))
-        // LAZY pin: rounds are fixed (no per-round action), so the final
-        // action materializes the short chain once; lineage still
+    Pins.scope { pin =>
+      val ends = pin(canon.select(col("u").as("node"), col("v").as("o"))
+        .union(canon.select(col("v").as("node"), col("u").as("o"))))
+      var labels = pin(ends.select(col("node")).distinct()
+        .select(col("node"), col("node").as("label")))
+      for (_ <- 1 to rounds) {
+        // LAZY pin: rounds are fixed (no per-round action), so one count
+        // at scope exit materializes the short chain; lineage still
         // truncates per round instead of nesting the full join tree
-        .localCheckpoint(false)
-      labels = next
+        labels = pin(ends
+          .join(labels.select(col("node").as("o"), col("label")), Seq("o"))
+          .groupBy(col("node"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+          .groupBy(col("node"))
+          .agg(min_by(col("label"),
+            struct((-col("__c")).as("__negc"), col("label"))).as("label")),
+          eager = false)
+      }
+      labels
     }
-    labels
   }
 
   /** Co-occurrence edge list from a grouped id column: all distinct

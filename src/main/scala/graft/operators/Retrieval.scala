@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.ops.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -282,51 +283,52 @@ object Retrieval {
     // token for rows the query set mostly never touches (measured 2.8 s
     // vs this shape at sf0.1; the filtered postings shuffles below carry
     // only query-term rows).
-    val pinned = docs.select(col(idCol).as("id"),
-        TextFunctions.tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-      .localCheckpoint(true)
-    // N and avgdl: a direct no-shuffle agg over the pin — same
-    // exact-integer-sum / count division as bm25TopK's stats.
-    val stats = pinned.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    // Term-filtered postings from the pin — bm25TopK's exact shape, the
-    // tokenize replaced by the pin read. (A scan-local per-doc HOF
-    // term-count fold was measured here too: |terms| filter() passes per
-    // row allocate |terms| arrays and ran ~1 s SLOWER per round than this
-    // explode + map-side-combined count at sf0.1 — the postings shuffle
-    // carries only query-term rows and is not the bottleneck.)
-    def matchedFor(qs: Seq[(String, Seq[String])]): DataFrame = {
-      val terms = qs.flatMap(_._2).distinct
-      pinned.select(col("id"), col("dl"), explode(col("toks")).as("tok"))
-        .filter(col("tok").isin(terms: _*))
-        .groupBy("id", "dl", "tok").agg(count(lit(1)).as("tf"))
+    Pins.scope { pin =>
+      val pinned = pin(docs.select(col(idCol).as("id"),
+          TextFunctions.tokens(col(textCol)).as("toks"))
+        .withColumn("dl", size(col("toks")).cast("long")))
+      // N and avgdl: a direct no-shuffle agg over the pin — same
+      // exact-integer-sum / count division as bm25TopK's stats.
+      val stats = pinned.agg(count(lit(1)).as("n_docs"),
+        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+      // Term-filtered postings from the pin — bm25TopK's exact shape, the
+      // tokenize replaced by the pin read. (A scan-local per-doc HOF
+      // term-count fold was measured here too: |terms| filter() passes per
+      // row allocate |terms| arrays and ran ~1 s SLOWER per round than this
+      // explode + map-side-combined count at sf0.1 — the postings shuffle
+      // carries only query-term rows and is not the bottleneck.)
+      def matchedFor(qs: Seq[(String, Seq[String])]): DataFrame = {
+        val terms = qs.flatMap(_._2).distinct
+        pinned.select(col("id"), col("dl"), explode(col("toks")).as("tok"))
+          .filter(col("tok").isin(terms: _*))
+          .groupBy("id", "dl", "tok").agg(count(lit(1)).as("tf"))
+      }
+      val fb = scoreMatchedTf(matchedFor(queries), stats, queries,
+        k = kFb, k1 = k1, b = b, idCol = idCol, emitScore = false)
+      val fbDocs = fb.select(col("query_id"), col(idCol).as("id"))
+      val orig = queries.flatMap { case (q, ts) => ts.map(q -> _) }
+        .toDF("query_id", "tok")
+      // Census: join the TINY feedback list BEFORE the explode, so only
+      // feedback documents' arrays ever explode; per-occurrence counts.
+      val termW = fbDocs
+        .join(pinned.select(col("id"), col("toks")), Seq("id"))
+        .select(col("query_id"), explode(col("toks")).as("tok"))
+        .join(orig, Seq("query_id", "tok"), "left_anti")
+        .groupBy("query_id", "tok").agg(count(lit(1)).as("w"))
+      val wnd = Window.partitionBy("query_id")
+        .orderBy(col("w").desc, col("tok").asc)
+      val expRows = termW.withColumn("r", row_number().over(wnd))
+        .filter(col("r") <= mExp)
+        .select("query_id", "tok", "r").collect()
+      val expMap = expRows.groupBy(_.getString(0)).map { case (q, rs) =>
+        q -> rs.sortBy(_.getInt(2)).map(_.getString(1)).toSeq
+      }
+      val expanded = queries.map { case (q, ts) =>
+        q -> (ts ++ expMap.getOrElse(q, Seq.empty))
+      }
+      scoreMatchedTf(matchedFor(expanded), stats, expanded,
+        k = k, k1 = k1, b = b, idCol = idCol, emitScore = false)
     }
-    val fb = scoreMatchedTf(matchedFor(queries), stats, queries,
-      k = kFb, k1 = k1, b = b, idCol = idCol, emitScore = false)
-    val fbDocs = fb.select(col("query_id"), col(idCol).as("id"))
-    val orig = queries.flatMap { case (q, ts) => ts.map(q -> _) }
-      .toDF("query_id", "tok")
-    // Census: join the TINY feedback list BEFORE the explode, so only
-    // feedback documents' arrays ever explode; per-occurrence counts.
-    val termW = fbDocs
-      .join(pinned.select(col("id"), col("toks")), Seq("id"))
-      .select(col("query_id"), explode(col("toks")).as("tok"))
-      .join(orig, Seq("query_id", "tok"), "left_anti")
-      .groupBy("query_id", "tok").agg(count(lit(1)).as("w"))
-    val wnd = Window.partitionBy("query_id")
-      .orderBy(col("w").desc, col("tok").asc)
-    val expRows = termW.withColumn("r", row_number().over(wnd))
-      .filter(col("r") <= mExp)
-      .select("query_id", "tok", "r").collect()
-    val expMap = expRows.groupBy(_.getString(0)).map { case (q, rs) =>
-      q -> rs.sortBy(_.getInt(2)).map(_.getString(1)).toSeq
-    }
-    val expanded = queries.map { case (q, ts) =>
-      q -> (ts ++ expMap.getOrElse(q, Seq.empty))
-    }
-    scoreMatchedTf(matchedFor(expanded), stats, expanded,
-      k = k, k1 = k1, b = b, idCol = idCol, emitScore = false)
   }
 
   /** Reciprocal-rank fusion of several per-query rankings (the standard way
@@ -403,23 +405,24 @@ object Retrieval {
     // the aggregated postings once instead — the Dedup capped-ngram
     // discipline: both consumers read ONE materialization whose rows are
     // (id, term, tf), already collapsed map-side, never the raw corpus.
-    val tf = docs.select(col(idCol).as("id"),
-        explode(TextFunctions.tokens(col(textCol))).as("term"))
-      .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"))
-    val scored = tf.join(dfs, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("score",
-        col("tf").cast("double") *
-          (log((col("n_docs").cast("double") + 1.0) / (col("df") + 1.0)) + 1.0))
-    val w = Window.partitionBy("id").orderBy(col("score").desc, col("term").asc)
-    val ranked = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-    val out = Seq(col("id").as(idCol), col("rnk"), col("term"), col("tf"),
-      col("df")) ++ (if (emitScore) Seq(col("score")) else Nil)
-    ranked.select(out: _*)
+    Pins.scope { pin =>
+      val tf = pin(docs.select(col(idCol).as("id"),
+          explode(TextFunctions.tokens(col(textCol))).as("term"))
+        .groupBy("id", "term").agg(count(lit(1)).as("tf")))
+      val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      val stats = docs.agg(count(lit(1)).as("n_docs"))
+      val scored = tf.join(dfs, Seq("term"))
+        .crossJoin(broadcast(stats))
+        .withColumn("score",
+          col("tf").cast("double") *
+            (log((col("n_docs").cast("double") + 1.0) / (col("df") + 1.0)) + 1.0))
+      val w = Window.partitionBy("id").orderBy(col("score").desc, col("term").asc)
+      val ranked = scored.withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= k)
+      val out = Seq(col("id").as(idCol), col("rnk"), col("term"), col("tf"),
+        col("df")) ++ (if (emitScore) Seq(col("score")) else Nil)
+      ranked.select(out: _*)
+    }
   }
 
   /** ROUGE-N overlap between a CANDIDATE and a REFERENCE text column per

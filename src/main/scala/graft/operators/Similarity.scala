@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
+import graft.ops.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -231,25 +232,27 @@ object Similarity {
       fpDigits: Int = 7): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
     val v = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"))
-    var cents = v.orderBy(col("id")).limit(k)
-      .select(col("id").as("cid"), transform(col("v"),
-        x => x.cast("double")).as("cv"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val one = cents.agg(sort_array(collect_list(
-        struct(col("cid"), col("cv")))).as("cents"))
-      val assigned = assignAgainst(embeddings, one, idCol, vecCol, "id", "v")
-        .filter(col("cluster") >= 0L)
-      val scale = math.pow(10, fpDigits)
-      val stats = assigned
-        .select(col("cluster"), posexplode(col("v")))
-        .select(col("cluster"), col("pos").cast("long").as("dim"),
-          round(col("col").cast("double") * lit(scale)).cast("long").as("__fp"))
-        .groupBy("cluster", "dim")
-        .agg(count(lit(1)).as("n"), sum(col("__fp")).as("sum_fp"))
-      cents = updatedCentroids(stats, fpDigits).localCheckpoint(true)
+    Pins.scope { pin =>
+      var cents = pin(v.orderBy(col("id")).limit(k)
+        .select(col("id").as("cid"), transform(col("v"),
+          x => x.cast("double")).as("cv")))
+      for (_ <- 1 to rounds) {
+        val one = cents.agg(sort_array(collect_list(
+          struct(col("cid"), col("cv")))).as("cents"))
+        val assigned = assignAgainst(embeddings, one, idCol, vecCol, "id", "v")
+          .filter(col("cluster") >= 0L)
+        val scale = math.pow(10, fpDigits)
+        val stats = assigned
+          .select(col("cluster"), posexplode(col("v")))
+          .select(col("cluster"), col("pos").cast("long").as("dim"),
+            round(col("col").cast("double") * lit(scale)).cast("long").as("__fp"))
+          .groupBy("cluster", "dim")
+          .agg(count(lit(1)).as("n"), sum(col("__fp")).as("sum_fp"))
+        cents = pin(updatedCentroids(stats, fpDigits))
+        pin.retain(cents)
+      }
+      cents
     }
-    cents
   }
 
   /** FAISS-style PQ TRAINING: per-subspace L2 Lloyd refinement of the
@@ -1030,11 +1033,6 @@ object Similarity {
         array(c.map(lit).toIndexedSeq: _*)).as(s"pc${i + 1}")
     }.toIndexedSeq: _*)
 
-  /** See [[graft.ops.Pins.releaseCheckpoint]] — the shared release for
-    * eager localCheckpoint pins (Dataset.unpersist is a no-op on them). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.ops.Pins.releaseCheckpoint(df)
-
   /** Greedy k-center coreset selection (Gonzalez farthest-first — the
     * classic 2-approximation to the k-center cover): seed with the
     * smallest id, then k−1 rounds of "the point farthest from everything
@@ -1088,32 +1086,25 @@ object Similarity {
     var center = vecOf(seedRow.head)
     val selected = scala.collection.mutable.ArrayBuffer[(Long, Int, Option[Double])](
       (seedRow.head.getLong(0), 1, None))
-    var pinned = nonNull.select(col(idCol).as("__id"), col(vecCol).as("__v"),
-        lit(Double.MaxValue).as("__md"))
-      .filter(col("__id") =!= lit(selected.head._1))
-      .localCheckpoint(true)
-    var state = pinned
-    var r = 2
-    while (r <= k && !state.isEmpty) {
-      // eager checkpoint materializes the new round's state FIRST; only
-      // then release the previous pin, so at most one corpus-sized copy
-      // (plus the one being built) is ever resident
-      val next = state.select(col("__id"), col("__v"),
-          least(col("__md"), sqDistTo(center)).as("__md"))
-        .localCheckpoint(true)
-      releaseCheckpoint(pinned)
-      pinned = next
-      state = next
-      val win = state.orderBy(col("__md").desc, col("__id").asc).limit(1)
-        .select(col("__id"), col("__v"), col("__md")).collect().head
-      selected += ((win.getLong(0), r, Some(win.getDouble(2))))
-      center = vecOf(win)
-      state = state.filter(col("__id") =!= lit(win.getLong(0)))
-      r += 1
+    Pins.scope { pin =>
+      var state = pin(nonNull.select(col(idCol).as("__id"), col(vecCol).as("__v"),
+          lit(Double.MaxValue).as("__md"))
+        .filter(col("__id") =!= lit(selected.head._1)))
+      var r = 2
+      while (r <= k && !state.isEmpty) {
+        state = pin(state.select(col("__id"), col("__v"),
+          least(col("__md"), sqDistTo(center)).as("__md")))
+        pin.retain(state)
+        val win = state.orderBy(col("__md").desc, col("__id").asc).limit(1)
+          .select(col("__id"), col("__v"), col("__md")).collect().head
+        selected += ((win.getLong(0), r, Some(win.getDouble(2))))
+        center = vecOf(win)
+        state = state.filter(col("__id") =!= lit(win.getLong(0)))
+        r += 1
+      }
+      selected.toSeq.map { case (id, rank, d2) => (id, rank, d2) }
+        .toDF(idCol, "rank", "d2")
     }
-    releaseCheckpoint(pinned)
-    selected.toSeq.map { case (id, rank, d2) => (id, rank, d2) }
-      .toDF(idCol, "rank", "d2")
   }
 
   /** IVF (inverted-file) ANN: k-means cells over the corpus; each query
@@ -1404,43 +1395,42 @@ object Similarity {
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda out of [0,1]: $lambda")
     val mu = 1.0 - lambda // subtract the SAME IEEE constant as the oracle
     val v = vectors.select(col(idCol).as("__vid"), col(vecCol).as("__v"))
-    val cand = candidates.select(col("q_id"), col("n_id"), col("cos"))
-      .join(v, col("n_id") === col("__vid")).drop("__vid")
-      .localCheckpoint(true)
-    val a = cand.select(col("q_id"), col("n_id").as("a_id"), col("__v").as("a_v"))
-    val b = cand.select(col("q_id"), col("n_id").as("b_id"), col("__v").as("b_v"))
-    val pairSims = a.join(b, Seq("q_id")).where(col("a_id") =!= col("b_id"))
-      .select(col("q_id"), col("a_id"), col("b_id"),
-        cosineSimilarity(col("a_v"), col("b_v")).as("s"))
-      .localCheckpoint(true)
-    // round 1: pure relevance
-    var selected = cand.groupBy("q_id")
-      .agg(min_by(struct(col("n_id"), (lit(lambda) * col("cos")).as("mmr")),
-        struct((-(lit(lambda) * col("cos"))).as("__neg"), col("n_id"))).as("w"))
-      .select(col("q_id"), col("w.n_id").as("n_id"), lit(1L).as("rank"),
-        col("w.mmr").as("mmr"))
-      .localCheckpoint(true)
-    for (r <- 2 to k) {
-      val pen = pairSims
-        .join(selected.select(col("q_id"), col("n_id").as("b_id")), Seq("q_id", "b_id"))
-        .groupBy(col("q_id"), col("a_id")).agg(max(col("s")).as("__pen"))
-        .select(col("q_id").as("__pq"), col("a_id"), col("__pen"))
-      val remaining = cand
-        .join(selected.select("q_id", "n_id"), Seq("q_id", "n_id"), "left_anti")
-      val scored = remaining
-        .join(pen, col("n_id") === col("a_id") && col("q_id") === col("__pq"),
-          "left")
-        .select(col("q_id"), col("n_id"),
-          (lit(lambda) * col("cos") -
-            lit(mu) * coalesce(col("__pen"), lit(0.0))).as("mmr"))
-      val next = scored.groupBy("q_id")
-        .agg(min_by(struct(col("n_id"), col("mmr")),
-          struct((-col("mmr")).as("__neg"), col("n_id"))).as("w"))
-        .select(col("q_id"), col("w.n_id").as("n_id"), lit(r.toLong).as("rank"),
-          col("w.mmr").as("mmr"))
-      selected = selected.union(next).localCheckpoint(false)
+    Pins.scope { pin =>
+      val cand = pin(candidates.select(col("q_id"), col("n_id"), col("cos"))
+        .join(v, col("n_id") === col("__vid")).drop("__vid"))
+      val a = cand.select(col("q_id"), col("n_id").as("a_id"), col("__v").as("a_v"))
+      val b = cand.select(col("q_id"), col("n_id").as("b_id"), col("__v").as("b_v"))
+      val pairSims = pin(a.join(b, Seq("q_id")).where(col("a_id") =!= col("b_id"))
+        .select(col("q_id"), col("a_id"), col("b_id"),
+          cosineSimilarity(col("a_v"), col("b_v")).as("s")))
+      // round 1: pure relevance
+      var selected = pin(cand.groupBy("q_id")
+        .agg(min_by(struct(col("n_id"), (lit(lambda) * col("cos")).as("mmr")),
+          struct((-(lit(lambda) * col("cos"))).as("__neg"), col("n_id"))).as("w"))
+        .select(col("q_id"), col("w.n_id").as("n_id"), lit(1L).as("rank"),
+          col("w.mmr").as("mmr")))
+      for (r <- 2 to k) {
+        val pen = pairSims
+          .join(selected.select(col("q_id"), col("n_id").as("b_id")), Seq("q_id", "b_id"))
+          .groupBy(col("q_id"), col("a_id")).agg(max(col("s")).as("__pen"))
+          .select(col("q_id").as("__pq"), col("a_id"), col("__pen"))
+        val remaining = cand
+          .join(selected.select("q_id", "n_id"), Seq("q_id", "n_id"), "left_anti")
+        val scored = remaining
+          .join(pen, col("n_id") === col("a_id") && col("q_id") === col("__pq"),
+            "left")
+          .select(col("q_id"), col("n_id"),
+            (lit(lambda) * col("cos") -
+              lit(mu) * coalesce(col("__pen"), lit(0.0))).as("mmr"))
+        val next = scored.groupBy("q_id")
+          .agg(min_by(struct(col("n_id"), col("mmr")),
+            struct((-col("mmr")).as("__neg"), col("n_id"))).as("w"))
+          .select(col("q_id"), col("w.n_id").as("n_id"), lit(r.toLong).as("rank"),
+            col("w.mmr").as("mmr"))
+        selected = pin(selected.union(next), eager = false)
+      }
+      selected
     }
-    selected
   }
 
   /** Recall@k of an approximate top-k result against the exact one — the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.ops.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -87,27 +88,28 @@ object Tokenizer {
   def trainBpe(docs: DataFrame, numMerges: Int, textCol: String = "text",
       pinEvery: Int = 4): Seq[(String, String, Long)] = {
     require(numMerges >= 0, s"numMerges must be >= 0: $numMerges")
-    var vocab = wordFrequencies(docs, textCol)
-      .select(charSymbols(col("w")).as("symbols"), col("wf"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var i = 0
-    while (i < numMerges) {
-      val top = pairCountsFromSymbols(vocab)
-        .orderBy(col("n").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) { i = numMerges } // alphabet exhausted: stop early
-      else {
-        val r = top.head
-        val (a, b) = (r.getString(0), r.getString(1))
-        merges += ((a, b, r.getLong(2)))
-        vocab = vocab.select(applyMerge(col("symbols"), a, b).as("symbols"),
-          col("wf"))
-        i += 1
-        if (i % pinEvery == 0) vocab = vocab.localCheckpoint(true)
+    Pins.scope { pin =>
+      var vocab = pin(wordFrequencies(docs, textCol)
+        .select(charSymbols(col("w")).as("symbols"), col("wf")))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      var i = 0
+      while (i < numMerges) {
+        val top = pairCountsFromSymbols(vocab)
+          .orderBy(col("n").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        if (top.isEmpty) { i = numMerges } // alphabet exhausted: stop early
+        else {
+          val r = top.head
+          val (a, b) = (r.getString(0), r.getString(1))
+          merges += ((a, b, r.getLong(2)))
+          vocab = vocab.select(applyMerge(col("symbols"), a, b).as("symbols"),
+            col("wf"))
+          i += 1
+          if (i % pinEvery == 0) { vocab = pin(vocab); pin.retain(vocab) }
+        }
       }
+      merges.toSeq
     }
-    merges.toSeq
   }
 
   /** Per-document SUBTOKEN COUNTS under an ordered learned merge list —
@@ -265,31 +267,33 @@ object Tokenizer {
     require(maxInventory >= 1, s"maxInventory must be >= 1: $maxInventory")
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = wordFrequencies(docs, textCol).localCheckpoint(true)
-    var pieces: Array[(String, Long)] =
-      unigramSeedFromWords(words, maxPieceLen, minSeedCount)
-        .limit(maxInventory + 1)
-        .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    require(pieces.length <= maxInventory,
-      s"unigram seed inventory exceeds maxInventory=$maxInventory pieces — " +
-        s"raise minSeedCount (=$minSeedCount), lower maxPieceLen " +
-        s"(=$maxPieceLen), or raise maxInventory for this corpus")
-    for (_ <- 1 to rounds) {
-      val bc = spark.sparkContext.broadcast(unigramScores(pieces))
-      val maxL = maxPieceLen
-      val used = words.as[(String, Long)]
-        .flatMap { case (w, wf) =>
-          segmentViterbi(w, bc.value, maxL).map(p => (p, wf))
-        }
-        .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-        .collect().toMap
-      pieces = pieces.flatMap { case (p, _) =>
-        val c = used.getOrElse(p, 0L)
-        if (p.length == 1) Some(p -> math.max(c, 1L))
-        else if (c > 0L) Some(p -> c) else None
-      }.sortBy(_._1)
+    Pins.scope { pin =>
+      val words = pin(wordFrequencies(docs, textCol))
+      var pieces: Array[(String, Long)] =
+        unigramSeedFromWords(words, maxPieceLen, minSeedCount)
+          .limit(maxInventory + 1)
+          .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+      require(pieces.length <= maxInventory,
+        s"unigram seed inventory exceeds maxInventory=$maxInventory pieces — " +
+          s"raise minSeedCount (=$minSeedCount), lower maxPieceLen " +
+          s"(=$maxPieceLen), or raise maxInventory for this corpus")
+      for (_ <- 1 to rounds) {
+        val bc = spark.sparkContext.broadcast(unigramScores(pieces))
+        val maxL = maxPieceLen
+        val used = words.as[(String, Long)]
+          .flatMap { case (w, wf) =>
+            segmentViterbi(w, bc.value, maxL).map(p => (p, wf))
+          }
+          .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
+          .collect().toMap
+        pieces = pieces.flatMap { case (p, _) =>
+          val c = used.getOrElse(p, 0L)
+          if (p.length == 1) Some(p -> math.max(c, 1L))
+          else if (c > 0L) Some(p -> c) else None
+        }.sortBy(_._1)
+      }
+      pieces.toSeq.toDF("piece", "cnt")
     }
-    pieces.toSeq.toDF("piece", "cnt")
   }
 
   // -------------------------------------------------------------------------
@@ -352,34 +356,35 @@ object Tokenizer {
       textCol: String = "text",
       pinEvery: Int = 4): Seq[(String, String, Long, Long)] = {
     require(numMerges >= 0, s"numMerges must be >= 0: $numMerges")
-    var vocab = wordFrequencies(docs, textCol)
-      .select(charSymbols(col("w")).as("symbols"), col("wf"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
-    var i = 0
-    while (i < numMerges) {
-      val cs = vocab.select(explode(col("symbols")).as("sym"), col("wf"))
-        .groupBy("sym").agg(sum(col("wf")).cast("long").as("c1"))
-      val top = pairCountsFromSymbols(vocab)
-        .join(cs.select(col("sym").as("a"), col("c1").as("na")), Seq("a"))
-        .join(cs.select(col("sym").as("b"), col("c1").as("nb")), Seq("b"))
-        .withColumn("score_q", round((log(col("n").cast("double"))
-          - log(col("na").cast("double")) - log(col("nb").cast("double")))
-          * lit(1e6)).cast("long"))
-        .orderBy(col("score_q").desc, col("a").asc, col("b").asc)
-        .limit(1).select("a", "b", "n", "score_q").collect()
-      if (top.isEmpty) { i = numMerges } // alphabet exhausted: stop early
-      else {
-        val r = top.head
-        val (a, b) = (r.getString(0), r.getString(1))
-        merges += ((a, b, r.getLong(2), r.getLong(3)))
-        vocab = vocab.select(applyMerge(col("symbols"), a, b).as("symbols"),
-          col("wf"))
-        i += 1
-        if (i % pinEvery == 0) vocab = vocab.localCheckpoint(true)
+    Pins.scope { pin =>
+      var vocab = pin(wordFrequencies(docs, textCol)
+        .select(charSymbols(col("w")).as("symbols"), col("wf")))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
+      var i = 0
+      while (i < numMerges) {
+        val cs = vocab.select(explode(col("symbols")).as("sym"), col("wf"))
+          .groupBy("sym").agg(sum(col("wf")).cast("long").as("c1"))
+        val top = pairCountsFromSymbols(vocab)
+          .join(cs.select(col("sym").as("a"), col("c1").as("na")), Seq("a"))
+          .join(cs.select(col("sym").as("b"), col("c1").as("nb")), Seq("b"))
+          .withColumn("score_q", round((log(col("n").cast("double"))
+            - log(col("na").cast("double")) - log(col("nb").cast("double")))
+            * lit(1e6)).cast("long"))
+          .orderBy(col("score_q").desc, col("a").asc, col("b").asc)
+          .limit(1).select("a", "b", "n", "score_q").collect()
+        if (top.isEmpty) { i = numMerges } // alphabet exhausted: stop early
+        else {
+          val r = top.head
+          val (a, b) = (r.getString(0), r.getString(1))
+          merges += ((a, b, r.getLong(2), r.getLong(3)))
+          vocab = vocab.select(applyMerge(col("symbols"), a, b).as("symbols"),
+            col("wf"))
+          i += 1
+          if (i % pinEvery == 0) { vocab = pin(vocab); pin.retain(vocab) }
+        }
       }
+      merges.toSeq
     }
-    merges.toSeq
   }
 
   /** Greedy longest-match-first segmentation of one word: at each

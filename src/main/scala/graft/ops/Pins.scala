@@ -1,28 +1,31 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage-block release for EAGERLY materialized `localCheckpoint` pins.
+/** Pin lifetimes for the iterative operators.
   *
-  * The repo's iterative loops (cluster propagation, pageRank, k-core,
-  * farthest-first selection) pin each round's frame with a localCheckpoint
-  * so the iterated plan stays constant-size. `Dataset.unpersist` is a
-  * NO-OP on such frames — a checkpointed Dataset never registers in the
-  * CacheManager — so without an explicit release every round's
-  * corpus-sized pin stays resident until the ContextCleaner happens to GC
-  * the RDD reference: a 50-round job holds up to 50 corpus-sized block
-  * sets. This walks the plan to its LogicalRDD leaves and unpersists the
-  * checkpoint RDDs themselves.
+  * A loop pins each round's frame with a `localCheckpoint` so the iterated
+  * plan stays constant-size. `Dataset.unpersist` is a NO-OP on such frames
+  * (a checkpointed Dataset never registers in the CacheManager), so an
+  * unreleased pin stays resident until the ContextCleaner happens to GC
+  * its RDD: a 50-round job would hold up to 50 corpus-sized block sets.
+  * And a localCheckpoint has no lineage: a released block cannot be
+  * recomputed, so a release that comes too early fails a later read.
   *
-  * SAFETY CONTRACT: a localCheckpoint has no lineage — a released block
-  * cannot be recomputed — so release a pin ONLY once (a) the next round's
-  * pin has MATERIALIZED (eager checkpoint, or a lazy one forced by an
-  * action) and (b) no returned plan reads the released frame. Every call
-  * site must hold both. Pass the CHECKPOINTED FRAME ITSELF, not a plan
-  * derived from several pins: the release unpersists EVERY LogicalRDD
-  * leaf it finds, so a join of two pinned frames would release a sibling
-  * pin that later reads still need — unrecoverable, since there is no
-  * lineage to recompute from. The leaf count is asserted. */
+  * [[scope]] owns every pin an operator makes and alone decides when each
+  * one dies. The rule it enforces:
+  *  - a pin is released only when no live frame reads it. Within the body
+  *    the live frames are the ones the last [[Scope.retain]] named; at exit
+  *    they are the LogicalRDD leaves of a returned DataFrame, and any
+  *    other result (a `Seq`, an `Array`, a local frame) has none;
+  *  - a pin is never released before every live pin created after it has
+  *    materialized (`isCheckpointed`): a lazy live pin may still read it
+  *    through its lineage, so the scope counts such a pin first;
+  *  - if the body throws, every pin is released.
+  * Pins are matched by RDD identity, so a frame that joins several pins
+  * keeps all of them. */
 object Pins {
 
   /** Live census per scope tag — see [[scopedPersist]]. */
@@ -38,7 +41,7 @@ object Pins {
     * bound the lazy `.persist` alone can't give (its blocks linger until
     * the context cleaner happens to GC the dropped result).
     *
-    * Unlike [[releaseCheckpoint]]'s pins, a persist HAS lineage — a
+    * Unlike a [[scope]]'s pins, a persist HAS lineage — a
     * superseded census still referenced by an old returned frame simply
     * recomputes on next use (slower, never wrong), so the replace is
     * always safe. A re-registration with the SAME logical plan (same
@@ -59,14 +62,47 @@ object Pins {
   private[graft] def scopedEntry(tag: String): Option[DataFrame] =
     Option(censuses.get(tag))
 
-  def releaseCheckpoint(df: DataFrame): Unit = {
-    val leaves = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr
+  /** The pins of one [[scope]]: `pin(df)` is `df.localCheckpoint(eager)`
+    * owned by the scope. */
+  final class Scope private[Pins] () {
+    private var pins = Vector.empty[RDD[_]]
+
+    def apply(df: DataFrame, eager: Boolean = true): DataFrame = {
+      val pinned = df.localCheckpoint(eager)
+      pins ++= leaves(pinned)
+      pinned
     }
-    require(leaves.size <= 1,
-      s"Pins.releaseCheckpoint: plan has ${leaves.size} LogicalRDD leaves — " +
-        "releasing would unpersist sibling pins with no lineage to recover " +
-        "from; pass the single checkpointed frame itself")
-    leaves.foreach(_.rdd.unpersist(blocking = false): Unit)
+
+    /** Releases every pin that none of `live` reads. */
+    def retain(live: DataFrame*): Unit = keepOnly(live.flatMap(leaves).toSet)
+
+    private[Pins] def keepOnly(live: Set[RDD[_]]): Unit = {
+      val firstDead = pins.indexWhere(p => !live(p))
+      if (firstDead >= 0) {
+        pins.drop(firstDead).filter(p => live(p) && !p.isCheckpointed)
+          .foreach(_.count())
+        pins.filterNot(live).foreach(_.unpersist(blocking = false))
+        pins = pins.filter(live)
+      }
+    }
   }
+
+  /** Runs `body` with a fresh [[Scope]] and releases its pins by the rule
+    * above. */
+  def scope[T](body: Scope => T): T = {
+    val s = new Scope
+    try {
+      val out = body(s)
+      s.keepOnly(out match {
+        case df: Dataset[_] => leaves(df.toDF()).toSet
+        case _ => Set.empty
+      })
+      out
+    } catch {
+      case t: Throwable => s.keepOnly(Set.empty); throw t
+    }
+  }
+
+  private def leaves(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * It prints one line per query:
   * {{{
   * [probe] <name> <wall> s build_ms=… build_jobs=… jobs=… stages=… tasks=…
-  *   shuffle_kb=… exchanges=… reused=… scans=… dup_scans=…
+  *   shuffle_kb=… exchanges=… reused=… scans=… dup_scans=… pins=…
   * }}}
   * `jobs` counts the execution's jobs; `stages`, `tasks` and `shuffle_kb`
   * cover construction and execution together (a skipped stage counts in
@@ -31,6 +31,9 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * subqueries included: `Exchange` and `ReusedExchange` nodes, file scans,
   * and `dup_scans` — scans sharing path, read schema and data filters with
   * another scan, i.e. places where a forked DataFrame re-reads its input.
+  * `pins` counts the persistent RDDs the measured construction and run
+  * left registered (a key-set difference): the checkpoint pins the
+  * returned plan reads, plus any pin an operator leaked.
   * `--plans <dir>` also writes `<dir>/<name>.txt`: the formatted plan
   * before execution and again after it (the AQE final plan). With no query
   * names it prints the query/oracle inventory instead.
@@ -52,11 +55,11 @@ object Probe {
 
   final case class Reading(name: String, wallS: Double, buildMs: Long, buildJobs: Long,
       jobs: Long, stages: Long, tasks: Long, shuffleKb: Long,
-      exchanges: Int, reused: Int, scans: Int, dupScans: Int) {
+      exchanges: Int, reused: Int, scans: Int, dupScans: Int, pins: Int) {
     def line: String =
       f"[probe] $name $wallS%.3f s build_ms=$buildMs build_jobs=$buildJobs jobs=$jobs " +
         s"stages=$stages tasks=$tasks shuffle_kb=$shuffleKb exchanges=$exchanges " +
-        s"reused=$reused scans=$scans dup_scans=$dupScans"
+        s"reused=$reused scans=$scans dup_scans=$dupScans pins=$pins"
   }
 
   private final class Census extends SparkListener {
@@ -90,6 +93,7 @@ object Probe {
     GraftListenerBus.drain(sc)
     val census = new Census
     sc.addSparkListener(census)
+    val registered = sc.getPersistentRDDs.keySet
     val (df, buildMs, buildJobs) = try {
       val t0 = System.nanoTime()
       val df = build()
@@ -104,6 +108,7 @@ object Probe {
           df.queryExecution.explainString(FormattedMode))
       (df, buildMs, buildJobs)
     } finally sc.removeSparkListener(census)
+    val pins = (sc.getPersistentRDDs.keySet -- registered).size
     val nodes = Layouts.executedNodes(df.queryExecution.executedPlan)
     val scans = nodes.collect { case s: FileSourceScanExec => s }
     val dupScans = scans.groupBy(s => (s.relation.location.rootPaths.mkString(","),
@@ -117,7 +122,7 @@ object Probe {
     Reading(name, wallS, buildMs, buildJobs, census.jobs.get - buildJobs,
       census.stages.get, census.tasks.get, census.shuffleBytes.get / 1024,
       nodes.count(_.isInstanceOf[Exchange]), nodes.count(_.isInstanceOf[ReusedExchangeExec]),
-      scans.size, dupScans)
+      scans.size, dupScans, pins)
   }
 
   /** The console lines in Probe's arguments: each `RAINSTORM` token starts

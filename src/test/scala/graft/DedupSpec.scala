@@ -350,23 +350,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   test("fractional df-cap runs NO extra job: corpus size derived in-plan, not via docs.count()") {
     // count Spark jobs fired while CONSTRUCTING the pair frame (the eager
     // postings pin runs here; the old implementation also ran a
-    // docs.count() job here for the fraction form). Listener delivery is
-    // async — poll until the count is stable.
-    def jobsDuring(body: => Unit): Int = {
-      val c = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          c.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        var prev = -1; var cur = c.get
-        while (cur != prev) { Thread.sleep(200); prev = cur; cur = c.get }
-        cur
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    // docs.count() job here for the fraction form)
     val absJobs = jobsDuring {
       Dedup.ngramJaccardPairs(docs, 0.3, maxShingleDf = Some(3))
     }
@@ -464,6 +448,18 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(Dedup.starContraction(path).count() == 40)
     assert(spark.sparkContext.getPersistentRDDs.size <= b2 + 2,
       "starContraction leaked per-round checkpoint pins")
+  }
+
+  test("jobs per round: clusters on a path of 4/6/8/12 nodes") {
+    import spark.implicits._
+    // the costs measured before the loops shared Pins.scope, each run
+    // including one final count(); adaptive hop batching makes them step
+    val bound = Map(4 -> 29L, 6 -> 43L, 8 -> 43L, 12 -> 72L)
+    val jobs = bound.keys.toSeq.sorted.map { n =>
+      val path = (0L until n.toLong).sliding(2).map(w => (w(0), w(1))).toSeq.toDF("a_id", "b_id")
+      n -> jobsDuring(Dedup.clusters(path).count(): Unit)
+    }
+    assert(jobs.forall { case (n, j) => j <= bound(n) }, s"clusters ran $jobs jobs")
   }
 
   test("clusters falls back to star contraction past maxRounds instead of failing") {

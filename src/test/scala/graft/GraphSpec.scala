@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite with SparkSpec {
@@ -236,6 +237,29 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(Graph.kCore(edges, k = 2).count() > 0)
     assert(spark.sparkContext.getPersistentRDDs.size <= b2 + 1,
       "kCore leaked per-round checkpoint pins")
+  }
+
+  test("jobs per round: pageRank and personalizedPageRank 2, hits 8, labelPropagation 3") {
+    import spark.implicits._
+    val edges = (for (u <- 1L to 12L; v <- 1L to 12L if u != v && (u + v) % 3 == 0)
+      yield (u, v)).toDF("src", "dst")
+    val seeds = Seq(3L).toDF("node")
+    // (name, run at k rounds, jobs per extra round, total at 4 rounds) —
+    // the bounds are the costs measured before the loops shared Pins.scope,
+    // each run including one final count(); labelPropagation's total has
+    // one more, the count that materializes its lazy last round so the
+    // earlier rounds' pins can be released
+    val cases: Seq[(String, Int => DataFrame, Long, Long)] = Seq(
+      ("pageRank", k => Graph.pageRank(edges, iters = k), 2L, 22L),
+      ("personalizedPageRank", k => Graph.personalizedPageRank(edges, seeds, iters = k), 2L, 21L),
+      ("hits", k => Graph.hits(edges, iters = k), 8L, 44L),
+      ("labelPropagation", k => Graph.labelPropagation(edges, rounds = k), 3L, 19L))
+    val over = cases.map { case (name, run, perRound, total) =>
+      val jobs = (4 to 6).map(k => jobsDuring(run(k).count(): Unit))
+      (name, jobs, jobs.head <= total && jobs.sliding(2).forall(w => w(1) - w(0) <= perRound))
+    }.filterNot(_._3)
+    assert(over.isEmpty, over.map { case (n, j, _) => s"$n ran ${j.mkString("/")}" }
+      .mkString("", "; ", " jobs at 4/5/6 rounds"))
   }
 
   test("coOccurrenceEdges: distinct sorted pairs per group, cross-group dedup") {

@@ -36,6 +36,14 @@ class ProbeSpec extends AnyFunSuite with SparkSpec {
     assert(m.exists(g => (g.group(2).toDouble - r.wallS).abs < 0.001), r.line)
   }
 
+  test("pins= counts what a query leaves registered: labelPropagation keeps only the pin its result reads") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val r = Probe.measure(spark, "lpa",
+      () => graft.operators.Graph.labelPropagation(edges, rounds = 3))
+    assert(r.pins == 1 && r.line.endsWith(" pins=1"), r.line)
+  }
+
   test("console lines: split at each RAINSTORM token and measured through Console.run") {
     assert(Probe.consoleLines(Seq("RAINSTORM", "FILTER:\"a b\"", "AGGREGATE", "/d/in.txt", "3",
       "RAINSTORM FILTER:x TRANSFORM:uppercase /d/t.csv 1")) ==

@@ -16,6 +16,20 @@ trait SparkSpec { self: Suite =>
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The Spark jobs `body` starts, counted once the listener bus drains. */
+  def jobsDuring(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftListenerBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
