@@ -15,6 +15,9 @@ Exits non-zero when any run reports `correct: false` or prints no result.
 
 Usage: perf_ab.py --parent <dir> --change <dir> --workload <w> --seeds 11-20
                   [--out runs.json]
+
+`--out` is rewritten after every finished pair, so an interrupted A/B keeps
+the pairs it finished.
 """
 import argparse
 import json
@@ -65,10 +68,10 @@ def main():
                 print(f"seed {seed} {side}: " + ("no result" if res is None else
                       f"correct=false, failed {res['failed']}/{res['attempted']}"))
         runs.append(pair)
+        if args.out:
+            with open(args.out, "w") as f:
+                json.dump(runs, f, indent=1)
         print(f"seed {seed} done ({order[0]} first)", flush=True)
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump(runs, f, indent=1)
 
     ok = [r for r in runs if r["parent"] and r["change"]]
     if not ok:

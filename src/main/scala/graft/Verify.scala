@@ -12,9 +12,11 @@ import java.nio.file.{Files, Paths}
   * SparkContext (so the 32 cores are one pool), but per-thread SQLConf and
   * temp-view catalog, so the streaming gates' scoped
   * `spark.sql.shuffle.partitions` save/restore and any temp views never
-  * race across queries. Heavy families (the `q_stream_*` gates stage +
-  * drain real micro-batches) are queued FIRST so the long poles start
-  * early instead of straggling the tail. */
+  * race across queries. The workers also share one compiled-code cache
+  * (artifact isolation is off, see [[GraftSession]]): a class one worker
+  * compiled is not compiled again by another. Heavy families (the
+  * `q_stream_*` gates stage + drain real micro-batches) are queued FIRST
+  * so the long poles start early instead of straggling the tail. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Pin lifetimes for the iterative operators.
@@ -28,39 +28,51 @@ import org.apache.spark.sql.execution.LogicalRDD
   * keeps all of them. */
 object Pins {
 
-  /** Live census per scope tag — see [[scopedPersist]]. */
-  private val censuses =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Live censuses per (owning session, scope tag) — see [[scopedPersist]]. */
+  private val censuses = scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
 
   /** Scoped-lifetime persist for the shared CENSUSES behind the scoring
     * operators (knModel's bigram census, the trigram census, DSIR's
     * (id, bucket) counts): persist `df` MEMORY_AND_DISK and register it
-    * under `tag`; the PREVIOUS census registered under the same tag is
-    * unpersisted. A long-lived session calling the same entry point
-    * repeatedly thus holds AT MOST ONE cached census per scope — the
-    * bound the lazy `.persist` alone can't give (its blocks linger until
-    * the context cleaner happens to GC the dropped result).
+    * under `tag` for `df`'s session; the PREVIOUS census that session
+    * registered under the same tag is unpersisted. A long-lived session
+    * calling the same entry point repeatedly thus holds AT MOST ONE cached
+    * census per scope — the bound the lazy `.persist` alone can't give
+    * (its blocks linger until the context cleaner happens to GC the
+    * dropped result).
+    *
+    * Entries are per session because sessions run concurrently (Verify's
+    * `newSession()` workers): one session's call must not release a frame
+    * another session is still reading. And Spark's cache is keyed by plan
+    * and shared by every session, so unpersisting a frame drops the entry
+    * of every frame whose plan has the same result — the same corpus
+    * scored twice, by one session or by two. A superseded frame is
+    * therefore released only when no live entry's plan `sameResult`s it.
+    * An entry lives while its census is cached, and Spark's cache keeps
+    * the owning session reachable for that long anyway, so the map holds
+    * its sessions strongly: a finished session keeps its last census per
+    * tag until the application ends.
     *
     * Unlike a [[scope]]'s pins, a persist HAS lineage — a
-    * superseded census still referenced by an old returned frame simply
-    * recomputes on next use (slower, never wrong), so the replace is
-    * always safe. A re-registration with the SAME logical plan (same
-    * corpus scored twice) is a no-op replace: Spark's cache is keyed by
-    * plan, so unpersisting the old frame would evict the new one's entry
-    * too — `sameResult` guards it. */
-  def scopedPersist(tag: String, df: DataFrame): DataFrame = {
+    * superseded census still referenced by an old returned frame
+    * recomputes on its next use. A release while a query is still reading
+    * the frame races that read (blocks vanish mid-job), which is why a
+    * session never releases another session's frame. */
+  def scopedPersist(tag: String, df: DataFrame): DataFrame = censuses.synchronized {
     val pinned =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prev = censuses.put(tag, pinned)
-    if (prev != null &&
-        !prev.queryExecution.analyzed.sameResult(pinned.queryExecution.analyzed))
-      prev.unpersist(blocking = false): Unit
+    censuses.put((df.sparkSession, tag), pinned).foreach { prev =>
+      val plan = prev.queryExecution.analyzed
+      if (!censuses.values.exists(_.queryExecution.analyzed.sameResult(plan)))
+        prev.unpersist(blocking = false): Unit
+    }
     pinned
   }
 
-  /** The census currently registered under `tag` (spec introspection). */
-  private[graft] def scopedEntry(tag: String): Option[DataFrame] =
-    Option(censuses.get(tag))
+  /** The census `spark` currently has registered under `tag` (spec
+    * introspection). */
+  private[graft] def scopedEntry(spark: SparkSession, tag: String): Option[DataFrame] =
+    censuses.synchronized(censuses.get((spark, tag)))
 
   /** The pins of one [[scope]]: `pin(df)` is `df.localCheckpoint(eager)`
     * owned by the scope. */

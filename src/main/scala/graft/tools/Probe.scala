@@ -6,6 +6,7 @@ import graft.sources.Layouts
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
@@ -23,7 +24,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * It prints one line per query:
   * {{{
   * [probe] <name> <wall> s build_ms=… build_jobs=… jobs=… stages=… tasks=…
-  *   shuffle_kb=… exchanges=… reused=… scans=… dup_scans=… pins=…
+  *   shuffle_kb=… exchanges=… reused=… scans=… dup_scans=… pins=… compiles=…
   * }}}
   * `jobs` counts the execution's jobs; `stages`, `tasks` and `shuffle_kb`
   * cover construction and execution together (a skipped stage counts in
@@ -33,7 +34,13 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * another scan, i.e. places where a forked DataFrame re-reads its input.
   * `pins` counts the persistent RDDs the measured construction and run
   * left registered (a key-set difference): the checkpoint pins the
-  * returned plan reads, plus any pin an operator leaked.
+  * returned plan reads, plus any pin an operator leaked. `compiles` counts
+  * the Janino compiles of the measured construction and run (Spark's
+  * `CodegenMetrics`, JVM-wide): after the warm run a query whose generated
+  * code is reused, a fresh stream's or session's included, reads 0. AQE
+  * numbers whole-stage codegen classes in the order its query stages
+  * finish, so a plan whose concurrent stages finish in another order than
+  * in the warm run can compile again.
   * `--plans <dir>` also writes `<dir>/<name>.txt`: the formatted plan
   * before execution and again after it (the AQE final plan). With no query
   * names it prints the query/oracle inventory instead.
@@ -55,11 +62,11 @@ object Probe {
 
   final case class Reading(name: String, wallS: Double, buildMs: Long, buildJobs: Long,
       jobs: Long, stages: Long, tasks: Long, shuffleKb: Long,
-      exchanges: Int, reused: Int, scans: Int, dupScans: Int, pins: Int) {
+      exchanges: Int, reused: Int, scans: Int, dupScans: Int, pins: Int, compiles: Long) {
     def line: String =
       f"[probe] $name $wallS%.3f s build_ms=$buildMs build_jobs=$buildJobs jobs=$jobs " +
         s"stages=$stages tasks=$tasks shuffle_kb=$shuffleKb exchanges=$exchanges " +
-        s"reused=$reused scans=$scans dup_scans=$dupScans pins=$pins"
+        s"reused=$reused scans=$scans dup_scans=$dupScans pins=$pins compiles=$compiles"
   }
 
   private final class Census extends SparkListener {
@@ -94,6 +101,7 @@ object Probe {
     val census = new Census
     sc.addSparkListener(census)
     val registered = sc.getPersistentRDDs.keySet
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (df, buildMs, buildJobs) = try {
       val t0 = System.nanoTime()
       val df = build()
@@ -108,6 +116,7 @@ object Probe {
           df.queryExecution.explainString(FormattedMode))
       (df, buildMs, buildJobs)
     } finally sc.removeSparkListener(census)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
     val pins = (sc.getPersistentRDDs.keySet -- registered).size
     val nodes = Layouts.executedNodes(df.queryExecution.executedPlan)
     val scans = nodes.collect { case s: FileSourceScanExec => s }
@@ -122,7 +131,7 @@ object Probe {
     Reading(name, wallS, buildMs, buildJobs, census.jobs.get - buildJobs,
       census.stages.get, census.tasks.get, census.shuffleBytes.get / 1024,
       nodes.count(_.isInstanceOf[Exchange]), nodes.count(_.isInstanceOf[ReusedExchangeExec]),
-      scans.size, dupScans, pins)
+      scans.size, dupScans, pins, compiles)
   }
 
   /** The console lines in Probe's arguments: each `RAINSTORM` token starts

@@ -1593,30 +1593,30 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     // NEW perplexityScore call against a different reference
     val docs = Seq((1L, "a b c a b"), (2L, "b c d b c")).toDF("doc_id", "text")
     Curation.perplexityScore(docs, docs.filter($"doc_id" === 1L)).count(): Unit
-    val census1 = graft.ops.Pins.scopedEntry("curation.knModel").get
+    val census1 = graft.ops.Pins.scopedEntry(spark, "curation.knModel").get
     assert(census1.storageLevel != StorageLevel.NONE)
     Curation.perplexityScore(docs, docs.filter($"doc_id" === 2L)).count(): Unit
     assert(census1.storageLevel == StorageLevel.NONE,
       "previous knModel census survived a new entry-point call")
-    val census2 = graft.ops.Pins.scopedEntry("curation.knModel").get
+    val census2 = graft.ops.Pins.scopedEntry(spark, "curation.knModel").get
     assert(census2.storageLevel != StorageLevel.NONE)
     census2.unpersist(blocking = false)
 
     // same balance for the dsir census
     Curation.dsirLogRatios(docs, $"doc_id" === 1L, buckets = 16).count(): Unit
-    val d1 = graft.ops.Pins.scopedEntry("curation.dsir").get
+    val d1 = graft.ops.Pins.scopedEntry(spark, "curation.dsir").get
     Curation.dsirLogRatios(docs, $"doc_id" === 2L, buckets = 16).count(): Unit
     assert(d1.storageLevel == StorageLevel.NONE,
       "previous dsir census survived a new entry-point call")
-    graft.ops.Pins.scopedEntry("curation.dsir").get.unpersist(blocking = false)
+    graft.ops.Pins.scopedEntry(spark, "curation.dsir").get.unpersist(blocking = false)
 
     // and the trigram census
     Curation.perplexityScore3(docs, docs.filter($"doc_id" === 1L)).count(): Unit
-    val t1 = graft.ops.Pins.scopedEntry("curation.trigramCensus").get
+    val t1 = graft.ops.Pins.scopedEntry(spark, "curation.trigramCensus").get
     Curation.perplexityScore3(docs, docs.filter($"doc_id" === 2L)).count(): Unit
     assert(t1.storageLevel == StorageLevel.NONE,
       "previous trigram census survived a new entry-point call")
-    graft.ops.Pins.scopedEntry("curation.trigramCensus").get
+    graft.ops.Pins.scopedEntry(spark, "curation.trigramCensus").get
       .unpersist(blocking = false)
   }
 

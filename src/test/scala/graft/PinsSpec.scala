@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Classifier, Dedup, Graph, Similarity, Tokenizer}
+import graft.ops.Pins
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -9,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** `graft.ops.Pins.scope` owns every checkpoint pin of the iterative
-  * operators: a call leaves registered only the pins its result reads. */
+  * operators: a call leaves registered only the pins its result reads.
+  * `Pins.scopedPersist` never releases a census another session still has
+  * registered. */
 class PinsSpec extends AnyFunSuite with SparkSpec {
 
   private def registered: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -72,6 +75,33 @@ class PinsSpec extends AnyFunSuite with SparkSpec {
     val leaks = cases.map { case (name, call) => name -> leaked(call()) }.filter(_._2.nonEmpty)
     assert(leaks.isEmpty, leaks.map { case (n, ids) => s"$n: ${ids.size}" }.mkString(
       "pins left registered that the result does not read — ", ", ", ""))
+  }
+
+  test("scopedPersist: a session's census stays cached while another session supersedes its own") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.storage.StorageLevel
+    val other = spark.newSession()
+    def census(s: SparkSession, n: Long) = Pins.scopedPersist("spec.sessions",
+      s.range(n).groupBy((col("id") % 3).as("k")).count())
+    def cached(df: DataFrame) = df.storageLevel != StorageLevel.NONE
+    // different plans: a session's new census releases only its own old one
+    val a = census(spark, 10)
+    val b = census(other, 11)
+    assert(cached(a) && cached(b))
+    val b2 = census(other, 12)
+    assert(cached(a) && !cached(b) && cached(b2))
+    val a2 = census(spark, 13)
+    assert(!cached(a) && cached(a2))
+    // one plan in both sessions shares one cache entry: it stays until
+    // both sessions have moved on
+    val s = census(spark, 20)
+    val o = census(other, 20)
+    assert(cached(s) && cached(o) && !cached(a2) && !cached(b2))
+    val s2 = census(spark, 21)
+    assert(cached(o) && cached(s2))
+    val o2 = census(other, 22)
+    assert(!cached(o) && !cached(s) && cached(s2) && cached(o2))
+    Seq(s2, o2).foreach(_.unpersist(blocking = false))
   }
 
   private def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
