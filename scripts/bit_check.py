@@ -22,10 +22,27 @@ Usage:
     sbt -batch "runMain graft.Verify <sf_dir> <out_dir> [q ...]"
     python3 scripts/bit_check.py <sf_dir> <out_dir> [query ...]
 """
-import sys, os, json, glob
+import sys, os, json, glob, threading
 import duckdb
 import numpy as np
 import pyarrow.dataset as ds
+
+
+# An oracle still running after this many seconds is interrupted and counted
+# as a failure (ORACLE TIMEOUT), so one stalled oracle cannot block the rest.
+ORACLE_TIMEOUT_S = 300
+
+
+def run_oracle(con, sql):
+    """The oracle's Arrow table, or None if it ran past ORACLE_TIMEOUT_S."""
+    timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+    timer.start()
+    try:
+        return con.sql(sql).fetch_arrow_table()
+    except duckdb.InterruptException:
+        return None
+    finally:
+        timer.cancel()
 
 
 def canon_cell(v) -> str:
@@ -127,9 +144,13 @@ def main(sf_dir, out_dir, only):
             print(f"{name:26s} rows-only: {spark_tbl.num_rows} rows")
             continue
         try:
-            oracle_tbl = con.sql(oracles[name]).fetch_arrow_table()
+            oracle_tbl = run_oracle(con, oracles[name])
         except Exception as e:
             print(f"{name:26s} ORACLE SQL ERROR: {e}")
+            failures += 1
+            continue
+        if oracle_tbl is None:
+            print(f"{name:26s} ORACLE TIMEOUT after {ORACLE_TIMEOUT_S} s")
             failures += 1
             continue
         ok, msg = compare(name, spark_tbl, oracle_tbl)

@@ -1,5 +1,6 @@
 package graft
 import graft.ops.{OpCompiler, StreamOp}
+import graft.queries.Registry
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,297 +12,17 @@ import org.apache.spark.sql.types.LongType
   * q_dedup_embed) are excluded: they exist as correctness oracles for the
   * LSH scale paths, which ARE benchmarked. */
 object Bench {
-  /** Scale-appropriate headliners (every one holds at 100TB-style plans:
-    * keyed shuffles, broadcasts, LSH bucketing — no all-pairs joins). */
-  val headliners: Seq[String] = Seq(
-    "q1_agg", "q3_join", "q5_join", "q6_agg", "q_semi_join", "q_anti_join",
-    "q_rollup", "q_cube", "q_pivot", "q_user_features", "q_norm_rank", "q_range_join", "q_full_outer",
-    "q_histogram",
-    "q_funnel", "q_funnel_conv", "q_retention",
-    "q_asof", "q_asof_iv", "q_sessionize", "q_skew_join", "q_skew_distinct",
-    "q_events_window", "q_events_sliding", "q_events_sessions", "q_events_props",
-    "q_running_count", "q_running_sum", "q_pipeline_training",
-    "q_filter", "q_column_filter", "q_split_words",
-    "q_lang_id", "q_lang_id_ngram", "q_quality", "q_token_count", "q_fingerprint", "q_sketches",
-    // document-quality suites (fused one-pass expressions) and the composed
-    // C4 -> Gopher pipeline — all pure scan-bound
-    "q_gopher", "q_c4_filter", "q_pipeline_quality",
-    "q_redact", "q_repetition", "q_unicode_norm", "q_compress_signal", "q_decontam", "q_split_decontam",
-    "q_ngram_freq",
-    "q_split_assign", "q_token_budget", "q_mixture_up", "q_mixture_target", "q_pack",
-    "q_chunk", "q_shuffle_order", "q_sample_n_global", "q_length_batches", "q_pack_text",
-    "q_mixture_quality",
-    "q_pipeline_curation", "q_pipeline_chunks",
-    "q_profile_approx",
-    "q_quantiles", "q_quantiles_group", "q_quality_cut", "q_clip", "q_standardize",
-    "q_standardize_incr", "q_minmax_scale", "q_top_global", "q_sample_n", "q_skew_cap",
-    "q_dedup_exact", "q_dedup_incr", "q_dedup_report", "q_dedup_spans", "q_dedup_rebuild",
-    "q_dedup_minhash",
-    "q_dedup_simhash", "q_dedup_embed_lsh", "q_dedup_ngram_capped",
-    // the iterative keyed-join loop (label propagation + min-id survivors):
-    // per-round localCheckpoint + one changed-count job each — the one
-    // operator family whose cost is rounds × edges, benched so regressions
-    // in the loop (plan growth, extra jobs per round) surface here
-    "q_dedup_clusters", "q_dedup_survivors",
-    // semantic (embedding-space) curation: token rarity is a corpus-join
-    // scoring pass; cluster-assign is the scan-local SemDeDup partitioner;
-    // the dedup itself adds the within-cluster pair join; bm25 is the
-    // postings-shaped sparse-retrieval plan
-    "q_token_rarity", "q_bigram_lm", "q_bigram_lm_incr", "q_sample_weighted", "q_zorder_key",
-    // r11 batch 2: sequence analytics (one lead-window shuffle), the BPE
-    // trainer core (distinct-word table), bloom-screened decontamination,
-    // the PSI drift gate, weighted top-n sampling
-    "q_event_transitions", "q_event_transitions_gap", "q_bpe_pairs", "q_bpe_merge",
-    "q_decontam_bloom", "q_psi", "q_sample_n_weighted",
-    // r11 batch 3: blocked-levenshtein fuzzy pairs (capped Σblock² join),
-    // the fixed-point k-means M-step (scan-local assign + k·dims agg)
-    "q_dedup_fuzzy", "q_kmeans_step",
-    // sketch algebra: corpus-overlap theta sketches, mergeable HLL profiles
-    "q_corpus_overlap", "q_profile_sketch",
-    "q_cluster_assign", "q_quantize", "q_dedup_semantic",
-    "q_dedup_semantic_incr", "q_bm25", "q_hybrid_rank",
-    "q_sim_topk", "q_sim_ann", "q_sim_ivf", "q_sim_pq", "q_sim_ivfpq",
-    "q_ann_recall",
-    // all four media stages: resize + features carry the real per-row
-    // decode/compute cost under RealCodec — the two the fused stage exists
-    // to amortize; q_media_real is the fused stage under the REAL
-    // javax.imageio codec (encode + full decode + raster hash per row)
-    "q_media_decode", "q_media_frames", "q_media_resize", "q_media_features",
-    "q_media_real",
-    // audio twin of q_media_real: WAV synth + header decode + PCM RMS
-    // envelope, all partition-local under the JDK sound API
-    "q_media_audio",
-    // r11 batch 4: recency/alerting signals — decay is one partial-agg
-    // user-keyed shuffle; attribution rides the single user-keyed window
-    // sort; anomaly windows run over pre-aggregated bucket rows
-    "q_decay_score", "q_attribution", "q_anomaly",
-    // char-diversity profile is a fused one-pass scan expression; tfidf is
-    // the one-keyed-shuffle postings plan with ReuseExchange dfs
-    "q_char_entropy", "q_tfidf_terms",
-    // robust scale: broadcast quartiles back onto the scan; curriculum:
-    // banded two-phase prefix count (the withShuffleOrder machinery)
-    "q_robust_scale", "q_curriculum",
-    // experiment readout (per-user collapse + 2-row chi-square), calendar
-    // densify (spine join over pre-aggregated buckets), rolling distinct
-    // actives (collapsed user-day x window explode), vocab coverage
-    // (vocab-sized prefix sums)
-    "q_ab_lift", "q_resample", "q_rolling_active", "q_vocab_coverage",
-    // distributed exact quantiles: (group, value) histogram + prefix ranks
-    "q_quantiles_dist",
-    // contrastive mining: md5-ring negatives (prefix count + one pos-keyed
-    // join); hard negatives ride the sim_topk broadcast-BNLJ contract
-    "q_neg_samples", "q_hard_neg",
-    // packing audit + the composed contrastive-prep pipeline (join ->
-    // SemDeDup -> ring negatives in one plan)
-    "q_pack_stats", "q_pipeline_pairs",
-    // PMI collocations: scan-local pair generation + one pair-count shuffle
-    "q_collocations",
-    // user growth (first-day histogram + prefix sum), MAD (two distributed
-    // exact-quantile passes)
-    "q_user_growth", "q_mad",
-    // association rules: sessionize window + sessions x |types| baskets
-    "q_assoc_rules",
-    // percentile rank vs reference: the union-prefix searchsorted
-    "q_pct_rank",
-    // ingest-vs-corpus near-dup: cross-side postings join
-    "q_dedup_ngram_incr",
-    // Pareto skyline: two-phase local-dominance filter
-    "q_skyline",
-    // arbitrary grouping sets (single-shuffle Expand, like rollup/cube)
-    "q_grouping_sets",
-    // linear attribution (banded user-keyed join + conv-keyed split),
-    // per-group mode (histogram + top-1 window)
-    "q_attr_linear", "q_mode",
-    // quantile normalization: three prefix passes + two pos-keyed joins
-    "q_quantile_norm",
-    // BPE encode readout: distinct-word fold + one word-keyed join
-    "q_bpe_encode",
-    // per-source calibration onto the shared reference (no per-group window)
-    "q_quantile_norm_group",
-    // tf-weighted cosine pairs: integer-dot postings join
-    "q_dedup_cosine",
-    // r11 batch 5: oriented-wedge triangle count (O(m^1.5) wedge space),
-    // SCD2 run segmentation (one user-keyed exchange), max_by changelog
-    // compaction (no window sort), MG-pruned exact heavy hitters, exact
-    // integer trend slopes
-    "q_triangles", "q_scd2", "q_cdc_latest", "q_heavy_hitters", "q_trend",
-    // OHLC bars (partial-agg min_by/max_by), readability (pure scan).
-    // q_kcore stays gate-only: ~4 s of pin-dominated peel rounds would be
-    // the slowest headliner while the iterative-keyed-loop family's
-    // regression signal is already carried by q_dedup_clusters.
-    "q_ohlc", "q_readability",
-    // LPA (3 vote rounds over the sparse basket graph) + the SCD2
-    // point-in-time read + z-normalized subsequence pattern search
-    "q_lpa", "q_scd2_asof", "q_ts_pattern",
-    // r12: ExactSubstr span removal (md5-only window census), CCNet
-    // boilerplate line strip, MMR greedy diversity re-rank. The streaming
-    // gates and q_ann_recall_refined stay gate-only: their cost is the
-    // stream lifecycle / 20 tiny training jobs, not a plan this bench
-    // should track.
-    "q_dedup_substr", "q_boilerplate", "q_mmr_rerank",
-    // fused 11-column feature export: ONE documents scan where separate
-    // signal queries pay four
-    "q_doc_features",
-    // RM3 = two bm25 plans + a broadcast feedback term census; temperature
-    // rebalance + group split are zero-shuffle scan predicates.
-    // q_dedup_recall stays gate-only: its exact side is the quadratic
-    // oracle family the bench excludes by policy.
-    "q_bm25_rm3", "q_temp_sample", "q_split_group",
-    // unigram-LM trainer (vocab-table EM, corpus shuffle paid once) +
-    // encode readout; hilbert key = one codegen'd scan; corr stats = one
-    // scan into 60 decimal partial aggs
-    "q_unigram_train", "q_unigram_encode", "q_hilbert_key", "q_corr_stats",
-    // r13: the training-shard export END-TO-END (estimator agg + shard
-    // exchange + JSONL write + shard readback) — the one headliner with
-    // real write I/O, which is exactly what an export's number should
-    // carry; the model-based quality filter (md5-bucket BoW margin, pure
-    // scan); span-level decontamination (reference-window semi-join over
-    // the substr machinery)
-    "q_export_shards", "q_quality_model", "q_decontam_spans",
-    // the composed filter->split->export capstone (one plan + the write)
-    "q_pipeline_export",
-    // r13 batch 2: WordPiece greedy encode (distinct-word fold + one
-    // word-keyed join), JL ±1 sign projection (pure integer scan), and
-    // the 3-epoch perceptron trainer (postings pinned once, per-epoch
-    // broadcast-weights join + two partial aggs)
-    "q_wordpiece_encode", "q_rand_project", "q_train_perceptron",
-    // Kneser-Ney sufficient stats (one bigram-keyed census, model-table
-    // joins after) + the markup-strip scan (pure regexp chain)
-    "q_bigram_kn", "q_strip_markup",
-    // CM sketch build+probe (one keyed partial agg, sketch broadcast),
-    // the k-center coreset loop (k-1 broadcast-center scans), URL
-    // extraction/canonicalization (pure regexp scan)
-    "q_countmin", "q_kcenter", "q_urls",
-    // weighted quantiles: histogram agg + per-group prefix window
-    "q_quantile_weighted",
-    // the composed web-ingest capstone (strip -> filter -> dedup -> split)
-    "q_pipeline_web",
-    // WordPiece-objective merge training (6 rounds over the vocab table)
-    "q_wordpiece_train",
-    // per-domain cap: first-URL domain scan + one domain-keyed window
-    "q_domain_cap",
-    // blocklist safety filter: pure token-membership scan
-    "q_blocklist",
-    // code-switch audit: chunk explode + two fused langid scans + rollup
-    "q_lang_mix",
-    // r14: KN perplexity filter (bigram census paid once, model-table
-    // joins after) — same- and cross-corpus model paths
-    "q_perplexity_filter", "q_perplexity_cross",
-    // DSIR importance weights: one tokenize scan, 256-row broadcast model
-    "q_dsir_weights",
-    // T5 span corruption: scan-local mask census + island window + two
-    // sorted-collect rebuilds
-    "q_span_corrupt",
-    // pure scan expressions: Luhn HOF checksum, replace()-count code
-    // router; snake sharding = one global-rank window
-    "q_pii_luhn", "q_code_detect", "q_shard_balance",
-    // prototype pruning: quantized centroid aggs + broadcast fold + one
-    // per-cell window
-    "q_proto_prune",
-    // real-decode perceptual hashing over the synthesized PNG set
-    "q_media_dhash",
-    // Holt smoothing: one (key, day) collapse + one key-keyed sorted fold
-    "q_holt_forecast",
-    // r15: Holt-Winters adds the p-slot seasonal array to the same fold
-    "q_holt_winters",
-    // bitext scale paths (post-de-broadcast): salted bare-id bucket/cell
-    // joins + id-keyed vector rejoins + the margin chain; r16 adds the
-    // PQ-ADC shortlist path (co-cell pairs ranked by code lookups)
-    "q_bitext_lsh", "q_bitext_ivf", "q_bitext_pq",
-    // ROUGE-2: two gram censuses + one (id, gram)-keyed clipped join
-    "q_rouge2",
-    // native Mod97Sum scan; ORC and Avro write+read round trips
-    "q_pii_iban", "q_source_orc", "q_source_avro",
-    // Benford two-digit: one scan to a <=90-row agg
-    "q_benford2",
-    // cross-modal capstone: real-codec dedup + cosine gate + SemDeDup +
-    // shard export/readback in one plan
-    "q_pipeline_multimodal",
-    // r16: exact prefix-filtered similarity join (flat rank-postings
-    // census, candidate-broadcast verify)
-    "q_dedup_ppjoin", "q_dedup_ppjoin_incr",
-    // r16: KMV distinct sketch (one-pass mergeable agg) + sketch algebra
-    "q_kmv_distinct", "q_kmv_setops",
-    // r16: Jaro-Winkler record linkage (native byte-based expression)
-    "q_link_jw",
-    // r16: XML round trip; scaling-law diagnostics; TextRank keywords
-    "q_source_xml", "q_zipf", "q_heaps", "q_gini", "q_textrank",
-    // r16: PCA — native CovMoments census + captured-component projection
-    "q_pca_cov", "q_pca_project",
-    // r16: exact two-sample tests (histogram + one prefix pass each)
-    "q_ks_drift", "q_mwu",
-    // r17: categorical chi-square drift (category histogram + ordered
-    // fold) + Jensen-Shannon corpus divergence (one shingle-keyed
-    // histogram + order-free decimal entropy sums)
-    "q_chi2_drift", "q_jsd",
-    // r17: exact Spearman (two histogram prefix rank passes + one moment agg)
-    "q_spearman",
-    // r17: G-test likelihood-ratio drift (chi2 histogram, order-free sum)
-    "q_gtest",
-    // r17: Wasserstein-1 drift (KS prefix machinery + one rank self-join),
-    // Theil length inequality (two aggs), mutual information (one
-    // contingency agg + broadcast marginals)
-    "q_w1_drift", "q_theil", "q_mutual_info",
-    // r17: CUPED variance-reduced A/B (one user-keyed agg) + daily ACF
-    // (day-spine self-join, never data-sized past the first agg)
-    "q_cuped", "q_acf",
-    // r17: HITS (20 integer half-steps, one keyed join + 1-row agg each)
-    "q_hits",
-    // r17: SQ8 scalar-quantized search (d-row census, scan-local ADC)
-    "q_sim_sq8",
-    // r17: robust means (histogram + prefix), per-day mix entropy
-    "q_trimmed", "q_mix_entropy",
-    // r17: RBO agreement readout of the SQ8 tier vs exact L2
-    "q_rbo_sq8",
-    // r17: HHI concentration (two aggs), view->purchase CCF (day spine)
-    "q_hhi", "q_ccf",
-    // r17: Kendall tau-b (broadcast cell-pair join) + Mann-Kendall trend
-    "q_kendall", "q_mann_kendall",
-    // r17: funnel time-to-convert quantiles (funnelTimes -> quantile
-    // machinery in one plan)
-    "q_funnel_latency",
-    // r17: IVF-SQ8 composed tier (cell-pruned reconstruction scan)
-    "q_sim_ivfsq8",
-    // r17: Hill tail index + Lorenz deciles (histogram + prefix each)
-    "q_hill", "q_lorenz",
-    // r17: per-type Fano burstiness + EB-shrunk per-source rates
-    "q_dispersion", "q_eb_shrink",
-    // r17: SRM hygiene gate (distinct-unit collapse + 2-row agg)
-    "q_srm",
-    // r18: sorted-neighborhood linkage (two-phase rank + bucket join),
-    // contiguous triple mining (one lead-window shuffle + partial
-    // collapse), direct standardization (user-keyed agg + cell rollup),
-    // positional phrase search (vocabulary-pruned co-partitioned joins)
-    "q_link_snm", "q_seq3", "q_strat_adjust", "q_phrase",
-    // r18: Theil-Sen robust slope (calendar-bounded pair join + the
-    // exact-quantile histogram), binary-segmentation changepoint (one
-    // two-phase prefix pass + 1-row argmax), nDCG/MRR eval of the SQ8
-    // tier (queries-sized joins over the two top-10 frames, the
-    // q_rbo_sq8 budget)
-    "q_theil_sen", "q_changepoint", "q_rankeval_sq8",
-    // r18: VAD energy segmentation (one partition-local decode pass, no
-    // shuffle), interval-overlap join (chunk-bucketed, occupancy^2 per
-    // chunk), k-anonymity census (one keyed partial agg)
-    "q_media_vad", "q_interval_join", "q_k_anon",
-    // r18: personalized PageRank (the pageRank loop + a pinned seed flag)
-    "q_ppr")
-    // q_calibration stays gate-only: it re-trains the 3-epoch integer
-    // perceptron (the q_train_margins cost) before its 10-row readout —
-    // benching it would time the trainer twice under another name.
-    // q_bitext_pq_seeds stays gate-only: agreement readout containing
-    // the brute compare by construction (the q_bitext_recall class).
-    // q_bitext_margin stays gate-only: the brute |X|x|Y| pair scan is the
-    // quadratic-baseline family the bench excludes by policy (the scale
-    // path composes the margin math over LSH/IVF candidates); the
-    // q_bitext_*recall*/_trained agreement READOUTS stay gate-only too —
-    // each contains the brute compare by construction.
+  /** The queries flagged `bench = true` in their `Q` declarations, in
+    * registry order: each holds at 100TB-style plans (keyed shuffles,
+    * broadcasts, LSH bucketing). Also left out: the streaming gates (their
+    * cost is the stream lifecycle, timed below as streams), agreement
+    * readouts that contain a brute-force compare, and queries that would
+    * time another headliner's work again under a new name. */
+  val headliners: Seq[String] = Registry.headliners
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.local(cpus.toInt, "graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-bench")
     // Force FULL evaluation of the query's own plan: df.count() plans an
     // Aggregate needing zero columns, so the optimizer prunes every
     // projection — a pure-projection query (redact, fingerprints, quality)

@@ -72,4 +72,15 @@ object GraftSession {
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
+
+  /** [[local]] on `SPARK_GRAFT_CPUS` cores (default: every core of the
+    * host), logging at WARN: the session of Verify, Bench, Probe and the
+    * other measuring mains. */
+  def fromEnv(appName: String): SparkSession = {
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = local(cores.toInt, appName)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,10928 +1,23 @@
 package graft
 
-import graft.functions.{Sketches, TextFunctions}
-import graft.operators.{Curation, Dedup, Multimodal, Similarity}
-import graft.ops.{OpCompiler, Pipeline, RunningCount, StreamOp}
+import graft.queries.Registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (the reference's FILTER / COLUMN_FILTER / TRANSFORM family /
-  * AGGREGATE running count, Operators.java:13-19) plus the scale-path
-  * extension operators (dedup, similarity search, multimodal, text analysis).
-  *
-  * Every SQL-expressible query has a DuckDB oracle in [[oracleSql]]; numeric
-  * outputs are designed for bit-exact cross-engine agreement: sums go through
-  * exact DECIMAL accumulation (the source data carries <=2 decimal places),
-  * divisions/cosines use fixed sequential left-fold accumulation (Spark
-  * `aggregate` HOF == DuckDB `list_sum`), and no floating round() is relied
-  * on anywhere a hash must match.
+/** Driver contract: every declared query by name, with its DuckDB oracle
+  * SQL, covering each implemented operator from SURVEY.md §2 (the
+  * reference's FILTER / COLUMN_FILTER / TRANSFORM family / AGGREGATE running
+  * count, Operators.java:13-19) plus the scale-path extension operators
+  * (dedup, similarity search, multimodal, text analysis). Each query is
+  * declared once, as a `Q` in its family file under `graft/queries`; these
+  * are views of [[graft.queries.Registry]].
   */
 object SparkEntry {
-
-  // routes through Tables.table for the schema-by-path cache (r18): the
-  // bare reader's eager schema inference cost ~80 ms per construction —
-  // the dominant fixed cost of every cheap query in the bench tail
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.Tables.table(s, dir, name)
-
-  /** events with TIMESTAMP(NANOS) `ts` converted to TimestampType. */
-  private def ev(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.events(s, dir)
-
-  /** Hash-safe readout shim: cast every DECIMAL output column to STRING
-    * (exact digits — values and column order unchanged, only the declared
-    * type). The r19 driver-gate forensics: all 22 r18 hash_match failures
-    * were EXACTLY the decimal-emitting queries and every decimal-free
-    * query passed (see OPTIMIZATION_r19.md), while full bit-exact local
-    * comparison (scripts/bit_check.py) found zero value differences — the
-    * driver's hasher canonicalizes DECIMAL columns differently on its two
-    * read paths. q_corr_stats proved the convention: its decimal(38,0)
-    * moment sums ship as strings and pass. Oracle SQL for each wrapped
-    * query casts the same columns to VARCHAR (scale-0 decimals print as
-    * plain signed digits in both engines). */
-  private def strDecimals(df: DataFrame): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.DecimalType =>
-          col(f.name).cast("string").as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    df.select(cols.toSeq: _*)
-  }
-
-  /** Oracle-side twin of [[strDecimals]]: wrap an oracle SQL in an outer
-    * SELECT that re-emits every column in order, casting the ones marked
-    * `name*` in `colspec` to VARCHAR (DuckDB prints scale-0 decimals as
-    * the same plain signed digits Spark's string cast yields). */
-  private def hsOracle(colspec: String)(sql: String): String = {
-    val items = colspec.split(",").map(_.trim).map { c =>
-      if (c.endsWith("*")) {
-        val n = c.dropRight(1)
-        s"CAST($n AS VARCHAR) AS $n"
-      } else c
-    }
-    s"SELECT ${items.mkString(", ")} FROM (\n$sql\n) __hs"
-  }
-
-  /** Stage `log` as `n` time-ordered single-file parquet segments in
-    * `base/in` for file-source replay: segment names AND modification
-    * times both increase in segment order (the two orderings
-    * FileStreamSource may use), so `maxFilesPerTrigger=1` replays the log
-    * in `orderCols` order as n micro-batches — the streaming-gate input
-    * shape. `extraLast` appends one more segment after the data (a
-    * watermark-flush sentinel), staged through `base/tmp`. Returns the
-    * input dir. */
-  private def stageTimeSegments(
-      log: DataFrame,
-      n: Int,
-      orderCols: Seq[org.apache.spark.sql.Column],
-      extraLast: Option[DataFrame],
-      base: java.nio.file.Path): String = {
-    import java.nio.file.Files
-    import org.apache.spark.sql.expressions.Window
-    val inDir = Files.createDirectory(base.resolve("in"))
-    // ONE partitioned write stages every segment + the sentinel (r19):
-    // the previous shape paid one repartition(1) write JOB per segment
-    // plus an eager pin of the global ntile — n+2 driver-blocking jobs
-    // per gate construction, times ~30 gates in the bench. Hash
-    // repartition by __b puts each segment's rows in exactly one task
-    // (one part file per directory); sortWithinPartitions restores the
-    // ntile sort order the per-segment writes used to inherit (orderCols
-    // are unique per gate, so the order is deterministic); mtimes are
-    // stamped explicitly in segment order as before.
-    val bucketed = log.withColumn("__b",
-      ntile(n).over(Window.orderBy(orderCols: _*)))
-    val all = extraLast match {
-      case Some(df) => bucketed.unionByName(df.withColumn("__b", lit(n + 1)))
-      case None => bucketed
-    }
-    val tmp = base.resolve("tmp")
-    all.repartition(col("__b")).sortWithinPartitions(col("__b") +: orderCols: _*)
-      .write.partitionBy("__b").mode("overwrite").parquet(tmp.toString)
-    val segs = (1 to n) ++ extraLast.map(_ => n + 1).toSeq
-    segs.foreach { b =>
-      val part = tmp.resolve(s"__b=$b").toFile.listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dst = inDir.resolve(f"seg-$b%03d.parquet")
-      Files.move(part.toPath, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + b * 60000L))
-    }
-    inDir.toString
-  }
-
-  /** What a stream gate drains into: the checkpointed parquet file sink
-    * over the frame `build` makes from a FACTORY of file-stream sources
-    * (the interval-join gates open two), or
-    * [[graft.streaming.StreamingPipeline.startScoredParquetSink]] applying
-    * the batch relation `score` to each arriving micro-batch (the shape
-    * for stream-static scoring whose per-doc agg would force update mode). */
-  private sealed trait GateSink
-  private final case class FileSink(build: (() => DataFrame) => DataFrame) extends GateSink
-  private final case class ScoredSink(score: DataFrame => DataFrame) extends GateSink
-
-  /** Shared streaming-gate drain (every q_stream_*_gate): stage `staged`
-    * as 4 in-order segments (+ optional sentinel) in a fresh dir under
-    * [[TempDirs.root]], drain them through `sink` under 8 state-store
-    * partitions (these drains hold few keys; 32 stores is pure per-store
-    * open/load/commit overhead — the Bench discipline) plus `confs`, and
-    * return the materialized sink with the operational LATE-DATA readout:
-    * `numRowsDroppedByWatermark` summed over every micro-batch's state
-    * operators, the metric a production watermark pipeline alarms on (a
-    * caller plants late rows via `extraLast`). A scored sink's `_batch_id`
-    * — its exactly-once per-batch overwrite key — is provenance, not part
-    * of the scored relation, and is dropped. The staged input and the
-    * checkpoint are deleted when the drain ends; the sink dir stays for
-    * the returned frame's lazy reads and goes with the root at exit. */
-  private def streamGate(
-      s: SparkSession,
-      staged: DataFrame,
-      orderCols: Seq[org.apache.spark.sql.Column],
-      extraLast: Option[DataFrame] = None,
-      confs: Map[String, String] = Map.empty)(
-      sink: GateSink): (DataFrame, Long) = {
-    val base = TempDirs.fresh("graft_stream_gate")
-    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val overrides = confs + ("spark.sql.shuffle.partitions" -> "8")
-    val prev = overrides.keys.map(k => k -> s.conf.getOption(k)).toMap
-    val dropped = try {
-      val inDir = stageTimeSegments(staged, 4, orderCols, extraLast, base)
-      val schema = s.read.parquet(inDir).schema
-      def src(): DataFrame = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      overrides.foreach { case (k, v) => s.conf.set(k, v) }
-      val q = sink match {
-        case FileSink(build) =>
-          graft.streaming.StreamingPipeline.startFileSink(build(() => src()), out, ckpt)
-        case ScoredSink(score) =>
-          graft.streaming.StreamingPipeline.startScoredParquetSink(src(), score, out, ckpt)
-      }
-      q.awaitTermination()
-      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-      Seq("in", "tmp", "ckpt").foreach(d => TempDirs.delete(base.resolve(d)))
-    }
-    val frame = s.read.parquet(out)
-    (sink match {
-      case _: ScoredSink => frame.drop("_batch_id")
-      case _: FileSink => frame
-    }, dropped)
-  }
-
-  /** JVM-exit cleanup for gate temp dirs: registered once per distinct
-    * path (idempotent under the bench's 3-5 rebuilds per run), deletes
-    * the tree on shutdown so repeated bench JVMs don't accrete one
-    * corpus-sized export per pid into java.io.tmpdir. */
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def registerTempDirCleanup(path: String): Unit =
-    if (cleanupRegistered.add(path)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
-    }
-
-  /** Shared export-gate back half: write `docs` (doc_id, text) as
-    * deterministic JSONL shards into ONE pid-scoped dir (overwritten per
-    * invocation — bench passes re-build these queries 3-5× per run, and
-    * a fresh temp dir each time would accrete corpus copies until /tmp
-    * fills) and read the WRITTEN shards back, so serialization fidelity,
-    * layout, and the shard derivation all sit inside the oracle compare. */
-  private def exportAndReadShards(
-      s: SparkSession,
-      docs: DataFrame,
-      dirName: String,
-      maxShardBytes: Long): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val out = s"${System.getProperty("java.io.tmpdir")}/$dirName" +
-      ProcessHandle.current().pid()
-    // pid scoping prevents cross-JVM collisions and the per-invocation
-    // overwrite prevents within-JVM accretion; the shutdown hook closes
-    // the remaining leak (one corpus-sized dir left per bench JVM run)
-    registerTempDirCleanup(out)
-    graft.sources.Sinks.exportShardedJsonl(docs, out, "doc_id", maxShardBytes)
-    s.read
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("shard", LongType))))
-      .json(out)
-      .select(col("doc_id"), col("text"), col("shard"))
-  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** Deterministic decoration for the q_gopher gate: the synthetic corpus
-    * has no bullets/symbols/numerals, so each rule's trigger is planted on
-    * a doc_id schedule — identically in the oracle SQL (q_redact's
-    * injection pattern). %23: the whole doc becomes one bullet line
-    * (bullet-fraction rule); %9: a '#' symbol; %6: trailing '...'
-    * (symbol + ellipsis-line rules); %17: numeric tokens (alpha-fraction
-    * rule). */
-  private def gopherDecoratedText: org.apache.spark.sql.Column = concat(
-    when(col("doc_id") % 23 === 0, lit("- ")).otherwise(lit("")),
-    when(col("doc_id") % 9 === 0, lit("# ")).otherwise(lit("")),
-    col("text"),
-    when(col("doc_id") % 6 === 0, lit(" ...")).otherwise(lit("")),
-    when(col("doc_id") % 17 === 0,
-      lit(" 123 456 789 000 111 222 333 444 555 666")).otherwise(lit("")))
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Registry.queries
 
-  /** Deterministic line structure for the q_c4_filter gate: sentence breaks
-    * after 'table'/'row' turn the single-line synthetic docs into
-    * multi-line pages whose last line lacks terminal punctuation; page- and
-    * line-level triggers (lorem ipsum, a too-short line, a javascript
-    * line, curly braces) planted on a doc_id schedule, identically in the
-    * oracle SQL. */
-  private def c4DerivedText: org.apache.spark.sql.Column = concat(
-    when(col("doc_id") % 7 === 0,
-      lit("lorem ipsum filler text here.\n")).otherwise(lit("")),
-    when(col("doc_id") % 11 === 0, lit("too short.\n")).otherwise(lit("")),
-    when(col("doc_id") % 13 === 0,
-      lit("this page uses javascript heavily.\n")).otherwise(lit("")),
-    regexp_replace(col("text"), "(table|row) ", "$1.\n"),
-    when(col("doc_id") % 5 === 0,
-      lit("\nif (x) { return; }")).otherwise(lit("")))
-
-  /** Exact decimal sum of a <=2dp double column, returned as double. */
-  private def dsum(c: org.apache.spark.sql.Column, as: String) =
-    sum(c.cast("decimal(20,4)")).cast("double").as(as)
-
-  /** Exact decimal sum of a computed per-row double: price(2dp)*(1-disc)(2dp)
-    * is exactly a 4dp value, and rounding the double product at 4dp is
-    * unambiguous in every engine (9-10 significant digits, far inside double
-    * precision). Rounding at 8dp sat at the 13-14-significant-digit edge and
-    * flipped a row's last decimal between engines at sf0.1. */
-  private def dsum4(c: org.apache.spark.sql.Column, as: String) =
-    sum(c.cast("decimal(24,4)")).cast("double").as(as)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---------------------------------------------------------------------
-    // Reference operator surface (SURVEY.md §2.1), driven through the parsed
-    // op pipeline exactly as the reference's console would submit them.
-    // ---------------------------------------------------------------------
-
-    // O1 FILTER — case-insensitive substring match on the line.
-    "q_filter" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      Pipeline.fromDescriptors(Seq("FILTER:window"),
-        OpCompiler.Ctx(Some("text"), Seq("doc_id")))(docs)
-    }),
-
-    // O2 COLUMN_FILTER + O7 select — exact trimmed equality on one column.
-    "q_column_filter" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      Pipeline.fromDescriptors(
-        Seq("COLUMN_FILTER:l_returnflag:R",
-          "TRANSFORM:select:l_orderkey,l_linenumber,l_returnflag"),
-        OpCompiler.Ctx(None, Seq("l_orderkey", "l_linenumber")))(li)
-    }),
-
-    // O3 TRANSFORM:uppercase — applied to every string column.
-    "q_transform_upper" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"), col("lang"), col("source"))
-      Pipeline.fromDescriptors(Seq("TRANSFORM:uppercase"),
-        OpCompiler.Ctx(None, Seq("doc_id")))(docs)
-    }),
-
-    // O4 TRANSFORM:lowercase.
-    "q_transform_lower" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("source"))
-      Pipeline.fromDescriptors(Seq("TRANSFORM:lowercase"),
-        OpCompiler.Ctx(None, Seq("doc_id")))(docs)
-    }),
-
-    // O5 TRANSFORM:trim (input padded so the trim is observable).
-    "q_transform_trim" -> ((s, dir) => {
-      val padded = t(s, dir, "part").select(col("p_partkey"),
-        concat(lit("  "), col("p_name"), lit(" ")).as("p_name"))
-      Pipeline.fromDescriptors(Seq("TRANSFORM:trim"),
-        OpCompiler.Ctx(None, Seq("p_partkey")))(padded)
-    }),
-
-    // O8 FILTERED_TRANSFORM — fused filter->map; Catalyst fuses the chain
-    // into one stage (the reference hand-fused it, Operators.java:87-91).
-    "q_filtered_transform" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // the FUSED descriptor (Operators.java:87-91) — semantically identical
-      // to the FILTER + TRANSFORM chain, and Catalyst compiles both to the
-      // same two nodes
-      Pipeline.fromDescriptors(Seq("FILTERED_TRANSFORM:table:uppercase"),
-        OpCompiler.Ctx(Some("text"), Seq("doc_id")))(docs)
-    }),
-
-    // O6 TRANSFORM:splitintowords — the reference's generator op.
-    "q_split_words" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-        .select(col("doc_id"), col("text"))
-      Pipeline.fromDescriptors(Seq("TRANSFORM:splitintowords"),
-        OpCompiler.Ctx(Some("text"), Seq("doc_id")))(docs)
-        .select(col("doc_id"), col("__graft_word_pos").cast("long").as("pos"), col("word"))
-    }),
-
-    // O7 TRANSFORM:select — projection.
-    "q_select" -> ((s, dir) => {
-      Pipeline.fromDescriptors(Seq("TRANSFORM:select:p_partkey,p_name"),
-        OpCompiler.Ctx(None, Seq("p_partkey")))(t(s, dir, "part"))
-    }),
-
-    // O9 AGGREGATE — scalable global running count (1,2,3,... per row).
-    "q_running_count" -> ((s, dir) => {
-      Pipeline.fromDescriptors(Seq("AGGREGATE"),
-        OpCompiler.Ctx(None, Seq("event_id")))(ev(s, dir).select("event_id"))
-    }),
-
-    // AGGREGATE:sum:field — the reference's declared-but-unimplemented
-    // running-aggregate surface (RainStorm.java:888-891), via the descriptor
-    // parser. DECIMAL accumulation on both engines: windowed double sums
-    // differ in ulps across engines (DuckDB uses segment-tree combination).
-    "q_running_sum" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_orderkey"),
-        col("l_linenumber").cast("long").as("l_linenumber"),
-        col("l_quantity").cast("decimal(18,2)").as("l_quantity"))
-      Pipeline.fromDescriptors(Seq("AGGREGATE:sum:l_quantity"),
-        OpCompiler.Ctx(None, Seq("l_orderkey", "l_linenumber")))(li)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("running_sum").cast("double").as("running_sum"))
-    }),
-
-    // AGGREGATE:max:field via the library API (max of existing doubles is
-    // engine-exact, no decimal detour needed).
-    "q_running_max" -> ((s, dir) =>
-      RunningCount.withRunningAgg(
-        t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-        col("o_totalprice"), RunningCount.Kind.Max,
-        Seq(col("o_orderkey")), "running_max")
-        .select(col("o_orderkey"), col("running_max"))),
-
-    // AGGREGATE:min:field — the last §2-surface variant, under the same
-    // windowed oracle shape as max (comparison-only, engine-exact).
-    "q_running_min" -> ((s, dir) =>
-      RunningCount.withRunningAgg(
-        t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-        col("o_totalprice"), RunningCount.Kind.Min,
-        Seq(col("o_orderkey")), "running_min")
-        .select(col("o_orderkey"), col("running_min"))),
-
-    // The canonical reference job shape: op1 -> op2 chain (FILTER then
-    // AGGREGATE, Node.java:1106-1160) in ONE Catalyst plan.
-    "q_pipeline_filter_count" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      Pipeline.fromDescriptors(
-        Seq("FILTER:join", "TRANSFORM:select:doc_id", "AGGREGATE"),
-        OpCompiler.Ctx(Some("text"), Seq("doc_id")))(docs)
-    }),
-
-    // The reference's structured workload on its fixture shape: the
-    // FIXTURES.md representative job (COLUMN_FILTER -> TRANSFORM:select)
-    // over the committed Traffic_Signs fixture (Tables.trafficSignsFixture),
-    // through the descriptor parse -> compile path and the proper RFC-4180
-    // reader (quoted commas handled, the documented divergence from the
-    // reference's naive split).
-    "q_traffic_pipeline" -> ((s, _) => {
-      val signs = graft.sources.Tables.trafficSigns(s,
-        graft.sources.Tables.trafficSignsFixture)
-      Pipeline.fromDescriptors(
-        Seq("COLUMN_FILTER:Category:Warning", "TRANSFORM:select:OBJECTID,Sign_Type"),
-        OpCompiler.Ctx(None, Seq("OBJECTID")))(signs)
-    }),
-
-    // The full console surface in one line: the reference's actual UX is a
-    // single `RAINSTORM <op1> <op2> <file> <numTasks> <flag>` command
-    // (RainStorm.java:846-877, Node.java:289-300) — tokenize, parse, pick
-    // the source by extension, run both ops as one plan over one scan.
-    "q_console" -> ((s, _) => {
-      graft.ops.Console.run(s,
-        "RAINSTORM \"COLUMN_FILTER:Category:Warning\" AGGREGATE " +
-          s"${graft.sources.Tables.trafficSignsFixture} 3 false")
-    }),
-
-    // The compatibility mode: the reference's NAIVE split(",") semantics
-    // (quoted commas shift columns, Operators.java:174) — byte-parity with
-    // its outputs. The oracle reproduces the same naive split with
-    // string_split over raw lines, so the shifted rows match exactly too.
-    "q_traffic_naive" -> ((s, _) => {
-      val signs = graft.sources.Tables.trafficSignsNaive(s,
-        graft.sources.Tables.trafficSignsFixture)
-      Pipeline.fromDescriptors(
-        Seq("COLUMN_FILTER:Category:Streetname", "TRANSFORM:select:OBJECTID,Sign_Type"),
-        OpCompiler.Ctx(None, Seq("OBJECTID")))(signs)
-    }),
-
-    // ---------------------------------------------------------------------
-    // Analytics beyond the reference surface (scale/bench headliners).
-    // ---------------------------------------------------------------------
-
-    // TPC-H Q1 shape: scan + pushdown filter + hash agg with partial combine.
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity"), "sum_qty"),
-          dsum(col("l_extendedprice"), "sum_base_price"),
-          dsum4(col("l_extendedprice") * (lit(1) - col("l_discount")), "sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // TPC-H Q3 shape: broadcast the small filtered dim into orders, then a
-    // SHUFFLED hash join between the two fact-sized sides on orderkey,
-    // building on the (customer-filtered, so smaller) orders side. The hint
-    // matters twice over: (1) without it the static planner broadcasts the
-    // PRUNED lineitem scan — file size x selected-column ratio drops the
-    // fact table under the 10 MB threshold at small SF, a plan that is
-    // catastrophic at real scale and costs a driver-side HashedRelation
-    // build per run (profiled: the r06 1.54 s regression; see SCALE.md);
-    // (2) the join's hash partitioning on orderkey is exactly the
-    // downstream groupBy key, so the aggregation runs exchange-free — two
-    // total shuffles, both data-sized, a shape that holds at 100 TB.
-    "q3_join" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey")
-      val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-      li.join(ord.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-            .hint("shuffle_hash"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_orderkey")
-        .agg(dsum4(col("l_extendedprice") * (lit(1) - col("l_discount")), "revenue"))
-    }),
-
-    // TPC-H Q5 shape: the multi-way join ladder. Region->nation->supplier
-    // collapse into ONE broadcast against the fact scan; orders (date-
-    // filtered) and customer join on their keys — the only data-sized
-    // shuffles. The local-supplier predicate (c_nationkey = s_nationkey)
-    // rides the customer join.
-    "q5_join" -> ((s, dir) => {
-      val reg = t(s, dir, "region").filter(col("r_name") === "ASIA")
-        .select("r_regionkey")
-      val nat = t(s, dir, "nation")
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .select("n_nationkey", "n_name")
-      val sup = t(s, dir, "supplier")
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey", "s_nationkey", "n_name")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01") &&
-          col("o_orderdate") < lit("1997-01-01"))
-        .select("o_orderkey", "o_custkey")
-      val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val li = t(s, dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-      li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .groupBy("n_name")
-        .agg(dsum4(col("l_extendedprice") * (lit(1) - col("l_discount")), "revenue"))
-    }),
-
-    // TPC-H Q6 shape: the pure pushdown query — every predicate (date
-    // range, discount band, quantity cap) reaches the parquet scan as a
-    // PushedFilter, then a scalar aggregate with map-side partials. At
-    // 100 TB this reads only the row groups whose min/max footers overlap
-    // the bands — the whole query is scan-bound with ZERO shuffled rows
-    // beyond one partial-agg row per partition.
-    "q6_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.03 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < lit(24.0))
-        .agg(dsum4(col("l_extendedprice") * col("l_discount"), "revenue"))
-    }),
-
-    // Semi-join shape (TPC-H Q4 family): orders with at least one returned
-    // line, counted by priority. LEFT SEMI shuffles only the join KEYS of
-    // the probe side and short-circuits on first match — no fact×fact
-    // row explosion, no payload duplication; the priority agg then runs on
-    // the (much smaller) matched orders.
-    "q_semi_join" -> ((s, dir) => {
-      val ord = t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
-      val ret = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R").select("l_orderkey")
-      ord.join(ret, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"))
-    }),
-
-    // Anti-join shape (TPC-H Q22 family): customers with NO big-ticket
-    // order, rolled up by segment with an exact-decimal balance sum. LEFT
-    // ANTI is the scale-correct "NOT EXISTS": one keyed shuffle of
-    // (custkey) vs the filtered order custkeys — never a driver-side NOT
-    // IN list, and the price predicate is pushed to the orders scan.
-    "q_anti_join" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_totalprice") > 300000).select("o_custkey")
-      cust.join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_cust"), dsum(col("c_acctbal"), "sum_bal"))
-    }),
-
-    // FULL OUTER join: positive-balance customers ⟗ big-ticket order
-    // aggregates — left-only rows (customers with no big order) AND
-    // right-only rows (big orders of negative-balance customers) both
-    // survive. One keyed shuffle each side; the agg side is partial-combined
-    // before the join, so the full-outer never sees raw fact rows.
-    "q_full_outer" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_acctbal") >= 0)
-        .select("c_custkey", "c_mktsegment")
-      val ord = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice"), "sum_price"))
-      cust.join(ord, col("c_custkey") === col("o_custkey"), "full_outer")
-        .select(coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
-          col("c_mktsegment"), col("n_orders"), col("sum_price"))
-    }),
-
-    // ROLLUP hierarchy profile: (priority, status) -> priority subtotals ->
-    // grand total in ONE pass — Spark expands grouping sets inside the same
-    // hash aggregate (one shuffle, partial-combined), vs three separate
-    // scans+aggs. Rolled-up levels surface as 'ALL' (coalesce) so the
-    // cross-engine hash sees identical sentinel rows, and because the
-    // grouping columns themselves are non-null the sentinel is unambiguous.
-    "q_rollup" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .rollup(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice"), "sum_price"))
-        .select(coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          col("n"), col("sum_price"))),
-
-    // Arbitrary GROUPING SETS with grouping_id: the asymmetric mix
-    // ((priority, status), (status), ()) neither ROLLUP's hierarchy nor
-    // CUBE's full lattice expresses — same single-shuffle Expand shape.
-    "q_grouping_sets" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderpriority"), col("o_orderstatus")),
-            Seq(col("o_orderstatus")), Seq.empty),
-          col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice"), "sum_price"),
-          grouping_id().cast("long").as("gid"))
-        .select(coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          col("n"), col("sum_price"), col("gid"))),
-
-    // CUBE: all 2^k grouping sets in the same single-shuffle Expand+agg
-    // shape as rollup — the one extra set here ((status) without
-    // (priority)) is exactly what ROLLUP's hierarchy can't express.
-    "q_cube" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .cube(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice"), "sum_price"))
-        .select(coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          col("n"), col("sum_price"))),
-
-    // Event-time tumbling window aggregation (streaming-compatible shape).
-    "q_events_window" -> ((s, dir) => {
-      ev(s, dir)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(20,4)")).cast("double").as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("w_start"),
-          col("event_type"), col("n"), col("sum_value"))
-    }),
-
-    // Sliding windows: every event lands in len/slide = 2 overlapping
-    // windows; epoch-aligned starts match DuckDB's date_trunc arithmetic.
-    "q_events_sliding" -> ((s, dir) =>
-      graft.streaming.StreamingPipeline.slidingCounts(
-        ev(s, dir), windowLen = "2 hours", slide = "1 hour")
-        .select(unix_timestamp(col("w_start")).as("w_start"),
-          col("event_type"), col("n"))),
-
-    // Session windows (gaps-and-islands): session starts are compared in
-    // exact integer MICROS on both engines — the parquet carries nanos, and
-    // a ns-precision gap comparison on one side with a us-precision one on
-    // the other could split sessions differently at exact boundaries.
-    "q_events_sessions" -> ((s, dir) =>
-      graft.streaming.StreamingPipeline.sessionCounts(
-        ev(s, dir), gap = "30 minutes")
-        .select(unix_micros(col("s_start")).as("s_start"),
-          col("event_type"), col("n"))),
-
-    // Semi-structured event properties: JSON extraction (from_json with an
-    // explicit schema — one parse per row, scan-bound) feeding a keyed agg.
-    // Malformed/missing keys become nulls and are excluded from the
-    // aggregates but counted, the usual telemetry convention.
-    "q_events_props" -> ((s, dir) =>
-      ev(s, dir)
-        .select(col("event_type"),
-          from_json(col("props"), lit("k INT")).getField("k").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), count(col("k")).as("n_k"),
-          sum(col("k")).cast("long").as("sum_k"), max(col("k")).as("max_k"))),
-
-    // Pivot (long->wide): per-user event-type counts as columns, written as
-    // EXPLICIT conditional aggregation rather than DataFrame.pivot. Both
-    // need the value list known up front (pivot without one runs an extra
-    // fact-table distinct just to discover the columns), but .pivot()
-    // ALWAYS compiles to two exchanges — count by (user, type), then a
-    // pivotfirst re-agg by user — while the conditional form is one hash
-    // agg with per-column partials: a single data-sized shuffle
-    // (plan-pinned in PlansSpec). The wide row is exactly the
-    // feature-vector layout a training join wants.
-    "q_pivot" -> ((s, dir) => {
-      val types = Seq("view", "click", "purchase", "signup", "error")
-      val aggs = types.map(tp =>
-        count(when(col("event_type") === tp, 1)).as(s"n_$tp"))
-      ev(s, dir).groupBy("user_id").agg(aggs.head, aggs.tail: _*)
-    }),
-
-    // Per-user ordered feature columns in ONE window pass: sequence number,
-    // previous value (lag), running exact-decimal total, and a 3-row
-    // rolling sum. All four ride the SAME (user_id, ts, event_id) sort, so
-    // Spark plans one Exchange + one Sort for the lot — at 100 TB that is
-    // one keyed shuffle of the events, the minimum any ordered per-user
-    // feature needs. Sums accumulate in decimal (exact at 2dp inputs), so
-    // frame order can't perturb the doubles the gate hashes.
-    "q_user_features" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val dv = col("value").cast("decimal(20,4)")
-      ev(s, dir).select(
-        col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        row_number().over(w).as("seq"),
-        lag(col("value"), 1).over(w).as("prev_value"),
-        sum(dv).over(w).cast("double").as("cum_value"),
-        sum(dv).over(w.rowsBetween(-2, 0)).cast("double").as("roll3_value"))
-    }),
-
-    // ---------------------------------------------------------------------
-    // Text analysis (training-data pipeline ops).
-    // ---------------------------------------------------------------------
-
-    "q_lang_id" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))
-    }),
-
-    // The brief's "n-gram heuristic" language ID (Cavnar-Trenkle style):
-    // character-trigram profile hits, fused into one native expression.
-    "q_lang_id_ngram" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.langIdNgram(col("text")).as("lang_pred"))
-    }),
-
-    "q_quality" -> ((s, dir) => {
-      val cols = TextFunctions.qualityCounts(col("text")).map { case (n, c) => c.as(n) }
-      t(s, dir, "documents").select(col("doc_id") +: cols: _*)
-    }),
-
-    "q_token_count" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_ws_tokens"),
-        TextFunctions.bpeTokenEstimate(col("text")).cast("long").as("n_bpe_tokens"))
-    }),
-
-    // Fused per-document FEATURE EXPORT: every scan-bound signal family
-    // (quality counts, char-diversity profile, token counts, fingerprint)
-    // in ONE pass — one FileScan, one WholeStageCodegen span, eleven
-    // feature columns. Run separately these are 4 corpus scans; at 100 TB
-    // the fusion IS the operator.
-    "q_doc_features" -> ((s, dir) => {
-      val q = TextFunctions.qualityCounts(col("text")).map { case (n, c) => c.as(n) }
-      val p = TextFunctions.charProfile(col("text"))
-      t(s, dir, "documents").select((col("doc_id") +: q) ++ Seq(
-        p.getField("n_cp").as("n_cp"),
-        p.getField("n_distinct").as("n_distinct"),
-        p.getField("max_cnt").as("max_cnt"),
-        p.getField("sum_sq").as("sum_sq"),
-        TextFunctions.bpeTokenEstimate(col("text")).cast("long").as("n_bpe_tokens"),
-        TextFunctions.fingerprint(col("text")).as("fp")): _*)
-    }),
-
-    "q_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.fingerprint(col("text")).as("fp"))
-    }),
-
-    // Canonical normalization (dedup preprocessing): lowercase + whitespace
-    // collapse, and the punctuation-stripped canon.
-    "q_normalize" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.normalizeText(col("text")).as("norm"),
-        TextFunctions.normalizeText(col("text"), stripPunct = true).as("canon"))
-    }),
-
-    // PII scrub: emails / IPv4s / card-length digit runs / phone shapes ->
-    // typed placeholders. The gate INJECTS deterministic PII derived from
-    // doc_id into the text on both engines, so the oracle exercises every
-    // pattern for real rather than hashing an identity rewrite.
-    "q_redact" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        lit(" contact u"), col("doc_id"), lit("@example.com from 10.0."),
-        (col("doc_id") % 255).cast("string"), lit(".9 card 4111222233334444 call 555-123-4567"))
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.redactPii(injected).as("redacted"))
-    }),
-
-    // Luhn checksum gate for card-shaped digit runs — the validator the
-    // \d{12,19} redaction pattern lacks (a random 16-digit run passes the
-    // regexp but fails Luhn 90% of the time). Every doc plants a 16-digit
-    // number whose check digit the ENGINE derives (append-zero trick);
-    // doc_id%3 tampers it — valid must flip exactly there, with the raw
-    // mod-10 residue under the hash.
-    "q_pii_luhn" -> ((s, dir) => {
-      val base = lpad((col("doc_id") % 100000000000000L).cast("string"), 15, "4")
-      val cd = TextFunctions.luhnCheckDigit(base)
-      val digit = when(col("doc_id") % 3 === 0, pmod(cd + 1, lit(10))).otherwise(cd)
-      val cc = concat(base, digit.cast("string"))
-      t(s, dir, "documents").select(col("doc_id"), cc.as("cc"),
-        TextFunctions.luhnValid(cc).as("valid"),
-        pmod(TextFunctions.luhnChecksum(cc), lit(10)).cast("long").as("mod10"))
-    }),
-
-    // IBAN mod-97 validation (ISO 13616) — the PII family's second
-    // checksum next to Luhn: synthetic German-format IBANs with check
-    // digits DERIVED in-engine (98 - residue of the zero-check form),
-    // then doc_id%4 tampered in the last BBAN digit; the native
-    // rotate+expand+fold residue must read exactly 1 on untampered rows
-    // and never on tampered ones (97 is prime: a single-digit delta can't
-    // cancel).
-    "q_pii_iban" -> ((s, dir) => {
-      val bban = lpad((col("doc_id") % 1000000000000000000L).cast("string"),
-        18, "0")
-      val cd = TextFunctions.ibanCheckDigits(lit("DE"), bban)
-      val tampered = concat(substring(bban, 1, 17),
-        pmod(substring(bban, 18, 1).cast("int") + 1, lit(10)).cast("string"))
-      val iban = concat(lit("DE"), cd,
-        when(col("doc_id") % 4 === 0, tampered).otherwise(bban))
-      t(s, dir, "documents").select(col("doc_id"), iban.as("iban"),
-        TextFunctions.ibanMod97(iban).cast("long").as("m97"),
-        TextFunctions.ibanValid(iban).as("valid"))
-    }),
-
-    // Rule-based code detection (the Stack-vs-prose corpus router):
-    // integer-weighted punctuation/keyword counts over replace()
-    // length-differences, threshold as an integer cross-product (5 per
-    // mille). doc_id%7 docs gain a JS snippet; is_code must fire exactly
-    // there.
-    "q_code_detect" -> ((s, dir) => {
-      val decorated = when(col("doc_id") % 7 === 0, concat(col("text"),
-        lit(" function update(x) { var t = x + 1; return t; } if (t) { t = t + 2; }")))
-        .otherwise(col("text"))
-      val score = TextFunctions.codeScore(decorated).cast("long")
-      t(s, dir, "documents").select(col("doc_id"), score.as("score"),
-        length(decorated).cast("long").as("n_chars"),
-        (score * lit(1000L) >= lit(5L) * length(decorated)).as("is_code"))
-    }),
-
-    // T5 span corruption (Raffel et al. masked-LM objective data): salted
-    // deterministic mask spans -> numbered sentinels in the input, target
-    // = sentinels + hidden tokens + final sentinel. Islands merge before
-    // numbering; ~15% density at 3/20.
-    "q_span_corrupt" -> ((s, dir) =>
-      Curation.spanCorrupt(t(s, dir, "documents"), startEvery = 20, spanLen = 3)),
-
-    // Mass-balanced training shards: snake allocation over the global
-    // token-mass ranking — the equal-token shard layout hash sharding
-    // can't promise; rank, shard, and masses all exact integers.
-    "q_shard_balance" -> ((s, dir) =>
-      Curation.balancedShards(
-        t(s, dir, "documents").select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", nShards = 8)),
-
-    // Repetition quality signals (Gopher/MassiveText filters): duplicate
-    // token fraction + the most-frequent-bigram share. Both pure per-row
-    // (sorted-run fold, no explode/shuffle).
-    "q_repetition" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.duplicateTokenFraction(col("text")).as("dup_token_frac"),
-        TextFunctions.topBigramFraction(col("text")).as("top_bigram_frac"))),
-
-    // Gopher rule suite (Rae et al. 2021): exact integer signals + the keep
-    // decision as integer cross-multiplications. Like q_redact, the gate
-    // DECORATES the synthetic text deterministically on both engines
-    // (bullets, '#', '...', numeric runs) so every rule is exercised with
-    // non-trivial selectivity rather than hashing constant zeros.
-    "q_gopher" -> ((s, dir) => {
-      val g = gopherDecoratedText
-      t(s, dir, "documents").select(col("doc_id") +:
-        functions.QualityFilters.gopherCounts(g).map { case (n, c) => c.as(n) } :+
-        functions.QualityFilters.gopherKeep(g, minWords = 40)
-          .cast("long").as("keep"): _*)
-    }),
-
-    // C4 line/page filters (Raffel et al. 2020) via the fused native
-    // expression (one JVM pass per doc; parity with the composed HOF
-    // formulation is spec-pinned). The gate derives deterministic line
-    // structure (sentence breaks after table/row) and plants the page-level
-    // triggers (lorem ipsum, javascript lines, curly braces) on a doc_id
-    // schedule, identically on both engines.
-    "q_c4_filter" -> ((s, dir) => {
-      val t2 = c4DerivedText
-      val cols = functions.QualityFilters.c4Clean(t2, minLineWords = 3).toMap
-      t(s, dir, "documents").select(col("doc_id"),
-        cols("clean_text").as("clean_text"),
-        cols("n_kept_lines").as("n_kept_lines"),
-        functions.QualityFilters.c4DocKeep(t2, cols("n_kept_lines"), minKeptLines = 2)
-          .cast("long").as("keep"))
-    }),
-
-    // Composed quality pipeline: C4 line clean -> page keep -> Gopher keep
-    // over the CLEANED text, one Catalyst plan (both filter suites are pure
-    // per-row projections, so the whole chain stays scan-bound — no
-    // shuffle at any scale). Same derived line structure as q_c4_filter.
-    "q_pipeline_quality" -> ((s, dir) => {
-      val t2 = c4DerivedText
-      val cols = functions.QualityFilters.c4Clean(t2, minLineWords = 3).toMap
-      t(s, dir, "documents")
-        .select(col("doc_id"), cols("clean_text").as("clean_text"),
-          functions.QualityFilters.c4DocKeep(t2, cols("n_kept_lines"), minKeptLines = 2)
-            .as("page_keep"))
-        .filter(col("page_keep"))
-        .filter(functions.QualityFilters.gopherKeep(col("clean_text"), minWords = 20))
-        .select(col("doc_id"), col("clean_text"))
-    }),
-
-    // Benchmark decontamination: distinct-3-gram overlap of every doc
-    // against the deterministic pseudo-benchmark (doc_id % 97 = 0).
-    "q_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      operators.Decontaminate.overlap(docs, docs.filter(col("doc_id") % 97 === 0))
-    }),
-
-    // Blocked fuzzy near-dup pairs over a TITLE-like short field (first
-    // 64 chars): prefix blocks, length pre-filter, levenshtein <= 5 — the
-    // typo-level signal the set-similarity family can't see. Fuzzy
-    // matching is a short-string tool (cost is per-CHAR-pair); whole
-    // documents belong to the n-gram/minhash family.
-    "q_dedup_fuzzy" -> ((s, dir) =>
-      operators.Dedup.fuzzyPairs(
-        t(s, dir, "documents").select(col("doc_id"),
-          substring(col("text"), 1, 64).as("title")),
-        maxDist = 5, blockPrefix = 8, textCol = "title", maxBlockSize = Some(80))),
-
-    // Jaro-Winkler record linkage over the same TITLE field: the prefix-
-    // weighted matcher (native byte-based expression, codegen'd, bit-
-    // exact vs the oracle engine's jaro_winkler_similarity) — the raw
-    // similarity doubles go under the hash gate.
-    "q_link_jw" -> ((s, dir) =>
-      operators.Dedup.jaroWinklerPairs(
-        t(s, dir, "documents").select(col("doc_id"),
-          substring(col("text"), 1, 64).as("title")),
-        threshold = 0.88, blockPrefix = 8, textCol = "title",
-        maxBlockSize = Some(80))),
-
-    // Sorted-neighborhood linkage over the same titles (Hernández &
-    // Stolfo): global (lower(trim(title)), id) rank via the two-phase
-    // prefix machinery, each record vs its 5 rank-successors through a
-    // bucket self-join (candidates n·w, never n²) — the blocking-FREE
-    // second pass that still finds a pair whose block prefix carries the
-    // typo. Jaro-Winkler verify, raw doubles under the gate.
-    "q_link_snm" -> ((s, dir) =>
-      operators.Dedup.sortedNeighborhoodPairs(
-        t(s, dir, "documents").select(col("doc_id"),
-          substring(col("text"), 1, 64).as("title")),
-        window = 5, threshold = 0.85, textCol = "title")),
-
-    // ExactSubstr repeated-span removal (Lee et al. 2022, windowed): any
-    // 12-token window occurring >= 2 times corpus-wide marks duplicated
-    // positions; overlapping windows merge into maximal spans, removed
-    // from every copy. The census shuffles md5s only.
-    "q_dedup_substr" -> ((s, dir) =>
-      Dedup.removeRepeatedSpans(t(s, dir, "documents"),
-        windowTokens = 12, minCount = 2)),
-
-    // Model-based quality filter (the fastText-classifier APPLY step):
-    // every token md5-hashes to one of 64 buckets, the margin is the
-    // in-order sum of fixed-point bucket weights + bias, keep = margin>0.
-    // Pure scan expression; margins hash bit-exact (correctly-rounded
-    // adds in document token order, weights stated as decimal literals
-    // on both engines).
-    "q_quality_model" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-          graft.functions.TextFunctions.hashedBowMargin(
-            col("text"), bowWeights, bias = 0.05).as("margin"))
-        .withColumn("keep", col("margin") > 0.0)),
-
-    // In-engine linear-classifier TRAINING — the step that produces what
-    // q_quality_model consumes: 3 full-batch perceptron epochs over the
-    // hashed-BoW postings (lang='en' vs rest as the demo task). Integer
-    // end to end (counts, margins, gradients, weights), so the trained
-    // artifact hash-matches the oracle's epoch-unrolled replay exactly;
-    // driver traffic per epoch = the weight vector. (The synthetic corpus
-    // draws tokens INDEPENDENT of lang, so ~56% here IS the Bayes rate —
-    // the gate checks the training machinery, not the fixture's
-    // learnability; ClassifierSpec proves convergence to 100% and a
-    // zero-gradient fixed point on a separable corpus.)
-    "q_train_perceptron" -> ((s, dir) =>
-      operators.Classifier.trainPerceptron(t(s, dir, "documents"),
-        when(col("lang") === "en", 1L).otherwise(-1L),
-        buckets = 64, epochs = 3)),
-    // the apply readout under the weights just trained: per-doc integer
-    // margin + correctness (the fit's own training accuracy surface)
-    "q_train_margins" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val label = when(col("lang") === "en", 1L).otherwise(-1L)
-      operators.Classifier.marginsUnder(docs,
-        operators.Classifier.trainPerceptron(docs, label,
-          buckets = 64, epochs = 3),
-        label, buckets = 64)
-    }),
-
-    // Rank-calibration of the trained quality scorer: the perceptron
-    // margin's empirical-CDF transform (two-phase global rank / N) cut
-    // into 10 equal-rank bins, per bin observed en-rate vs mean forecast
-    // and their gap — the reliability-diagram / ECE-term readout that
-    // tells a pipeline whether the scorer's CONFIDENCE is usable as a
-    // sampling weight, not just its sign as a filter.
-    "q_calibration" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val label = when(col("lang") === "en", 1L).otherwise(-1L)
-      val m = operators.Classifier.marginsUnder(docs,
-        operators.Classifier.trainPerceptron(docs, label,
-          buckets = 64, epochs = 3),
-        label, buckets = 64)
-      operators.EventSignals.calibrationBins(
-        m.select(col("doc_id"), col("margin"),
-          when(col("y") === 1L, 1L).otherwise(0L).as("label01")),
-        scoreCol = "margin", labelCol = "label01", bins = 10)
-    }),
-
-    // The curation pipeline CAPSTONE, end-to-end under one hash gate:
-    // model-based quality filter -> leakage-safe train split -> sharded
-    // JSONL training export -> the WRITTEN shards read back. Three
-    // operators composed exactly as a production pipeline chains them;
-    // one mis-serialized byte or one mis-assigned row anywhere flips the
-    // hash.
-    "q_pipeline_export" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val kept = docs.where(graft.functions.TextFunctions.hashedBowMargin(
-        col("text"), bowWeights, bias = 0.05) > 0.0)
-      val train = Curation.withSplit(kept, "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .where(col("split") === "train").select(col("doc_id"), col("text"))
-      exportAndReadShards(s, train, "graft_pipe_export_gate_",
-        maxShardBytes = 128L * 1024)
-    }),
-
-    // Span-level decontamination (cross-corpus ExactSubstr): a 12-token
-    // benchmark sentence is PLANTED at the end of every 9th doc (the
-    // q_gopher decorate pattern), the reference corpus is that sentence,
-    // and the operator must strip exactly the planted window from exactly
-    // those docs — surrounding prose survives.
-    "q_decontam_spans" -> ((s, dir) => {
-      val bench = "the quick brown fox jumps over the lazy dog again and again"
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 9 === 0, concat(col("text"), lit(" " + bench)))
-          .otherwise(col("text")).as("text"))
-      val ref = s.range(1).select(lit(bench).as("text"))
-      Dedup.removeSpansMatching(docs, ref, windowTokens = 12)
-    }),
-
-    // CCNet-style boilerplate line removal. The synthetic corpus is
-    // single-line, so the gate DECORATES it deterministically (the
-    // q_gopher pattern): body reshaped into 12-token lines, a cookie
-    // banner planted on doc_id % 3, a license footer on doc_id % 2 — the
-    // planted lines cross the minDocs census, body lines (mostly) don't,
-    // and both engines agree exactly either way.
-    "q_boilerplate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = split(col("text"), " ")
-      val body = transform(
-        sequence(lit(0L), floor((size(toks) - lit(1)) / lit(12)).cast("long")),
-        i => array_join(slice(toks, (i * lit(12) + lit(1)).cast("int"), lit(12)), " "))
-      val header = when(col("doc_id") % 3 === 0,
-        array(lit("COOKIE NOTICE ACCEPT ALL COOKIES")))
-        .otherwise(typedLit(Seq.empty[String]))
-      val footer = when(col("doc_id") % 2 === 0,
-        array(lit("copyright example corp all rights reserved")))
-        .otherwise(typedLit(Seq.empty[String]))
-      val lined = docs.select(col("doc_id"),
-        array_join(concat(header, body, footer), "\n").as("text"))
-      Dedup.stripBoilerplateLines(lined, minDocs = 50L)
-    }),
-
-    // Bloom-screened decontamination: same contract as q_decontam (the
-    // bloom is a pre-filter + exact confirm, so the ORACLE IS THE EXACT
-    // PATH's), against a different pseudo-benchmark (doc_id % 89 = 0). The
-    // scale path for a reference corpus too big to join in full.
-    "q_decontam_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      operators.Decontaminate.overlapBloom(docs,
-        docs.filter(col("doc_id") % 89 === 0),
-        expectedItems = 200000L, fpp = 0.03)
-    }),
-
-    // Corpus-version diff: one row per id in either version with status
-    // added/removed/changed/unchanged — the "what did this recuration
-    // actually change" audit; fingerprints move, text never does.
-    "q_corpus_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      operators.Dedup.corpusDiff(
-        docs.filter(col("doc_id") % 10 < 8),
-        docs.filter(col("doc_id") % 10 >= 2).withColumn("text",
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text"))))
-    }),
-
-    // Cross-split leakage audit: the full composed pipeline — deterministic
-    // hash split, then val+test docs scored for trigram overlap against the
-    // TRAIN corpus, all one Catalyst plan (the check a team runs before
-    // trusting its eval numbers; n_hit > 0 rows are the leaks).
-    "q_split_decontam" -> ((s, dir) => {
-      val split = Curation.withSplit(t(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      operators.Decontaminate.overlap(
-        split.filter(col("split") =!= "train").select(col("doc_id"), col("text")),
-        split.filter(col("split") === "train").select(col("doc_id"), col("text")))
-    }),
-
-    // Corpus bigram frequency table: the top-100 2-grams with counts
-    // (contamination scans, boilerplate discovery). Deterministic total
-    // order (count desc, gram asc) so LIMIT is engine-portable.
-    "q_ngram_freq" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(TextFunctions.shinglesNative(col("text"), 2)).as("gram"))
-        .groupBy("gram").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("gram").asc)
-        .limit(100)),
-
-    // Zipf rank-frequency exponent of the shingle vocabulary: ln-ln OLS
-    // over (two-phase-prefix global rank, frequency), quantized to the
-    // 2^-20 grid so the cross-engine StrictMath-vs-libm ln ulp never
-    // reaches the hash; decimal moment sums exact, slope/intercept one
-    // fixed-order double readout.
-    "q_zipf" -> ((s, dir) => strDecimals(Curation.zipfFit(t(s, dir, "documents")))),
-
-    // Heaps vocabulary-growth exponent: V(N) ~ K*N^beta over cumulative
-    // (tokens seen, distinct vocab) at every doc in id order — both
-    // running sums from ONE shared two-phase prefix pass.
-    "q_heaps" -> ((s, dir) => strDecimals(Curation.heapsFit(t(s, dir, "documents")))),
-
-    // Gini concentration of shingle mass: the log-free companion readout
-    // (template/boilerplate domination signal) — tie-order-invariant
-    // rank-weighted sum, exact decimal moments, one double division.
-    "q_gini" -> ((s, dir) => strDecimals(Curation.giniIndex(t(s, dir, "documents")))),
-
-    // Lorenz curve of document-length mass at deciles: the curve behind
-    // Gini's scalar ("bottom 50% of docs hold x% of chars") — integer
-    // rank boundaries, tie-splitting by mass, exact decimal numerators.
-    "q_lorenz" -> ((s, dir) =>
-      strDecimals(Curation.lorenzCurve(t(s, dir, "documents"), "n_chars"))),
-
-    // Hill tail-index of document lengths: the extreme-upper-tail Pareto
-    // exponent over the top-100 order statistics — DESC-cumulative
-    // histogram mass (no row sort), quantized-ln integer terms.
-    "q_hill" -> ((s, dir) =>
-      strDecimals(Curation.hillTail(t(s, dir, "documents"), "n_chars"))),
-
-    // Theil T inequality of document lengths: the entropy-based,
-    // subgroup-decomposable concentration readout next to Gini —
-    // grid-quantized lns, exact integer term sums, one double division.
-    "q_theil" -> ((s, dir) =>
-      strDecimals(Curation.theilIndex(t(s, dir, "documents"), "n_chars"))),
-
-    // Mutual information source × lang: how much two categorical columns
-    // predict each other (feature redundancy / label leakage) — exact
-    // integer cell terms under the quantized ln, marginal entropies on
-    // the same scan, NMI readout.
-    "q_mutual_info" -> ((s, dir) =>
-      strDecimals(Curation.mutualInfo(t(s, dir, "documents"), "source", "lang"))),
-
-    // Per-source distinctive vocabulary: top-20 terms per source ranked
-    // (group-df asc, tf desc, term asc) — all-integer c-TF-IDF-style
-    // ranking; df = 1 flags source-unique vocabulary.
-    "q_distinctive_terms" -> ((s, dir) =>
-      Curation.distinctiveTerms(t(s, dir, "documents"))),
-
-    // BPE trainer inner loop, round 1: adjacent-char pair counts weighted
-    // by word frequency — computed over the DISTINCT-WORD table, so the
-    // corpus-sized shuffle is paid once regardless of merge rounds.
-    "q_bpe_pairs" -> ((s, dir) =>
-      operators.Tokenizer.bpePairCounts(t(s, dir, "documents"), topK = 200)),
-
-    // One BPE merge applied to the vocab's symbol sequences: greedy
-    // leftmost non-overlapping fusion of ('t','h') -> "th", symbols joined
-    // with spaces ("t h e" -> "th e") so the merge structure survives. Pure per-row fold over the vocab table.
-    "q_bpe_merge" -> ((s, dir) =>
-      operators.Tokenizer.wordFrequencies(t(s, dir, "documents"))
-        .select(col("w"), col("wf"),
-          concat_ws(" ", operators.Tokenizer.applyMerge(
-            operators.Tokenizer.charSymbols(col("w")), "t", "h")).as("merged"))),
-
-    // Reproducible train/val/test assignment: a pure per-row function of the
-    // id (portable md5 bucket), zero shuffles, stable across reruns and
-    // scale — the curation-pipeline replacement for randomSplit.
-    "q_split_assign" -> ((s, dir) =>
-      Curation.withSplit(t(s, dir, "documents").select(col("doc_id")), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))),
-
-    // GROUP-aware leakage-safe split: hashing the USER id (not the row id)
-    // sends every event of a user to ONE split — per-entity features can
-    // never straddle train/test. Same zero-shuffle scan expression; the
-    // operator is withSplit with the group key as its id.
-    // Temperature rebalancing: domain shares follow n^(1/2) (T=2), rates
-    // derived IN-PLAN from measured counts — the multilingual resampling
-    // knob; decisions stay salted-integer-bucket pure.
-    "q_temp_sample" -> ((s, dir) =>
-      Curation.temperatureSample(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        groupCol = "source", budget = 150L, temperature = 2.0)
-        .select(col("doc_id"), col("source"))),
-
-    "q_split_group" -> ((s, dir) =>
-      Curation.withSplit(
-        ev(s, dir).select(col("event_id"), col("user_id")), "user_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))),
-
-    // Leakage-safe temporal split: test from Jan 24, a 48 h embargo band
-    // labeled 'purged' (kept, not dropped) — exact epoch-microsecond
-    // comparisons on the scan, zero shuffles.
-    "q_purged_split" -> ((s, dir) =>
-      Curation.purgedTimeSplit(ev(s, dir), "ts",
-        testStartUs = 1706054400000000L, embargoUs = 172800000000L)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("split"))),
-
-    // Deterministic Bernoulli sample: membership is a pure function of
-    // (doc_id, salt) — rerun/engine/partitioning-stable, zero shuffles.
-    "q_sample" -> ((s, dir) =>
-      Curation.sampleFraction(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id", 0.25, salt = "s1")),
-
-    // Mixture weighting: per-source keep rates (down-weight bulk sources,
-    // keep curated ones) — the salted-bucket compare against a CASE chain
-    // of thresholds; null/unlisted sources take the default rate.
-    "q_mixture" -> ((s, dir) =>
-      Curation.mixtureSample(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id", "source",
-        Seq("src1" -> 0.5, "src2" -> 0.1, "src3" -> 0.0), defaultRate = 0.8)),
-
-    // Mixture weights ABOVE 1: floor(w) copies per row plus a salted-bucket
-    // fractional copy — 2.5x a source deterministically. The copy index
-    // rides along; generate_series reproduces the generator in SQL.
-    "q_mixture_up" -> ((s, dir) =>
-      Curation.mixtureUpsample(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id", "source",
-        Seq("src1" -> 2.5, "src2" -> 0.5), defaultWeight = 1.0)),
-
-    // Declarative mixture: down-sample three sources to 50/30/20 TOKEN
-    // shares, rates derived in-plan from the corpus's own token masses
-    // (groups outside the spec drop; the binding group keeps rate 1).
-    "q_mixture_target" -> ((s, dir) =>
-      Curation.mixtureToTargets(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "doc_id", "source",
-        "n_tokens", Seq("src1" -> 0.5, "src2" -> 0.3, "src3" -> 0.2))
-        .select("doc_id", "source", "n_tokens")),
-
-    // Mixture accounting: docs + estimated tokens per (source, language) —
-    // the aggregate a data-mixture weighting step consumes. One tiny
-    // groups-sized shuffle after partial aggregation.
-    "q_token_budget" -> ((s, dir) =>
-      Curation.tokenBudget(t(s, dir, "documents"),
-        Seq(col("source"), TextFunctions.langId(col("text")).as("lang_pred")))),
-
-    // Ordered funnel per user: earliest view, then click strictly after it,
-    // then purchase strictly after that — every stage keyed on user_id so
-    // one hash partitioning serves the whole ladder. Epoch-micros output
-    // for cross-engine hashing.
-    "q_funnel" -> ((s, dir) =>
-      operators.Funnel.funnelTimes(ev(s, dir), Seq("view", "click", "purchase"))
-        .select(col("user_id"), unix_micros(col("t1")).as("t1"),
-          unix_micros(col("t2")).as("t2"), unix_micros(col("t3")).as("t3"))),
-
-    // ...and the funnel reduced to per-step conversion counts.
-    "q_funnel_conv" -> ((s, dir) =>
-      operators.Funnel.conversion(ev(s, dir), Seq("view", "click", "purchase"))),
-
-    // The funnel bounded to complete within one hour of the first step —
-    // later steps past t1 + 1h no longer count.
-    "q_funnel_window" -> ((s, dir) =>
-      operators.Funnel.funnelTimes(ev(s, dir), Seq("view", "click", "purchase"),
-          within = Some("1 hour"))
-        .select(col("user_id"), unix_micros(col("t1")).as("t1"),
-          unix_micros(col("t2")).as("t2"), unix_micros(col("t3")).as("t3"))),
-
-    // Weekly cohort retention: distinct active users per (first-activity
-    // week, weeks-since-first) — exact integer date arithmetic.
-    "q_retention" -> ((s, dir) =>
-      operators.Funnel.retention(ev(s, dir), periodDays = 7)),
-
-    // Top user journeys: whole-session event-type paths, counted and
-    // top-50'd — the journey-level rollup the pairwise transition matrix
-    // can't see. One user shuffle + vocab-sized aggs.
-    "q_session_paths" -> ((s, dir) =>
-      operators.Funnel.sessionPaths(ev(s, dir))),
-
-    // First-order Markov transition matrix over event types: consecutive
-    // same-user event pairs in (ts, event_id) order, counts + exact-IEEE
-    // transition probabilities. One user-keyed window shuffle.
-    "q_event_transitions" -> ((s, dir) =>
-      operators.Funnel.transitions(ev(s, dir))),
-
-    // ...bounded to within-session pairs: transitions more than 30 minutes
-    // apart don't count (no session labels materialized).
-    "q_event_transitions_gap" -> ((s, dir) =>
-      operators.Funnel.transitions(ev(s, dir), maxGap = Some("30 minutes"))),
-
-    // Contiguous length-3 sequential patterns (the n-gram step between
-    // the pairwise transition matrix and whole-journey paths): per-user
-    // consecutive event-type triples, total occurrences + distinct-user
-    // SUPPORT (the sequential-mining ranking measure, robust to one hot
-    // user looping), support >= 2. One user-keyed window shuffle, then
-    // (pattern, user) partial collapse before the pattern rollup.
-    "q_seq3" -> ((s, dir) =>
-      operators.Funnel.sequencePatterns(ev(s, dir), n = 3, minSupport = 2)),
-
-    // Association rules over sessions: directed event-type pairs with
-    // exact support counts + one-division confidence/lift doubles —
-    // market-basket analytics on the sessionizer's baskets.
-    "q_assoc_rules" -> ((s, dir) =>
-      operators.Funnel.associationRules(ev(s, dir))),
-
-    // Per-user exponential time-decay activity score (half-life 1 day,
-    // 30-day horizon) in division-free integer form: power-of-two weights,
-    // exact BIGINT numerator — one partial-aggregated user-keyed shuffle,
-    // no window. Ref instant: 2024-01-31T00:00:00Z (just past the corpus).
-    "q_decay_score" -> ((s, dir) =>
-      operators.EventSignals.decayScore(ev(s, dir),
-        refEpochUs = 1706659200000000L)),
-
-    // Last-touch attribution: every purchase attributed to the user's most
-    // recent preceding click (carry-forward last-ignoreNulls over the SAME
-    // single user-keyed sort as q_user_features; no-touch conversions kept
-    // with null touch_id).
-    "q_attribution" -> ((s, dir) =>
-      operators.EventSignals.attributeLastTouch(ev(s, dir))),
-
-    // Multi-touch linear attribution: each purchase's cents split exactly
-    // across its window's clicks (div + remainder-to-most-recent — sums
-    // reconstruct the original); windowless conversions keep a null row.
-    "q_attr_linear" -> ((s, dir) =>
-      operators.EventSignals.attributeLinear(ev(s, dir), within = "24 hours")),
-
-    // Per-user modal event type, deterministic smallest-value tiebreak —
-    // counts + rank over the (group, value) histogram, never raw rows.
-    "q_mode" -> ((s, dir) =>
-      Curation.modePerGroup(ev(s, dir), "event_type", Seq("user_id"))),
-
-    // Trailing-24-bucket anomaly flags on hourly per-type counts — the
-    // z-score test cross-multiplied into an exact integer inequality (no
-    // sqrt/division); events collapse to bucket rows BEFORE the window.
-    "q_anomaly" -> ((s, dir) =>
-      operators.EventSignals.anomalyBuckets(ev(s, dir))),
-
-    // Two-sided CUSUM drift detector on hourly per-type counts: the
-    // max(0, S+d) recursion in its prefix-sum/running-min closed form —
-    // exact integer arithmetic end to end, both cumulative windows share
-    // one sort over pre-shrunk bucket rows.
-    "q_cusum" -> ((s, dir) =>
-      operators.EventSignals.cusum(ev(s, dir), ref = 3L, threshold = 20L,
-        slack = 1L)),
-
-    // Fixed-point integer PageRank over the event-type transition graph
-    // (the crawl-frontier "rank sources by link structure" prior): 10
-    // power iterations, damping 85/100, ranks in 10^-12 units — every
-    // step integer multiply/div, bit-identical to the recursive-CTE
-    // oracle.
-    "q_pagerank" -> ((s, dir) => {
-      val edges = operators.Funnel.transitions(ev(s, dir))
-        .select(col("from_type").as("src"), col("to_type").as("dst"), col("n"))
-      operators.Graph.pageRank(edges, iters = 10, weightCol = Some("n"))
-    }),
-
-    // HITS hubs/authorities on the same transition graph: 10 mutual-
-    // reinforcement rounds as 20 integer half-steps (push across edges,
-    // L1-normalize by integer division) — bit-identical to the
-    // parity-doubled recursive-CTE oracle.
-    // Personalized PageRank from the {purchase, view} seed set: teleport
-    // mass returns only to the seeds, so ranks read "importance as seen
-    // from conversion activity" — the crawl-frontier / TrustRank shape.
-    // Same integer fixed-point discipline as q_pagerank (bit-identical
-    // recursive-CTE replay); the seed flag rides the pinned node list.
-    "q_ppr" -> ((s, dir) => {
-      val edges = operators.Funnel.transitions(ev(s, dir))
-        .select(col("from_type").as("src"), col("to_type").as("dst"), col("n"))
-      val seeds = s.createDataFrame(
-        Seq(Tuple1("purchase"), Tuple1("view"))).toDF("node")
-      operators.Graph.personalizedPageRank(edges, seeds, iters = 10,
-        weightCol = Some("n"))
-    }),
-
-    "q_hits" -> ((s, dir) => {
-      val edges = operators.Funnel.transitions(ev(s, dir))
-        .select(col("from_type").as("src"), col("to_type").as("dst"), col("n"))
-      operators.Graph.hits(edges, iters = 10, weightCol = Some("n"))
-    }),
-
-    // TextRank keywords: pageRank over the word co-occurrence graph
-    // (window 2, undirected, count-weighted) — all-integer iterations, so
-    // the extraction replays exactly in the recursive oracle; (rank desc,
-    // word) total order makes the top-20 cut engine-portable.
-    "q_textrank" -> ((s, dir) =>
-      operators.Graph.textRank(t(s, dir, "documents"),
-        window = 2, iters = 10, topK = 20)),
-
-    // Exact triangle count of the co-purchase graph (parts sharing an
-    // order) by degree-ordered orientation — wedge space O(m^1.5)
-    // regardless of skew, vs the oracle's naive three-way join.
-    "q_triangles" -> ((s, dir) =>
-      operators.Graph.triangleCount(
-        operators.Graph.coOccurrenceEdges(
-          t(s, dir, "lineitem"), "l_orderkey", "l_partkey"),
-        // coOccurrenceEdges already emits distinct u<v pairs — skip the
-        // second full-edge dedup exchange
-        edgesCanonical = true)),
-
-    // SCD Type-2 history of each user's event_type runs: gaps-and-islands
-    // under ONE user-keyed exchange (run agg + lead window both reuse the
-    // window pass's hash partitioning).
-    "q_scd2" -> ((s, dir) => operators.History.scd2(ev(s, dir))),
-
-    // Point-in-time snapshot: every user's state AS OF 2024-01-15 UTC —
-    // the temporal read that reproduces a historical training snapshot.
-    "q_scd2_asof" -> ((s, dir) =>
-      operators.History.asOf(ev(s, dir), asOfUs = 1705276800000000L)),
-
-    // Deterministic synchronous LPA communities (3 fixed rounds, ties to
-    // the smallest label) over the high-quantity co-purchase graph — the
-    // sparser basket graph where community structure isn't one blob.
-    "q_lpa" -> ((s, dir) =>
-      operators.Graph.labelPropagation(
-        operators.Graph.coOccurrenceEdges(
-          t(s, dir, "lineitem").filter(col("l_quantity") >= 45),
-          "l_orderkey", "l_partkey"),
-        rounds = 3)),
-
-    // CDC-changelog compaction to latest surviving state: deterministic
-    // op schedule (event_id % 13 = tombstone), newest row per user wins
-    // via a partial-aggregable max_by — one keyed shuffle of one
-    // candidate row per (partition x key), no per-key sort.
-    "q_cdc_latest" -> ((s, dir) => {
-      val log = ev(s, dir).select(col("user_id"),
-        when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        col("value"), unix_micros(col("ts")).as("ts_us"),
-        col("ts"), col("event_id"))
-      operators.History.cdcLatest(log, keyCols = Seq("user_id"),
-        orderCols = Seq("ts", "event_id"), payloadCols = Seq("value", "ts_us"))
-    }),
-
-    // The CDC drain END-TO-END UNDER THE HASH GATE: the changelog is split
-    // into 4 time-ordered segments, replayed through the real Structured
-    // Streaming path (file source, maxFilesPerTrigger=1 -> 4 micro-batches,
-    // flatMapGroupsWithState state store, commit log, parquet sink,
-    // AvailableNow), and the materialized sink is reduced to the final view
-    // (last emission per key = max n_ops, which strictly increases per key).
-    // On in-order replay that equals the BATCH twin exactly, so the oracle
-    // is q_cdc_latest's own SQL — the one execution mode that previously
-    // gated only by parity specs.
-    "q_stream_cdc_gate" -> ((s, dir) => {
-      val log = ev(s, dir).select(col("user_id"),
-        when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        col("value"), unix_micros(col("ts")).as("ts_us"),
-        col("ts"), col("event_id"))
-      val sink = streamGate(s, log, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.cdcLatestStream(
-          src(), payloadCols = Seq("value", "ts_us"))
-      })._1
-      sink.groupBy("user_id")
-        .agg(max_by(struct(col("op"), col("value"), col("ts_us")),
-          col("n_ops")).as("w"), max(col("n_ops")).as("n_ops"))
-        .where(col("w.op") =!= "D")
-        .select(col("user_id"), col("w.value").as("value"),
-          col("w.ts_us").cast("long").as("ts_us"),
-          col("n_ops").cast("long").as("n_ops"))
-    }),
-
-    // THE REFERENCE'S OWN JOB under the streaming hash gate: the
-    // FILTER + AGGREGATE console pipeline (RAINSTORM op1 op2 file
-    // numTasks) replayed as 4 micro-batches with 8 sharded running
-    // counters — the deployed semantics of SURVEY §2.1 O9. Which doc
-    // receives which count inside a micro-batch is scheduler-order, so
-    // the readout checks the INVARIANTS that are exact: per shard, the
-    // emitted counts are exactly the sequence 1..n_s (min 1, max n_s,
-    // n_s distinct over n_s rows) and the member docs are exactly the
-    // filter's matches routed by the shard hash (sum of doc ids).
-    "q_stream_console_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      streamGate(s, docs, Seq(col("doc_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.pipeline(
-          Seq(graft.ops.StreamOp.Filter("the"), graft.ops.StreamOp.Aggregate),
-          OpCompiler.Ctx(Some("text"), Seq("doc_id")), shards = 8)(src())
-      })._1
-        // shard replayed EXACTLY as usableShardCol routes it: Long.hashCode
-        // = (x ^ (x >>> 32)).toInt, and since 8 divides 2^32 the int wrap
-        // cannot change the low 3 bits — pmod of the long xor is identical
-        // for every doc_id, not just those below 2^32
-        .select(pmod(col("doc_id").bitwiseXOR(
-            shiftrightunsigned(col("doc_id"), 32)), lit(8)).as("shard"),
-          col("doc_id"), col("running_count"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n"),
-          max(col("running_count")).as("max_rc"),
-          min(col("running_count")).as("min_rc"),
-          countDistinct(col("running_count")).as("n_rc"),
-          sum(col("doc_id")).cast("long").as("sum_doc_id"))
-    }),
-
-    // The STREAMING-DEDUPLICATE state family under the hash gate (the
-    // third stateful operator kind after flatMapGroupsWithState and
-    // stateStoreSave): documents replay as 4 in-order micro-batches
-    // through dropDuplicatesWithinWatermark keyed on the content md5.
-    // WHICH copy of a same-batch duplicate survives is operator-internal,
-    // so the readout groups the sink by fp — the gate asserts EXACTLY ONE
-    // survivor per distinct content came out of the real streaming state
-    // machinery (n_out folds any duplicate emission into a count the
-    // oracle's literal 1 would catch).
-    "q_stream_dedup_gate" -> ((s, dir) => {
-      // the corpus has no byte-identical texts, so PLANT late-arriving
-      // exact copies (every 10th doc re-ids at +100000 -> later ts ->
-      // later segments): the n_out = 1 check then PROVES the state
-      // machinery dropped 10% of the stream across micro-batches
-      val base0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dupes = base0.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + lit(100000L)).as("doc_id"), col("text"))
-      val docs = base0.unionByName(dupes).select(col("doc_id"), col("text"),
-        timestamp_micros(lit(1700000000000000L) +
-          col("doc_id") * lit(1000000L)).as("ts"))
-      streamGate(s, docs, Seq(col("ts"), col("doc_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.dedupExact(src(), "ts", "30 days")
-      })._1
-        .groupBy(md5(col("text")).as("fp"))
-        .agg(count(lit(1)).cast("long").as("n_out"),
-          max(col("text")).as("text"))
-    }),
-
-    // STREAMING SPAN DEDUP under the hash gate — dedupExact's
-    // sub-document twin (dedupSpans = chunk at ingest, first arrival of
-    // each distinct 32-token span passes, state = 16-byte md5 per span):
-    // the same planted late-arriving duplicate docs, whose EVERY span must
-    // be dropped by the cross-micro-batch state. WHICH copy of a
-    // same-batch duplicate span survives is operator-internal, so the
-    // readout groups the sink by span fingerprint — exactly one survivor
-    // per distinct span, membership = the batch chunker's distinct spans.
-    "q_stream_spandedup_gate" -> ((s, dir) => {
-      val base0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val dupes = base0.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + lit(100000L)).as("doc_id"), col("text"))
-      val docs = base0.unionByName(dupes).select(col("doc_id"), col("text"),
-        timestamp_micros(lit(1700000000000000L) +
-          col("doc_id") * lit(1000000L)).as("ts"))
-      streamGate(s, docs, Seq(col("ts"), col("doc_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.dedupSpans(
-          src(), "ts", "30 days", maxTokens = 32)
-      })._1
-        .groupBy(md5(col("chunk")).as("fp"))
-        .agg(count(lit(1)).cast("long").as("n_out"),
-          max(col("chunk")).as("chunk"))
-    }),
-
-    // CHAINED MULTI-STATEFUL streaming under the hash gate: content dedup
-    // (dropDuplicatesWithinWatermark, state store #1) THEN a tumbling
-    // hourly count per source (windowed agg, state store #2) in ONE
-    // streaming query — the production ingest shape none of the
-    // single-stateful gates exercises. The planted byte-identical copies
-    // ride in the 5th segment (a SEPARATE micro-batch, so which copy
-    // survives is never same-batch-nondeterministic): the dedup store,
-    // populated by batches 1-4, must drop all of them across the batch
-    // boundary, and the window store must therefore count ONLY the
-    // original rows. The far sentinel advances the final watermark past
-    // every real window end (its own forever-open window stays in state,
-    // never emitted). Oracle restates both stages declaratively:
-    // first-arrival survivor per distinct text, then the hourly rollup.
-    "q_stream_chained_gate" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("text"))
-        .withColumn("ts", timestamp_micros(lit(1700000000000000L) +
-          col("doc_id") * lit(1000000L)))
-      val dupes = base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + lit(100000L)).as("doc_id"), col("source"),
-          col("text"))
-        .withColumn("ts", timestamp_micros(lit(1700000000000000L) +
-          col("doc_id") * lit(1000000L)))
-      val maxTs = dupes.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(lit(-1L).as("doc_id"),
-        lit("__wm_flush__").as("source"), lit("__wm_flush__").as("text"),
-        timestamp_micros(lit(maxTs + 31L * 86400L * 1000000L)).as("ts"))
-      streamGate(s, base, Seq(col("ts"), col("doc_id")),
-          extraLast = Some(dupes.unionByName(sentinel)))(FileSink { src =>
-        graft.streaming.StreamingPipeline.dedupThenWindowCounts(
-          src(), "ts", "30 days", keyCol = "source")
-      })._1
-        .where(col("source") =!= "__wm_flush__")
-        .select(unix_timestamp(col("w_start")).as("w_start"), col("source"),
-          col("n"))
-    }),
-
-    // STREAM-STATIC SEMANTIC DEDUP under the hash gate: the incremental
-    // SemDeDup ingest (q_dedup_semantic_incr's exact plan — new crawl
-    // batch vs the static kept corpus, one cluster-keyed LEFT ANTI with
-    // the twin test in the condition) run through the REAL streaming
-    // engine as 4 in-order micro-batches. The join is stateless
-    // stream-static (corpus side never updates, zero streaming state), so
-    // the accumulated sink must hash-match the BATCH oracle row for row —
-    // which is precisely why the same plan is the 100 TB ingest-time
-    // semantic dedup: restart-safe via the checkpoint, no state store
-    // growth, corpus never rewritten.
-    "q_stream_semantic_gate" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 3 === 0)
-      streamGate(s, emb.filter(col("vec_id") % 3 =!= 0),
-          Seq(col("vec_id")))(FileSink { src =>
-        Dedup.semanticDedupAgainstCorpus(src(), corpus, k = 8, threshold = 0.4)
-      })._1
-    }),
-
-    // STREAM-STATIC DRIFT Z-SCORING under the hash gate: arriving docs
-    // scored against the static corpus's per-source moments
-    // (q_standardize_incr's exact plan) — the stats side aggregates once
-    // and broadcasts, the stream side is a stateless join, so the
-    // append-mode sink equals the batch relation verbatim.
-    "q_stream_standardize_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      streamGate(s, docs.filter(col("doc_id") % 5 === 0),
-          Seq(col("doc_id")))(FileSink { src =>
-        Curation.standardizeAgainstCorpus(src(), corpus, "n_tokens",
-          groupCols = Seq("source"))
-      })._1
-    }),
-
-    // STREAM-STATIC BIGRAM-RARITY SCORING under the hash gate, through
-    // the foreachBatch SCORING sink: the per-doc rollup
-    // (q_bigram_lm_incr's plan) is a streaming AGGREGATION — update-mode
-    // only in one incremental plan, which no file sink accepts — but a
-    // doc's score depends only on its own row + the static corpus, so
-    // applying the batch relation PER MICRO-BATCH is semantically exact.
-    // Each arriving doc is scored against the static bigram/unigram
-    // censuses and appended; the accumulated sink hash-matches the batch
-    // oracle. (The in-plan update-mode execution stays pinned in
-    // StreamingSpec; this gates the deliverable-sink form.)
-    "q_stream_bigramlm_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      streamGate(s,
-          docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          Seq(col("doc_id")))(ScoredSink { batch =>
-        Curation.bigramRarityAgainstCorpus(batch, corpus)
-      })._1
-    }),
-
-    // STREAMING INGEST PPJOIN under the hash gate: each arriving crawl
-    // micro-batch exact-Jaccard-joined against the static kept corpus
-    // through the foreachBatch scoring sink (a batch's pairs depend only
-    // on its own docs + the corpus, so per-batch application is
-    // semantically exact). The corpus-side rank-postings census is keyed
-    // by the CORPUS document frequencies alone, so `Pins.scopedPersist`'s
-    // sameResult guard keeps ONE cached census across all four
-    // micro-batches — the incremental discipline that makes this the
-    // 100 TB ingest-time exact near-dup check. Oracle: the batch
-    // cross-side brute force (q_dedup_ppjoin_incr's own SQL).
-    "q_stream_ppjoin_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      streamGate(s,
-          docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          Seq(col("doc_id")))(ScoredSink { batch =>
-        Dedup.ppjoinAgainstCorpus(batch, corpus, threshold = 0.5)
-      })._1
-    }),
-
-    // STREAMING INGEST DRIFT MONITORING under the hash gate: each
-    // arriving micro-batch's Jensen-Shannon divergence against the
-    // static reference corpus through the foreachBatch scoring sink —
-    // ONE drift row per micro-batch (the alert a production ingest
-    // pipeline pages on), so unlike the per-row scoring gates the
-    // accumulated sink is a per-SEGMENT relation: the oracle replays the
-    // 4-way ntile staging and computes each segment's divergence with
-    // the same quantized-ln integer arithmetic. The corpus-side shingle
-    // histogram is a pure function of the static corpus (re-derived per
-    // batch inside one plan — each micro-batch is one corpus scan, the
-    // stream-static discipline).
-    "q_stream_jsd_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      strDecimals(streamGate(s,
-          docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          Seq(col("doc_id")))(ScoredSink { batch =>
-        Curation.jsDivergence(batch, corpus)
-      })._1)
-    }),
-
-    // STREAMING PER-BATCH WASSERSTEIN-1 DRIFT under the gate — the
-    // numeric-MAGNITUDE companion of q_stream_jsd_gate's distributional
-    // readout: each micro-batch's earth-mover's distance vs the static
-    // reference cohort, in the column's own units (one drift row per
-    // batch through the exactly-once scoring sink). The oracle replays
-    // the 4-way ntile staging and each segment's W1 with the identical
-    // integer-x-quantized-gap arithmetic.
-    "q_stream_w1_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-      val ref = events.filter(col("user_id") % 5 =!= 0)
-        .select(col("value"), lit(false).as("__b"))
-      strDecimals(streamGate(s,
-          events.filter(col("user_id") % 5 === 0)
-            .select(col("ts"), col("event_id"), col("value")),
-          Seq(col("ts"), col("event_id")))(ScoredSink { batch =>
-        Curation.wasserstein1(
-          ref.unionByName(batch.select(col("value"), lit(true).as("__b"))),
-          "value", col("__b"))
-      })._1)
-    }),
-
-    // STREAMING PER-BATCH CHI-SQUARE DRIFT under the gate — the
-    // CATEGORICAL member of the streaming drift trio (JSD = whole
-    // distribution, W1 = numeric magnitude, chi2 = category mix): each
-    // micro-batch's event-type mix tested against the static reference
-    // cohort, per-category rows + chi2/Cramer's V through the
-    // exactly-once scoring sink.
-    "q_stream_chi2_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-      val ref = events.filter(col("user_id") % 5 =!= 0)
-        .select(col("event_type"), lit(false).as("__b"))
-      streamGate(s,
-          events.filter(col("user_id") % 5 === 0)
-            .select(col("ts"), col("event_id"), col("event_type")),
-          Seq(col("ts"), col("event_id")))(ScoredSink { batch =>
-        Curation.chi2Drift(
-          ref.unionByName(batch.select(col("event_type"),
-            lit(true).as("__b"))),
-          "event_type", col("__b"))
-      })._1
-    }),
-
-    // STREAMING SUBSEQUENCE PATTERN MATCH under the hash gate — the
-    // live-motif twin of q_ts_pattern (flatMapGroupsWithState carrying a
-    // w-1 value rolling buffer per user): every arriving event completes
-    // a window, z-normalized distance in the batch operator's exact fold
-    // order, threshold-emit. In-order replay makes the sink EQUAL the
-    // batch sliding-window distances at dist <= 1.0 — the oracle is
-    // q_ts_pattern's own CTE chain with the top-k cut swapped for the
-    // threshold.
-    "q_stream_pattern_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.patternMatch(src(),
-          pattern = Array(0.0, 1.0, 3.0, 7.0, 3.0, 1.0), threshold = 1.0)
-      })._1
-        .select(col("user_id"), col("end_ts_us"), col("dist"))
-    }),
-
-    // The CDC streaming gate UNDER THE ROCKSDB STATE-STORE PROVIDER —
-    // provider parity as a CORRECTNESS row, not just a probe: the same
-    // flatMapGroupsWithState drain with every state read/write going
-    // through RocksDB (the 10⁹-key deployment config) must produce the
-    // identical materialized view, byte for byte under the oracle hash.
-    "q_stream_cdc_rocksdb_gate" -> ((s, dir) => {
-      val log = ev(s, dir).select(col("user_id"),
-        when(col("event_id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        col("value"), unix_micros(col("ts")).as("ts_us"),
-        col("ts"), col("event_id"))
-      val sink = streamGate(s, log, Seq(col("ts"), col("event_id")),
-          confs = Map("spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(FileSink {
-        src =>
-          graft.streaming.StreamingPipeline.cdcLatestStream(
-            src(), payloadCols = Seq("value", "ts_us"))
-      })._1
-      sink.groupBy("user_id")
-        .agg(max_by(struct(col("op"), col("value"), col("ts_us")),
-          col("n_ops")).as("w"), max(col("n_ops")).as("n_ops"))
-        .where(col("w.op") =!= "D")
-        .select(col("user_id"), col("w.value").as("value"),
-          col("w.ts_us").cast("long").as("ts_us"),
-          col("n_ops").cast("long").as("n_ops"))
-    }),
-
-    // The WATERMARKED WINDOWED-AGG streaming mode under the hash gate —
-    // the other stateful-operator family (stateStoreSave, where the CDC
-    // gate exercises flatMapGroupsWithState). Hourly OHLC bars stream over
-    // 4 in-order segments plus a SENTINEL segment (one far-future row on a
-    // sentinel key) that pushes the global watermark past every real bar,
-    // so Append mode emits the complete bar set; Spark's no-data batch
-    // after the final watermark advance flushes the state. Each bar emits
-    // exactly once, so the sink (minus the sentinel's own forever-open
-    // bar, which never emits, and minus nothing else) IS the batch
-    // operator's output — the oracle is q_ohlc's own SQL.
-    "q_stream_ohlc_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("value"), col("event_id"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(
-        lit("__wm_flush__").as("event_type"),
-        timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
-        lit(0.0).as("value"), lit(-1L).as("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel))(FileSink { src =>
-        graft.streaming.StreamingPipeline.ohlcBars(src())
-      })._1
-        .where(col("event_type") =!= "__wm_flush__")
-        .select(col("event_type"), col("bucket_us"), col("open"), col("high"),
-          col("low"), col("close"), col("volume_cents"), col("n_events"))
-    }),
-
-    // The plain TUMBLING-WINDOW streaming aggregate under the hash gate —
-    // the single most common streaming query, same sentinel-flush recipe
-    // as the OHLC gate (watermarked stateStoreSave, Append emits each
-    // window once when the watermark passes it): the sink minus the
-    // sentinel's forever-open window IS the batch hourly count table.
-    // SKETCHING under the hash gate (20th streaming family): per-window
-    // distinct-user KMV sketches maintained by the mergeable
-    // TypedImperativeAggregate THROUGH THE STATE STORE across
-    // micro-batches — the streaming distinct-count dashboard, with the
-    // sketch content (k smallest distinct md5-60 hashes) and the fixed-
-    // order estimator hash-exact against the batch oracle. Sentinel-flush
-    // discipline of q_stream_window_gate.
-    "q_stream_kmv_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"), col("user_id"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(
-        lit("__wm_flush__").as("event_type"),
-        timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
-        lit(-1L).as("event_id"),
-        lit(-1L).as("user_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel))(FileSink { src =>
-        src().withWatermark("ts", "2 hours")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(Sketches.kmvSketch(col("user_id").cast("string"), 32).as("sk"))
-          .select(col("window.start").as("w_start"), col("event_type"),
-            size(col("sk")).cast("long").as("n_minima"),
-            // user_id is never null in this stream, but guard the empty
-            // sketch anyway (element_at(…, 0) would throw at runtime)
-            when(size(col("sk")) > 0,
-              element_at(col("sk"), least(size(col("sk")), lit(32)))).as("kth"),
-            Sketches.kmvEstimate(col("sk"), 32).as("est"))
-      })._1
-        .where(col("event_type") =!= "__wm_flush__")
-        .select(unix_timestamp(col("w_start")).as("w_start"),
-          col("event_type"), col("n_minima"), col("kth"), col("est"))
-    }),
-
-    "q_stream_window_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(
-        lit("__wm_flush__").as("event_type"),
-        timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
-        lit(-1L).as("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel))(FileSink { src =>
-        graft.streaming.StreamingPipeline.windowedCounts(src())
-      })._1
-        .where(col("event_type") =!= "__wm_flush__")
-        .select(unix_timestamp(col("w_start")).as("w_start"),
-          col("event_type"), col("n"))
-    }),
-
-    // LATE-DATA ACCOUNTING under the hash gate: the tumbling-window drain
-    // with ~7.7% of the events withheld and replayed AFTER the in-order
-    // segments established the watermark. Spark drops a late row iff its
-    // window END ≤ the filter watermark (boundary pinned in
-    // StreamingRecoverySpec), and — the production subtlety this gate
-    // exists to pin — a watermark advance takes effect ONE TRIGGER LATER:
-    // the late batch (5th file) filters under the watermark planned from
-    // data through segment 3, not segment 4 (verified against the
-    // checkpoint offset log: batch 4 filtered at offsets/3's
-    // batchWatermarkMs). So W = max ts of the first 3 ntile segments −
-    // 2h; the kept set is main ∪ {late rows in windows ending after W},
-    // and the DROPPED count (summed numRowsDroppedByWatermark over every
-    // StreamingQueryProgress — the signal a production watermark pipeline
-    // alarms on) rides the same hash as a (-1, '__dropped__', n)
-    // accounting row. Second pinned subtlety: the metric counts rows
-    // dropped AT THE STATE STORE — i.e., after the map-side partial
-    // aggregation — so it is the number of dropped (window, key) GROUPS
-    // in the late batch, not raw input rows (561 groups over 575 rows
-    // here). The oracle restates all of it from the staging + watermark
-    // arithmetic alone (ntile replay + DISTINCT group count).
-    "q_stream_late_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"))
-      val main = events.filter(col("event_id") % 13 =!= 0)
-      val late = events.filter(col("event_id") % 13 === 0)
-      val maxTs = main.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(
-        lit("__wm_flush__").as("event_type"),
-        timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"),
-        lit(-1L).as("event_id"))
-      val (sink, dropped) = streamGate(s, main,
-          Seq(col("ts"), col("event_id")),
-          extraLast = Some(late.union(sentinel)))(FileSink { src =>
-        graft.streaming.StreamingPipeline.windowedCounts(src())
-      })
-      sink.where(col("event_type") =!= "__wm_flush__")
-        .select(unix_timestamp(col("w_start")).as("w_start"),
-          col("event_type"), col("n"))
-        .union(s.range(1).select(lit(-1L).as("w_start"),
-          lit("__dropped__").as("event_type"), lit(dropped).as("n")))
-    }),
-
-    // The SLIDING-WINDOW variant under the hash gate: each event lands in
-    // windowLen/slide = 2 overlapping windows; the sentinel (placed past
-    // watermark + the longest window) flushes every real window. Oracle =
-    // q_events_sliding's own SQL.
-    "q_stream_sliding_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(
-        lit("__wm_flush__").as("event_type"),
-        timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"),
-        lit(-1L).as("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel))(FileSink { src =>
-        graft.streaming.StreamingPipeline.slidingCounts(
-          src(), windowLen = "2 hours", slide = "1 hour")
-      })._1
-        .where(col("event_type") =!= "__wm_flush__")
-        .select(unix_timestamp(col("w_start")).as("w_start"),
-          col("event_type"), col("n"))
-    }),
-
-    // The streaming SESSIONIZER under the hash gate (5th stateful family:
-    // per-event labeling through flatMapGroupsWithState keyed state, where
-    // the CDC gate emits per-key views and the dedup gate drops rows):
-    // events replay as 4 time-ordered micro-batches; each event gains its
-    // user's session ordinal, chained across batches through the
-    // (lastTs, idx) state. On in-order replay the labels equal the batch
-    // operator's, so the oracle is q_sessionize's own SQL.
-    "q_stream_sessionize_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.sessionize(src(), gap = "30 minutes")
-      })._1
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("session_idx"))
-    }),
-
-    // The streaming TRANSITION EMITTER under the hash gate (6th family):
-    // per-user (last ts, last type) state emits consecutive event-type
-    // pairs as the stream arrives; the sink then rolls up to the Markov
-    // matrix with the exact aggregation the batch operator uses, so the
-    // oracle is q_event_transitions' own SQL.
-    "q_stream_transitions_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      val pairs = streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.transitions(src())
-      })._1
-        .filter(col("to_type").isNotNull)
-      val counts = pairs.groupBy("from_type", "to_type")
-        .agg(count(lit(1)).as("n"))
-      val totals = counts.groupBy("from_type").agg(sum(col("n")).as("n_from"))
-      counts.join(totals, Seq("from_type"))
-        .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
-          (col("n").cast("double") / col("n_from")).as("p"))
-    }),
-
-    // The IDLE-TIMEOUT EVICTION path under the hash gate: per-user
-    // transition state is FREED once the watermark passes lastTs +
-    // idleTimeout (EventTimeTimeout), and dormant users RETURN across
-    // the 4 segments — their first return event starts pairless from
-    // empty state. Gateable because maxGap <= idleTimeout makes the
-    // bounded-state result EXACT on in-order replay: eviction needs
-    // wm > lastTs + idle, the return event's ts >= wm + delay, so any
-    // pair eviction could suppress already exceeds maxGap and is
-    // dropped by the gap check in both engines — the documented
-    // no-valid-pair-lost contract, now oracle-verified end-to-end.
-    "q_stream_transitions_idle_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.transitions(
-          src().withWatermark("ts", "2 hours"),
-          maxGap = Some("30 minutes"), idleTimeout = Some("45 minutes"))
-      })._1
-        .filter(col("to_type").isNotNull)
-        .select(col("user_id"), col("from_type"), col("to_type"))
-    }),
-
-    // The streaming SEQUENCE EMITTER under the gate (32nd family): the
-    // last n-1 event types per user ride in keyed state, every arriving
-    // event completes a contiguous triple as the stream arrives; the
-    // sink then rolls up to occurrences + distinct-user support with
-    // exactly the batch aggregation, so on in-order replay the oracle
-    // is q_seq3's own SQL.
-    "q_stream_seq3_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      val grams = streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink {
-        src => graft.streaming.StreamingPipeline.sequences(src(), n = 3)
-      })._1
-      grams.groupBy("t0", "t1", "t2")
-        .agg(count(lit(1)).cast("long").as("n_occurrences"),
-          count_distinct(col("user_id")).cast("long").as("support"))
-        .filter(col("support") >= 2)
-    }),
-
-    // The SESSION-WINDOW AGGREGATION streaming mode under the hash gate
-    // (7th stateful family: sessionWindowStateStore — merging-window
-    // state, distinct from the fixed-window stateStoreSave the OHLC gate
-    // covers): per-type session counts stream over 4 in-order segments
-    // plus the OHLC gate's sentinel segment (far-future row pushing the
-    // watermark past every real session, so Append emits the complete
-    // session set; the sentinel's own forever-open session never emits).
-    // The oracle is q_events_sessions' own SQL.
-    "q_stream_sessions_gate" -> ((s, dir) => {
-      val events = ev(s, dir).select(col("event_type"), col("ts"), col("event_id"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinel = s.range(1).select(
-        lit("__wm_flush__").as("event_type"),
-        timestamp_micros(lit(maxTs + 4L * 3600L * 1000000L)).as("ts"),
-        lit(-1L).as("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinel))(FileSink { src =>
-        graft.streaming.StreamingPipeline.sessionCounts(
-          src(), gap = "30 minutes", watermark = Some("2 hours"))
-      })._1
-        .where(col("event_type") =!= "__wm_flush__")
-        .select(unix_micros(col("s_start")).as("s_start"),
-          col("event_type"), col("n"))
-    }),
-
-    // The STREAM-STREAM INTERVAL JOIN under the hash gate (8th stateful
-    // family: symmetricHashJoin — watermark-bounded buffered state on
-    // BOTH sides): the purchase and click streams read the SAME 4
-    // in-order segments through two independent file sources; each
-    // purchase joins that user's clicks in the preceding 30 minutes.
-    // Inner-join matches emit as found, and in-order replay means no row
-    // is ever late against the pair watermark, so the sink equals the
-    // batch interval join — the oracle is plain SQL over events.
-    "q_stream_join_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.intervalJoin(
-          src().filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          src().filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours")
-      })._1
-        .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("click_id"), unix_micros(col("cts")).as("cts_us"))
-    }),
-
-    // The SECOND chained multi-stateful shape: stream-stream interval
-    // JOIN (state stores buffering both sides) feeding a watermarked
-    // tumbling-window AGGREGATION (a third state store) in ONE streaming
-    // query — the attribution-rollup production shape ("attributed
-    // purchases per hour"). The same per-side sentinels advance both
-    // watermarks for the final window flush; they join nothing (distinct
-    // user_ids), so no readout filter is even needed. Oracle: the batch
-    // join + hourly rollup.
-    "q_stream_join_window_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinels = s.range(1).select(
-        lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-        lit("purchase").as("event_type"),
-        timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"))
-        .union(s.range(1).select(
-          lit(-2L).as("event_id"), lit(-2L).as("user_id"),
-          lit("click").as("event_type"),
-          timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels))(FileSink { src =>
-        graft.streaming.StreamingPipeline.intervalJoin(
-          src().filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          src().filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours")
-          .groupBy(window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("n_attributed"))
-          .select(col("window.start").as("w_start"), col("n_attributed"))
-      })._1
-        .select(unix_timestamp(col("w_start")).as("w_start"),
-          col("n_attributed"))
-    }),
-
-    // STREAM-STREAM LEFT OUTER interval join under the hash gate — the
-    // null-emission-on-watermark surface the inner gate can't exercise:
-    // every purchase emits exactly once, matched rows as they resolve,
-    // UNMATCHED rows only when the watermark proves no qualifying click
-    // can still arrive (held in state until then — late-data correctness
-    // over latency). One far sentinel PER SIDE (both pass their stream's
-    // filter, so both watermarks advance; distinct sentinel user_ids so
-    // they never join) drives the final watermark past every real
-    // purchase, flushing the null-matched remainder; the sentinels' own
-    // rows stay in state (nothing outranks them) and are filtered by id
-    // sign anyway. Oracle: the batch LEFT JOIN with the click predicates
-    // in the ON clause.
-    "q_stream_join_outer_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinels = s.range(1).select(
-        lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-        lit("purchase").as("event_type"),
-        timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"))
-        .union(s.range(1).select(
-          lit(-2L).as("event_id"), lit(-2L).as("user_id"),
-          lit("click").as("event_type"),
-          timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels))(FileSink { src =>
-        graft.streaming.StreamingPipeline.intervalJoin(
-          src().filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          src().filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours",
-          joinType = "left_outer")
-      })._1
-        .where(col("buy_id") >= 0)
-        .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("click_id"), unix_micros(col("cts")).as("cts_us"))
-    }),
-
-    // ...the RIGHT OUTER mirror — every click emits exactly once, the
-    // unconverted ones with null purchase columns once the watermark
-    // clears them (join keys coalesce, so an unmatched click keeps its
-    // user_id)...
-    "q_stream_join_right_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinels = s.range(1).select(
-        lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-        lit("purchase").as("event_type"),
-        timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"))
-        .union(s.range(1).select(
-          lit(-2L).as("event_id"), lit(-2L).as("user_id"),
-          lit("click").as("event_type"),
-          timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels))(FileSink { src =>
-        graft.streaming.StreamingPipeline.intervalJoin(
-          src().filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          src().filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours",
-          joinType = "right_outer")
-      })._1
-        .where((col("buy_id").isNull || col("buy_id") >= 0) &&
-          col("click_id") >= 0)
-        .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("click_id"), unix_micros(col("cts")).as("cts_us"))
-    }),
-
-    // ...and the FULL OUTER form — the reconciliation shape ("which
-    // purchases had no touch AND which touches converted nothing"): both
-    // sides' unmatched rows emit with nulls once the watermark clears
-    // them; join keys COALESCE across sides so an unmatched click keeps
-    // its user_id. Same two per-side sentinels; the readout admits null
-    // ids (that is the point) and excludes only the negative sentinel ids.
-    "q_stream_join_full_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinels = s.range(1).select(
-        lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-        lit("purchase").as("event_type"),
-        timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts"))
-        .union(s.range(1).select(
-          lit(-2L).as("event_id"), lit(-2L).as("user_id"),
-          lit("click").as("event_type"),
-          timestamp_micros(lit(maxTs + 8L * 3600L * 1000000L)).as("ts")))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels))(FileSink { src =>
-        graft.streaming.StreamingPipeline.intervalJoin(
-          src().filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          src().filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours",
-          joinType = "full_outer")
-      })._1
-        .where((col("buy_id").isNull || col("buy_id") >= 0) &&
-          (col("click_id").isNull || col("click_id") >= 0))
-        .select(col("buy_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("click_id"), unix_micros(col("cts")).as("cts_us"))
-    }),
-
-    // STREAM-STREAM LEFT SEMI interval join under the gate — the
-    // existence form ("did a qualifying click precede this purchase")
-    // WITHOUT carrying click columns: each purchase emits AT MOST once,
-    // on its first in-window match, never with nulls. No sentinels
-    // needed: matched rows emit as matches arrive (like inner) and
-    // unmatched rows are simply evicted without emission — there is no
-    // null flush to force. Oracle: the batch EXISTS twin.
-    "q_stream_join_semi_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        graft.streaming.StreamingPipeline.intervalJoin(
-          src().filter(col("event_type") === "purchase")
-            .select(col("event_id").as("buy_id"), col("user_id"), col("ts")),
-          src().filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("cts")),
-          Seq("user_id"), "ts", "cts",
-          within = "30 minutes", watermark = "2 hours",
-          joinType = "left_semi")
-      })._1
-        .select(col("buy_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"))
-    }),
-
-    // The streaming ANOMALY DETECTOR under the hash gate (9th family —
-    // the ingest-time alerting path: per-key ring state of the trailing
-    // 24 closed hour buckets, flagged by the cross-multiplied integer
-    // z-test). A bucket only emits when a LATER bucket arrives for the
-    // same key, so a far-future sentinel event PER KEY closes every real
-    // bucket (the OHLC sentinel idea, per-key because this state is
-    // per-key, not watermark-driven); the sentinel's own forever-open
-    // bucket never emits. On in-order replay the sink IS the batch
-    // detector's output — the oracle is q_anomaly's own SQL.
-    "q_stream_anomaly_gate" -> ((s, dir) => {
-      val events = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"))
-      val maxTs = events.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      val sentinels = events.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          timestamp_micros(lit(maxTs + 48L * 3600L * 1000000L)).as("ts"),
-          lit(-1L).as("event_id"))
-      streamGate(s, events, Seq(col("ts"), col("event_id")),
-          extraLast = Some(sentinels))(FileSink { src =>
-        graft.streaming.StreamingPipeline.anomalyFlags(src())
-      })._1
-        .select(col("event_type"), col("bucket_us"), col("n"), col("s_prev"),
-          col("ss_prev"), col("w_prev"), col("is_anomaly"))
-    }),
-
-    // The STREAM-STATIC AS-OF JOIN under the hash gate (the zero-state
-    // streaming path: the snapshot side broadcasts as validity intervals,
-    // each micro-batch is a stateless hash lookup): purchases replay as 4
-    // micro-batches against the static view-snapshot frame — the exact
-    // composition q_asof_iv gates in batch mode, now executed by the real
-    // streaming engine. Stateless ⇒ the sink equals the batch join row
-    // for row; the oracle is q_asof_iv's own DuckDB ASOF SQL.
-    "q_stream_asof_gate" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("value").as("view_value"))
-      streamGate(s, purchases, Seq(col("ts"), col("event_id")))(FileSink { src =>
-        operators.AsOfJoin.asofJoinStreamStatic(src(), views, Seq("user_id"))
-      })._1
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("asof_view_value").as("view_value"),
-          unix_micros(col("asof_ts")).as("view_ts_us"))
-    }),
-
-    // Training-shard export END-TO-END under the hash gate: the corpus is
-    // written as deterministic ~256 KiB JSONL shards (salted-md5
-    // assignment, shard count from the portable byte estimator), then the
-    // SHARDS THEMSELVES are read back — so JSON escaping fidelity, the
-    // partitioned layout, and the in-plan shard derivation are all inside
-    // the oracle compare (a text byte lost to serialization flips the
-    // hash).
-    "q_export_shards" -> ((s, dir) =>
-      exportAndReadShards(s,
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        "graft_export_gate_", maxShardBytes = 256L * 1024)),
-
-    // CSV sink/source ROUND TRIP under the hash gate (RFC-4180 fidelity):
-    // every payload gains the hazards that break naive writers — an
-    // embedded comma and a double-quoted token, plus a REAL newline on
-    // doc_id%5 — written with the RFC quote-doubling escape (escape =
-    // quote) and read back with multiLine quoted-newline parsing; the
-    // oracle recomputes the decorated payload from the parquet original,
-    // so quoting, escaping, and newline round-tripping all sit under the
-    // hash. Scale note: multiLine=true reads each FILE unsplit (the price
-    // of quoted newlines) — newline-bearing exports keep parallelism
-    // through file COUNT, which the write side's partitioning already
-    // provides.
-    "q_sink_csv" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val payload = concat(col("text"), lit(", \"quoted\" tail"),
-        when(col("doc_id") % 5 === 0, lit("\nsecond line")).otherwise(lit("")))
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_gate_" +
-        ProcessHandle.current().pid()
-      registerTempDirCleanup(out)
-      t(s, dir, "documents").select(col("doc_id"), payload.as("payload"))
-        .write.mode("overwrite")
-        .option("header", "true").option("escape", "\"")
-        .csv(out)
-      s.read.schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("payload", StringType))))
-        .option("header", "true").option("multiLine", "true")
-        .option("escape", "\"")
-        .csv(out)
-    }),
-
-    // ORC source/sink ROUND TRIP under the hash gate: the documents table
-    // written as ORC (Spark's other built-in columnar format — the lake
-    // interchange case next to parquet/CSV/JSONL) and read back, while
-    // the oracle reads the PARQUET original — type mapping and value
-    // fidelity of the whole write+read cycle sit under the hash.
-    "q_source_orc" -> ((s, dir) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc_gate_" +
-        ProcessHandle.current().pid()
-      registerTempDirCleanup(out)
-      t(s, dir, "documents").write.mode("overwrite").orc(out)
-      s.read.orc(out)
-    }),
-
-    // AVRO source/sink ROUND TRIP under the hash gate: the ROW-oriented
-    // interchange format (Kafka payloads, log shipping) next to the
-    // columnar ORC/parquet gates. This Spark 4.1.2 build ships
-    // AvroFileFormat inside spark-sql itself but does NOT register it in
-    // META-INF/services (the `avro` alias fails with the "deploy
-    // spark-avro" error even though the class is on the classpath), so
-    // the gate addresses the FileFormat by fully-qualified class name —
-    // the documented lookupDataSource fallback. Same contract as
-    // q_source_orc: write + read back while the oracle reads the parquet
-    // original, putting the Avro type mapping (long/string/int) and
-    // value fidelity under the hash.
-    "q_source_avro" -> ((s, dir) => {
-      val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_avro_gate_" +
-        ProcessHandle.current().pid()
-      registerTempDirCleanup(out)
-      t(s, dir, "documents").write.mode("overwrite").format(avroFmt).save(out)
-      s.read.format(avroFmt).load(out)
-    }),
-
-    // XML source/sink ROUND TRIP under the hash gate: the third
-    // interchange family (hierarchical/tag-delimited — feeds, sitemaps,
-    // API exports) next to columnar ORC and row-oriented Avro. Spark 4
-    // ships the XML source built in (SPARK-44265). An explicit read
-    // schema pins types (XML inference widens everything to long/
-    // string); escaping of &, <, > and value fidelity of the whole
-    // write+read cycle sit under the hash vs the parquet original.
-    "q_source_xml" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_xml_gate_" +
-        ProcessHandle.current().pid()
-      registerTempDirCleanup(out)
-      t(s, dir, "documents").write.mode("overwrite")
-        .option("rowTag", "doc").format("xml").save(out)
-      s.read.schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType), StructField("lang", StringType),
-          StructField("source", StringType), StructField("n_chars", LongType))))
-        // default=true TRIMS surrounding whitespace on read — fidelity
-        // first (probe: "  padded  " came back "padded" without this)
-        .option("ignoreSurroundingSpaces", "false")
-        .option("rowTag", "doc").format("xml").load(out)
-    }),
-
-    // Per-user activity trend: exact-integer least-squares slope fraction
-    // over (day, daily count) points — two partial-agg shuffles, zero
-    // windows, bit-exact where regr_slope's float accumulation is not.
-    "q_trend" -> ((s, dir) => operators.EventSignals.activityTrend(ev(s, dir))),
-
-    // OHLC hourly bars: open/close via partial-aggregable min_by/max_by
-    // (the exchange carries bars, not events), volume as exact cents.
-    "q_ohlc" -> ((s, dir) => operators.EventSignals.ohlcBars(ev(s, dir))),
-
-    // Holt double-exponential smoothing: per-user daily-count level +
-    // trend + 7-day forecast — a fixed-order left fold over exact integer
-    // counts with dyadic alpha/beta, so the doubles hash bit-exact.
-    "q_holt_forecast" -> ((s, dir) =>
-      operators.TimeSeries.holtForecast(ev(s, dir))),
-
-    // Holt–Winters TRIPLE smoothing: weekly (p=7) ADDITIVE seasonality on
-    // top of level+trend — first-period seed (mean + residual slots),
-    // then the same fixed-order fold updating one seasonal slot per
-    // observed day; season/forecast read the slot horizon 3 lands on.
-    // Dyadic alpha/beta/gamma keep every double an exact IEEE replay of
-    // the recursive-CTE oracle.
-    "q_holt_winters" -> ((s, dir) =>
-      operators.TimeSeries.holtWinters(ev(s, dir), period = 7,
-        alpha = 0.5, beta = 0.25, gamma = 0.25, horizon = 3)),
-
-    // Time-series subsequence search: top-10 z-normalized matches of a
-    // spike pattern across every user's value series — one keyed window
-    // sort, scan-local fold distances, two-level top-k.
-    "q_ts_pattern" -> ((s, dir) =>
-      operators.TimeSeries.patternTopK(ev(s, dir),
-        pattern = Array(0.0, 1.0, 3.0, 7.0, 3.0, 1.0), k = 10)),
-
-    // k-core of the co-purchase graph (k=80): iterative peel with pinned
-    // live edges, one degree shuffle + two node semi-joins per round,
-    // only a COUNT per round on the driver. The oracle runs the same
-    // peel unrolled to 8 rounds (> the measured convergence depth 5;
-    // peeling is confluent and idempotent past the fixed point).
-    "q_kcore" -> ((s, dir) =>
-      operators.Graph.kCore(
-        operators.Graph.coOccurrenceEdges(
-          t(s, dir, "lineitem"), "l_orderkey", "l_partkey"),
-        k = 80, maxRounds = 12)),
-
-    // Flesch-Kincaid readability: sentence/word/vowel-group counts, all
-    // single codegen'd regexp passes. The synthetic corpus carries no
-    // terminal punctuation, so sentence boundaries are planted
-    // deterministically (every " value " becomes " value. ") identically
-    // in the oracle — the q_gopher/q_redact decoration pattern.
-    "q_readability" -> ((s, dir) => {
-      val decorated = expr("replace(text, ' value ', ' value. ')")
-      t(s, dir, "documents").select(
-        col("doc_id") +: TextFunctions.readabilitySignals(decorated)
-          .map { case (n, c) => c.as(n) }: _*)
-    }),
-
-    // Frequency-threshold heavy hitters at 0.1% of the token stream:
-    // per-partition Misra-Gries candidates (driver-bounded), then an
-    // exact count of ONLY candidates behind a broadcast semi-join — the
-    // shuffle shrinks from |corpus| to |candidate occurrences|, and the
-    // output is exact either way (the sketch prunes, never decides).
-    "q_heavy_hitters" -> ((s, dir) =>
-      Curation.heavyHittersByFraction(t(s, dir, "documents"),
-        fracNum = 1L, fracDen = 1000L)),
-
-    // Funnel time-to-convert distribution: per-user first-view ->
-    // first-purchase-after latency (exact integer microseconds) through
-    // the exact distributed quantile machinery — the latency dashboard
-    // readout composed from funnelTimes + quantileProfile in ONE plan.
-    "q_funnel_latency" -> ((s, dir) => {
-      val lat = operators.Funnel.funnelTimes(ev(s, dir),
-          Seq("view", "purchase"))
-        .filter(col("t2").isNotNull)
-        .select((unix_micros(col("t2")) - unix_micros(col("t1")))
-          .as("latency_us"))
-      Curation.quantileProfile(lat, Seq("latency_us"),
-        Seq(0.25, 0.5, 0.75, 0.9, 0.99))
-    }),
-
-    // Sample-ratio-mismatch hygiene gate: chi2 on the variant unit
-    // counts vs the 50/50 design — integer cross-multiplied significance,
-    // the check that must pass before any lift readout means anything.
-    "q_srm" -> ((s, dir) =>
-      operators.EventSignals.srmCheck(ev(s, dir))),
-
-    // Two-variant experiment readout: per-user conversion collapse, 2x2
-    // chi-square significance as a DECIMAL(38,0) cross-multiplied integer
-    // inequality (alpha = 0.05) — no float in the gate.
-    "q_ab_lift" -> ((s, dir) =>
-      operators.EventSignals.abLift(ev(s, dir))),
-
-    // CUPED variance-reduced A/B: per-user pre/post activity counts
-    // split at the integer epoch-us midpoint, theta = cov/var from exact
-    // decimal moments, adjusted variant means + rho^2 variance-reduction
-    // readout — all fixed-order doubles over exact integers.
-    "q_cuped" -> ((s, dir) =>
-      strDecimals(operators.EventSignals.cupedLift(ev(s, dir)))),
-
-    // Direct standardization — the Simpson's-paradox guard beside SRM:
-    // variant conversion rates re-weighted to the POOLED first-touch
-    // stratum mix (adj(v) = sum_s (N_s/N)*(c_vs/n_vs)), per-stratum
-    // terms quantized to 1e-12 integers so the per-variant sum is
-    // order-free exact.
-    "q_strat_adjust" -> ((s, dir) =>
-      operators.EventSignals.standardizedLift(ev(s, dir))),
-
-    // Sample ACF of the daily event-count series at lags 1..7: the
-    // seasonality diagnostic — zero-filled integer day spine, n^2-scaled
-    // exact integer numerators/denominator, one double division per lag.
-    "q_acf" -> ((s, dir) =>
-      strDecimals(operators.TimeSeries.autocorrelation(ev(s, dir)))),
-
-    // Per-type dispersion (Fano) index of daily counts over the shared
-    // zero-filled calendar: burstiness vs Poisson — exact integer
-    // moments, one double division per type.
-    "q_dispersion" -> ((s, dir) =>
-      strDecimals(operators.TimeSeries.dispersionIndex(ev(s, dir)))),
-
-    // Empirical-Bayes shrunk per-source "long doc" rates: small domains
-    // pull toward the corpus rate with 50 pseudo-trials — the
-    // small-domain fix for per-source quality dashboards.
-    "q_eb_shrink" -> ((s, dir) =>
-      Curation.ebShrinkRates(t(s, dir, "documents"), "source",
-        col("n_chars") > 1000)),
-
-    // Cross-correlation view-vs-purchase at lags -7..7: the lead-lag
-    // diagnostic (a peak at k > 0 = views lead purchases by k days) —
-    // shared zero-filled day spine, exact integer moments, one double
-    // per lag; r_0 is the plain Pearson correlation of the two series.
-    "q_ccf" -> ((s, dir) =>
-      strDecimals(operators.TimeSeries.crossCorrelation(ev(s, dir), "view", "purchase"))),
-
-    // Calendar densification: hourly per-type counts on the FULL hour
-    // spine (quiet hours = 0) — spine is sequence() over broadcast
-    // bounds x the distinct key table, never a raw-event expansion.
-    "q_resample" -> ((s, dir) =>
-      operators.EventSignals.resampleHourly(ev(s, dir))),
-
-    // User growth curve: first-day per user -> day histogram -> prefix
-    // sum — the exact distinct-users-over-time no window can express.
-    "q_user_growth" -> ((s, dir) =>
-      operators.EventSignals.userGrowth(ev(s, dir))),
-
-    // Rolling 7-day distinct active users: distinct (user, day) collapse,
-    // x7 window-day explode of the COLLAPSED table, partial-agg counts —
-    // the sliding-distinct shape no window aggregate can express.
-    "q_rolling_active" -> ((s, dir) =>
-      operators.EventSignals.rollingActiveUsers(ev(s, dir))),
-
-    // Skew levers under oracle: the salted inner join must be row-identical
-    // to the plain join (salting is a physical rewrite, not a semantic one),
-    // and the salted distinct count exactly equals the plain COUNT(DISTINCT).
-    "q_skew_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          col("l_suppkey"))
-      val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
-      graft.ops.Skew.saltedJoin(li, sup.withColumnRenamed("s_suppkey", "l_suppkey"),
-          Seq("l_suppkey"), salt = 8)
-        .select("l_orderkey", "l_linenumber", "l_suppkey", "s_name")
-    }),
-
-    "q_skew_distinct" -> ((s, dir) =>
-      graft.ops.Skew.saltedCountDistinct(
-        ev(s, dir), "event_type", "user_id", salt = 16, outputCol = "n_users")),
-
-    // Gap-based batch sessionization: label every event with its user-scoped
-    // session ordinal (30-minute inactivity gap) — the labeling counterpart
-    // of the streaming session-window aggregate. One keyed shuffle.
-    "q_sessionize" -> ((s, dir) =>
-      operators.Funnel.sessionize(ev(s, dir), gap = "30 minutes")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("session_idx"))),
-
-    // Forward as-of: each view picks the user's EARLIEST purchase at or
-    // after it (time-to-convert lookups). Same machinery, reversed walk.
-    "q_asof_fwd" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val views = e.filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("value").as("p_value"))
-      operators.AsOfJoin.asofJoin(views, purchases, Seq("user_id"), direction = "forward")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("asof_p_value").as("p_value"),
-          unix_micros(col("asof_ts")).as("p_ts_us"))
-    }),
-
-    // As-of join: each purchase picks the user's most recent view at or
-    // before it (point-in-time feature lookup). One keyed shuffle via the
-    // union+window composition — no range-join explosion. Views are
-    // pre-deduped to unique (user, ts) so the latest-match is total-order
-    // deterministic on both engines.
-    "q_asof" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("value").as("view_value"))
-      operators.AsOfJoin.asofJoin(purchases, views, Seq("user_id"))
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("asof_view_value").as("view_value"),
-          unix_micros(col("asof_ts")).as("view_ts_us"))
-    }),
-
-    // C4-style span dedup: chunk every doc into 32-token spans, keep each
-    // distinct span's FIRST occurrence (by doc, then position) across the
-    // whole corpus — the sub-document dedup whole-doc md5 can't see.
-    "q_dedup_spans" -> ((s, dir) => {
-      val chunks = Curation.chunkDocuments(
-        t(s, dir, "documents"), maxTokens = 32, overlap = 0)
-      Dedup.firstOccurrence(chunks, col("chunk"), Seq(col("doc_id"), col("chunk_idx")))
-        .select("doc_id", "chunk_idx")
-    }),
-
-    // Span dedup with reassembly (the C4 shape end-to-end): surviving
-    // 32-token spans rejoin into per-document cleaned text in position
-    // order — one fingerprint window + one doc-keyed agg.
-    "q_dedup_rebuild" -> ((s, dir) => {
-      val chunks = Curation.chunkDocuments(
-        t(s, dir, "documents"), maxTokens = 32, overlap = 0)
-      Dedup.rebuildFromSpans(chunks, "doc_id", "chunk_idx", "chunk")
-    }),
-
-    // The context-window pipeline in one plan: chunk every doc into
-    // 32-token spans -> drop repeated spans (first occurrence wins) ->
-    // pack survivors into 2048-token training sequences. Chunking is a
-    // generator, dedup one fingerprint-keyed window, packing the two-phase
-    // prefix sum — three stages, no driver round-trips.
-    "q_pipeline_chunks" -> ((s, dir) => {
-      val chunks = Curation.chunkDocuments(
-        t(s, dir, "documents"), maxTokens = 32, overlap = 0)
-      val deduped = Dedup.firstOccurrence(
-        chunks, col("chunk"), Seq(col("doc_id"), col("chunk_idx")))
-      Curation.packSequences(deduped, col("n_tokens"),
-          Seq(col("doc_id"), col("chunk_idx")), seqTokens = 2048L)
-        .select(col("doc_id"), col("chunk_idx"), col("seq_id"))
-    }),
-
-    // Stratified exact-N sampling: exactly 5 docs per source, drawn by
-    // salted-md5 rank — deterministic and engine-portable (the oracle
-    // ranks by the same md5 hex).
-    "q_sample_n" -> ((s, dir) =>
-      Curation.sampleNPerGroup(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        Seq("source"), "doc_id", n = 5)),
-
-    // Exactly-N GLOBAL deterministic sample: salted-md5 rank realized via
-    // the two-phase distributed prefix count — no single-task global
-    // window at any corpus size (the trap sampleNPerGroup with a constant
-    // group would hit).
-    "q_sample_n_global" -> ((s, dir) =>
-      Curation.sampleNGlobal(
-        t(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id", n = 100)),
-
-    // Length-bucketed batch assignment (padding-efficiency step): bucket
-    // docs by token count, then 16-doc batches per bucket in salted-md5
-    // order; batch ids globally unique via bucket * 2^40 + index.
-    "q_length_batches" -> ((s, dir) =>
-      Curation.lengthBucketBatches(
-        t(s, dir, "documents").select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        col("n_tokens"), "doc_id", Seq(40.0, 80.0, 120.0), batchSize = 16)),
-
-    // Numeric quantile profile (exact percentile = the oracle path;
-    // approx_percentile is the bounded-state 100 TB path, spec-pinned
-    // against this within rank error).
-    "q_quantiles" -> ((s, dir) =>
-      Curation.quantileProfile(t(s, dir, "orders"),
-        Seq("o_totalprice", "o_custkey"), Seq(0.25, 0.5, 0.75, 0.99))),
-
-    // Per-group quantiles: token-length p50/p99 per source — the length
-    // distribution a curation pass reads before choosing filters.
-    "q_quantiles_group" -> ((s, dir) =>
-      Curation.quantileProfile(
-        t(s, dir, "documents").select(col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        Seq("n_tokens"), Seq(0.5, 0.99), groupCols = Seq("source"))),
-
-    // Corpus set algebra on sketches: |A|, |B|, overlap, diffs, union of
-    // the two halves' content fingerprints — no join, two theta-sketch
-    // binaries. Exact below 2^lgk distinct (this regime), estimate above.
-    "q_corpus_overlap" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.corpusOverlap(
-        docs.filter(col("doc_id") % 2 === 0).select(md5(col("text")).as("fp")),
-        docs.filter(col("doc_id") % 2 === 1).select(md5(col("text")).as("fp")),
-        "fp", lgk = 14)
-    }),
-
-    // Mergeable per-source profiles: row counts + HLL distinct estimates
-    // (rows-only gate: sketch estimates are engine-specific; the merge
-    // soundness — union of shard sketches == sketch of union — is
-    // spec-pinned in CurationSpec).
-    "q_profile_sketch" -> ((s, dir) => {
-      val p = Curation.sketchProfiles(t(s, dir, "documents"),
-        Seq("source"), Seq("text", "lang"))
-      p.select(col("source"), col("n_rows"),
-        hll_sketch_estimate(col("text_sketch")).as("text_distinct_est"),
-        hll_sketch_estimate(col("lang_sketch")).as("lang_distinct_est"))
-    }),
-
-    // Ingest-drift gate: PSI of the n_chars distribution, new batch
-    // (doc_id % 3 = 0) vs reference (the rest); 10 bins from the
-    // reference's own deciles, all bins present, Laplace-smoothed terms.
-    "q_psi" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.populationStability(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 3 === 0),
-        "n_chars", bins = 10)
-    }),
-
-    // Exact two-sample Kolmogorov-Smirnov: the unbinned drift test PSI
-    // coarsens away — D as the exact integer cross-multiplied ECDF-gap
-    // numerator over the distinct-value histogram (two-phase prefix
-    // sums), one division for the double readout. Cohorts: even vs odd
-    // user_id over event values.
-    "q_ks_drift" -> ((s, dir) =>
-      Curation.ksStatistic(ev(s, dir), "value", col("user_id") % 2 === 1)),
-
-    // Exact Mann-Whitney U on the same histogram+prefix machinery:
-    // average-rank ties stay integer by DOUBLING (u2 = 2U exactly).
-    "q_mwu" -> ((s, dir) =>
-      Curation.mannWhitneyU(ev(s, dir), "value", col("user_id") % 2 === 1)),
-
-    // Exact trimmed + winsorized means of event values: rank-based tail
-    // drop/clamp on the value histogram (kept multiplicity is an exact
-    // integer per distinct value), DECIMAL(20,4) kept sums, boundary
-    // order statistics from two filtered aggs.
-    "q_trimmed" -> ((s, dir) =>
-      Curation.trimmedMeans(ev(s, dir), "value")),
-
-    // Per-day Shannon entropy of the event-type mix: composition drift
-    // over time — quantized-ln integer entropy numerators per day.
-    "q_mix_entropy" -> ((s, dir) =>
-      strDecimals(Curation.mixEntropy(ev(s, dir), "event_type"))),
-
-    // Herfindahl concentration of the source mix: the log-free companion
-    // — exact integer sum-of-squares, hhi + effective-source-count
-    // readouts, no quantization anywhere.
-    "q_hhi" -> ((s, dir) =>
-      strDecimals(Curation.hhi(t(s, dir, "documents"), "source"))),
-
-    // Wasserstein-1 (earth-mover's) distance on the same cohorts: the
-    // AREA between the ECDFs in the column's own units — exact integer
-    // ECDF-gap numerators x 2^-20-grid-quantized value gaps, order-free
-    // decimal term sum, one fixed-order double readout.
-    "q_w1_drift" -> ((s, dir) =>
-      strDecimals(Curation.wasserstein1(ev(s, dir), "value",
-        col("user_id") % 2 === 1))),
-
-    // Jensen-Shannon divergence between two corpora's 3-gram shingle
-    // distributions — the bounded (0..ln 2) whole-distribution drift
-    // readout: 2^-20-grid-quantized lns, exact DECIMAL(38,0) entropy
-    // numerators (order-free integer sums), fixed-order double readout.
-    "q_jsd" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      strDecimals(Curation.jsDivergence(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 3 === 0)))
-    }),
-
-    // Exact chi-square homogeneity test — the CATEGORICAL member of the
-    // drift family (PSI binned numeric, KS/MWU unbinned numeric): per
-    // category one exact-integer deviation D = o_a*N - N_a*m shared by
-    // both sides, term = D^2/(N_a*N_b*m) as one double division of
-    // decimal-exact integers, total chi2 via the fixed-order fold.
-    "q_chi2_drift" -> ((s, dir) =>
-      Curation.chi2Drift(t(s, dir, "documents"), "source",
-        col("doc_id") % 3 === 0)),
-
-    // Exact Kendall tau-b between two discrete columns: concordant vs
-    // discordant pairs via the broadcast contingency-cell pair join,
-    // doubled marginal tie corrections, one sqrt readout over exact
-    // decimal integers.
-    "q_kendall" -> ((s, dir) =>
-      strDecimals(Curation.kendallTau(t(s, dir, "lineitem"), "l_quantity",
-        "l_discount"))),
-
-    // Mann-Kendall monotone-trend verdict on the daily event-count
-    // series: S = sum of pair signs over the zero-filled calendar,
-    // tie-corrected 18*Var as an exact integer, continuity-corrected z.
-    "q_mann_kendall" -> ((s, dir) =>
-      strDecimals(operators.TimeSeries.mannKendall(ev(s, dir)))),
-
-    // Theil-Sen robust slope beside the MK test: median of all pairwise
-    // day slopes, each ONE double division quantized to 1e-6 units so
-    // the median runs over integral values (the gate-proven
-    // exact-quantile regime). Calendar-bounded pair join, never
-    // data-sized past the first agg.
-    "q_theil_sen" -> ((s, dir) =>
-      operators.TimeSeries.theilSen(ev(s, dir))),
-
-    // Single changepoint by binary segmentation: argmax over splits of
-    // the two-segment fit gain L^2/s + R^2/(n-s) from exact integer
-    // prefix sums; (score desc, split asc) argmax via one max_by.
-    "q_changepoint" -> ((s, dir) =>
-      operators.TimeSeries.changepoint(ev(s, dir))),
-
-    // Exact Spearman rank correlation (Pearson on DOUBLED average ranks —
-    // the MWU tie discipline, so every moment is an exact decimal
-    // integer): quantity vs extended price over lineitem.
-    "q_spearman" -> ((s, dir) =>
-      strDecimals(Curation.spearman(t(s, dir, "lineitem"), "l_quantity",
-        "l_extendedprice"))),
-
-    // G-test (likelihood ratio) on the same cohorts: ln(o/e) collapses to
-    // a ratio of integer products, each factor grid-quantized, terms
-    // exact integers in an order-free decimal sum; identical proportions
-    // contribute exactly zero.
-    "q_gtest" -> ((s, dir) =>
-      strDecimals(Curation.gTest(t(s, dir, "documents"), "source",
-        col("doc_id") % 3 === 0))),
-
-    // Corpus-relative token rarity: per doc, the count of its token
-    // occurrences plus sum/min of their corpus-wide frequencies — exact
-    // integers, the division-free form of a rarity score.
-    "q_token_rarity" -> ((s, dir) =>
-      Curation.tokenRarity(t(s, dir, "documents"))),
-
-    // Corpus-relative bigram rarity: the division-free MLE bigram-LM
-    // aggregate (exact integer numerators Σc(w1w2) and denominators
-    // Σc(w1)); min_bg = 1 flags transitions seen nowhere else.
-    "q_bigram_lm" -> ((s, dir) =>
-      Curation.bigramRarity(t(s, dir, "documents"))),
-
-    // Ingest-time corpus-relative bigram scoring: new docs (doc_id % 5 = 0)
-    // scored against the static rest — novel transitions (n_bg - n_hit)
-    // are the OOD signal; corpus text aggregates once and never moves.
-    "q_bigram_lm_incr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.bigramRarityAgainstCorpus(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0))
-    }),
-
-    // URL extraction + canonicalization (the CommonCrawl link-pipeline
-    // step): planted URLs exercise case-folding host/scheme, default-port
-    // strip (:80/:443), fragment drop, trailing-slash drop, and the
-    // domain key for per-domain caps — all pure scan regexp/CASE steps
-    // stated identically in the oracle.
-    "q_urls" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        lit(" see HTTP://Example.COM:80/Path/index.html?q=1#frag"),
-        when(col("doc_id") % 3 === 0, lit(" https://Secure.NET:443/"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 4 === 0,
-          concat(lit(" http://plain.org/a/b/ and http://h"),
-            (col("doc_id") % 7).cast("string"), lit(".example.org/x#y")))
-          .otherwise(lit("")))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(TextFunctions.extractUrls(injected)).as("url"))
-        .select(col("doc_id"), col("url"),
-          TextFunctions.canonicalizeUrl(col("url")).as("canon"),
-          TextFunctions.urlDomain(col("url")).as("domain"))
-    }),
-
-    // The WEB-CORPUS pipeline capstone, end-to-end under one hash gate:
-    // markup strip -> model-based quality filter -> exact dedup (planted
-    // +100000 re-id copies of every 10th CLEANED doc — dedup must drop
-    // them across the filter) -> leakage-safe split. The r13 extraction
-    // ops composed exactly as a crawl-ingest pipeline chains them.
-    "q_pipeline_web" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // the strip chain (11 regex passes) runs ONCE per source row: the
-      // planted +100000 copies come out of a conditional-array explode,
-      // and the generator doubles as a materialization barrier so
-      // CollapseProject cannot inline the chain into the margin filter
-      // AND the dedup key AND the output column (4 evaluations measured
-      // 11.8 s at sf1 in the union + decision-join formulation; this one
-      // plan is 5.3 s — the strip + margin per-row floor, cf. their
-      // standalone 1.6 + 3.0)
-      val row = struct(col("doc_id"), col("clean"))
-      val shifted = struct((col("doc_id") + lit(100000L)).as("doc_id"),
-        col("clean"))
-      val all = t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.stripMarkup(webMarkupDecoration).as("clean"))
-        .select(explode(when(col("doc_id") % 10 === 0, array(row, shifted))
-          .otherwise(array(row))).as("r"))
-        .select(col("r.doc_id").as("doc_id"), col("r.clean").as("clean"))
-      val kept = all.where(TextFunctions.hashedBowMargin(
-        col("clean"), bowWeights, bias = 0.05) > 0.0)
-      // min-id survivor per distinct cleaned content — ONE content-keyed
-      // exchange (Dedup.exact's decision rule in its windowed in-pipeline
-      // form; the standalone decision table would self-join the plan)
-      val surv = kept.withColumn("__keep",
-          min(col("doc_id")).over(Window.partitionBy(md5(col("clean")))))
-        .where(col("doc_id") === col("__keep")).drop("__keep")
-      Curation.withSplit(surv, "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("clean"), col("split"))
-    }),
-
-    // Exact weighted quantiles: the token-mass cutoff primitive ("the
-    // length below which 90% of the corpus's QUANTITY lives") — integer
-    // thresholds against integer prefix sums over the (value, Σweight)
-    // histogram, per-group.
-    "q_quantile_weighted" -> ((s, dir) =>
-      Curation.weightedQuantiles(t(s, dir, "lineitem"),
-        "l_extendedprice", "l_quantity", Seq(0.25, 0.5, 0.9, 0.99),
-        groupCols = Seq("l_returnflag"))),
-
-    // Per-domain document cap — the crawl-curation policy ("no domain
-    // contributes more than N docs"): each doc's primary domain comes off
-    // its first extracted URL (planted, case-folding exercised), then the
-    // deterministic stratified cap keeps ≤N per domain. Composition of
-    // the two gated pieces in one plan.
-    "q_domain_cap" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        lit(" http://D"), (col("doc_id") % 7).cast("string"),
-        lit(".Site.ORG/p/"), col("doc_id").cast("string"))
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.urlDomain(
-          element_at(TextFunctions.extractUrls(injected), 1)).as("domain"))
-      Curation.sampleNPerGroup(docs, Seq("domain"), "doc_id", n = 20)
-    }),
-
-    // Count-Min frequency sketch: the mergeable third member of the
-    // sketch-algebra family (theta = set ops, HLL = distinct, CM =
-    // frequency). Exact integer counters over portable md5 buckets, so
-    // the whole sketch replays in SQL; the readout probes the top-50
-    // exact tokens and carries the CM overestimate guarantee
-    // (cm_est >= n_exact) as a gated column.
-    "q_countmin" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .filter(length(col("tok")) >= 1)
-      val exact = toks.groupBy("tok").agg(count(lit(1)).cast("long").as("n_exact"))
-        .orderBy(col("n_exact").desc, col("tok").asc).limit(50)
-      val sk = Curation.countMinSketch(toks, "tok", depth = 4, width = 256)
-      Curation.countMinEstimate(sk, exact, "tok", depth = 4, width = 256)
-        .join(exact, Seq("tok"))
-        .select(col("tok"), col("n_exact"), col("cm_est"),
-          (col("cm_est") >= col("n_exact")).as("bound_ok"))
-    }),
-
-    // Mixed-language (code-switching) audit: 32-token chunks each get the
-    // n-gram language ID; a doc whose chunks disagree with its own doc-
-    // level language beyond 20% is flagged. German-profile text planted
-    // on %4 docs lands in the tail chunks, so the disagreement is real;
-    // the 20% test is an integer cross-product. Composes chunkDocuments
-    // with the fused NgramLangId — both already gated standalone.
-    "q_lang_mix" -> ((s, dir) => {
-      val deco = concat(col("text"), when(col("doc_id") % 4 === 0,
-        lit(" der die und das ein ist nicht zu der die und das ein ist"))
-        .otherwise(lit("")))
-      val docs = t(s, dir, "documents").select(col("doc_id"), deco.as("text"))
-      val dLang = docs.select(col("doc_id"),
-        TextFunctions.langIdNgram(col("text")).as("doc_lang"))
-      Curation.chunkDocuments(docs, maxTokens = 32, overlap = 0)
-        .select(col("doc_id"), TextFunctions.langIdNgram(col("chunk")).as("c_lang"))
-        .join(dLang, Seq("doc_id"))
-        .groupBy(col("doc_id"), col("doc_lang"))
-        .agg(count(lit(1)).cast("long").as("n_chunks"),
-          sum(when(col("c_lang") =!= col("doc_lang"), 1L).otherwise(0L))
-            .cast("long").as("n_foreign"))
-        .withColumn("mixed", col("n_foreign") * 5 >= col("n_chunks"))
-    }),
-
-    // Safety blocklist filter: planted lexicon words on a doc_id schedule
-    // (the redact pattern); n_hits counts whole-token lowercase matches
-    // (an embedded substring never trips), keep = hits ≤ 5% of tokens by
-    // integer cross-product — division-free, scan-bound.
-    "q_blocklist" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        when(col("doc_id") % 6 === 0, lit(" BadWord1 badword2")).otherwise(lit("")),
-        when(col("doc_id") % 17 === 0,
-          lit(" badword1 badword1 badword1 badword1")).otherwise(lit("")),
-        // substring trap: must NOT count ("xbadword1x" is not a hit)
-        when(col("doc_id") % 9 === 0, lit(" xbadword1x")).otherwise(lit("")))
-      t(s, dir, "documents").select(col("doc_id"),
-          TextFunctions.tokenCount(injected).cast("long").as("n_tokens"),
-          TextFunctions.blocklistHits(injected,
-            Seq("badword1", "badword2", "zzzznever")).cast("long").as("n_hits"))
-        .withColumn("keep", col("n_hits") * 20 <= col("n_tokens"))
-    }),
-
-    // Count-Min MERGEABILITY under the hash gate: two half-corpus sketches
-    // (doc_id parity shards) merge by elementwise counter addition, and
-    // the merged sketch must equal the whole-corpus build bit for bit —
-    // the distributed-ingest property (shard sketches on executors, merge
-    // anywhere, never re-scan). The oracle is the whole-corpus sketch.
-    "q_countmin_merge" -> ((s, dir) => {
-      def toks(d: DataFrame) = d
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .filter(length(col("tok")) >= 1)
-      val docs = t(s, dir, "documents")
-      val even = Curation.countMinSketch(
-        toks(docs.filter(col("doc_id") % 2 === 0)), "tok", 4, 256)
-      val odd = Curation.countMinSketch(
-        toks(docs.filter(col("doc_id") % 2 =!= 0)), "tok", 4, 256)
-      even.unionByName(odd)
-        .groupBy("row", "bucket").agg(sum(col("n")).cast("long").as("n"))
-    }),
-
-    // Kneser-Ney bigram-LM sufficient statistics: the smoothed LM's exact
-    // integer moments (c2, cpre, N1+ fwd/back, type count) in the
-    // corrStats "one division away" discipline — the occurrence volume
-    // collapses in ONE bigram-keyed agg, everything after is model-table
-    // sized. Top-200 by (c2 desc, w1, w2) keeps the readout bounded.
-    "q_bigram_kn" -> ((s, dir) =>
-      Curation.kneserNeyStats(t(s, dir, "documents"), topK = 200)),
-
-    // KN perplexity quality filter (CCNet's wiki-LM step) — the apply
-    // side kneserNeyStats exists to serve: per-doc mean bigram
-    // log-probability under the corpus-trained interpolated-KN model,
-    // thresholded keep/drop. Per-bigram-TYPE ln quantizes to 1e-6
-    // fixed point (the unigram-LM gate's discipline); the per-doc
-    // readout and the threshold compare are exact integers.
-    "q_perplexity_filter" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.perplexityFilter(docs, docs, minMeanLpMicros = -3400000L)
-    }),
-
-    // Cross-corpus perplexity: score EVERY doc under a model trained on
-    // the doc_id%3 reference slice — exercises the unseen-bigram uniform
-    // fallback ln(1/n_types) that same-corpus scoring never takes.
-    "q_perplexity_cross" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.perplexityScore(docs, docs.filter(col("doc_id") % 3 === 0))
-    }),
-
-    // TRIGRAM interpolated KN (one order below CCNet's KenLM): the full
-    // continuation-count cascade P3 -> P2 -> P1 with per-level backoff at
-    // score time — model from the doc_id%3 slice so unseen trigrams and
-    // unseen contexts both fire; every level an exact-integer model
-    // table, the readout Σ cnt·round(ln P · 1e6) under the hash.
-    "q_perplexity3" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Curation.perplexityScore3(docs, docs.filter(col("doc_id") % 3 === 0))
-    }),
-
-    // DSIR importance weights (Xie et al. 2023): per-doc sum of hashed-
-    // bigram log-ratios ln p_T − ln p_S (target = lang='en', Laplace
-    // smoothing over 256 md5 buckets) — one tokenize scan, a 256-row
-    // broadcast model, integer per-doc rollup under the hash.
-    "q_dsir_weights" -> ((s, dir) =>
-      Curation.dsirLogRatios(t(s, dir, "documents"), col("lang") === "en")),
-
-    // The DSIR selection: keep docs whose mean per-feature log-ratio is
-    // >= 0 — "more target-like than source-like", integer compare.
-    "q_dsir_sample" -> ((s, dir) =>
-      Curation.dsirFilter(t(s, dir, "documents"), col("lang") === "en")),
-
-    // HTML/markup strip (the CommonCrawl text-extraction step): the
-    // corpus gains deterministic doc_id-scheduled markup — script/style
-    // bodies, comments, tags, the five standard entities (the q_redact
-    // injection pattern) — and the fixed regexp chain must recover clean
-    // prose; script/comment CONTENT must vanish, entity text must decode.
-    "q_strip_markup" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.stripMarkup(webMarkupDecoration).as("clean"))),
-
-    // Weight-proportional deterministic sample: keep P ∝ n_chars (longer
-    // docs survive more often), membership a pure function of (id, salt).
-    "q_sample_weighted" -> ((s, dir) =>
-      Curation.sampleWeighted(
-        t(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars")),
-        "doc_id", "n_chars", perUnitRate = 1.0 / 1024)),
-
-    // Z-order (Morton) key: the bit-interleave that clusters rows close in
-    // BOTH dimensions — the per-row half of writeZordered, gated exactly.
-    "q_zorder_key" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
-        col("l_linenumber"),
-        graft.sources.Layouts.zorderKey(
-          pmod(col("l_orderkey"), lit(256)), pmod(col("l_partkey"), lit(256)))
-          .as("zkey"))),
-
-    // Unigram-LM (SentencePiece-style) tokenizer training: seed substring
-    // inventory, then EM rounds of integer-Viterbi segmentation over the
-    // DISTINCT-WORD table against the broadcast piece scores — the other
-    // real-world tokenizer family next to BPE, corpus shuffle paid once.
-    "q_unigram_seed" -> ((s, dir) =>
-      operators.Tokenizer.unigramSeed(t(s, dir, "documents"),
-        maxPieceLen = 4, minSeedCount = 2)),
-    "q_unigram_train" -> ((s, dir) =>
-      operators.Tokenizer.unigramTrain(t(s, dir, "documents"),
-        rounds = 2, maxPieceLen = 4, minSeedCount = 2)),
-    // encode readout: distinct words segment once under the trained
-    // inventory, one word-keyed join scores every document
-    "q_unigram_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      operators.Tokenizer.tokenCountsUnderUnigram(docs,
-        operators.Tokenizer.unigramTrain(docs, rounds = 2, maxPieceLen = 4),
-        maxPieceLen = 4)
-    }),
-
-    // WordPiece (BERT-style) greedy longest-match tokenizer — the THIRD
-    // real tokenizer family next to BPE merges and unigram Viterbi:
-    // role-split substring census (word-start vs "##" continuation), then
-    // each DISTINCT word consumes greedily under the broadcast vocab.
-    // Greedy is memoryless, so the oracle replays it from a static
-    // per-(word, offset) longest-match table instead of a path search.
-    // WordPiece-objective merge TRAINING: argmax by the likelihood score
-    // ln c(ab) - ln c(a) - ln c(b) (quantized to round(·10⁶) integers, the
-    // unigram discipline) instead of BPE's raw count — the third trainer
-    // next to trainBpe and unigramTrain; the oracle DERIVES each round's
-    // winner and replays the merge, nothing is hardcoded.
-    "q_wordpiece_train" -> ((s, dir) => {
-      import s.implicits._
-      operators.Tokenizer.trainWordpieceMerges(
-          t(s, dir, "documents"), numMerges = 6)
-        .zipWithIndex.map { case ((a, b, n, sq), i) => (i + 1, a, b, n, sq) }
-        .toDF("rank", "a", "b", "n", "score_q")
-    }),
-
-    "q_wordpiece_vocab" -> ((s, dir) =>
-      operators.Tokenizer.wordpieceVocab(t(s, dir, "documents"),
-        maxPieceLen = 4, minCount = 2)),
-    "q_wordpiece_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      operators.Tokenizer.tokenCountsUnderWordpiece(docs,
-        operators.Tokenizer.wordpieceVocab(docs, maxPieceLen = 4, minCount = 2),
-        maxPieceLen = 4)
-    }),
-
-    // Pairwise correlation sufficient statistics in ONE scan: exact
-    // integer moments for every column pair — Pearson/covariance one
-    // division away, order-independent where corr()'s float accumulation
-    // is not. Sums cross the gate as DECIMAL-exact digit strings.
-    "q_corr_stats" -> ((s, dir) => {
-      val sums = Seq("sum_a", "sum_b", "sum_ab", "sum_a2", "sum_b2")
-      // boundedProducts: all four columns are <=2dp TPC-H measures bounded
-      // by ~1.1e5, so 2dp-scaled values are <=1.1e7 and every pairwise
-      // product <=1.3e14 — far inside int64; the sums are identical
-      // integers, only the per-row multiply representation changes
-      Curation.corrStats(t(s, dir, "lineitem"),
-        Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"),
-        boundedProducts = true)
-        .select(col("col_a") +: col("col_b") +: col("n") +:
-          sums.map(c => col(c).cast("string").as(c)): _*)
-    }),
-
-    // Hilbert-curve key: the space-filling sibling of q_zorder_key with
-    // tighter locality (unit steps, no Z-jumps) — native codegen'd walk;
-    // the oracle replays the same xy2d walk as a recursive CTE.
-    "q_hilbert_key" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
-        col("l_linenumber"),
-        graft.sources.Layouts.hilbertKey(
-          pmod(col("l_orderkey"), lit(256)), pmod(col("l_partkey"), lit(256)))
-          .as("hkey"))),
-
-    // Winsorize: clamp order totals into their own priority class's
-    // [p5, p95] band — per-group thresholds broadcast back; exact
-    // percentile = the oracle path, the GK sketch is the 100 TB path.
-    "q_clip" -> ((s, dir) =>
-      Curation.clipToQuantiles(
-        t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"),
-          col("o_totalprice")),
-        "o_totalprice", 0.05, 0.95, groupCols = Seq("o_orderpriority"),
-        exact = true)),
-
-    // Adaptive quality cut: keep docs at or above their OWN source's p25
-    // token count (per-group thresholds broadcast back; exact percentile =
-    // the oracle path, the GK-sketch default is the 100 TB path).
-    "q_quality_cut" -> ((s, dir) =>
-      Curation.keepAboveQuantile(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", 0.25, groupCols = Seq("source"), exact = true)),
-
-    // Per-source z-score standardization with exact integer stats:
-    // z = (n·x − S)/sqrt(n·Q − S²) — every float-op input is an exact
-    // integer, so the doubles hash cross-engine (unlike avg/stddev whose
-    // partial-sum order perturbs low bits).
-    "q_standardize" -> ((s, dir) =>
-      Curation.standardize(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", groupCols = Seq("source"))),
-
-    // Per-source min-max scaling (standardize's bounded sibling, same
-    // exact-integer portability argument for the hashed doubles).
-    "q_minmax_scale" -> ((s, dir) =>
-      Curation.minMaxScale(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", groupCols = Seq("source"))),
-
-    // EXACT quantiles without the single-buffer percentile aggregate:
-    // (group, value) histogram -> distinct-value prefix ranks -> covering
-    // rows, interpolated bit-identically to percentile/quantile_cont —
-    // the distributed exact path for collapsing value domains.
-    "q_quantiles_dist" -> ((s, dir) =>
-      Curation.exactQuantilesDistributed(
-        t(s, dir, "documents").select(col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", Seq(0.25, 0.5, 0.75, 0.99), groupCols = Seq("source"))),
-
-    // Median absolute deviation per source — robust dispersion composing
-    // the distributed exact-quantile machinery twice (location pass, then
-    // |x - med| deviation pass); exact, no single-buffer percentile.
-    "q_mad" -> ((s, dir) =>
-      Curation.medianAbsDeviation(
-        t(s, dir, "documents").select(col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", groupCols = Seq("source"))),
-
-    // PMI collocations: top-100 over-represented co-occurring term pairs
-    // — scan-local pair generation from sorted distinct-term arrays, one
-    // Σd² pair-count shuffle, vocab-sized df joins; the ratio double is
-    // one division of exact integers (bit-portable), ln is caller-side.
-    "q_collocations" -> ((s, dir) =>
-      Curation.collocations(t(s, dir, "documents"))),
-
-    // Pareto skyline on (token count, distinct-token count): the docs no
-    // other doc dominates on both richness axes — two-phase distributed
-    // dominance (local skylines -> one bounded final pass).
-    "q_skyline" -> ((s, dir) =>
-      Curation.skyline(
-        t(s, dir, "documents").select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-          size(array_distinct(TextFunctions.tokens(col("text"))))
-            .cast("long").as("n_distinct")),
-        Seq("n_tokens", "n_distinct"))),
-
-    // BPE encode-side readout: per-doc subtoken counts under a fixed
-    // 3-merge list — the corpus pays the merge fold once per DISTINCT
-    // word, docs score through one word-keyed join.
-    "q_bpe_encode" -> ((s, dir) =>
-      graft.operators.Tokenizer.tokenCountsUnderMerges(
-        t(s, dir, "documents"),
-        Seq(("e", "r"), ("i", "n"), ("o", "w")))),
-
-    // Quantile normalization onto a reference corpus: each ingest doc's
-    // token count replaced by the reference value at the same percentile
-    // — full-resolution distribution matching via three prefix passes +
-    // two pos-keyed joins, no driver-side arrays.
-    "q_quantile_norm" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Curation.quantileNormalizeAgainst(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0),
-        "n_tokens", "doc_id")
-    }),
-
-    // ...and per-SOURCE: each source's distribution calibrated onto the
-    // shared reference independently — within-group ranks from the global
-    // prefix count minus broadcast group offsets (no per-group window).
-    "q_quantile_norm_group" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Curation.quantileNormalizeAgainst(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0),
-        "n_tokens", "doc_id", groupCols = Seq("source"))
-    }),
-
-    // Percentile rank vs a reference corpus: the union-prefix searchsorted
-    // (one two-phase prefix-sum pass, no quantile table, no NxM join) —
-    // ingest docs scored against the kept corpus's length distribution.
-    "q_pct_rank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Curation.percentileRankAgainst(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0),
-        "n_tokens", "doc_id")
-    }),
-
-    // Vocabulary coverage curve: frequency-ranked vocab with exact
-    // running occurrence totals via the two-phase prefix sum — the
-    // tokenizer-design table; coverage = cum_freq/total, one division
-    // away from the gated integers.
-    "q_vocab_coverage" -> ((s, dir) =>
-      Curation.vocabCoverage(t(s, dir, "documents"))),
-
-    // Robust (median/IQR) scaling — the outlier-insensitive sibling:
-    // exact quartiles of integral inputs land on binary-exact .0/.25/
-    // .5/.75, so the division's doubles hash cross-engine.
-    "q_robust_scale" -> ((s, dir) =>
-      Curation.robustScale(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", groupCols = Seq("source"), exact = true)),
-
-    // Curriculum order: equal-depth difficulty bands (quartiles of
-    // n_chars), deterministic salted-md5 shuffle WITHIN each band, global
-    // position via the two-phase prefix count — no single-task sort.
-    "q_curriculum" -> ((s, dir) =>
-      Curation.curriculumOrder(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        "n_chars", "doc_id", exact = true)),
-
-    // GLOBAL top-k by a quality signal WITHOUT a window (q_top_docs is the
-    // per-group form): orderBy + limit plans TakeOrderedAndProject —
-    // per-partition heaps + one k-row merge, the scalable global top-k
-    // shape (a row_number window would sort the corpus in one task).
-    // Deterministic via the id tiebreak.
-    "q_top_global" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .orderBy(col("n_tokens").desc, col("doc_id").asc)
-        .limit(50)),
-
-    // Exactly-500 weighted sample without replacement (A-Res keys from the
-    // salted md5): longer docs proportionally likelier, membership still a
-    // pure function of (id, salt). TakeOrdered top-n, no global sort.
-    "q_sample_n_weighted" -> ((s, dir) =>
-      Curation.sampleNWeightedGlobal(
-        t(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars")),
-        "doc_id", "n_chars", n = 500)),
-
-    // Quality-temperature mixing, composed end-to-end in ONE plan: band
-    // docs by their source's exact token-count quartiles (tiny threshold
-    // agg broadcast back), then keep each band at its own deterministic
-    // salted-hash rate (higher band -> keep more) — the standard
-    // "sample by quality percentile" curation recipe.
-    "q_mixture_quality" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      val th = docs.groupBy("source").agg(
-        percentile(col("n_tokens"), lit(0.25)).as("p25"),
-        percentile(col("n_tokens"), lit(0.5)).as("p50"),
-        percentile(col("n_tokens"), lit(0.75)).as("p75"))
-      docs.join(broadcast(th), Seq("source"))
-        .withColumn("band",
-          (col("n_tokens") > col("p25")).cast("int") +
-            (col("n_tokens") > col("p50")).cast("int") +
-            (col("n_tokens") > col("p75")).cast("int"))
-        .filter(Curation.hashBucketSalted(col("doc_id"), "qmix") <
-          element_at(array(lit(2500L), lit(5000L), lit(7500L), lit(10000L)),
-            col("band") + 1))
-        .select("doc_id", "source", "n_tokens", "band")
-    }),
-
-    // Char-entropy quality signal in its hash-gateable form: the one-pass
-    // code-point diversity profile's exact integers (total, distinct, top
-    // count, Simpson Σcnt² — Rényi-2 entropy = log2(n²/Σcnt²)). The
-    // Shannon double stays out of the gate (libm/order-dependent).
-    "q_char_entropy" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.charProfile(col("text")).as("p"))
-        .select(col("doc_id"), col("p.n_cp").as("n_cp"),
-          col("p.n_distinct").as("n_distinct"),
-          col("p.max_cnt").as("max_cnt"), col("p.sum_sq").as("sum_sq"))),
-
-    // Per-doc top-3 TF-IDF keywords: ONE (doc, term) keyed shuffle, df
-    // derived from that same exchange (ReuseExchange), N broadcast,
-    // map-side top-k window. Integers under the hash; ln only orders.
-    "q_tfidf_terms" -> ((s, dir) =>
-      graft.operators.Retrieval.tfidfTopTerms(t(s, dir, "documents"))),
-
-    // Compression-ratio quality signal (rows-only gate BY DESIGN: DuckDB
-    // has no zlib surface, so no oracleSql entry exists — the driver
-    // records the weaker rows>0 check; the signal's ORDER is spec-pinned).
-    "q_compress_signal" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        octet_length(col("text")).cast("long").as("byte_len"),
-        TextFunctions.deflateSize(col("text")).as("deflate_len"))),
-
-    // Unicode canonicalization gate: append a DECOMPOSED accent (e +
-    // combining U+0301) to every doc and NFC-normalize — the composed
-    // output is one char shorter, and DuckDB's nfc_normalize computes the
-    // identical bytes, so the full normalized string sits under the hash.
-    "q_unicode_norm" -> ((s, dir) => {
-      def raw = concat(col("text"), lit(" fiance\u0301"))
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.normalizeUnicode(raw).as("text_nfc"),
-        length(raw).cast("long").as("len_raw"),
-        length(TextFunctions.normalizeUnicode(raw)).cast("long").as("len_nfc"))
-    }),
-
-    // Ingest-time z-scoring vs a static corpus (drift check on arriving
-    // batches): new docs (doc_id % 5 = 0) scored against the rest's
-    // per-source stats; corpus aggregates once and never moves —
-    // stream-static capable.
-    "q_standardize_incr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Curation.standardizeAgainstCorpus(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0),
-        "n_tokens", groupCols = Seq("source"))
-    }),
-
-    // Per-source rank normalization of a quality signal: percent_rank and
-    // cume_dist put every source's docs on a comparable [0,1] scale (the
-    // right way to mix heterogeneous quality scores before a global cut).
-    // Both are exact small-integer ratios — (rank-1)/(n-1), peers/n — so
-    // the doubles hash identically across engines; ties share a rank, so
-    // row order within ties can't perturb the output. One keyed window
-    // pass: shuffle by source, sort by the score.
-    "q_norm_rank" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("source").orderBy("n_tokens")
-      t(s, dir, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          percent_rank().over(w).as("pr"), cume_dist().over(w).as("cd"))
-    }),
-
-    // Hot-key guard (the mitigation SCALE.md prescribes ahead of per-key
-    // total-order ops): drop users carrying more than 80 events. The hot
-    // set is one tiny keyed count; data anti-joins against it broadcast.
-    "q_skew_cap" -> ((s, dir) =>
-      graft.ops.Skew.dropHotKeys(
-        ev(s, dir).select(col("event_id"), col("user_id")), Seq("user_id"), 80L)),
-
-    // Corpus hygiene report: per-source row count, distinct content
-    // fingerprints, exact-duplicate rows — the per-crawl dashboard a
-    // curation team watches. One keyed agg over (source, 16-byte md5):
-    // text reduces to fingerprints scan-side and never shuffles.
-    "q_dedup_report" -> ((s, dir) =>
-      t(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(md5(col("text"))).as("n_distinct"),
-          (count(lit(1)) - countDistinct(md5(col("text")))).as("n_dup_rows"))),
-
-    // Incremental-ingest dedup: new docs anti-joined against a reference
-    // corpus's md5 fingerprint set (stream-static-capable shape; the
-    // "corpus" here is the doc_id%3==0 slice of the same table).
-    "q_dedup_incr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.dropExistingIn(
-        docs.select(col("doc_id"), col("text")),
-        docs.filter(col("doc_id") % 3 === 0).select(col("text")))
-        .select("doc_id")
-    }),
-
-    // As-of with a staleness tolerance (pandas merge_asof parity): matches
-    // further than 1 h behind the purchase are nulled — sound as a
-    // post-filter because the as-of match is the closest candidate.
-    "q_asof_tol" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("value").as("view_value"))
-      operators.AsOfJoin.asofJoin(purchases, views, Seq("user_id"),
-          tolerance = Some(3600L * 1000000L))
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("asof_view_value").as("view_value"),
-          unix_micros(col("asof_ts")).as("view_ts_us"))
-    }),
-
-    // The interval-ized as-of variant (the STREAMING feature-lookup path:
-    // snapshots become [ts, next_ts) validity windows, the join hits at
-    // most one). Pure DataFrame composition, so the gate drives the exact
-    // code a stream runs, against the same DuckDB ASOF oracle as q_asof.
-    "q_asof_iv" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("value").as("view_value"))
-      operators.AsOfJoin.asofJoinStreamStatic(purchases, views, Seq("user_id"))
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value"), col("asof_view_value").as("view_value"),
-          unix_micros(col("asof_ts")).as("view_ts_us"))
-    }),
-
-    // Context-window chunking: 32-token windows, 8 tokens of overlap —
-    // per-row generator, scan-bound.
-    "q_chunk" -> ((s, dir) =>
-      Curation.chunkDocuments(t(s, dir, "documents"), maxTokens = 32, overlap = 8)),
-
-    // Deterministic global shuffle order (md5 order, two-phase prefix
-    // count — no single-reducer row_number at scale).
-    "q_shuffle_order" -> ((s, dir) =>
-      Curation.withShuffleOrder(t(s, dir, "documents").select("doc_id"), "doc_id")),
-
-    // Sequence packing: docs assigned to fixed token-budget training
-    // sequences by exclusive-prefix-sum offset in doc_id order — the
-    // two-phase distributed prefix sum, not a single global window.
-    "q_pack" -> ((s, dir) =>
-      Curation.packSequences(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        TextFunctions.tokenCount(col("text")), Seq(col("doc_id")), 2048L)
-        .select("doc_id", "seq_id")),
-
-    // Packing-efficiency audit: per-sequence doc counts and exact token
-    // totals (fill rate / waste before committing the layout).
-    "q_pack_stats" -> ((s, dir) =>
-      Curation.packingStats(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        TextFunctions.tokenCount(col("text")), Seq(col("doc_id")), 2048L)),
-
-    // The packed-FILE materialization: one row per training sequence with
-    // the member span and the concatenated text. The collect bag is
-    // bounded by the token budget itself, so the usual unbounded-row-width
-    // risk is structurally absent.
-    "q_pack_text" -> ((s, dir) =>
-      Curation.packedSequences(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        "doc_id", "text", TextFunctions.tokenCount(col("text")), 2048L)),
-
-    // One-pass column profiling (count / nulls / exact distinct per column).
-    "q_profile" -> ((s, dir) =>
-      Curation.profile(t(s, dir, "orders"),
-        Seq("o_orderstatus", "o_orderpriority", "o_custkey"))),
-
-    // The HLL profile variant (the 100 TB path: fixed-size sketches, no
-    // value shuffle). HLL++ is deterministic for given data, so the gate
-    // pins the approx distinct inside a 4×rsd band of the exact count —
-    // both computed in ONE Expand+agg pass (profileWithApprox); the
-    // oracle asserts the band trivially against its own exact counts.
-    "q_profile_approx" -> ((s, dir) =>
-      Curation.profileWithApprox(t(s, dir, "orders"),
-          Seq("o_orderstatus", "o_orderpriority", "o_custkey"), rsd = 0.05)
-        .select(col("col_name"), col("n_rows"), col("n_null"), col("n_distinct"),
-          (abs(col("n_distinct_approx") - col("n_distinct")) <=
-            greatest(round(col("n_distinct") * 0.2), lit(1L))).as("within_rsd"))),
-
-    // Quality selection: the 5 longest (by ws-token count) docs per source,
-    // deterministic tiebreak on doc_id.
-    "q_top_docs" -> ((s, dir) =>
-      Curation.topKPerGroup(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        Seq("source"), col("n_tokens"), col("doc_id"), k = 5)),
-
-    // The full training-data curation pipeline in ONE Catalyst plan:
-    // lang-ID filter -> quality gate (token count + stopword ratio, ratio
-    // compared in exact integer arithmetic) -> exact dedup keeping the
-    // min-id survivor -> per-survivor token stats. One scan, one shuffle
-    // (the dedup groupBy).
-    "q_pipeline_training" -> ((s, dir) => {
-      val qc = TextFunctions.qualityCounts(col("text")).toMap
-      val scored = t(s, dir, "documents").select(col("doc_id"), col("text"),
-        TextFunctions.langId(col("text")).as("lang_pred"),
-        qc("n_tokens").as("n_tokens"),
-        qc("n_stop").as("n_stop"))
-      scored
-        .filter(col("lang_pred") === "en" && col("n_tokens") >= 20 &&
-          col("n_stop") * 20 >= col("n_tokens")) // stopword ratio >= 0.05
-        .withColumn("fp", md5(col("text")))
-        .groupBy("fp")
-        .agg(min("doc_id").as("doc_id"), max("text").as("text"),
-          count(lit(1)).as("n_dups"))
-        .select(col("doc_id"),
-          TextFunctions.bpeTokenEstimate(col("text")).cast("long").as("n_bpe_tokens"),
-          col("n_dups"))
-    }),
-
-    // The round-7 curation pass composed into ONE plan: redact PII, drop
-    // repetitive docs (Gopher-style), drop benchmark-contaminated docs,
-    // then a deterministic split assignment — scrub -> filter -> filter ->
-    // label, all scan-bound except the decontamination postings join.
-    "q_pipeline_curation" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      val contaminated = operators.Decontaminate.overlap(docs, bench)
-        .filter(col("n_hit") * 2 > col("n_shingles")) // > half the shingles hit
-        .select("doc_id")
-      val kept = docs
-        .filter(TextFunctions.duplicateTokenFraction(col("text")) <= 0.8)
-        .filter(TextFunctions.topBigramFraction(col("text")) <= 0.2)
-        .join(contaminated, Seq("doc_id"), "left_anti")
-      Curation.withSplit(
-        kept.select(col("doc_id"), TextFunctions.redactPii(col("text")).as("clean")),
-        "doc_id", Seq("train" -> 0.9, "val" -> 0.1))
-    }),
-
-    // Native Catalyst sketch expressions (no SQL oracle — rows-only check).
-    // Portable-hash variants so both sketches are DuckDB-reproducible
-    // (md5-derived 60-bit simhash; rolling hash = mod-2^64 byte fold the
-    // oracle reproduces with HUGEINT + list_reduce). The xxhash64 simhash
-    // stays the production default (SketchesSpec covers both).
-    "q_sketches" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        Sketches.simhash64(TextFunctions.tokens(col("text")), portable = true).as("simhash"),
-        Sketches.rollingHash(col("text")).as("rolling_hash"))
-    }),
-
-    // KMV distinct sketch per language: O(k) mergeable state under a
-    // PUBLIC hash, so unlike the HLL row in q_profile_sketch the sketch
-    // itself is oracle-exact (the k smallest distinct md5-60 values);
-    // the (k-1)/kth estimator replays bit-identically in fixed op order.
-    // fr has EXACTLY 64 distinct texts at sf0.01 — the just-full edge.
-    "q_kmv_distinct" -> ((s, dir) => {
-      val k = 64
-      t(s, dir, "documents").filter(col("text").isNotNull)
-        .groupBy(col("lang"))
-        .agg(Sketches.kmvSketch(col("text"), k).as("sk"))
-        .select(col("lang"),
-          size(col("sk")).cast("long").as("n_minima"),
-          // size(sk) > 0 holds here (inputs pre-filtered non-null), but the
-          // guard keeps an all-null group a NULL kth instead of an
-          // element_at(…, 0) runtime error
-          when(size(col("sk")) > 0,
-            element_at(col("sk"), least(size(col("sk")), lit(k)))).as("kth"),
-          Sketches.kmvEstimate(col("sk"), k).as("est"))
-    }),
-
-    // KMV sketch ALGEBRA: estimate the shingle-vocabulary overlap of two
-    // crawl sources from their sketches alone — union = merge-and-
-    // truncate, intersection via shared minima inside the union's k-set
-    // (Beyer et al. 2007) — no shingle-level join between the sources.
-    "q_kmv_setops" -> ((s, dir) => {
-      val k = 256
-      val sh = t(s, dir, "documents")
-        .filter(col("source").isin("src1", "src2"))
-        .select(col("source"),
-          explode(TextFunctions.shingleSet(col("text"), 3)).as("shingle"))
-      val sk = sh.groupBy(col("source"))
-        .agg(Sketches.kmvSketch(col("shingle"), k).as("sk"))
-      val a = sk.filter(col("source") === "src1").select(col("sk").as("ska"))
-      val b = sk.filter(col("source") === "src2").select(col("sk").as("skb"))
-      a.crossJoin(b)
-        .withColumn("u", Sketches.kmvMerge(col("ska"), col("skb"), k))
-        .withColumn("common",
-          size(array_intersect(col("u"),
-            array_intersect(col("ska"), col("skb")))).cast("long"))
-        .withColumn("est_union", Sketches.kmvEstimate(col("u"), k))
-        .select(
-          size(col("u")).cast("long").as("n_union_minima"),
-          when(size(col("u")) > 0,
-            element_at(col("u"), least(size(col("u")), lit(k)))).as("kth_union"),
-          col("common"),
-          col("est_union"),
-          (col("common").cast("double") / lit(k.toDouble) * col("est_union"))
-            .as("est_intersection"))
-    }),
-
-    // ---------------------------------------------------------------------
-    // Deduplication suite.
-    // ---------------------------------------------------------------------
-
-    "q_dedup_exact" -> ((s, dir) => Dedup.exact(t(s, dir, "documents"))),
-
-    "q_dedup_ngram" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.5)),
-
-    // EXACT Jaccard-threshold pairs via PPJoin prefix filtering: the
-    // candidate join runs only over each doc's RAREST sz-ceil(tau*sz)+1
-    // shingles (ascending-df global order), so the hot boilerplate
-    // shingles that dominate the full postings join's sum-df^2 never
-    // generate candidates — same exact pair set, no df cap needed.
-    "q_dedup_ppjoin" -> ((s, dir) =>
-      Dedup.ppjoinPairs(t(s, dir, "documents"), threshold = 0.6)),
-
-    // Ingest-vs-corpus EXACT threshold pairs: prefixes cross-join under
-    // the CORPUS-df global order, so the corpus census is reusable
-    // across batches (the _incr discipline) and the result is exactly
-    // the brute-force cross-side pair set.
-    "q_dedup_ppjoin_incr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.ppjoinAgainstCorpus(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0), threshold = 0.5)
-    }),
-
-    // Per-doc duplicate-shingle fraction (the Dolma-style contamination
-    // score a curator thresholds BEFORE paying for pairwise dedup): no
-    // pair space at all — postings df join back on the same shingle key,
-    // exact integer counts + one division.
-    "q_dup_ngram_frac" -> ((s, dir) =>
-      Dedup.dupShingleStats(t(s, dir, "documents"))),
-
-    // tf-weighted cosine near-dup pairs: the bag-of-words member of the
-    // set-similarity family (jaccard sees presence, this weighs
-    // repetition). Integer dot/norm evidence, two sqrts + one division.
-    "q_dedup_cosine" -> ((s, dir) =>
-      Dedup.tfCosinePairs(t(s, dir, "documents"), threshold = 0.9, ngram = 3)),
-
-    // Ingest-vs-corpus NEAR-dup (the fuzzy dropExistingIn): new batch's
-    // shingle postings joined against the corpus's — Σ df_new·df_corpus
-    // pair space, never |new|x|corpus|; full-set-size Jaccard.
-    "q_dedup_ngram_incr" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.ngramJaccardAgainstCorpus(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0), threshold = 0.5)
-    }),
-
-    // Asymmetric containment: |A∩B| / min(|A|,|B|) — catches a document
-    // embedded inside a longer one, which Jaccard structurally misses.
-    "q_dedup_containment" -> ((s, dir) =>
-      Dedup.ngramContainmentPairs(t(s, dir, "documents"), threshold = 0.8)),
-
-    // LSH path; oracle = the same brute-force pair SQL (LSH misses at
-    // j>=0.5 with 32x4 bands are verified-absent on this data locally).
-    // The boilerplate-shingle guard (maxShingleDf) under its own oracle:
-    // shingles shared by > 5 docs are dropped BEFORE the df-squared postings
-    // self-join; denominators keep the full set sizes, so capped Jaccard can
-    // only go down — at this SF every true >= 0.5 pair still survives.
-    "q_dedup_ngram_capped" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.5,
-        maxShingleDf = Some(5))),
-
-    "q_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashLsh(t(s, dir, "documents"), threshold = 0.5)),
-
-    // Dedup-quality readout: pair precision/recall of simhash@hamming<=6
-    // against exact bigram-Jaccard>=0.5 — the recallAtK of the dedup
-    // family, the number a banding/hamming parameter sweep optimizes.
-    "q_dedup_recall" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.pairRecall(
-        Dedup.simhashPairs(docs, maxHamming = 6, portable = true),
-        Dedup.ngramJaccardPairs(docs, threshold = 0.5))
-    }),
-
-    // Pairs -> dedup DECISION: connected components over the pair graph,
-    // min-id canonical label per cluster (iterative label propagation;
-    // oracle = recursive-CTE transitive closure over the same pairs).
-    "q_dedup_clusters" -> ((s, dir) =>
-      Dedup.clusters(Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.5))),
-
-    // ...and the user-facing result: the corpus with one doc kept per
-    // cluster (min-id survivor), everything unpaired untouched.
-    "q_dedup_survivors" -> ((s, dir) =>
-      Dedup.survivors(t(s, dir, "documents").select("doc_id", "source"),
-        Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.5))),
-
-    // ...or keep the BEST member of each cluster (here: longest doc,
-    // n_chars DESC with id tiebreak) — the survivor rule curation wants.
-    "q_dedup_best" -> ((s, dir) =>
-      Dedup.survivorsBy(t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-        Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.5),
-        scoreCol = "n_chars")),
-
-    // SimHash banding (no SQL oracle — rows-only check).
-    // Portable hash => the whole banded-join + hamming pipeline is verified
-    // against a from-scratch SQL simhash (rows-only before round 4).
-    "q_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), maxHamming = 6, portable = true)
-        .withColumn("hamming", col("hamming").cast("long"))),
-
-    "q_dedup_embed" -> ((s, dir) =>
-      Dedup.embeddingCosinePairs(t(s, dir, "embeddings"), threshold = 0.4)),
-
-    // LSH-bucketed scale path for embedding near-dups. Full oracle: the
-    // hyperplane signatures are a pure function of the seeded planes, so
-    // the candidate set is exactly {pairs with sig-hamming <= 2} — the SQL
-    // reproduces the planes as literals and the bucketing as bit tests.
-    "q_dedup_embed_lsh" -> ((s, dir) =>
-      Dedup.embeddingCosinePairsLsh(t(s, dir, "embeddings"), threshold = 0.4)),
-
-    // Deterministic nearest-centroid bucketing (the SemDeDup partitioner):
-    // 8 seed centroids broadcast, assignment is a scan-local fold — zero
-    // corpus shuffle.
-    "q_cluster_assign" -> ((s, dir) =>
-      Similarity.assignToCentroids(t(s, dir, "embeddings"), k = 8)),
-
-    // k-means M-step: per-(cluster, dim) fixed-point component sums over
-    // the nearest-centroid assignment — exact integers, so the vector
-    // accumulation is partition-order-independent and engine-portable
-    // (a float sum would differ run to run). Mean = sum_fp / (n*1e7).
-    "q_kmeans_step" -> ((s, dir) =>
-      Similarity.centroidUpdate(t(s, dir, "embeddings"), k = 8)),
-
-    // Int8 embedding quantization (storage prep for 100 TB vector tables):
-    // scan-local, zero shuffles; the quantized array is emitted as a CSV
-    // string so the cross-engine hash compares a scalar, not nested arrays.
-    "q_quantize" -> ((s, dir) =>
-      t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.quantizeInt8(col("embedding")).as("sq"))
-        .select(col("vec_id"), col("sq.scale").as("scale"),
-          concat_ws(",", transform(col("sq.q"), _.cast("string"))).as("q"))),
-
-    // Product-quantization encode: 64-dim vectors → 4 codes against
-    // first-16-by-id sub-codebooks (one broadcast row), L2 argmin with
-    // smallest-id tiebreak — scan-local, zero corpus shuffle; the
-    // compression layout a billion-vector ANN table stores.
-    "q_pq_encode" -> ((s, dir) =>
-      Similarity.pqEncode(t(s, dir, "embeddings"), m = 4, k = 16, dim = 64)),
-
-    // SQ8 scalar-quantized search: per-dim 8-bit codes against the
-    // corpus-wide [min,max] census (d-row shuffle after partial agg),
-    // asymmetric float-query-vs-code distances through the fixed
-    // reconstruction — the 1/4-width storage tier between raw and PQ.
-    "q_sim_sq8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.sq8Search(emb.filter(col("vec_id") < 10), emb, topK = 5)
-    }),
-
-    // IVF-SQ8 composed search: cell-pruned SQ8 — probes' cells only,
-    // reconstruction distances over 8-bit codes; the sub-linear rung of
-    // the SQ8 ladder (FAISS IVFx,SQ8).
-    "q_sim_ivfsq8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfSq8Search(emb.filter(col("vec_id") < 10), emb,
-        topK = 5)
-    }),
-
-    // Rank-biased overlap between the exact L2 top-10 and the SQ8
-    // top-10 per query (p = 1/2: every term o_d/(d*2^d) has an exact
-    // small-integer denominator) — the top-weighted agreement readout
-    // that judges the compression tier beyond set-recall.
-    "q_rbo_sq8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      Similarity.rankBiasedOverlap(
-        Similarity.l2TopK(q, emb, topK = 10),
-        Similarity.sq8Search(q, emb, topK = 10))
-    }),
-
-    // nDCG@10 + MRR of the SQ8 tier against exact-L2 ground truth — the
-    // IR-standard eval twin of the RBO readout (binary relevance = the
-    // exact top-10 set; position gains are shared quantized constants,
-    // so DCG/IDCG are order-free integer sums).
-    "q_rankeval_sq8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      Similarity.rankEval(
-        Similarity.l2TopK(q, emb, topK = 10),
-        Similarity.sq8Search(q, emb, topK = 10))
-    }),
-
-    // PQ-ADC search: the read side of pqEncode — per-query m×k distance
-    // tables (one broadcast row each), corpus scored by m map lookups on
-    // its CODES (the raw vectors never re-read), map-side-limited top-k.
-    "q_sim_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.pqSearch(emb.filter(col("vec_id") < 10), emb,
-        m = 4, k = 16, dim = 64, topK = 5)
-    }),
-
-    // SemDeDup: within-cluster near-twin drop — the pair space is keyed by
-    // cluster id, so the quadratic work is Σ|cluster|², never corpus².
-    "q_dedup_semantic" -> ((s, dir) =>
-      Dedup.semanticDedup(t(s, dir, "embeddings"), k = 8, threshold = 0.4)),
-
-    // Incremental semantic ingest: a new crawl batch (vec_id % 3 != 0)
-    // deduped against the kept corpus (vec_id % 3 = 0) — assignments are
-    // scan-local on BOTH sides, then one cluster-keyed new×corpus join.
-    "q_dedup_semantic_incr" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Dedup.semanticDedupAgainstCorpus(
-        emb.filter(col("vec_id") % 3 =!= 0),
-        emb.filter(col("vec_id") % 3 === 0),
-        k = 8, threshold = 0.4)
-    }),
-
-    // Range (non-equi) join: events banded into value tiers. The tier
-    // table is tiny and BROADCAST, so the band lookup is a scan-local
-    // nested-loop against 4 rows — the correct plan for banding/bucketing
-    // dimension tables at any fact scale (an equi-join can't express the
-    // interval predicate; a shuffle would be pure waste).
-    "q_range_join" -> ((s, dir) => {
-      val tiers = s.createDataFrame(Seq(
-        ("t0", 0.0, 50.0), ("t1", 50.0, 150.0),
-        ("t2", 150.0, 300.0), ("t3", 300.0, 1000.0)))
-        .toDF("tier", "lo", "hi")
-      ev(s, dir).join(broadcast(tiers),
-          col("value") >= col("lo") && col("value") < col("hi"))
-        .groupBy("tier")
-        .agg(count(lit(1)).as("n"), dsum(col("value"), "sum_value"))
-    }),
-
-    // INTERVAL OVERLAP join — both sides genuine interval sets (user
-    // sessions x purchase windows), neither expressible as as-of or
-    // banding: intervals explode to 1-hour chunks, equi-join on chunk,
-    // exact overlap filter, distinct over multi-chunk pairs. Shuffle is
-    // span/chunk rows, per-chunk work occupancy^2 - never n^2 globally.
-    "q_interval_join" -> ((s, dir) => {
-      val events = ev(s, dir)
-      val sess = operators.Funnel.sessionize(events, gap = "30 minutes")
-        .groupBy(col("user_id"), col("session_idx"))
-        .agg(min(unix_micros(col("ts"))).as("start_us"),
-          max(unix_micros(col("ts"))).as("end_us"))
-        .select((col("user_id") * 1000000L + col("session_idx")).as("s_id"),
-          col("start_us"), col("end_us"))
-      val promos = events.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"),
-          (unix_micros(col("ts")) - 600000000L).as("start_us"),
-          (unix_micros(col("ts")) + 600000000L).as("end_us"))
-      operators.AsOfJoin.overlapJoin(sess, promos, chunk = "1 hour",
-        aIdCol = "s_id", bIdCol = "p_id")
-    }),
-
-    // k-anonymity audit over generalized quasi-identifiers (lang,
-    // source, 100-token length band): every equivalence class sized,
-    // classes under k=5 flagged - the pre-release privacy gate; one
-    // keyed partial agg.
-    "q_k_anon" -> ((s, dir) =>
-      Curation.kAnonymity(
-        t(s, dir, "documents").select(col("lang"), col("source"),
-          expr("size(split(trim(text), '\\\\s+')) div 100")
-            .cast("long").as("len_band")),
-        Seq("lang", "source", "len_band"), k = 5)),
-
-    // Benford first-digit audit (the fabricated-numbers screen): exact
-    // leading-digit counts from the DECIMAL STRING rendering, observed
-    // share vs Benford's log10(1+1/d) expectation in micros — one scan to
-    // a <=9-row agg, total via a 9-row window.
-    "q_benford" -> ((s, dir) =>
-      Curation.benfordProfile(t(s, dir, "orders"), "o_totalprice")),
-
-    // The first-TWO-digit Benford follow-up (Nigrini's two-digit test):
-    // joint-law expectations log10(1+1/(10·d1+d2)) over prefixes 10-99,
-    // extraction from the non-digit-stripped decimal rendering (sub-1
-    // values route right; single-significant-digit values excluded).
-    "q_benford2" -> ((s, dir) =>
-      Curation.benfordProfile2(t(s, dir, "orders"), "o_totalprice")),
-
-    // ...and the second-digit marginal (Σ_d1 of the joint law): the
-    // near-flat 12%->8.5% slope that survives unit changes.
-    "q_benford_second" -> ((s, dir) =>
-      Curation.benfordProfileSecond(t(s, dir, "orders"), "o_totalprice")),
-
-    // Fixed-width numeric histogram: bucket index is exact integer
-    // arithmetic (floor of a deterministic double division), one
-    // partial-combined hash agg — the numeric-distribution profile that
-    // complements the quantile sketches.
-    "q_histogram" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(floor(col("o_totalprice") / 50000).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))),
-
-    // ---------------------------------------------------------------------
-    // Similarity search.
-    // ---------------------------------------------------------------------
-
-    "q_sim_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
-    }),
-
-    // Prototype cluster pruning (Sorscher et al. / SemDeDup keep policy):
-    // seeded LSH cells, exact integer centroids over round(x*1000)
-    // components, fixed-order d2 fold, per-cell rank, integer keep cut
-    // at 50% closest-first.
-    "q_proto_prune" -> ((s, dir) =>
-      Similarity.prototypeScores(t(s, dir, "embeddings"),
-        nPlanes = 4, dim = 64, keepPct = 50)),
-
-    // Margin-based bitext mining (Artetxe & Schwenk / CCMatrix): best
-    // cross-side match per even-id vector against the odd-id side by the
-    // ratio margin cos/(Σtopk_x/2k + Σtopk_y/2k), with the mutual-best
-    // flag. Cosines quantize to 1e12 integers so neighborhood sums are
-    // order-free exact; the margin is 1e-6 fixed point under the hash.
-    "q_bitext_margin" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bitextMarginMine(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1), k = 4)
-    }),
-
-    // The bitext scale path: the same margin chain over LSH candidate
-    // pairs (y keeps its bucket, x multi-probes hamming-1) — shuffle
-    // volume = candidates, never |X|·|Y|.
-    "q_bitext_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bitextMarginMineLsh(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1), k = 4, nPlanes = 4)
-    }),
-
-    // The bitext IVF scale path: the same margin chain over CO-CELL pairs
-    // from a deterministic lowest-id-seeded coarse quantizer (y keeps its
-    // nearest cell, x probes its 4 nearest of 16) — the structure-aware
-    // candidate generator for corpora that cluster, vs LSH's
-    // data-oblivious planes. Salted bare-id cell join, vectors rejoin on
-    // ids; driver traffic = the 16-row codebook.
-    "q_bitext_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bitextMarginMineIvf(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1), k = 4, nlist = 16, nprobe = 4)
-    }),
-
-    // The TRAINED-quantizer IVF path under the gate, as an agreement
-    // readout against the brute winners: 3 Lloyd rounds of kmeansIterate
-    // over the y side replace the deterministic lowest-id seeds at the
-    // SAME nlist/nprobe — data-following cells prune better at equal
-    // candidate budget (agreement 157/250 trained vs 113/250
-    // deterministic on this corpus — tools/BitextProbe pins the lift;
-    // rounds 1/3/5 give 158/157/160, so 3 is past the knee).
-    // The trained centroids are nlist rows of driver-bounded metadata,
-    // collected once to re-literal both the engine codebook and the
-    // oracle (the q_ann_recall_refined discipline).
-    "q_bitext_ivf_trained" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val xsS = emb.filter(col("vec_id") % 2 === 0)
-      val ysS = emb.filter(col("vec_id") % 2 === 1)
-      val cents: Array[Array[Double]] =
-        Similarity.kmeansIterate(ysS, k = 16, rounds = 3)
-          .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-      bitextTrainedCents = Some(cents)
-      import s.implicits._
-      val cb = cents.toSeq.zipWithIndex
-        .map { case (v, i) => (i.toLong, v.toSeq) }.toDF("cid", "cv")
-      val brute = Similarity.bitextMarginMine(xsS, ysS, k = 4)
-        .select(col("x_id"), col("y_id").as("y_brute"))
-      val ivf = Similarity.bitextMarginMineIvf(xsS, ysS, k = 4, nlist = 16,
-          nprobe = 4, codebookSource = Some(cb))
-        .select(col("x_id"), col("y_id").as("y_ivf"))
-      brute.join(ivf, Seq("x_id"))
-        .select(col("x_id"), col("y_brute"), col("y_ivf"),
-          (col("y_brute") === col("y_ivf")).as("agree"))
-    }),
-
-    // The PQ-ADC bitext candidate path — the third generator completing
-    // the mining-side ANN symmetry (LSH planes / IVF cells / PQ codes):
-    // co-cell pairs are ranked by asymmetric-distance table lookups over
-    // pqEncode codes and only each x's 8 ADC-best reach the exact
-    // cosine + margin verify — the FAISS IVFx,PQy read path applied to
-    // mining (both prunings multiply; exact scoring touches 8·|X| pairs).
-    // Honest price on THIS corpus: the synthetic embeddings are random —
-    // PQ's worst case like LSH's — so the noisy ADC cut keeps 49/250
-    // brute winners at cand=8 (63 at 16) where IVF's verify-every-co-cell
-    // keeps 113 (tools/BitextProbe); clustered real embeddings are the
-    // regime the code-space shortcut exists for, and cand is the dial.
-    "q_bitext_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // r17 defaults from the BitextProbe knee: m=8/kCodes=32 ADC over the
-      // FULL cell fan-out (nprobe = nlist — on this random worst-case
-      // corpus the cells carry no structure, so the cheap table-lookup
-      // pass ranks everything and the EXACT verify stays at cand=16/x):
-      // agreement 129/250 vs brute — ABOVE the IVF path's 113/250, at
-      // ~1/4 of its exact-scoring budget (16 vs the ~62-pair co-cell pool)
-      Similarity.bitextMarginMinePq(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1),
-        k = 4, cand = 16, nlist = 16, nprobe = 16, m = 8, kCodes = 32,
-        dim = 64)
-    }),
-
-    // Agreement readout: for each x, does the LSH-candidate winner equal
-    // the brute winner? The gated price of pruning: the synthetic
-    // embeddings are RANDOM (no cluster structure — LSH's worst case), so
-    // hamming<=1 at 4 planes (5/16 of pairs scored) keeps 119/250 winners
-    // (nPlanes=2 keeps 205/250 at 3/4 of pairs — tools/BitextProbe); real
-    // embeddings cluster, which is the regime the bucket path exists for.
-    // The gate hashes the exact agreement SET, not a summary.
-    "q_bitext_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val xsS = emb.filter(col("vec_id") % 2 === 0)
-      val ysS = emb.filter(col("vec_id") % 2 === 1)
-      val brute = Similarity.bitextMarginMine(xsS, ysS, k = 4)
-        .select(col("x_id"), col("y_id").as("y_brute"))
-      val lsh = Similarity.bitextMarginMineLsh(xsS, ysS, k = 4, nPlanes = 4)
-        .select(col("x_id"), col("y_id").as("y_lsh"))
-      brute.join(lsh, Seq("x_id"))
-        .select(col("x_id"), col("y_brute"), col("y_lsh"),
-          (col("y_brute") === col("y_lsh")).as("agree"))
-    }),
-
-    // The multi-seed recall lever under the gate: THREE independent plane
-    // sets, candidates unioned (a pair is missed only if every seed cuts
-    // it), then the same margin chain. At nPlanes=4 on this random
-    // worst-case corpus agreement lifts 119/250 -> 205/250
-    // (tools/BitextProbe) while each seed still prunes to hamming<=1
-    // buckets — recall tuned WITHOUT widening buckets.
-    "q_bitext_recall_seeds" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val xsS = emb.filter(col("vec_id") % 2 === 0)
-      val ysS = emb.filter(col("vec_id") % 2 === 1)
-      val brute = Similarity.bitextMarginMine(xsS, ysS, k = 4)
-        .select(col("x_id"), col("y_id").as("y_brute"))
-      val lsh = Similarity.bitextMarginMineLsh(xsS, ysS, k = 4, nPlanes = 4,
-          seeds = bitextSeedPool)
-        .select(col("x_id"), col("y_id").as("y_lsh"))
-      brute.join(lsh, Seq("x_id"))
-        .select(col("x_id"), col("y_brute"), col("y_lsh"),
-          (col("y_brute") === col("y_lsh")).as("agree"))
-    }),
-
-    // The multi-seed recall lever applied to PQ CODEBOOKS (the r17 ask's
-    // closure): THREE independent deterministic codebooks (md5-ordered
-    // kCodes-row samples), per-codebook ADC cand-cuts unioned before the
-    // exact verify — a brute winner is missed only if EVERY codebook's
-    // quasi-independent ADC noise ranks it below cand. On this random
-    // worst-case corpus agreement lifts 129/250 (single codebook,
-    // cand=16) -> 227/250 at 72 exact scorings per x — ABOVE the LSH
-    // 3-seed 205/250 at ~1/3 of its exact-verify budget
-    // (tools/BitextProbe). The gate hashes the exact agreement SET.
-    "q_bitext_pq_seeds" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val xsS = emb.filter(col("vec_id") % 2 === 0)
-      val ysS = emb.filter(col("vec_id") % 2 === 1)
-      val brute = Similarity.bitextMarginMine(xsS, ysS, k = 4)
-        .select(col("x_id"), col("y_id").as("y_brute"))
-      val pq = Similarity.bitextMarginMinePq(xsS, ysS, k = 4, cand = 24,
-          nlist = 16, nprobe = 16, m = 8, kCodes = 32,
-          seeds = bitextSeedPool)
-        .select(col("x_id"), col("y_id").as("y_pq"))
-      brute.join(pq, Seq("x_id"))
-        .select(col("x_id"), col("y_brute"), col("y_pq"),
-          (col("y_brute") === col("y_pq")).as("agree"))
-    }),
-
-    // Greedy k-center coreset (Gonzalez farthest-first): 8 maximally
-    // spread representatives of the embedding corpus — the diversity
-    // PRUNING selector (vs MMR's candidate re-rank); d2 carries the
-    // covering-radius progression. k-1 broadcast-center scans, 1-row
-    // argmax per round.
-    "q_kcenter" -> ((s, dir) =>
-      Similarity.kCenterGreedy(t(s, dir, "embeddings"), k = 8)),
-
-    // Johnson–Lindenstrauss ±1 sign projection (Achlioptas): 64-d float
-    // embeddings shrink to 8 exact fixed-point coordinates in one pure
-    // scan — the pre-LSH/pre-SemDeDup width cut. Integer end to end
-    // (components quantize to round(x·1000) before the signed sums), so
-    // the gate is bit-exact, not rounded-double; the sign matrix is the
-    // engine's own seeded constants embedded in the oracle (the
-    // makePlanes discipline).
-    "q_rand_project" -> ((s, dir) =>
-      Similarity.randomProject(t(s, dir, "embeddings"), outDims = 8, dim = 64)
-        .select(col("vec_id"), posexplode(col("proj")).as(Seq("dim", "y")))),
-
-    // PCA's distributed half: the exact 10^-6-quantized covariance census
-    // (integer moments, 2080 upper-triangle rows at d=64) — what the
-    // driver-side eigensolve consumes; fully static-oracle-checkable.
-    "q_pca_cov" -> ((s, dir) =>
-      strDecimals(Similarity.pcaCovariance(t(s, dir, "embeddings"), dim = 64))),
-
-    // The fitted projection: Jacobi eigensolve on the collected census,
-    // top-2 sign-canonicalized components, one-scan left-fold dots —
-    // oracle embeds the captured component literals (IvfRun discipline).
-    "q_pca_project" -> ((s, dir) => {
-      val run = Similarity.pcaFit(t(s, dir, "embeddings"), dim = 64, k = 2)
-      Similarity.pcaProject(t(s, dir, "embeddings"), run)
-    }),
-
-    // Contrastive mining: k deterministic uniform negatives per doc from
-    // the salted-md5 ring — integer arithmetic end to end, one pos-keyed
-    // join, payloads never expand.
-    "q_neg_samples" -> ((s, dir) =>
-      operators.Contrastive.ringNegatives(
-        t(s, dir, "documents").select(col("doc_id")), "doc_id")),
-
-    // ...and the top-5 nearest DIFFERENT-label neighbors per probe vector
-    // (hard negatives for a triplet loss) — the oracle-exact brute form
-    // of the ANN-bucketed scale path, q_sim_topk's cosine contract.
-    "q_hard_neg" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Contrastive.hardNegatives(emb.filter(col("vec_id") < 10), emb)
-    }),
-
-    // End-to-end contrastive training prep in ONE composed plan: length
-    // gate on the text side -> modality join (doc_id = vec_id) ->
-    // SemDeDup survivors -> deterministic ring negatives over the
-    // deduped set. Join, scan-local assignment, one cluster-keyed anti
-    // join, prefix count, one pos-keyed join — no stage materializes.
-    "q_pipeline_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).as("n_tokens"))
-        .filter(col("n_tokens") >= 25)
-      val emb = t(s, dir, "embeddings")
-      val joined = emb.join(docs, emb("vec_id") === docs("doc_id"))
-        .select(col("vec_id"), col("embedding"))
-      val survivors = Dedup.semanticDedup(joined, k = 8, threshold = 0.4)
-      operators.Contrastive.ringNegatives(
-        survivors.select(col("vec_id")), "vec_id", k = 2, salt = "pairs")
-    }),
-
-    // CROSS-MODAL PAIR-CURATION CAPSTONE (the LAION-shape image-text
-    // pipeline) — ONE composed plan over four already-gated members:
-    //   1. perceptual image dedup on the REAL javax.imageio decode path
-    //      (planted duplicate images, seed = doc_id % 100; RealCodec
-    //      dHash, q_media_dhash's formula) keeps the lowest doc per hash;
-    //   2. cross-modal gate: image-side features (the mapInPandas-shaped
-    //      media feature stage, q_media_features' formula) against the
-    //      first 16 components of the PAIRED text embedding — keep pairs
-    //      at cosine >= 0.05 (both sides fold in double, exact replay);
-    //   3. SemDeDup over the survivors' full text embeddings (cluster-
-    //      keyed LEFT ANTI, q_pipeline_pairs' member);
-    //   4. sharded-JSONL training export, READ BACK from the written
-    //      shards (q_export_shards' member) — serialization fidelity,
-    //      layout, and the shard derivation all sit under the hash.
-    "q_pipeline_multimodal" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // 1. image dedup: one decode per DISTINCT image (<= 100 PNGs), the
-      // hash join routes it back to every doc carrying that image
-      val seeds = docs.select((col("doc_id") % 100).as("doc_id")).distinct()
-      val hashes = Multimodal.dHashes(
-        Multimodal.synthesizePngs(seeds).toDF(), Multimodal.RealCodec).toDF()
-        .select(col("doc_id").as("seed"), col("dhash"))
-      val imgKept = docs.withColumn("seed", col("doc_id") % 100)
-        .join(hashes, Seq("seed"))
-        .withColumn("__keep_doc",
-          min(col("doc_id")).over(Window.partitionBy(col("dhash"))))
-        .filter(col("doc_id") === col("__keep_doc"))
-        .select(col("doc_id"), col("text"))
-      // 2. cross-modal cosine gate (image features x text embedding)
-      val feats = Multimodal.extractFeatures(
-        Multimodal.asMediaTable(imgKept), dim = 16, Multimodal.StubCodec).toDF()
-      val emb = t(s, dir, "embeddings")
-      val gated = feats.join(emb, feats("doc_id") === emb("vec_id"))
-        .filter(graft.functions.VectorFunctions.cosineSimilarity(
-          col("features"), slice(col("embedding"), 1, 16)) >= 0.05)
-        .select(col("vec_id"), col("embedding"))
-      // 3. semantic dedup of the kept pairs' text side
-      val surv = Dedup.semanticDedup(gated, k = 8, threshold = 0.4)
-      // 4. export the curated pair corpus as training shards; re-read
-      exportAndReadShards(s,
-        surv.join(docs, surv("vec_id") === docs("doc_id"))
-          .select(col("doc_id"), col("text")),
-        "graft_mm_gate_", maxShardBytes = 64L * 1024)
-    }),
-
-    // Sparse retrieval: BM25 top-10 per query over the documents corpus —
-    // postings-style plan (only query-term tokens shuffle), broadcast
-    // corpus stats, map-side-limited top-k window. Terms are chosen with
-    // pairwise-distinct dfs inside each query so exact score ties can only
-    // come from identical tf-vectors (engine-independent, doc_id-broken);
-    // see Retrieval.bm25TopK on why rank+hits, not the raw score, is the
-    // cross-engine contract.
-    "q_bm25" -> ((s, dir) =>
-      graft.operators.Retrieval.bm25TopK(t(s, dir, "documents"), Seq(
-        "fast table scan" -> Seq("fast", "table", "scan"),
-        "join merge sort" -> Seq("join", "merge", "sort"),
-        "stream window agg" -> Seq("stream", "window", "agg")), k = 10)),
-
-    // Exact phrase search over positional postings — adjacency the BM25
-    // bag-of-words cannot express: postings pruned to the phrase's two
-    // tokens BEFORE the shuffle, the second word joined at pos-1 on the
-    // co-partitioned (doc, pos) key, per-doc occurrence counts.
-    "q_phrase" -> ((s, dir) =>
-      graft.operators.Retrieval.phraseSearch(t(s, dir, "documents"),
-        Seq("data", "query"))),
-
-    // RM3 pseudo-relevance feedback: top-5 feedback docs per query, top-2
-    // integer-weighted expansion terms appended, BM25 re-run — two
-    // bm25TopK plans + a broadcast-feedback term census between them.
-    "q_bm25_rm3" -> ((s, dir) =>
-      graft.operators.Retrieval.bm25WithFeedback(t(s, dir, "documents"), Seq(
-        "fast table scan" -> Seq("fast", "table", "scan"),
-        "join merge sort" -> Seq("join", "merge", "sort"),
-        "stream window agg" -> Seq("stream", "window", "agg")),
-        k = 10, kFb = 5, mExp = 2)),
-
-    // ROUGE-2 overlap scoring (Lin 2004): each doc's planted "summary"
-    // (its first 12 tokens, plus a novel tail on doc_id%3) scored against
-    // the full text — clipped bigram-type match + totals as EXACT
-    // integers, precision/recall/f1 as single IEEE divisions of them.
-    // The corpus-scale eval step of a summarization/distillation
-    // pipeline.
-    "q_rouge2" -> ((s, dir) => {
-      val toks = TextFunctions.tokens(col("text"))
-      val cand = concat(concat_ws(" ", slice(toks, 1, 12)),
-        when(col("doc_id") % 3 === 0, lit(" novel summary tail tokens"))
-          .otherwise(lit("")))
-      graft.operators.Retrieval.rougeN(
-        t(s, dir, "documents").select(col("doc_id"), col("text"),
-          cand.as("cand")), n = 2)
-    }),
-
-    // Hybrid retrieval: BM25 lexical ranks fused with dense cosine ranks by
-    // reciprocal-rank fusion (each query string paired with a probe vector
-    // via a broadcast literal map). The fused score is Σ 1/(60+rank) —
-    // exact-integer divisions folded in system order, so unlike the raw
-    // BM25 score it IS hashable cross-engine.
-    "q_hybrid_rank" -> ((s, dir) => {
-      val lex = graft.operators.Retrieval.bm25TopK(t(s, dir, "documents"), Seq(
-        "fast table scan" -> Seq("fast", "table", "scan"),
-        "join merge sort" -> Seq("join", "merge", "sort"),
-        "stream window agg" -> Seq("stream", "window", "agg")), k = 20)
-        .select(col("query_id"), col("doc_id"), col("rnk"))
-      val qmap = s.createDataFrame(Seq(
-        ("fast table scan", 0L), ("join merge sort", 1L),
-        ("stream window agg", 2L))).toDF("query_id", "probe_id")
-      val emb = t(s, dir, "embeddings")
-      val dense = Similarity.bruteForceTopK(emb.filter(col("vec_id") < 3), emb, k = 20)
-        .join(broadcast(qmap), col("q_id") === col("probe_id"))
-        .select(col("query_id"), col("n_id").as("doc_id"),
-          col("rank").cast("int").as("rnk"))
-      graft.operators.Retrieval.reciprocalRankFusion(
-        Seq("dense" -> dense, "lexical" -> lex), k = 10)
-    }),
-
-    // ANN paths under full oracles: annLsh candidates are exactly
-    // {sig-hamming(q, n) <= 1} (one-sided multi-probe over seeded planes);
-    // annIvf reproduces the trained centroids as SQL literals via
-    // Similarity.lastIvfRun. Recall vs brute force stays in SimilaritySpec.
-    "q_sim_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annLsh(emb.filter(col("vec_id") < 10), emb, k = 5, nPlanes = 6, dim = 64)
-    }),
-
-    "q_sim_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annIvf(emb.filter(col("vec_id") < 10), emb, k = 5, nlist = 16, nprobe = 4)
-    }),
-
-    // IVF-PQ: the full FAISS-style composition — coarse cells route, ADC
-    // over codes ranks; one scan-local pass builds the (cell, codes)
-    // index frame, per-query work is nprobe/nlist of the corpus x m map
-    // lookups. Both quantizers first-rows-deterministic => static oracle.
-    "q_sim_ivfpq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfPqSearch(emb.filter(col("vec_id") < 10), emb, topK = 5)
-    }),
-
-    // Recall@5 of the LSH ANN against brute force, as a GATED metric (not
-    // just a spec): the index-tuning readout, metric-sized joins only.
-    "q_ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.recallAtK(
-        Similarity.annLsh(emb.filter(col("vec_id") < 10), emb, k = 5,
-          nPlanes = 6, dim = 64),
-        Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5),
-        k = 5)
-    }),
-
-    // MMR diversified re-rank: greedy λ-tradeoff between query relevance
-    // and max similarity to already-selected results over a top-15
-    // candidate frame — everything metric-sized, k−1 keyed-agg rounds.
-    "q_mmr_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cand = Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 15)
-      Similarity.mmrRerank(cand, emb, k = 5, lambda = 0.7)
-    }),
-
-    // The PQ quality KNOB under the gate: recall@5 of ADC search with a
-    // kmeansIterate-REFINED codebook vs the first-k-by-id seeded default,
-    // side by side per query. The refined centroid frame is k rows of
-    // driver-bounded metadata — collected once both to rebuild a literal
-    // codebook source (so the search provably consumes exactly the doubles
-    // the oracle embeds) and for the oracle entry (ivfOracleEntry pattern).
-    "q_ann_recall_refined" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cents: Array[(Long, Array[Double])] =
-        Similarity.pqTrainCodebooks(emb, m = 4, k = 16, dim = 64, rounds = 5)
-          .zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      refinedCents = Some(cents)
-      import s.implicits._
-      val cbSrc = cents.toSeq.toDF("vec_id", "embedding")
-      // 50 queries: at 10 the recall difference drowns in 0.2-step noise
-      // (measured in tools/PqTrainProbe: 50q recall 0.144 seeded ->
-      // 0.176 @ 5 rounds, distortion 1.059 -> 0.722)
-      val qs = emb.filter(col("vec_id") < 50)
-      val exact = Similarity.bruteForceTopK(qs, emb, k = 5)
-      val refined = Similarity.pqSearch(qs, emb, m = 4, k = cents.length,
-        dim = 64, topK = 5, codebookSource = Some(cbSrc))
-      val seeded = Similarity.pqSearch(qs, emb, m = 4, k = 16, dim = 64,
-        topK = 5)
-      val rr = Similarity.recallAtK(refined, exact, k = 5)
-        .select(col("q_id"), col("hits").as("hits_refined"),
-          col("n_exact"), col("recall").as("recall_refined"))
-      val rs = Similarity.recallAtK(seeded, exact, k = 5)
-        .select(col("q_id"), col("hits").as("hits_seeded"),
-          col("recall").as("recall_seeded"))
-      rr.join(rs, Seq("q_id"))
-    }),
-
-    // ---------------------------------------------------------------------
-    // Multimodal columns (binary payload + typed metadata; stub codec).
-    // ---------------------------------------------------------------------
-
-    "q_media_decode" -> ((s, dir) => {
-      Multimodal.decode(Multimodal.asMediaTable(t(s, dir, "documents"))).toDF()
-        .select(col("doc_id"), col("media_type"), col("byte_len"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("n_frames").cast("long").as("n_frames"))
-    }),
-
-    "q_media_frames" -> ((s, dir) => {
-      Multimodal.sampleFrames(Multimodal.asMediaTable(t(s, dir, "documents"))).toDF()
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))
-    }),
-
-    // 16x16 target so most payloads actually truncate (docs are > 256 B).
-    "q_media_resize" -> ((s, dir) => {
-      Multimodal.resize(Multimodal.asMediaTable(t(s, dir, "documents")), 16, 16).toDF()
-        .select(col("doc_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          length(col("payload")).cast("long").as("out_len"))
-    }),
-
-    // The vector is exploded to scalar (doc_id, feat_idx, feat) rows: the
-    // harness sorts output columns with pandas, which cannot sort/hash an
-    // array<float> column, and the explosion puts every feature value under
-    // the gate. Payload BYTES are reached in SQL via hex pairs of
-    // encode(text), and the stub's (byte-128)/128 arithmetic is exact
-    // power-of-two math in both float and double -> full hash-match oracle.
-    "q_media_features" -> ((s, dir) =>
-      Multimodal.extractFeatures(Multimodal.asMediaTable(t(s, dir, "documents"))).toDF()
-        .select(col("doc_id"), posexplode(col("features")).as(Seq("feat_idx", "feat")))
-        .select(col("doc_id"),
-          col("feat_idx").cast("long").as("feat_idx"),
-          col("feat").cast("double").as("feat"))),
-
-    // Perceptual image dedup (dHash) on the REAL decode path: formula
-    // PNGs with PLANTED duplicates (image seed = doc_id % 100, so each of
-    // 5 distinct images appears 5x), nearest-neighbor 9x8 luminance
-    // sampling, gradient bits — equal-seed docs MUST collide to one
-    // 64-bit hash, and the oracle recomputes every hash from the pixel
-    // formula with no image library.
-    "q_media_dhash" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), (col("doc_id") % 100).as("seed"))
-      val hashes = Multimodal.dHashes(
-        Multimodal.synthesizePngs(
-          docs.select(col("seed").as("doc_id")).distinct()).toDF(),
-        Multimodal.RealCodec).toDF()
-        .select(col("doc_id").as("seed"), col("dhash"))
-      docs.join(hashes, Seq("seed"))
-        .withColumn("n_same", count(lit(1))
-          .over(Window.partitionBy(col("dhash"))).cast("long"))
-        .select(col("doc_id"), col("seed"), col("dhash"), col("n_same"))
-    }),
-
-    // Image NEAR-dup pairs: the dHash fingerprints through the banded
-    // hamming join (exact at maxHamming=7 < chunks=8 by pigeonhole) — the
-    // image twin of simhash text dedup, on the real decode path. Seed
-    // space doc_id%40 over the %5 doc slice gives 40 distinct images;
-    // planted equal seeds plus the monotone-luminance all-ones family
-    // produce real pairs.
-    "q_media_neardup" -> ((s, dir) => {
-      val seeds = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") % 40).as("doc_id")).distinct()
-      val hashes = Multimodal.dHashes(
-        Multimodal.synthesizePngs(seeds).toDF(), Multimodal.RealCodec).toDF()
-      operators.Dedup.hammingPairs(hashes, "dhash", maxHamming = 7)
-    }),
-
-    // The REAL javax.imageio path under the gate (the other media gates run
-    // StubCodec): formula-pixel PNGs synthesized executor-side, then the
-    // fused RealCodec stage — header dims, frame count, and the frame-0
-    // raster hash are integer-predictable because PNG round-trips 24-bit
-    // RGB losslessly, so the oracle recomputes the exact polynomial over
-    // the formula pixels with no image library on its side.
-    "q_media_real" -> ((s, dir) => {
-      val ids = t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
-      Multimodal.processAll(Multimodal.synthesizePngs(ids).toDF(),
-          width = 8, height = 8, dim = 4, codec = Multimodal.RealCodec).toDF()
-        .select(col("doc_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("n_frames").cast("long").as("n_frames"),
-          col("frame_hash"))
-    }),
-
-    // Real audio path under the hash gate: formula-PCM WAVs synthesized
-    // executor-side, header fields read back through the JDK sound API
-    // (decodeAudio) and windowed RMS energies computed from the decoded
-    // PCM stream (audioFeatures) — one row per (clip, energy window).
-    // Payload bytes never leave executors; the oracle recomputes both
-    // header arithmetic and the exact integer Σs² -> IEEE energy chain.
-    // VAD-style energy segmentation of the synthesized clips: fixed
-    // 16-sample windows, cross-multiplied INTEGER activity decision
-    // (ssq*10^6 >= theta^2*2^30*cnt - no float in segment boundaries),
-    // maximal active runs emitted with exact integer run energies. The
-    // whole operator is one partition-local decode pass - no shuffle.
-    "q_media_vad" -> ((s, dir) => {
-      val wavs = Multimodal.synthesizeWavs(
-        t(s, dir, "documents").filter(col("doc_id") % 25 === 0)).toDF()
-      Multimodal.energySegments(wavs, windowSamples = 16,
-        thresholdMilli = 500).toDF()
-    }),
-
-    "q_media_audio" -> ((s, dir) => {
-      val wavs = Multimodal.synthesizeWavs(
-        t(s, dir, "documents").filter(col("doc_id") % 25 === 0)).toDF()
-      val meta = Multimodal.decodeAudio(wavs).toDF()
-        .select(col("doc_id"), col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("n_frames"), col("duration_ms"))
-      val feats = Multimodal.audioFeatures(wavs, dim = 4).toDF()
-        .select(col("doc_id"), posexplode(col("features")))
-        .select(col("doc_id"), col("pos").cast("long").as("win"),
-          col("col").cast("double").as("energy"))
-      meta.join(feats, Seq("doc_id"))
-    }),
-  )
-
-  // -------------------------------------------------------------------------
-  // DuckDB oracles. Same parquet tables by name; every alias matches the
-  // Spark column names exactly (the driver sorts columns by name and hashes).
-  // -------------------------------------------------------------------------
-
-  /** A Scala double array as a DuckDB list literal. `Double.toString` is the
-    * shortest round-tripping decimal, so DuckDB parses back the exact same
-    * IEEE value the Spark expression holds — PROVIDED the literal actually
-    * parses as DOUBLE: a bare decimal like `1.9639610121239315` parses as
-    * DECIMAL first, and DuckDB's DECIMAL→DOUBLE conversion (int128 /
-    * 10^scale in floating point) can land 1 ulp off the correctly-rounded
-    * parse (measured on the q_ts_pattern literal). An exponent suffix
-    * forces the DOUBLE parse path, which is correctly rounded. */
-  private def sqlDoubles(xs: Array[Double]): String =
-    xs.map { x =>
-      val s = x.toString
-      if (s.contains('E') || s.contains('e')) s else s + "e0"
-    }.mkString("[", ", ", "]")
-
-  /** Sign-bit LSH bucket as SQL over column `e` (array<double>): bit p set
-    * iff e · plane_p >= 0 — mirrors [[graft.functions.HyperplaneBucket]]'s
-    * left-fold dot (DuckDB `list_sum` accumulates in the same array order,
-    * the bit-exactness contract every cosine oracle here relies on). */
-  private def sqlLshBucket(planes: Seq[Array[Double]], e: String = "e"): String =
-    planes.zipWithIndex.map { case (plane, p) =>
-      s"(CASE WHEN list_sum(list_transform(list_zip($e, ${sqlDoubles(plane)}), " +
-        s"z -> z[1] * z[2])) >= 0 THEN ${1 << p} ELSE 0 END)"
-    }.mkString(" + ")
-
-  /** Left-fold cosine between `a.e` and `b.e`, identical accumulation to
-    * [[graft.functions.CosineSimilarity]] (same fragment as q_dedup_embed /
-    * q_sim_topk, which hash-match). */
-  private def sqlCos(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a.e, $b.e), z -> z[1] * z[2])) / " +
-      s"(sqrt(list_sum(list_transform($a.e, x -> x * x))) * " +
-      s"sqrt(list_sum(list_transform($b.e, x -> x * x))))"
-
-  /** The q_sim_ivf oracle can only exist AFTER the engine trained its coarse
-    * quantizer — the centroids are seed-pinned but data-dependent. Verify
-    * runs every query before dumping oracle_sql.json, so by dump time
-    * [[Similarity.lastIvfRun]] holds the exact centroids q_sim_ivf used;
-    * the SQL re-derives cell assignment (argmin of the same left-fold
-    * Σ(v−c)², ties to the lower cell — [[graft.functions.NearestCells]]),
-    * the nprobe probe cells, and the exact-cosine top-k. Absent a run, the
-    * entry is omitted and the driver falls back to its rows-only check. */
-  /** oracleSql is a def rebuilt per call — warn ONCE per JVM, not once
-    * per lookup (a per-query oracle loop would otherwise spam stderr). */
-  @volatile private var warnedIvfOmitted = false
-  @volatile private var warnedRefinedOmitted = false
-
-  private def ivfOracleEntry: Map[String, String] = {
-    if (Similarity.lastIvfRun.isEmpty && !warnedIvfOmitted) {
-      warnedIvfOmitted = true
-      System.err.println(
-        "WARN oracleSql: q_sim_ivf oracle OMITTED — no IVF run in this JVM " +
-          "(run the q_sim_ivf query before reading oracleSql); the gate " +
-          "degrades to rows-only")
-    }
-    Similarity.lastIvfRun.map { run =>
-      val cellDists = run.centroids.zipWithIndex.map { case (ctr, i) =>
-        s"""  SELECT vec_id, $i AS cell, list_sum(list_transform(list_zip(e, ${sqlDoubles(ctr)}),
-           |    z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d FROM v""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      "q_sim_ivf" ->
-        s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-           |cd AS (
-           |$cellDists),
-           |rnk AS (SELECT vec_id, cell,
-           |          row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM cd),
-           |asg AS (SELECT vec_id, cell FROM rnk WHERE rn = 1),
-           |pr AS (SELECT vec_id, cell FROM rnk WHERE rn <= ${run.nprobe} AND vec_id < 10),
-           |sc AS (
-           |  SELECT p.vec_id AS q_id, a.vec_id AS n_id, ${sqlCos("q", "c")} AS cos
-           |  FROM pr p JOIN asg a ON p.cell = a.cell AND p.vec_id != a.vec_id
-           |  JOIN v q ON q.vec_id = p.vec_id
-           |  JOIN v c ON c.vec_id = a.vec_id)
-           |SELECT q_id, n_id, rank, cos FROM (
-           |  SELECT q_id, n_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS rank
-           |  FROM sc)
-           |WHERE rank <= ${run.k}""".stripMargin
-    }.toMap
-  }
-
-  /** Shared SQL fragments (kept inline per-query so each entry is a
-    * self-contained ANSI statement for the driver). */
-  /** q_kcore reference: the peel loop UNROLLED to a fixed round count —
-    * n_i = nodes whose degree within the subgraph induced by n_{i-1} is
-    * >= k. Peeling only filters, so rounds past the fixed point are
-    * no-ops: rounds >= the data's convergence depth ⟹ the unrolled form
-    * equals the converged k-core the engine's loop returns. */
-  private def kcoreOracleSql(k: Int, rounds: Int): String = {
-    // MATERIALIZED is load-bearing: every n_i references n_{i-1} TWICE, so
-    // un-hinted CTE inlining duplicates the whole chain per reference —
-    // 2^rounds expansions (measured: 403 s plain vs 0.9 s materialized at
-    // sf0.01)
-    val peels = (1 to rounds).map { i =>
-      s"""n$i AS MATERIALIZED (SELECT e.node FROM ends e
-         |  JOIN n${i - 1} s ON e.o = s.node
-         |  JOIN n${i - 1} s2 ON e.node = s2.node
-         |  GROUP BY e.node HAVING count(*) >= $k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pairs AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |ends AS MATERIALIZED (SELECT u AS node, v AS o FROM pairs
-       |         UNION ALL SELECT v, u FROM pairs),
-       |n0 AS MATERIALIZED (SELECT DISTINCT node FROM ends),
-       |$peels
-       |SELECT e.node, CAST(count(*) AS BIGINT) AS core_deg
-       |FROM ends e
-       |  JOIN n$rounds s ON e.o = s.node
-       |  JOIN n$rounds s2 ON e.node = s2.node
-       |GROUP BY e.node""".stripMargin
-  }
-
-  /** q_lpa reference: the synchronous vote unrolled — l_i = per-node
-    * argmax (count desc, label asc) over neighbor labels from l_{i-1}. */
-  /** q_perplexity_* references: the interpolated-KN scorer replayed in
-    * SQL — the engine's exact bigram derivation (q_bigram_kn's), the
-    * same double op order inside the ln, per-TYPE 1e-6 fixed point,
-    * integer rollup. `refWhere` selects the model corpus; `thrMicros`
-    * adds the filter's integer keep compare. */
-  private def perplexityOracleSql(
-      refWhere: String, thrMicros: Option[Long]): String = {
-    val keepCol = thrMicros.map(t =>
-      s""",
-         |  coalesce(sc.sum_lp_q, 0) >= $t * coalesce(sc.n_bigrams, 0) AS keep"""
-        .stripMargin).getOrElse("")
-    s"""WITH arr AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS a
-       |  FROM documents),
-       |bgd AS (SELECT doc_id, unnest(list_transform(range(1, len(a)),
-       |          i -> a[i] || ' ' || a[i+1])) AS bg FROM arr),
-       |occ AS (SELECT doc_id, split_part(bg, ' ', 1) AS w1,
-       |          split_part(bg, ' ', 2) AS w2, CAST(count(*) AS BIGINT) AS cnt
-       |        FROM bgd GROUP BY 1, 2, 3),
-       |rbg AS (SELECT unnest(list_transform(range(1, len(a)),
-       |          i -> a[i] || ' ' || a[i+1])) AS bg
-       |        FROM arr WHERE $refWhere),
-       |c AS (SELECT split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2,
-       |        CAST(count(*) AS BIGINT) AS c2 FROM rbg GROUP BY 1, 2),
-       |pre AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS cpre,
-       |          CAST(count(*) AS BIGINT) AS n1fwd FROM c GROUP BY 1),
-       |bk AS (SELECT w2, CAST(count(*) AS BIGINT) AS n1back FROM c GROUP BY 1),
-       |ty AS (SELECT CAST(count(*) AS BIGINT) AS n_types FROM c),
-       |lp AS (SELECT c.w1, c.w2, CAST(round(ln(
-       |          greatest(CAST(c2 AS DOUBLE) - 0.75, 0.0) / CAST(cpre AS DOUBLE)
-       |          + ((0.75 * CAST(n1fwd AS DOUBLE)) / CAST(cpre AS DOUBLE))
-       |            * (CAST(n1back AS DOUBLE) / CAST(ty.n_types AS DOUBLE)))
-       |          * 1000000.0) AS BIGINT) AS lp_q
-       |       FROM c JOIN pre USING (w1) JOIN bk USING (w2) CROSS JOIN ty),
-       |fb AS (SELECT CAST(round(ln(1.0 / CAST(n_types AS DOUBLE)) * 1000000.0)
-       |          AS BIGINT) AS lp_unseen FROM ty),
-       |sc AS (SELECT occ.doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-       |         CAST(sum(cnt * coalesce(lp.lp_q, fb.lp_unseen)) AS BIGINT) AS sum_lp_q
-       |       FROM occ LEFT JOIN lp USING (w1, w2) CROSS JOIN fb GROUP BY 1)
-       |SELECT d.doc_id, coalesce(sc.n_bigrams, 0) AS n_bigrams,
-       |  coalesce(sc.sum_lp_q, 0) AS sum_lp_q$keepCol
-       |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin
-  }
-
-  /** q_bitext_* references: the ratio-margin winners-per-x relation —
-    * quantized cosines over the candidate pair set (brute cross join, or
-    * bucket-hamming ≤ 1 when `lshCand = Some(nPlanes)` — the engine's
-    * one-sided multi-probe as a bit_count condition), per-side top-k
-    * integer neighborhood sums, the fixed-order margin, winners both
-    * sides, mutual flag. */
-  /** q_dedup_semantic_incr AND q_stream_semantic_gate: the incremental
-    * SemDeDup relation — corpus-seeded centroids, nearest-centroid
-    * assignment both sides, NOT EXISTS twin test within the cluster. The
-    * stream gate shares it verbatim because the stream-static left anti
-    * is stateless: the accumulated micro-batch sink IS the batch result. */
-  /** q_dedup_ppjoin_incr AND q_stream_ppjoin_gate: the cross-side
-    * brute-force Jaccard pairs (batch docs vs corpus slice). The stream
-    * gate shares it verbatim because a micro-batch's pairs depend only on
-    * its own docs + the static corpus — the accumulated foreachBatch sink
-    * IS the batch relation. */
-  private val ppjoinIncrSql =
-    """WITH s AS (
-      |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-      |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-      |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-      |p AS (
-      |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-      |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-      |  FROM s a JOIN s b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0)
-      |SELECT a_id, b_id, CAST(i AS BIGINT) AS inter,
-      |  CAST(i AS DOUBLE) / (la + lb - i) AS jac
-      |FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5""".stripMargin
-
-  private val semanticIncrSql =
-    """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-      |nw AS (SELECT * FROM v WHERE vec_id % 3 != 0),
-      |rf AS (SELECT * FROM v WHERE vec_id % 3 = 0),
-      |c AS (SELECT vec_id AS cid, e AS ce FROM rf ORDER BY vec_id LIMIT 8),
-      |na AS (SELECT vec_id, cluster, e FROM (
-      |  SELECT nw.vec_id, c.cid AS cluster, nw.e,
-      |    row_number() OVER (PARTITION BY nw.vec_id ORDER BY
-      |      list_sum(list_transform(list_zip(nw.e, c.ce), z -> z[1] * z[2])) /
-      |        (sqrt(list_sum(list_transform(nw.e, x -> x * x))) *
-      |         sqrt(list_sum(list_transform(c.ce, x -> x * x)))) DESC, c.cid) AS rn
-      |  FROM nw, c) WHERE rn = 1),
-      |ra AS (SELECT vec_id, cluster, e FROM (
-      |  SELECT rf.vec_id, c.cid AS cluster, rf.e,
-      |    row_number() OVER (PARTITION BY rf.vec_id ORDER BY
-      |      list_sum(list_transform(list_zip(rf.e, c.ce), z -> z[1] * z[2])) /
-      |        (sqrt(list_sum(list_transform(rf.e, x -> x * x))) *
-      |         sqrt(list_sum(list_transform(c.ce, x -> x * x)))) DESC, c.cid) AS rn
-      |  FROM rf, c) WHERE rn = 1)
-      |SELECT b.vec_id, b.cluster
-      |FROM na b
-      |WHERE NOT EXISTS (
-      |  SELECT 1 FROM ra s
-      |  WHERE s.cluster = b.cluster
-      |    AND list_sum(list_transform(list_zip(s.e, b.e), z -> z[1] * z[2])) /
-      |      (sqrt(list_sum(list_transform(s.e, x -> x * x))) *
-      |       sqrt(list_sum(list_transform(b.e, x -> x * x)))) >= 0.4)""".stripMargin
-
-  /** q_bigram_lm_incr AND q_stream_bigramlm_gate: ingest-time
-    * corpus-relative bigram scoring — static censuses, per-doc integer
-    * rollup. Shared because each doc's score depends only on its own row
-    * + the static corpus, so the per-micro-batch foreachBatch apply
-    * accumulates to exactly the batch relation. */
-  private val bigramIncrSql =
-    """WITH cp AS (
-      |  SELECT regexp_split_to_array(trim(text), '\s+') AS a
-      |  FROM documents WHERE doc_id % 5 <> 0),
-      |uf AS (SELECT tok, count(*) AS c1
-      |       FROM (SELECT unnest(a) AS tok FROM cp) GROUP BY tok),
-      |bf AS (SELECT bg, count(*) AS c2 FROM (
-      |  SELECT unnest(list_transform(range(1, len(a)), i -> a[i] || ' ' || a[i+1])) AS bg
-      |  FROM cp) GROUP BY bg),
-      |en AS (SELECT bf.bg, bf.c2, uf.c1
-      |       FROM bf JOIN uf ON split_part(bf.bg, ' ', 1) = uf.tok),
-      |nd AS (
-      |  SELECT doc_id, unnest(list_transform(range(1, len(a)), i -> a[i] || ' ' || a[i+1])) AS bg
-      |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
-      |        FROM documents WHERE doc_id % 5 = 0))
-      |SELECT doc_id, count(*) AS n_bg,
-      |  CAST(count(en.bg) AS BIGINT) AS n_hit,
-      |  CAST(sum(coalesce(en.c2, 0)) AS BIGINT) AS sum_bg,
-      |  CAST(sum(coalesce(en.c1, 0)) AS BIGINT) AS sum_prefix
-      |FROM nd LEFT JOIN en USING (bg)
-      |GROUP BY doc_id""".stripMargin
-
-  /** q_standardize_incr AND q_stream_standardize_gate: drift z-scoring of
-    * the arriving slice against the static per-source moments — the
-    * stream form is a stateless stream-static join, so the sinks agree. */
-  private val standardizeIncrSql =
-    """WITH t AS (SELECT doc_id, source,
-      |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-      |  FROM documents),
-      |s AS (SELECT source, count(n_tokens) AS n, sum(n_tokens) AS sm,
-      |        sum(n_tokens * n_tokens) AS q
-      |      FROM t WHERE doc_id % 5 <> 0 GROUP BY source)
-      |SELECT t.doc_id, t.source, t.n_tokens,
-      |  CASE WHEN t.n_tokens IS NULL OR n IS NULL THEN NULL
-      |       WHEN n * q - sm * sm = 0 THEN 0.0
-      |       ELSE CAST(n * t.n_tokens - sm AS DOUBLE)
-      |            / sqrt(CAST(n * q - sm * sm AS DOUBLE)) END AS z
-      |FROM t LEFT JOIN s ON t.source IS NOT DISTINCT FROM s.source
-      |WHERE t.doc_id % 5 = 0""".stripMargin
-
-  /** The q_bitext_recall_seeds seed pool: the default plane seed plus two
-    * independent ones (golden-ratio and xorshift constants — any distinct
-    * longs work; these match tools/BitextProbe's lift table). */
-  private val bitextSeedPool = Seq(0x5DEECE66DL, 0x9E3779B9L, 0x2545F491L)
-
-  /** The LSH candidate condition: a pair is a candidate iff ANY seed's
-    * plane set leaves its two signatures within hamming 1 (the engine
-    * unions the per-seed candidate sets and distincts — same relation). */
-  private def bitextLshCond(nPlanes: Int, seeds: Seq[Long]): String = {
-    val conds = seeds.map { seed =>
-      val planes = graft.functions.VectorFunctions.makePlanes(nPlanes, 64, seed)
-      s"bit_count(xor(${sqlLshBucket(planes, "x.e")}, " +
-        s"${sqlLshBucket(planes, "y.e")})) <= 1"
-    }
-    s"AND (${conds.mkString(" OR ")})"
-  }
-
-  private def bitextWinnersSql(
-      candCond: String = "",
-      extraCtes: String = ""): String = {
-    val pre = if (extraCtes.isEmpty) "" else extraCtes + ",\n"
-    s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-       |${pre}sc AS (
-       |  SELECT x.vec_id AS x_id, y.vec_id AS y_id,
-       |    CAST(round((list_sum(list_transform(list_zip(x.e, y.e), z -> z[1] * z[2])) /
-       |      (sqrt(list_sum(list_transform(x.e, t -> t * t))) *
-       |       sqrt(list_sum(list_transform(y.e, t -> t * t)))))
-       |      * 1000000000000.0) AS BIGINT) AS cos_q
-       |  FROM v x JOIN v y ON x.vec_id % 2 = 0 AND y.vec_id % 2 = 1 $candCond),
-       |candx AS (SELECT x_id, y_id, cos_q FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY x_id ORDER BY cos_q DESC, y_id) AS rn
-       |  FROM sc) WHERE rn <= 4),
-       |candy AS (SELECT x_id, y_id, cos_q FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY y_id ORDER BY cos_q DESC, x_id) AS rn
-       |  FROM sc) WHERE rn <= 4),
-       |sx AS (SELECT x_id, CAST(sum(cos_q) AS BIGINT) AS sx_q,
-       |         CAST(count(*) AS BIGINT) AS nx FROM candx GROUP BY 1),
-       |sy AS (SELECT y_id, CAST(sum(cos_q) AS BIGINT) AS sy_q,
-       |         CAST(count(*) AS BIGINT) AS ny FROM candy GROUP BY 1),
-       |mx AS (SELECT c.x_id, c.y_id, c.cos_q,
-       |    CASE WHEN CAST(sx_q AS DOUBLE) / (2.0 * nx)
-       |            + CAST(sy_q AS DOUBLE) / (2.0 * ny) > 0
-       |         THEN CAST(round(CAST(c.cos_q AS DOUBLE) /
-       |              (CAST(sx_q AS DOUBLE) / (2.0 * nx)
-       |               + CAST(sy_q AS DOUBLE) / (2.0 * ny)) * 1000000.0) AS BIGINT)
-       |    END AS margin_fp
-       |  FROM candx c JOIN sx USING (x_id) JOIN sy USING (y_id)),
-       |my AS (SELECT c.x_id, c.y_id,
-       |    CASE WHEN CAST(sx_q AS DOUBLE) / (2.0 * nx)
-       |            + CAST(sy_q AS DOUBLE) / (2.0 * ny) > 0
-       |         THEN CAST(round(CAST(c.cos_q AS DOUBLE) /
-       |              (CAST(sx_q AS DOUBLE) / (2.0 * nx)
-       |               + CAST(sy_q AS DOUBLE) / (2.0 * ny)) * 1000000.0) AS BIGINT)
-       |    END AS margin_fp
-       |  FROM candy c JOIN sx USING (x_id) JOIN sy USING (y_id)),
-       |bx AS (SELECT x_id, y_id, cos_q, margin_fp FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY x_id
-       |    ORDER BY margin_fp DESC NULLS LAST, y_id) AS rm FROM mx) WHERE rm = 1),
-       |byy AS (SELECT y_id, x_id AS bx_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY y_id
-       |    ORDER BY margin_fp DESC NULLS LAST, x_id) AS rm FROM my) WHERE rm = 1)
-       |SELECT b.x_id, b.y_id, b.cos_q, b.margin_fp,
-       |  coalesce(byy.bx_id = b.x_id, FALSE) AS mutual
-       |FROM bx b LEFT JOIN byy ON byy.y_id = b.y_id""".stripMargin
-  }
-
-  /** CTE block shared by the SQ8 agreement readouts (q_rbo_sq8,
-    * q_rankeval_sq8): the SQ8-coded ranking `sq` and the exact-L2
-    * ranking `ex`, both top-10 per query over the vec_id < 10 query
-    * set. */
-  private val sq8VsExactCtes =
-    """v AS (SELECT vec_id,
-      |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-      |ps AS (SELECT unnest(range(0, 64)) AS pos),
-      |cen AS (SELECT pos, min(e[pos + 1]) AS lo, max(e[pos + 1]) AS hi
-      |        FROM v CROSS JOIN ps GROUP BY 1),
-      |r AS (SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-      |      FROM cen),
-      |codes AS (SELECT vec_id, list_transform(range(1, 65), i ->
-      |    CASE WHEN his[i] > los[i]
-      |      THEN CAST(floor((e[i] - los[i]) / (his[i] - los[i]) * 255.0 + 0.5) AS BIGINT)
-      |      ELSE 0 END) AS cds
-      |  FROM v, r),
-      |sq AS (SELECT q_id, n_id, rank FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sq_d2, n_id) AS rank
-      |  FROM (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-      |      list_sum(list_transform(range(1, 65), i ->
-      |        (q.e[i] - (los[i] + CAST(c.cds[i] AS DOUBLE) * (his[i] - los[i]) / 255.0)) *
-      |        (q.e[i] - (los[i] + CAST(c.cds[i] AS DOUBLE) * (his[i] - los[i]) / 255.0)))) AS sq_d2
-      |    FROM v q, codes c, r
-      |    WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)) WHERE rank <= 10),
-      |ex AS (SELECT q_id, n_id, rank FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY d2, n_id) AS rank
-      |  FROM (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-      |      list_sum(list_transform(list_zip(q.e, c.e),
-      |        z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-      |    FROM v q, v c
-      |    WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)) WHERE rank <= 10)""".stripMargin
-
-  /** The candidate condition shared by the PQ oracles: a pair survives
-    * to the exact cosine iff some seed's ADC cand-cut kept it. */
-  private val bitextPqCandCond =
-    """AND EXISTS (SELECT 1 FROM adctop a
-      |    WHERE a.x_id = x.vec_id AND a.y_id = y.vec_id)""".stripMargin
-
-  /** The q_bitext_pq / q_bitext_pq_seeds ADC-shortlist CTE block: shared
-    * cell-probe CTEs, then one codebook → codes → ADC → cand-cut chain
-    * per entry of `seeds` (None = the first-kCodes-by-id codebook;
-    * Some(s) = the md5(id || ':pqcb:' || s)-ordered sample — the engine's
-    * pqCodebook seedTag, md5-hex ordering being engine-portable), and
-    * `adctop` = the UNION of the per-seed cuts (SQL UNION distincts,
-    * matching the engine's `.distinct()`). */
-  private def bitextPqCtes(
-      m: Int, kCodes: Int, nprobe: Int, cand: Int,
-      seeds: Seq[Option[Long]]): String = {
-    val subDim = 64 / m
-    val caseSum = (0 until m)
-      .map(j => s"max(CASE WHEN q.j = $j THEN q.d2 END)")
-      .mkString("\n      + ")
-    val shared = s"""cents AS (
-      |  SELECT e AS ce, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell
-      |  FROM (SELECT * FROM v WHERE vec_id % 2 = 1 ORDER BY vec_id LIMIT 16)),
-      |cdst AS (SELECT v.vec_id, c.cell,
-      |         list_sum(list_transform(list_zip(v.e, c.ce),
-      |           z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d
-      |       FROM v, cents c),
-      |crnk AS (SELECT vec_id, cell,
-      |          row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |        FROM cdst),
-      |ycell AS (SELECT vec_id, cell FROM crnk WHERE rn = 1 AND vec_id % 2 = 1),
-      |xprob AS (SELECT vec_id, cell FROM crnk WHERE rn <= $nprobe AND vec_id % 2 = 0),
-      |js AS (SELECT unnest(range(0, $m)) AS j),
-      |ysub AS (SELECT v.vec_id, js.j, v.e[js.j*$subDim+1 : js.j*$subDim+$subDim] AS se
-      |         FROM v CROSS JOIN js WHERE v.vec_id % 2 = 1),
-      |xsub AS (SELECT v.vec_id, js.j, v.e[js.j*$subDim+1 : js.j*$subDim+$subDim] AS se
-      |         FROM v CROSS JOIN js WHERE v.vec_id % 2 = 0)""".stripMargin
-    val perSeed = seeds.zipWithIndex.map { case (sd, i) =>
-      val order = sd match {
-        case Some(s) => s"md5(CAST(vec_id AS VARCHAR) || ':pqcb:$s'), vec_id"
-        case None => "vec_id"
-      }
-      s"""cb$i AS (SELECT vec_id AS cid, e AS ce FROM v
-         |       WHERE vec_id % 2 = 1 ORDER BY $order LIMIT $kCodes),
-         |cs$i AS (SELECT cid, js.j, ce[js.j*$subDim+1 : js.j*$subDim+$subDim] AS ce
-         |       FROM cb$i CROSS JOIN js),
-         |yd$i AS (SELECT s.vec_id, s.j, c.cid,
-         |         list_sum(list_transform(list_zip(s.se, c.ce),
-         |           z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-         |       FROM ysub s JOIN cs$i c ON s.j = c.j),
-         |ycodes$i AS (SELECT vec_id, j, cid FROM (
-         |    SELECT vec_id, j, cid,
-         |      row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
-         |    FROM yd$i) WHERE rn = 1),
-         |xd$i AS (SELECT s.vec_id, s.j, c.cid,
-         |         list_sum(list_transform(list_zip(s.se, c.ce),
-         |           z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-         |       FROM xsub s JOIN cs$i c ON s.j = c.j),
-         |adc$i AS (
-         |  SELECT p.vec_id AS x_id, yc2.vec_id AS y_id,
-         |    $caseSum AS adc_d2
-         |  FROM xprob p JOIN ycell yc2 ON p.cell = yc2.cell
-         |  JOIN ycodes$i c ON c.vec_id = yc2.vec_id
-         |  JOIN xd$i q ON q.vec_id = p.vec_id AND q.j = c.j AND q.cid = c.cid
-         |  GROUP BY 1, 2),
-         |adctop$i AS (SELECT x_id, y_id FROM (
-         |  SELECT x_id, y_id,
-         |    row_number() OVER (PARTITION BY x_id ORDER BY adc_d2, y_id) AS rn
-         |  FROM adc$i) WHERE rn <= $cand)""".stripMargin
-    }
-    val union = seeds.indices
-      .map(i => s"SELECT x_id, y_id FROM adctop$i")
-      .mkString("\n  UNION\n  ")
-    shared + ",\n" + perSeed.mkString(",\n") +
-      s",\nadctop AS (\n  $union)"
-  }
-
-  /** q_perplexity3: the trigram interpolated-KN cascade replayed — one
-    * trigram census from the doc_id%3 reference slice, every model table
-    * derived from it, and the score-time CASE backoff in the engine's
-    * exact double op order (p1/p2 spliced as shared snippets so every
-    * branch states identical arithmetic). */
-  private val perplexity3Sql = {
-    val p1 = "CAST(coalesce(u3, 1) AS DOUBLE) / CAST(uu AS DOUBLE)"
-    val lam2 = "((0.75e0 * CAST(m2 AS DOUBLE)) / CAST(b2 AS DOUBLE))"
-    val p2 = s"CASE WHEN b23 IS NOT NULL THEN " +
-      s"greatest(CAST(b23 AS DOUBLE) - 0.75e0, 0.0e0) / CAST(b2 AS DOUBLE) " +
-      s"+ $lam2 * $p1 ELSE $lam2 * $p1 END"
-    val lam3 = "((0.75e0 * CAST(n12 AS DOUBLE)) / CAST(c12 AS DOUBLE))"
-    s"""WITH ref AS (
-       |  SELECT regexp_split_to_array(trim(text), '\\s+') AS a
-       |  FROM documents WHERE doc_id % 3 = 0),
-       |rt AS (SELECT a[i] AS w1, a[i+1] AS w2, a[i+2] AS w3
-       |       FROM ref, UNNEST(range(1, greatest(len(a) - 2, 0) + 1)) r(i)),
-       |cen AS (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS t3
-       |        FROM rt GROUP BY 1, 2, 3),
-       |cc12 AS (SELECT w1, w2, CAST(sum(t3) AS BIGINT) AS c12,
-       |           CAST(count(*) AS BIGINT) AS n12 FROM cen GROUP BY 1, 2),
-       |tt2 AS (SELECT w2, w3, CAST(count(*) AS BIGINT) AS b23
-       |        FROM cen GROUP BY 1, 2),
-       |cc2 AS (SELECT w2, CAST(sum(b23) AS BIGINT) AS b2,
-       |          CAST(count(*) AS BIGINT) AS m2 FROM tt2 GROUP BY 1),
-       |uu1 AS (SELECT w3, CAST(count(*) AS BIGINT) AS u3 FROM tt2 GROUP BY 1),
-       |ut AS (SELECT CAST(count(*) AS BIGINT) AS uu FROM tt2),
-       |occ AS (SELECT doc_id, w1, w2, w3, CAST(count(*) AS BIGINT) AS cnt
-       |        FROM (SELECT doc_id, a[i] AS w1, a[i+1] AS w2, a[i+2] AS w3
-       |              FROM (SELECT doc_id,
-       |                      regexp_split_to_array(trim(text), '\\s+') AS a
-       |                    FROM documents),
-       |                   UNNEST(range(1, greatest(len(a) - 2, 0) + 1)) r(i))
-       |        GROUP BY 1, 2, 3, 4),
-       |j AS (SELECT occ.doc_id, occ.cnt, cen.t3, cc12.c12, cc12.n12,
-       |        tt2.b23, cc2.b2, cc2.m2, uu1.u3, ut.uu
-       |      FROM occ LEFT JOIN cen USING (w1, w2, w3)
-       |      LEFT JOIN cc12 USING (w1, w2) LEFT JOIN tt2 USING (w2, w3)
-       |      LEFT JOIN cc2 USING (w2) LEFT JOIN uu1 USING (w3) CROSS JOIN ut),
-       |lp AS (SELECT doc_id, cnt, CAST(round(ln(
-       |    CASE WHEN t3 IS NOT NULL THEN
-       |           greatest(CAST(t3 AS DOUBLE) - 0.75e0, 0.0e0)
-       |             / CAST(c12 AS DOUBLE) + $lam3 * ($p2)
-       |         WHEN c12 IS NOT NULL THEN $lam3 * ($p2)
-       |         WHEN b2 IS NOT NULL THEN $p2
-       |         ELSE $p1 END) * 1000000.0e0) AS BIGINT) AS lp_q
-       |  FROM j),
-       |sc AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_trigrams,
-       |         CAST(sum(cnt * lp_q) AS BIGINT) AS sum_lp_q
-       |       FROM lp GROUP BY 1)
-       |SELECT d.doc_id, coalesce(sc.n_trigrams, 0) AS n_trigrams,
-       |  coalesce(sc.sum_lp_q, 0) AS sum_lp_q
-       |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin
-  }
-
-  /** q_dsir_* references: the hashed-bigram importance-weight replay —
-    * the engine's exact feature derivation (bigrams to 256 md5 buckets),
-    * Laplace-smoothed per-bucket log-ratio at 1e-6 fixed point, integer
-    * per-doc rollup; `thrMicros` adds the mean-log-ratio keep compare. */
-  private def dsirOracleSql(thrMicros: Option[Long]): String = {
-    val keepCol = thrMicros.map(t =>
-      s""",
-         |  coalesce(sc.score_q, 0) >= $t * coalesce(sc.n_feats, 0) AS keep"""
-        .stripMargin).getOrElse("")
-    s"""WITH arr AS (
-       |  SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS a
-       |  FROM documents),
-       |bgd AS (SELECT doc_id, lang, unnest(list_transform(range(1, len(a)),
-       |          i -> a[i] || ' ' || a[i+1])) AS bg FROM arr),
-       |f AS (SELECT doc_id, lang,
-       |        CAST(('0x' || substr(md5(bg), 1, 15))::UBIGINT % 256 AS BIGINT) AS b
-       |      FROM bgd),
-       |pd AS (SELECT doc_id, lang, b, CAST(count(*) AS BIGINT) AS cnt
-       |       FROM f GROUP BY 1, 2, 3),
-       |cen AS (SELECT b,
-       |          CAST(sum(CASE WHEN lang = 'en' THEN cnt ELSE 0 END) AS BIGINT) AS ct,
-       |          CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE cnt END) AS BIGINT) AS cs
-       |        FROM pd GROUP BY 1),
-       |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-       |          CAST(sum(cs) AS BIGINT) AS ns FROM cen),
-       |lr AS (SELECT b, CAST(round((
-       |          ln(CAST(ct + 1 AS DOUBLE) / (CAST(nt AS DOUBLE) + 256.0))
-       |          - ln(CAST(cs + 1 AS DOUBLE) / (CAST(ns AS DOUBLE) + 256.0)))
-       |          * 1000000.0) AS BIGINT) AS lr_q
-       |       FROM cen CROSS JOIN tot),
-       |sc AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_feats,
-       |         CAST(sum(cnt * lr_q) AS BIGINT) AS score_q
-       |       FROM pd JOIN lr USING (b) GROUP BY 1)
-       |SELECT d.doc_id, coalesce(sc.n_feats, 0) AS n_feats,
-       |  coalesce(sc.score_q, 0) AS score_q$keepCol
-       |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin
-  }
-
-  private def lpaOracleSql(rounds: Int): String = {
-    // MATERIALIZED for the same reason as the k-core oracle: protects the
-    // chained-CTE unroll from per-reference inlining blowup
-    val rs = (1 to rounds).map { i =>
-      s"""v$i AS MATERIALIZED (SELECT e.node, l.label, count(*) AS c FROM ends e
-         |  JOIN l${i - 1} l ON e.o = l.node GROUP BY e.node, l.label),
-         |l$i AS MATERIALIZED (SELECT node, label FROM (
-         |  SELECT node, label,
-         |    row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-         |  FROM v$i) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pairs AS MATERIALIZED (
-       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |   AND a.l_quantity >= 45 AND b.l_quantity >= 45),
-       |ends AS MATERIALIZED (SELECT u AS node, v AS o FROM pairs
-       |         UNION ALL SELECT v, u FROM pairs),
-       |l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label FROM ends),
-       |$rs
-       |SELECT node, label FROM l$rounds""".stripMargin
-  }
-
-  /** q_unigram_* references: the unigram-LM EM replayed in SQL. Each
-    * round is one integer-score CTE + a RECURSIVE Viterbi CTE carrying
-    * per-word (best, back) arrays one position per iteration (candidates
-    * = 4 piece-length LEFT JOINs; ties pick the largest length = the
-    * engine's smallest-start rule) + a back-pointer walk + the M-step
-    * count/prune. `mode` selects the readout: the final piece inventory
-    * (train), the seed table, or one extra segmentation pass joined back
-    * onto documents (encode). */
-  private def unigramOracleSql(
-      rounds: Int, maxLen: Int, minSeed: Long, mode: String): String = {
-    val NEG = "-4611686018427387904"
-    def scoreBlock(r: Int): String =
-      s"""s$r AS (SELECT piece,
-         |  CAST(round(ln(CAST(cnt AS DOUBLE) / (SELECT sum(cnt) FROM p${r - 1})) * 1000000)
-         |    AS BIGINT) AS sc
-         |  FROM p${r - 1})""".stripMargin
-    def viterbiBlock(r: Int): String = {
-      val cands = (1 to maxLen).map(d =>
-        s"""CASE WHEN v.j + 1 - $d >= 0 AND sd$d.sc IS NOT NULL
-           |             THEN bl[v.j + 2 - $d] + sd$d.sc ELSE NULL END AS cand$d""".stripMargin)
-        .mkString(",\n        ")
-      val joins = (1 to maxLen).map(d =>
-        s"  LEFT JOIN s$r sd$d ON v.j + 1 - $d >= 0 AND sd$d.piece = substr(v.w, v.j + 2 - $d, $d)")
-        .mkString("\n")
-      val greatest = (1 to maxLen).map(d => s"coalesce(cand$d, $NEG)").mkString(", ")
-      val backcase = (maxLen to 2 by -1).map(d =>
-        s"      WHEN cand$d IS NOT NULL AND cand$d = best THEN j + 1 - $d")
-        .mkString("\n")
-      val candList = (1 to maxLen).map(d => s"cand$d").mkString(", ")
-      s"""vit$r AS (
-         |  SELECT w, wf, 0 AS j, [CAST(0 AS BIGINT)] AS bl, CAST([] AS INT[]) AS kl
-         |  FROM wf
-         |  UNION ALL
-         |  SELECT w, wf, j + 1, list_append(bl, best),
-         |    list_append(kl, CAST(
-         |      CASE
-         |$backcase
-         |      ELSE j END AS INT))
-         |  FROM (
-         |    SELECT w, wf, j, bl, kl, greatest($greatest) AS best,
-         |      $candList
-         |    FROM (
-         |      SELECT v.w, v.wf, v.j, v.bl, v.kl,
-         |        $cands
-         |      FROM vit$r v
-         |$joins
-         |      WHERE v.j < length(v.w)) c) g),
-         |vfin$r AS (SELECT w, wf, kl FROM vit$r WHERE j = length(w)),
-         |walk$r AS (
-         |  SELECT w, wf, length(w) AS pos, kl FROM vfin$r
-         |  UNION ALL
-         |  SELECT w, wf, kl[pos] AS pos, kl FROM walk$r WHERE pos > 0)""".stripMargin
-    }
-    def mStep(r: Int): String =
-      s"""used$r AS (
-         |  SELECT substr(w, kl[pos] + 1, pos - kl[pos]) AS piece,
-         |    CAST(sum(wf) AS BIGINT) AS cnt
-         |  FROM walk$r WHERE pos > 0 GROUP BY 1),
-         |p$r AS (
-         |  SELECT pr.piece,
-         |    CAST(CASE WHEN length(pr.piece) = 1 THEN greatest(coalesce(u.cnt, 0), 1)
-         |         ELSE u.cnt END AS BIGINT) AS cnt
-         |  FROM p${r - 1} pr LEFT JOIN used$r u USING (piece)
-         |  WHERE length(pr.piece) = 1 OR coalesce(u.cnt, 0) > 0)""".stripMargin
-    val base =
-      s"""WITH RECURSIVE wf AS (
-         |  SELECT w, CAST(count(*) AS BIGINT) AS wf FROM (
-         |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w FROM documents)
-         |  WHERE length(w) >= 1 GROUP BY w),
-         |p0 AS (
-         |  SELECT piece, CAST(sum(wf) AS BIGINT) AS cnt FROM (
-         |    SELECT substr(w, CAST(i AS INT), CAST(l AS INT)) AS piece, wf
-         |    FROM wf,
-         |         UNNEST(range(1, length(w) + 1)) r(i),
-         |         UNNEST(range(1, least($maxLen, length(w) - i + 1) + 1)) r2(l))
-         |  GROUP BY piece
-         |  HAVING length(piece) = 1 OR sum(wf) >= $minSeed)""".stripMargin
-    if (mode == "seed") return base + "\nSELECT piece, cnt FROM p0"
-    val roundBlocks = (1 to rounds)
-      .map(r => scoreBlock(r) + ",\n" + viterbiBlock(r) + ",\n" + mStep(r))
-      .mkString(",\n")
-    if (mode == "train")
-      base + ",\n" + roundBlocks + s"\nSELECT piece, cnt FROM p$rounds"
-    else { // encode: one more segmentation pass under the final scores
-      val r = rounds + 1
-      base + ",\n" + roundBlocks + ",\n" +
-        scoreBlock(r) + ",\n" + viterbiBlock(r) + ",\n" +
-        s"""nsub AS (SELECT w, CAST(count(*) AS BIGINT) AS n_sub
-           |         FROM walk$r WHERE pos > 0 GROUP BY w),
-           |docw AS (SELECT doc_id, w FROM (
-           |    SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-           |    FROM documents) WHERE length(w) >= 1)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           |  CAST(sum(n_sub) AS BIGINT) AS n_subtokens
-           |FROM docw JOIN nsub USING (w) GROUP BY doc_id""".stripMargin
-    }
-  }
-
-  /** q_wordpiece_* reference: the same role-split census, then the greedy
-    * longest-match walk replayed from a STATIC per-(word, offset)
-    * longest-match table — greedy is memoryless, so no path search; the
-    * recursion only advances the cursor. */
-  private def wordpieceOracleSql(maxLen: Int, minCount: Long, mode: String): String = {
-    val base =
-      s"""WITH RECURSIVE wf AS (
-         |  SELECT w, CAST(count(*) AS BIGINT) AS wf FROM (
-         |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w FROM documents)
-         |  WHERE length(w) >= 1 GROUP BY w),
-         |voc AS (
-         |  SELECT piece, is_cont, CAST(sum(wf) AS BIGINT) AS cnt FROM (
-         |    SELECT substr(w, CAST(i AS INT), CAST(l AS INT)) AS piece,
-         |           i > 1 AS is_cont, wf
-         |    FROM wf,
-         |         UNNEST(range(1, length(w) + 1)) r(i),
-         |         UNNEST(range(1, least($maxLen, length(w) - i + 1) + 1)) r2(l))
-         |  GROUP BY piece, is_cont
-         |  HAVING length(piece) = 1 OR sum(wf) >= $minCount)""".stripMargin
-    if (mode == "vocab") base + "\nSELECT piece, is_cont, cnt FROM voc"
-    else base + s""",
-       |best AS (
-       |  SELECT w, pos, max(len) AS len FROM (
-       |    SELECT c.w, c.pos, length(v.piece) AS len
-       |    FROM (SELECT wf.w, CAST(p.pos AS INT) AS pos
-       |          FROM wf, UNNEST(range(0, length(wf.w))) p(pos)) c
-       |    JOIN voc v ON v.is_cont = (c.pos > 0)
-       |      AND substr(c.w, c.pos + 1, length(v.piece)) = v.piece)
-       |  GROUP BY w, pos),
-       |walk AS (
-       |  SELECT w, 0 AS pos, CAST(0 AS BIGINT) AS n_sub FROM wf
-       |  UNION ALL
-       |  SELECT s.w, s.pos + CAST(b.len AS INT), s.n_sub + 1
-       |  FROM walk s JOIN best b ON b.w = s.w AND b.pos = s.pos
-       |  WHERE s.pos < length(s.w)),
-       |nsub AS (SELECT w, n_sub FROM walk WHERE pos = length(w)),
-       |docw AS (SELECT doc_id, w FROM (
-       |    SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-       |    FROM documents) WHERE length(w) >= 1)
-       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |  CAST(sum(n_sub) AS BIGINT) AS n_subtokens
-       |FROM docw JOIN nsub USING (w) GROUP BY doc_id""".stripMargin
-  }
-
-  /** q_train_perceptron / q_train_margins reference: the full-batch
-    * perceptron UNROLLED epoch for epoch — postings (+ bias bucket −1),
-    * ±1 labels, then per epoch the integer margin pass, the
-    * misclassified-docs (y·m ≤ 0) subgradient, and the weight update.
-    * Pure integer arithmetic: no tolerance anywhere. */
-  private def perceptronOracleSql(
-      buckets: Int, epochs: Int, mode: String): String = {
-    val base =
-      s"""WITH tk AS (
-         |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id,
-         |    CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT % $buckets AS BIGINT) AS b,
-         |    CAST(count(*) AS BIGINT) AS x
-         |  FROM tk WHERE length(t) >= 1 GROUP BY 1, 2
-         |  UNION ALL
-         |  SELECT doc_id, CAST(-1 AS BIGINT), CAST(1 AS BIGINT) FROM documents),
-         |y AS (SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y
-         |      FROM documents),
-         |w0 AS (SELECT DISTINCT b, CAST(0 AS BIGINT) AS w FROM p)""".stripMargin
-    val rounds = (1 to epochs).map { r =>
-      s"""m$r AS (SELECT p.doc_id, CAST(sum(p.x * w${r - 1}.w) AS BIGINT) AS m
-         |        FROM p JOIN w${r - 1} USING (b) GROUP BY 1),
-         |g$r AS (SELECT p.b, CAST(sum(y.y * p.x) AS BIGINT) AS g
-         |        FROM p JOIN m$r USING (doc_id) JOIN y USING (doc_id)
-         |        WHERE y.y * m$r.m <= 0 GROUP BY 1),
-         |w$r AS (SELECT w${r - 1}.b, w${r - 1}.w + coalesce(g$r.g, 0) AS w
-         |        FROM w${r - 1} LEFT JOIN g$r USING (b))""".stripMargin
-    }.mkString(",\n")
-    if (mode == "weights")
-      base + ",\n" + rounds + s"\nSELECT b, CAST(w AS BIGINT) AS w FROM w$epochs"
-    else
-      base + ",\n" + rounds + s""",
-         |mf AS (SELECT p.doc_id, CAST(sum(p.x * w$epochs.w) AS BIGINT) AS margin
-         |       FROM p JOIN w$epochs USING (b) GROUP BY 1)
-         |SELECT mf.doc_id, mf.margin, CAST(y.y AS BIGINT) AS y,
-         |  y.y * mf.margin > 0 AS correct
-         |FROM mf JOIN y USING (doc_id)""".stripMargin
-  }
-
-  /** The deterministic doc_id-scheduled markup decoration shared by
-    * q_strip_markup and the q_pipeline_web capstone (the q_redact
-    * injection pattern): script body, comment, tags, entity cluster,
-    * style body — each planted on its own modulus. */
-  private def webMarkupDecoration: org.apache.spark.sql.Column = concat(
-    lit("<html><body>"),
-    when(col("doc_id") % 7 === 0,
-      lit("<script type=\"text/js\">var x = 1 < 2;</script>"))
-      .otherwise(lit("")),
-    when(col("doc_id") % 11 === 0,
-      concat(lit("<!-- tracking "), col("doc_id"), lit(" -->")))
-      .otherwise(lit("")),
-    lit("<p class=\"main\">"), col("text"), lit("</p>"),
-    when(col("doc_id") % 5 === 0,
-      lit("<p>5 &lt; 6 &amp;&amp; &quot;q&#39;s&quot;&nbsp;ok</p>"))
-      .otherwise(lit("")),
-    when(col("doc_id") % 3 === 0, lit("<style>p { color: red; }</style>"))
-      .otherwise(lit("")),
-    lit("</body></html>"))
-
-  /** SQL spelling of [[webMarkupDecoration]] followed by the strip chain
-    * GENERATED from the engine's own
-    * [[graft.functions.TextFunctions.markupSteps]] — patterns shared
-    * verbatim (the redactPii discipline), so the two engines can only
-    * agree by running the same rules in the same order. */
-  private def strippedCleanSql: String = {
-    val deco =
-      """('<html><body>'
-        |  || CASE WHEN doc_id % 7 = 0 THEN '<script type="text/js">var x = 1 < 2;</script>' ELSE '' END
-        |  || CASE WHEN doc_id % 11 = 0 THEN '<!-- tracking ' || doc_id || ' -->' ELSE '' END
-        |  || '<p class="main">' || text || '</p>'
-        |  || CASE WHEN doc_id % 5 = 0 THEN '<p>5 &lt; 6 &amp;&amp; &quot;q&#39;s&quot;&nbsp;ok</p>' ELSE '' END
-        |  || CASE WHEN doc_id % 3 = 0 THEN '<style>p { color: red; }</style>' ELSE '' END
-        |  || '</body></html>')""".stripMargin
-    def q(s: String) = s.replace("'", "''")
-    val chain = graft.functions.TextFunctions.markupSteps.foldLeft(deco) {
-      case (acc, (true, re, rep)) =>
-        s"regexp_replace($acc, '${q(re)}', '${q(rep)}', 'g')"
-      case (acc, (false, l, rep)) =>
-        s"replace($acc, '${q(l)}', '${q(rep)}')"
-    }
-    s"trim($chain)"
-  }
-
-  private def stripMarkupOracleSql: String =
-    s"SELECT doc_id, $strippedCleanSql AS clean FROM documents"
-
-  /** q_wordpiece_train reference: every round DERIVES the argmax-score
-    * pair from the current symbol state (pair + symbol counts → quantized
-    * ln-score), then applies it by repeat-replace on the space-delimited
-    * form (the q_bpe_merge replay, with the merge as a VALUE from the
-    * 1-row winner CTE instead of a hardcoded literal). */
-  private def wordpieceTrainOracleSql(rounds: Int): String = {
-    val roundBlocks = (1 to rounds).map { r =>
-      s"""cs$r AS (SELECT sym, CAST(sum(wf) AS BIGINT) AS c1 FROM (
-         |    SELECT unnest(string_split(trim(s), ' ')) AS sym, wf FROM f${r - 1})
-         |  GROUP BY 1),
-         |pc$r AS (SELECT a, b, CAST(sum(wf) AS BIGINT) AS n FROM (
-         |    SELECT l[CAST(i AS INT)] AS a, l[CAST(i AS INT) + 1] AS b, wf
-         |    FROM (SELECT string_split(trim(s), ' ') AS l, wf FROM f${r - 1}) t,
-         |         UNNEST(range(1, len(l))) r(i))
-         |  GROUP BY 1, 2),
-         |m$r AS MATERIALIZED (SELECT a, b, n,
-         |    CAST(round((ln(CAST(n AS DOUBLE)) - ln(CAST(na AS DOUBLE))
-         |      - ln(CAST(nb AS DOUBLE))) * 1000000) AS BIGINT) AS score_q
-         |  FROM (SELECT pc.a, pc.b, pc.n, ca.c1 AS na, cb.c1 AS nb
-         |        FROM pc$r pc JOIN cs$r ca ON ca.sym = pc.a
-         |        JOIN cs$r cb ON cb.sym = pc.b)
-         |  ORDER BY score_q DESC, a, b LIMIT 1),
-         |rr$r AS (
-         |  SELECT w, wf, s FROM f${r - 1}
-         |  UNION ALL
-         |  SELECT rr.w, rr.wf,
-         |    replace(rr.s, ' ' || m.a || ' ' || m.b || ' ', ' ' || m.a || m.b || ' ')
-         |  FROM rr$r rr, m$r m
-         |  WHERE strpos(rr.s, ' ' || m.a || ' ' || m.b || ' ') > 0),
-         |f$r AS MATERIALIZED (SELECT rr.w, rr.wf, rr.s FROM rr$r rr, m$r m
-         |        WHERE strpos(rr.s, ' ' || m.a || ' ' || m.b || ' ') = 0)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to rounds)
-      .map(r => s"SELECT $r AS rank, a, b, n, score_q FROM m$r")
-      .mkString("\nUNION ALL\n")
-    s"""WITH RECURSIVE w AS MATERIALIZED (
-       |  SELECT tok AS w, CAST(count(*) AS BIGINT) AS wf FROM (
-       |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-       |    FROM documents)
-       |  WHERE len(tok) >= 1 GROUP BY tok),
-       |f0 AS MATERIALIZED (SELECT w, wf,
-       |    ' ' || array_to_string(regexp_extract_all(w, '.'), ' ') || ' ' AS s
-       |  FROM w),
-       |$roundBlocks
-       |SELECT CAST(rank AS INT) AS rank, a, b, n, score_q FROM (
-       |$out)""".stripMargin
-  }
-
-  /** q_lang_mix reference: the q_lang_id_ngram scoring (profile constants
-    * shared with the engine) applied twice — to the decorated doc and to
-    * each 32-token chunk (the q_chunk slicing at overlap 0) — then the
-    * disagreement rollup with the integer 20% cross-product. */
-  private def langMixOracleSql: String = {
-    def sqlList(xs: Seq[String]) =
-      xs.map(x => "'" + x.replace("'", "''") + "'").mkString("[", ", ", "]")
-    val profiles = TextFunctions.trigramProfiles
-    val scoreCols = profiles.map { case (lang, ps) =>
-      s"len(list_filter(tris, x -> list_contains(${sqlList(ps)}, x))) AS s_$lang"
-    }.mkString(",\n    ")
-    val gAll = profiles.map(p => s"s_${p._1}").mkString("greatest(", ", ", ")")
-    val cases = profiles.map { case (lang, _) =>
-      s"WHEN s_$lang = $gAll THEN '$lang'"
-    }.mkString("\n  ")
-    def langOf(src: String, textCol: String, out: String): String =
-      s"""(SELECT doc_id, CASE
-         |  WHEN $gAll = 0 THEN 'und'
-         |  $cases
-         |  END AS $out FROM (
-         |  SELECT doc_id,
-         |    $scoreCols
-         |  FROM (SELECT doc_id, list_transform(range(1, greatest(length(t) - 1, 1)),
-         |          i -> substr(t, CAST(i AS INTEGER), 3)) AS tris
-         |        FROM (SELECT doc_id, lower(trim($textCol)) AS t FROM $src))))""".stripMargin
-    s"""WITH d AS (SELECT doc_id,
-       |    text || CASE WHEN doc_id % 4 = 0
-       |      THEN ' der die und das ein ist nicht zu der die und das ein ist'
-       |      ELSE '' END AS text
-       |  FROM documents),
-       |ck AS (SELECT doc_id, array_to_string(toks[s:s+31], ' ') AS chunk
-       |       FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-       |             FROM d),
-       |            UNNEST(range(1, greatest(len(toks), 1) + 1, 32)) AS u(s)),
-       |ld AS ${langOf("d", "text", "doc_lang")},
-       |lc AS ${langOf("ck", "chunk", "c_lang")}
-       |SELECT doc_id, doc_lang, n_chunks, n_foreign,
-       |  n_foreign * 5 >= n_chunks AS mixed
-       |FROM (
-       |  SELECT ld.doc_id, ld.doc_lang,
-       |    CAST(count(*) AS BIGINT) AS n_chunks,
-       |    CAST(sum(CASE WHEN lc.c_lang <> ld.doc_lang THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS n_foreign
-       |  FROM lc JOIN ld USING (doc_id)
-       |  GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** q_urls reference: the URL pattern taken verbatim from the engine's
-    * [[graft.functions.TextFunctions.urlPattern]]; canonicalization as
-    * the same lower/CASE/anchored-regexp steps (group substitutions are
-    * avoided in both engines — Spark spells them $1, RE2 \1). */
-  private def urlsOracleSql: String = {
-    val re = graft.functions.TextFunctions.urlPattern.replace("'", "''")
-    s"""WITH t AS (SELECT doc_id,
-       |    text || ' see HTTP://Example.COM:80/Path/index.html?q=1#frag'
-       |    || CASE WHEN doc_id % 3 = 0 THEN ' https://Secure.NET:443/' ELSE '' END
-       |    || CASE WHEN doc_id % 4 = 0 THEN ' http://plain.org/a/b/ and http://h'
-       |            || (doc_id % 7) || '.example.org/x#y' ELSE '' END AS tx
-       |  FROM documents),
-       |u AS (SELECT doc_id, unnest(regexp_extract_all(tx, '$re', 0)) AS url FROM t),
-       |c AS (SELECT doc_id, url,
-       |    lower(regexp_extract(url, '^([A-Za-z]+://[^/#?]*)', 1)) AS pre0
-       |  FROM u)
-       |SELECT doc_id, url,
-       |  (CASE WHEN pre0 LIKE 'http://%' AND pre0 LIKE '%:80'
-       |        THEN left(pre0, length(pre0) - 3)
-       |        WHEN pre0 LIKE 'https://%' AND pre0 LIKE '%:443'
-       |        THEN left(pre0, length(pre0) - 4)
-       |        ELSE pre0 END)
-       |  || regexp_replace(regexp_replace(substr(url, length(pre0) + 1),
-       |       '#.*$$', ''), '/$$', '') AS canon,
-       |  regexp_extract(lower(url), '^[a-z]+://([^/:#?]*)', 1) AS domain
-       |FROM c""".stripMargin
-  }
-
-  /** q_kcenter reference: Gonzalez farthest-first UNROLLED to k rounds
-    * over the full pairwise distance table (the mmr oracle's discipline) —
-    * round r takes the (min-dist-to-selected DESC, id) winner among the
-    * unselected; distances are the same left-fold Σ(v−c)² the IVF gates
-    * already pin bit-identical across engines. */
-  private def kcenterOracleSql(k: Int): String = {
-    val rounds = (2 to k).map { r =>
-      s"""sel$r AS (SELECT i AS vec_id, $r AS rank, md AS d2 FROM (
-         |  SELECT c.i, c.md, row_number() OVER (ORDER BY c.md DESC, c.i) AS rn FROM (
-         |    SELECT d.i, min(d.d2) AS md
-         |    FROM d JOIN selu${r - 1} s ON d.j = s.vec_id
-         |    WHERE NOT EXISTS (SELECT 1 FROM selu${r - 1} x WHERE x.vec_id = d.i)
-         |    GROUP BY d.i) c) WHERE rn = 1),
-         |selu$r AS (SELECT * FROM selu${r - 1} UNION ALL SELECT * FROM sel$r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-       |d AS (SELECT a.vec_id AS i, b.vec_id AS j,
-       |        list_sum(list_transform(list_zip(a.e, b.e), z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
-       |      FROM v a JOIN v b ON a.vec_id <> b.vec_id),
-       |sel1 AS (SELECT CAST(min(vec_id) AS BIGINT) AS vec_id, 1 AS rank,
-       |           CAST(NULL AS DOUBLE) AS d2 FROM v),
-       |selu1 AS (SELECT * FROM sel1),
-       |$rounds
-       |SELECT vec_id, CAST(rank AS INT) AS rank, d2 FROM selu$k""".stripMargin
-  }
-
-  /** q_rand_project reference: the engine's seeded ±1 sign matrix embedded
-    * as VALUES literals (the makePlanes constants-in-both-engines
-    * discipline); the projection itself is exact integer arithmetic on the
-    * shared round(x·1000) quantization, so no rounding band is needed. */
-  private def randProjectOracleSql(outDims: Int, dim: Int, seed: Long): String = {
-    val signs = graft.functions.VectorFunctions.makeSigns(outDims, dim, seed)
-    val values = signs.zipWithIndex
-      .map { case (row, j) => s"($j, [${row.mkString(",")}])" }
-      .mkString(",\n       ")
-    s"""WITH s(dim, sg) AS (VALUES $values),
-       |q AS (SELECT vec_id, list_transform(embedding,
-       |        x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qe
-       |      FROM embeddings)
-       |SELECT q.vec_id, CAST(s.dim AS INT) AS dim,
-       |  CAST(list_sum(list_transform(list_zip(q.qe, s.sg), z -> z[1] * z[2])) AS BIGINT) AS y
-       |FROM q, s""".stripMargin
-  }
-
-  /** q_corr_stats reference: one UNION ALL block per column pair, exact
-    * integer sums stringified through HUGEINT (matching the engine's
-    * DECIMAL(38,0) → string digits at any magnitude). */
-  private def corrOracleSql(cols: Seq[String]): String = {
-    val pairs = for { (a, i) <- cols.zipWithIndex; b <- cols.drop(i) } yield (a, b)
-    pairs.map { case (a, b) =>
-      s"""SELECT '$a' AS col_a, '$b' AS col_b,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(CAST(sum(av) AS HUGEINT) AS VARCHAR) AS sum_a,
-         |  CAST(CAST(sum(bv) AS HUGEINT) AS VARCHAR) AS sum_b,
-         |  CAST(CAST(sum(av * bv) AS HUGEINT) AS VARCHAR) AS sum_ab,
-         |  CAST(CAST(sum(av * av) AS HUGEINT) AS VARCHAR) AS sum_a2,
-         |  CAST(CAST(sum(bv * bv) AS HUGEINT) AS VARCHAR) AS sum_b2
-         |FROM (SELECT CAST(round(CAST($a AS DOUBLE) * 100) AS BIGINT) AS av,
-         |             CAST(round(CAST($b AS DOUBLE) * 100) AS BIGINT) AS bv
-         |      FROM lineitem
-         |      WHERE $a IS NOT NULL AND $b IS NOT NULL)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-  }
-
-  /** q_mmr_rerank reference: the greedy selection UNROLLED to k rounds.
-    * Round 1 is pure λ·relevance; round r scores every unselected
-    * candidate as λ·cos − (1−λ)·max(sim to the r−1 already selected) and
-    * takes the (score DESC, n_id) winner — exactly the engine's min_by
-    * over (−score, id). λ and its IEEE complement are embedded as forced-
-    * DOUBLE literals so both engines subtract identical constants. */
-  private def mmrOracleSql(k: Int, lambda: Double, nCand: Int, nQ: Int): String = {
-    def d(x: Double): String = {
-      val s = x.toString
-      if (s.contains('E') || s.contains('e')) s else s + "e0"
-    }
-    val L = d(lambda)
-    val MU = d(1.0 - lambda)
-    val rounds = (2 to k).map { r =>
-      val prev = s"selu${r - 1}"
-      s"""sel$r AS (SELECT q_id, n_id, $r AS rank, mmr FROM (
-         |  SELECT c.q_id, c.n_id,
-         |    $L * c.cos - $MU * coalesce(pen.m, 0.0e0) AS mmr,
-         |    row_number() OVER (PARTITION BY c.q_id
-         |      ORDER BY ($L * c.cos - $MU * coalesce(pen.m, 0.0e0)) DESC, c.n_id) AS rn
-         |  FROM cand c
-         |  LEFT JOIN (SELECT p.q_id, p.a_id, max(p.s) AS m
-         |             FROM p JOIN $prev s ON s.q_id = p.q_id AND s.n_id = p.b_id
-         |             GROUP BY 1, 2) pen
-         |    ON pen.q_id = c.q_id AND pen.a_id = c.n_id
-         |  WHERE NOT EXISTS (SELECT 1 FROM $prev s2
-         |                    WHERE s2.q_id = c.q_id AND s2.n_id = c.n_id))
-         |  WHERE rn = 1),
-         |selu$r AS (SELECT * FROM selu${r - 1} UNION ALL SELECT * FROM sel$r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-       |cand AS (SELECT q_id, n_id, cos FROM (
-       |    SELECT q.vec_id AS q_id, c.vec_id AS n_id, ${sqlCos("q", "c")} AS cos,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${sqlCos("q", "c")} DESC, c.vec_id) AS rank
-       |    FROM v q JOIN v c ON q.vec_id != c.vec_id
-       |    WHERE q.vec_id < $nQ) WHERE rank <= $nCand),
-       |p AS (SELECT a.q_id, a.n_id AS a_id, b.n_id AS b_id,
-       |        ${sqlCos("va", "vb")} AS s
-       |      FROM cand a JOIN cand b ON a.q_id = b.q_id AND a.n_id <> b.n_id
-       |      JOIN v va ON va.vec_id = a.n_id
-       |      JOIN v vb ON vb.vec_id = b.n_id),
-       |sel1 AS (SELECT q_id, n_id, 1 AS rank, $L * cos AS mmr FROM (
-       |    SELECT q_id, n_id, cos,
-       |      row_number() OVER (PARTITION BY q_id
-       |        ORDER BY ($L * cos) DESC, n_id) AS rn
-       |    FROM cand) WHERE rn = 1),
-       |selu1 AS (SELECT * FROM sel1),
-       |$rounds
-       |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, mmr FROM selu$k""".stripMargin
-  }
-
-  /** The q_quality_model demo weight vector: 64 fixed-point (k/10⁶)
-    * bucket weights from a deterministic formula — a stand-in for a
-    * trained fastText-style artifact, stated as identical decimal
-    * literals in the engine plan and the oracle SQL. */
-  private[graft] def bowWeights: Seq[Double] =
-    (0 until 64).map(b => ((b * 2654435761L) % 2001 - 1000) / 1e6)
-
-  /** Refined centroids captured by q_ann_recall_refined (k rows of
-    * metadata) — the oracle embeds them verbatim, like [[ivfOracleEntry]]. */
-  @volatile private var refinedCents: Option[Array[(Long, Array[Double])]] = None
-
-  /** q_ann_recall_refined's oracle: the q_sim_pq ADC recipe twice — once
-    * against the first-k-by-id seeded codebook, once against the captured
-    * kmeans-refined codebook (a VALUES literal) — each recalled against
-    * the brute-force exact top-5, joined per query. Absent a run, omitted
-    * (driver falls back to rows-only). */
-  private def refinedRecallOracleEntry: Map[String, String] = {
-    if (refinedCents.isEmpty && !warnedRefinedOmitted) {
-      warnedRefinedOmitted = true
-      System.err.println(
-        "WARN oracleSql: q_ann_recall_refined oracle OMITTED — refinedCents " +
-          "unset (run the q_ann_recall_refined query in this JVM before " +
-          "reading oracleSql); the gate degrades to rows-only")
-    }
-    refinedCents.map { cents =>
-      val cbValues = cents
-        .map { case (cid, ce) => s"($cid, ${sqlDoubles(ce)})" }
-        .mkString(",\n    ")
-      def adc(cb: String, tag: String): String =
-        s"""cs_$tag AS (SELECT cid, js.j, ce[js.j*16+1 : js.j*16+16] AS ce
-           |  FROM $cb CROSS JOIN js),
-           |d_$tag AS (SELECT s.vec_id, s.j, c.cid,
-           |    list_sum(list_transform(list_zip(s.se, c.ce),
-           |      z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-           |  FROM sub s JOIN cs_$tag c ON s.j = c.j),
-           |codes_$tag AS (SELECT vec_id, j, cid FROM (
-           |    SELECT vec_id, j, cid,
-           |      row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
-           |    FROM d_$tag) WHERE rn = 1),
-           |appx_$tag AS (SELECT q_id, n_id FROM (
-           |    SELECT q_id, n_id,
-           |      row_number() OVER (PARTITION BY q_id ORDER BY adc_d2, n_id) AS rank
-           |    FROM (
-           |      SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-           |        max(CASE WHEN c.j = 0 THEN q.d2 END)
-           |          + max(CASE WHEN c.j = 1 THEN q.d2 END)
-           |          + max(CASE WHEN c.j = 2 THEN q.d2 END)
-           |          + max(CASE WHEN c.j = 3 THEN q.d2 END) AS adc_d2
-           |      FROM codes_$tag c
-           |      JOIN d_$tag q ON q.j = c.j AND q.cid = c.cid
-           |        AND q.vec_id < 50 AND q.vec_id <> c.vec_id
-           |      GROUP BY 1, 2)) WHERE rank <= 5)""".stripMargin
-      "q_ann_recall_refined" ->
-        s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-           |js AS (SELECT unnest(range(0, 4)) AS j),
-           |sub AS (SELECT v.vec_id, js.j, v.e[js.j*16+1 : js.j*16+16] AS se
-           |        FROM v CROSS JOIN js),
-           |ex AS (SELECT q_id, n_id FROM (
-           |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY ${sqlCos("q", "c")} DESC, c.vec_id) AS rank
-           |    FROM v q JOIN v c ON q.vec_id != c.vec_id
-           |    WHERE q.vec_id < 50) WHERE rank <= 5),
-           |cb_s AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 16),
-           |cb_r AS (SELECT * FROM (VALUES
-           |    $cbValues) AS t(cid, ce)),
-           |${adc("cb_s", "s")},
-           |${adc("cb_r", "r")},
-           |jr AS (SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           |       FROM ex e LEFT JOIN appx_r a ON a.q_id = e.q_id AND a.n_id = e.n_id),
-           |rr AS (SELECT q_id, CAST(sum(hit) AS BIGINT) AS hits_refined,
-           |         CAST(count(*) AS BIGINT) AS n_exact,
-           |         CAST(sum(hit) AS DOUBLE) / count(*) AS recall_refined
-           |       FROM jr GROUP BY q_id),
-           |jv AS (SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-           |       FROM ex e LEFT JOIN appx_s a ON a.q_id = e.q_id AND a.n_id = e.n_id),
-           |rs AS (SELECT q_id, CAST(sum(hit) AS BIGINT) AS hits_seeded,
-           |         CAST(sum(hit) AS DOUBLE) / count(*) AS recall_seeded
-           |       FROM jv GROUP BY q_id)
-           |SELECT rr.q_id, hits_refined, n_exact, recall_refined,
-           |       hits_seeded, recall_seeded
-           |FROM rr JOIN rs ON rr.q_id = rs.q_id""".stripMargin
-    }.toMap
-  }
-
-  /** Trained IVF centroids captured by q_bitext_ivf_trained (nlist rows of
-    * metadata) — the oracle embeds them verbatim, like [[ivfOracleEntry]]. */
-  @volatile private var bitextTrainedCents: Option[Array[Array[Double]]] = None
-  @volatile private var warnedBitextTrainedOmitted = false
-
-  /** q_bitext_ivf_trained's oracle: the q_bitext_ivf cell-assignment replay
-    * with the captured trained centroids as distance literals, joined per-x
-    * against the brute winners. Absent a run, omitted (rows-only). */
-  private def bitextTrainedOracleEntry: Map[String, String] = {
-    if (bitextTrainedCents.isEmpty && !warnedBitextTrainedOmitted) {
-      warnedBitextTrainedOmitted = true
-      System.err.println(
-        "WARN oracleSql: q_bitext_ivf_trained oracle OMITTED — " +
-          "bitextTrainedCents unset (run the q_bitext_ivf_trained query in " +
-          "this JVM before reading oracleSql); the gate degrades to rows-only")
-    }
-    bitextTrainedCents.map { cents =>
-      val cellDists = cents.zipWithIndex.map { case (ctr, i) =>
-        s"""  SELECT vec_id, $i AS cell, list_sum(list_transform(list_zip(e, ${sqlDoubles(ctr)}),
-           |    z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d FROM v""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      val probes = math.min(4, cents.length)
-      val extra =
-        s"""cd AS (
-           |$cellDists),
-           |rnk AS (SELECT vec_id, cell,
-           |          row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-           |        FROM cd),
-           |ycell AS (SELECT vec_id, cell FROM rnk WHERE rn = 1 AND vec_id % 2 = 1),
-           |xprob AS (SELECT vec_id, cell FROM rnk WHERE rn <= $probes AND vec_id % 2 = 0)""".stripMargin
-      val cand =
-        """AND EXISTS (SELECT 1 FROM xprob p JOIN ycell yc
-          |    ON p.cell = yc.cell
-          |    WHERE p.vec_id = x.vec_id AND yc.vec_id = y.vec_id)""".stripMargin
-      "q_bitext_ivf_trained" ->
-        s"""WITH brute AS (${bitextWinnersSql()}),
-           |ivf AS (${bitextWinnersSql(cand, extra)})
-           |SELECT b.x_id, b.y_id AS y_brute, i.y_id AS y_ivf,
-           |  b.y_id = i.y_id AS agree
-           |FROM brute b JOIN ivf i USING (x_id)""".stripMargin
-    }.toMap
-  }
-
-  @volatile private var warnedPcaOmitted = false
-
-  /** q_pca_project's oracle: the per-component left-fold dot with the
-    * CAPTURED top-k components as literals ([[ivfOracleEntry]]
-    * discipline — the fit is deterministic but data-dependent). */
-  private def pcaOracleEntry: Map[String, String] = {
-    if (Similarity.lastPcaRun.isEmpty && !warnedPcaOmitted) {
-      warnedPcaOmitted = true
-      System.err.println(
-        "WARN oracleSql: q_pca_project oracle OMITTED — no PCA fit in this " +
-          "JVM (run the q_pca_project query before reading oracleSql); " +
-          "the gate degrades to rows-only")
-    }
-    Similarity.lastPcaRun.map { run =>
-      val pcs = run.components.zipWithIndex.map { case (c, i) =>
-        s"list_sum(list_transform(list_zip(e, ${sqlDoubles(c)}), " +
-          s"z -> z[1] * z[2])) AS pc${i + 1}"
-      }.mkString(",\n  ")
-      "q_pca_project" ->
-        s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings)
-           |SELECT vec_id,
-           |  $pcs
-           |FROM v""".stripMargin
-    }.toMap
-  }
-
-  def oracleSql: Map[String, String] =
-    ivfOracleEntry ++ refinedRecallOracleEntry ++
-      bitextTrainedOracleEntry ++ pcaOracleEntry ++ Map(
-    "q_filter" ->
-      "SELECT doc_id, text FROM documents WHERE contains(lower(text), 'window')",
-
-    "q_column_filter" ->
-      "SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem WHERE trim(l_returnflag) = 'R'",
-
-    "q_transform_upper" ->
-      "SELECT doc_id, upper(text) AS text, upper(lang) AS lang, upper(source) AS source FROM documents",
-
-    "q_transform_lower" ->
-      "SELECT doc_id, lower(lang) AS lang, lower(source) AS source FROM documents",
-
-    "q_transform_trim" ->
-      "SELECT p_partkey, trim('  ' || p_name || ' ') AS p_name FROM part",
-
-    "q_filtered_transform" ->
-      "SELECT doc_id, upper(text) AS text FROM documents WHERE contains(lower(text), 'table')",
-
-    "q_split_words" ->
-      """SELECT doc_id, CAST(generate_subscripts(toks, 1) - 1 AS BIGINT) AS pos, unnest(toks) AS word
-        |FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |      FROM documents WHERE doc_id < 50)""".stripMargin,
-
-    "q_select" ->
-      "SELECT p_partkey, p_name FROM part",
-
-    "q_running_count" ->
-      "SELECT event_id, CAST(row_number() OVER (ORDER BY event_id) AS BIGINT) AS running_count FROM events",
-
-    "q_running_sum" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-        |    OVER (ORDER BY l_orderkey, l_linenumber ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_sum
-        |FROM lineitem""".stripMargin,
-
-    "q_running_max" ->
-      """SELECT o_orderkey,
-        |  MAX(o_totalprice) OVER (ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS running_max
-        |FROM orders""".stripMargin,
-
-    "q_running_min" ->
-      """SELECT o_orderkey,
-        |  MIN(o_totalprice) OVER (ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS running_min
-        |FROM orders""".stripMargin,
-
-    "q_pipeline_filter_count" ->
-      """SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS running_count
-        |FROM documents WHERE contains(lower(text), 'join')""".stripMargin,
-
-    // DuckDB reads the same fixture CSV directly (RFC-4180 both sides).
-    "q_traffic_pipeline" ->
-      (s"""SELECT OBJECTID, Sign_Type
-        |FROM read_csv('${graft.sources.Tables.trafficSignsFixture}',
-        |  header=false, columns={""".stripMargin +
-        graft.sources.Tables.trafficSignsSchema.fieldNames
-          .map(n => s"'$n': 'VARCHAR'").mkString(", ") +
-        """})
-        |WHERE trim(Category) = 'Warning'""".stripMargin),
-
-    // Console command line: COLUMN_FILTER then the running count, numbered in
-    // OBJECTID order over the filtered rows (window evaluates after WHERE).
-    // All 19 columns ride through, as the reference's results log would show.
-    "q_console" ->
-      (s"""SELECT *, CAST(row_number() OVER (ORDER BY OBJECTID) AS BIGINT) AS running_count
-        |FROM read_csv('${graft.sources.Tables.trafficSignsFixture}',
-        |  header=false, columns={""".stripMargin +
-        graft.sources.Tables.trafficSignsSchema.fieldNames
-          .map(n => s"'$n': 'VARCHAR'").mkString(", ") +
-        """})
-        |WHERE trim(Category) = 'Warning'""".stripMargin),
-
-    // Naive split(",") parity: raw lines split on every comma, 1-based
-    // column access (OBJECTID=3, Sign_Type=4, Category=9), out-of-range -> NULL
-    // in both engines.
-    "q_traffic_naive" ->
-      s"""WITH raw AS (
-        |  SELECT string_split(line, ',') AS p
-        |  FROM read_csv('${graft.sources.Tables.trafficSignsFixture}',
-        |    header=false, delim='', quote='', columns={'line': 'VARCHAR'}))
-        |SELECT p[3] AS OBJECTID, p[4] AS Sign_Type
-        |FROM raw WHERE trim(p[9]) = 'Streetname'""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,4))) AS DOUBLE) AS sum_disc_price,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q5_join" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name""".stripMargin,
-
-    "q3_join" ->
-      """SELECT l_orderkey,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey""".stripMargin,
-
-    "q6_agg" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(24,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_discount >= 0.03 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n_cust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(20,4))) AS DOUBLE) AS sum_bal
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q_full_outer" ->
-      """WITH c AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal >= 0),
-        |o AS (SELECT o_custkey, count(*) AS n_orders,
-        |        CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_price
-        |      FROM orders WHERE o_totalprice > 300000 GROUP BY o_custkey)
-        |SELECT coalesce(c.c_custkey, o.o_custkey) AS custkey,
-        |  c.c_mktsegment, o.n_orders, o.sum_price
-        |FROM c FULL JOIN o ON c.c_custkey = o.o_custkey""".stripMargin,
-
-    "q_quantize" ->
-      """WITH v AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |  list_aggregate(list_transform(e, x -> abs(x)), 'max') AS scale FROM v)
-        |SELECT vec_id, scale,
-        |  CASE WHEN scale = 0 THEN array_to_string(list_transform(e, x -> 0), ',')
-        |       ELSE array_to_string(list_transform(e,
-        |              x -> CAST(floor(x / scale * 127 + 0.5) AS INTEGER)), ',')
-        |  END AS q
-        |FROM s""".stripMargin,
-
-    // pq_encode: m=4 16-dim subspaces, codebook = first-16-by-id slices,
-    // L2 argmin (sequential left-fold sum == Spark aggregate HOF) with
-    // smallest-cid tiebreak via the (d2, cid) row_number order
-    "q_pq_encode" ->
-      """WITH v AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |cb AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 16),
-        |js AS (SELECT unnest(range(0, 4)) AS j),
-        |sub AS (SELECT v.vec_id, js.j, v.e[js.j*16+1 : js.j*16+16] AS se
-        |        FROM v CROSS JOIN js),
-        |cs AS (SELECT cb.cid, js.j, cb.ce[js.j*16+1 : js.j*16+16] AS ce
-        |       FROM cb CROSS JOIN js),
-        |d AS (SELECT s.vec_id, s.j, c.cid,
-        |        list_sum(list_transform(list_zip(s.se, c.ce),
-        |          z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-        |      FROM sub s JOIN cs c ON s.j = c.j),
-        |a AS (SELECT vec_id, j, cid,
-        |        row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
-        |      FROM d)
-        |SELECT vec_id,
-        |  max(CASE WHEN j = 0 THEN cid END) AS code_0,
-        |  max(CASE WHEN j = 1 THEN cid END) AS code_1,
-        |  max(CASE WHEN j = 2 THEN cid END) AS code_2,
-        |  max(CASE WHEN j = 3 THEN cid END) AS code_3
-        |FROM a WHERE rn = 1 GROUP BY vec_id""".stripMargin,
-
-    // SQ8: per-dim min/max census -> codes -> asymmetric reconstruction
-    // distance, every float op in the engine's exact order (list_sum =
-    // the sequential left fold Spark's aggregate HOF computes)
-    "q_sim_sq8" ->
-      """WITH v AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |ps AS (SELECT unnest(range(0, 64)) AS pos),
-        |cen AS (SELECT pos, min(e[pos + 1]) AS lo, max(e[pos + 1]) AS hi
-        |        FROM v CROSS JOIN ps GROUP BY 1),
-        |r AS (SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-        |      FROM cen),
-        |codes AS (SELECT vec_id, list_transform(range(1, 65), i ->
-        |    CASE WHEN his[i] > los[i]
-        |      THEN CAST(floor((e[i] - los[i]) / (his[i] - los[i]) * 255.0 + 0.5) AS BIGINT)
-        |      ELSE 0 END) AS cds
-        |  FROM v, r),
-        |score AS (SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-        |    list_sum(list_transform(range(1, 65), i ->
-        |      (q.e[i] - (los[i] + CAST(c.cds[i] AS DOUBLE) * (his[i] - los[i]) / 255.0)) *
-        |      (q.e[i] - (los[i] + CAST(c.cds[i] AS DOUBLE) * (his[i] - los[i]) / 255.0)))) AS sq_d2
-        |  FROM v q, codes c, r
-        |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)
-        |SELECT q_id, n_id, rank, sq_d2 FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sq_d2, n_id) AS rank
-        |  FROM score) WHERE rank <= 5""".stripMargin,
-
-    // IVF-SQ8: the ivfpq oracle's cell/probe CTEs composed with the sq8
-    // oracle's code/reconstruction CTEs — cell-keyed score join only
-    "q_sim_ivfsq8" ->
-      s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-         |cent AS (SELECT vec_id AS ccid, e FROM v ORDER BY vec_id LIMIT 16),
-         |ca AS (SELECT v.vec_id, cent.ccid, ${sqlCos("v", "cent")} AS cos
-         |       FROM v, cent),
-         |cr AS (SELECT vec_id, ccid,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, ccid) AS rn
-         |       FROM ca),
-         |cells AS (SELECT vec_id, ccid AS cell FROM cr WHERE rn = 1),
-         |probes AS (SELECT vec_id AS q_id, ccid AS cell FROM cr
-         |           WHERE rn <= 4 AND vec_id < 10),
-         |ps AS (SELECT unnest(range(0, 64)) AS pos),
-         |cen AS (SELECT pos, min(e[pos + 1]) AS lo, max(e[pos + 1]) AS hi
-         |        FROM v CROSS JOIN ps GROUP BY 1),
-         |rr AS (SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-         |       FROM cen),
-         |codes AS (SELECT vec_id, list_transform(range(1, 65), i ->
-         |    CASE WHEN his[i] > los[i]
-         |      THEN CAST(floor((e[i] - los[i]) / (his[i] - los[i]) * 255.0 + 0.5) AS BIGINT)
-         |      ELSE 0 END) AS cds
-         |  FROM v, rr),
-         |score AS (SELECT p.q_id, n.vec_id AS n_id,
-         |    list_sum(list_transform(range(1, 65), i ->
-         |      (q.e[i] - (los[i] + CAST(c.cds[i] AS DOUBLE) * (his[i] - los[i]) / 255.0)) *
-         |      (q.e[i] - (los[i] + CAST(c.cds[i] AS DOUBLE) * (his[i] - los[i]) / 255.0)))) AS sq_d2
-         |  FROM probes p
-         |  JOIN cells n ON n.cell = p.cell AND n.vec_id != p.q_id
-         |  JOIN codes c ON c.vec_id = n.vec_id
-         |  JOIN v q ON q.vec_id = p.q_id
-         |  CROSS JOIN rr)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, sq_d2 FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sq_d2, n_id) AS rank
-         |  FROM score) WHERE rank <= 5""".stripMargin,
-
-    // RBO: both rankings replayed (exact L2 brute + the SQ8 chain), pair
-    // join on (q, n), per-depth prefix intersections, the d=1..10 term
-    // fold with exact d*2^d denominators
-    "q_rbo_sq8" ->
-      s"""WITH $sq8VsExactCtes,
-        |j AS (SELECT ex.q_id, greatest(ex.rank, sq.rank) AS mr
-        |      FROM ex JOIN sq ON ex.q_id = sq.q_id AND ex.n_id = sq.n_id),
-        |g AS (SELECT q_id, list_sort(list(mr)) AS mrs,
-        |        CAST(count(*) AS BIGINT) AS n_common FROM j GROUP BY 1),
-        |qs AS (SELECT DISTINCT q_id FROM
-        |  (SELECT q_id FROM ex UNION ALL SELECT q_id FROM sq))
-        |SELECT qs.q_id, COALESCE(n_common, 0) AS n_common,
-        |  CASE WHEN mrs IS NOT NULL THEN
-        |    list_sum(list_transform(range(1, 11), d ->
-        |      CAST(len(list_filter(mrs, mr -> mr <= d)) AS DOUBLE) /
-        |      CAST(d * (1 << d) AS DOUBLE)))
-        |  ELSE 0.0 END AS rbo
-        |FROM qs LEFT JOIN g USING (q_id)""".stripMargin,
-
-    // binary-relevance nDCG@10 + MRR of the SQ8 ranking vs the exact-L2
-    // top-10 ground truth; position gains are the engine's own quantized
-    // constants (generated from the same Scala formula)
-    "q_rankeval_sq8" -> {
-      val gains = (1 to 10)
-        .map(i => math.round(1e6 / (math.log(i + 1.0) / math.log(2.0))))
-      val idcg = gains.scanLeft(0L)(_ + _).tail
-      val gl = gains.mkString("[", ", ", "]")
-      val il = idcg.mkString("[", ", ", "]")
-      s"""WITH $sq8VsExactCtes,
-        |j AS (SELECT ex.q_id, sq.rank
-        |      FROM ex JOIN sq ON ex.q_id = sq.q_id AND ex.n_id = sq.n_id),
-        |nr AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_rel FROM ex GROUP BY 1),
-        |h AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_hits,
-        |        CAST(sum(($gl)[CAST(rank AS INT)]) AS BIGINT) AS dcg_micro,
-        |        min(rank) AS minr
-        |      FROM j GROUP BY 1)
-        |SELECT nr.q_id, nr.n_rel, COALESCE(h.n_hits, 0) AS n_hits,
-        |  COALESCE(h.dcg_micro, 0) AS dcg_micro,
-        |  CAST(($il)[CAST(least(nr.n_rel, 10) AS INT)] AS BIGINT) AS idcg_micro,
-        |  CAST(COALESCE(h.dcg_micro, 0) AS DOUBLE) /
-        |    ($il)[CAST(least(nr.n_rel, 10) AS INT)] AS ndcg,
-        |  COALESCE(CAST(round(1000000.0 / h.minr) AS BIGINT), 0) AS rr_micro
-        |FROM nr LEFT JOIN h USING (q_id)""".stripMargin
-    },
-
-    // ADC: the d CTE (every (vector, subspace, codeword) distance) serves
-    // BOTH sides — argmin rows are the corpus codes, query-id rows are the
-    // distance tables; the score is the explicit left-assoc 4-term chain
-    // the engine computes, then (distance, id) ranks.
-    "q_sim_pq" ->
-      """WITH v AS (SELECT vec_id,
-        |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |cb AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 16),
-        |js AS (SELECT unnest(range(0, 4)) AS j),
-        |sub AS (SELECT v.vec_id, js.j, v.e[js.j*16+1 : js.j*16+16] AS se
-        |        FROM v CROSS JOIN js),
-        |cs AS (SELECT cb.cid, js.j, cb.ce[js.j*16+1 : js.j*16+16] AS ce
-        |       FROM cb CROSS JOIN js),
-        |d AS (SELECT s.vec_id, s.j, c.cid,
-        |        list_sum(list_transform(list_zip(s.se, c.ce),
-        |          z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-        |      FROM sub s JOIN cs c ON s.j = c.j),
-        |a AS (SELECT vec_id, j, cid,
-        |        row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
-        |      FROM d),
-        |codes AS (SELECT vec_id, j, cid FROM a WHERE rn = 1),
-        |score AS (
-        |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-        |    max(CASE WHEN c.j = 0 THEN q.d2 END)
-        |      + max(CASE WHEN c.j = 1 THEN q.d2 END)
-        |      + max(CASE WHEN c.j = 2 THEN q.d2 END)
-        |      + max(CASE WHEN c.j = 3 THEN q.d2 END) AS adc_d2
-        |  FROM codes c
-        |  JOIN d q ON q.j = c.j AND q.cid = c.cid AND q.vec_id < 10
-        |    AND q.vec_id <> c.vec_id
-        |  GROUP BY 1, 2),
-        |r AS (SELECT q_id, n_id, adc_d2,
-        |        row_number() OVER (PARTITION BY q_id ORDER BY adc_d2, n_id) AS rank
-        |      FROM score)
-        |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, adc_d2
-        |FROM r WHERE rank <= 5""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-        |  coalesce(o_orderstatus, 'ALL') AS status,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_price
-        |FROM orders
-        |GROUP BY ROLLUP (o_orderpriority, o_orderstatus)""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-        |  coalesce(o_orderstatus, 'ALL') AS status,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_price,
-        |  CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS gid
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-        |  (o_orderstatus), ())""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-        |  coalesce(o_orderstatus, 'ALL') AS status,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_price
-        |FROM orders
-        |GROUP BY CUBE (o_orderpriority, o_orderstatus)""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT user_id,
-        |  count(*) FILTER (event_type = 'view') AS n_view,
-        |  count(*) FILTER (event_type = 'click') AS n_click,
-        |  count(*) FILTER (event_type = 'purchase') AS n_purchase,
-        |  count(*) FILTER (event_type = 'signup') AS n_signup,
-        |  count(*) FILTER (event_type = 'error') AS n_error
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "q_user_features" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(row_number() OVER w AS INTEGER) AS seq,
-        |  lag(value, 1) OVER w AS prev_value,
-        |  CAST(SUM(CAST(value AS DECIMAL(20,4))) OVER
-        |    (w ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum_value,
-        |  CAST(SUM(CAST(value AS DECIMAL(20,4))) OVER
-        |    (w ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS roll3_value
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-
-    "q_events_window" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS w_start, event_type,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q_events_sliding" ->
-      """SELECT w_start, event_type, count(*) AS n FROM (
-        |  SELECT event_type,
-        |    CAST(epoch(date_trunc('hour', ts)) AS BIGINT) - 3600 * unnest([0, 1]) AS w_start
-        |  FROM events)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_events_sessions" ->
-      """WITH u AS (SELECT event_type, epoch_us(ts) AS t_us FROM events),
-        |o AS (
-        |  SELECT event_type, t_us,
-        |    CASE WHEN t_us - lag(t_us) OVER (PARTITION BY event_type ORDER BY t_us) < 1800000000
-        |         THEN 0 ELSE 1 END AS new_s
-        |  FROM u),
-        |i AS (
-        |  SELECT event_type, t_us,
-        |    SUM(new_s) OVER (PARTITION BY event_type ORDER BY t_us ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o)
-        |SELECT min(t_us) AS s_start, event_type, count(*) AS n
-        |FROM i GROUP BY event_type, sid""".stripMargin,
-
-    "q_events_props" ->
-      """WITH p AS (
-        |  SELECT event_type,
-        |    CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |  FROM events)
-        |SELECT event_type, count(*) AS n, count(k) AS n_k,
-        |  CAST(sum(k) AS BIGINT) AS sum_k, max(k) AS max_k
-        |FROM p GROUP BY event_type""".stripMargin,
-
-    "q_lang_id" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    len(list_intersect(toks, ['the','a','of','and','to','in','is','it'])) AS s_en,
-        |    len(list_intersect(toks, ['el','la','de','los','y','que','en','un'])) AS s_es,
-        |    len(list_intersect(toks, ['der','die','das','und','ein','zu','ist','nicht'])) AS s_de,
-        |    len(list_intersect(toks, ['le','les','des','et','une','est','dans','pour'])) AS s_fr,
-        |    len(list_intersect(toks, ['的','是','了','在','我','有','和','不'])) AS s_zh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents))
-        |SELECT doc_id, CASE
-        |  WHEN greatest(s_en, s_es, s_de, s_fr, s_zh) = 0 THEN 'und'
-        |  WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'en'
-        |  WHEN s_es = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'es'
-        |  WHEN s_de = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'de'
-        |  WHEN s_fr = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'fr'
-        |  ELSE 'zh' END AS lang_pred
-        |FROM s""".stripMargin,
-
-    // Generated from TextFunctions.trigramProfiles — ONE source of truth for
-    // the profile lists on both engines.
-    "q_lang_id_ngram" -> {
-      def sqlList(xs: Seq[String]) =
-        xs.map(x => "'" + x.replace("'", "''") + "'").mkString("[", ", ", "]")
-      val profiles = TextFunctions.trigramProfiles
-      val scoreCols = profiles.map { case (lang, ps) =>
-        s"len(list_filter(tris, x -> list_contains(${sqlList(ps)}, x))) AS s_$lang"
-      }.mkString(",\n    ")
-      val gAll = profiles.map(p => s"s_${p._1}").mkString("greatest(", ", ", ")")
-      val cases = profiles.map { case (lang, _) =>
-        s"WHEN s_$lang = $gAll THEN '$lang'"
-      }.mkString("\n  ")
-      s"""WITH g AS (
-         |  SELECT doc_id, list_transform(range(1, greatest(length(t) - 1, 1)),
-         |    i -> substr(t, CAST(i AS INTEGER), 3)) AS tris
-         |  FROM (SELECT doc_id, lower(trim(text)) AS t FROM documents)),
-         |s AS (
-         |  SELECT doc_id,
-         |    $scoreCols
-         |  FROM g)
-         |SELECT doc_id, CASE
-         |  WHEN $gAll = 0 THEN 'und'
-         |  $cases
-         |  END AS lang_pred
-         |FROM s""".stripMargin
-    },
-
-    "q_pipeline_curation" ->
-      """WITH t AS (SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS toks
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |        unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS gram
-        |      FROM t WHERE len(toks) >= 2),
-        |c AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-        |m AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS tbf
-        |      FROM c GROUP BY 1),
-        |rep AS (SELECT t.doc_id,
-        |          CASE WHEN len(toks) > 0
-        |               THEN 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
-        |               ELSE 0.0 END AS dtf,
-        |          coalesce(m.tbf, 0.0) AS tbf
-        |        FROM t LEFT JOIN m USING (doc_id)),
-        |s AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))) AS sh
-        |      FROM t),
-        |b AS (SELECT DISTINCT sh FROM s WHERE doc_id % 97 = 0),
-        |cont AS (SELECT s.doc_id FROM s LEFT JOIN b USING (sh)
-        |         GROUP BY s.doc_id HAVING count(b.sh) * 2 > count(*)),
-        |kept AS (SELECT d.doc_id, d.text FROM documents d
-        |         JOIN rep USING (doc_id)
-        |         WHERE rep.dtf <= 0.8 AND rep.tbf <= 0.2
-        |           AND d.doc_id NOT IN (SELECT doc_id FROM cont))
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\b\d{12,19}\b', '<LONGNUM>', 'g'),
-        |    '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g') AS clean,
-        |  CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::UBIGINT
-        |            % 10000 AS BIGINT) < 9000
-        |       THEN 'train' ELSE 'val' END AS split
-        |FROM kept""".stripMargin,
-
-    "q_split_assign" ->
-      """SELECT doc_id, CASE WHEN b < 8000 THEN 'train'
-        |                    WHEN b < 9000 THEN 'val'
-        |                    ELSE 'test' END AS split
-        |FROM (SELECT doc_id,
-        |        CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::UBIGINT % 10000 AS BIGINT) AS b
-        |      FROM documents)""".stripMargin,
-
-    // temperature rebalance: group-sorted sqrt-mass fold, in-plan rate,
-    // integer bucket compare — float steps written identically on both
-    // sides so the quantized thresholds agree bit-for-bit
-    "q_temp_sample" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents
-        |           WHERE source IS NOT NULL GROUP BY source),
-        |m AS (SELECT list_reduce(
-        |        list_prepend(0.0e0,
-        |          list(sqrt(CAST(n AS DOUBLE)) ORDER BY source)),
-        |        (a, b) -> a + b) AS mass FROM c),
-        |t AS (SELECT c.source,
-        |        greatest(1, CAST(round(least(1.0e0,
-        |          (150.0e0 * (sqrt(CAST(c.n AS DOUBLE)) / m.mass))
-        |            / CAST(c.n AS DOUBLE)) * 10000) AS BIGINT)) AS thr
-        |      FROM c, m)
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN t USING (source)
-        |WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':temp'), 1, 15))::UBIGINT
-        |           % 10000 AS BIGINT) < t.thr""".stripMargin,
-
-    "q_split_group" ->
-      """SELECT event_id, user_id,
-        |  CASE WHEN b < 8000 THEN 'train'
-        |       WHEN b < 9000 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM (SELECT event_id, user_id,
-        |        CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::UBIGINT % 10000 AS BIGINT) AS b
-        |      FROM events)""".stripMargin,
-
-    // purged split: test >= 2024-01-24T00Z, 48 h embargo band 'purged'
-    "q_purged_split" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us,
-        |  CASE WHEN epoch_us(ts) >= 1706054400000000 THEN 'test'
-        |       WHEN epoch_us(ts) < 1706054400000000 - 172800000000 THEN 'train'
-        |       WHEN ts IS NOT NULL THEN 'purged' END AS split
-        |FROM events""".stripMargin,
-
-    "q_sample" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':s1'), 1, 15))::UBIGINT
-        |           % 10000 AS BIGINT) < 2500""".stripMargin,
-
-    "q_mixture" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mixture'), 1, 15))::UBIGINT
-        |         % 10000 AS BIGINT) AS b
-        |  FROM documents)
-        |WHERE b < CASE source WHEN 'src1' THEN 5000 WHEN 'src2' THEN 1000
-        |                      WHEN 'src3' THEN 0 ELSE 8000 END""".stripMargin,
-
-    "q_mixture_target" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |w AS (SELECT * FROM (VALUES ('src1', 0.5), ('src2', 0.3), ('src3', 0.2))
-        |      AS w(source, wt)),
-        |c AS (SELECT source, CAST(sum(n_tokens) AS DOUBLE) AS c
-        |      FROM t GROUP BY source),
-        |m AS (SELECT c.source, c.c, w.wt FROM c JOIN w USING (source) WHERE c.c > 0),
-        |s AS (SELECT min(c / wt) AS S FROM m),
-        |r AS (SELECT source, S * wt / c AS rate FROM m, s)
-        |SELECT t.doc_id, t.source, t.n_tokens
-        |FROM t JOIN r USING (source)
-        |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mixture'), 1, 15))::UBIGINT
-        |           % 10000 AS BIGINT) < rate * 10000""".stripMargin,
-
-    "q_mixture_up" ->
-      """SELECT doc_id, source, CAST(unnest(range(1, copies + 1)) AS BIGINT) AS copy FROM (
-        |  SELECT doc_id, source,
-        |    CAST(floor(w) AS BIGINT) +
-        |      CASE WHEN b < round((w - floor(w)) * 10000) THEN 1 ELSE 0 END AS copies
-        |  FROM (
-        |    SELECT doc_id, source,
-        |      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mixture'), 1, 15))::UBIGINT
-        |           % 10000 AS BIGINT) AS b,
-        |      CASE source WHEN 'src1' THEN 2.5 WHEN 'src2' THEN 0.5 ELSE 1.0 END AS w
-        |    FROM documents))""".stripMargin,
-
-    "q_token_budget" ->
-      """WITH s AS (
-        |  SELECT doc_id, source, text,
-        |    len(list_intersect(toks, ['the','a','of','and','to','in','is','it'])) AS s_en,
-        |    len(list_intersect(toks, ['el','la','de','los','y','que','en','un'])) AS s_es,
-        |    len(list_intersect(toks, ['der','die','das','und','ein','zu','ist','nicht'])) AS s_de,
-        |    len(list_intersect(toks, ['le','les','des','et','une','est','dans','pour'])) AS s_fr,
-        |    len(list_intersect(toks, ['的','是','了','在','我','有','和','不'])) AS s_zh
-        |  FROM (SELECT doc_id, source, text, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |lang AS (
-        |  SELECT source, text, CASE
-        |    WHEN greatest(s_en, s_es, s_de, s_fr, s_zh) = 0 THEN 'und'
-        |    WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'en'
-        |    WHEN s_es = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'es'
-        |    WHEN s_de = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'de'
-        |    WHEN s_fr = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'fr'
-        |    ELSE 'zh' END AS lang_pred
-        |  FROM s)
-        |SELECT source, lang_pred, count(*) AS n_docs,
-        |  CAST(SUM(len(regexp_extract_all(text, '[\p{L}\p{N}]+|[^\p{L}\p{N}\s]'))) AS BIGINT) AS n_tokens
-        |FROM lang GROUP BY source, lang_pred""".stripMargin,
-
-    "q_top_docs" ->
-      """SELECT doc_id, source, n_tokens, rank FROM (
-        |  SELECT doc_id, source, n_tokens,
-        |    CAST(row_number() OVER (PARTITION BY source ORDER BY n_tokens DESC, doc_id) AS BIGINT) AS rank
-        |  FROM (SELECT doc_id, source,
-        |          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |        FROM documents))
-        |WHERE rank <= 5""".stripMargin,
-
-    "q_profile" ->
-      """SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-        |  count(*) - count(o_orderstatus) AS n_null,
-        |  count(DISTINCT o_orderstatus) AS n_distinct FROM orders
-        |UNION ALL
-        |SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-        |  count(DISTINCT o_orderpriority) FROM orders
-        |UNION ALL
-        |SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
-        |  count(DISTINCT o_custkey) FROM orders""".stripMargin,
-
-    "q_profile_approx" ->
-      """SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
-        |  count(*) - count(o_orderstatus) AS n_null,
-        |  count(DISTINCT o_orderstatus) AS n_distinct, TRUE AS within_rsd
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-        |  count(DISTINCT o_orderpriority), TRUE FROM orders
-        |UNION ALL
-        |SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
-        |  count(DISTINCT o_custkey), TRUE FROM orders""".stripMargin,
-
-    "q_quality" ->
-      """SELECT doc_id,
-        |  CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS sum_token_len,
-        |  CAST(len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','it'], t))) AS BIGINT) AS n_stop
-        |FROM (SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)""".stripMargin,
-
-    "q_funnel" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY e.user_id)
-        |SELECT s1.user_id, CAST(epoch_us(t1) AS BIGINT) AS t1,
-        |       CAST(epoch_us(t2) AS BIGINT) AS t2, CAST(epoch_us(t3) AS BIGINT) AS t3
-        |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""".stripMargin,
-
-    "q_funnel_window" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, s1.t1 AS t1w, MIN(e.ts) AS t2
-        |       FROM events e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |         AND epoch_us(e.ts) <= epoch_us(s1.t1) + 3600000000
-        |       GROUP BY e.user_id, s1.t1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3
-        |       FROM events e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |         AND epoch_us(e.ts) <= epoch_us(s2.t1w) + 3600000000
-        |       GROUP BY e.user_id)
-        |SELECT s1.user_id, CAST(epoch_us(t1) AS BIGINT) AS t1,
-        |       CAST(epoch_us(t2) AS BIGINT) AS t2, CAST(epoch_us(t3) AS BIGINT) AS t3
-        |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""".stripMargin,
-
-    "q_funnel_conv" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY e.user_id)
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-        |         (SELECT count(*) FROM s1) AS n_users
-        |  UNION ALL
-        |  SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |  UNION ALL
-        |  SELECT 3, 'purchase', (SELECT count(*) FROM s3))""".stripMargin,
-
-    "q_skew_join" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |       l_suppkey, s_name
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey""".stripMargin,
-
-    "q_skew_distinct" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q_sessionize" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(SUM(CASE WHEN gap_new THEN 1 ELSE 0 END)
-        |       OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_idx
-        |FROM (SELECT event_id, user_id, ts,
-        |        epoch_us(ts) - LAG(epoch_us(ts))
-        |          OVER (PARTITION BY user_id ORDER BY ts) > 1800000000 AS gap_new
-        |      FROM events)""".stripMargin,
-
-    // interval overlap: sessions (0-based gaps-and-islands ordinals, the
-    // q_sessionize convention) x +-10min purchase windows; DuckDB's
-    // IEJoin takes the non-equi form directly
-    "q_interval_join" ->
-      """WITH g AS (SELECT user_id, ts,
-        |    epoch_us(ts) - LAG(epoch_us(ts))
-        |      OVER (PARTITION BY user_id ORDER BY ts) > 1800000000 AS gap_new
-        |  FROM events),
-        |si AS (SELECT user_id, epoch_us(ts) AS t,
-        |    SUM(CASE WHEN gap_new THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts) AS sid
-        |  FROM g),
-        |a AS (SELECT user_id * 1000000 + sid AS s_id,
-        |        min(t) AS s, max(t) AS e
-        |      FROM si GROUP BY user_id, sid),
-        |b AS (SELECT event_id AS p_id, epoch_us(ts) - 600000000 AS s,
-        |        epoch_us(ts) + 600000000 AS e
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT CAST(a.s_id AS BIGINT) AS s_id, b.p_id,
-        |  CAST(least(a.e, b.e) - greatest(a.s, b.s) AS BIGINT) AS overlap_us
-        |FROM a JOIN b ON a.s <= b.e AND b.s <= a.e""".stripMargin,
-
-    // k-anonymity census over the generalized quasi tuple
-    "q_k_anon" ->
-      """WITH q AS (SELECT lang, source,
-        |    len(regexp_split_to_array(trim(text), '\s+')) // 100 AS len_band
-        |  FROM documents)
-        |SELECT lang, source, CAST(len_band AS BIGINT) AS len_band,
-        |  CAST(count(*) AS BIGINT) AS n, count(*) >= 5 AS k_anonymous
-        |FROM q GROUP BY 1, 2, 3""".stripMargin,
-
-    "q_asof_fwd" ->
-      """WITH p AS (SELECT user_id, ts, max(value) AS p_value
-        |           FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |v AS (SELECT event_id, user_id, ts
-        |      FROM events WHERE event_type = 'view')
-        |SELECT v.event_id, v.user_id, epoch_us(v.ts) AS ts_us,
-        |       p.p_value AS p_value, epoch_us(p.ts) AS p_ts_us
-        |FROM v ASOF LEFT JOIN p
-        |  ON v.user_id = p.user_id AND v.ts <= p.ts""".stripMargin,
-
-    "q_asof" ->
-      """WITH v AS (SELECT user_id, ts, max(value) AS view_value
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, ts, value
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-        |       v.view_value AS view_value, epoch_us(v.ts) AS view_ts_us
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-
-    "q_dedup_spans" ->
-      """WITH ch AS (
-        |  SELECT doc_id, CAST((s - 1) // 32 AS BIGINT) AS chunk_idx,
-        |         array_to_string(toks[s:s+31], ' ') AS chunk
-        |  FROM (SELECT doc_id,
-        |          coalesce(regexp_split_to_array(trim(text), '\s+'), []) AS toks
-        |        FROM documents),
-        |       UNNEST(range(1, greatest(len(toks) - 1, 0) + 2, 32)) AS u(s))
-        |SELECT doc_id, chunk_idx FROM (
-        |  SELECT doc_id, chunk_idx,
-        |    row_number() OVER (PARTITION BY md5(chunk)
-        |      ORDER BY doc_id, chunk_idx) AS rk
-        |  FROM ch)
-        |WHERE rk = 1""".stripMargin,
-
-    "q_dedup_rebuild" ->
-      """WITH ch AS (
-        |  SELECT doc_id, CAST((s - 1) // 32 AS BIGINT) AS chunk_idx,
-        |         array_to_string(toks[s:s+31], ' ') AS chunk
-        |  FROM (SELECT doc_id,
-        |          coalesce(regexp_split_to_array(trim(text), '\s+'), []) AS toks
-        |        FROM documents),
-        |       UNNEST(range(1, greatest(len(toks) - 1, 0) + 2, 32)) AS u(s)),
-        |k AS (
-        |  SELECT doc_id, chunk_idx, chunk FROM (
-        |    SELECT doc_id, chunk_idx, chunk,
-        |      row_number() OVER (PARTITION BY md5(chunk)
-        |        ORDER BY doc_id, chunk_idx) AS rk
-        |    FROM ch)
-        |  WHERE rk = 1)
-        |SELECT doc_id, string_agg(chunk, ' ' ORDER BY chunk_idx) AS rebuilt
-        |FROM k GROUP BY doc_id""".stripMargin,
-
-    "q_pipeline_chunks" ->
-      """WITH ch AS (
-        |  SELECT doc_id, CAST((s - 1) // 32 AS BIGINT) AS chunk_idx,
-        |         array_to_string(toks[s:s+31], ' ') AS chunk,
-        |         CAST(len(toks[s:s+31]) AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id,
-        |          coalesce(regexp_split_to_array(trim(text), '\s+'), []) AS toks
-        |        FROM documents),
-        |       UNNEST(range(1, greatest(len(toks) - 1, 0) + 2, 32)) AS u(s)),
-        |d AS (SELECT doc_id, chunk_idx, n_tokens FROM (
-        |  SELECT doc_id, chunk_idx, n_tokens,
-        |    row_number() OVER (PARTITION BY md5(chunk)
-        |      ORDER BY doc_id, chunk_idx) AS rk
-        |  FROM ch) WHERE rk = 1)
-        |SELECT doc_id, chunk_idx, CAST((cum - n_tokens) // 2048 AS BIGINT) AS seq_id
-        |FROM (SELECT doc_id, chunk_idx, n_tokens,
-        |        SUM(n_tokens) OVER (ORDER BY doc_id, chunk_idx
-        |          ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM d)""".stripMargin,
-
-    "q_sample_n" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':stratified'), doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 5""".stripMargin,
-
-    "q_sample_n_global" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':global-n'), doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 100""".stripMargin,
-
-    // bucket = #(bounds <= n_tokens); per-bucket 0-based md5-order index;
-    // batch_id = bucket * 2^40 + index div 16 (BIGINT math via the literal)
-    "q_length_batches" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |b AS (SELECT doc_id, n_tokens,
-        |  (n_tokens >= 40)::INT + (n_tokens >= 80)::INT + (n_tokens >= 120)::INT AS len_bucket
-        |  FROM t),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY len_bucket
-        |        ORDER BY md5(CAST(doc_id AS VARCHAR) || ':batch'), doc_id) - 1 AS i
-        |      FROM b)
-        |SELECT doc_id, n_tokens, CAST(len_bucket AS INT) AS len_bucket,
-        |  len_bucket * 1099511627776 + i // 16 AS batch_id
-        |FROM r""".stripMargin,
-
-    "q_quantiles" ->
-      """SELECT 'o_totalprice' AS col_name, 0.25 AS prob,
-        |  quantile_cont(o_totalprice, 0.25) AS value FROM orders
-        |UNION ALL SELECT 'o_totalprice', 0.5, quantile_cont(o_totalprice, 0.5) FROM orders
-        |UNION ALL SELECT 'o_totalprice', 0.75, quantile_cont(o_totalprice, 0.75) FROM orders
-        |UNION ALL SELECT 'o_totalprice', 0.99, quantile_cont(o_totalprice, 0.99) FROM orders
-        |UNION ALL SELECT 'o_custkey', 0.25, quantile_cont(o_custkey, 0.25) FROM orders
-        |UNION ALL SELECT 'o_custkey', 0.5, quantile_cont(o_custkey, 0.5) FROM orders
-        |UNION ALL SELECT 'o_custkey', 0.75, quantile_cont(o_custkey, 0.75) FROM orders
-        |UNION ALL SELECT 'o_custkey', 0.99, quantile_cont(o_custkey, 0.99) FROM orders""".stripMargin,
-
-    "q_quantiles_group" ->
-      """WITH t AS (SELECT source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT source, 'n_tokens' AS col_name, 0.5 AS prob,
-        |  quantile_cont(n_tokens, 0.5) AS value FROM t GROUP BY source
-        |UNION ALL
-        |SELECT source, 'n_tokens', 0.99, quantile_cont(n_tokens, 0.99)
-        |FROM t GROUP BY source""".stripMargin,
-
-    "q_corpus_overlap" ->
-      """WITH a AS (SELECT DISTINCT md5(text) AS f FROM documents WHERE doc_id % 2 = 0),
-        |b AS (SELECT DISTINCT md5(text) AS f FROM documents WHERE doc_id % 2 = 1)
-        |SELECT (SELECT count(*) FROM a) AS n_a,
-        |  (SELECT count(*) FROM b) AS n_b,
-        |  (SELECT count(*) FROM a JOIN b USING (f)) AS n_common,
-        |  (SELECT count(*) FROM a ANTI JOIN b USING (f)) AS n_only_a,
-        |  (SELECT count(*) FROM b ANTI JOIN a USING (f)) AS n_only_b,
-        |  (SELECT count(*) FROM (SELECT f FROM a UNION SELECT f FROM b)) AS n_union""".stripMargin,
-
-    // KS: cross-multiplied integer ECDF-gap numerator over the distinct-
-    // value histogram; one exact-integer division for the double
-    "q_ks_drift" ->
-      """WITH c AS (
-        |  SELECT CAST(value AS DOUBLE) AS v,
-        |    CAST(count(*) FILTER (user_id % 2 = 0) AS BIGINT) AS ca,
-        |    CAST(count(*) FILTER (user_id % 2 = 1) AS BIGINT) AS cb
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT sum(ca) OVER (ORDER BY v) AS cuma,
-        |          sum(cb) OVER (ORDER BY v) AS cumb FROM c),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |        CAST(sum(cb) AS BIGINT) AS n_b FROM c)
-        |SELECT n_a, n_b,
-        |  CAST(max(abs(cuma * n_b - cumb * n_a)) AS BIGINT) AS d_num,
-        |  CAST(max(abs(cuma * n_b - cumb * n_a)) AS DOUBLE) /
-        |    CAST(n_a * n_b AS DOUBLE) AS d
-        |FROM cum, t GROUP BY n_a, n_b""".stripMargin,
-
-    // trimmed/winsorized: exact kept multiplicities on the histogram,
-    // DECIMAL(20,4) kept sums, boundary order statistics
-    "q_trimmed" ->
-      """WITH c AS (SELECT CAST(value AS DOUBLE) AS v,
-        |             CAST(count(*) AS BIGINT) AS c
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v, c, CAST(sum(c) OVER (ORDER BY v) AS BIGINT) AS cum
-        |        FROM c),
-        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-        |        (CAST(sum(c) AS BIGINT) * 1) // 10 AS k FROM c),
-        |core AS (SELECT n, k, sum(CAST(v AS DECIMAL(20,4)) *
-        |           greatest(least(cum, n - k) - greatest(cum - c, k), 0)) AS tsum
-        |         FROM cum, t GROUP BY 1, 2),
-        |lo AS (SELECT min(v) AS lo_cut FROM cum, t WHERE cum > k),
-        |hi AS (SELECT max(v) AS hi_cut FROM cum, t WHERE cum - c < n - k)
-        |SELECT n, k, lo_cut, hi_cut,
-        |  CASE WHEN n - 2 * k > 0
-        |    THEN CAST(tsum AS DOUBLE) / CAST(n - 2 * k AS DOUBLE) END AS trimmed_mean,
-        |  CAST(tsum + CAST(lo_cut AS DECIMAL(20,4)) * k
-        |       + CAST(hi_cut AS DECIMAL(20,4)) * k AS DOUBLE)
-        |    / CAST(n AS DOUBLE) AS winsor_mean
-        |FROM core, lo, hi""".stripMargin,
-
-    // HHI: exact integer sum-of-squares over the category histogram
-    "q_hhi" -> hsOracle("k,n*,ssq*,hhi,effective_k")(
-      """WITH c AS (SELECT CAST(source AS VARCHAR) AS cat,
-        |             CAST(count(*) AS BIGINT) AS c
-        |           FROM documents WHERE source IS NOT NULL GROUP BY 1)
-        |SELECT CAST(count(*) AS BIGINT) AS k,
-        |  CAST(sum(CAST(c AS HUGEINT)) AS DECIMAL(38,0)) AS n,
-        |  CAST(sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS DECIMAL(38,0)) AS ssq,
-        |  CAST(sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS DOUBLE) /
-        |    (CAST(sum(CAST(c AS HUGEINT)) AS DOUBLE) *
-        |     CAST(sum(CAST(c AS HUGEINT)) AS DOUBLE)) AS hhi,
-        |  (CAST(sum(CAST(c AS HUGEINT)) AS DOUBLE) *
-        |   CAST(sum(CAST(c AS HUGEINT)) AS DOUBLE)) /
-        |    CAST(sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS DOUBLE) AS effective_k
-        |FROM c""".stripMargin),
-
-    // dispersion: shared-calendar per-type day series, exact moments
-    "q_dispersion" -> hsOracle("key,n,s*,sxx*,mean,fano")(
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS dd,
-        |    CAST(event_type AS VARCHAR) AS key
-        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-        |dc AS (SELECT key, dd, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1, 2),
-        |sp AS (SELECT min(dd) AS d0, max(dd) AS d1 FROM dc),
-        |spine AS (SELECT k.key, g.dd
-        |  FROM (SELECT unnest(generate_series((SELECT d0 FROM sp),
-        |                                      (SELECT d1 FROM sp))) AS dd) g
-        |  CROSS JOIN (SELECT DISTINCT key FROM dc) k),
-        |ser AS (SELECT spine.key, COALESCE(dc.c, 0) AS c
-        |  FROM spine LEFT JOIN dc ON spine.key = dc.key AND spine.dd = dc.dd),
-        |a AS (SELECT key, CAST(count(*) AS BIGINT) AS n,
-        |        sum(CAST(c AS HUGEINT)) AS s,
-        |        sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS sxx
-        |      FROM ser GROUP BY 1)
-        |SELECT key, n, CAST(s AS DECIMAL(38,0)) AS s,
-        |  CAST(sxx AS DECIMAL(38,0)) AS sxx,
-        |  CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-        |  CASE WHEN s <> 0 THEN
-        |    CAST(CAST(n AS HUGEINT) * sxx - s * s AS DOUBLE) /
-        |      (CAST(n AS DOUBLE) * CAST(s AS DOUBLE))
-        |  END AS fano
-        |FROM a""".stripMargin),
-
-    // EB shrinkage: exact integer counts, fixed-order double rates
-    "q_eb_shrink" ->
-      """WITH g AS (SELECT CAST(source AS VARCHAR) AS "group",
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN n_chars > 1000 THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM documents WHERE source IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-        |        CAST(sum(k) AS BIGINT) AS kk FROM g)
-        |SELECT "group", k, n,
-        |  CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS raw_rate,
-        |  CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE) AS m,
-        |  (CAST(k AS DOUBLE) + 50.0 * (CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE))) /
-        |    (CAST(n AS DOUBLE) + 50.0) AS shrunk_rate
-        |FROM g, t""".stripMargin,
-
-    // CCF: shared zero-filled day spine carrying both series, matched-
-    // pair integer moments per signed lag, one fixed-order double each
-    "q_ccf" -> hsOracle("k,n,sa*,sb*,sxy*,a_k*,b_k*,num*,r")(
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS dd, event_type AS c
-        |           FROM events WHERE ts IS NOT NULL
-        |             AND event_type IN ('view', 'purchase')),
-        |dc AS (SELECT dd,
-        |    CAST(count(*) FILTER (c = 'view') AS BIGINT) AS a,
-        |    CAST(count(*) FILTER (c = 'purchase') AS BIGINT) AS b
-        |  FROM d GROUP BY 1),
-        |sp AS (SELECT min(dd) AS d0, max(dd) AS d1 FROM dc),
-        |ser AS (
-        |  SELECT g.dd - (SELECT d0 FROM sp) + 1 AS r,
-        |    COALESCE(dc.a, 0) AS a, COALESCE(dc.b, 0) AS b
-        |  FROM (SELECT unnest(generate_series((SELECT d0 FROM sp),
-        |                                      (SELECT d1 FROM sp))) AS dd) g
-        |  LEFT JOIN dc ON g.dd = dc.dd),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        sum(CAST(a AS HUGEINT)) AS sa, sum(CAST(b AS HUGEINT)) AS sb,
-        |        sum(CAST(a AS HUGEINT) * CAST(a AS HUGEINT)) AS saa,
-        |        sum(CAST(b AS HUGEINT) * CAST(b AS HUGEINT)) AS sbb FROM ser),
-        |l AS (SELECT unnest(range(-7, 8)) AS k),
-        |p AS (SELECT l.k, t.n, t.sa, t.sb, t.saa, t.sbb,
-        |    sum(CAST(s1.a AS HUGEINT) * CAST(s2.b AS HUGEINT)) AS sxy,
-        |    sum(CAST(s1.a AS HUGEINT)) AS a_k,
-        |    sum(CAST(s2.b AS HUGEINT)) AS b_k
-        |  FROM ser s1 CROSS JOIN l CROSS JOIN t
-        |  JOIN ser s2 ON s1.r + l.k = s2.r
-        |  GROUP BY 1, 2, 3, 4, 5, 6)
-        |SELECT CAST(k AS BIGINT) AS k, n,
-        |  CAST(sa AS DECIMAL(38,0)) AS sa, CAST(sb AS DECIMAL(38,0)) AS sb,
-        |  CAST(sxy AS DECIMAL(38,0)) AS sxy,
-        |  CAST(a_k AS DECIMAL(38,0)) AS a_k, CAST(b_k AS DECIMAL(38,0)) AS b_k,
-        |  CAST(n * n * sxy - n * sb * a_k - n * sa * b_k + (n - abs(k)) * sa * sb AS DECIMAL(38,0)) AS num,
-        |  CASE WHEN (n * n * saa - n * sa * sa) <> 0 AND (n * n * sbb - n * sb * sb) <> 0 THEN
-        |    CAST(n * n * sxy - n * sb * a_k - n * sa * b_k + (n - abs(k)) * sa * sb AS DOUBLE) /
-        |      sqrt(CAST(n * n * saa - n * sa * sa AS DOUBLE) *
-        |           CAST(n * n * sbb - n * sb * sb AS DOUBLE))
-        |  END AS r
-        |FROM p""".stripMargin),
-
-    // per-day mix entropy: quantized-ln integer numerators per day
-    "q_mix_entropy" -> hsOracle("day,n,k,s_h*,h")(
-      """WITH cells AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |    event_type AS cat, CAST(count(*) AS BIGINT) AS c
-        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |d AS (SELECT day, CAST(sum(c) AS BIGINT) AS n,
-        |        CAST(count(*) AS BIGINT) AS k FROM cells GROUP BY 1),
-        |s AS (SELECT cells.day, n, k, sum(CAST(c AS HUGEINT) *
-        |    (CAST(floor(ln(CAST(c AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |     - CAST(floor(ln(CAST(n AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_h
-        |  FROM cells JOIN d USING (day) GROUP BY 1, 2, 3)
-        |SELECT day, n, k, CAST(s_h AS DECIMAL(38,0)) AS s_h,
-        |  -CAST(s_h AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0) AS h
-        |FROM s""".stripMargin),
-
-    // W1: exact integer ECDF-gap numerators x quantized value gaps,
-    // order-free HUGEINT term sum, one fixed-order double readout
-    "q_w1_drift" -> hsOracle("n_a,n_b,s_w1*,w1")(
-      """WITH c AS (
-        |  SELECT CAST(value AS DOUBLE) AS v,
-        |    CAST(count(*) FILTER (user_id % 2 = 0) AS BIGINT) AS ca,
-        |    CAST(count(*) FILTER (user_id % 2 = 1) AS BIGINT) AS cb
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v, sum(ca) OVER w AS cuma, sum(cb) OVER w AS cumb,
-        |          lead(v) OVER (ORDER BY v) AS vn
-        |        FROM c WINDOW w AS (ORDER BY v)),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |        CAST(sum(cb) AS BIGINT) AS n_b FROM c),
-        |s AS (SELECT sum(CAST(abs(cuma * n_b - cumb * n_a) AS HUGEINT) *
-        |        CAST(floor((vn - v) * 1048576.0 + 0.5) AS HUGEINT)) AS s_w1
-        |      FROM cum, t WHERE vn IS NOT NULL)
-        |SELECT n_a, n_b, CAST(s_w1 AS DECIMAL(38,0)) AS s_w1,
-        |  CAST(s_w1 AS DOUBLE) /
-        |    (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * 1048576.0) AS w1
-        |FROM s, t""".stripMargin),
-
-    // MWU: doubled average-rank sums stay exact integers
-    "q_mwu" ->
-      """WITH c AS (
-        |  SELECT CAST(value AS DOUBLE) AS v,
-        |    CAST(count(*) FILTER (user_id % 2 = 0) AS BIGINT) AS ca,
-        |    CAST(count(*) FILTER (user_id % 2 = 1) AS BIGINT) AS cb
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT ca, cb,
-        |          CAST(sum(ca + cb) OVER (ORDER BY v) AS BIGINT) AS cumab FROM c),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |        CAST(sum(cb) AS BIGINT) AS n_b FROM c),
-        |r AS (SELECT CAST(sum(ca * (2 * (cumab - ca - cb) + ca + cb + 1)) AS BIGINT) AS r2
-        |      FROM cum)
-        |SELECT n_a, n_b,
-        |  r2 - n_a * (n_a + 1) AS u2_a,
-        |  2 * n_a * n_b - (r2 - n_a * (n_a + 1)) AS u2_b
-        |FROM r, t""".stripMargin,
-
-    // JSD: quantized-ln entropy numerators as exact HUGEINT sums
-    // (= Spark's DECIMAL(38,0)), readout doubles in the identical op order
-    "q_jsd" -> hsOracle("a_total,b_total,s_p*,s_q*,s_m*,h_p,h_q,h_m,jsd")(
-      """WITH ac AS (
-        |  SELECT sh, count(*) AS ca FROM (
-        |    SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |    FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        |          FROM documents WHERE doc_id % 3 <> 0))
-        |  GROUP BY sh),
-        |bc AS (
-        |  SELECT sh, count(*) AS cb FROM (
-        |    SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |    FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        |          FROM documents WHERE doc_id % 3 = 0))
-        |  GROUP BY sh),
-        |c AS (SELECT coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
-        |      FROM ac FULL JOIN bc USING (sh)),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS a_total,
-        |        CAST(sum(cb) AS BIGINT) AS b_total FROM c),
-        |q AS (SELECT ca, cb, a_total, b_total,
-        |    CAST(ca AS HUGEINT) * b_total + CAST(cb AS HUGEINT) * a_total AS nmix
-        |  FROM c, t),
-        |s AS (SELECT
-        |    sum(CASE WHEN ca > 0 THEN CAST(ca AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(ca AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(a_total AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))
-        |      ELSE 0 END) AS s_p,
-        |    sum(CASE WHEN cb > 0 THEN CAST(cb AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(cb AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(b_total AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))
-        |      ELSE 0 END) AS s_q,
-        |    sum(nmix *
-        |      (CAST(floor(ln(CAST(nmix AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(2 * CAST(a_total AS HUGEINT) * b_total AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_m,
-        |    max(a_total) AS a_total, max(b_total) AS b_total
-        |  FROM q),
-        |r AS (SELECT a_total, b_total,
-        |    CAST(s_p AS DECIMAL(38,0)) AS s_p, CAST(s_q AS DECIMAL(38,0)) AS s_q,
-        |    CAST(s_m AS DECIMAL(38,0)) AS s_m,
-        |    -(CAST(s_p AS DOUBLE) / CAST(a_total AS DOUBLE)) / 1048576.0 AS h_p,
-        |    -(CAST(s_q AS DOUBLE) / CAST(b_total AS DOUBLE)) / 1048576.0 AS h_q,
-        |    -(CAST(s_m AS DOUBLE) / (2.0 * CAST(a_total AS DOUBLE) * CAST(b_total AS DOUBLE))) / 1048576.0 AS h_m
-        |  FROM s)
-        |SELECT a_total, b_total, s_p, s_q, s_m, h_p, h_q, h_m,
-        |  h_m - (h_p + h_q) / 2.0 AS jsd
-        |FROM r""".stripMargin),
-
-    // Kendall tau-b: cell-pair concordance sums, doubled tie corrections,
-    // one fixed-order sqrt readout
-    "q_kendall" -> hsOracle("n,c_pairs*,d_pairs*,t2_x*,t2_y*,n0_2*,tau_b")(
-      """WITH cells AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-        |    CAST(l_discount AS DOUBLE) AS y, CAST(count(*) AS BIGINT) AS c
-        |  FROM lineitem WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-        |  GROUP BY 1, 2),
-        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
-        |p AS (SELECT
-        |    coalesce(sum(CASE WHEN b.y > a.y THEN CAST(a.c AS HUGEINT) * b.c END), 0) AS c_pairs,
-        |    coalesce(sum(CASE WHEN b.y < a.y THEN CAST(a.c AS HUGEINT) * b.c END), 0) AS d_pairs
-        |  FROM cells a JOIN cells b ON b.x > a.x),
-        |tx AS (SELECT coalesce(sum(CAST(cx AS HUGEINT) * (cx - 1)), 0) AS t2_x
-        |       FROM (SELECT CAST(sum(c) AS BIGINT) AS cx FROM cells GROUP BY x)),
-        |ty AS (SELECT coalesce(sum(CAST(cy AS HUGEINT) * (cy - 1)), 0) AS t2_y
-        |       FROM (SELECT CAST(sum(c) AS BIGINT) AS cy FROM cells GROUP BY y))
-        |SELECT n, CAST(c_pairs AS DECIMAL(38,0)) AS c_pairs,
-        |  CAST(d_pairs AS DECIMAL(38,0)) AS d_pairs,
-        |  CAST(t2_x AS DECIMAL(38,0)) AS t2_x, CAST(t2_y AS DECIMAL(38,0)) AS t2_y,
-        |  CAST(CAST(n AS HUGEINT) * (n - 1) AS DECIMAL(38,0)) AS n0_2,
-        |  CASE WHEN (CAST(n AS HUGEINT) * (n - 1) - t2_x) <> 0
-        |        AND (CAST(n AS HUGEINT) * (n - 1) - t2_y) <> 0 THEN
-        |    2.0 * CAST(c_pairs - d_pairs AS DOUBLE) /
-        |      sqrt(CAST(CAST(n AS HUGEINT) * (n - 1) - t2_x AS DOUBLE) *
-        |           CAST(CAST(n AS HUGEINT) * (n - 1) - t2_y AS DOUBLE))
-        |  END AS tau_b
-        |FROM p, t, tx, ty""".stripMargin),
-
-    // Mann-Kendall: calendar-bounded pair-sign sum, tie-corrected 18*Var,
-    // continuity-corrected z
-    "q_mann_kendall" -> hsOracle("n,s*,var18*,z")(
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS dd FROM events
-        |           WHERE ts IS NOT NULL),
-        |dc AS (SELECT dd, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        |sp AS (SELECT min(dd) AS d0, max(dd) AS d1 FROM dc),
-        |ser AS (SELECT g.dd - (SELECT d0 FROM sp) + 1 AS r, COALESCE(dc.c, 0) AS c
-        |  FROM (SELECT unnest(generate_series((SELECT d0 FROM sp),
-        |                                      (SELECT d1 FROM sp))) AS dd) g
-        |  LEFT JOIN dc ON g.dd = dc.dd),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ser),
-        |sv AS (SELECT CAST(coalesce(sum(CASE WHEN b.c > a.c THEN 1
-        |                 WHEN b.c < a.c THEN -1 ELSE 0 END), 0) AS HUGEINT) AS s
-        |       FROM ser a JOIN ser b ON b.r > a.r),
-        |ties AS (SELECT coalesce(sum(CAST(m AS HUGEINT) * (m - 1) * (2 * m + 5)), 0) AS tsum
-        |         FROM (SELECT CAST(count(*) AS BIGINT) AS m FROM ser GROUP BY c))
-        |SELECT n, CAST(s AS DECIMAL(38,0)) AS s,
-        |  CAST(CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5) - tsum AS DECIMAL(38,0)) AS var18,
-        |  CASE WHEN (CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5) - tsum) = 0 THEN NULL
-        |       WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) /
-        |         sqrt(CAST(CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5) - tsum AS DOUBLE) / 18.0)
-        |       WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) /
-        |         sqrt(CAST(CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5) - tsum AS DOUBLE) / 18.0)
-        |       ELSE 0.0 END AS z
-        |FROM sv, t, ties""".stripMargin),
-
-    // Theil-Sen: pairwise day slopes quantized to 1e-6 integers, exact
-    // median via quantile_cont (the gate-proven integral regime)
-    "q_theil_sen" ->
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS dd FROM events
-        |           WHERE ts IS NOT NULL),
-        |dc AS (SELECT dd, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        |sp AS (SELECT min(dd) AS d0, max(dd) AS d1 FROM dc),
-        |ser AS (SELECT g.dd - (SELECT d0 FROM sp) + 1 AS r, COALESCE(dc.c, 0) AS c
-        |  FROM (SELECT unnest(generate_series((SELECT d0 FROM sp),
-        |                                      (SELECT d1 FROM sp))) AS dd) g
-        |  LEFT JOIN dc ON g.dd = dc.dd),
-        |sl AS (SELECT CAST(round(CAST(b.c - a.c AS DOUBLE) / (b.r - a.r)
-        |         * 1000000.0) AS BIGINT) AS sq
-        |       FROM ser a JOIN ser b ON b.r > a.r),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM ser)
-        |SELECT t.n_days,
-        |  CAST(t.n_days * (t.n_days - 1) // 2 AS BIGINT) AS n_pairs,
-        |  (SELECT quantile_cont(CAST(sq AS DOUBLE), 0.5) FROM sl)
-        |    AS sen_slope_micro
-        |FROM t""".stripMargin,
-
-    // binary-segmentation changepoint: argmax of the two-segment fit
-    // gain over exact integer prefix sums; (gain desc, split asc)
-    "q_changepoint" ->
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS dd FROM events
-        |           WHERE ts IS NOT NULL),
-        |dc AS (SELECT dd, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        |sp AS (SELECT min(dd) AS d0, max(dd) AS d1 FROM dc),
-        |ser AS (SELECT g.dd, g.dd - (SELECT d0 FROM sp) + 1 AS r,
-        |         COALESCE(dc.c, 0) AS c
-        |  FROM (SELECT unnest(generate_series((SELECT d0 FROM sp),
-        |                                      (SELECT d1 FROM sp))) AS dd) g
-        |  LEFT JOIN dc ON g.dd = dc.dd),
-        |pre AS (SELECT dd, r, c, sum(c) OVER (ORDER BY r) AS cum FROM ser),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(c) AS BIGINT) AS tot FROM ser),
-        |sc AS (SELECT pre.dd AS split_day, CAST(pre.r AS BIGINT) AS split_r,
-        |         t.n AS n_days, CAST(pre.cum AS BIGINT) AS lsum,
-        |         CAST(t.tot - pre.cum AS BIGINT) AS rsum,
-        |         CAST(pre.cum AS DOUBLE) * CAST(pre.cum AS DOUBLE) / pre.r
-        |           + CAST(t.tot - pre.cum AS DOUBLE)
-        |             * CAST(t.tot - pre.cum AS DOUBLE) / (t.n - pre.r) AS g,
-        |         CAST(pre.cum AS DOUBLE) / pre.r AS mean_left,
-        |         CAST(t.tot - pre.cum AS DOUBLE) / (t.n - pre.r) AS mean_right
-        |       FROM pre, t WHERE pre.r < t.n)
-        |SELECT split_day, split_r, n_days, lsum, rsum, mean_left, mean_right
-        |FROM sc ORDER BY g DESC, split_r LIMIT 1""".stripMargin,
-
-    // Spearman: doubled average ranks from each column's histogram prefix,
-    // exact HUGEINT moments, one fixed-order double rho
-    "q_spearman" -> hsOracle("n,sx*,sy*,sxx*,syy*,sxy*,rho")(
-      """WITH rws AS (
-        |  SELECT CAST(l_quantity AS DOUBLE) AS x,
-        |    CAST(l_extendedprice AS DOUBLE) AS y
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |hx AS (SELECT x, count(*) AS c FROM rws GROUP BY x),
-        |rx AS (SELECT x, 2 * (sum(c) OVER (ORDER BY x) - c) + c + 1 AS r2x FROM hx),
-        |hy AS (SELECT y, count(*) AS c FROM rws GROUP BY y),
-        |ry AS (SELECT y, 2 * (sum(c) OVER (ORDER BY y) - c) + c + 1 AS r2y FROM hy),
-        |j AS (SELECT r2x, r2y FROM rws JOIN rx USING (x) JOIN ry USING (y)),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(r2x AS HUGEINT)) AS sx, sum(CAST(r2y AS HUGEINT)) AS sy,
-        |    sum(CAST(r2x AS HUGEINT) * CAST(r2x AS HUGEINT)) AS sxx,
-        |    sum(CAST(r2y AS HUGEINT) * CAST(r2y AS HUGEINT)) AS syy,
-        |    sum(CAST(r2x AS HUGEINT) * CAST(r2y AS HUGEINT)) AS sxy
-        |  FROM j)
-        |SELECT n, CAST(sx AS DECIMAL(38,0)) AS sx, CAST(sy AS DECIMAL(38,0)) AS sy,
-        |  CAST(sxx AS DECIMAL(38,0)) AS sxx, CAST(syy AS DECIMAL(38,0)) AS syy,
-        |  CAST(sxy AS DECIMAL(38,0)) AS sxy,
-        |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-        |    sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-        |         (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS rho
-        |FROM m""".stripMargin),
-
-    // G-test: integer-product log ratios on the chi2 histogram, order-free
-    // HUGEINT term sum, one fixed-order double readout
-    "q_gtest" -> hsOracle("s_g*,g,dof")(
-      """WITH c AS (
-        |  SELECT CAST(source AS VARCHAR) AS category,
-        |    CAST(count(*) FILTER (doc_id % 3 <> 0) AS BIGINT) AS o_a,
-        |    CAST(count(*) FILTER (doc_id % 3 = 0) AS BIGINT) AS o_b
-        |  FROM documents WHERE source IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(o_a) AS BIGINT) AS na,
-        |        CAST(sum(o_b) AS BIGINT) AS nb,
-        |        CAST(count(*) AS BIGINT) AS k FROM c),
-        |terms AS (
-        |  SELECT
-        |    CASE WHEN o_a > 0 THEN CAST(o_a AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(CAST(o_a AS HUGEINT) * (na + nb) AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(CAST(na AS HUGEINT) * (o_a + o_b) AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))
-        |    ELSE 0 END AS ta,
-        |    CASE WHEN o_b > 0 THEN CAST(o_b AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(CAST(o_b AS HUGEINT) * (na + nb) AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(CAST(nb AS HUGEINT) * (o_a + o_b) AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))
-        |    ELSE 0 END AS tb
-        |  FROM c, t),
-        |s AS (SELECT sum(ta + tb) AS s_g FROM terms)
-        |SELECT CAST(s_g AS DECIMAL(38,0)) AS s_g,
-        |  2.0 * CAST(s_g AS DOUBLE) / 1048576.0 AS g,
-        |  (SELECT k - 1 FROM t) AS dof
-        |FROM s""".stripMargin),
-
-    // streamed per-batch JSD: replay the 4-way ntile staging, compute each
-    // segment's divergence vs the static corpus with the same quantized-ln
-    // integer arithmetic (one row per micro-batch, seg dropped — rows
-    // identify by their totals)
-    "q_stream_jsd_gate" -> hsOracle("a_total,b_total,s_p*,s_q*,s_m*,h_p,h_q,h_m,jsd")(
-      """WITH st AS (
-        |  SELECT doc_id, text, ntile(4) OVER (ORDER BY doc_id) AS seg
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |segs AS (SELECT DISTINCT seg FROM st),
-        |ac AS (
-        |  SELECT seg, sh, count(*) AS ca FROM (
-        |    SELECT seg, unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |    FROM (SELECT seg, regexp_split_to_array(trim(text), '\s+') AS toks
-        |          FROM st))
-        |  GROUP BY seg, sh),
-        |bc0 AS (
-        |  SELECT sh, count(*) AS cb FROM (
-        |    SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |    FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        |          FROM documents WHERE doc_id % 5 <> 0))
-        |  GROUP BY sh),
-        |bcs AS (SELECT seg, sh, cb FROM bc0 CROSS JOIN segs),
-        |c AS (SELECT coalesce(ac.seg, bcs.seg) AS seg,
-        |        coalesce(ca, 0) AS ca, coalesce(cb, 0) AS cb
-        |      FROM ac FULL JOIN bcs ON ac.seg = bcs.seg AND ac.sh = bcs.sh),
-        |t AS (SELECT seg, CAST(sum(ca) AS BIGINT) AS a_total,
-        |        CAST(sum(cb) AS BIGINT) AS b_total FROM c GROUP BY seg),
-        |q AS (SELECT c.seg, ca, cb, a_total, b_total,
-        |    CAST(ca AS HUGEINT) * b_total + CAST(cb AS HUGEINT) * a_total AS nmix
-        |  FROM c JOIN t ON c.seg = t.seg),
-        |s AS (SELECT seg,
-        |    sum(CASE WHEN ca > 0 THEN CAST(ca AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(ca AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(a_total AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))
-        |      ELSE 0 END) AS s_p,
-        |    sum(CASE WHEN cb > 0 THEN CAST(cb AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(cb AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(b_total AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))
-        |      ELSE 0 END) AS s_q,
-        |    sum(nmix *
-        |      (CAST(floor(ln(CAST(nmix AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(2 * CAST(a_total AS HUGEINT) * b_total AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_m,
-        |    max(a_total) AS a_total, max(b_total) AS b_total
-        |  FROM q GROUP BY seg),
-        |r AS (SELECT a_total, b_total,
-        |    CAST(s_p AS DECIMAL(38,0)) AS s_p, CAST(s_q AS DECIMAL(38,0)) AS s_q,
-        |    CAST(s_m AS DECIMAL(38,0)) AS s_m,
-        |    -(CAST(s_p AS DOUBLE) / CAST(a_total AS DOUBLE)) / 1048576.0 AS h_p,
-        |    -(CAST(s_q AS DOUBLE) / CAST(b_total AS DOUBLE)) / 1048576.0 AS h_q,
-        |    -(CAST(s_m AS DOUBLE) / (2.0 * CAST(a_total AS DOUBLE) * CAST(b_total AS DOUBLE))) / 1048576.0 AS h_m
-        |  FROM s)
-        |SELECT a_total, b_total, s_p, s_q, s_m, h_p, h_q, h_m,
-        |  h_m - (h_p + h_q) / 2.0 AS jsd
-        |FROM r""".stripMargin),
-
-    // streamed per-batch W1: replay the 4-way ntile staging, each
-    // segment vs the static reference with the same integer ECDF-gap x
-    // quantized-gap arithmetic (seg dropped — rows identify by totals)
-    "q_stream_w1_gate" -> hsOracle("n_a,n_b,s_w1*,w1")(
-      """WITH st AS (
-        |  SELECT value, ntile(4) OVER (ORDER BY ts, event_id) AS seg
-        |  FROM events WHERE user_id % 5 = 0),
-        |segs AS (SELECT DISTINCT seg FROM st),
-        |u AS (
-        |  SELECT s.seg, CAST(r.value AS DOUBLE) AS v, 0 AS b
-        |  FROM events r CROSS JOIN segs s WHERE r.user_id % 5 <> 0
-        |  UNION ALL
-        |  SELECT seg, CAST(value AS DOUBLE) AS v, 1 AS b FROM st),
-        |c AS (SELECT seg, v,
-        |        CAST(count(*) FILTER (b = 0) AS BIGINT) AS ca,
-        |        CAST(count(*) FILTER (b = 1) AS BIGINT) AS cb
-        |      FROM u WHERE v IS NOT NULL GROUP BY 1, 2),
-        |cum AS (SELECT seg, v, sum(ca) OVER w AS cuma, sum(cb) OVER w AS cumb,
-        |          lead(v) OVER w AS vn
-        |        FROM c WINDOW w AS (PARTITION BY seg ORDER BY v)),
-        |t AS (SELECT seg, CAST(sum(ca) AS BIGINT) AS n_a,
-        |        CAST(sum(cb) AS BIGINT) AS n_b FROM c GROUP BY 1),
-        |s AS (SELECT c2.seg,
-        |        sum(CAST(abs(cuma * n_b - cumb * n_a) AS HUGEINT) *
-        |            CAST(floor((vn - v) * 1048576.0 + 0.5) AS HUGEINT)) AS s_w1
-        |      FROM cum c2 JOIN t ON c2.seg = t.seg
-        |      WHERE vn IS NOT NULL GROUP BY 1)
-        |SELECT n_a, n_b, CAST(s_w1 AS DECIMAL(38,0)) AS s_w1,
-        |  CAST(s_w1 AS DOUBLE) /
-        |    (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * 1048576.0) AS w1
-        |FROM s JOIN t USING (seg)""".stripMargin),
-
-    // chi2: per-category exact-integer deviation, one double division per
-    // term (HUGEINT products = Spark's DECIMAL(38,0)), ordered-fold total
-    "q_chi2_drift" ->
-      """WITH c AS (
-        |  SELECT CAST(source AS VARCHAR) AS category,
-        |    CAST(count(*) FILTER (doc_id % 3 <> 0) AS BIGINT) AS o_a,
-        |    CAST(count(*) FILTER (doc_id % 3 = 0) AS BIGINT) AS o_b
-        |  FROM documents WHERE source IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(o_a) AS BIGINT) AS na,
-        |        CAST(sum(o_b) AS BIGINT) AS nb,
-        |        CAST(count(*) AS BIGINT) AS k FROM c),
-        |terms AS (
-        |  SELECT category, o_a, o_b,
-        |    CAST(o_a * (na + nb) - na * (o_a + o_b) AS BIGINT) AS d_num,
-        |    CAST(CAST(o_a * (na + nb) - na * (o_a + o_b) AS HUGEINT) *
-        |         CAST(o_a * (na + nb) - na * (o_a + o_b) AS HUGEINT) AS DOUBLE) /
-        |      CAST(CAST(na AS HUGEINT) * nb * (o_a + o_b) AS DOUBLE) AS term
-        |  FROM c, t),
-        |tot AS (SELECT list_sum(list(term ORDER BY category)) AS chi2 FROM terms)
-        |SELECT category, o_a, o_b, d_num, term, chi2,
-        |  (SELECT k - 1 FROM t) AS dof,
-        |  sqrt(chi2 / (SELECT CAST(na + nb AS DOUBLE) FROM t)) AS cramers_v
-        |FROM terms, tot""".stripMargin,
-
-    // streamed per-batch chi2: replay the 4-way ntile staging, each
-    // segment's category mix vs the static reference with the identical
-    // integer-deviation arithmetic (seg dropped — rows identify by
-    // their per-segment counts and terms)
-    "q_stream_chi2_gate" ->
-      """WITH st AS (
-        |  SELECT event_type, ntile(4) OVER (ORDER BY ts, event_id) AS seg
-        |  FROM events WHERE user_id % 5 = 0),
-        |segs AS (SELECT DISTINCT seg FROM st),
-        |u AS (
-        |  SELECT s.seg, r.event_type AS category, 0 AS b
-        |  FROM events r CROSS JOIN segs s WHERE r.user_id % 5 <> 0
-        |  UNION ALL SELECT seg, event_type, 1 FROM st),
-        |c AS (SELECT seg, CAST(category AS VARCHAR) AS category,
-        |    CAST(count(*) FILTER (b = 0) AS BIGINT) AS o_a,
-        |    CAST(count(*) FILTER (b = 1) AS BIGINT) AS o_b
-        |  FROM u WHERE category IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT seg, CAST(sum(o_a) AS BIGINT) AS na,
-        |        CAST(sum(o_b) AS BIGINT) AS nb,
-        |        CAST(count(*) AS BIGINT) AS k FROM c GROUP BY 1),
-        |terms AS (SELECT c.seg, category, o_a, o_b,
-        |    CAST(o_a * (na + nb) - na * (o_a + o_b) AS BIGINT) AS d_num,
-        |    CAST(CAST(o_a * (na + nb) - na * (o_a + o_b) AS HUGEINT) *
-        |         CAST(o_a * (na + nb) - na * (o_a + o_b) AS HUGEINT) AS DOUBLE) /
-        |      CAST(CAST(na AS HUGEINT) * nb * (o_a + o_b) AS DOUBLE) AS term
-        |  FROM c JOIN t ON c.seg = t.seg),
-        |tot AS (SELECT seg, list_sum(list(term ORDER BY category)) AS chi2
-        |        FROM terms GROUP BY 1),
-        |kk AS (SELECT seg, k - 1 AS dof, CAST(na + nb AS DOUBLE) AS nn FROM t)
-        |SELECT category, o_a, o_b, d_num, term, chi2, dof,
-        |  sqrt(chi2 / nn) AS cramers_v
-        |FROM terms JOIN tot USING (seg) JOIN kk USING (seg)""".stripMargin,
-
-    "q_psi" ->
-      """WITH r AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents
-        |           WHERE doc_id % 3 != 0 AND n_chars IS NOT NULL),
-        |c AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents
-        |      WHERE doc_id % 3 = 0 AND n_chars IS NOT NULL),
-        |e AS (SELECT quantile_cont(v, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS edges FROM r),
-        |rb AS (SELECT len(list_filter(e.edges, x -> v > x)) AS bin, count(*) AS nr
-        |       FROM r, e GROUP BY 1),
-        |cb AS (SELECT len(list_filter(e.edges, x -> v > x)) AS bin, count(*) AS nc
-        |       FROM c, e GROUP BY 1),
-        |j AS (SELECT b.bin, COALESCE(nr, 0) AS n_ref, COALESCE(nc, 0) AS n_cur
-        |      FROM (SELECT unnest(range(0, 10)) AS bin) b
-        |      LEFT JOIN rb USING (bin) LEFT JOIN cb USING (bin)),
-        |p AS (SELECT bin, n_ref, n_cur,
-        |        (n_ref + 0.5) / (sum(n_ref) OVER () + 5.0) AS p_ref,
-        |        (n_cur + 0.5) / (sum(n_cur) OVER () + 5.0) AS p_cur
-        |      FROM j)
-        |SELECT bin, n_ref, n_cur, p_ref, p_cur,
-        |  round((p_cur - p_ref) * ln(p_cur / p_ref), 12) AS psi_term
-        |FROM p""".stripMargin,
-
-    "q_token_rarity" ->
-      """WITH tk AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |  FROM documents),
-        |f AS (SELECT tok, count(*) AS tf FROM tk GROUP BY tok)
-        |SELECT doc_id, count(*) AS n_tok,
-        |  CAST(sum(tf) AS BIGINT) AS sum_tf,
-        |  CAST(min(tf) AS BIGINT) AS min_tf
-        |FROM tk JOIN f USING (tok)
-        |GROUP BY doc_id""".stripMargin,
-
-    "q_bigram_lm" ->
-      """WITH arr AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
-        |  FROM documents),
-        |tk AS (SELECT doc_id, unnest(a) AS tok FROM arr),
-        |uf AS (SELECT tok, count(*) AS c1 FROM tk GROUP BY tok),
-        |bg AS (SELECT doc_id,
-        |  unnest(list_transform(range(1, len(a)), i -> a[i] || ' ' || a[i+1])) AS bg
-        |  FROM arr),
-        |bf AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg)
-        |SELECT doc_id, count(*) AS n_bg,
-        |  CAST(sum(c2) AS BIGINT) AS sum_bg,
-        |  CAST(min(c2) AS BIGINT) AS min_bg,
-        |  CAST(sum(c1) AS BIGINT) AS sum_prefix
-        |FROM bg JOIN bf USING (bg)
-        |  JOIN uf ON split_part(bg.bg, ' ', 1) = uf.tok
-        |GROUP BY doc_id""".stripMargin,
-
-    "q_bigram_lm_incr" -> bigramIncrSql,
-
-    // the same relation out of the foreachBatch scoring sink
-    "q_stream_bigramlm_gate" -> bigramIncrSql,
-
-    "q_sample_weighted" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wsample'), 1, 15))::UBIGINT AS DOUBLE)
-        |        / 1152921504606846976.0
-        |      < CAST(n_chars AS DOUBLE) * (1.0 / 1024)""".stripMargin,
-
-    "q_zorder_key" -> {
-      def bits(c: String, off: Int) = (0 until 8)
-        .map(i => s"(((($c % 256) >> $i) & 1) << ${2 * i + off})")
-      val terms = (bits("l_orderkey", 0) ++ bits("l_partkey", 1)).mkString(" | ")
-      s"""SELECT l_orderkey, l_partkey, l_linenumber,
-         |  CAST($terms AS BIGINT) AS zkey
-         |FROM lineitem""".stripMargin
-    },
-
-    "q_unigram_seed" -> unigramOracleSql(2, 4, 2, "seed"),
-    "q_unigram_train" -> unigramOracleSql(2, 4, 2, "train"),
-    "q_unigram_encode" -> unigramOracleSql(2, 4, 2, "encode"),
-    "q_wordpiece_vocab" -> wordpieceOracleSql(4, 2, "vocab"),
-    "q_wordpiece_encode" -> wordpieceOracleSql(4, 2, "encode"),
-    "q_wordpiece_train" -> wordpieceTrainOracleSql(6),
-    "q_rand_project" -> randProjectOracleSql(8, 64, 0xA5F152EDL),
-
-    // the PCA covariance census: pure integer replay of the 10^-6
-    // quantizer + HUGEINT moments
-    "q_pca_cov" -> hsOracle("j,k,n,cov_num*")(
-      """WITH v AS (
-        |  SELECT list_transform(embedding,
-        |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS HUGEINT)) AS q
-        |  FROM embeddings),
-        |u AS (
-        |  SELECT unnest(flatten(list_transform(range(1, len(q) + 1),
-        |    j -> list_transform(range(j, len(q) + 1),
-        |      k -> {'j': j - 1, 'k': k - 1, 'p': q[j] * q[k],
-        |            'qj': q[j], 'qk': q[k]})))) AS t
-        |  FROM v)
-        |SELECT CAST(t.j AS BIGINT) AS j, CAST(t.k AS BIGINT) AS k,
-        |  count(*) AS n,
-        |  CAST(count(*) * sum(t.p) - sum(t.qj) * sum(t.qk) AS DECIMAL(38,0)) AS cov_num
-        |FROM u GROUP BY 1, 2""".stripMargin),
-    "q_kcenter" -> kcenterOracleSql(8),
-    "q_train_perceptron" -> perceptronOracleSql(64, 3, "weights"),
-    "q_train_margins" -> perceptronOracleSql(64, 3, "margins"),
-
-    // rank-calibration bins over the perceptron margins: empirical-CDF
-    // forecast vs observed en-rate, 10 equal-rank bins
-    "q_calibration" ->
-      s"""WITH m AS (${perceptronOracleSql(64, 3, "margins")}),
-         |b AS (SELECT doc_id, margin, (y + 1) // 2 AS yy,
-         |        row_number() OVER (ORDER BY margin, doc_id) AS rnk,
-         |        count(*) OVER () AS nt
-         |      FROM m),
-         |c AS (SELECT CAST((rnk - 1) * 10 // nt AS BIGINT) + 1 AS bin,
-         |        yy, rnk, nt FROM b)
-         |SELECT bin, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(yy) AS BIGINT) AS n_pos,
-         |  CAST(sum(yy) AS DOUBLE) / count(*) AS obs_rate,
-         |  CAST(sum(rnk) AS DOUBLE) / max(nt) / count(*) AS conf_mean,
-         |  abs(CAST(sum(yy) AS DOUBLE) / count(*)
-         |      - CAST(sum(rnk) AS DOUBLE) / max(nt) / count(*)) AS gap
-         |FROM c GROUP BY 1""".stripMargin,
-    "q_strip_markup" -> stripMarkupOracleSql,
-    "q_urls" -> urlsOracleSql,
-    "q_lang_mix" -> langMixOracleSql,
-
-    // per-domain cap: the domain derives directly from the planted URL
-    // (the corpus text contains no URLs of its own — extraction parity is
-    // q_urls' job), then the stratified salted rank caps each domain
-    "q_domain_cap" ->
-      """WITH d AS (SELECT doc_id,
-        |  regexp_extract(lower('http://d' || (doc_id % 7) || '.site.org/p/' || doc_id),
-        |    '^[a-z]+://([^/:#?]*)', 1) AS domain
-        |  FROM documents)
-        |SELECT doc_id, domain FROM (
-        |  SELECT doc_id, domain,
-        |    row_number() OVER (PARTITION BY domain
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':stratified'), doc_id) AS rk
-        |  FROM d)
-        |WHERE rk <= 20""".stripMargin,
-
-    // web capstone: clean both id streams, margin-filter, min-id dedup on
-    // the cleaned content, hash split — every stage its gated oracle form
-    "q_pipeline_web" -> {
-      val wList = bowWeights.map(_.toString).mkString("[", ", ", "]")
-      // flattened to one line: the OUTER stripMargin runs after
-      // interpolation and would eat the leading | of embedded "||" lines
-      val cleanSql = strippedCleanSql.replace("\n", " ")
-      s"""WITH c0 AS (SELECT doc_id, $cleanSql AS clean FROM documents),
-         |allr AS (SELECT doc_id, clean FROM c0
-         |         UNION ALL
-         |         SELECT doc_id + 100000, clean FROM c0 WHERE doc_id % 10 = 0),
-         |kept AS (SELECT doc_id, clean FROM allr
-         |  WHERE list_reduce(list_prepend(0.05e0,
-         |      list_transform(regexp_split_to_array(trim(clean), '\\s+'), t ->
-         |        ($wList)[CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT % 64 AS INT) + 1])),
-         |      (a, b) -> a + b) > 0),
-         |surv AS (SELECT doc_id, clean FROM (
-         |    SELECT doc_id, clean,
-         |      min(doc_id) OVER (PARTITION BY md5(clean)) AS keep_id
-         |    FROM kept) WHERE doc_id = keep_id)
-         |SELECT doc_id, clean,
-         |  CASE WHEN bk < 8000 THEN 'train' WHEN bk < 9000 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM (SELECT doc_id, clean,
-         |        CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::UBIGINT
-         |             % 10000 AS BIGINT) AS bk
-         |      FROM surv)""".stripMargin
-    },
-
-    // blocklist: whole-token lowercase membership over the same decorated
-    // text; keep by the 5% integer cross-product
-    "q_blocklist" ->
-      """WITH t AS (SELECT doc_id,
-        |    text
-        |    || CASE WHEN doc_id % 6 = 0 THEN ' BadWord1 badword2' ELSE '' END
-        |    || CASE WHEN doc_id % 17 = 0
-        |            THEN ' badword1 badword1 badword1 badword1' ELSE '' END
-        |    || CASE WHEN doc_id % 9 = 0 THEN ' xbadword1x' ELSE '' END AS tx
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(tx), '\s+')) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(regexp_split_to_array(trim(tx), '\s+'),
-        |    x -> list_contains(['badword1', 'badword2', 'zzzznever'], lower(x))))
-        |    AS BIGINT) AS n_hits,
-        |  CAST(len(list_filter(regexp_split_to_array(trim(tx), '\s+'),
-        |    x -> list_contains(['badword1', 'badword2', 'zzzznever'], lower(x))))
-        |    AS BIGINT) * 20
-        |  <= CAST(len(regexp_split_to_array(trim(tx), '\s+')) AS BIGINT) AS keep
-        |FROM t""".stripMargin,
-
-    // the merged parity-shard sketches must equal the WHOLE-corpus build:
-    // the oracle builds it from everything in one pass
-    "q_countmin_merge" ->
-      """WITH tok AS (
-        |  SELECT tok FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |    FROM documents) WHERE length(tok) >= 1)
-        |SELECT CAST(hr AS INT) AS row, bucket, CAST(count(*) AS BIGINT) AS n FROM (
-        |  SELECT r.hr,
-        |    CAST(('0x' || substr(md5(r.hr || ':' || tok), 1, 15))::UBIGINT % 256 AS BIGINT) AS bucket
-        |  FROM tok, UNNEST(range(0, 4)) r(hr)) GROUP BY 1, 2""".stripMargin,
-
-    // weighted quantiles: integer prefix sums over the weight histogram,
-    // threshold = max(1, ceil(p * total)) — the same one-multiply float
-    "q_quantile_weighted" ->
-      """WITH h AS (
-        |  SELECT l_returnflag, CAST(l_extendedprice AS DOUBLE) AS v,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |  GROUP BY 1, 2),
-        |c AS (SELECT l_returnflag, v, w,
-        |    CAST(sum(w) OVER (PARTITION BY l_returnflag ORDER BY v) AS BIGINT) AS cum,
-        |    CAST(sum(w) OVER (PARTITION BY l_returnflag) AS BIGINT) AS tot
-        |  FROM h),
-        |p AS (SELECT unnest([0.25e0, 0.5e0, 0.9e0, 0.99e0]) AS prob)
-        |SELECT c.l_returnflag, p.prob, min(c.v) AS value
-        |FROM p JOIN c
-        |  ON c.cum - c.w < greatest(1, CAST(ceil(p.prob * c.tot) AS BIGINT))
-        | AND greatest(1, CAST(ceil(p.prob * c.tot) AS BIGINT)) <= c.cum
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Count-Min replay: same salted-md5 buckets, exact integer counters,
-    // min over the depth rows; the overestimate bound rides as a column
-    "q_countmin" ->
-      """WITH tok AS (
-        |  SELECT tok FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |    FROM documents) WHERE length(tok) >= 1),
-        |ex AS (SELECT tok, CAST(count(*) AS BIGINT) AS n_exact FROM tok
-        |       GROUP BY 1 ORDER BY n_exact DESC, tok LIMIT 50),
-        |sk AS (SELECT hr, bucket, CAST(count(*) AS BIGINT) AS n FROM (
-        |  SELECT r.hr,
-        |    CAST(('0x' || substr(md5(r.hr || ':' || tok), 1, 15))::UBIGINT % 256 AS BIGINT) AS bucket
-        |  FROM tok, UNNEST(range(0, 4)) r(hr)) GROUP BY 1, 2),
-        |pr AS (SELECT e.tok, r.hr,
-        |  CAST(('0x' || substr(md5(r.hr || ':' || e.tok), 1, 15))::UBIGINT % 256 AS BIGINT) AS bucket
-        |  FROM ex e, UNNEST(range(0, 4)) r(hr)),
-        |m AS (SELECT pr.tok, CAST(min(sk.n) AS BIGINT) AS cm_est
-        |      FROM pr JOIN sk USING (hr, bucket) GROUP BY 1)
-        |SELECT e.tok, e.n_exact, m.cm_est, m.cm_est >= e.n_exact AS bound_ok
-        |FROM ex e JOIN m USING (tok)""".stripMargin,
-
-    // Kneser-Ney sufficient stats: the same one-shuffle bigram census,
-    // then model-table-sized joins; every column an exact integer
-    "q_bigram_kn" ->
-      """WITH arr AS (
-        |  SELECT regexp_split_to_array(trim(text), '\s+') AS a FROM documents),
-        |bg AS (SELECT unnest(list_transform(range(1, len(a)),
-        |         i -> a[i] || ' ' || a[i+1])) AS bg FROM arr),
-        |c AS (SELECT split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2,
-        |        CAST(count(*) AS BIGINT) AS c2
-        |      FROM bg GROUP BY 1, 2),
-        |pre AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS cpre,
-        |          CAST(count(*) AS BIGINT) AS n1fwd FROM c GROUP BY 1),
-        |back AS (SELECT w2, CAST(count(*) AS BIGINT) AS n1back FROM c GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n_types FROM c)
-        |SELECT w1, w2, c2, cpre, n1fwd, n1back,
-        |  (SELECT n_types FROM t) AS n_types
-        |FROM c JOIN pre USING (w1) JOIN back USING (w2)
-        |ORDER BY c2 DESC, w1, w2 LIMIT 200""".stripMargin,
-
-    // KN perplexity: the same bigram census twice (occurrences keep
-    // doc_id, the model collapses the reference to types), per-TYPE
-    // fixed-point ln, integer per-doc rollup, integer threshold compare
-    "q_perplexity_filter" -> perplexityOracleSql(
-      refWhere = "TRUE", thrMicros = Some(-3400000L)),
-
-    // cross-corpus scoring: model from the doc_id%3 slice; bigrams absent
-    // from it take the uniform ln(1/n_types) fallback
-    "q_perplexity_cross" -> perplexityOracleSql(
-      refWhere = "doc_id % 3 = 0", thrMicros = None),
-
-    // trigram interpolated KN: full continuation cascade + score-time
-    // backoff, replayed branch for branch
-    "q_perplexity3" -> perplexity3Sql,
-
-    // DSIR: same bigram census, md5-bucket features, per-bucket
-    // fixed-point log-ratio with Laplace smoothing, integer rollup
-    "q_dsir_weights" -> dsirOracleSql(thrMicros = None),
-    "q_dsir_sample" -> dsirOracleSql(thrMicros = Some(0L)),
-
-    "q_corr_stats" -> corrOracleSql(
-      Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")),
-
-    // the xy2d Hilbert walk replayed level by level (s = 128 .. 1), the
-    // rotation/reflection in the recursive step; s = 0 rows are done
-    "q_hilbert_key" ->
-      """WITH RECURSIVE h AS (
-        |  SELECT l_orderkey, l_partkey, l_linenumber,
-        |    CAST(l_orderkey % 256 AS BIGINT) AS x,
-        |    CAST(l_partkey % 256 AS BIGINT) AS y,
-        |    CAST(0 AS BIGINT) AS d, CAST(128 AS BIGINT) AS s
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, l_partkey, l_linenumber,
-        |    CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN s - 1 - y ELSE y END)
-        |         ELSE x END,
-        |    CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN s - 1 - x ELSE x END)
-        |         ELSE y END,
-        |    d + s * s * xor(3 * rx, ry),
-        |    s // 2
-        |  FROM (SELECT *,
-        |          CASE WHEN (x & s) > 0 THEN 1 ELSE 0 END AS rx,
-        |          CASE WHEN (y & s) > 0 THEN 1 ELSE 0 END AS ry
-        |        FROM h WHERE s > 0) AS step)
-        |SELECT l_orderkey, l_partkey, l_linenumber, d AS hkey
-        |FROM h WHERE s = 0""".stripMargin,
-
-    "q_clip" ->
-      """WITH th AS (SELECT o_orderpriority,
-        |  quantile_cont(o_totalprice, 0.05) AS lo,
-        |  quantile_cont(o_totalprice, 0.95) AS hi
-        |  FROM orders GROUP BY 1)
-        |SELECT o.o_orderkey, o.o_orderpriority,
-        |  CASE WHEN o.o_totalprice IS NULL THEN NULL
-        |       ELSE least(greatest(o.o_totalprice, lo), hi) END AS o_totalprice,
-        |  o.o_totalprice AS o_totalprice_raw
-        |FROM orders o JOIN th
-        |  ON o.o_orderpriority IS NOT DISTINCT FROM th.o_orderpriority""".stripMargin,
-
-    "q_quality_cut" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |th AS (SELECT source, quantile_cont(n_tokens, 0.25) AS th
-        |       FROM t GROUP BY source)
-        |SELECT t.doc_id, t.source, t.n_tokens
-        |FROM t JOIN th ON t.source IS NOT DISTINCT FROM th.source
-        |WHERE t.n_tokens >= th.th""".stripMargin,
-
-    "q_standardize_incr" -> standardizeIncrSql,
-
-    // the same relation out of the real streaming engine (stateless
-    // stream-static join against the broadcast corpus moments)
-    "q_stream_standardize_gate" -> standardizeIncrSql,
-
-    "q_minmax_scale" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |s AS (SELECT source, min(n_tokens) AS mn, max(n_tokens) AS mx
-        |      FROM t GROUP BY source)
-        |SELECT t.doc_id, t.source, t.n_tokens,
-        |  CASE WHEN t.n_tokens IS NULL THEN NULL
-        |       WHEN mx = mn THEN 0.0
-        |       ELSE CAST(t.n_tokens - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)
-        |  END AS scaled
-        |FROM t JOIN s ON t.source IS NOT DISTINCT FROM s.source""".stripMargin,
-
-    "q_robust_scale" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |s AS (SELECT source, quantile_cont(n_tokens, 0.5) AS med,
-        |        quantile_cont(n_tokens, 0.25) AS q1,
-        |        quantile_cont(n_tokens, 0.75) AS q3
-        |      FROM t GROUP BY source)
-        |SELECT t.doc_id, t.source, t.n_tokens,
-        |  CASE WHEN t.n_tokens IS NULL THEN NULL
-        |       WHEN q3 = q1 THEN 0.0
-        |       ELSE (t.n_tokens - med) / (q3 - q1)
-        |  END AS scaled
-        |FROM t JOIN s ON t.source IS NOT DISTINCT FROM s.source""".stripMargin,
-
-    "q_curriculum" ->
-      """WITH t AS (SELECT doc_id, n_chars FROM documents),
-        |c AS (SELECT quantile_cont(n_chars, 0.25) AS c1,
-        |        quantile_cont(n_chars, 0.5) AS c2,
-        |        quantile_cont(n_chars, 0.75) AS c3 FROM t),
-        |b AS (SELECT doc_id, n_chars,
-        |        1 + (CASE WHEN n_chars > c1 THEN 1 ELSE 0 END)
-        |          + (CASE WHEN n_chars > c2 THEN 1 ELSE 0 END)
-        |          + (CASE WHEN n_chars > c3 THEN 1 ELSE 0 END) AS band
-        |      FROM t, c)
-        |SELECT doc_id, n_chars, CAST(band AS BIGINT) AS band,
-        |  CAST(row_number() OVER (ORDER BY band,
-        |    md5(CAST(doc_id AS VARCHAR) || ':curriculum'), doc_id) AS BIGINT)
-        |    AS pos
-        |FROM b""".stripMargin,
-
-    "q_top_global" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |FROM documents
-        |ORDER BY n_tokens DESC, doc_id ASC
-        |LIMIT 50""".stripMargin,
-
-    "q_sample_n_weighted" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    pow(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wres'), 1, 15))::UBIGINT AS DOUBLE)
-        |        / 1152921504606846976.0, 1.0 / CAST(n_chars AS DOUBLE)) AS k
-        |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0)
-        |ORDER BY k DESC, doc_id ASC
-        |LIMIT 500""".stripMargin,
-
-    "q_mixture_quality" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |th AS (SELECT source, quantile_cont(n_tokens, 0.25) AS p25,
-        |        quantile_cont(n_tokens, 0.5) AS p50,
-        |        quantile_cont(n_tokens, 0.75) AS p75
-        |      FROM t GROUP BY source),
-        |b AS (SELECT t.doc_id, t.source, t.n_tokens,
-        |        (t.n_tokens > p25)::INT + (t.n_tokens > p50)::INT
-        |          + (t.n_tokens > p75)::INT AS band
-        |      FROM t JOIN th USING (source))
-        |SELECT doc_id, source, n_tokens, CAST(band AS INT) AS band
-        |FROM b
-        |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':qmix'), 1, 15))::UBIGINT
-        |        % 10000 AS BIGINT)
-        |      < CASE band WHEN 0 THEN 2500 WHEN 1 THEN 5000
-        |                  WHEN 2 THEN 7500 ELSE 10000 END""".stripMargin,
-
-    "q_unicode_norm" ->
-      """SELECT doc_id,
-        |  nfc_normalize(text || ' fiance' || chr(769)) AS text_nfc,
-        |  CAST(length(text || ' fiance' || chr(769)) AS BIGINT) AS len_raw,
-        |  CAST(length(nfc_normalize(text || ' fiance' || chr(769))) AS BIGINT) AS len_nfc
-        |FROM documents""".stripMargin,
-
-    "q_standardize" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |s AS (SELECT source, count(n_tokens) AS n, sum(n_tokens) AS sm,
-        |        sum(n_tokens * n_tokens) AS q
-        |      FROM t GROUP BY source)
-        |SELECT t.doc_id, t.source, t.n_tokens,
-        |  CASE WHEN t.n_tokens IS NULL THEN NULL
-        |       WHEN n * q - sm * sm = 0 THEN 0.0
-        |       ELSE CAST(n * t.n_tokens - sm AS DOUBLE)
-        |            / sqrt(CAST(n * q - sm * sm AS DOUBLE)) END AS z
-        |FROM t JOIN s ON t.source IS NOT DISTINCT FROM s.source""".stripMargin,
-
-    "q_norm_rank" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, source, n_tokens,
-        |  percent_rank() OVER w AS pr,
-        |  cume_dist() OVER w AS cd
-        |FROM t WINDOW w AS (PARTITION BY source ORDER BY n_tokens)""".stripMargin,
-
-    // the TRUE marker (not h.user_id) carries the anti-join filter: for a
-    // hot NULL key the matched h.user_id is itself NULL, so `h.user_id IS
-    // NULL` would KEEP the flood — the opposite of dropHotKeys' null-safe
-    // `<=>` left_anti, which drops it
-    "q_skew_cap" ->
-      """SELECT e.event_id, e.user_id
-        |FROM events e
-        |LEFT JOIN (SELECT user_id, TRUE AS hot FROM events
-        |           GROUP BY user_id HAVING count(*) > 80) h
-        |  ON e.user_id IS NOT DISTINCT FROM h.user_id
-        |WHERE h.hot IS NULL""".stripMargin,
-
-    "q_dedup_incr" ->
-      """SELECT d.doc_id
-        |FROM documents d
-        |LEFT JOIN (SELECT DISTINCT md5(text) AS fp FROM documents
-        |           WHERE doc_id % 3 = 0) c
-        |  ON md5(d.text) = c.fp
-        |WHERE c.fp IS NULL""".stripMargin,
-
-    "q_asof_tol" ->
-      """WITH v AS (SELECT user_id, ts, max(value) AS view_value
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, ts, value
-        |      FROM events WHERE event_type = 'purchase'),
-        |a AS (SELECT p.event_id, p.user_id, p.ts, p.value,
-        |             v.view_value, v.ts AS vts
-        |      FROM p ASOF LEFT JOIN v
-        |        ON p.user_id = v.user_id AND p.ts >= v.ts)
-        |SELECT event_id, user_id, epoch_us(ts) AS ts_us, value,
-        |  CASE WHEN ts - vts <= INTERVAL 1 HOUR THEN view_value END AS view_value,
-        |  CASE WHEN ts - vts <= INTERVAL 1 HOUR THEN epoch_us(vts) END AS view_ts_us
-        |FROM a""".stripMargin,
-
-    "q_asof_iv" ->
-      """WITH v AS (SELECT user_id, ts, max(value) AS view_value
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, ts, value
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-        |       v.view_value AS view_value, epoch_us(v.ts) AS view_ts_us
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-
-    "q_retention" ->
-      """WITH f AS (SELECT user_id, MIN(ts) AS t0 FROM events GROUP BY user_id)
-        |SELECT
-        |  CAST(datediff('day', DATE '1970-01-01', CAST(t0 AS DATE)) // 7 AS BIGINT) AS cohort,
-        |  CAST(datediff('day', CAST(t0 AS DATE), CAST(ts AS DATE)) // 7 AS BIGINT) AS period_offset,
-        |  count(DISTINCT e.user_id) AS n_users
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_session_paths" ->
-      """WITH lab AS (
-        |  SELECT event_id, user_id, ts, event_type,
-        |    CAST(SUM(CASE WHEN gap_new THEN 1 ELSE 0 END)
-        |         OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_idx
-        |  FROM (SELECT event_id, user_id, ts, event_type,
-        |          epoch_us(ts) - LAG(epoch_us(ts))
-        |            OVER (PARTITION BY user_id ORDER BY ts) > 1800000000 AS gap_new
-        |        FROM events)),
-        |p AS (
-        |  SELECT user_id, session_idx,
-        |    array_to_string((list(event_type ORDER BY ts, event_id))[1:20], '>') AS path
-        |  FROM lab GROUP BY 1, 2)
-        |SELECT path, count(*) AS n FROM p
-        |GROUP BY path ORDER BY n DESC, path ASC LIMIT 50""".stripMargin,
-
-    "q_distinctive_terms" ->
-      """WITH tf AS (
-        |  SELECT source, tok AS term, count(*) AS tf FROM (
-        |    SELECT source, unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE len(tok) >= 1 GROUP BY 1, 2),
-        |d AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-        |SELECT source, term, tf, df, rank FROM (
-        |  SELECT tf.source, tf.term, tf.tf, d.df,
-        |    CAST(row_number() OVER (PARTITION BY tf.source
-        |      ORDER BY d.df ASC, tf.tf DESC, tf.term ASC) AS BIGINT) AS rank
-        |  FROM tf JOIN d USING (term))
-        |WHERE rank <= 20""".stripMargin,
-
-    "q_event_transitions" ->
-      """WITH o AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM o
-        |      WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |f AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, n, n_from, n / n_from AS p
-        |FROM c JOIN f USING (from_type)""".stripMargin,
-
-    // contiguous event-type triples: occurrences + distinct-user support
-    "q_seq3" ->
-      """WITH g AS (
-        |  SELECT user_id, event_type AS t0,
-        |    lead(event_type, 1) OVER w AS t1,
-        |    lead(event_type, 2) OVER w AS t2
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT t0, t1, t2, CAST(count(*) AS BIGINT) AS n_occurrences,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS support
-        |FROM g WHERE t1 IS NOT NULL AND t2 IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |HAVING count(DISTINCT user_id) >= 2""".stripMargin,
-
-    "q_event_transitions_gap" ->
-      """WITH o AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type,
-        |    epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-        |      - epoch_us(ts) AS gap_us
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM o
-        |      WHERE to_type IS NOT NULL AND gap_us <= 1800000000 GROUP BY 1, 2),
-        |f AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, n, n_from, n / n_from AS p
-        |FROM c JOIN f USING (from_type)""".stripMargin,
-
-    // pagerank: the same transition edges, then 10 fixed-point integer
-    // power iterations in a recursive CTE — `//` is the exact BIGINT
-    // division matching Spark's `div`; the window-max carries the
-    // iteration counter through the grouped recursive step, and the
-    // NULL-iter guard terminates the recursion when p.iter = 10 empties
-    // the contribution join.
-    "q_pagerank" ->
-      """WITH RECURSIVE
-        |pairs AS (
-        |  SELECT event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, count(*) AS w FROM pairs
-        |          WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |ws AS (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM edges GROUP BY 1),
-        |nodes AS (SELECT DISTINCT node FROM
-        |  (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-        |params AS (SELECT count(*) AS n, 1000000000000 // count(*) AS r0,
-        |                  (1000000000000 * 15) // (100 * count(*)) AS base
-        |           FROM nodes),
-        |pr AS (
-        |  SELECT 0 AS iter, node, (SELECT r0 FROM params) AS rank FROM nodes
-        |  UNION ALL
-        |  SELECT * FROM (
-        |    SELECT MAX(MAX(q.iter)) OVER () + 1 AS iter, d.node,
-        |      (SELECT base FROM params)
-        |        + (85 * COALESCE(SUM(q.contrib), 0)) // 100 AS rank
-        |    FROM nodes d
-        |    LEFT JOIN (
-        |      SELECT p.iter, e.dst, (p.rank * e.w) // ws.wsum AS contrib
-        |      FROM pr p JOIN edges e ON e.src = p.node
-        |        JOIN ws ON ws.src = p.node
-        |      WHERE p.iter < 10
-        |    ) q ON q.dst = d.node
-        |    GROUP BY d.node
-        |  ) WHERE iter IS NOT NULL)
-        |SELECT node, CAST(rank AS BIGINT) AS rank FROM pr WHERE iter = 10""".stripMargin,
-
-    // personalized PageRank: the pagerank recursion with seed-conditional
-    // teleport base and seed-uniform init
-    "q_ppr" ->
-      """WITH RECURSIVE
-        |pairs AS (
-        |  SELECT event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, count(*) AS w FROM pairs
-        |          WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |ws AS (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM edges GROUP BY 1),
-        |nodes AS (SELECT DISTINCT node FROM
-        |  (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-        |sd AS (SELECT node, node IN ('purchase', 'view') AS s FROM nodes),
-        |params AS (SELECT CAST(sum(CASE WHEN s THEN 1 ELSE 0 END) AS BIGINT) AS ns
-        |           FROM sd),
-        |pr AS (
-        |  SELECT 0 AS iter, node,
-        |    CASE WHEN s THEN 1000000000000 // (SELECT ns FROM params)
-        |         ELSE 0 END AS rank
-        |  FROM sd
-        |  UNION ALL
-        |  SELECT * FROM (
-        |    SELECT MAX(MAX(q.iter)) OVER () + 1 AS iter, d.node,
-        |      (CASE WHEN d.s THEN (1000000000000 * 15)
-        |              // (100 * (SELECT ns FROM params)) ELSE 0 END)
-        |        + (85 * COALESCE(SUM(q.contrib), 0)) // 100 AS rank
-        |    FROM sd d
-        |    LEFT JOIN (
-        |      SELECT p.iter, e.dst, (p.rank * e.w) // ws.wsum AS contrib
-        |      FROM pr p JOIN edges e ON e.src = p.node
-        |        JOIN ws ON ws.src = p.node
-        |      WHERE p.iter < 10
-        |    ) q ON q.dst = d.node
-        |    GROUP BY d.node, d.s
-        |  ) WHERE iter IS NOT NULL)
-        |SELECT node, CAST(rank AS BIGINT) AS rank FROM pr WHERE iter = 10""".stripMargin,
-
-    // HITS: parity-doubled edge table alternates the push direction per
-    // half-step; L1 normalization is one window-sum integer division —
-    // hubs land on even iters, authorities on odd
-    "q_hits" ->
-      """WITH RECURSIVE
-        |pairs AS (
-        |  SELECT event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |edges AS (SELECT src, dst, count(*) AS w FROM pairs
-        |          WHERE dst IS NOT NULL GROUP BY 1, 2),
-        |nodes AS (SELECT DISTINCT node FROM
-        |  (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-        |params AS (SELECT count(*) AS n FROM nodes),
-        |edir AS (
-        |  SELECT src AS frm, dst AS tgt, w, 0 AS par FROM edges
-        |  UNION ALL
-        |  SELECT dst AS frm, src AS tgt, w, 1 AS par FROM edges),
-        |rec AS (
-        |  SELECT 0 AS iter, node,
-        |    CAST(1000000000000 // (SELECT n FROM params) AS HUGEINT) AS score
-        |  FROM nodes
-        |  UNION ALL
-        |  SELECT iter, node,
-        |    (raw * 1000000000000) // (SUM(raw) OVER ()) AS score
-        |  FROM (
-        |    SELECT MAX(MAX(q.iter)) OVER () + 1 AS iter, d.node,
-        |      COALESCE(SUM(q.contrib), CAST(0 AS HUGEINT)) AS raw
-        |    FROM nodes d
-        |    LEFT JOIN (
-        |      SELECT p.iter, e.tgt, CAST(p.score AS HUGEINT) * e.w AS contrib
-        |      FROM rec p JOIN edir e ON e.frm = p.node AND e.par = (p.iter % 2)
-        |      WHERE p.iter < 20
-        |    ) q ON q.tgt = d.node
-        |    GROUP BY d.node
-        |  ) WHERE iter IS NOT NULL)
-        |SELECT h.node, CAST(h.score AS BIGINT) AS hub,
-        |  CAST(a.score AS BIGINT) AS auth
-        |FROM rec h JOIN rec a USING (node)
-        |WHERE h.iter = 20 AND a.iter = 19""".stripMargin,
-
-    // q_pagerank's recursive replay over the word co-occurrence edges
-    "q_textrank" ->
-      """WITH RECURSIVE
-        |t AS (SELECT regexp_split_to_array(trim(text), '\s+') AS ts FROM documents),
-        |p AS (
-        |  SELECT unnest(flatten(list_transform(range(1, len(ts)),
-        |    i -> list_transform(range(i+1, least(i+2, len(ts)) + 1),
-        |      j -> {'a': ts[i], 'b': ts[j]})))) AS pr
-        |  FROM t WHERE len(ts) >= 2),
-        |und AS (
-        |  SELECT least(pr.a, pr.b) AS x, greatest(pr.a, pr.b) AS y, count(*) AS w
-        |  FROM p WHERE pr.a <> pr.b GROUP BY 1, 2),
-        |edges AS (SELECT x AS src, y AS dst, w FROM und
-        |          UNION ALL SELECT y AS src, x AS dst, w FROM und),
-        |ws AS (SELECT src, CAST(sum(w) AS BIGINT) AS wsum FROM edges GROUP BY 1),
-        |nodes AS (SELECT DISTINCT src AS node FROM edges),
-        |params AS (SELECT count(*) AS n, 1000000000000 // count(*) AS r0,
-        |                  (1000000000000 * 15) // (100 * count(*)) AS base
-        |           FROM nodes),
-        |pr AS (
-        |  SELECT 0 AS iter, node, (SELECT r0 FROM params) AS rank FROM nodes
-        |  UNION ALL
-        |  SELECT * FROM (
-        |    SELECT MAX(MAX(q.iter)) OVER () + 1 AS iter, d.node,
-        |      (SELECT base FROM params)
-        |        + (85 * COALESCE(SUM(q.contrib), 0)) // 100 AS rank
-        |    FROM nodes d
-        |    LEFT JOIN (
-        |      SELECT p2.iter, e.dst, (p2.rank * e.w) // ws.wsum AS contrib
-        |      FROM pr p2 JOIN edges e ON e.src = p2.node
-        |        JOIN ws ON ws.src = p2.node
-        |      WHERE p2.iter < 10
-        |    ) q ON q.dst = d.node
-        |    GROUP BY d.node
-        |  ) WHERE iter IS NOT NULL)
-        |SELECT node AS word, CAST(rank AS BIGINT) AS rank FROM pr WHERE iter = 10
-        |ORDER BY rank DESC, word LIMIT 20""".stripMargin,
-
-    // Naive canonical-triangle enumeration (u < v < w via three joins of
-    // the u<v pair list) — the Spark side's oriented-wedge count must be
-    // exactly this number.
-    "q_triangles" ->
-      """WITH pairs AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |nodes AS (SELECT u AS node FROM pairs UNION SELECT v FROM pairs)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM nodes) AS n_nodes,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM pairs) AS n_edges,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM pairs e1
-        |     JOIN pairs e2 ON e2.u = e1.v
-        |     JOIN pairs e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles""".stripMargin,
-
-    "q_scd2" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |    CASE WHEN lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |         IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-        |  FROM events),
-        |runs AS (
-        |  SELECT user_id, event_type, ts,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS run_id
-        |  FROM r),
-        |g AS (
-        |  SELECT user_id, run_id, min(event_type) AS state,
-        |    min(epoch_us(ts)) AS valid_from_us, count(*) AS n_events
-        |  FROM runs GROUP BY user_id, run_id)
-        |SELECT user_id, state, CAST(valid_from_us AS BIGINT) AS valid_from_us,
-        |  CAST(lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY run_id)
-        |    AS BIGINT) AS valid_to_us,
-        |  CAST(n_events AS BIGINT) AS n_events
-        |FROM g""".stripMargin,
-
-    // z-normalization and distance as the identical list folds; the
-    // pattern is z-normalized in Scala and embedded as round-trip-exact
-    // double literals
-    "q_ts_pattern" -> {
-      val pattern = Array(0.0, 1.0, 3.0, 7.0, 3.0, 1.0)
-      val w = pattern.length
-      val mu0 = pattern.sum / w
-      val sd0 = math.sqrt(pattern.map(x => (x - mu0) * (x - mu0)).sum / w)
-      val qn = pattern.map(x => (x - mu0) / sd0)
-      s"""WITH wnd AS (
-         |  SELECT user_id, epoch_us(ts) AS end_ts_us,
-         |    list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |                      ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW) AS arr
-         |  FROM events),
-         |c AS (SELECT user_id, end_ts_us, arr FROM wnd WHERE len(arr) = $w),
-         |m AS (SELECT user_id, end_ts_us, arr, list_sum(arr) / $w AS mu FROM c),
-         |sdev AS (SELECT user_id, end_ts_us, arr, mu,
-         |    sqrt(list_sum(list_transform(arr, x -> (x - mu) * (x - mu))) / $w) AS sd
-         |  FROM m),
-         |z AS (SELECT user_id, end_ts_us,
-         |    CASE WHEN sd = 0 THEN list_transform(arr, x -> 0.0)
-         |         ELSE list_transform(arr, x -> (x - mu) / sd) END AS zarr
-         |  FROM sdev),
-         |d AS (SELECT user_id, end_ts_us,
-         |    list_sum(list_transform(
-         |      list_zip(zarr, CAST(${sqlDoubles(qn)} AS DOUBLE[])),
-         |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS dist
-         |  FROM z),
-         |pk AS (SELECT user_id, end_ts_us, dist,
-         |    row_number() OVER (PARTITION BY user_id ORDER BY dist, end_ts_us) AS rn
-         |  FROM d),
-         |g AS (SELECT user_id, end_ts_us, dist,
-         |    row_number() OVER (ORDER BY dist, user_id, end_ts_us) AS rank
-         |  FROM pk WHERE rn <= 10)
-         |SELECT user_id, CAST(end_ts_us AS BIGINT) AS end_ts_us, dist,
-         |  CAST(rank AS BIGINT) AS rank
-         |FROM g WHERE rank <= 10""".stripMargin
-    },
-
-    // Holt recurrence replayed as a RECURSIVE CTE stepping the day-sorted
-    // series (NOT a list_reduce struct lambda: DuckDB 1.0 computes the
-    // second accumulator field of a struct_pack fold incorrectly —
-    // verified on a 3-element hand series where l folds right and b does
-    // not). Same seed (l = y0, b = 0), dyadic literals, one step order.
-    "q_holt_forecast" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |ser AS (SELECT user_id, CAST(y AS DOUBLE) AS y,
-        |          row_number() OVER (PARTITION BY user_id ORDER BY day) AS i
-        |        FROM daily),
-        |n AS (SELECT user_id, max(i) AS n_days FROM ser GROUP BY 1),
-        |h AS (
-        |  SELECT user_id, i, y AS l, 0.0e0 AS b FROM ser WHERE i = 1
-        |  UNION ALL
-        |  SELECT h.user_id, s.i,
-        |    0.5e0 * s.y + 0.5e0 * (h.l + h.b) AS l,
-        |    0.25e0 * ((0.5e0 * s.y + 0.5e0 * (h.l + h.b)) - h.l)
-        |      + 0.75e0 * h.b AS b
-        |  FROM h JOIN ser s ON s.user_id = h.user_id AND s.i = h.i + 1)
-        |SELECT h.user_id, CAST(n.n_days AS BIGINT) AS n_days,
-        |  h.l AS level, h.b AS trend, h.l + 7.0e0 * h.b AS forecast
-        |FROM h JOIN n ON n.user_id = h.user_id AND h.i = n.n_days""".stripMargin,
-
-    // Holt–Winters replay: the same seed (first-week mean + residual
-    // slots) and the same one-slot-per-step list update, recursed in day
-    // order; slot(t) = ((t-1) % 7) + 1, prefix/suffix list slices around
-    // the written slot (s[1:0] / s[8:7] are empty at the edges)
-    "q_holt_winters" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |ser AS (SELECT user_id, CAST(y AS DOUBLE) AS y,
-        |          row_number() OVER (PARTITION BY user_id ORDER BY day) AS i
-        |        FROM daily),
-        |n AS (SELECT user_id, max(i) AS n_days FROM ser GROUP BY 1
-        |      HAVING max(i) >= 7),
-        |l0 AS (SELECT user_id, sum(y) / 7.0e0 AS l0 FROM ser WHERE i <= 7
-        |       GROUP BY 1),
-        |s0 AS (SELECT ser.user_id, list(ser.y - l0.l0 ORDER BY ser.i) AS s
-        |       FROM ser JOIN l0 USING (user_id) WHERE ser.i <= 7
-        |       GROUP BY ser.user_id),
-        |h AS (
-        |  SELECT n.user_id, 7 AS t, l0.l0 AS l, 0.0e0 AS b, s0.s AS s
-        |  FROM n JOIN l0 USING (user_id) JOIN s0 USING (user_id)
-        |  UNION ALL
-        |  SELECT h.user_id, sr.i,
-        |    0.5e0 * (sr.y - h.s[((sr.i - 1) % 7) + 1])
-        |      + 0.5e0 * (h.l + h.b) AS l,
-        |    0.25e0 * ((0.5e0 * (sr.y - h.s[((sr.i - 1) % 7) + 1])
-        |      + 0.5e0 * (h.l + h.b)) - h.l) + 0.75e0 * h.b AS b,
-        |    list_concat(list_concat(
-        |      h.s[1:((sr.i - 1) % 7)],
-        |      [0.25e0 * (sr.y - (0.5e0 * (sr.y - h.s[((sr.i - 1) % 7) + 1])
-        |         + 0.5e0 * (h.l + h.b)))
-        |       + 0.75e0 * h.s[((sr.i - 1) % 7) + 1]]),
-        |      h.s[((sr.i - 1) % 7) + 2:7]) AS s
-        |  FROM h JOIN ser sr ON sr.user_id = h.user_id AND sr.i = h.t + 1)
-        |SELECT h.user_id, CAST(n.n_days AS BIGINT) AS n_days,
-        |  h.l AS level, h.b AS trend,
-        |  h.s[((n.n_days + 3 - 1) % 7) + 1] AS season,
-        |  h.l + 3.0e0 * h.b + h.s[((n.n_days + 3 - 1) % 7) + 1] AS forecast
-        |FROM h JOIN n ON n.user_id = h.user_id AND h.t = n.n_days""".stripMargin,
-
-    "q_scd2_asof" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |    CASE WHEN lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |         IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-        |  FROM events),
-        |runs AS (
-        |  SELECT user_id, event_type, ts,
-        |    sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS run_id
-        |  FROM r),
-        |g AS (
-        |  SELECT user_id, run_id, min(event_type) AS state,
-        |    min(epoch_us(ts)) AS valid_from_us, count(*) AS n_events
-        |  FROM runs GROUP BY user_id, run_id),
-        |h AS (
-        |  SELECT user_id, state, CAST(valid_from_us AS BIGINT) AS valid_from_us,
-        |    lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY run_id) AS valid_to_us,
-        |    CAST(n_events AS BIGINT) AS n_events
-        |  FROM g)
-        |SELECT user_id, state, valid_from_us, n_events FROM h
-        |WHERE valid_from_us <= 1705276800000000
-        |  AND (valid_to_us IS NULL OR valid_to_us > 1705276800000000)""".stripMargin,
-
-    "q_lpa" -> lpaOracleSql(rounds = 3),
-
-    "q_cdc_latest" ->
-      """WITH c AS (
-        |  SELECT user_id,
-        |    CASE WHEN event_id % 13 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    value, epoch_us(ts) AS ts_us,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n_ops
-        |  FROM events)
-        |SELECT user_id, value, CAST(ts_us AS BIGINT) AS ts_us,
-        |  CAST(n_ops AS BIGINT) AS n_ops
-        |FROM c WHERE rn = 1 AND op <> 'D'""".stripMargin,
-
-    "q_mmr_rerank" -> mmrOracleSql(k = 5, lambda = 0.7, nCand = 15, nQ = 10),
-
-    // repeated spans: window census on the window TEXT (equality on
-    // strings == equality on md5s), islands merge, index-aware rebuild
-    "q_dedup_substr" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |w AS (SELECT doc_id, i, array_to_string(tk[i+1 : i+12], ' ') AS ws
-        |      FROM t, UNNEST(range(0, greatest(len(tk) - 11, 0))) r(i)),
-        |c AS (SELECT ws FROM (SELECT ws, count(*) AS n FROM w GROUP BY ws)
-        |      WHERE n >= 2),
-        |d AS (SELECT doc_id, i FROM w WHERE ws IN (SELECT ws FROM c)),
-        |g AS (SELECT doc_id, i,
-        |        sum(CASE WHEN pe IS NULL OR i > pe THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY i
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-        |      FROM (SELECT doc_id, i,
-        |              max(i + 12) OVER (PARTITION BY doc_id ORDER BY i
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-        |            FROM d)),
-        |sp AS (SELECT doc_id, gid, min(i) AS s, max(i + 12) AS e
-        |       FROM g GROUP BY 1, 2),
-        |kp AS (SELECT t.doc_id, j, tk[j+1] AS tok
-        |       FROM t, UNNEST(range(0, len(tk))) r(j)
-        |       WHERE NOT EXISTS (SELECT 1 FROM sp
-        |                         WHERE sp.doc_id = t.doc_id
-        |                           AND j >= sp.s AND j < sp.e))
-        |SELECT t.doc_id,
-        |  coalesce(string_agg(kp.tok, ' ' ORDER BY kp.j), '') AS text,
-        |  CAST(len(t.tk) - count(kp.j) AS BIGINT) AS n_removed
-        |FROM t LEFT JOIN kp ON kp.doc_id = t.doc_id
-        |GROUP BY t.doc_id, len(t.tk)""".stripMargin,
-
-    // model filter: same md5 bucket, same decimal weight literals, same
-    // in-order fold
-    "q_quality_model" -> {
-      val wList = bowWeights.map(_.toString).mkString("[", ", ", "]")
-      s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk
-         |           FROM documents)
-         |SELECT doc_id, margin, margin > 0 AS keep FROM (
-         |  SELECT doc_id,
-         |    list_reduce(list_prepend(0.05e0, list_transform(tk, t ->
-         |      ($wList)[CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT % 64 AS INT) + 1])),
-         |      (a, b) -> a + b) AS margin
-         |  FROM t)""".stripMargin
-    },
-
-    // pipeline capstone: margin filter -> unsalted split bucket < 8000 ->
-    // byte-estimator shard count over the SURVIVORS -> salted shard id
-    "q_pipeline_export" -> {
-      val wList = bowWeights.map(_.toString).mkString("[", ", ", "]")
-      s"""WITH kept AS (
-         |  SELECT doc_id, text FROM (
-         |    SELECT doc_id, text,
-         |      list_reduce(list_prepend(0.05e0,
-         |        list_transform(regexp_split_to_array(trim(text), '\\s+'), t ->
-         |          ($wList)[CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT % 64 AS INT) + 1])),
-         |        (a, b) -> a + b) AS margin
-         |    FROM documents)
-         |  WHERE margin > 0),
-         |tr AS (SELECT doc_id, text FROM kept
-         |       WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::UBIGINT
-         |                  % 10000 AS BIGINT) < 8000),
-         |p AS (SELECT coalesce(octet_length(encode(CAST(text AS VARCHAR))), 0)
-         |        + octet_length(encode(CAST(doc_id AS VARCHAR))) + 32 AS rb FROM tr),
-         |n AS (SELECT CAST(greatest(1, (SUM(rb) + 131071) // 131072) AS UBIGINT) AS ns FROM p)
-         |SELECT tr.doc_id, tr.text,
-         |  CAST(('0x' || substr(md5(CAST(tr.doc_id AS VARCHAR) || ':shard'), 1, 15))::UBIGINT
-         |       % (SELECT ns FROM n) AS BIGINT) AS shard
-         |FROM tr""".stripMargin
-    },
-
-    // span decontamination: decorate identically, mark windows equal to
-    // the planted benchmark sentence, islands-merge, rebuild
-    "q_decontam_spans" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 9 = 0
-        |         THEN text || ' the quick brown fox jumps over the lazy dog again and again'
-        |         ELSE text END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM d),
-        |w AS (SELECT doc_id, i FROM t, UNNEST(range(0, greatest(len(tk) - 11, 0))) r(i)
-        |      WHERE array_to_string(tk[i+1 : i+12], ' ')
-        |            = 'the quick brown fox jumps over the lazy dog again and again'),
-        |g AS (SELECT doc_id, i,
-        |        sum(CASE WHEN pe IS NULL OR i > pe THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY doc_id ORDER BY i
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-        |      FROM (SELECT doc_id, i,
-        |              max(i + 12) OVER (PARTITION BY doc_id ORDER BY i
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-        |            FROM w)),
-        |sp AS (SELECT doc_id, gid, min(i) AS s, max(i + 12) AS e
-        |       FROM g GROUP BY 1, 2),
-        |kp AS (SELECT t.doc_id, j, tk[j+1] AS tok
-        |       FROM t, UNNEST(range(0, len(tk))) r(j)
-        |       WHERE NOT EXISTS (SELECT 1 FROM sp
-        |                         WHERE sp.doc_id = t.doc_id
-        |                           AND j >= sp.s AND j < sp.e))
-        |SELECT t.doc_id,
-        |  coalesce(string_agg(kp.tok, ' ' ORDER BY kp.j), '') AS text,
-        |  CAST(len(t.tk) - count(kp.j) AS BIGINT) AS n_removed
-        |FROM t LEFT JOIN kp ON kp.doc_id = t.doc_id
-        |GROUP BY t.doc_id, len(t.tk)""".stripMargin,
-
-    // boilerplate: decorate identically, census non-blank lines by
-    // distinct-doc count, drop >= 50-doc lines, reassemble in line order
-    "q_boilerplate" ->
-      """WITH lined AS (
-        |  SELECT doc_id,
-        |    array_to_string(list_concat(list_concat(
-        |      CASE WHEN doc_id % 3 = 0
-        |           THEN ['COOKIE NOTICE ACCEPT ALL COOKIES']
-        |           ELSE [] END,
-        |      list_transform(range(0, (len(toks) - 1) // 12 + 1), i ->
-        |        array_to_string(toks[i*12+1 : i*12+12], ' '))),
-        |      CASE WHEN doc_id % 2 = 0
-        |           THEN ['copyright example corp all rights reserved']
-        |           ELSE [] END), chr(10)) AS text
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        |l AS (SELECT doc_id, i, ls[i] AS ln
-        |      FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM lined),
-        |           UNNEST(range(1, len(ls) + 1)) AS r(i)),
-        |bp AS (SELECT ln FROM (
-        |        SELECT ln, count(DISTINCT doc_id) AS df
-        |        FROM l WHERE trim(ln) <> '' GROUP BY ln)
-        |       WHERE df >= 50),
-        |kept AS (SELECT * FROM l WHERE ln NOT IN (SELECT ln FROM bp))
-        |SELECT d.doc_id,
-        |  coalesce(string_agg(k.ln, chr(10) ORDER BY k.i), '') AS text
-        |FROM lined d LEFT JOIN kept k USING (doc_id)
-        |GROUP BY d.doc_id""".stripMargin,
-
-    // the streamed drain reduces to the batch view on in-order replay, so
-    // the oracle IS the batch twin's
-    "q_stream_cdc_gate" ->
-      """WITH c AS (
-        |  SELECT user_id,
-        |    CASE WHEN event_id % 13 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    value, epoch_us(ts) AS ts_us,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n_ops
-        |  FROM events)
-        |SELECT user_id, value, CAST(ts_us AS BIGINT) AS ts_us,
-        |  CAST(n_ops AS BIGINT) AS n_ops
-        |FROM c WHERE rn = 1 AND op <> 'D'""".stripMargin,
-
-    "q_trend" ->
-      """WITH d AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day, count(*) AS y
-        |  FROM events GROUP BY 1, 2),
-        |c AS (SELECT user_id, day - (SELECT min(day) FROM d) AS x, y FROM d)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_days,
-        |  CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT) AS slope_num,
-        |  CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT) AS slope_den
-        |FROM c GROUP BY user_id""".stripMargin,
-
-    "q_heavy_hitters" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-        |  FROM documents)
-        |SELECT token, CAST(count(*) AS BIGINT) AS cnt
-        |FROM tok WHERE token <> ''
-        |GROUP BY token
-        |HAVING count(*) >= greatest(1,
-        |  (SELECT count(*) FROM tok WHERE token <> '') // 1000)""".stripMargin,
-
-    "q_ohlc" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS bucket_us, value,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |                       ORDER BY ts, event_id) AS rn_a,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |                       ORDER BY ts DESC, event_id DESC) AS rn_d
-        |  FROM events)
-        |SELECT event_type, CAST(bucket_us AS BIGINT) AS bucket_us,
-        |  max(CASE WHEN rn_a = 1 THEN value END) AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max(CASE WHEN rn_d = 1 THEN value END) AS close,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS volume_cents,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM e GROUP BY 1, 2""".stripMargin,
-
-    // the console pipeline's invariants per shard: counts are exactly
-    // 1..n_s over the filter's matches routed by doc_id % 8
-    "q_stream_console_gate" ->
-      """SELECT xor(doc_id, doc_id >> 32) % 8 AS shard,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS max_rc,
-        |  CAST(1 AS BIGINT) AS min_rc,
-        |  CAST(count(*) AS BIGINT) AS n_rc,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_doc_id
-        |FROM documents
-        |WHERE contains(lower(text), 'the')
-        |GROUP BY 1""".stripMargin,
-
-    // streamed dedup: exactly one survivor per distinct content — the
-    // oracle's literal 1 catches any duplicate emission
-    "q_stream_dedup_gate" ->
-      """SELECT md5(text) AS fp, CAST(1 AS BIGINT) AS n_out, max(text) AS text
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-
-    // streamed span dedup: exactly one survivor per distinct 32-token
-    // span of the duplicate-decorated corpus (the batch chunker's span
-    // derivation, q_dedup_spans' own CTE)
-    "q_stream_spandedup_gate" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0),
-        |ch AS (
-        |  SELECT array_to_string(toks[s:s+31], ' ') AS chunk
-        |  FROM (SELECT doc_id,
-        |          coalesce(regexp_split_to_array(trim(text), '\s+'), []) AS toks
-        |        FROM d),
-        |       UNNEST(range(1, greatest(len(toks) - 1, 0) + 2, 32)) AS u(s))
-        |SELECT md5(chunk) AS fp, CAST(1 AS BIGINT) AS n_out, max(chunk) AS chunk
-        |FROM ch GROUP BY md5(chunk)""".stripMargin,
-
-    // chained dedup -> hourly windowed count, restated declaratively:
-    // survivors are the FIRST ARRIVAL (min doc_id = min ts) per distinct
-    // text over the duplicate-decorated corpus, then the tumbling rollup
-    // over survivor event times (ts = 1700000000 + doc_id seconds)
-    "q_stream_chained_gate" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, source, text FROM documents WHERE doc_id % 10 = 0),
-        |surv AS (
-        |  SELECT min(doc_id) AS doc_id, arg_min(source, doc_id) AS source
-        |  FROM d GROUP BY text)
-        |SELECT CAST((1700000000 + doc_id) // 3600 * 3600 AS BIGINT) AS w_start,
-        |  source, count(*) AS n
-        |FROM surv GROUP BY 1, 2""".stripMargin,
-
-    // streamed pattern match: q_ts_pattern's exact CTE chain with the
-    // top-k cut swapped for the threshold emit
-    "q_stream_pattern_gate" -> {
-      val pattern = Array(0.0, 1.0, 3.0, 7.0, 3.0, 1.0)
-      val w = pattern.length
-      val mu0 = pattern.sum / w
-      val sd0 = math.sqrt(pattern.map(x => (x - mu0) * (x - mu0)).sum / w)
-      val qn = pattern.map(x => (x - mu0) / sd0)
-      s"""WITH wnd AS (
-         |  SELECT user_id, epoch_us(ts) AS end_ts_us,
-         |    list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |                      ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW) AS arr
-         |  FROM events),
-         |c AS (SELECT user_id, end_ts_us, arr FROM wnd WHERE len(arr) = $w),
-         |m AS (SELECT user_id, end_ts_us, arr, list_sum(arr) / $w AS mu FROM c),
-         |sdev AS (SELECT user_id, end_ts_us, arr, mu,
-         |    sqrt(list_sum(list_transform(arr, x -> (x - mu) * (x - mu))) / $w) AS sd
-         |  FROM m),
-         |z AS (SELECT user_id, end_ts_us,
-         |    CASE WHEN sd = 0 THEN list_transform(arr, x -> 0.0)
-         |         ELSE list_transform(arr, x -> (x - mu) / sd) END AS zarr
-         |  FROM sdev),
-         |d AS (SELECT user_id, end_ts_us,
-         |    list_sum(list_transform(
-         |      list_zip(zarr, CAST(${sqlDoubles(qn)} AS DOUBLE[])),
-         |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS dist
-         |  FROM z)
-         |SELECT user_id, CAST(end_ts_us AS BIGINT) AS end_ts_us, dist
-         |FROM d WHERE dist <= 1.0""".stripMargin
-    },
-
-    // the RocksDB-provider drain must equal the default-provider view —
-    // the oracle IS q_stream_cdc_gate's
-    "q_stream_cdc_rocksdb_gate" ->
-      """WITH c AS (
-        |  SELECT user_id,
-        |    CASE WHEN event_id % 13 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    value, epoch_us(ts) AS ts_us,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n_ops
-        |  FROM events)
-        |SELECT user_id, value, CAST(ts_us AS BIGINT) AS ts_us,
-        |  CAST(n_ops AS BIGINT) AS n_ops
-        |FROM c WHERE rn = 1 AND op <> 'D'""".stripMargin,
-
-    // the streamed windowed-agg drain emits each watermark-closed bar
-    // exactly once, so with the sentinel flush the sink equals the batch
-    // twin — the oracle IS q_ohlc's
-    "q_stream_ohlc_gate" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS bucket_us, value,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |                       ORDER BY ts, event_id) AS rn_a,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |                       ORDER BY ts DESC, event_id DESC) AS rn_d
-        |  FROM events)
-        |SELECT event_type, CAST(bucket_us AS BIGINT) AS bucket_us,
-        |  max(CASE WHEN rn_a = 1 THEN value END) AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max(CASE WHEN rn_d = 1 THEN value END) AS close,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS volume_cents,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM e GROUP BY 1, 2""".stripMargin,
-
-    // the streamed sessionizer labels every event with the batch ordinal
-    // on in-order replay — the oracle IS q_sessionize's
-    "q_stream_sessionize_gate" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |  CAST(SUM(CASE WHEN gap_new THEN 1 ELSE 0 END)
-        |       OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_idx
-        |FROM (SELECT event_id, user_id, ts,
-        |        epoch_us(ts) - LAG(epoch_us(ts))
-        |          OVER (PARTITION BY user_id ORDER BY ts) > 1800000000 AS gap_new
-        |      FROM events)""".stripMargin,
-
-    // streamed contiguous triples roll up to the batch pattern table on
-    // in-order replay — the oracle IS q_seq3's
-    "q_stream_seq3_gate" ->
-      """WITH g AS (
-        |  SELECT user_id, event_type AS t0,
-        |    lead(event_type, 1) OVER w AS t1,
-        |    lead(event_type, 2) OVER w AS t2
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT t0, t1, t2, CAST(count(*) AS BIGINT) AS n_occurrences,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS support
-        |FROM g WHERE t1 IS NOT NULL AND t2 IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |HAVING count(DISTINCT user_id) >= 2""".stripMargin,
-
-    // idle-timeout eviction: with maxGap <= idleTimeout the bounded-state
-    // stream equals the batch gap-filtered pairs exactly (see the gate
-    // comment) — the oracle is the plain lead() pair set under the gap
-    "q_stream_transitions_idle_gate" ->
-      """SELECT user_id, from_type, to_type FROM (
-        |  SELECT user_id, event_type AS from_type,
-        |    lead(event_type) OVER w AS to_type,
-        |    epoch_us(lead(ts) OVER w) - epoch_us(ts) AS gap
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |WHERE to_type IS NOT NULL AND gap <= 1800000000""".stripMargin,
-
-    // the streamed transition pairs roll up to the batch Markov matrix on
-    // in-order replay — the oracle IS q_event_transitions'
-    "q_stream_transitions_gate" ->
-      """WITH o AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM o
-        |      WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |f AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, n, n_from, n / n_from AS p
-        |FROM c JOIN f USING (from_type)""".stripMargin,
-
-    // the streamed session-window aggregate with the sentinel flush emits
-    // the complete session set — the oracle IS q_events_sessions'
-    "q_stream_sessions_gate" ->
-      """WITH u AS (SELECT event_type, epoch_us(ts) AS t_us FROM events),
-        |o AS (
-        |  SELECT event_type, t_us,
-        |    CASE WHEN t_us - lag(t_us) OVER (PARTITION BY event_type ORDER BY t_us) < 1800000000
-        |         THEN 0 ELSE 1 END AS new_s
-        |  FROM u),
-        |i AS (
-        |  SELECT event_type, t_us,
-        |    SUM(new_s) OVER (PARTITION BY event_type ORDER BY t_us ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o)
-        |SELECT min(t_us) AS s_start, event_type, count(*) AS n
-        |FROM i GROUP BY event_type, sid""".stripMargin,
-
-    // the exported shards read back: identity on (doc_id, text) — JSON
-    // round-trip byte fidelity — plus the in-plan shard id, re-derived
-    // from the same byte estimator + ceil-div + salted-md5 mod
-    "q_export_shards" ->
-      """WITH p AS (SELECT coalesce(octet_length(encode(CAST(text AS VARCHAR))), 0)
-        |    + octet_length(encode(CAST(doc_id AS VARCHAR))) + 32 AS rb FROM documents),
-        |n AS (SELECT CAST(greatest(1, (SUM(rb) + 262143) // 262144) AS UBIGINT) AS ns FROM p)
-        |SELECT d.doc_id, d.text,
-        |  CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':shard'), 1, 15))::UBIGINT
-        |       % (SELECT ns FROM n) AS BIGINT) AS shard
-        |FROM documents d""".stripMargin,
-
-    // the streamed two-sided interval join emits every in-window
-    // (purchase, preceding click) pair exactly once on in-order replay —
-    // the oracle is the plain batch interval join
-    "q_stream_join_gate" ->
-      """SELECT p.event_id AS buy_id, p.user_id, epoch_us(p.ts) AS ts_us,
-        |  c.event_id AS click_id, epoch_us(c.ts) AS cts_us
-        |FROM events p JOIN events c ON p.user_id = c.user_id
-        |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        |  AND epoch_us(c.ts) <= epoch_us(p.ts)""".stripMargin,
-
-    // join feeding a windowed rollup: the batch join + hourly count
-    "q_stream_join_window_gate" ->
-      """WITH j AS (
-        |  SELECT p.ts FROM events p JOIN events c ON p.user_id = c.user_id
-        |  WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |    AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        |    AND epoch_us(c.ts) <= epoch_us(p.ts))
-        |SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS w_start,
-        |  count(*) AS n_attributed
-        |FROM j GROUP BY 1""".stripMargin,
-
-    // right outer: every click exactly once; purchase predicates inside
-    // the left input so they don't eat the null side
-    "q_stream_join_right_gate" ->
-      """SELECT p.event_id AS buy_id, c.user_id AS user_id,
-        |  epoch_us(p.ts) AS ts_us, c.event_id AS click_id,
-        |  epoch_us(c.ts) AS cts_us
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |RIGHT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        |  AND epoch_us(c.ts) <= epoch_us(p.ts)""".stripMargin,
-
-    // full outer: both sides' unmatched rows keep a null row; filters
-    // move INSIDE the join inputs so they don't eat the null sides
-    "q_stream_join_full_gate" ->
-      """SELECT p.event_id AS buy_id,
-        |  coalesce(p.user_id, c.user_id) AS user_id,
-        |  epoch_us(p.ts) AS ts_us, c.event_id AS click_id,
-        |  epoch_us(c.ts) AS cts_us
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |FULL JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        |  AND epoch_us(c.ts) <= epoch_us(p.ts)""".stripMargin,
-
-    // left outer: every purchase row exactly once; the click predicates
-    // live in the ON clause so unmatched purchases keep their null row
-    "q_stream_join_outer_gate" ->
-      """SELECT p.event_id AS buy_id, p.user_id, epoch_us(p.ts) AS ts_us,
-        |  c.event_id AS click_id, epoch_us(c.ts) AS cts_us
-        |FROM events p LEFT JOIN events c ON p.user_id = c.user_id
-        |  AND c.event_type = 'click'
-        |  AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        |  AND epoch_us(c.ts) <= epoch_us(p.ts)
-        |WHERE p.event_type = 'purchase'""".stripMargin,
-
-    // left semi: each purchase at most once, only if a qualifying click
-    // precedes it — the batch EXISTS twin
-    "q_stream_join_semi_gate" ->
-      """SELECT p.event_id AS buy_id, p.user_id, epoch_us(p.ts) AS ts_us
-        |FROM events p
-        |WHERE p.event_type = 'purchase' AND EXISTS (
-        |  SELECT 1 FROM events c
-        |  WHERE c.event_type = 'click' AND c.user_id = p.user_id
-        |    AND epoch_us(c.ts) >= epoch_us(p.ts) - 1800000000
-        |    AND epoch_us(c.ts) <= epoch_us(p.ts))""".stripMargin,
-
-    // overlapping 2h/1h windows flushed by the far sentinel — the oracle
-    // IS q_events_sliding's
-    "q_stream_sliding_gate" ->
-      """SELECT w_start, event_type, count(*) AS n FROM (
-        |  SELECT event_type,
-        |    CAST(epoch(date_trunc('hour', ts)) AS BIGINT) - 3600 * unnest([0, 1]) AS w_start
-        |  FROM events)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // the sentinel flush emits every real hourly window once — the
-    // tumbling-count twin of the OHLC gate's oracle
-    "q_stream_window_gate" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS w_start,
-        |  event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // streaming KMV: the batch replay of the per-(window, type) sketch —
-    // k smallest distinct md5-60 of the user-id decimal string
-    "q_stream_kmv_gate" ->
-      """WITH h AS (
-        |  SELECT DISTINCT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS w_start,
-        |    event_type,
-        |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::UBIGINT AS BIGINT) AS h60
-        |  FROM events),
-        |r AS (SELECT w_start, event_type, h60,
-        |        row_number() OVER (PARTITION BY w_start, event_type ORDER BY h60) AS rn
-        |      FROM h),
-        |s AS (SELECT w_start, event_type, count(*) AS n_minima, max(h60) AS kth
-        |      FROM r WHERE rn <= 32 GROUP BY 1, 2)
-        |SELECT w_start, event_type, n_minima, kth,
-        |  CASE WHEN n_minima < 32 THEN CAST(n_minima AS DOUBLE)
-        |       ELSE 31.0 * 1152921504606846976.0 / CAST(kth AS DOUBLE) END AS est
-        |FROM s""".stripMargin,
-
-    // late-data accounting: watermark = max main ts − 2h (ms floor, the
-    // engine's clock); a late row is dropped iff its hourly window END ≤
-    // watermark, kept rows merge into the tumbling counts, and the
-    // dropped total rides as the (-1, '__dropped__') accounting row
-    "q_stream_late_gate" ->
-      """WITH m AS (SELECT * FROM events WHERE event_id % 13 <> 0),
-        |l AS (SELECT * FROM events WHERE event_id % 13 = 0),
-        |seg AS (SELECT ts, ntile(4) OVER (ORDER BY ts, event_id) AS b FROM m),
-        |wm AS (SELECT epoch_ms(max(ts)) - 7200000 AS w FROM seg WHERE b <= 3),
-        |keptlate AS (
-        |  SELECT l.* FROM l, wm
-        |  WHERE epoch_ms(date_trunc('hour', l.ts)) + 3600000 > wm.w),
-        |kept AS (SELECT event_type, ts FROM m
-        |         UNION ALL SELECT event_type, ts FROM keptlate)
-        |SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS w_start,
-        |  event_type, count(*) AS n
-        |FROM kept GROUP BY 1, 2
-        |UNION ALL
-        |SELECT CAST(-1 AS BIGINT), '__dropped__',
-        |  (SELECT count(DISTINCT (date_trunc('hour', l.ts), l.event_type))
-        |   FROM l, wm
-        |   WHERE epoch_ms(date_trunc('hour', l.ts)) + 3600000 <= wm.w)""".stripMargin,
-
-    // the per-key sentinel closes every real bucket, so the streamed
-    // detector's sink is the complete batch output — the oracle IS
-    // q_anomaly's
-    "q_stream_anomaly_gate" ->
-      """WITH b AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS bucket_us,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT *,
-        |    CAST(coalesce(sum(n) OVER win, 0) AS BIGINT) AS s_prev,
-        |    CAST(coalesce(sum(n * n) OVER win, 0) AS BIGINT) AS ss_prev,
-        |    count(n) OVER win AS w_prev
-        |  FROM b
-        |  WINDOW win AS (PARTITION BY event_type ORDER BY bucket_us
-        |                 ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, bucket_us, n, s_prev, ss_prev, w_prev,
-        |  (w_prev = 24 AND
-        |   (24 * n - s_prev) * (24 * n - s_prev) * 23 >
-        |     4 * 24 * (24 * ss_prev - s_prev * s_prev)) AS is_anomaly
-        |FROM w""".stripMargin,
-
-    // the stateless stream-static as-of emits the batch join row for row
-    // — the oracle IS q_asof_iv's
-    "q_stream_asof_gate" ->
-      """WITH v AS (SELECT user_id, ts, max(value) AS view_value
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, ts, value
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-        |       v.view_value AS view_value, epoch_us(v.ts) AS view_ts_us
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-
-    // the peel unrolled: n_i = nodes of the subgraph induced by n_{i-1}
-    // with induced degree >= k; 8 rounds > the measured convergence
-    // depth (5 at sf0.01), and peeling is a no-op past the fixed point
-    "q_kcore" -> kcoreOracleSql(k = 80, rounds = 8),
-
-    "q_readability" ->
-      """WITH t AS (SELECT doc_id, replace(text, ' value ', ' value. ') AS text
-        |           FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_words,
-        |  CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS n_sentences,
-        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables,
-        |  round(0.39 * (CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE)
-        |          / greatest(len(regexp_extract_all(text, '[.!?]+')), 1))
-        |    + 11.8 * (CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE)
-        |          / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1))
-        |    - 15.59, 12) AS fk_grade
-        |FROM t""".stripMargin,
-
-    "q_assoc_rules" ->
-      """WITH s AS (
-        |  SELECT *, CAST(user_id AS VARCHAR) || ':' ||
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS VARCHAR) AS sid
-        |  FROM (SELECT user_id, ts, event_type,
-        |          CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-        |            (PARTITION BY user_id ORDER BY ts) > 1800000000
-        |          THEN 1 ELSE 0 END AS is_new
-        |        FROM events)),
-        |b AS (SELECT DISTINCT sid, event_type AS item FROM s),
-        |ic AS (SELECT item, count(*) AS c_item FROM b GROUP BY item),
-        |n AS (SELECT count(DISTINCT sid) AS n_sessions FROM b),
-        |p AS (SELECT a.item AS antecedent, c.item AS consequent,
-        |        count(*) AS c_both
-        |      FROM b a JOIN b c ON a.sid = c.sid AND a.item <> c.item
-        |      GROUP BY 1, 2
-        |      HAVING count(*) >= 2)
-        |SELECT antecedent, consequent, c_both,
-        |  ia.c_item AS c_ante, ic2.c_item AS c_cons, n_sessions,
-        |  CAST(c_both AS DOUBLE) / ia.c_item AS confidence,
-        |  CAST(c_both * n_sessions AS DOUBLE) / (ia.c_item * ic2.c_item)
-        |    AS lift
-        |FROM p
-        |JOIN ic ia ON ia.item = antecedent
-        |JOIN ic ic2 ON ic2.item = consequent, n""".stripMargin,
-
-    "q_decay_score" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CASE WHEN d BETWEEN 0 AND 30
-        |    THEN cents * (CAST(1 AS BIGINT) << (30 - d)) ELSE 0 END) AS BIGINT)
-        |    AS score_num,
-        |  max(ts_us) AS last_ts_us
-        |FROM (SELECT user_id, epoch_us(ts) AS ts_us,
-        |        CAST(floor((1706659200000000 - epoch_us(ts)) / 86400000000.0)
-        |          AS INT) AS d,
-        |        CAST(round(value * 100) AS BIGINT) AS cents
-        |      FROM events)
-        |GROUP BY user_id""".stripMargin,
-
-    "q_attribution" ->
-      """SELECT event_id AS conv_id, user_id, epoch_us(ts) AS conv_ts_us,
-        |  touch_id, epoch_us(ts) - touch_ts_us AS gap_us, value
-        |FROM (SELECT *,
-        |    last_value(CASE WHEN event_type = 'click' THEN event_id END
-        |      IGNORE NULLS) OVER w AS touch_id,
-        |    last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END
-        |      IGNORE NULLS) OVER w AS touch_ts_us
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS UNBOUNDED PRECEDING))
-        |WHERE event_type = 'purchase'""".stripMargin,
-
-    "q_attr_linear" ->
-      """WITH conv AS (
-        |  SELECT user_id AS u, event_id AS conv_id, epoch_us(ts) AS cts,
-        |    CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events WHERE event_type = 'purchase'),
-        |tch AS (SELECT user_id AS u, event_id AS touch_id, epoch_us(ts) AS tts
-        |        FROM events WHERE event_type = 'click'),
-        |m AS (SELECT conv.u, conv.conv_id, conv.cts, conv.cents,
-        |        tch.touch_id, tch.tts
-        |      FROM conv JOIN tch USING (u)
-        |      WHERE tts <= cts AND tts >= cts - 86400000000),
-        |sh AS (SELECT conv_id, u, cts, touch_id, cents,
-        |         count(*) OVER (PARTITION BY conv_id) AS n_touches,
-        |         row_number() OVER (PARTITION BY conv_id
-        |           ORDER BY tts DESC, touch_id DESC) AS rk
-        |       FROM m)
-        |SELECT conv_id, u AS user_id, cts AS conv_ts_us, touch_id, n_touches,
-        |  cents // n_touches +
-        |    (CASE WHEN rk = 1 THEN cents % n_touches ELSE 0 END) AS cents_share
-        |FROM sh
-        |UNION ALL
-        |SELECT conv_id, u, cts, NULL, 0, NULL FROM conv
-        |WHERE conv_id NOT IN (SELECT conv_id FROM m)""".stripMargin,
-
-    "q_mode" ->
-      """WITH c AS (SELECT user_id, event_type, count(*) AS n
-        |           FROM events GROUP BY 1, 2)
-        |SELECT user_id, event_type AS mode, n FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY n DESC, event_type) AS rn FROM c)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_anomaly" ->
-      """WITH b AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS bucket_us,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |w AS (SELECT *,
-        |    CAST(coalesce(sum(n) OVER win, 0) AS BIGINT) AS s_prev,
-        |    CAST(coalesce(sum(n * n) OVER win, 0) AS BIGINT) AS ss_prev,
-        |    count(n) OVER win AS w_prev
-        |  FROM b
-        |  WINDOW win AS (PARTITION BY event_type ORDER BY bucket_us
-        |                 ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, bucket_us, n, s_prev, ss_prev, w_prev,
-        |  (w_prev = 24 AND
-        |   (24 * n - s_prev) * (24 * n - s_prev) * 23 >
-        |     4 * 24 * (24 * ss_prev - s_prev * s_prev)) AS is_anomaly
-        |FROM w""".stripMargin,
-
-    // cusum: ref=3 slack=1 -> hi deltas n-4, lo deltas 2-n; S_t as prefix
-    // sum minus running min (the closed form of max(0, S+d)); thr 20.
-    "q_cusum" ->
-      """WITH b AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS bucket_us,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |p AS (SELECT *,
-        |    CAST(sum(n - 4) OVER win AS BIGINT) AS p_hi,
-        |    CAST(sum(2 - n) OVER win AS BIGINT) AS p_lo
-        |  FROM b
-        |  WINDOW win AS (PARTITION BY event_type ORDER BY bucket_us
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |c AS (SELECT event_type, bucket_us, n,
-        |    p_hi - least(0, min(p_hi) OVER win) AS cusum_hi,
-        |    p_lo - least(0, min(p_lo) OVER win) AS cusum_lo
-        |  FROM p
-        |  WINDOW win AS (PARTITION BY event_type ORDER BY bucket_us
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_type, bucket_us, n, cusum_hi, cusum_lo,
-        |  (cusum_hi >= 20 OR cusum_lo >= 20) AS is_alarm
-        |FROM c""".stripMargin,
-
-    // SRM: distinct-unit variant counts, integer-inequality significance
-    "q_srm" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
-        |v AS (SELECT user_id % 2 AS v, CAST(count(*) AS BIGINT) AS n
-        |      FROM u GROUP BY 1),
-        |t AS (SELECT
-        |    CAST(coalesce(sum(CASE WHEN v = 0 THEN n END), 0) AS BIGINT) AS n0,
-        |    CAST(coalesce(sum(CASE WHEN v = 1 THEN n END), 0) AS BIGINT) AS n1
-        |  FROM v)
-        |SELECT n0, n1, n0 - n1 AS d,
-        |  CASE WHEN n0 + n1 > 0 THEN
-        |    CAST((n0 - n1) * (n0 - n1) AS DOUBLE) / CAST(n0 + n1 AS DOUBLE)
-        |  END AS chi2,
-        |  CAST(1000000 AS HUGEINT) * (n0 - n1) * (n0 - n1) >
-        |    CAST(3841459 AS HUGEINT) * (n0 + n1) AS srm
-        |FROM t""".stripMargin,
-
-    "q_ab_lift" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |  FROM events GROUP BY user_id),
-        |v AS (SELECT user_id % 2 AS variant, count(*) AS n_users,
-        |        CAST(sum(conv) AS BIGINT) AS n_conv
-        |      FROM pu GROUP BY 1),
-        |t AS (SELECT
-        |        CAST(sum(CASE WHEN variant = 0 THEN n_users END) AS BIGINT) AS n0,
-        |        CAST(sum(CASE WHEN variant = 0 THEN n_conv END) AS BIGINT) AS c0,
-        |        CAST(sum(CASE WHEN variant = 1 THEN n_users END) AS BIGINT) AS n1,
-        |        CAST(sum(CASE WHEN variant = 1 THEN n_conv END) AS BIGINT) AS c1
-        |      FROM v),
-        |f AS (SELECT coalesce(
-        |        CAST(1000000 AS HUGEINT) * CAST(n0 + n1 AS HUGEINT) * d * d >
-        |        CAST(3841459 AS HUGEINT) * CAST(n0 AS HUGEINT)
-        |          * CAST(n1 AS HUGEINT) * CAST(c0 + c1 AS HUGEINT)
-        |          * CAST(n0 + n1 - c0 - c1 AS HUGEINT), FALSE) AS significant
-        |      FROM (SELECT *,
-        |              CAST(c0 AS HUGEINT) * CAST(n1 - c1 AS HUGEINT)
-        |                - CAST(c1 AS HUGEINT) * CAST(n0 - c0 AS HUGEINT) AS d
-        |            FROM t))
-        |SELECT v.variant, v.n_users, v.n_conv, f.significant FROM v, f""".stripMargin,
-
-    // direct standardization: adjusted rate = sum over strata of the
-    // 1e-12-quantized (pooled share)x(cell rate) terms; a cell with no
-    // users of a variant contributes 0 (no row)
-    "q_strat_adjust" ->
-      """WITH f AS (SELECT user_id, event_type AS stratum FROM (
-        |    SELECT user_id, event_type,
-        |      row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |    FROM events WHERE user_id IS NOT NULL) WHERE rn = 1),
-        |pu AS (SELECT user_id,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |  FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-        |u AS (SELECT pu.user_id, pu.conv, f.stratum, pu.user_id % 2 AS v
-        |      FROM pu JOIN f USING (user_id)),
-        |cell AS (SELECT v, stratum, CAST(count(*) AS BIGINT) AS n,
-        |           CAST(sum(conv) AS BIGINT) AS c
-        |         FROM u GROUP BY 1, 2),
-        |s AS (SELECT stratum, CAST(sum(n) AS BIGINT) AS ns FROM cell GROUP BY 1),
-        |t AS (SELECT CAST(sum(ns) AS BIGINT) AS nt FROM s),
-        |tm AS (SELECT v, n, c,
-        |        CAST(round((CAST(ns AS DOUBLE) / nt) * (CAST(c AS DOUBLE) / n)
-        |          * 1000000000000.0) AS BIGINT) AS tq
-        |      FROM cell JOIN s USING (stratum) CROSS JOIN t)
-        |SELECT v AS variant, CAST(sum(n) AS BIGINT) AS n_users,
-        |  CAST(sum(c) AS BIGINT) AS n_conv,
-        |  CAST(sum(tq) AS BIGINT) AS adj_rate_q
-        |FROM tm GROUP BY 1""".stripMargin,
-
-    // funnel latency: greedy first-view -> first-purchase-after per user,
-    // integer-microsecond latencies through quantile_cont (bit-exact vs
-    // the engine's distributed exact-quantile machinery)
-    "q_funnel_latency" ->
-      """WITH f AS (SELECT user_id, min(ts) AS t1 FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        |p AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN f USING (user_id)
-        |      WHERE e.event_type = 'purchase' AND e.ts > f.t1 GROUP BY 1),
-        |l AS (SELECT CAST(epoch_us(p.t2) - epoch_us(f.t1) AS BIGINT) AS latency_us
-        |      FROM p JOIN f USING (user_id))
-        |SELECT 'latency_us' AS col_name, 0.25 AS prob,
-        |  quantile_cont(latency_us, 0.25) AS value FROM l
-        |UNION ALL SELECT 'latency_us', 0.5, quantile_cont(latency_us, 0.5) FROM l
-        |UNION ALL SELECT 'latency_us', 0.75, quantile_cont(latency_us, 0.75) FROM l
-        |UNION ALL SELECT 'latency_us', 0.9, quantile_cont(latency_us, 0.9) FROM l
-        |UNION ALL SELECT 'latency_us', 0.99, quantile_cont(latency_us, 0.99) FROM l""".stripMargin,
-
-    // CUPED: exact decimal moments over per-user integer counts, the
-    // midpoint split in pure integer epoch-us, fixed-order double readout
-    "q_cuped" -> hsOracle("variant,n_u,sx_v*,sy_v*,mean_x,mean_y,theta,adj_mean,rho2")(
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events
-        |           WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |sp AS (SELECT min(us) AS lo, max(us) AS hi FROM e),
-        |pu AS (SELECT user_id,
-        |    CAST(sum(CASE WHEN us * 2 < lo + hi THEN 1 ELSE 0 END) AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN us * 2 < lo + hi THEN 0 ELSE 1 END) AS BIGINT) AS y
-        |  FROM e, sp GROUP BY 1),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-        |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-        |    sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy FROM pu),
-        |v AS (SELECT user_id % 2 AS variant, CAST(count(*) AS BIGINT) AS n_u,
-        |    sum(CAST(x AS HUGEINT)) AS sx_v, sum(CAST(y AS HUGEINT)) AS sy_v
-        |  FROM pu GROUP BY 1),
-        |r AS (SELECT variant, n_u,
-        |    CAST(sx_v AS DECIMAL(38,0)) AS sx_v, CAST(sy_v AS DECIMAL(38,0)) AS sy_v,
-        |    CAST(sx_v AS DOUBLE) / CAST(n_u AS DOUBLE) AS mean_x,
-        |    CAST(sy_v AS DOUBLE) / CAST(n_u AS DOUBLE) AS mean_y,
-        |    CAST(n AS HUGEINT) * sxx - sx * sx AS vxden,
-        |    CAST(n AS HUGEINT) * syy - sy * sy AS vyden,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS covnum,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS vxd,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vyd,
-        |    CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS gmx
-        |  FROM v, g)
-        |SELECT variant, n_u, sx_v, sy_v, mean_x, mean_y,
-        |  CASE WHEN vxden <> 0 THEN covnum / vxd END AS theta,
-        |  CASE WHEN vxden <> 0 THEN mean_y - (covnum / vxd) * (mean_x - gmx)
-        |  END AS adj_mean,
-        |  CASE WHEN vxden <> 0 AND vyden <> 0
-        |    THEN (covnum * covnum) / (vxd * vyd) END AS rho2
-        |FROM r""".stripMargin),
-
-    // ACF: zero-filled integer day spine, n^2-scaled exact integer
-    // moments per lag, one fixed-order double division each
-    "q_acf" -> hsOracle("k,n,s*,sxy*,a_k*,b_k*,num*,den*,r")(
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS dd FROM events
-        |           WHERE ts IS NOT NULL),
-        |dc AS (SELECT dd, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        |sp AS (SELECT min(dd) AS d0, max(dd) AS d1 FROM dc),
-        |ser AS (
-        |  SELECT g.dd - (SELECT d0 FROM sp) + 1 AS r, COALESCE(dc.c, 0) AS c
-        |  FROM (SELECT unnest(generate_series((SELECT d0 FROM sp),
-        |                                      (SELECT d1 FROM sp))) AS dd) g
-        |  LEFT JOIN dc ON g.dd = dc.dd),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(CAST(c AS HUGEINT)) AS s,
-        |        sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS sxx FROM ser),
-        |l AS (SELECT unnest(range(1, 8)) AS k),
-        |p AS (SELECT l.k, t.n, t.s, t.sxx,
-        |    sum(CAST(s1.c AS HUGEINT) * COALESCE(CAST(s2.c AS HUGEINT), 0)) AS sxy,
-        |    sum(CASE WHEN s1.r <= t.n - l.k THEN CAST(s1.c AS HUGEINT) ELSE 0 END) AS a_k,
-        |    sum(CASE WHEN s1.r > l.k THEN CAST(s1.c AS HUGEINT) ELSE 0 END) AS b_k
-        |  FROM ser s1 CROSS JOIN l CROSS JOIN t
-        |  LEFT JOIN ser s2 ON s1.r + l.k = s2.r
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT CAST(k AS BIGINT) AS k, n, CAST(s AS DECIMAL(38,0)) AS s,
-        |  CAST(sxy AS DECIMAL(38,0)) AS sxy,
-        |  CAST(a_k AS DECIMAL(38,0)) AS a_k, CAST(b_k AS DECIMAL(38,0)) AS b_k,
-        |  CAST(n * n * sxy - n * s * (a_k + b_k) + (n - k) * s * s AS DECIMAL(38,0)) AS num,
-        |  CAST(n * n * sxx - n * s * s AS DECIMAL(38,0)) AS den,
-        |  CAST(n * n * sxy - n * s * (a_k + b_k) + (n - k) * s * s AS DOUBLE) /
-        |    CAST(n * n * sxx - n * s * s AS DOUBLE) AS r
-        |FROM p""".stripMargin),
-
-    "q_resample" ->
-      """WITH b AS (
-        |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS bucket_us,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT min(bucket_us) AS lo, max(bucket_us) AS hi FROM b),
-        |spine AS (
-        |  SELECT k.event_type, g.bucket_us
-        |  FROM (SELECT DISTINCT event_type FROM b) k,
-        |       (SELECT unnest(generate_series(lo, hi, 3600000000)) AS bucket_us
-        |        FROM bounds) g)
-        |SELECT s.event_type, s.bucket_us, CAST(coalesce(n, 0) AS BIGINT) AS n
-        |FROM spine s LEFT JOIN b USING (event_type, bucket_us)""".stripMargin,
-
-    "q_rolling_active" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id AS u, epoch_us(ts) // 86400000000 AS day
-        |  FROM events),
-        |b AS (SELECT min(day) AS lo, max(day) AS hi FROM ud),
-        |x AS (SELECT u, unnest(generate_series(day, day + 6)) AS d FROM ud),
-        |c AS (SELECT d AS day, count(*) AS n_active
-        |      FROM (SELECT DISTINCT u, d FROM x) GROUP BY d),
-        |spine AS (SELECT unnest(generate_series(lo, hi)) AS day FROM b)
-        |SELECT spine.day, CAST(coalesce(n_active, 0) AS BIGINT) AS n_active
-        |FROM spine LEFT JOIN c USING (day)""".stripMargin,
-
-    "q_quantiles_dist" ->
-      """WITH t AS (SELECT source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT source, 0.25 AS prob,
-        |  quantile_cont(CAST(n_tokens AS DOUBLE), 0.25) AS value
-        |FROM t GROUP BY source
-        |UNION ALL SELECT source, 0.5,
-        |  quantile_cont(CAST(n_tokens AS DOUBLE), 0.5) FROM t GROUP BY source
-        |UNION ALL SELECT source, 0.75,
-        |  quantile_cont(CAST(n_tokens AS DOUBLE), 0.75) FROM t GROUP BY source
-        |UNION ALL SELECT source, 0.99,
-        |  quantile_cont(CAST(n_tokens AS DOUBLE), 0.99) FROM t GROUP BY source""".stripMargin,
-
-    "q_user_growth" ->
-      """WITH fd AS (SELECT user_id, min(epoch_us(ts) // 86400000000) AS day
-        |            FROM events GROUP BY user_id),
-        |pd AS (SELECT day, count(*) AS n_new FROM fd GROUP BY day)
-        |SELECT day, n_new,
-        |  CAST(sum(n_new) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-        |    AS BIGINT) AS cum_users
-        |FROM pd""".stripMargin,
-
-    "q_mad" ->
-      """WITH t AS (SELECT source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |m AS (SELECT source, quantile_cont(CAST(n_tokens AS DOUBLE), 0.5) AS med
-        |      FROM t GROUP BY source),
-        |d AS (SELECT t.source, abs(t.n_tokens - m.med) AS dev
-        |      FROM t JOIN m ON t.source IS NOT DISTINCT FROM m.source)
-        |SELECT source, quantile_cont(dev, 0.5) AS mad FROM d
-        |GROUP BY source""".stripMargin,
-
-    "q_collocations" ->
-      """WITH el AS (
-        |  SELECT doc_id, list_sort(list_distinct(
-        |    regexp_split_to_array(trim(text), '\s+'))) AS ts
-        |  FROM documents
-        |  WHERE len(list_distinct(regexp_split_to_array(trim(text), '\s+')))
-        |    BETWEEN 2 AND 1000),
-        |tk AS (SELECT doc_id, unnest(ts) AS t FROM el),
-        |cx AS (SELECT t, count(*) AS c FROM tk GROUP BY t),
-        |n AS (SELECT count(*) AS n FROM el),
-        |p AS (SELECT a.t AS x, b.t AS y, count(*) AS c_xy
-        |      FROM tk a JOIN tk b ON a.doc_id = b.doc_id AND a.t < b.t
-        |      GROUP BY 1, 2),
-        |s AS (SELECT x, y, c_xy, cx1.c AS c_x, cx2.c AS c_y,
-        |        CAST(c_xy * n AS DOUBLE) / (cx1.c * cx2.c) AS ratio
-        |      FROM p JOIN cx cx1 ON cx1.t = x JOIN cx cx2 ON cx2.t = y, n
-        |      WHERE c_xy >= 5)
-        |SELECT x, y, c_xy, c_x, c_y, ratio FROM s
-        |ORDER BY ratio DESC, x, y LIMIT 100""".stripMargin,
-
-    "q_skyline" ->
-      """WITH t AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents))
-        |SELECT doc_id, n_tokens, n_distinct FROM t a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM t b
-        |  WHERE b.n_tokens >= a.n_tokens AND b.n_distinct >= a.n_distinct
-        |    AND (b.n_tokens > a.n_tokens OR b.n_distinct > a.n_distinct))""".stripMargin,
-
-    "q_quantile_norm" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |q AS (SELECT doc_id, CAST(n_tokens AS DOUBLE) AS v FROM t WHERE doc_id % 5 = 0),
-        |r AS (SELECT CAST(n_tokens AS DOUBLE) AS rv FROM t WHERE doc_id % 5 <> 0),
-        |rp AS (SELECT rv, CAST(row_number() OVER (ORDER BY rv) AS BIGINT) AS pos FROM r),
-        |n AS (SELECT count(*) AS n FROM q),
-        |m AS (SELECT count(*) AS m FROM r),
-        |k AS (SELECT doc_id, v,
-        |        CAST(row_number() OVER (ORDER BY v, doc_id) AS BIGINT) AS rnk
-        |      FROM q),
-        |x AS (SELECT doc_id, v,
-        |        CASE WHEN n = 1 THEN 0.0
-        |             ELSE CAST(rnk - 1 AS DOUBLE) / (n - 1) END AS p
-        |      FROM k, n),
-        |y AS (SELECT doc_id, v, (m - 1) * p AS pos2,
-        |        CAST(floor((m - 1) * p) AS BIGINT) + 1 AS lo,
-        |        CAST(ceil((m - 1) * p) AS BIGINT) + 1 AS hi
-        |      FROM x, m)
-        |SELECT y.doc_id, y.v AS n_tokens,
-        |  CASE WHEN hi = lo OR h.rv = l.rv THEN l.rv
-        |       ELSE (hi - 1 - pos2) * l.rv + (pos2 - (lo - 1)) * h.rv
-        |  END AS mapped
-        |FROM y JOIN rp l ON l.pos = y.lo JOIN rp h ON h.pos = y.hi""".stripMargin,
-
-    "q_quantile_norm_group" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |q AS (SELECT doc_id, source, CAST(n_tokens AS DOUBLE) AS v
-        |      FROM t WHERE doc_id % 5 = 0),
-        |r AS (SELECT CAST(n_tokens AS DOUBLE) AS rv FROM t WHERE doc_id % 5 <> 0),
-        |rp AS (SELECT rv, CAST(row_number() OVER (ORDER BY rv) AS BIGINT) AS pos FROM r),
-        |m AS (SELECT count(*) AS m FROM r),
-        |k AS (SELECT doc_id, source, v,
-        |        CAST(row_number() OVER (PARTITION BY source
-        |          ORDER BY v, doc_id) AS BIGINT) AS rnk
-        |      FROM q),
-        |ns AS (SELECT source, count(*) AS n FROM q GROUP BY source),
-        |x AS (SELECT k.doc_id, k.source, k.v,
-        |        CASE WHEN ns.n = 1 THEN 0.0
-        |             ELSE CAST(rnk - 1 AS DOUBLE) / (ns.n - 1) END AS p
-        |      FROM k JOIN ns ON k.source IS NOT DISTINCT FROM ns.source),
-        |y AS (SELECT doc_id, source, v, (m - 1) * p AS pos2,
-        |        CAST(floor((m - 1) * p) AS BIGINT) + 1 AS lo,
-        |        CAST(ceil((m - 1) * p) AS BIGINT) + 1 AS hi
-        |      FROM x, m)
-        |SELECT y.source, y.doc_id, y.v AS n_tokens,
-        |  CASE WHEN hi = lo OR h.rv = l.rv THEN l.rv
-        |       ELSE (hi - 1 - pos2) * l.rv + (pos2 - (lo - 1)) * h.rv
-        |  END AS mapped
-        |FROM y JOIN rp l ON l.pos = y.lo JOIN rp h ON h.pos = y.hi""".stripMargin,
-
-    "q_pct_rank" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |q AS (SELECT * FROM t WHERE doc_id % 5 = 0),
-        |r AS (SELECT n_tokens FROM t WHERE doc_id % 5 <> 0),
-        |n AS (SELECT count(*) AS n_ref FROM r)
-        |SELECT q.doc_id, CAST(q.n_tokens AS DOUBLE) AS n_tokens,
-        |  (SELECT count(*) FROM r WHERE r.n_tokens <= q.n_tokens) AS n_le,
-        |  n_ref
-        |FROM q, n""".stripMargin,
-
-    "q_vocab_coverage" ->
-      """WITH tk AS (
-        |  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-        |  FROM documents),
-        |f AS (SELECT term, count(*) AS freq FROM tk GROUP BY 1),
-        |t AS (SELECT CAST(sum(freq) AS BIGINT) AS total FROM f),
-        |r AS (SELECT term, freq,
-        |        CAST(sum(freq) OVER (ORDER BY freq DESC, term
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_freq,
-        |        CAST(row_number() OVER (ORDER BY freq DESC, term) AS BIGINT)
-        |          AS rnk
-        |      FROM f)
-        |SELECT rnk, term, freq, cum_freq, total FROM r, t
-        |WHERE rnk <= 1000""".stripMargin,
-
-    "q_bpe_pairs" ->
-      """WITH w AS (
-        |  SELECT tok AS w, count(*) AS wf FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE len(tok) >= 1 GROUP BY tok),
-        |p AS (
-        |  SELECT unnest(list_transform(range(1, length(w)), i -> w[i:i+1])) AS pair, wf
-        |  FROM w WHERE length(w) >= 2)
-        |SELECT pair, CAST(sum(wf) AS BIGINT) AS n FROM p
-        |GROUP BY pair ORDER BY n DESC, pair ASC LIMIT 200""".stripMargin,
-
-    "q_bpe_merge" ->
-      """WITH RECURSIVE w AS (
-        |  SELECT tok AS w, count(*) AS wf FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE len(tok) >= 1 GROUP BY tok),
-        |r AS (
-        |  SELECT w, wf,
-        |    ' ' || array_to_string(regexp_extract_all(w, '.'), ' ') || ' ' AS s
-        |  FROM w
-        |  UNION ALL
-        |  SELECT w, wf, replace(s, ' t h ', ' th ') FROM r
-        |  WHERE strpos(s, ' t h ') > 0)
-        |SELECT w, wf, trim(s) AS merged FROM r WHERE strpos(s, ' t h ') = 0""".stripMargin,
-
-    "q_bpe_encode" ->
-      """WITH RECURSIVE w AS (
-        |  SELECT tok AS w FROM (
-        |    SELECT DISTINCT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |    FROM documents)
-        |  WHERE len(tok) >= 1),
-        |r1 AS (
-        |  SELECT w, ' ' || array_to_string(regexp_extract_all(w, '.'), ' ')
-        |    || ' ' AS s
-        |  FROM w
-        |  UNION ALL
-        |  SELECT w, replace(s, ' e r ', ' er ') FROM r1
-        |  WHERE strpos(s, ' e r ') > 0),
-        |f1 AS (SELECT w, s FROM r1 WHERE strpos(s, ' e r ') = 0),
-        |r2 AS (
-        |  SELECT w, s FROM f1
-        |  UNION ALL
-        |  SELECT w, replace(s, ' i n ', ' in ') FROM r2
-        |  WHERE strpos(s, ' i n ') > 0),
-        |f2 AS (SELECT w, s FROM r2 WHERE strpos(s, ' i n ') = 0),
-        |r3 AS (
-        |  SELECT w, s FROM f2
-        |  UNION ALL
-        |  SELECT w, replace(s, ' o w ', ' ow ') FROM r3
-        |  WHERE strpos(s, ' o w ') > 0),
-        |f3 AS (SELECT w, s FROM r3 WHERE strpos(s, ' o w ') = 0),
-        |enc AS (SELECT w,
-        |    CAST(len(regexp_split_to_array(trim(s), ' ')) AS BIGINT) AS n_sub
-        |  FROM f3),
-        |tk AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |  FROM documents)
-        |SELECT doc_id, count(*) AS n_words,
-        |  CAST(sum(n_sub) AS BIGINT) AS n_subtokens
-        |FROM tk JOIN enc USING (w)
-        |GROUP BY doc_id""".stripMargin,
-
-    "q_chunk" ->
-      """SELECT doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_idx,
-        |       array_to_string(toks[s:s+31], ' ') AS chunk,
-        |       CAST(len(toks[s:s+31]) AS BIGINT) AS n_tokens
-        |FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |      FROM documents),
-        |     UNNEST(range(1, greatest(len(toks) - 8, 1) + 1, 24)) AS u(s)""".stripMargin,
-
-    "q_shuffle_order" ->
-      """SELECT doc_id,
-        |  CAST(row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR))) AS BIGINT) AS pos
-        |FROM documents""".stripMargin,
-
-    "q_pack" ->
-      """SELECT doc_id, CAST((cum - t) // 2048 AS BIGINT) AS seq_id FROM (
-        |  SELECT doc_id, t, SUM(t) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM (SELECT doc_id,
-        |          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS t
-        |        FROM documents))""".stripMargin,
-
-    "q_pack_stats" ->
-      """SELECT seq_id, count(*) AS n_docs, CAST(sum(t) AS BIGINT) AS n_tokens
-        |FROM (
-        |  SELECT CAST((cum - t) // 2048 AS BIGINT) AS seq_id, t FROM (
-        |    SELECT t, SUM(t) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |    FROM (SELECT doc_id,
-        |            CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS t
-        |          FROM documents)))
-        |GROUP BY seq_id""".stripMargin,
-
-    "q_pack_text" ->
-      """WITH a AS (
-        |  SELECT doc_id, text, CAST((cum - t) // 2048 AS BIGINT) AS seq_id FROM (
-        |    SELECT doc_id, text, t,
-        |      SUM(t) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |    FROM (SELECT doc_id, text,
-        |            CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS t
-        |          FROM documents)))
-        |SELECT seq_id, min(doc_id) AS first_doc_id, max(doc_id) AS last_doc_id,
-        |  count(*) AS n_docs,
-        |  string_agg(text, ' ' ORDER BY doc_id) AS text
-        |FROM a GROUP BY seq_id""".stripMargin,
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[\p{L}\p{N}]+|[^\p{L}\p{N}\s]')) AS BIGINT) AS n_bpe_tokens
-        |FROM documents""".stripMargin,
-
-    // Luhn: the same HOF checksum (double every second from the right,
-    // overflow −9), the engine's append-zero check-digit derivation
-    "q_pii_luhn" -> {
-      def lsum(s: String): String =
-        s"list_sum(list_transform(range(1, length($s) + 1), i -> " +
-          s"CASE WHEN (length($s) - i) % 2 = 1 THEN " +
-          s"CASE WHEN 2 * CAST(substr($s, i, 1) AS INT) > 9 " +
-          s"THEN 2 * CAST(substr($s, i, 1) AS INT) - 9 " +
-          s"ELSE 2 * CAST(substr($s, i, 1) AS INT) END " +
-          s"ELSE CAST(substr($s, i, 1) AS INT) END))"
-      s"""WITH b AS (
-         |  SELECT doc_id,
-         |    lpad(CAST(doc_id % 100000000000000 AS VARCHAR), 15, '4') AS base
-         |  FROM documents),
-         |cd AS (SELECT doc_id, base,
-         |         (10 - (${lsum("(base || '0')")} % 10)) % 10 AS d0
-         |       FROM b),
-         |cc AS (SELECT doc_id,
-         |         base || CAST(CASE WHEN doc_id % 3 = 0 THEN (d0 + 1) % 10
-         |                           ELSE d0 END AS VARCHAR) AS cc
-         |       FROM cd)
-         |SELECT doc_id, cc,
-         |  length(cc) >= 2 AND regexp_matches(cc, '^[0-9]+$$')
-         |    AND ${lsum("cc")} % 10 = 0 AS valid,
-         |  CAST(${lsum("cc")} % 10 AS BIGINT) AS mod10
-         |FROM cc""".stripMargin
-    },
-
-    // IBAN mod-97: rotate country+check to the end, expand A-Z to 10..35,
-    // fold (acc*10^k + v) % 97 left-to-right — the engine's exact
-    // incremental reduction; the check-digit derivation (98 - residue of
-    // the zero-check form) is replayed with the same fold
-    "q_pii_iban" -> {
-      // mod-97 residue of the ROTATED string s (rot = substr(s,5)||first4)
-      def m97(s: String): String = {
-        val rot = s"(substr($s, 5) || substr($s, 1, 4))"
-        s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-          s"list_transform(range(1, length($rot) + 1), i -> " +
-          s"CASE WHEN substr($rot, i, 1) BETWEEN '0' AND '9' " +
-          s"THEN CAST(ascii(substr($rot, i, 1)) - 48 AS BIGINT) " +
-          s"WHEN substr($rot, i, 1) BETWEEN 'A' AND 'Z' " +
-          s"THEN CAST(ascii(substr($rot, i, 1)) - 55 AS BIGINT) END)), " +
-          s"(acc, v) -> CASE WHEN v < 10 THEN (acc * 10 + v) % 97 " +
-          s"ELSE (acc * 100 + v) % 97 END)"
-      }
-      s"""WITH b AS (
-         |  SELECT doc_id,
-         |    lpad(CAST(doc_id % 1000000000000000000 AS VARCHAR), 18, '0') AS bban
-         |  FROM documents),
-         |cd AS (SELECT doc_id, bban,
-         |         lpad(CAST(98 - ${m97("('DE00' || bban)")} AS VARCHAR), 2, '0') AS cdg
-         |       FROM b),
-         |ib AS (SELECT doc_id,
-         |         'DE' || cdg ||
-         |           CASE WHEN doc_id % 4 = 0
-         |                THEN substr(bban, 1, 17) ||
-         |                  CAST((CAST(substr(bban, 18, 1) AS INT) + 1) % 10 AS VARCHAR)
-         |                ELSE bban END AS iban
-         |       FROM cd)
-         |SELECT doc_id, iban,
-         |  CAST(${m97("iban")} AS BIGINT) AS m97,
-         |  coalesce(${m97("iban")} = 1, FALSE) AS valid
-         |FROM ib""".stripMargin
-    },
-
-    // code detection: replace() length-difference counts, integer weights,
-    // per-mille cross-product threshold; the planted snippet is stated
-    // verbatim
-    "q_code_detect" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text ||
-        |      ' function update(x) { var t = x + 1; return t; } if (t) { t = t + 2; }'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |s AS (SELECT doc_id, length(text) AS n_chars,
-        |    (length(text) - length(replace(text, '{', ''))
-        |     + length(text) - length(replace(text, '}', ''))) * 3
-        |    + (length(text) - length(replace(text, ';', ''))) * 3
-        |    + (length(text) - length(replace(text, '=', ''))) * 2
-        |    + (length(text) - length(replace(text, '(', '')))
-        |    + (length(text) - length(replace(text, ')', '')))
-        |    + ((length(text) - length(replace(text, 'function', ''))) // 8
-        |       + (length(text) - length(replace(text, 'return ', ''))) // 7
-        |       + (length(text) - length(replace(text, ' var ', ''))) // 5) * 5
-        |    AS score
-        |  FROM d)
-        |SELECT doc_id, CAST(score AS BIGINT) AS score,
-        |  CAST(n_chars AS BIGINT) AS n_chars,
-        |  score * 1000 >= 5 * n_chars AS is_code
-        |FROM s""".stripMargin,
-
-    // span corruption: same salted start predicate, interval union via
-    // the lag-gap island window, sentinel numbering by island order,
-    // both rebuilds ordered string_aggs (nulls drop mid-island slots)
-    "q_span_corrupt" ->
-      """WITH tk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |            FROM documents),
-        |pos AS (SELECT doc_id, len(t) AS n, p, t[p+1] AS tok
-        |        FROM tk, UNNEST(range(0, len(t))) r(p)),
-        |st AS (SELECT doc_id, p, n FROM pos
-        |       WHERE ('0x' || substr(md5(doc_id || ':' || p || ':corrupt'), 1, 15))::UBIGINT
-        |             % 20 = 0),
-        |cov AS (SELECT DISTINCT doc_id, c
-        |        FROM st, UNNEST(range(p, least(p + 3, n))) r(c)),
-        |g AS (SELECT doc_id, c,
-        |        CASE WHEN c - lag(c) OVER (PARTITION BY doc_id ORDER BY c) = 1
-        |             THEN 0 ELSE 1 END AS neww
-        |      FROM cov),
-        |gg AS (SELECT doc_id, c, neww,
-        |        sum(neww) OVER (PARTITION BY doc_id ORDER BY c
-        |          ROWS UNBOUNDED PRECEDING) - 1 AS gid
-        |       FROM g),
-        |m AS (SELECT pos.doc_id, pos.p, pos.tok, gg.neww, gg.gid
-        |      FROM pos LEFT JOIN gg ON gg.doc_id = pos.doc_id AND gg.c = pos.p),
-        |agg AS (SELECT doc_id,
-        |    string_agg(CASE WHEN gid IS NULL THEN tok
-        |                    WHEN neww = 1 THEN '<extra_id_' || gid || '>' END,
-        |      ' ' ORDER BY p) AS input,
-        |    string_agg(CASE WHEN gid IS NOT NULL THEN
-        |        (CASE WHEN neww = 1 THEN '<extra_id_' || gid || '> ' ELSE '' END) || tok
-        |      END, ' ' ORDER BY p) AS tgt,
-        |    CAST(count(gid) AS BIGINT) AS n_masked,
-        |    max(gid) + 1 AS ns
-        |  FROM m GROUP BY doc_id)
-        |SELECT doc_id, coalesce(input, '') AS input,
-        |  CASE WHEN n_masked > 0 THEN tgt || ' <extra_id_' || ns || '>'
-        |       ELSE '' END AS target,
-        |  n_masked
-        |FROM agg""".stripMargin,
-
-    // snake sharding: global mass rank, boustrophedon shard expression
-    "q_shard_balance" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |r AS (SELECT doc_id, n_tokens,
-        |        CAST(row_number() OVER (ORDER BY n_tokens DESC NULLS LAST, doc_id)
-        |          AS BIGINT) AS rank
-        |      FROM t)
-        |SELECT doc_id, n_tokens, rank,
-        |  CASE WHEN (rank - 1) % 16 < 8 THEN (rank - 1) % 16
-        |       ELSE 15 - (rank - 1) % 16 END AS shard
-        |FROM r""".stripMargin,
-
-    "q_fingerprint" ->
-      "SELECT doc_id, md5(text) AS fp FROM documents",
-
-    // fused feature export: the member oracles combined — the ENGINE side
-    // is one scan; the oracle may join freely
-    "q_doc_features" ->
-      """WITH cp AS (
-        |  SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_cp,
-        |    count(*) AS n_distinct,
-        |    CAST(max(cnt) AS BIGINT) AS max_cnt,
-        |    CAST(sum(cnt * cnt) AS BIGINT) AS sum_sq
-        |  FROM (SELECT doc_id, ch, count(*) AS cnt
-        |        FROM (SELECT doc_id, unnest(string_split(text, '')) AS ch
-        |              FROM documents)
-        |        GROUP BY doc_id, ch) GROUP BY doc_id),
-        |base AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS sum_token_len,
-        |    CAST(len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','it'], t))) AS BIGINT) AS n_stop,
-        |    CAST(len(regexp_extract_all(text, '[\p{L}\p{N}]+|[^\p{L}\p{N}\s]')) AS BIGINT) AS n_bpe_tokens,
-        |    md5(text) AS fp
-        |  FROM (SELECT doc_id, text,
-        |          regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents))
-        |SELECT base.doc_id, n_chars, n_tokens, sum_token_len, n_stop,
-        |  coalesce(cp.n_cp, 0) AS n_cp,
-        |  coalesce(cp.n_distinct, 0) AS n_distinct,
-        |  coalesce(cp.max_cnt, 0) AS max_cnt,
-        |  coalesce(cp.sum_sq, 0) AS sum_sq,
-        |  n_bpe_tokens, fp
-        |FROM base LEFT JOIN cp USING (doc_id)""".stripMargin,
-
-    "q_normalize" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N}\s]', ' ', 'g'),
-        |       '\s+', ' ', 'g')) AS canon
-        |FROM documents""".stripMargin,
-
-    "q_redact" ->
-      """SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    text || ' contact u' || doc_id || '@example.com from 10.0.'
-        |         || (doc_id % 255) || '.9 card 4111222233334444 call 555-123-4567',
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\b\d{12,19}\b', '<LONGNUM>', 'g'),
-        |    '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g') AS redacted
-        |FROM documents""".stripMargin,
-
-    "q_char_entropy" ->
-      """WITH c AS (SELECT doc_id, unnest(string_split(text, '')) AS ch
-        |           FROM documents),
-        |h AS (SELECT doc_id, ch, count(*) AS cnt FROM c GROUP BY doc_id, ch)
-        |SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_cp,
-        |  count(*) AS n_distinct,
-        |  CAST(max(cnt) AS BIGINT) AS max_cnt,
-        |  CAST(sum(cnt * cnt) AS BIGINT) AS sum_sq
-        |FROM h GROUP BY doc_id""".stripMargin,
-
-    "q_tfidf_terms" ->
-      """WITH tk AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |s AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |        tf.tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0) AS score
-        |      FROM tf JOIN df USING (term), n)
-        |SELECT doc_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, term) AS INTEGER) AS rnk,
-        |  term, tf, df
-        |FROM s QUALIFY rnk <= 3""".stripMargin,
-
-    "q_repetition" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |        unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS gram
-        |      FROM t WHERE len(toks) >= 2),
-        |c AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-        |m AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS top_bigram_frac
-        |      FROM c GROUP BY 1)
-        |SELECT t.doc_id,
-        |  CASE WHEN len(toks) > 0
-        |       THEN 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
-        |       ELSE 0.0 END AS dup_token_frac,
-        |  coalesce(m.top_bigram_frac, 0.0) AS top_bigram_frac
-        |FROM t LEFT JOIN m USING (doc_id)""".stripMargin,
-
-    "q_gopher" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 23 = 0 THEN '- ' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 9 = 0 THEN '# ' ELSE '' END) ||
-        |    text ||
-        |    (CASE WHEN doc_id % 6 = 0 THEN ' ...' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 17 = 0
-        |          THEN ' 123 456 789 000 111 222 333 444 555 666'
-        |          ELSE '' END) AS t
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(trim(t), '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(t, '\s', '', 'g')) AS BIGINT) AS sum_token_len,
-        |    CAST(len(regexp_extract_all(' ' || t, '\s\S*[A-Za-z]')) AS BIGINT) AS n_alpha_tokens,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(t), '\s+'),
-        |      x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS BIGINT) AS n_stop,
-        |    CAST((length(t) - length(replace(t, '#', '')))
-        |      + (length(t) - length(replace(t, '...', ''))) // 3 AS BIGINT) AS n_symbols,
-        |    CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-        |    CAST(len(regexp_extract_all(chr(10) || t, chr(10) || '[-*•]')) AS BIGINT) AS n_bullet_lines,
-        |    CAST(len(regexp_extract_all(t || chr(10), '(\.\.\.|…)' || chr(10))) AS BIGINT) AS n_ellipsis_lines
-        |  FROM g)
-        |SELECT doc_id, n_tokens, sum_token_len, n_alpha_tokens, n_stop,
-        |  n_symbols, n_lines, n_bullet_lines, n_ellipsis_lines,
-        |  CAST((n_tokens >= 40 AND n_tokens <= 100000
-        |    AND sum_token_len >= n_tokens * 3 AND sum_token_len <= n_tokens * 10
-        |    AND n_symbols * 10 <= n_tokens
-        |    AND n_bullet_lines * 10 <= n_lines * 9
-        |    AND n_ellipsis_lines * 10 <= n_lines * 3
-        |    AND n_alpha_tokens * 5 >= n_tokens * 4
-        |    AND n_stop >= 2) AS BIGINT) AS keep
-        |FROM c""".stripMargin,
-
-    "q_c4_filter" ->
-      """WITH t2 AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 7 = 0 THEN 'lorem ipsum filler text here.' || chr(10) ELSE '' END) ||
-        |    (CASE WHEN doc_id % 11 = 0 THEN 'too short.' || chr(10) ELSE '' END) ||
-        |    (CASE WHEN doc_id % 13 = 0 THEN 'this page uses javascript heavily.' || chr(10) ELSE '' END) ||
-        |    regexp_replace(text, '(table|row) ', '\1.' || chr(10), 'g') ||
-        |    (CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'if (x) { return; }' ELSE '' END) AS t
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, t,
-        |    list_filter(string_split(t, chr(10)), l ->
-        |      regexp_matches(l, '[.!?"”]$')
-        |      AND len(regexp_split_to_array(trim(l), '\s+')) >= 3
-        |      AND NOT contains(lower(l), 'javascript')) AS kept
-        |  FROM t2)
-        |SELECT doc_id,
-        |  -- DuckDB array_to_string([]) is NULL; engine keeps '' for empty pages
-        |  coalesce(array_to_string(kept, chr(10)), '') AS clean_text,
-        |  CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |  CAST((len(kept) >= 2 AND NOT contains(lower(t), 'lorem ipsum')
-        |    AND NOT contains(t, '{')) AS BIGINT) AS keep
-        |FROM k""".stripMargin,
-
-    "q_pipeline_quality" ->
-      """WITH t2 AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 7 = 0 THEN 'lorem ipsum filler text here.' || chr(10) ELSE '' END) ||
-        |    (CASE WHEN doc_id % 11 = 0 THEN 'too short.' || chr(10) ELSE '' END) ||
-        |    (CASE WHEN doc_id % 13 = 0 THEN 'this page uses javascript heavily.' || chr(10) ELSE '' END) ||
-        |    regexp_replace(text, '(table|row) ', '\1.' || chr(10), 'g') ||
-        |    (CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'if (x) { return; }' ELSE '' END) AS t
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, t,
-        |    list_filter(string_split(t, chr(10)), l ->
-        |      regexp_matches(l, '[.!?"”]$')
-        |      AND len(regexp_split_to_array(trim(l), '\s+')) >= 3
-        |      AND NOT contains(lower(l), 'javascript')) AS kept
-        |  FROM t2),
-        |pages AS (
-        |  SELECT doc_id, coalesce(array_to_string(kept, chr(10)), '') AS clean_text
-        |  FROM k
-        |  WHERE len(kept) >= 2 AND NOT contains(lower(t), 'lorem ipsum')
-        |    AND NOT contains(t, '{')),
-        |c AS (
-        |  SELECT doc_id, clean_text,
-        |    CAST(len(regexp_split_to_array(trim(clean_text), '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(regexp_replace(clean_text, '\s', '', 'g')) AS BIGINT) AS sum_token_len,
-        |    CAST(len(regexp_extract_all(' ' || clean_text, '\s\S*[A-Za-z]')) AS BIGINT) AS n_alpha_tokens,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(clean_text), '\s+'),
-        |      x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS BIGINT) AS n_stop,
-        |    CAST((length(clean_text) - length(replace(clean_text, '#', '')))
-        |      + (length(clean_text) - length(replace(clean_text, '...', ''))) // 3 AS BIGINT) AS n_symbols,
-        |    CAST(len(string_split(clean_text, chr(10))) AS BIGINT) AS n_lines,
-        |    CAST(len(regexp_extract_all(chr(10) || clean_text, chr(10) || '[-*•]')) AS BIGINT) AS n_bullet_lines,
-        |    CAST(len(regexp_extract_all(clean_text || chr(10), '(\.\.\.|…)' || chr(10))) AS BIGINT) AS n_ellipsis_lines
-        |  FROM pages)
-        |SELECT doc_id, clean_text FROM c
-        |WHERE n_tokens >= 20 AND n_tokens <= 100000
-        |  AND sum_token_len >= n_tokens * 3 AND sum_token_len <= n_tokens * 10
-        |  AND n_symbols * 10 <= n_tokens
-        |  AND n_bullet_lines * 10 <= n_lines * 9
-        |  AND n_ellipsis_lines * 10 <= n_lines * 3
-        |  AND n_alpha_tokens * 5 >= n_tokens * 4
-        |  AND n_stop >= 2""".stripMargin,
-
-    "q_decontam" ->
-      """WITH s AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' ')))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |b AS (SELECT DISTINCT sh FROM s WHERE doc_id % 97 = 0)
-        |SELECT s.doc_id, count(*) AS n_shingles, count(b.sh) AS n_hit
-        |FROM s LEFT JOIN b USING (sh)
-        |GROUP BY 1""".stripMargin,
-
-    "q_dedup_fuzzy" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS title FROM documents),
-        |k AS (
-        |  SELECT doc_id, title, substr(lower(trim(title)), 1, 8) AS blk FROM d
-        |  WHERE substr(lower(trim(title)), 1, 8) IS NOT NULL
-        |    AND len(substr(lower(trim(title)), 1, 8)) > 0),
-        |c AS (SELECT blk FROM (SELECT blk, count(*) AS n FROM k GROUP BY blk)
-        |      WHERE n <= 80),
-        |f AS (SELECT k.* FROM k JOIN c USING (blk))
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(levenshtein(a.title, b.title) AS BIGINT) AS dist
-        |FROM f a JOIN f b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |WHERE abs(len(a.title) - len(b.title)) <= 5
-        |  AND levenshtein(a.title, b.title) <= 5""".stripMargin,
-
-    // sorted-neighborhood: global (key, id) rank, rank-successor pairs
-    // within the window, Jaro-Winkler verify
-    "q_link_snm" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS title FROM documents),
-        |k AS (SELECT doc_id, title, lower(trim(title)) AS key FROM d
-        |      WHERE lower(trim(title)) IS NOT NULL
-        |        AND len(lower(trim(title))) > 0),
-        |r AS (SELECT doc_id, title,
-        |        row_number() OVER (ORDER BY key, doc_id) AS rnk FROM k)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(b.rnk - a.rnk AS BIGINT) AS rank_gap,
-        |  jaro_winkler_similarity(a.title, b.title) AS jw
-        |FROM r a JOIN r b ON b.rnk - a.rnk BETWEEN 1 AND 5
-        |WHERE jaro_winkler_similarity(a.title, b.title) >= 0.85""".stripMargin,
-
-    "q_link_jw" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS title FROM documents),
-        |k AS (
-        |  SELECT doc_id, title, substr(lower(trim(title)), 1, 8) AS blk FROM d
-        |  WHERE substr(lower(trim(title)), 1, 8) IS NOT NULL
-        |    AND len(substr(lower(trim(title)), 1, 8)) > 0),
-        |c AS (SELECT blk FROM (SELECT blk, count(*) AS n FROM k GROUP BY blk)
-        |      WHERE n <= 80),
-        |f AS (SELECT k.* FROM k JOIN c USING (blk))
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  jaro_winkler_similarity(a.title, b.title) AS jw
-        |FROM f a JOIN f b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |WHERE jaro_winkler_similarity(a.title, b.title) >= 0.88""".stripMargin,
-
-    "q_decontam_bloom" ->
-      """WITH s AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' ')))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |b AS (SELECT DISTINCT sh FROM s WHERE doc_id % 89 = 0)
-        |SELECT s.doc_id, count(*) AS n_shingles, count(b.sh) AS n_hit
-        |FROM s LEFT JOIN b USING (sh)
-        |GROUP BY 1""".stripMargin,
-
-    "q_dedup_report" ->
-      """SELECT source, count(*) AS n_docs,
-        |  count(DISTINCT md5(text)) AS n_distinct,
-        |  count(*) - count(DISTINCT md5(text)) AS n_dup_rows
-        |FROM documents GROUP BY source""".stripMargin,
-
-    "q_corpus_diff" ->
-      """WITH p AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 10 < 8),
-        |n AS (SELECT doc_id,
-        |        md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END) AS fp
-        |      FROM documents WHERE doc_id % 10 >= 2)
-        |SELECT COALESCE(p.doc_id, n.doc_id) AS doc_id,
-        |  CASE WHEN p.doc_id IS NULL THEN 'added'
-        |       WHEN n.doc_id IS NULL THEN 'removed'
-        |       WHEN p.fp IS NOT DISTINCT FROM n.fp THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM p FULL OUTER JOIN n ON p.doc_id = n.doc_id""".stripMargin,
-
-    "q_split_decontam" ->
-      """WITH sp AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::UBIGINT % 10000 AS BIGINT) AS b
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' ')))) AS sh
-        |  FROM sp WHERE b >= 8000),
-        |tr AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' ')))) AS sh
-        |  FROM sp WHERE b < 8000)
-        |SELECT s.doc_id, count(*) AS n_shingles, count(tr.sh) AS n_hit
-        |FROM s LEFT JOIN tr USING (sh)
-        |GROUP BY 1""".stripMargin,
-
-    "q_ngram_freq" ->
-      """SELECT gram, count(*) AS n FROM (
-        |  SELECT unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS gram
-        |  FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks FROM documents))
-        |GROUP BY 1 ORDER BY n DESC, gram ASC LIMIT 100""".stripMargin,
-
-    // zipf/heaps: quantized-ln OLS — integer moments in HUGEINT, the
-    // slope/intercept doubles in the engine's exact op order
-    "q_zipf" -> hsOracle("n,sx*,sy*,sxy*,sxx*,slope,intercept")(
-      """WITH f AS (
-        |  SELECT sh, count(*) AS freq FROM (
-        |    SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |    FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks FROM documents))
-        |  GROUP BY sh),
-        |r AS (SELECT freq, row_number() OVER (ORDER BY freq DESC, sh) AS rank FROM f),
-        |pts AS (SELECT
-        |    CAST(floor(ln(CAST(rank AS DOUBLE)) * 1048576.0 + 0.5) AS BIGINT) AS x,
-        |    CAST(floor(ln(CAST(freq AS DOUBLE)) * 1048576.0 + 0.5) AS BIGINT) AS y
-        |  FROM r),
-        |a AS (SELECT count(*) AS n,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-        |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx
-        |  FROM pts),
-        |s AS (SELECT n, CAST(sx AS DECIMAL(38,0)) AS sx, CAST(sy AS DECIMAL(38,0)) AS sy,
-        |    CAST(sxy AS DECIMAL(38,0)) AS sxy, CAST(sxx AS DECIMAL(38,0)) AS sxx,
-        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-        |      (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope
-        |  FROM a)
-        |SELECT n, sx, sy, sxy, sxx, slope,
-        |  (CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept
-        |FROM s""".stripMargin),
-
-    "q_gini" -> hsOracle("n,sum_x*,sum_ix*,gini")(
-      """WITH f AS (
-        |  SELECT sh, count(*) AS x FROM (
-        |    SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |    FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks FROM documents))
-        |  GROUP BY sh),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x, sh) AS i FROM f),
-        |a AS (SELECT count(*) AS n, sum(CAST(x AS HUGEINT)) AS sum_x,
-        |        sum(CAST(i AS HUGEINT) * CAST(x AS HUGEINT)) AS sum_ix FROM r)
-        |SELECT n, CAST(sum_x AS DECIMAL(38,0)) AS sum_x,
-        |  CAST(sum_ix AS DECIMAL(38,0)) AS sum_ix,
-        |  (2.0 * CAST(sum_ix AS DOUBLE) -
-        |    (CAST(n AS DOUBLE) + 1.0) * CAST(sum_x AS DOUBLE)) /
-        |    (CAST(n AS DOUBLE) * CAST(sum_x AS DOUBLE)) AS gini
-        |FROM a""".stripMargin),
-
-    // Lorenz: integer decile rank boundaries, kept-mass tie splitting,
-    // exact HUGEINT mass numerators, one double share per point
-    "q_lorenz" -> hsOracle("i,r,n,mass*,pop_share,mass_share")(
-      """WITH c AS (SELECT CAST(n_chars AS BIGINT) AS x,
-        |             CAST(count(*) AS BIGINT) AS c
-        |           FROM documents WHERE n_chars IS NOT NULL AND n_chars >= 0
-        |           GROUP BY 1),
-        |cum AS (SELECT x, c, CAST(sum(c) OVER (ORDER BY x) AS BIGINT) AS cum
-        |        FROM c),
-        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-        |        sum(CAST(x AS HUGEINT) * c) AS s FROM c),
-        |pts AS (SELECT unnest(range(1, 11)) AS i),
-        |m AS (SELECT i, (i * n) // 10 AS r, n, s,
-        |    sum(CAST(x AS HUGEINT) *
-        |        (least(cum, (i * n) // 10) - least(cum - c, (i * n) // 10))) AS mass
-        |  FROM cum CROSS JOIN pts CROSS JOIN t
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT CAST(i AS BIGINT) AS i, CAST(r AS BIGINT) AS r, n,
-        |  CAST(mass AS DECIMAL(38,0)) AS mass,
-        |  CAST(r AS DOUBLE) / CAST(n AS DOUBLE) AS pop_share,
-        |  CASE WHEN s <> 0 THEN CAST(mass AS DOUBLE) / CAST(s AS DOUBLE)
-        |  END AS mass_share
-        |FROM m""".stripMargin),
-
-    // Hill: DESC-cumulative kept multiplicities, quantized-ln diffs vs
-    // the (k+1)-th order statistic, order-free HUGEINT sum
-    "q_hill" -> hsOracle("k,n,x_ref,s_gamma*,gamma,alpha")(
-      """WITH c AS (SELECT CAST(n_chars AS BIGINT) AS x,
-        |             CAST(count(*) AS BIGINT) AS c
-        |           FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
-        |           GROUP BY 1),
-        |cum AS (SELECT x, c, CAST(sum(c) OVER (ORDER BY x DESC) AS BIGINT) AS cum
-        |        FROM c),
-        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM c),
-        |xr AS (SELECT max(x) AS x_ref FROM cum WHERE cum >= 101),
-        |s AS (SELECT sum(CAST(greatest(least(cum, 100) - (cum - c), 0) AS HUGEINT) *
-        |    (CAST(floor(ln(CAST(x AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |     - CAST(floor(ln(CAST(x_ref AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_gamma
-        |  FROM cum, xr)
-        |SELECT CAST(100 AS BIGINT) AS k, n, x_ref,
-        |  CAST(s_gamma AS DECIMAL(38,0)) AS s_gamma,
-        |  CAST(s_gamma AS DOUBLE) / (100.0 * 1048576.0) AS gamma,
-        |  CASE WHEN s_gamma <> 0
-        |    THEN 1.0 / (CAST(s_gamma AS DOUBLE) / (100.0 * 1048576.0))
-        |  END AS alpha
-        |FROM s, t, xr""".stripMargin),
-
-    // Theil T: integer-product terms under the quantized ln, order-free
-    // HUGEINT sum, one fixed-order double readout
-    "q_theil" -> hsOracle("n,sum_x*,s_t*,theil")(
-      """WITH v AS (SELECT CAST(n_chars AS BIGINT) AS x FROM documents
-        |           WHERE n_chars IS NOT NULL AND n_chars > 0),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        sum(CAST(x AS HUGEINT)) AS sum_x FROM v),
-        |s AS (SELECT sum(CAST(x AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(CAST(x AS HUGEINT) * n AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(sum_x AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_t
-        |     FROM v, t)
-        |SELECT n, CAST(sum_x AS DECIMAL(38,0)) AS sum_x,
-        |  CAST(s_t AS DECIMAL(38,0)) AS s_t,
-        |  CAST(s_t AS DOUBLE) / (CAST(sum_x AS DOUBLE) * 1048576.0) AS theil
-        |FROM s, t""".stripMargin),
-
-    // MI: per-cell integer-product log-ratio terms vs the marginal
-    // product, entropies on the marginal histograms, NMI readout
-    "q_mutual_info" -> hsOracle("n,k,s_mi*,s_hx*,s_hy*,mi,h_x,h_y,nmi")(
-      """WITH c AS (
-        |  SELECT CAST(source AS VARCHAR) AS x, CAST(lang AS VARCHAR) AS y,
-        |    CAST(count(*) AS BIGINT) AS cxy
-        |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
-        |  GROUP BY 1, 2),
-        |mx AS (SELECT x, CAST(sum(cxy) AS BIGINT) AS cx FROM c GROUP BY 1),
-        |my AS (SELECT y, CAST(sum(cxy) AS BIGINT) AS cy FROM c GROUP BY 1),
-        |t AS (SELECT CAST(sum(cxy) AS BIGINT) AS n,
-        |        CAST(count(*) AS BIGINT) AS k FROM c),
-        |smi AS (SELECT sum(CAST(cxy AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(CAST(cxy AS HUGEINT) * n AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(CAST(cx AS HUGEINT) * cy AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_mi
-        |  FROM c JOIN mx USING (x) JOIN my USING (y), t),
-        |shx AS (SELECT sum(CAST(cx AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(cx AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(n AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_hx
-        |  FROM mx, t),
-        |shy AS (SELECT sum(CAST(cy AS HUGEINT) *
-        |      (CAST(floor(ln(CAST(cy AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT)
-        |       - CAST(floor(ln(CAST(n AS DOUBLE)) * 1048576.0 + 0.5) AS HUGEINT))) AS s_hy
-        |  FROM my, t)
-        |SELECT n, k, CAST(s_mi AS DECIMAL(38,0)) AS s_mi,
-        |  CAST(s_hx AS DECIMAL(38,0)) AS s_hx,
-        |  CAST(s_hy AS DECIMAL(38,0)) AS s_hy,
-        |  CAST(s_mi AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0) AS mi,
-        |  -CAST(s_hx AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0) AS h_x,
-        |  -CAST(s_hy AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0) AS h_y,
-        |  2.0 * (CAST(s_mi AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0)) /
-        |    ((-CAST(s_hx AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0)) +
-        |     (-CAST(s_hy AS DOUBLE) / (CAST(n AS DOUBLE) * 1048576.0))) AS nmi
-        |FROM smi, shx, shy, t""".stripMargin),
-
-    "q_heaps" -> hsOracle("n,sx*,sy*,sxy*,sxx*,slope,intercept")(
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')) AS shs FROM d),
-        |perdoc AS (SELECT doc_id, len(shs) AS n_sh FROM s),
-        |firsts AS (SELECT sh, min(doc_id) AS doc_id
-        |  FROM (SELECT doc_id, unnest(shs) AS sh FROM s) GROUP BY sh),
-        |nn AS (SELECT doc_id, count(*) AS n_new FROM firsts GROUP BY 1),
-        |j AS (SELECT p.doc_id, p.n_sh, COALESCE(nn.n_new, 0) AS n_new
-        |      FROM perdoc p LEFT JOIN nn USING (doc_id)),
-        |c AS (SELECT sum(n_sh) OVER (ORDER BY doc_id) AS cum_tokens,
-        |        sum(n_new) OVER (ORDER BY doc_id) AS cum_vocab FROM j),
-        |pts AS (SELECT
-        |    CAST(floor(ln(CAST(cum_tokens AS DOUBLE)) * 1048576.0 + 0.5) AS BIGINT) AS x,
-        |    CAST(floor(ln(CAST(cum_vocab AS DOUBLE)) * 1048576.0 + 0.5) AS BIGINT) AS y
-        |  FROM c WHERE cum_tokens > 0 AND cum_vocab > 0),
-        |a AS (SELECT count(*) AS n,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-        |    sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx
-        |  FROM pts),
-        |s2 AS (SELECT n, CAST(sx AS DECIMAL(38,0)) AS sx, CAST(sy AS DECIMAL(38,0)) AS sy,
-        |    CAST(sxy AS DECIMAL(38,0)) AS sxy, CAST(sxx AS DECIMAL(38,0)) AS sxx,
-        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-        |      (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope
-        |  FROM a)
-        |SELECT n, sx, sy, sxy, sxx, slope,
-        |  (CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept
-        |FROM s2""".stripMargin),
-
-    "q_pipeline_training" ->
-      """WITH s AS (
-        |  SELECT doc_id, text, toks,
-        |    len(list_intersect(toks, ['the','a','of','and','to','in','is','it'])) AS s_en,
-        |    len(list_intersect(toks, ['el','la','de','los','y','que','en','un'])) AS s_es,
-        |    len(list_intersect(toks, ['der','die','das','und','ein','zu','ist','nicht'])) AS s_de,
-        |    len(list_intersect(toks, ['le','les','des','et','une','est','dans','pour'])) AS s_fr,
-        |    len(list_intersect(toks, ['的','是','了','在','我','有','和','不'])) AS s_zh
-        |  FROM (SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |lang AS (
-        |  SELECT doc_id, text,
-        |    CASE
-        |      WHEN greatest(s_en, s_es, s_de, s_fr, s_zh) = 0 THEN 'und'
-        |      WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'en'
-        |      WHEN s_es = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'es'
-        |      WHEN s_de = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'de'
-        |      WHEN s_fr = greatest(s_en, s_es, s_de, s_fr, s_zh) THEN 'fr'
-        |      ELSE 'zh' END AS lang_pred,
-        |    len(toks) AS n_tokens,
-        |    len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','it'], t))) AS n_stop
-        |  FROM s),
-        |kept AS (
-        |  SELECT doc_id, text FROM lang
-        |  WHERE lang_pred = 'en' AND n_tokens >= 20 AND n_stop * 20 >= n_tokens)
-        |SELECT min(doc_id) AS doc_id,
-        |  CAST(len(regexp_extract_all(max(text), '[\p{L}\p{N}]+|[^\p{L}\p{N}\s]')) AS BIGINT) AS n_bpe_tokens,
-        |  count(*) AS n_dups
-        |FROM kept GROUP BY md5(text)""".stripMargin,
-
-    "q_dedup_exact" ->
-      "SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY 1",
-
-    "q_dedup_ngram" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, CAST(i AS DOUBLE) / (la + lb - i) AS jac
-        |FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5""".stripMargin,
-
-    // ppjoin is EXACT: the oracle is plain brute force at a higher tau
-    "q_dedup_ppjoin" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, CAST(i AS BIGINT) AS inter,
-        |  CAST(i AS DOUBLE) / (la + lb - i) AS jac
-        |FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.6""".stripMargin,
-
-    // cross-side brute force: batch docs against the corpus slice
-    "q_dedup_ppjoin_incr" -> ppjoinIncrSql,
-
-    // the SAME relation drained through the foreachBatch scoring sink as
-    // four micro-batches: per-batch pairs depend only on the batch's own
-    // docs + the static corpus, so the accumulated sink equals the batch
-    "q_stream_ppjoin_gate" -> ppjoinIncrSql,
-
-    // dup_ngram_frac: per-doc duplicate-shingle stats; shingle-less docs
-    // keep a row (0 shingles, null fraction) via the left join back
-    "q_dup_ngram_frac" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
-        |f AS (SELECT shingle, count(*) AS df FROM p GROUP BY shingle),
-        |d AS (SELECT p.doc_id, count(*) AS n_shingles,
-        |        count(CASE WHEN f.df >= 2 THEN 1 END) AS n_dup
-        |      FROM p JOIN f USING (shingle) GROUP BY p.doc_id)
-        |SELECT s.doc_id,
-        |  CAST(COALESCE(d.n_shingles, 0) AS BIGINT) AS n_shingles,
-        |  CAST(COALESCE(d.n_dup, 0) AS BIGINT) AS n_dup,
-        |  CASE WHEN d.n_shingles > 0
-        |       THEN CAST(d.n_dup AS DOUBLE) / d.n_shingles END AS dup_frac
-        |FROM s LEFT JOIN d USING (doc_id)""".stripMargin,
-
-    "q_dedup_cosine" ->
-      """WITH tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' '))) AS term
-        |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |          FROM documents)) GROUP BY 1, 2),
-        |n AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2 FROM tf GROUP BY 1),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |        CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-        |      FROM tf a JOIN tf b ON a.term = b.term AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |c AS (SELECT a_id, b_id, dot, na.n2 AS na2, nb.n2 AS nb2,
-        |        CAST(dot AS DOUBLE) /
-        |          (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE)))
-        |          AS cos
-        |      FROM p JOIN n na ON na.doc_id = a_id JOIN n nb ON nb.doc_id = b_id)
-        |SELECT a_id, b_id, dot, na2, nb2, cos FROM c WHERE cos >= 0.9""".stripMargin,
-
-    "q_dedup_ngram_incr" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0)
-        |SELECT a_id, b_id, CAST(i AS DOUBLE) / (la + lb - i) AS jac
-        |FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5""".stripMargin,
-
-    "q_dedup_containment" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, CAST(i AS DOUBLE) / least(la, lb) AS containment
-        |FROM p WHERE CAST(i AS DOUBLE) / least(la, lb) >= 0.8""".stripMargin,
-
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        |pp AS (SELECT a_id, b_id FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5),
-        |e AS (SELECT a_id AS src, b_id AS dst FROM pp UNION SELECT b_id, a_id FROM pp),
-        |reach(src, dst) AS (
-        |  SELECT src, src FROM e
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
-        |SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src""".stripMargin,
-
-    "q_dedup_survivors" ->
-      """WITH RECURSIVE s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        |pp AS (SELECT a_id, b_id FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5),
-        |e AS (SELECT a_id AS src, b_id AS dst FROM pp UNION SELECT b_id, a_id FROM pp),
-        |reach(src, dst) AS (
-        |  SELECT src, src FROM e
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-        |lab AS (SELECT src AS id, MIN(dst) AS root FROM reach GROUP BY src)
-        |SELECT doc_id, source FROM documents
-        |WHERE doc_id NOT IN (SELECT id FROM lab WHERE id <> root)""".stripMargin,
-
-    "q_dedup_best" ->
-      """WITH RECURSIVE s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        |pp AS (SELECT a_id, b_id FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5),
-        |e AS (SELECT a_id AS src, b_id AS dst FROM pp UNION SELECT b_id, a_id FROM pp),
-        |reach(src, dst) AS (
-        |  SELECT src, src FROM e
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-        |lab AS (SELECT src AS id, MIN(dst) AS root FROM reach GROUP BY src),
-        |m AS (SELECT l.id, l.root, d.n_chars FROM lab l
-        |      JOIN documents d ON d.doc_id = l.id),
-        |r AS (SELECT id, row_number() OVER (PARTITION BY root
-        |        ORDER BY n_chars DESC, id) AS rk FROM m)
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id NOT IN (SELECT id FROM r WHERE rk <> 1)""".stripMargin,
-
-    "q_dedup_ngram_capped" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |post AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS shingle FROM s),
-        |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 5),
-        |kp AS (SELECT post.* FROM post JOIN keep USING (shingle)),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i,
-        |        any_value(a.sz) AS la, any_value(b.sz) AS lb
-        |      FROM kp a JOIN kp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |      GROUP BY a.doc_id, b.doc_id)
-        |SELECT a_id, b_id, CAST(i AS DOUBLE) / (la + lb - i) AS jac
-        |FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5""".stripMargin,
-
-    "q_dedup_minhash" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, CAST(i AS DOUBLE) / (la + lb - i) AS jac
-        |FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5""".stripMargin,
-
-    // pair precision/recall: the simhash and exact-jaccard oracles
-    // inlined, canonical (u, v) join, two scalar counts, two divisions
-    "q_dedup_recall" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |hv AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT AS BIGINT) AS h FROM tok),
-        |votes AS (
-        |  SELECT doc_id, b, SUM(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM hv CROSS JOIN range(60) r(b)
-        |  GROUP BY doc_id, b),
-        |sigs AS (
-        |  SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM votes GROUP BY doc_id),
-        |ap AS (SELECT a.doc_id AS u, b.doc_id AS v
-        |       FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        |       WHERE bit_count(xor(a.sig, b.sig)) <= 6),
-        |s AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents)),
-        |p AS (
-        |  SELECT a.doc_id AS u, b.doc_id AS v,
-        |    len(list_intersect(a.sh, b.sh)) AS i, len(a.sh) AS la, len(b.sh) AS lb
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        |ex AS (SELECT u, v FROM p WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.5)
-        |SELECT
-        |  CAST((SELECT count(*) FROM ex) AS BIGINT) AS n_exact,
-        |  CAST((SELECT count(*) FROM ap) AS BIGINT) AS n_approx,
-        |  CAST((SELECT count(*) FROM ex JOIN ap USING (u, v)) AS BIGINT) AS hits,
-        |  CAST((SELECT count(*) FROM ex JOIN ap USING (u, v)) AS DOUBLE)
-        |    / (SELECT count(*) FROM ex) AS recall,
-        |  CAST((SELECT count(*) FROM ex JOIN ap USING (u, v)) AS DOUBLE)
-        |    / (SELECT count(*) FROM ap) AS prec""".stripMargin,
-
-    // From-scratch SQL simhash over the SAME portable 60-bit md5 token hash
-    // (Sketches.md5Hash60): per (doc, bit) vote, sign -> signature, then the
-    // exact hamming pair filter. The Spark side's banded candidate join is
-    // lossless at maxHamming 6 < chunks 8 (pigeonhole), so brute-force pairs
-    // here are the complete answer.
-    "q_dedup_simhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |hv AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT AS BIGINT) AS h FROM tok),
-        |votes AS (
-        |  SELECT doc_id, b, SUM(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM hv CROSS JOIN range(60) r(b)
-        |  GROUP BY doc_id, b),
-        |sigs AS (
-        |  SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM votes GROUP BY doc_id)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-        |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 6""".stripMargin,
-
-    // simhash as above; rolling_hash = Java's mod-2^64 byte fold, reproduced
-    // with a HUGEINT list_reduce over the UTF-8 bytes then mapped back to the
-    // signed 64-bit range.
-    "q_sketches" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS t FROM documents),
-        |hv AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 15))::UBIGINT AS BIGINT) AS h FROM tok),
-        |votes AS (
-        |  SELECT doc_id, b, SUM(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM hv CROSS JOIN range(60) r(b)
-        |  GROUP BY doc_id, b),
-        |sigs AS (
-        |  SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM votes GROUP BY doc_id),
-        |roll AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-        |              THEN u - 18446744073709551616::HUGEINT ELSE u END AS BIGINT) AS rolling_hash
-        |  FROM (
-        |    SELECT doc_id, list_reduce(
-        |      list_prepend(0::HUGEINT, list_transform(range(octet_length(encode(text))),
-        |        i -> (('0x' || substr(to_hex(encode(text)), CAST(i * 2 + 1 AS INTEGER), 2))::UBIGINT)::HUGEINT)),
-        |      (h, b) -> (h * 1000003 + b) % 18446744073709551616::HUGEINT) AS u
-        |    FROM documents))
-        |SELECT s.doc_id, s.simhash, r.rolling_hash FROM sigs s JOIN roll r USING (doc_id)""".stripMargin,
-
-    // KMV sketch = the k smallest distinct md5-60 values: pure SQL replay.
-    // Estimator op order mirrors the engine: (k-1)·2^60 exact in double
-    // (6 significant bits), ONE division — bit-identical both sides.
-    "q_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT lang,
-        |    CAST(('0x' || substr(md5(text), 1, 15))::UBIGINT AS BIGINT) AS h60
-        |  FROM documents WHERE text IS NOT NULL),
-        |r AS (SELECT lang, h60,
-        |        row_number() OVER (PARTITION BY lang ORDER BY h60) AS rn FROM h),
-        |s AS (SELECT lang, count(*) AS n_minima, max(h60) AS kth
-        |      FROM r WHERE rn <= 64 GROUP BY lang)
-        |SELECT lang, n_minima, kth,
-        |  CASE WHEN n_minima < 64 THEN CAST(n_minima AS DOUBLE)
-        |       ELSE 63.0 * 1152921504606846976.0 / CAST(kth AS DOUBLE) END AS est
-        |FROM s""".stripMargin,
-
-    "q_kmv_setops" ->
-      """WITH d AS (
-        |  SELECT source, doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |  FROM documents WHERE source IN ('src1', 'src2')),
-        |sh AS (
-        |  SELECT DISTINCT source,
-        |    CAST(('0x' || substr(md5(s), 1, 15))::UBIGINT AS BIGINT) AS h60
-        |  FROM (SELECT source, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |          i -> array_to_string(toks[i:i+2], ' ')))) AS s FROM d)),
-        |r AS (SELECT source, h60,
-        |        row_number() OVER (PARTITION BY source ORDER BY h60) AS rn FROM sh),
-        |mins AS (SELECT source, h60 FROM r WHERE rn <= 256),
-        |u AS (SELECT h60, count(*) AS n_sides FROM mins GROUP BY h60),
-        |ur AS (SELECT h60, n_sides, row_number() OVER (ORDER BY h60) AS rn FROM u),
-        |uk AS (SELECT h60, n_sides FROM ur WHERE rn <= 256),
-        |agg AS (SELECT count(*) AS n_union_minima, max(h60) AS kth_union,
-        |          CAST(count(*) FILTER (n_sides = 2) AS BIGINT) AS common
-        |        FROM uk),
-        |est AS (SELECT *,
-        |          CASE WHEN n_union_minima < 256 THEN CAST(n_union_minima AS DOUBLE)
-        |               ELSE 255.0 * 1152921504606846976.0 / CAST(kth_union AS DOUBLE)
-        |          END AS est_union
-        |        FROM agg)
-        |SELECT n_union_minima, kth_union, common, est_union,
-        |  CAST(common AS DOUBLE) / 256.0 * est_union AS est_intersection
-        |FROM est""".stripMargin,
-
-    "q_dedup_embed" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |  list_sum(list_transform(list_zip(a.e, b.e), z -> z[1] * z[2])) /
-        |    (sqrt(list_sum(list_transform(a.e, x -> x * x))) *
-        |     sqrt(list_sum(list_transform(b.e, x -> x * x)))) AS cos
-        |FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |WHERE list_sum(list_transform(list_zip(a.e, b.e), z -> z[1] * z[2])) /
-        |    (sqrt(list_sum(list_transform(a.e, x -> x * x))) *
-        |     sqrt(list_sum(list_transform(b.e, x -> x * x)))) >= 0.4""".stripMargin,
-
-    // Candidate set of the one-sided multi-probe LSH: corpus rows keep their
-    // own signature bucket, queries probe theirs + all hamming-1 flips, so a
-    // pair joins iff the two signatures differ in <= 1 plane bit. The planes
-    // are the engine's own seeded constants (VectorFunctions.makePlanes).
-    "q_sim_ann" -> {
-      val planes = graft.functions.VectorFunctions.makePlanes(6, 64)
-      s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-         |b AS (SELECT vec_id, e, ${sqlLshBucket(planes)} AS bucket FROM v),
-         |sc AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS n_id, ${sqlCos("q", "c")} AS cos
-         |  FROM b q JOIN b c ON q.vec_id != c.vec_id
-         |    AND bit_count(xor(q.bucket, c.bucket)) <= 1
-         |  WHERE q.vec_id < 10)
-         |SELECT q_id, n_id, rank, cos FROM (
-         |  SELECT q_id, n_id, cos,
-         |    CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS rank
-         |  FROM sc)
-         |WHERE rank <= 5""".stripMargin
-    },
-
-    // IVF-PQ: cosine coarse assignment (cluster_assign's CTE, rn=1 for
-    // corpus cells / rn<=nprobe for query probes), PQ codes + distance
-    // tables from the shared `d` relation, cell-joined ADC score chain.
-    "q_sim_ivfpq" ->
-      s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-         |cent AS (SELECT vec_id AS ccid, e FROM v ORDER BY vec_id LIMIT 16),
-         |ca AS (SELECT v.vec_id, cent.ccid, ${sqlCos("v", "cent")} AS cos
-         |       FROM v, cent),
-         |cr AS (SELECT vec_id, ccid,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, ccid) AS rn
-         |       FROM ca),
-         |cells AS (SELECT vec_id, ccid AS cell FROM cr WHERE rn = 1),
-         |probes AS (SELECT vec_id AS q_id, ccid AS cell FROM cr
-         |           WHERE rn <= 4 AND vec_id < 10),
-         |cb AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 16),
-         |js AS (SELECT unnest(range(0, 4)) AS j),
-         |sub AS (SELECT v.vec_id, js.j, v.e[js.j*16+1 : js.j*16+16] AS se
-         |        FROM v CROSS JOIN js),
-         |cs AS (SELECT cb.cid, js.j, cb.ce[js.j*16+1 : js.j*16+16] AS ce
-         |       FROM cb CROSS JOIN js),
-         |d AS (SELECT s.vec_id, s.j, c.cid,
-         |        list_sum(list_transform(list_zip(s.se, c.ce),
-         |          z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d2
-         |      FROM sub s JOIN cs c ON s.j = c.j),
-         |a AS (SELECT vec_id, j, cid,
-         |        row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
-         |      FROM d),
-         |codes AS (SELECT vec_id, j, cid FROM a WHERE rn = 1),
-         |score AS (
-         |  SELECT p.q_id, n.vec_id AS n_id,
-         |    max(CASE WHEN c.j = 0 THEN q.d2 END)
-         |      + max(CASE WHEN c.j = 1 THEN q.d2 END)
-         |      + max(CASE WHEN c.j = 2 THEN q.d2 END)
-         |      + max(CASE WHEN c.j = 3 THEN q.d2 END) AS adc_d2
-         |  FROM probes p
-         |  JOIN cells n ON n.cell = p.cell AND n.vec_id != p.q_id
-         |  JOIN codes c ON c.vec_id = n.vec_id
-         |  JOIN d q ON q.vec_id = p.q_id AND q.j = c.j AND q.cid = c.cid
-         |  GROUP BY 1, 2),
-         |r AS (SELECT q_id, n_id, adc_d2,
-         |        row_number() OVER (PARTITION BY q_id ORDER BY adc_d2, n_id) AS rank
-         |      FROM score)
-         |SELECT q_id, n_id, CAST(rank AS BIGINT) AS rank, adc_d2
-         |FROM r WHERE rank <= 5""".stripMargin,
-
-    // Recall metric: both member oracles inlined as CTEs (the LSH
-    // candidate set and the brute-force ranking), hit-join, exact-integer
-    // counts, one IEEE division.
-    "q_ann_recall" -> {
-      val planes = graft.functions.VectorFunctions.makePlanes(6, 64)
-      s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-         |b AS (SELECT vec_id, e, ${sqlLshBucket(planes)} AS bucket FROM v),
-         |appx AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlCos("q", "c")} DESC, c.vec_id) AS rank
-         |    FROM b q JOIN b c ON q.vec_id != c.vec_id
-         |      AND bit_count(xor(q.bucket, c.bucket)) <= 1
-         |    WHERE q.vec_id < 10)
-         |  WHERE rank <= 5),
-         |ex AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlCos("q", "c")} DESC, c.vec_id) AS rank
-         |    FROM v q JOIN v c ON q.vec_id != c.vec_id
-         |    WHERE q.vec_id < 10)
-         |  WHERE rank <= 5),
-         |j AS (SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |      FROM ex e LEFT JOIN appx a ON a.q_id = e.q_id AND a.n_id = e.n_id)
-         |SELECT q_id, CAST(sum(hit) AS BIGINT) AS hits,
-         |  CAST(count(*) AS BIGINT) AS n_exact,
-         |  CAST(sum(hit) AS DOUBLE) / count(*) AS recall
-         |FROM j GROUP BY q_id""".stripMargin
-    },
-
-    // Two-sided multi-probe: both members probe own bucket + hamming-1
-    // flips, so the candidate set is exactly {pairs with sig-hamming <= 2};
-    // the engine's minimum-meeting-bucket filter is pure dedup and needs no
-    // SQL counterpart.
-    "q_dedup_embed_lsh" -> {
-      val planes = graft.functions.VectorFunctions.makePlanes(8, 64)
-      s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-         |b AS (SELECT vec_id, e, ${sqlLshBucket(planes)} AS bucket FROM v)
-         |SELECT a.vec_id AS a_id, c.vec_id AS b_id, ${sqlCos("a", "c")} AS cos
-         |FROM b a JOIN b c ON a.vec_id < c.vec_id
-         |  AND bit_count(xor(a.bucket, c.bucket)) <= 2
-         |WHERE ${sqlCos("a", "c")} >= 0.4""".stripMargin
-    },
-
-    "q_cluster_assign" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |c AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 8),
-        |a AS (SELECT v.vec_id, c.cid,
-        |    list_sum(list_transform(list_zip(v.e, c.ce), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(v.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.ce, x -> x * x)))) AS cos
-        |  FROM v, c)
-        |SELECT vec_id, cid AS cluster FROM (
-        |  SELECT vec_id, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-        |  FROM a)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_kmeans_step" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |c AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 8),
-        |a AS (SELECT v.vec_id, c.cid,
-        |    list_sum(list_transform(list_zip(v.e, c.ce), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(v.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.ce, x -> x * x)))) AS cos
-        |  FROM v, c),
-        |asg AS (SELECT vec_id, cid AS cluster FROM (
-        |  SELECT vec_id, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-        |  FROM a) WHERE rn = 1),
-        |av AS (SELECT asg.cluster, v.e FROM asg JOIN v USING (vec_id))
-        |SELECT cluster, CAST(i - 1 AS BIGINT) AS dim, count(*) AS n,
-        |  CAST(sum(CAST(round(e[i] * 10000000.0) AS BIGINT)) AS BIGINT) AS sum_fp
-        |FROM av, UNNEST(range(1, len(e) + 1)) AS t(i)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_dedup_semantic" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |c AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 8),
-        |a AS (SELECT v.vec_id, c.cid,
-        |    list_sum(list_transform(list_zip(v.e, c.ce), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(v.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.ce, x -> x * x)))) AS cos
-        |  FROM v, c),
-        |asg AS (SELECT vec_id, cid AS cluster FROM (
-        |  SELECT vec_id, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-        |  FROM a) WHERE rn = 1),
-        |av AS (SELECT asg.vec_id, asg.cluster, v.e FROM asg JOIN v USING (vec_id))
-        |SELECT b.vec_id, b.cluster
-        |FROM av b
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM av s
-        |  WHERE s.cluster = b.cluster AND s.vec_id < b.vec_id
-        |    AND list_sum(list_transform(list_zip(s.e, b.e), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(s.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(b.e, x -> x * x)))) >= 0.4)""".stripMargin,
-
-    "q_dedup_semantic_incr" -> semanticIncrSql,
-
-    // the SAME relation out of the real streaming engine: stream-static
-    // left anti is stateless, so the accumulated sink equals the batch
-    "q_stream_semantic_gate" -> semanticIncrSql,
-
-    "q_range_join" ->
-      """SELECT t.tier, count(*) AS n,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(20,4))) AS DOUBLE) AS sum_value
-        |FROM events e
-        |JOIN (VALUES ('t0', 0.0, 50.0), ('t1', 50.0, 150.0),
-        |             ('t2', 150.0, 300.0), ('t3', 300.0, 1000.0)) t(tier, lo, hi)
-        |  ON e.value >= t.lo AND e.value < t.hi
-        |GROUP BY t.tier""".stripMargin,
-
-    "q_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
-        |  count(*) AS n, min(o_totalprice) AS lo, max(o_totalprice) AS hi
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    // Benford audit: identical digit extraction (first [1-9] of the
-    // decimal rendering), identical division order, and the SAME
-    // expectation literals the engine plans (generated from one source)
-    "q_benford" -> {
-      val expCase = graft.operators.Curation.benfordExpMicros
-        .map { case (d, m) => s"WHEN $d THEN CAST($m AS BIGINT)" }
-        .mkString(" ")
-      s"""WITH f AS (SELECT regexp_extract(CAST(o_totalprice AS VARCHAR),
-         |             '[1-9]', 0) AS fd FROM orders),
-         |g AS (SELECT CAST(fd AS INT) AS digit, CAST(count(*) AS BIGINT) AS n
-         |      FROM f WHERE fd <> '' GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM g)
-         |SELECT digit, n,
-         |  CAST(round(CAST(n AS DOUBLE) * 1000000.0e0 / CAST(nt AS DOUBLE))
-         |       AS BIGINT) AS share_micro,
-         |  CASE digit $expCase END AS exp_micro
-         |FROM g, t""".stripMargin
-    },
-
-    // first-two-digit test: strip non-digits, first [1-9][0-9] match,
-    // joint-law literals from the same Scala source
-    "q_benford2" -> {
-      val expCase = graft.operators.Curation.benfordExp2Micros
-        .map { case (d, m) => s"WHEN $d THEN CAST($m AS BIGINT)" }
-        .mkString(" ")
-      s"""WITH f AS (SELECT regexp_extract(regexp_replace(
-         |             CAST(o_totalprice AS VARCHAR), '[^0-9]', '', 'g'),
-         |             '[1-9][0-9]', 0) AS fd FROM orders),
-         |g AS (SELECT CAST(fd AS INT) AS digit, CAST(count(*) AS BIGINT) AS n
-         |      FROM f WHERE fd <> '' GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM g)
-         |SELECT digit, n,
-         |  CAST(round(CAST(n AS DOUBLE) * 1000000.0e0 / CAST(nt AS DOUBLE))
-         |       AS BIGINT) AS share_micro,
-         |  CASE digit $expCase END AS exp_micro
-         |FROM g, t""".stripMargin
-    },
-
-    // second-digit marginal: same extraction, digit = the second char,
-    // summed-then-rounded expectation literals from the shared source
-    "q_benford_second" -> {
-      val expCase = graft.operators.Curation.benfordExpSecondMicros
-        .map { case (d, m) => s"WHEN $d THEN CAST($m AS BIGINT)" }
-        .mkString(" ")
-      s"""WITH f AS (SELECT regexp_extract(regexp_replace(
-         |             CAST(o_totalprice AS VARCHAR), '[^0-9]', '', 'g'),
-         |             '[1-9][0-9]', 0) AS fd FROM orders),
-         |g AS (SELECT CAST(substring(fd, 2, 1) AS INT) AS digit,
-         |        CAST(count(*) AS BIGINT) AS n
-         |      FROM f WHERE fd <> '' GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM g)
-         |SELECT digit, n,
-         |  CAST(round(CAST(n AS DOUBLE) * 1000000.0e0 / CAST(nt AS DOUBLE))
-         |       AS BIGINT) AS share_micro,
-         |  CASE digit $expCase END AS exp_micro
-         |FROM g, t""".stripMargin
-    },
-
-    // positional phrase search: word i joins the first word's postings
-    // at pos - i; only position DIFFERENCES matter, so DuckDB's 1-based
-    // ordinals replay the engine's 0-based posexplode exactly
-    "q_phrase" ->
-      """WITH tk AS (SELECT doc_id, a[CAST(i AS INT)] AS t, CAST(i AS BIGINT) AS pos
-        |     FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
-        |           FROM documents),
-        |          UNNEST(range(1, len(a) + 1)) r(i)),
-        |p0 AS (SELECT doc_id, pos FROM tk WHERE t = 'data'),
-        |p1 AS (SELECT doc_id, pos - 1 AS pos FROM tk WHERE t = 'query')
-        |SELECT p0.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-        |FROM p0 JOIN p1 USING (doc_id, pos)
-        |GROUP BY 1""".stripMargin,
-
-    "q_bm25" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |           FROM documents),
-        |dl AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl FROM d),
-        |st AS (SELECT count(*) AS n_docs,
-        |              CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |q(query_id, ti, term) AS (VALUES
-        |  ('fast table scan', 0, 'fast'), ('fast table scan', 1, 'table'),
-        |  ('fast table scan', 2, 'scan'),
-        |  ('join merge sort', 0, 'join'), ('join merge sort', 1, 'merge'),
-        |  ('join merge sort', 2, 'sort'),
-        |  ('stream window agg', 0, 'stream'), ('stream window agg', 1, 'window'),
-        |  ('stream window agg', 2, 'agg')),
-        |tdf AS (SELECT t.term, count(*) AS df
-        |        FROM (SELECT DISTINCT term FROM q) t
-        |        JOIN dl ON list_contains(dl.toks, t.term)
-        |        GROUP BY t.term),
-        |qi AS (SELECT q.query_id, q.ti, q.term,
-        |         ln((st.n_docs - coalesce(tdf.df, 0) + 0.5) /
-        |            (coalesce(tdf.df, 0) + 0.5) + 1.0) AS idf
-        |       FROM q LEFT JOIN tdf USING (term), st),
-        |c AS (SELECT qi.query_id, dl.doc_id, qi.ti,
-        |        CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) AS tf,
-        |        qi.idf * (CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) * 2.2) /
-        |          (CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) +
-        |           1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS contrib
-        |      FROM dl, qi, st),
-        |s AS (SELECT query_id, doc_id,
-        |        list_sum(list(contrib ORDER BY ti)) AS score,
-        |        CAST(sum(tf) AS BIGINT) AS hits
-        |      FROM c GROUP BY query_id, doc_id)
-        |SELECT query_id,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, doc_id) AS INTEGER) AS rnk,
-        |  doc_id, hits
-        |FROM s WHERE hits > 0
-        |QUALIFY rnk <= 10""".stripMargin,
-
-    // RM3: round 1 = the q_bm25 pipeline cut to rnk<=5; expansion terms by
-    // integer count over the feedback docs (query's own terms anti-joined
-    // out); round 2 = the same scoring CTEs over the expanded term table
-    "q_bm25_rm3" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |           FROM documents),
-        |dl AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl FROM d),
-        |st AS (SELECT count(*) AS n_docs,
-        |              CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |q(query_id, ti, term) AS (VALUES
-        |  ('fast table scan', 0, 'fast'), ('fast table scan', 1, 'table'),
-        |  ('fast table scan', 2, 'scan'),
-        |  ('join merge sort', 0, 'join'), ('join merge sort', 1, 'merge'),
-        |  ('join merge sort', 2, 'sort'),
-        |  ('stream window agg', 0, 'stream'), ('stream window agg', 1, 'window'),
-        |  ('stream window agg', 2, 'agg')),
-        |tdf AS (SELECT t.term, count(*) AS df
-        |        FROM (SELECT DISTINCT term FROM q) t
-        |        JOIN dl ON list_contains(dl.toks, t.term)
-        |        GROUP BY t.term),
-        |qi AS (SELECT q.query_id, q.ti, q.term,
-        |         ln((st.n_docs - coalesce(tdf.df, 0) + 0.5) /
-        |            (coalesce(tdf.df, 0) + 0.5) + 1.0) AS idf
-        |       FROM q LEFT JOIN tdf USING (term), st),
-        |c AS (SELECT qi.query_id, dl.doc_id, qi.ti,
-        |        CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) AS tf,
-        |        qi.idf * (CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) * 2.2) /
-        |          (CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) +
-        |           1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS contrib
-        |      FROM dl, qi, st),
-        |s AS (SELECT query_id, doc_id,
-        |        list_sum(list(contrib ORDER BY ti)) AS score,
-        |        CAST(sum(tf) AS BIGINT) AS hits
-        |      FROM c GROUP BY query_id, doc_id),
-        |fb AS (SELECT query_id, doc_id FROM (
-        |        SELECT query_id, doc_id,
-        |          row_number() OVER (PARTITION BY query_id
-        |            ORDER BY score DESC, doc_id) AS rnk
-        |        FROM s WHERE hits > 0) WHERE rnk <= 5),
-        |tw AS (SELECT fb.query_id, t.tok, count(*) AS w
-        |       FROM fb JOIN (SELECT doc_id, unnest(toks) AS tok FROM dl) t
-        |         ON t.doc_id = fb.doc_id
-        |       WHERE NOT EXISTS (SELECT 1 FROM q
-        |                         WHERE q.query_id = fb.query_id AND q.term = t.tok)
-        |       GROUP BY 1, 2),
-        |ex AS (SELECT query_id, 2 + r AS ti, tok AS term FROM (
-        |        SELECT query_id, tok,
-        |          row_number() OVER (PARTITION BY query_id
-        |            ORDER BY w DESC, tok) AS r
-        |        FROM tw) WHERE r <= 2),
-        |q2 AS (SELECT * FROM q UNION ALL SELECT * FROM ex),
-        |tdf2 AS (SELECT t.term, count(*) AS df
-        |         FROM (SELECT DISTINCT term FROM q2) t
-        |         JOIN dl ON list_contains(dl.toks, t.term)
-        |         GROUP BY t.term),
-        |qi2 AS (SELECT q2.query_id, q2.ti, q2.term,
-        |          ln((st.n_docs - coalesce(tdf2.df, 0) + 0.5) /
-        |             (coalesce(tdf2.df, 0) + 0.5) + 1.0) AS idf
-        |        FROM q2 LEFT JOIN tdf2 USING (term), st),
-        |c2 AS (SELECT qi2.query_id, dl.doc_id, qi2.ti,
-        |        CAST(len(list_filter(dl.toks, x -> x = qi2.term)) AS DOUBLE) AS tf,
-        |        qi2.idf * (CAST(len(list_filter(dl.toks, x -> x = qi2.term)) AS DOUBLE) * 2.2) /
-        |          (CAST(len(list_filter(dl.toks, x -> x = qi2.term)) AS DOUBLE) +
-        |           1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS contrib
-        |      FROM dl, qi2, st),
-        |s2 AS (SELECT query_id, doc_id,
-        |        list_sum(list(contrib ORDER BY ti)) AS score,
-        |        CAST(sum(tf) AS BIGINT) AS hits
-        |      FROM c2 GROUP BY query_id, doc_id)
-        |SELECT query_id,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, doc_id) AS INTEGER) AS rnk,
-        |  doc_id, hits
-        |FROM s2 WHERE hits > 0
-        |QUALIFY rnk <= 10""".stripMargin,
-
-    "q_hybrid_rank" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |           FROM documents),
-        |dl AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl FROM d),
-        |st AS (SELECT count(*) AS n_docs,
-        |              CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |q(query_id, ti, term) AS (VALUES
-        |  ('fast table scan', 0, 'fast'), ('fast table scan', 1, 'table'),
-        |  ('fast table scan', 2, 'scan'),
-        |  ('join merge sort', 0, 'join'), ('join merge sort', 1, 'merge'),
-        |  ('join merge sort', 2, 'sort'),
-        |  ('stream window agg', 0, 'stream'), ('stream window agg', 1, 'window'),
-        |  ('stream window agg', 2, 'agg')),
-        |tdf AS (SELECT t.term, count(*) AS df
-        |        FROM (SELECT DISTINCT term FROM q) t
-        |        JOIN dl ON list_contains(dl.toks, t.term)
-        |        GROUP BY t.term),
-        |qi AS (SELECT q.query_id, q.ti, q.term,
-        |         ln((st.n_docs - coalesce(tdf.df, 0) + 0.5) /
-        |            (coalesce(tdf.df, 0) + 0.5) + 1.0) AS idf
-        |       FROM q LEFT JOIN tdf USING (term), st),
-        |c AS (SELECT qi.query_id, dl.doc_id, qi.ti,
-        |        CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) AS tf,
-        |        qi.idf * (CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) * 2.2) /
-        |          (CAST(len(list_filter(dl.toks, x -> x = qi.term)) AS DOUBLE) +
-        |           1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS contrib
-        |      FROM dl, qi, st),
-        |lexs AS (SELECT query_id, doc_id,
-        |        list_sum(list(contrib ORDER BY ti)) AS score,
-        |        CAST(sum(tf) AS BIGINT) AS hits
-        |      FROM c GROUP BY query_id, doc_id),
-        |lex AS (SELECT query_id, doc_id,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, doc_id) AS INTEGER) AS rnk
-        |  FROM lexs WHERE hits > 0
-        |  QUALIFY rnk <= 20),
-        |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |sc AS (
-        |  SELECT qv.vec_id AS q_id, cv.vec_id AS n_id,
-        |    list_sum(list_transform(list_zip(qv.e, cv.e), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(qv.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(cv.e, x -> x * x)))) AS cos
-        |  FROM v qv JOIN v cv ON qv.vec_id != cv.vec_id
-        |  WHERE qv.vec_id < 3),
-        |dense AS (SELECT
-        |    CASE q_id WHEN 0 THEN 'fast table scan'
-        |              WHEN 1 THEN 'join merge sort'
-        |              ELSE 'stream window agg' END AS query_id,
-        |    n_id AS doc_id,
-        |    CAST(row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos DESC, n_id) AS INTEGER) AS rnk
-        |  FROM sc QUALIFY rnk <= 20),
-        |u AS (SELECT query_id, doc_id, 'dense' AS system, rnk FROM dense
-        |      UNION ALL
-        |      SELECT query_id, doc_id, 'lexical' AS system, rnk FROM lex),
-        |f AS (SELECT query_id, doc_id,
-        |        list_sum(list(1.0 / (60 + rnk) ORDER BY system)) AS score,
-        |        CAST(count(*) AS INTEGER) AS n_systems
-        |      FROM u GROUP BY query_id, doc_id)
-        |SELECT query_id,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, doc_id) AS INTEGER) AS rnk,
-        |  doc_id, score, n_systems
-        |FROM f QUALIFY rnk <= 10""".stripMargin,
-
-    "q_sim_topk" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |sc AS (
-        |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-        |    list_sum(list_transform(list_zip(q.e, c.e), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(q.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.e, x -> x * x)))) AS cos
-        |  FROM v q JOIN v c ON q.vec_id != c.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT q_id, n_id, rank, cos FROM (
-        |  SELECT q_id, n_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS rank
-        |  FROM sc)
-        |WHERE rank <= 5""".stripMargin,
-
-    // prototype pruning: the engine's own seeded planes, the same
-    // quantize/centroid/fold chain, integer keep cut
-    "q_proto_prune" -> {
-      val planes = graft.functions.VectorFunctions.makePlanes(4, 64)
-      s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |           FROM embeddings WHERE embedding IS NOT NULL),
-         |b AS (SELECT vec_id, CAST(${sqlLshBucket(planes)} AS BIGINT) AS bucket,
-         |        list_transform(e, x -> CAST(round(x * 1000.0) AS BIGINT)) AS q
-         |      FROM v),
-         |comp AS (SELECT vec_id, bucket, i, q[i] AS x
-         |         FROM b, UNNEST(range(1, len(q) + 1)) r(i)),
-         |cent AS (SELECT bucket, i, CAST(sum(x) AS BIGINT) AS s,
-         |           CAST(count(*) AS BIGINT) AS n
-         |         FROM comp GROUP BY 1, 2),
-         |ca AS (SELECT bucket, max(n) AS n,
-         |         list(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) ORDER BY i) AS c
-         |       FROM cent GROUP BY bucket),
-         |d AS (SELECT b.vec_id, b.bucket, ca.n,
-         |        list_sum(list_transform(list_zip(b.q, ca.c),
-         |          z -> (CAST(z[1] AS DOUBLE) - z[2]) * (CAST(z[1] AS DOUBLE) - z[2]))) AS d2
-         |      FROM b JOIN ca USING (bucket)),
-         |r AS (SELECT vec_id, bucket, d2, n,
-         |        row_number() OVER (PARTITION BY bucket ORDER BY d2, vec_id) AS rank
-         |      FROM d)
-         |SELECT vec_id, bucket, d2, CAST(rank AS BIGINT) AS rank,
-         |  (rank - 1) * 100 < 50 * n AS keep
-         |FROM r""".stripMargin
-    },
-
-    // bitext margin mining: quantized-cosine neighborhoods both ways,
-    // exact integer sums, the fixed-order margin expression, winners by
-    // (margin DESC NULLS LAST, id) both sides, mutual-best join
-    "q_bitext_margin" -> s"${bitextWinnersSql()}",
-
-    // the LSH-candidate scale path: same margin chain over bucket-hamming
-    // <= 1 pairs (annLsh's multi-probe as a bit_count condition)
-    "q_bitext_lsh" ->
-      s"${bitextWinnersSql(bitextLshCond(4, Seq(0x5DEECE66DL)))}",
-
-    // the IVF-candidate scale path: deterministic lowest-id-seeded cells,
-    // y's nearest cell must sit in x's nprobe probe list — the same
-    // assignment replay as q_sim_ivf (rank by (d, cell) over the exact
-    // left-fold distances), with the centroids derived IN SQL
-    "q_bitext_ivf" -> s"${bitextWinnersSql(
-      candCond = """AND EXISTS (SELECT 1 FROM xprob p JOIN ycell yc
-        |    ON p.cell = yc.cell
-        |    WHERE p.vec_id = x.vec_id AND yc.vec_id = y.vec_id)""".stripMargin,
-      extraCtes = """cents AS (
-        |  SELECT e AS ce, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell
-        |  FROM (SELECT * FROM v WHERE vec_id % 2 = 1 ORDER BY vec_id LIMIT 16)),
-        |cd AS (SELECT v.vec_id, c.cell,
-        |         list_sum(list_transform(list_zip(v.e, c.ce),
-        |           z -> (z[1] - z[2]) * (z[1] - z[2]))) AS d
-        |       FROM v, cents c),
-        |rnk AS (SELECT vec_id, cell,
-        |          row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |        FROM cd),
-        |ycell AS (SELECT vec_id, cell FROM rnk WHERE rn = 1 AND vec_id % 2 = 1),
-        |xprob AS (SELECT vec_id, cell FROM rnk WHERE rn <= 4 AND vec_id % 2 = 0)""".stripMargin)}",
-
-    // the PQ-ADC candidate path: the q_bitext_ivf cell replay, plus the
-    // per-subspace argmin codes of the odd side (first-16-by-id codebook,
-    // ties to the lower cid), x's ADC distance tables, the co-cell pairs
-    // ranked by the fixed-order 4-term ADC sum, and the top-8-per-x cut
-    // feeding the margin chain
-    // parameterized to the gate's (m, kCodes, nprobe, cand) so a default
-    // change on the Spark side regenerates the identical oracle shape
-    "q_bitext_pq" -> bitextWinnersSql(
-      candCond = bitextPqCandCond,
-      extraCtes = bitextPqCtes(m = 8, kCodes = 32, nprobe = 16, cand = 16,
-        seeds = Seq(None))),
-
-    // agreement readout: per-x winner under LSH candidates vs brute
-    "q_bitext_recall" ->
-      s"""WITH brute AS (${bitextWinnersSql()}),
-         |lsh AS (${bitextWinnersSql(bitextLshCond(4, Seq(0x5DEECE66DL)))})
-         |SELECT b.x_id, b.y_id AS y_brute, l.y_id AS y_lsh,
-         |  b.y_id = l.y_id AS agree
-         |FROM brute b JOIN lsh l USING (x_id)""".stripMargin,
-
-    // multi-seed PQ agreement: per-codebook ADC cand-cuts unioned, per-x
-    // winner vs brute
-    "q_bitext_pq_seeds" ->
-      s"""WITH brute AS (${bitextWinnersSql()}),
-         |pq AS (${bitextWinnersSql(
-        candCond = bitextPqCandCond,
-        extraCtes = bitextPqCtes(m = 8, kCodes = 32, nprobe = 16,
-          cand = 24, seeds = bitextSeedPool.map(Some(_))))})
-         |SELECT b.x_id, b.y_id AS y_brute, p.y_id AS y_pq,
-         |  b.y_id = p.y_id AS agree
-         |FROM brute b JOIN pq p USING (x_id)""".stripMargin,
-
-    // multi-seed agreement: candidates = union over three plane sets
-    "q_bitext_recall_seeds" ->
-      s"""WITH brute AS (${bitextWinnersSql()}),
-         |lsh AS (${bitextWinnersSql(bitextLshCond(4, bitextSeedPool))})
-         |SELECT b.x_id, b.y_id AS y_brute, l.y_id AS y_lsh,
-         |  b.y_id = l.y_id AS agree
-         |FROM brute b JOIN lsh l USING (x_id)""".stripMargin,
-
-    "q_neg_samples" ->
-      """WITH r AS (
-        |  SELECT doc_id, CAST(row_number() OVER (ORDER BY
-        |    md5(CAST(doc_id AS VARCHAR) || ':negatives'), doc_id) AS BIGINT)
-        |    AS pos
-        |  FROM documents),
-        |n AS (SELECT count(*) AS n FROM r),
-        |e AS (SELECT r.doc_id, j, pos,
-        |        ((pos - 1 + j * greatest(n // 5, 1)) % n) + 1 AS neg_pos
-        |      FROM r, n, (SELECT unnest([1, 2, 3, 4]) AS j))
-        |SELECT e.doc_id, CAST(e.j AS BIGINT) AS j, r2.doc_id AS neg_doc_id
-        |FROM e JOIN r r2 ON r2.pos = e.neg_pos
-        |WHERE e.neg_pos <> e.pos""".stripMargin,
-
-    "q_hard_neg" ->
-      """WITH v AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |sc AS (
-        |  SELECT q.vec_id AS q_id, q.label AS q_label, c.vec_id AS n_id,
-        |    c.label AS n_label,
-        |    list_sum(list_transform(list_zip(q.e, c.e), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(q.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.e, x -> x * x)))) AS cos
-        |  FROM v q JOIN v c ON q.vec_id != c.vec_id AND q.label != c.label
-        |  WHERE q.vec_id < 10)
-        |SELECT q_id, q_label, n_id, n_label, rank, cos FROM (
-        |  SELECT q_id, q_label, n_id, n_label, cos,
-        |    CAST(row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos DESC, n_id) AS BIGINT) AS rank
-        |  FROM sc)
-        |WHERE rank <= 5""".stripMargin,
-
-    "q_pipeline_pairs" ->
-      """WITH d AS (SELECT doc_id FROM documents
-        |           WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 25),
-        |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |      FROM embeddings JOIN d ON vec_id = doc_id),
-        |c AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 8),
-        |a AS (SELECT v.vec_id, c.cid,
-        |    list_sum(list_transform(list_zip(v.e, c.ce), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(v.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.ce, x -> x * x)))) AS cos
-        |  FROM v, c),
-        |asg AS (SELECT vec_id, cid AS cluster FROM (
-        |  SELECT vec_id, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-        |  FROM a) WHERE rn = 1),
-        |av AS (SELECT asg.vec_id, asg.cluster, v.e FROM asg JOIN v USING (vec_id)),
-        |surv AS (
-        |  SELECT b.vec_id FROM av b
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM av s
-        |    WHERE s.cluster = b.cluster AND s.vec_id < b.vec_id
-        |      AND list_sum(list_transform(list_zip(s.e, b.e), z -> z[1] * z[2])) /
-        |        (sqrt(list_sum(list_transform(s.e, x -> x * x))) *
-        |         sqrt(list_sum(list_transform(b.e, x -> x * x)))) >= 0.4)),
-        |r AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY
-        |        md5(CAST(vec_id AS VARCHAR) || ':pairs'), vec_id) AS BIGINT)
-        |        AS pos
-        |      FROM surv),
-        |n AS (SELECT count(*) AS n FROM r),
-        |ex AS (SELECT r.vec_id, j, pos,
-        |        ((pos - 1 + j * greatest(n // 3, 1)) % n) + 1 AS neg_pos
-        |      FROM r, n, (SELECT unnest([1, 2]) AS j))
-        |SELECT ex.vec_id, CAST(ex.j AS BIGINT) AS j, r2.vec_id AS neg_vec_id
-        |FROM ex JOIN r r2 ON r2.pos = ex.neg_pos
-        |WHERE ex.neg_pos <> ex.pos""".stripMargin,
-
-    // cross-modal capstone: the four member replays composed — RealCodec
-    // dHash formula (q_media_dhash) -> min-doc-per-hash keep; stub media
-    // features (q_media_features) x first-16 embedding cosine >= 0.05;
-    // SemDeDup NOT EXISTS (q_pipeline_pairs); shard derivation over the
-    // SURVIVOR byte volume at 64 KiB (q_export_shards)
-    "q_pipeline_multimodal" ->
-      """WITH sel AS (SELECT DISTINCT doc_id % 100 AS seed FROM documents),
-        |dims AS (SELECT seed, 8 + seed % 9 AS w, 8 + seed % 7 AS h FROM sel),
-        |grid AS (SELECT seed, x, y,
-        |           (x * w) // 9 AS px0, ((x + 1) * w) // 9 AS px1,
-        |           (y * h) // 8 AS py
-        |         FROM dims, UNNEST(range(0, 8)) rx(x), UNNEST(range(0, 8)) ry(y)),
-        |gr AS (SELECT seed, x, y,
-        |    (299 * ((7 * px0 + 11 * py + seed) % 256)
-        |     + 587 * ((13 * px0 + 3 * py + 2 * seed) % 256)
-        |     + 114 * ((px0 + 5 * py + 3 * seed) % 256)) // 1000 AS g0,
-        |    (299 * ((7 * px1 + 11 * py + seed) % 256)
-        |     + 587 * ((13 * px1 + 3 * py + 2 * seed) % 256)
-        |     + 114 * ((px1 + 5 * py + 3 * seed) % 256)) // 1000 AS g1
-        |  FROM grid),
-        |bits AS (SELECT seed,
-        |           list(CASE WHEN g1 > g0 THEN 1 ELSE 0 END ORDER BY y DESC, x DESC) AS bl
-        |         FROM gr GROUP BY seed),
-        |hs AS (SELECT seed,
-        |    list_reduce(list_prepend(0::HUGEINT, list_transform(bl, b -> b::HUGEINT)),
-        |      (acc, b) -> acc * 2::HUGEINT + b) AS hraw
-        |  FROM bits),
-        |hsx AS (SELECT seed,
-        |    CAST(CASE WHEN hraw >= 9223372036854775808::HUGEINT
-        |              THEN hraw - 18446744073709551616::HUGEINT
-        |              ELSE hraw END AS BIGINT) AS dhash
-        |  FROM hs),
-        |jd AS (SELECT d.doc_id, d.text, hsx.dhash
-        |       FROM documents d JOIN hsx ON hsx.seed = d.doc_id % 100),
-        |ik AS (SELECT doc_id, text FROM (
-        |         SELECT doc_id, text,
-        |           min(doc_id) OVER (PARTITION BY dhash) AS kd FROM jd)
-        |       WHERE doc_id = kd),
-        |m AS (SELECT doc_id, to_hex(encode(text)) AS hx,
-        |        octet_length(encode(text)) AS nb FROM ik),
-        |f AS (SELECT m.doc_id,
-        |        list(CASE WHEN m.nb = 0 THEN 0.0e0
-        |          ELSE (CAST(('0x' || substr(m.hx,
-        |            CAST(((ji * 2654435761) % m.nb) * 2 + 1 AS INTEGER),
-        |            2))::UBIGINT AS BIGINT) - 128) / 128.0e0 END
-        |          ORDER BY ji) AS feat
-        |      FROM m CROSS JOIN range(16) r(ji) GROUP BY m.doc_id),
-        |e16 AS (SELECT vec_id,
-        |          list_transform(embedding[1:16], x -> CAST(x AS DOUBLE)) AS e
-        |        FROM embeddings),
-        |cg AS (SELECT f.doc_id FROM f JOIN e16 ON e16.vec_id = f.doc_id
-        |       WHERE list_sum(list_transform(list_zip(f.feat, e16.e),
-        |               z -> z[1] * z[2])) /
-        |         (sqrt(list_sum(list_transform(f.feat, x -> x * x))) *
-        |          sqrt(list_sum(list_transform(e16.e, x -> x * x)))) >= 0.05e0),
-        |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |      FROM embeddings JOIN cg ON vec_id = cg.doc_id),
-        |c AS (SELECT vec_id AS cid, e AS ce FROM v ORDER BY vec_id LIMIT 8),
-        |a AS (SELECT v.vec_id, c.cid,
-        |    list_sum(list_transform(list_zip(v.e, c.ce), z -> z[1] * z[2])) /
-        |      (sqrt(list_sum(list_transform(v.e, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.ce, x -> x * x)))) AS cos
-        |  FROM v, c),
-        |asg AS (SELECT vec_id, cid AS cluster FROM (
-        |  SELECT vec_id, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-        |  FROM a) WHERE rn = 1),
-        |av AS (SELECT asg.vec_id, asg.cluster, v.e FROM asg JOIN v USING (vec_id)),
-        |surv AS (
-        |  SELECT b.vec_id FROM av b
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM av s
-        |    WHERE s.cluster = b.cluster AND s.vec_id < b.vec_id
-        |      AND list_sum(list_transform(list_zip(s.e, b.e), z -> z[1] * z[2])) /
-        |        (sqrt(list_sum(list_transform(s.e, x -> x * x))) *
-        |         sqrt(list_sum(list_transform(b.e, x -> x * x)))) >= 0.4)),
-        |sd AS (SELECT d.doc_id, d.text FROM documents d
-        |       JOIN surv ON surv.vec_id = d.doc_id),
-        |pb AS (SELECT coalesce(octet_length(encode(CAST(text AS VARCHAR))), 0)
-        |         + octet_length(encode(CAST(doc_id AS VARCHAR))) + 32 AS rb
-        |       FROM sd),
-        |ns AS (SELECT CAST(greatest(1, (SUM(rb) + 65535) // 65536) AS UBIGINT) AS n
-        |       FROM pb)
-        |SELECT sd.doc_id, sd.text,
-        |  CAST(('0x' || substr(md5(CAST(sd.doc_id AS VARCHAR) || ':shard'), 1, 15))::UBIGINT
-        |       % (SELECT n FROM ns) AS BIGINT) AS shard
-        |FROM sd""".stripMargin,
-
-    // ROUGE-2 replay: same candidate derivation, clipped-count match over
-    // shared bigram types, totals, and the engine's exact division order
-    // (p, r named in a layer so f1 reuses the identical doubles)
-    "q_rouge2" ->
-      """WITH pr AS (
-        |  SELECT doc_id,
-        |    array_to_string(regexp_split_to_array(trim(text), '\s+')[1:12], ' ')
-        |      || CASE WHEN doc_id % 3 = 0 THEN ' novel summary tail tokens'
-        |              ELSE '' END AS cand,
-        |    text FROM documents),
-        |cgr AS (SELECT doc_id, bg, count(*) AS cc FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(a)),
-        |             i -> a[i] || ' ' || a[i+1])) AS bg
-        |    FROM (SELECT doc_id, regexp_split_to_array(trim(cand), '\s+') AS a
-        |          FROM pr)) GROUP BY 1, 2),
-        |rgr AS (SELECT doc_id, bg, count(*) AS rc FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(a)),
-        |             i -> a[i] || ' ' || a[i+1])) AS bg
-        |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
-        |          FROM pr)) GROUP BY 1, 2),
-        |m AS (SELECT doc_id, CAST(sum(least(cc, rc)) AS BIGINT) AS match_n
-        |      FROM cgr JOIN rgr USING (doc_id, bg) GROUP BY 1),
-        |ct AS (SELECT doc_id, CAST(sum(cc) AS BIGINT) AS cand_n FROM cgr GROUP BY 1),
-        |rt AS (SELECT doc_id, CAST(sum(rc) AS BIGINT) AS ref_n FROM rgr GROUP BY 1),
-        |base AS (SELECT d.doc_id,
-        |    coalesce(m.match_n, 0) AS match_n,
-        |    coalesce(ct.cand_n, 0) AS cand_n,
-        |    coalesce(rt.ref_n, 0) AS ref_n
-        |  FROM documents d
-        |  LEFT JOIN m USING (doc_id) LEFT JOIN ct USING (doc_id)
-        |  LEFT JOIN rt USING (doc_id)),
-        |sc AS (SELECT *,
-        |    CASE WHEN cand_n > 0
-        |         THEN CAST(match_n AS DOUBLE) / CAST(cand_n AS DOUBLE)
-        |         ELSE 0.0e0 END AS p,
-        |    CASE WHEN ref_n > 0
-        |         THEN CAST(match_n AS DOUBLE) / CAST(ref_n AS DOUBLE)
-        |         ELSE 0.0e0 END AS r
-        |  FROM base)
-        |SELECT doc_id, match_n, cand_n, ref_n,
-        |  p AS "precision", r AS recall,
-        |  CASE WHEN p + r > 0.0e0 THEN 2.0e0 * p * r / (p + r)
-        |       ELSE 0.0e0 END AS f1
-        |FROM sc""".stripMargin,
-
-    // byte/type fidelity of the ORC write+read cycle vs the parquet
-    // original
-    "q_source_orc" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-
-    // same contract for the Avro row-format cycle
-    "q_source_avro" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-
-    "q_source_xml" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-
-    // the decorated payload recomputed from the original: commas, a
-    // doubled-quote token, and a real newline must survive the CSV cycle
-    "q_sink_csv" ->
-      """SELECT doc_id, text || ', "quoted" tail' ||
-        |  CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'second line'
-        |       ELSE '' END AS payload
-        |FROM documents""".stripMargin,
-
-    "q_media_decode" ->
-      """SELECT doc_id, 'image' AS media_type,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |  CAST(64 + octet_length(encode(text)) % 1024 AS BIGINT) AS width,
-        |  CAST(64 + (octet_length(encode(text)) * 7) % 512 AS BIGINT) AS height,
-        |  CAST(1 + octet_length(encode(text)) % 8 AS BIGINT) AS n_frames
-        |FROM documents""".stripMargin,
-
-    "q_media_frames" ->
-      """SELECT doc_id, CAST(unnest(range(0, 1 + octet_length(encode(text)) % 8, 2)) AS BIGINT) AS frame_idx
-        |FROM documents""".stripMargin,
-
-    "q_media_resize" ->
-      """SELECT doc_id, CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-        |  CAST(least(octet_length(encode(text)), 256) AS BIGINT) AS out_len
-        |FROM documents""".stripMargin,
-
-    // Byte j of the payload via its hex pair; (byte - 128)/128 is exact
-    // power-of-two arithmetic, identical in float (Spark) and double (here).
-    "q_media_features" ->
-      """WITH m AS (
-        |  SELECT doc_id, to_hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, j,
-        |    CASE WHEN n = 0 THEN 0.0
-        |         ELSE (CAST(('0x' || substr(hx, CAST(((j * 2654435761) % n) * 2 + 1 AS INTEGER), 2))::UBIGINT AS BIGINT) - 128) / 128.0
-        |    END AS feat
-        |  FROM m CROSS JOIN range(16) r(j))
-        |SELECT doc_id, CAST(j AS BIGINT) AS feat_idx, feat FROM f""".stripMargin,
-
-    // image near-dup: the dHash formula replay per seed, then the direct
-    // hamming<=7 pair filter (the banded join is EXACT at 7 < 8 chunks)
-    "q_media_neardup" ->
-      """WITH d AS (SELECT DISTINCT doc_id % 40 AS seed FROM documents
-        |           WHERE doc_id % 5 = 0),
-        |sel AS (SELECT seed, 8 + seed % 9 AS w, 8 + seed % 7 AS h FROM d),
-        |grid AS (SELECT seed, x, y,
-        |           (x * w) // 9 AS px0, ((x + 1) * w) // 9 AS px1,
-        |           (y * h) // 8 AS py
-        |         FROM sel, UNNEST(range(0, 8)) rx(x), UNNEST(range(0, 8)) ry(y)),
-        |gr AS (SELECT seed, x, y,
-        |    (299 * ((7 * px0 + 11 * py + seed) % 256)
-        |     + 587 * ((13 * px0 + 3 * py + 2 * seed) % 256)
-        |     + 114 * ((px0 + 5 * py + 3 * seed) % 256)) // 1000 AS g0,
-        |    (299 * ((7 * px1 + 11 * py + seed) % 256)
-        |     + 587 * ((13 * px1 + 3 * py + 2 * seed) % 256)
-        |     + 114 * ((px1 + 5 * py + 3 * seed) % 256)) // 1000 AS g1
-        |  FROM grid),
-        |bits AS (SELECT seed,
-        |           list(CASE WHEN g1 > g0 THEN 1 ELSE 0 END ORDER BY y DESC, x DESC) AS bl
-        |         FROM gr GROUP BY seed),
-        |hs AS (SELECT seed,
-        |    list_reduce(list_prepend(0::HUGEINT, list_transform(bl, b -> b::HUGEINT)),
-        |      (acc, b) -> acc * 2::HUGEINT + b) AS hraw
-        |  FROM bits),
-        |hsx AS (SELECT seed,
-        |    CAST(CASE WHEN hraw >= 9223372036854775808::HUGEINT
-        |              THEN hraw - 18446744073709551616::HUGEINT
-        |              ELSE hraw END AS BIGINT) AS dhash
-        |  FROM hs)
-        |SELECT a.seed AS a_id, b.seed AS b_id,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-        |FROM hsx a JOIN hsx b ON a.seed < b.seed
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 7""".stripMargin,
-
-    // dHash replay: the pixel formula sampled at the engine's exact
-    // nearest-neighbor grid, integer 601 luminance, gradient bits folded
-    // high-to-low in HUGEINT, reinterpreted as signed 64-bit
-    "q_media_dhash" ->
-      """WITH d AS (SELECT doc_id, doc_id % 100 AS seed FROM documents
-        |           WHERE doc_id % 20 = 0),
-        |sel AS (SELECT DISTINCT seed, 8 + seed % 9 AS w, 8 + seed % 7 AS h FROM d),
-        |grid AS (SELECT seed, x, y,
-        |           (x * w) // 9 AS px0, ((x + 1) * w) // 9 AS px1,
-        |           (y * h) // 8 AS py
-        |         FROM sel, UNNEST(range(0, 8)) rx(x), UNNEST(range(0, 8)) ry(y)),
-        |gr AS (SELECT seed, x, y,
-        |    (299 * ((7 * px0 + 11 * py + seed) % 256)
-        |     + 587 * ((13 * px0 + 3 * py + 2 * seed) % 256)
-        |     + 114 * ((px0 + 5 * py + 3 * seed) % 256)) // 1000 AS g0,
-        |    (299 * ((7 * px1 + 11 * py + seed) % 256)
-        |     + 587 * ((13 * px1 + 3 * py + 2 * seed) % 256)
-        |     + 114 * ((px1 + 5 * py + 3 * seed) % 256)) // 1000 AS g1
-        |  FROM grid),
-        |bits AS (SELECT seed,
-        |           list(CASE WHEN g1 > g0 THEN 1 ELSE 0 END ORDER BY y DESC, x DESC) AS bl
-        |         FROM gr GROUP BY seed),
-        |hs AS (SELECT seed,
-        |    list_reduce(list_prepend(0::HUGEINT, list_transform(bl, b -> b::HUGEINT)),
-        |      (acc, b) -> acc * 2::HUGEINT + b) AS hraw
-        |  FROM bits),
-        |hsx AS (SELECT seed,
-        |    CAST(CASE WHEN hraw >= 9223372036854775808::HUGEINT
-        |              THEN hraw - 18446744073709551616::HUGEINT
-        |              ELSE hraw END AS BIGINT) AS dhash
-        |  FROM hs),
-        |j AS (SELECT d.doc_id, d.seed, hsx.dhash FROM d JOIN hsx USING (seed))
-        |SELECT doc_id, seed, dhash,
-        |  CAST(count(*) OVER (PARTITION BY dhash) AS BIGINT) AS n_same
-        |FROM j""".stripMargin,
-
-    // rasterHash is h := h * 1000003 + rgb24 over row-major pixels in
-    // WRAPPING 64-bit arithmetic — reproduced here in HUGEINT with an
-    // explicit mod 2^64 per step, then reinterpreted as signed.
-    "q_media_real" ->
-      """WITH sel AS (
-        |  SELECT doc_id, 8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h
-        |  FROM documents WHERE doc_id % 20 = 0),
-        |px AS (
-        |  SELECT doc_id, w, h,
-        |    list_transform(range(0, w * h), i ->
-        |      (((i % w) * 7 + (i // w) * 11 + doc_id) % 256) * 65536
-        |      + (((i % w) * 13 + (i // w) * 3 + 2 * doc_id) % 256) * 256
-        |      + ((i % w) + (i // w) * 5 + 3 * doc_id) % 256) AS pxs
-        |  FROM sel),
-        |hashed AS (
-        |  SELECT doc_id, w, h,
-        |    list_reduce(list_prepend(0::HUGEINT, list_transform(pxs, p -> p::HUGEINT)),
-        |      (acc, p) -> (acc * 1000003::HUGEINT + p) % 18446744073709551616::HUGEINT) AS hh
-        |  FROM px)
-        |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |  CAST(1 AS BIGINT) AS n_frames,
-        |  CAST(CASE WHEN hh >= 9223372036854775808::HUGEINT
-        |            THEN hh - 18446744073709551616::HUGEINT ELSE hh END AS BIGINT) AS frame_hash
-        |FROM hashed""".stripMargin,
-
-    // Audio: header fields are pure integer formulas; energies replay the
-    // engine's exact chain — integer sum(s*s) (< 2^53, exact as DOUBLE),
-    // one correctly-rounded divide, sqrt, /2^15, then the double->REAL
-    // round-trip matching the engine's Float features.
-    // VAD energy segments: the formula-PCM windows, the integer activity
-    // inequality, gaps-and-islands runs
-    "q_media_vad" ->
-      """WITH sel AS (
-        |  SELECT doc_id,
-        |    (64 + (doc_id % 41)) * (1 + (doc_id % 2)) AS n
-        |  FROM documents WHERE doc_id % 25 = 0),
-        |vals AS (
-        |  SELECT doc_id, i // 16 AS win,
-        |    ((i * 37 + doc_id * 101) % 65536) - 32768 AS s
-        |  FROM (SELECT *, unnest(range(0, n)) AS i FROM sel)),
-        |wins AS (SELECT doc_id, win, sum(CAST(s AS HUGEINT) * s) AS ssq,
-        |           count(*) AS cnt
-        |         FROM vals GROUP BY 1, 2),
-        |act AS (SELECT doc_id, win, ssq FROM wins
-        |        WHERE ssq * 1000000 >=
-        |          CAST(500 AS HUGEINT) * 500 * 32768 * 32768 * cnt),
-        |isl AS (SELECT doc_id, win, ssq,
-        |          win - row_number() OVER (PARTITION BY doc_id ORDER BY win) AS g
-        |        FROM act),
-        |seg AS (SELECT doc_id, g, min(win) AS start_win, max(win) AS end_win,
-        |          CAST(count(*) AS BIGINT) AS n_windows,
-        |          CAST(sum(ssq) AS BIGINT) AS ssq_total
-        |        FROM isl GROUP BY 1, 2)
-        |SELECT doc_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_win) - 1
-        |    AS BIGINT) AS seg_idx,
-        |  CAST(start_win AS BIGINT) AS start_win,
-        |  CAST(end_win AS BIGINT) AS end_win, n_windows, ssq_total
-        |FROM seg""".stripMargin,
-
-    "q_media_audio" ->
-      """WITH sel AS (
-        |  SELECT doc_id,
-        |    8000 + (doc_id % 5) * 1000 AS rate,
-        |    1 + (doc_id % 2) AS channels,
-        |    64 + (doc_id % 41) AS frames
-        |  FROM documents WHERE doc_id % 25 = 0),
-        |params AS (
-        |  SELECT *, frames * channels AS n,
-        |    (frames * channels + 3) // 4 AS per_bucket
-        |  FROM sel),
-        |vals AS (
-        |  SELECT doc_id, rate, channels, frames,
-        |    least(3, i // per_bucket) AS win,
-        |    ((i * 37 + doc_id * 101) % 65536) - 32768 AS s
-        |  FROM (SELECT *, unnest(range(0, n)) AS i FROM params)),
-        |energies AS (
-        |  SELECT doc_id, rate, channels, frames, win,
-        |    sum(s * s) AS ssq, count(*) AS cnt
-        |  FROM vals GROUP BY 1, 2, 3, 4, 5)
-        |SELECT doc_id,
-        |  CAST(rate AS BIGINT) AS sample_rate,
-        |  CAST(channels AS BIGINT) AS channels,
-        |  CAST(frames AS BIGINT) AS n_frames,
-        |  frames * 1000.0 / rate AS duration_ms,
-        |  CAST(win AS BIGINT) AS win,
-        |  CAST(CAST(sqrt(CAST(ssq AS DOUBLE) / cnt) / 32768.0 AS REAL) AS DOUBLE)
-        |    AS energy
-        |FROM energies""".stripMargin,
-  )
+  def oracleSql: Map[String, String] = Registry.oracleSql
 }

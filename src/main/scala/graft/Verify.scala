@@ -23,10 +23,7 @@ object Verify {
     // Optional extra args: run only these queries (local iteration; the
     // driver always passes exactly two args and gets the full dump).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.local(cpus.toInt, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Longest-pole-first order: streaming gates (fixed staging + drain
     // latency each) ahead of batch queries; alphabetical within a class

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * recency-weighted ranking / alerting layer needs on top of the window
   * aggregates.
   *
-  * Numeric policy (house rule, see SparkEntry's header): every hash-gated
-  * output here is an EXACT INTEGER. Decay weights are powers of two
+  * Numeric policy (house rule, see graft.queries.Registry's header):
+  * every hash-gated output here is an EXACT INTEGER. Decay weights are powers of two
   * (exact in binary and in int arithmetic), the anomaly test is a
   * cross-multiplied integer inequality (no sqrt, no division), and
   * attribution emits ids + microsecond gaps. Floating formulations would

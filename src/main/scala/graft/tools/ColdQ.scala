@@ -15,7 +15,7 @@ object ColdQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/.bench-data/sf1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val spark = Probe.session("graft-coldq")
+    val spark = graft.GraftSession.fromEnv("graft-coldq")
     def run(n: String, dir: String): Long =
       SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
     val names = if (args.nonEmpty) args.toSeq else Seq("q_redact")

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 import graft.ops.Console
+import graft.queries.{Oracle, Registry}
 import graft.sources.Layouts
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
@@ -43,7 +44,8 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * in the warm run can compile again.
   * `--plans <dir>` also writes `<dir>/<name>.txt`: the formatted plan
   * before execution and again after it (the AQE final plan). With no query
-  * names it prints the query/oracle inventory instead.
+  * names it prints the query/oracle inventory instead: the counts, then
+  * each query without oracle SQL and why it has none.
   *
   * A `RAINSTORM <op1> <op2> <file> [<numTasks>]` line after the query
   * names is measured the same way through `Console.run`; it runs to the
@@ -79,16 +81,6 @@ object Probe {
       tasks.addAndGet(e.stageInfo.numTasks)
       shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-  }
-
-  /** The session of the measuring mains: Bench's configuration on
-    * `SPARK_GRAFT_CPUS` cores (default: every core of the host). */
-  def session(appName: String): SparkSession = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.local(cores.toInt, appName)
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   def measure(spark: SparkSession, name: String, build: () => DataFrame,
@@ -154,13 +146,19 @@ object Probe {
     }
     val (names, console) = rest.span(!_.trim.toUpperCase.startsWith("RAINSTORM"))
     if (rest.isEmpty) {
-      val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-      println(s"[probe] queries=${SparkEntry.queries.size} oracles=${SparkEntry.oracleSql.size} " +
-        s"without_oracle=${missing.toSeq.sorted.mkString(",")}")
+      val oracles = SparkEntry.oracleSql
+      println(s"[probe] queries=${SparkEntry.queries.size} oracles=${oracles.size}")
+      Registry.all.filterNot(q => oracles.contains(q.name)).foreach { q =>
+        val why = Registry.oracleOf(q) match {
+          case Oracle.Unchecked(reason) => reason
+          case _ => "fitted: the oracle embeds what the query fits, so it exists once the query ran"
+        }
+        println(s"[probe] without_oracle ${q.name}: $why")
+      }
     } else {
       val sfDir = if (names.isEmpty) "" else sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
         sys.error("set SPARK_GRAFT_SF_DIR to a testdata directory"))
-      val spark = session("graft-probe")
+      val spark = GraftSession.fromEnv("graft-probe")
       def report(name: String)(reading: => Reading): Unit =
         try println(reading.line)
         catch { case e: Exception => println(s"[probe] $name FAILED ${e.getMessage}") }

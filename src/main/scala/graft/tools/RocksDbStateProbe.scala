@@ -22,7 +22,7 @@ object RocksDbStateProbe {
   def main(args: Array[String]): Unit = {
     val sf1 = args.headOption.getOrElse("/root/repo/.bench-data/sf1")
     val paritySf = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = Probe.session("graft-rocksdb-probe")
+    val spark = graft.GraftSession.fromEnv("graft-rocksdb-probe")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 

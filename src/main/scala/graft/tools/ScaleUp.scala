@@ -38,7 +38,7 @@ object ScaleUp {
     val out = args.headOption.getOrElse("/root/repo/.bench-data/sf1")
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Probe.session("graft-scaleup")
+    val spark = graft.GraftSession.fromEnv("graft-scaleup")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // replica index 0..factor-1 per input row; replica 0 is the original

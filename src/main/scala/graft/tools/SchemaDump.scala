@@ -8,7 +8,7 @@ import graft.SparkEntry
 object SchemaDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Probe.session("graft-schemadump")
+    val spark = graft.GraftSession.fromEnv("graft-schemadump")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val s =
         try fn(spark, sfDir).schema.fields
